@@ -20,10 +20,11 @@ import json
 import sys
 
 
-def _col_xor_where(args, cmd: str) -> None:
-    """Shared --col/--values/--where exclusivity for the DML
-    subcommands — one copy, so a combo-validation fix can never land
-    in snapshot-delete and miss snapshot-update (or vice versa)."""
+def _dml_where(args, cmd: str):
+    """The engine predicate of a DML subcommand: ``--col/--values``
+    lowers to ``{col: values}``, ``--where`` decodes as JSON. One copy
+    for snapshot-delete and snapshot-update, so a validation fix can
+    never land in one and miss the other."""
     if (args.where is None) == (args.col is None) or (
         args.col is not None and args.values is None
     ):
@@ -33,6 +34,9 @@ def _col_xor_where(args, cmd: str) -> None:
             "--values belongs to --col; with --where, put the "
             "values in the JSON predicates"
         )
+    if args.where is not None:
+        return _decode_where(args.where)
+    return {args.col: json.loads(args.values)}
 
 
 def _decode_where(text: str):
@@ -390,14 +394,11 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         "OR of branches (one commit); alternative to --col/--values",
     )
     sd.add_argument(
-        "--dv", action="store_true",
-        help="merge-on-read: commit (file, row) tombstones instead of "
-        "rewriting victim files; fold away later with snapshot-compact",
-    )
-    sd.add_argument(
-        "--mode", choices=["auto", "dv", "rewrite"], default=None,
-        help="strategy dispatch (overrides --dv): auto picks DV when "
-        "the stats-selected victim files exceed the rewrite threshold",
+        "--mode", choices=["auto", "dv", "rewrite"], default="auto",
+        help="strategy: rewrite copies victim files; dv commits (file, "
+        "row) tombstones, folded away later by snapshot-compact; auto "
+        "drops whole partitions when it can, else picks DV when the "
+        "stats-selected victim files exceed the rewrite threshold",
     )
 
     smt = sub.add_parser(
@@ -564,14 +565,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         help='JSON object column->literal, e.g. \'{"email": null}\'',
     )
     su.add_argument(
-        "--dv", action="store_true",
-        help="merge-on-read: tombstone old images + append patched "
-        "ones instead of rewriting victim files",
-    )
-    su.add_argument(
-        "--mode", choices=["auto", "dv", "rewrite"], default=None,
-        help="strategy dispatch (overrides --dv): auto picks DV when "
-        "the stats-selected victim files exceed the rewrite threshold",
+        "--mode", choices=["auto", "dv", "rewrite"], default="auto",
+        help="strategy: rewrite copies victim files; dv tombstones old "
+        "images and appends patched ones; auto picks DV when the "
+        "stats-selected victim files exceed the rewrite threshold",
     )
 
     br = sub.add_parser(
@@ -1031,37 +1028,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                     )
                 )
         elif args.cmd == "snapshot-delete":
-            from .warehouse.snapshots import (
-                snapshot_delete,
-                snapshot_delete_rows,
-                snapshot_delete_rows_dv,
-                snapshot_delete_where,
-            )
+            from .warehouse.snapshots import snapshot_delete
 
-            _col_xor_where(args, "snapshot-delete")
-            if args.where is not None:
-                # --dv is the legacy strategy flag: honor it (a user
-                # asking for merge-on-read must never get a silent
-                # copy-on-write rewrite); an explicit --mode wins
-                v, n = snapshot_delete_where(
-                    spark, args.table_path, _decode_where(args.where),
-                    mode=args.mode or ("dv" if args.dv else "auto"),
-                )
-            elif args.mode is not None:
-                v, n = snapshot_delete(
-                    spark, args.table_path, args.col,
-                    json.loads(args.values), mode=args.mode,
-                )
-            else:
-                fn = (
-                    snapshot_delete_rows_dv
-                    if args.dv
-                    else snapshot_delete_rows
-                )
-                v, n = fn(
-                    spark, args.table_path, args.col,
-                    json.loads(args.values),
-                )
+            v, n = snapshot_delete(
+                spark, args.table_path, _dml_where(args, "snapshot-delete"),
+                mode=args.mode,
+            )
             print(json.dumps({"version": v, "rows_deleted": n}))
         elif args.cmd == "snapshot-maintain":
             from .warehouse.snapshots import snapshot_maintain
@@ -1273,41 +1245,12 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                 B.delete_tag(spark, t, args.name)
                 print(json.dumps({"deleted_tag": args.name}))
         elif args.cmd == "snapshot-update":
-            from .warehouse.snapshots import (
-                snapshot_update,
-                snapshot_update_rows,
-                snapshot_update_rows_dv,
-                snapshot_update_where,
-            )
+            from .warehouse.snapshots import snapshot_update
 
-            _col_xor_where(args, "snapshot-update")
-            if args.where is not None:
-                v, n = snapshot_update_where(
-                    spark, args.table_path, _decode_where(args.where),
-                    json.loads(args.set_json),
-                    mode=args.mode or ("dv" if args.dv else "auto"),
-                )
-            elif args.mode is not None:
-                v, n = snapshot_update(
-                    spark,
-                    args.table_path,
-                    args.col,
-                    json.loads(args.values),
-                    json.loads(args.set_json),
-                    mode=args.mode,
-                )
-            else:
-                v, n = (
-                    snapshot_update_rows_dv
-                    if args.dv
-                    else snapshot_update_rows
-                )(
-                    spark,
-                    args.table_path,
-                    args.col,
-                    json.loads(args.values),
-                    json.loads(args.set_json),
-                )
+            v, n = snapshot_update(
+                spark, args.table_path, _dml_where(args, "snapshot-update"),
+                json.loads(args.set_json), mode=args.mode,
+            )
             print(json.dumps({"version": v, "rows_updated": n}))
         elif args.cmd == "sample":
             from .operators.sampling import mixture_sample

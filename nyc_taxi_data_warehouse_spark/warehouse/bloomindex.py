@@ -311,16 +311,6 @@ def append_to_bloom_index(
 # latest manifest — no cursor, idempotent, cost ∝ changed files.
 
 
-def _snapshot_live_files(spark: SparkSession, table_path: str) -> tuple:
-    from .snapshots import _list_manifests, _load_manifest
-
-    versions = _list_manifests(spark, table_path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {table_path}")
-    man = _load_manifest(spark, table_path, versions[-1])
-    return man, versions[-1]
-
-
 def _bloom_rows_for_files(
     spark: SparkSession,
     table_path: str,
@@ -443,7 +433,9 @@ def build_snapshot_bloom_index(
         raise ValueError("m_bits must be a multiple of 64")
     from pyspark.sql.types import StructType
 
-    man, version = _snapshot_live_files(spark, table_path)
+    from .snapshots import _manifest_at
+
+    version, man = _manifest_at(spark, table_path)
     pcols = man.get("partition_cols") or []
     if key_col in pcols:
         raise ValueError(
@@ -510,11 +502,12 @@ def sync_bloom_with_snapshot(
     every reader rejects).
     Returns {"files_added", "files_removed", "version"}."""
     from ..session import static_partition_overwrite
+    from .snapshots import _manifest_at
 
     check_index_meta(spark, index_path, {"kind": "bloom", "scope": "snapshot"})
     meta = read_index_meta(spark, index_path)
     rows_path = _data_path(index_path, meta)
-    man, version = _snapshot_live_files(spark, table_path)
+    version, man = _manifest_at(spark, table_path)
     _refuse_defaulted_key(man, meta["key_col"])
     live = set(man["files"])
     rows = read_index_parquet(spark, rows_path, _ROWS_DDL)
@@ -560,12 +553,13 @@ def read_snapshot_with_bloom(
     at worst over-scan live files, never resurrect removed ones).
     Dials come from the sidecar; the residual predicate restores
     exactness."""
-    from .snapshots import _read_file_list
     from pyspark.sql.types import StructType
+
+    from .snapshots import _manifest_at, _scan_live
 
     check_index_meta(spark, index_path, {"kind": "bloom", "scope": "snapshot"})
     meta = read_index_meta(spark, index_path)
-    man, _ = _snapshot_live_files(spark, table_path)
+    _, man = _manifest_at(spark, table_path)
     _refuse_defaulted_key(man, meta["key_col"])
     live = set(man["files"])
     indexed = {
@@ -599,17 +593,10 @@ def read_snapshot_with_bloom(
     # predicate runs on the logical frame — translate for the filter
     inv = {ph: l for l, ph in cmap.items()}
     lkey = inv.get(meta["key_col"], meta["key_col"])
-    return _read_file_list(
-        spark, table_path, files, schema,
-        partition_cols=man.get("partition_cols"),
-        # merge-on-read deletes: Bloom rows index PHYSICAL rows, so a
-        # candidate may hold only tombstoned matches — the DV anti-join
-        # (and the equality-delete key mask) keeps lookups exact
-        # (over-scan only, never resurrection)
-        dv_files=man.get("dv_files"),
-        dv_targets=man.get("dv_targets"),
-        eq_entries=man.get("eqs"),
-        file_seq=man.get("seq"),
-        colmap=cmap or None,
-        defaults=man.get("defaults"),
-    ).where(F.col(lkey).isin(values))
+    # merge-on-read deletes: Bloom rows index PHYSICAL rows, so a
+    # candidate may hold only tombstoned matches — the DV anti-join (and
+    # the equality-delete key mask) keeps lookups exact (over-scan only,
+    # never resurrection)
+    return _scan_live(spark, table_path, man, files).where(
+        F.col(lkey).isin(values)
+    )

@@ -65,6 +65,7 @@ from .snapshots import (
     _jp,
     _list_manifests,
     _load_manifest,
+    _manifest_at,
     _manifest_partition_cols,
     _REF_SEP,
     _tag_versions,
@@ -91,17 +92,9 @@ def create_branch(
     create of the branch's 00000001.json — two racers cannot both
     create the same branch) and refuses an existing name."""
     ref = branch_ref(path, name)
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path} to branch")
-    v = versions[-1] if at_version is None else at_version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"version {v} not present at {path} (have {versions})"
-        )
+    v, man = _manifest_at(spark, path, at_version)
     if _list_manifests(spark, ref):
         raise ValueError(f"branch {name!r} already exists at {path}")
-    man = _load_manifest(spark, path, v)
     _commit(
         spark,
         ref,
@@ -344,14 +337,7 @@ def create_tag(
     _check_ref_name(name)
     if _REF_SEP in path:
         raise ValueError("tags pin main-chain versions; pass the table root")
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"version {v} not present at {path} (have {versions})"
-        )
+    v, _ = _manifest_at(spark, path, version)
     fs, jvm = _fs(spark, path)
     jpath = _jp(jvm, path, _TDIR, f"{name}.json")
     data = json.dumps({"name": name, "version": v}, sort_keys=True)

@@ -55,6 +55,7 @@ from .snapshots import (
     _eq_entries,
     _list_manifests,
     _load_manifest,
+    _manifest_at,
     _manifest_partition_cols,
     _require_same_layout,
     _write_commit_files,
@@ -294,10 +295,7 @@ def snapshot_delete_keys(
     would be the table read this exists to avoid) —
     ``snapshot_resolve_eq`` / ``snapshot_count`` answer it exactly
     when someone needs the number."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    man = _load_manifest(spark, path, versions[-1])
+    head, man = _manifest_at(spark, path)
     schema = StructType.fromJson(man["schema"])
     fields = {f.name: f for f in schema.fields}
     keys = list(deletes.columns)
@@ -323,7 +321,7 @@ def snapshot_delete_keys(
     # driver action instead of two per takedown batch)
     n = _validate_eq_batch(dele, pkeys, allow_dups=True)
     if n == 0:
-        return versions[-1], 0
+        return head, 0
     _, eq_files = _write_commit_files(dele, path, None)
     # sidecar columns / entry keys in PHYSICAL names (see _colmap)
     entry = {"path": eq_files[0], "seq": None, "keys": [cmap.get(k, k) for k in keys]}

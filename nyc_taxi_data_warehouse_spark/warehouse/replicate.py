@@ -47,7 +47,7 @@ from .snapshots import (
     _fs,
     _jp,
     _list_manifests,
-    _load_manifest,
+    _manifest_at,
     _read_bytes,
     _write_bytes_exclusive,
     read_snapshot,
@@ -109,10 +109,7 @@ def replicate_keyed(
     import json as _json
 
     xf = transform or (lambda df: df)
-    src_versions = _list_manifests(spark, src_path)
-    if not src_versions:
-        raise FileNotFoundError(f"no snapshot versions at {src_path}")
-    head = src_versions[-1]
+    head, _ = _manifest_at(spark, src_path)
     fs, jvm = _fs(spark, dst_path)
     marker_jp = _jp(jvm, dst_path, _MARKER)
 
@@ -246,9 +243,7 @@ def replicate_keyed(
     # re-bootstrap, then re-run.
     replica_cols = {
         f["name"]
-        for f in _load_manifest(
-            spark, dst_path, _list_manifests(spark, dst_path)[-1]
-        )["schema"]["fields"]
+        for f in _manifest_at(spark, dst_path)[1]["schema"]["fields"]
     }
     drifted = sorted(set(images.columns) - replica_cols)
     if drifted:

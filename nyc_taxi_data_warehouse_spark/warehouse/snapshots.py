@@ -274,6 +274,24 @@ def _load_manifest(spark: SparkSession, path: str, version: int) -> dict:
     )
 
 
+def _manifest_at(
+    spark: SparkSession, path: str, version: int | None = None
+) -> tuple[int, dict]:
+    """``(version, manifest)`` of ``version`` (default: the head).
+    Raises ``FileNotFoundError`` when the table has no versions or
+    ``version`` is not among them (never committed, or vacuumed)."""
+    versions = _list_manifests(spark, path)
+    if not versions:
+        raise FileNotFoundError(f"no snapshot versions at {path}")
+    if version is None:
+        version = versions[-1]
+    elif version not in versions:
+        raise FileNotFoundError(
+            f"version {version} not present at {path} (have {versions})"
+        )
+    return version, _load_manifest(spark, path, version)
+
+
 def _colmap(man: dict) -> dict:
     """The manifest's logical→physical column-name map (RENAME
     support). Identity entries are never stored; absent/empty means
@@ -503,7 +521,7 @@ def _commit(
 ) -> int:
     """``dv_files`` — the DELETION-VECTOR sidecars active at this
     version (parquet relpaths of (file, pos) tombstones, merged at
-    read; see ``snapshot_delete_rows_dv``). Default is INHERIT from
+    read; see ``snapshot_delete(mode="dv")``). Default is INHERIT from
     the parent: DV entries are keyed by (relpath, row position) and
     data files are immutable + uuid-unique, so a stale entry for a
     file the commit dropped is inert — while an entry for a carried
@@ -1246,7 +1264,7 @@ def read_snapshot(
     version: int | None = None,
     at_timestamp=None,
     partitions: dict | None = None,
-    _versions: list | None = None,
+    where: dict | list | None = None,
 ) -> DataFrame:
     """The table at ``version`` (default: latest), or as of
     ``at_timestamp`` (datetime | ISO string | epoch seconds — resolved
@@ -1254,38 +1272,42 @@ def read_snapshot(
     directory names (``basePath``), exactly like a plain partitioned
     read.
 
-    ``_versions``: internal — a manifest listing the caller already
-    holds (``snapshot_register`` resolves the head itself so its
-    registry records exactly what the view reflects; re-listing here
-    would double the directory RPCs on the DML view-refresh hot
-    path).
-
     ``partitions`` ({col: value or list}) prunes AT THE MANIFEST: only
     matching files enter the scan (``df.inputFiles()`` shows exactly
     them). This matters on the flat read path, where partition values
     ride a broadcast lookup join rather than Hive directory discovery
     — a WHERE on the joined column cannot skip files there, so without
     manifest pruning a one-partition query of a 100 TB table opens
-    every file."""
+    every file.
+
+    ``where`` is the DML predicate form (``{col: values | Range |
+    IS_NULL | IS_NOT_NULL}``, or a list of such dicts for OR) and
+    prunes the same way: only files whose stats/directories admit a
+    match are opened (stats-less files are kept — never a false
+    negative), then the exact row predicate applies as a residual. A
+    retention audit (``where={"ts": Range(hi=cutoff, hi_inc=False)}``)
+    on a time-clustered table opens only the files the cutoff
+    intersects. ``partitions`` and ``where`` compose (both narrow the
+    file set before any file opens); DV tombstones, equality deletes,
+    renames and initial defaults apply exactly as on a plain read."""
     if version is not None and at_timestamp is not None:
         raise ValueError("pass version OR at_timestamp, not both")
     if at_timestamp is not None:
         version = snapshot_version_at(spark, path, at_timestamp)
-    versions = (
-        _versions if _versions is not None else _list_manifests(spark, path)
-    )
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
-    man = _load_manifest(spark, path, version)
-    schema = StructType.fromJson(man["schema"])
+    _, man = _manifest_at(spark, path, version)
+    return _read_at(spark, path, man, partitions, where)
+
+
+def _read_at(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    partitions: dict | None = None,
+    where: dict | list | None = None,
+) -> DataFrame:
+    """``read_snapshot`` of an already-opened manifest."""
     files = man["files"]
-    residual = None
+    conds = []
     if partitions:
         # conservative keep for files predating a layout evolution
         # (they may hold matching rows as DATA); the residual row
@@ -1293,18 +1315,21 @@ def read_snapshot(
         # dir-encoded files, the real predicate on unmigrated ones
         files, unenc = _partition_pruned_files(man, partitions, "split")
         if unenc:
-            residual = _partition_residual_cond(partitions)
-    out = _read_file_list(
-        spark, path, files, schema,
-        partition_cols=_manifest_partition_cols(man),
-        dv_files=man.get("dv_files"),
-        dv_targets=man.get("dv_targets"),
-        eq_entries=man.get("eqs"),
-        file_seq=man.get("seq"),
-        colmap=_colmap(man) or None,
-        defaults=man.get("defaults"),
-    )
-    return out.where(residual) if residual is not None else out
+            conds.append(_partition_residual_cond(partitions))
+    if where is not None:
+        preds = _sanitize_predicates(where)
+        if preds:
+            admitted = set(_victims_by_stats_where(man, preds)[0])
+            files = [f for f in files if f in admitted]
+            conds.append(_match_expr(preds))
+        else:  # provably-empty range / emptied IN list
+            files = []
+    if not files:  # nothing can match: answer without planning a scan
+        return spark.createDataFrame([], StructType.fromJson(man["schema"]))
+    out = _scan_live(spark, path, man, files)
+    for cond in conds:
+        out = out.where(cond)
+    return out
 
 
 # name (lowercased) → {"path", "name", "pinned"} for every table that
@@ -1336,18 +1361,10 @@ def snapshot_register(
     # front door's metadata-planned SELECT fast path answers at this
     # version for exact parity with a spark.sql scan of the view
     resolved = version
-    listing = None
-    if resolved is None:
-        if at_timestamp is not None:
-            resolved = snapshot_version_at(spark, path, at_timestamp)
-        else:
-            listing = _list_manifests(spark, path)
-            # empty table: let read_snapshot raise its own error
-            resolved = listing[-1] if listing else None
-    read_snapshot(
-        spark, path, version=resolved, partitions=partitions,
-        _versions=listing,
-    ).createOrReplaceTempView(name)
+    if resolved is None and at_timestamp is not None:
+        resolved = snapshot_version_at(spark, path, at_timestamp)
+    resolved, man = _manifest_at(spark, path, resolved)
+    _read_at(spark, path, man, partitions).createOrReplaceTempView(name)
     # capture the VIEW-WRAPPED plan (not the raw DataFrame: the View/
     # SubqueryAlias wrapper shifts the semantic hash) — the identity
     # token the SELECT fast path compares against the live view
@@ -1853,6 +1870,32 @@ def _read_file_list(
         .drop("_dv_enc")
     )
     return _apply_dvs(spark, path, df, dv_files, keep_ids=row_ids)
+
+
+def _scan_live(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    files: list[str],
+    row_ids: bool = False,
+) -> DataFrame:
+    """The live rows of ``files`` (a subset of ``man["files"]``) in
+    ``man``'s logical schema, with EVERY manifest mask applied: layout
+    partition columns, DV tombstones, equality deletes, the rename map
+    and initial defaults. Scans that read a manifest's own rows go
+    through here, so none of them can leave a mask out (a missing mask
+    brings deleted rows back without any error)."""
+    return _read_file_list(
+        spark, path, files, StructType.fromJson(man["schema"]),
+        partition_cols=_manifest_partition_cols(man),
+        dv_files=man.get("dv_files"),
+        row_ids=row_ids,
+        dv_targets=man.get("dv_targets"),
+        eq_entries=man.get("eqs"),
+        file_seq=man.get("seq"),
+        colmap=_colmap(man) or None,
+        defaults=man.get("defaults"),
+    )
 
 
 def _require_mapped(mapped, enc_col: str):
@@ -2445,17 +2488,7 @@ def snapshot_files(
     if _man is not None:
         man = _man
     else:
-        versions = _list_manifests(spark, path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot versions at {path}")
-        if version is None:
-            version = versions[-1]
-        elif version not in versions:
-            raise FileNotFoundError(
-                f"version {version} not present at {path} "
-                f"(have {versions})"
-            )
-        man = _load_manifest(spark, path, version)
+        _, man = _manifest_at(spark, path, version)
     root = _root(path)
     stats = man.get("stats") or {}
     tgts = set(man.get("dv_targets") or ())
@@ -2534,16 +2567,7 @@ def snapshot_partitions(
     ``rows`` is the PHYSICAL footer total (NULL when any grouped file
     predates row tracking); live-row exactness under tombstones is
     ``snapshot_count(partitions=...)``'s job."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
-    man = _load_manifest(spark, path, version)
+    version, man = _manifest_at(spark, path, version)
     pcols = _manifest_partition_cols(man) or []
     clash = sorted(
         set(pcols)
@@ -2634,16 +2658,7 @@ def snapshot_count(
         raise ValueError("pass version OR at_timestamp, not both")
     if at_timestamp is not None:
         version = snapshot_version_at(spark, path, at_timestamp)
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
-    man = _load_manifest(spark, path, version)
+    _, man = _manifest_at(spark, path, version)
     root = _root(path)
     files = man["files"]
     residual = None
@@ -2711,16 +2726,7 @@ def snapshot_minmax(
     strings — see ``collect_file_stats``); the scan path returns
     Spark-typed values. All-null (or empty) tables return
     ``(None, None)`` on both paths."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
-    man = _load_manifest(spark, path, version)
+    _, man = _manifest_at(spark, path, version)
     residual = None
     unenc: set = set()
     if partitions:
@@ -2762,17 +2768,7 @@ def snapshot_minmax(
         # present in the data. The combined result can still surface
         # a covered file's widened Decimal bound — that is the
         # documented metadata-path contract.
-        schema = StructType.fromJson(man["schema"])
-        df = _read_file_list(
-            spark, path, uncovered, schema,
-            partition_cols=_manifest_partition_cols(man),
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            eq_entries=man.get("eqs"),
-            file_seq=man.get("seq"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        df = _scan_live(spark, path, man, uncovered)
         if residual is not None:
             df = df.where(residual)
         row = df.agg(
@@ -2785,57 +2781,6 @@ def snapshot_minmax(
     los = [v for v in los if v is not None]
     his = [v for v in his if v is not None]
     return (min(los) if los else None, max(his) if his else None)
-
-
-def read_snapshot_where(
-    spark: SparkSession,
-    path: str,
-    predicates: dict,
-    version: int | None = None,
-) -> DataFrame:
-    """Manifest-pruned READ under a conjunctive predicate ({col:
-    values | Range}) — the scan twin of the DML victim planner and
-    ``snapshot_count_where``: only files whose stats/directories admit
-    a match are opened (stats-less files conservatively kept — never a
-    false negative), then the exact row-level predicate applies as a
-    residual. Generalizes ``read_snapshot_pruned`` (single column,
-    inclusive interval) to multi-column conjunctions, IN lists,
-    exclusive/half-open bounds, and typed partition-directory ranges.
-
-    A retention audit (``SELECT * WHERE ts < cutoff``) on a
-    time-clustered 100 TB table then opens only the files the cutoff
-    intersects; everything else is excluded from metadata alone. DV
-    tombstones, equality deletes, column renames, and initial defaults
-    all apply exactly as in ``read_snapshot`` (the pruned set reads
-    through the same ``_read_file_list``)."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
-    man = _load_manifest(spark, path, version)
-    schema = StructType.fromJson(man["schema"])
-    preds = _sanitize_predicates(predicates)
-    if not preds:  # provably-empty range / emptied IN list
-        return spark.createDataFrame([], schema)
-    victims, _carried = _victims_by_stats_where(man, preds)
-    if not victims:
-        return spark.createDataFrame([], schema)
-    df = _read_file_list(
-        spark, path, victims, schema,
-        partition_cols=_manifest_partition_cols(man),
-        dv_files=man.get("dv_files"),
-        dv_targets=man.get("dv_targets"),
-        eq_entries=man.get("eqs"),
-        file_seq=man.get("seq"),
-        colmap=_colmap(man) or None,
-        defaults=man.get("defaults"),
-    )
-    return df.where(_match_expr(preds))
 
 
 def snapshot_count_where(
@@ -2864,19 +2809,10 @@ def snapshot_count_where(
     cutoff lands — everything else answers from a few KB of manifest.
     Same NULL semantics as the DML planner (predicates never match
     NULL; a provably-empty range or emptied IN list returns 0)."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
+    _, man = _manifest_at(spark, path, version)
     preds = _sanitize_predicates(predicates)
     if not preds:
         return 0
-    man = _load_manifest(spark, path, version)
     victims, _carried = _victims_by_stats_where(man, preds)
     if not victims:
         return 0
@@ -2888,17 +2824,7 @@ def snapshot_count_where(
     scanned = 0
     if scan:
         scanned = (
-            _read_file_list(
-                spark, path, scan,
-                StructType.fromJson(man["schema"]),
-                partition_cols=_manifest_partition_cols(man),
-                dv_files=man.get("dv_files"),
-                dv_targets=man.get("dv_targets"),
-                eq_entries=man.get("eqs"),
-                file_seq=man.get("seq"),
-                colmap=_colmap(man) or None,
-                defaults=man.get("defaults"),
-            )
+            _scan_live(spark, path, man, scan)
             .where(_match_expr(preds))
             .count()
         )
@@ -3324,23 +3250,8 @@ def snapshot_agg_where(
     MAX(ts), SUM(bytes), COUNT(*) WHERE ts < cutoff`` on a
     time-clustered table opens only the boundary files the cutoff
     intersects; everything else answers from a few KB of manifest."""
-    if _man is None or version is None:
-        versions = _list_manifests(spark, path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot versions at {path}")
-        if version is None:
-            version = versions[-1]
-        elif version not in versions:
-            raise FileNotFoundError(
-                f"version {version} not present at {path} "
-                f"(have {versions})"
-            )
+    man = _man if _man is not None else _manifest_at(spark, path, version)[1]
     norm = _agg_normalize(aggs)
-    man = (
-        _man
-        if _man is not None
-        else _load_manifest(spark, path, version)
-    )
     schema = StructType.fromJson(man["schema"])
     ftypes = {fld.name: fld.dataType for fld in schema.fields}
     _agg_validate_types(norm, ftypes)
@@ -3367,16 +3278,7 @@ def snapshot_agg_where(
     sset = set(need_scan)
     scan_row = None
     if need_scan:
-        df = _read_file_list(
-            spark, path, need_scan, schema,
-            partition_cols=_manifest_partition_cols(man),
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            eq_entries=man.get("eqs"),
-            file_seq=man.get("seq"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        df = _scan_live(spark, path, man, need_scan)
         if preds is not None:
             df = df.where(_match_expr(preds))
         exprs = []
@@ -3473,23 +3375,8 @@ def snapshot_group_agg_where(
     COUNT(*), SUM(bytes) ... WHERE day < cutoff GROUP BY day`` on a
     day-partitioned table answers from the manifest alone — no file
     opens at all when stats prove every admitted file."""
-    if _man is None or version is None:
-        versions = _list_manifests(spark, path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot versions at {path}")
-        if version is None:
-            version = versions[-1]
-        elif version not in versions:
-            raise FileNotFoundError(
-                f"version {version} not present at {path} "
-                f"(have {versions})"
-            )
+    man = _man if _man is not None else _manifest_at(spark, path, version)[1]
     norm = _agg_normalize(aggs)
-    man = (
-        _man
-        if _man is not None
-        else _load_manifest(spark, path, version)
-    )
     schema = StructType.fromJson(man["schema"])
     ftypes = {fld.name: fld.dataType for fld in schema.fields}
     _agg_validate_types(norm, ftypes)
@@ -3557,16 +3444,7 @@ def snapshot_group_agg_where(
 
     scan_rows: list = []
     if sset:
-        df = _read_file_list(
-            spark, path, sorted(sset), schema,
-            partition_cols=_manifest_partition_cols(man),
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            eq_entries=man.get("eqs"),
-            file_seq=man.get("seq"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        df = _scan_live(spark, path, man, sorted(sset))
         if preds is not None:
             df = df.where(_match_expr(preds))
         exprs = []
@@ -3621,16 +3499,7 @@ def snapshot_count_nonnull(
     scanned, with tombstone masking applied. Completes the
     metadata-aggregate family: COUNT(*) (``snapshot_count``), MIN/MAX
     (``snapshot_minmax``), COUNT(col)."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    elif version not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
-    man = _load_manifest(spark, path, version)
+    _, man = _manifest_at(spark, path, version)
     residual = None
     unenc: set = set()
     if partitions:
@@ -3661,17 +3530,7 @@ def snapshot_count_nonnull(
     total = sum(rows[f] - stats[f][pcol][2] for f in cov)
     uncovered = [f for f in files if f not in cov]
     if uncovered:
-        schema = StructType.fromJson(man["schema"])
-        df = _read_file_list(
-            spark, path, uncovered, schema,
-            partition_cols=_manifest_partition_cols(man),
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            eq_entries=man.get("eqs"),
-            file_seq=man.get("seq"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        df = _scan_live(spark, path, man, uncovered)
         if residual is not None:
             df = df.where(residual)
         total += df.agg(F.count(F.col(col)).alias("c")).first()["c"]
@@ -4553,15 +4412,7 @@ def snapshot_properties(
 ) -> dict[str, str]:
     """The table properties at ``version`` (default: latest) — carried
     commit-to-commit in the manifest state, metadata-only to read."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"version {version} not present at {path} (have {versions})"
-        )
-    return dict(_load_manifest(spark, path, v).get("props") or {})
+    return dict(_manifest_at(spark, path, version)[1].get("props") or {})
 
 
 def snapshot_set_properties(
@@ -4592,10 +4443,7 @@ def snapshot_set_properties(
         raise ValueError(
             f"property values must be strings: {sorted(bad_vals)}"
         )
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    man = _load_manifest(spark, path, versions[-1])
+    latest, man = _manifest_at(spark, path)
     props = dict(man.get("props") or {})
     missing = [k for k in unset if k not in props]
     if missing:
@@ -4605,7 +4453,7 @@ def snapshot_set_properties(
     props.update(set_props)
     return _commit(
         spark, path, man["files"], StructType.fromJson(man["schema"]),
-        "set_properties", versions[-1],
+        "set_properties", latest,
         extra={"props_set": sorted(set_props), "props_unset": unset},
         partition_cols=_manifest_partition_cols(man),
         props=props,
@@ -4625,10 +4473,7 @@ def snapshot_add_constraint(
     version exists."""
     if not name or "/" in name or name != name.strip():
         raise ValueError(f"bad constraint name {name!r}")
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    man = _load_manifest(spark, path, versions[-1])
+    latest, man = _manifest_at(spark, path)
     props = dict(man.get("props") or {})
     key = f"constraint.{name}"
     if key in props:
@@ -4637,7 +4482,7 @@ def snapshot_add_constraint(
             "it first"
         )
     # validate existing rows under SQL CHECK semantics (NULL passes)
-    df = read_snapshot(spark, path, versions[-1])
+    df = read_snapshot(spark, path, latest)
     bad = (
         df.where(~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True)))
         .limit(1)
@@ -4651,7 +4496,7 @@ def snapshot_add_constraint(
     props[key] = expr
     return _commit(
         spark, path, man["files"], StructType.fromJson(man["schema"]),
-        "add_constraint", versions[-1],
+        "add_constraint", latest,
         extra={"constraint": name, "expr": expr},
         partition_cols=_manifest_partition_cols(man),
         props=props,
@@ -4662,10 +4507,7 @@ def snapshot_drop_constraint(
     spark: SparkSession, path: str, name: str
 ) -> int:
     """ALTER TABLE DROP CONSTRAINT — metadata-only."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    man = _load_manifest(spark, path, versions[-1])
+    latest, man = _manifest_at(spark, path)
     props = dict(man.get("props") or {})
     key = f"constraint.{name}"
     if key not in props:
@@ -4673,7 +4515,7 @@ def snapshot_drop_constraint(
     props.pop(key)
     return _commit(
         spark, path, man["files"], StructType.fromJson(man["schema"]),
-        "drop_constraint", versions[-1],
+        "drop_constraint", latest,
         extra={"constraint": name},
         partition_cols=_manifest_partition_cols(man),
         props=props,
@@ -4699,8 +4541,9 @@ def snapshot_compact(
 
     Manifest stats SURVIVE compaction: when the parent tracked
     ``stats_cols``, per-file min/max are recomputed for the new files —
-    without this, every compaction silently reset ``read_snapshot_pruned``
-    to a full scan (conservatively correct, catastrophically unpruned).
+    without this, every compaction silently reset a ``read_snapshot``
+    ``where=`` range to a full scan (conservatively correct,
+    catastrophically unpruned).
 
     ``cluster_by`` upgrades the rewrite to the OPTIMIZE-with-clustering
     shape: one column range-partitions + sorts on it; several columns
@@ -4739,11 +4582,7 @@ def snapshot_compact(
     it on every commit for free (``_maybe_auto_compact_small``). Files
     whose count is unrecorded (legacy history) are conservatively
     carried. Mutually exclusive with ``min_file_mb``."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     latest, man = _eq_resolved_head(spark, path, latest, man)
     root = _root(path)
     if partition_cols is None:
@@ -4988,11 +4827,7 @@ def snapshot_merge_upsert_dv(
     CoW path's ``row_number`` does."""
     from pyspark.sql.window import Window
 
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     _require_same_layout(man, partition_cols, "merge_dv")
     latest, man = _eq_resolved_head(spark, path, latest, man)
     schema = StructType.fromJson(man["schema"])
@@ -5215,7 +5050,7 @@ def snapshot_write_with_stats(
 ) -> int:
     """``snapshot_write`` + per-file min/max stats for ``stats_cols``
     recorded in the manifest (Iceberg-style scan planning metadata):
-    ``read_snapshot_pruned`` later selects files by stats overlap
+    ``read_snapshot(where=...)`` later selects files by stats overlap
     WITHOUT opening them. Append mode carries the parent's stats
     forward, so incremental loads keep whole-table planning."""
     if mode not in ("overwrite", "append"):
@@ -5252,189 +5087,21 @@ def snapshot_write_with_stats(
     )
 
 
-def read_snapshot_pruned(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-    partitions: dict | None = None,
-) -> DataFrame:
-    """Range read ``lo <= col <= hi`` planned against the MANIFEST: only
-    files whose recorded [min, max] overlaps the range are opened (a
-    file without stats for ``col`` is conservatively kept — never a
-    false negative), then the exact residual predicate applies.
-    ``partitions`` composes directory pruning with the stats pruning —
-    both dimensions resolve driver-side from the manifest before any
-    file opens.
-
-    Stats live in an order-preserving JSON image (numbers native, date/
-    timestamp as ISO strings, Decimal as outward-widened floats), and
-    lo/hi are normalized the same way before comparing — so pruning
-    never produces a false negative, and the residual predicate keeps
-    exactness regardless."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    if version is None:
-        version = versions[-1]
-    man = _load_manifest(spark, path, version)
-    stats = man.get("stats", {})
-    candidates = man["files"]
-    part_residual = None
-    if partitions:
-        # conservative keep + row-level residual for files predating a
-        # layout evolution (same recipe as read_snapshot)
-        candidates, _pr_unenc = _partition_pruned_files(
-            man, partitions, "split"
-        )
-        if _pr_unenc:
-            part_residual = _partition_residual_cond(partitions)
-    # widen the QUERY interval outward too (Decimal bounds): pruning
-    # may only ever keep extra files, never drop a matching one
-    slo, shi = _stat_norm(lo, widen=-1), _stat_norm(hi, widen=1)
-    pcol = _phys(man, col)  # stats are keyed by on-disk column names
-    keep = []
-    for f in candidates:
-        st = stats.get(f, {}).get(pcol)
-        if st is None:
-            keep.append(f)  # no stats -> cannot exclude
-        elif st[0] is None or st[1] is None:
-            # stats recorded, endpoints null: the file holds only null
-            # (or zero) values for col — BETWEEN never matches null,
-            # so the file is safely excludable
-            continue
-        elif not (st[1] < slo or st[0] > shi):
-            keep.append(f)
-    base = read_snapshot(spark, path, version)
-    if not keep:
-        return spark.createDataFrame([], base.schema)
-    if len(keep) == len(man["files"]):
-        pruned = base
-    else:
-        # the same normalised explicit-list scan every snapshot read
-        # uses (per-commit basePath or the flat path), deletion vectors
-        # applied — stats may keep a file whose matching rows are all
-        # tombstoned (over-scan only; the residual predicate plus the
-        # DV anti-join keep exactness)
-        pruned = _read_file_list(
-            spark, path, keep, base.schema,
-            partition_cols=_manifest_partition_cols(man),
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            eq_entries=man.get("eqs"),
-            file_seq=man.get("seq"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
-    out = pruned.where(F.col(col).between(F.lit(lo), F.lit(hi)))
-    return out.where(part_residual) if part_residual is not None else out
-
-
-def snapshot_delete_rows(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    values: list,
-) -> tuple[int, int]:
-    """Targeted row deletion (``col IN values`` — takedowns, GDPR
-    erasure, decontamination victims) at FILE granularity: only files
-    that may contain a matching row are rewritten; every other file
-    carries into the new version by reference. Candidate files come
-    from the manifest's min/max stats when present (metadata-only
-    planning, no false negatives — see ``read_snapshot_pruned``);
-    stats-less files are conservatively rewritten. Returns
-    ``(new_version, rows_deleted)``.
-
-    Note the snapshot-layer caveat shared with every manifest-log
-    design: the deleted rows still exist in OLDER versions' files until
-    ``vacuum_snapshots`` drops those versions — erasure is complete
-    only after the vacuum.
-    """
-    return snapshot_delete_rows_where(spark, path, {col: values})
-
-
-def snapshot_delete_rows_where(
-    spark: SparkSession,
-    path: str,
-    predicates: dict,
-) -> tuple[int, int]:
-    """Conjunctive copy-on-write delete: erase rows matching ``col IN
-    values AND ...`` across any number of columns ({col: values}) —
-    the composite-key takedown (``tenant`` AND ``user_id``). Same
-    machinery as the single-column path: per-column stats exclusion
-    intersects (excludable by ANY column carries the file),
-    whole-file proofs must hold for EVERY column to drop a file by
-    reference, and NULL semantics are SQL's (a None value matches
-    nothing; NULL-keyed rows always survive — the match expression is
-    null-guarded so ``~match`` never silently erases)."""
-    preds = _sanitize_predicates(predicates)
-    if not preds:
-        versions = _list_manifests(spark, path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot versions at {path}")
-        return versions[-1], 0
-
-    def fn(df):
-        return df.where(~_match_expr(preds))
-
-    return _rewrite_matching_files(
-        spark, path, preds, fn, "delete_rows", full_drop=True
-    )
-
-
-def snapshot_delete_rows_dv(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    values: list,
-) -> tuple[int, int]:
-    """``snapshot_delete_rows`` semantics via DELETION VECTORS
-    (merge-on-read): instead of rewriting every stats-selected
-    candidate file whole — at 100 TB a one-key takedown on a
-    non-clustered column rewrites a large share of the table — the
-    commit writes only the matched rows' (file, row position)
-    tombstones as a parquet sidecar and carries EVERY data file by
-    reference. Readers anti-join the tombstones at scan time (see
-    ``_read_file_list``); ``snapshot_compact`` folds them back into
-    physical files. Write cost ∝ deleted rows, never victim-file
-    bytes. Returns ``(new_version, rows_deleted)``.
-
-    Same NULL semantics as the rewrite path (NULL never matches IN),
-    same erasure caveat (older versions still hold the rows until
-    vacuumed — and the tombstoned rows' BYTES remain in the current
-    version's files until a compact; for physical erasure of the live
-    version, compact after deleting).
-
-    Files whose stats PROVE every row matches (``_full_match_files``:
-    min == max == a deleted value, zero nulls) are DROPPED from the
-    manifest instead of tombstoned — writing one (file, pos) entry per
-    row of a wholly-dead file is pure waste on both sides (sidecar
-    bytes ∝ its rows now, anti-join work at every read later). A
-    clustered-key takedown then writes NO tombstones at all; only
-    boundary files where matches mix with survivors get entries.
-    """
-    return _delete_rows_dv_where(spark, path, {col: values})
-
-
 def _delete_rows_dv_where(
     spark: SparkSession,
     path: str,
     predicates: dict,
 ) -> tuple[int, int]:
-    """Conjunctive merge-on-read delete — the engine behind
-    ``snapshot_delete_rows_dv`` (single column) and
-    ``snapshot_delete_where(mode="dv")`` (composite key). Same
-    structure: per-column stats intersection plans the victims,
-    per-column whole-file proofs drop wholly-dead files by reference,
-    and only boundary rows get (file, pos) tombstones."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    """Merge-on-read delete — the engine behind
+    ``snapshot_delete(mode="dv")``: the stats/directory planner picks
+    the victims, whole-file proofs drop wholly-dead files by reference
+    (writing one (file, pos) entry per row of a wholly-dead file would
+    be pure waste on both sides), and only boundary rows get
+    tombstones."""
+    latest, man = _manifest_at(spark, path)
     latest, man = _eq_resolved_head(spark, path, latest, man)
+    # stats proofs and row accounting below are position-exact
+    assert not man.get("eqs"), "equality deletes must be resolved first"
     predicates = _sanitize_predicates(predicates)
     if not predicates:
         return latest, 0
@@ -5473,15 +5140,8 @@ def _delete_rows_dv_where(
     new_dvs: list[str] = []
     new_tgts: list[str] = []
     if victims:
-        df = _read_file_list(
-            spark, path, victims, schema,
-            partition_cols=_manifest_partition_cols(man),
-            dv_files=man.get("dv_files"),  # never tombstone a row twice
-            row_ids=True,
-            dv_targets=man.get("dv_targets"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        # the live-row mask never tombstones a row twice
+        df = _scan_live(spark, path, man, victims, row_ids=True)
         matched = (
             df.where(_match_expr(predicates))
             .select("_dv_file", "_dv_pos")
@@ -5598,21 +5258,20 @@ def _full_match_files(man: dict, col: str, values: list) -> list[str]:
 
 
 class Range:
-    """Interval predicate for the conjunctive DML planner — the value
-    side of a ``{col: Range(...)}`` entry anywhere ``{col: values}``
-    predicates are accepted (``snapshot_delete_where``,
-    ``snapshot_update_where``, their dv/rewrite engines, and the SQL
-    front door's ``<  <=  >  >=  BETWEEN`` grammar). ``lo``/``hi``
-    bound the column from below/above (``None`` = unbounded on that
-    side; at least one must be set); ``lo_inc``/``hi_inc`` pick
-    inclusive vs strict. NULL semantics are SQL's: a range never
-    matches a NULL value.
+    """Interval predicate — the value side of a ``{col: Range(...)}``
+    entry anywhere ``{col: values}`` predicates are accepted
+    (``snapshot_delete``, ``snapshot_update``, ``read_snapshot(where=)``,
+    the aggregate helpers, and the SQL front door's ``<  <=  >  >=
+    BETWEEN`` grammar). ``lo``/``hi`` bound the column from
+    below/above (``None`` = unbounded on that side; at least one must
+    be set); ``lo_inc``/``hi_inc`` pick inclusive vs strict. NULL
+    semantics are SQL's: a range never matches a NULL value.
 
     This is the TTL/retention/GDPR sweep shape (``DELETE FROM t WHERE
     ts < '2024-01-01'``) — the single most common DML a 100 TB table
-    sees. The planner prunes victims from the same per-file min/max
-    stats the range READ path (``read_snapshot_pruned``) consumes, and
-    proves whole-file drops (file range wholly inside the predicate,
+    sees. The planner prunes victims from the per-file min/max stats
+    (the same pruning ``read_snapshot(where=)`` applies), and proves
+    whole-file drops (file range wholly inside the predicate,
     zero nulls ⇒ drop by reference — no read, no rewrite, no
     tombstones), so a retention delete on a time-clustered table moves
     only the boundary files' bytes. Partition-column ranges prune and
@@ -6323,12 +5982,10 @@ def _rewrite_matching_files(
     files where matches mix with survivors; the bulk of the victim
     bytes move nowhere. Their deleted-row count comes from recorded
     footer counts minus live tombstones — exact, metadata-only."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     latest, man = _eq_resolved_head(spark, path, latest, man)
+    # stats proofs and row accounting below are position-exact
+    assert not man.get("eqs"), "equality deletes must be resolved first"
     predicates = _sanitize_predicates(predicates)
     if not predicates:  # some column's values were all None: no match
         return latest, 0
@@ -6349,17 +6006,10 @@ def _rewrite_matching_files(
     if not victims and not dropped:
         return latest, 0
     if victims:
-        df = _read_file_list(
-            spark, path, victims, schema,
-            partition_cols=_manifest_partition_cols(man),
-            # merge-on-read: already-tombstoned rows must not resurrect
-            # into the rewritten files (the carried DV entries for the
-            # rewritten victims become inert once their files drop out)
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        # merge-on-read: already-tombstoned rows must not resurrect
+        # into the rewritten files (the carried DV entries for the
+        # rewritten victims become inert once their files drop out)
+        df = _scan_live(spark, path, man, victims)
         before = df.count()
         rewritten = fn(df)
         if "_matched" in rewritten.columns:
@@ -6408,33 +6058,6 @@ def _rewrite_matching_files(
     return version, affected + drop_rows
 
 
-def snapshot_update_rows(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    values: list,
-    set_values: dict,
-) -> tuple[int, int]:
-    """Targeted column update on matching rows (``col IN values``) —
-    the redaction half of the DML triad (merge = upsert, delete_rows =
-    erasure, update_rows = "null out / mask the PII columns but keep
-    the row"). File granularity like ``snapshot_delete_rows``: only
-    stats-selected candidate files are rewritten, everything else
-    carries by reference; non-matching rows inside victim files are
-    rewritten byte-for-byte-equal (NULL keys never match an IN list).
-
-    ``set_values`` maps column name → new value: a literal (None nulls
-    the column) or a ``pyspark.sql.Column`` expression evaluated per
-    row (e.g. ``F.sha2(F.col("email"), 256)`` for pseudonymization).
-    Values are cast to the column's existing type; unknown columns
-    raise. Returns ``(new_version, rows_updated)``. Old versions still
-    hold the pre-update rows until ``vacuum_snapshots`` — same
-    erasure-completes-at-vacuum caveat as delete."""
-    return snapshot_update_rows_where(
-        spark, path, {col: values}, set_values
-    )
-
-
 def _check_update_targets(man: dict, set_values: dict) -> StructType:
     """Shared validation for BOTH update engines (CoW and
     merge-on-read — one copy, so a validation fix can never apply to
@@ -6470,86 +6093,18 @@ def _set_value_expr(v, dtype):
     return expr.cast(dtype)
 
 
-def snapshot_update_rows_where(
-    spark: SparkSession,
-    path: str,
-    predicates: dict,
-    set_values: dict,
-) -> tuple[int, int]:
-    """Conjunctive copy-on-write update — ``snapshot_update_rows``
-    across any number of AND-ed columns ({col: values}); the shared
-    planner partition-prunes partition-column predicates and
-    intersects stats exclusion for the rest."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    man = _load_manifest(spark, path, versions[-1])
-    schema = _check_update_targets(man, set_values)
-
-    preds = _sanitize_predicates(predicates)
-    if not preds:
-        return versions[-1], 0
-
-    def fn(df):
-        matched = _match_expr(preds)
-        # ONE select, every RHS resolved against the PRE-update row
-        # image (SQL UPDATE semantics): a sequential withColumn chain
-        # would let {'email': None, 'email_hash': sha2(col('email'))}
-        # hash the already-nulled value, silently dict-order dependent.
-        cols = []
-        for f in schema.fields:
-            if f.name in set_values:
-                cols.append(
-                    F.when(
-                        matched,
-                        _set_value_expr(set_values[f.name], f.dataType),
-                    )
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                )
-            else:
-                cols.append(F.col(f.name))
-        return df.select(*cols, matched.alias("_matched"))
-
-    return _rewrite_matching_files(
-        spark, path, preds, fn, "update_rows"
-    )
-
-
-def snapshot_update_rows_dv(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    values: list,
-    set_values: dict,
-) -> tuple[int, int]:
-    """``snapshot_update_rows`` semantics via deletion vectors: ONE
-    commit tombstones the matched rows' old images and appends new
-    files holding only the patched images — write cost ∝ matched rows,
-    never victim-file bytes (the CoW path rewrites every candidate
-    file whole to patch a handful of rows). Non-matching rows are
-    never touched, read, or rewritten. The change feed reports the
-    commit as delete(old image) + insert(new image), exactly like a
-    CoW update. Partition values are preserved (partition columns
-    refuse, as in the CoW path), so the patched images land in their
-    original partitions."""
-    return _update_rows_dv_where(spark, path, {col: values}, set_values)
-
-
 def _update_rows_dv_where(
     spark: SparkSession,
     path: str,
     predicates: dict,
     set_values: dict,
 ) -> tuple[int, int]:
-    """Conjunctive merge-on-read update — the engine behind
-    ``snapshot_update_rows_dv`` and ``snapshot_update_where(mode="dv")``."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    """Merge-on-read update — the engine behind
+    ``snapshot_update(mode="dv")``."""
+    latest, man = _manifest_at(spark, path)
     latest, man = _eq_resolved_head(spark, path, latest, man)
+    # stats proofs and row accounting below are position-exact
+    assert not man.get("eqs"), "equality deletes must be resolved first"
     schema = _check_update_targets(man, set_values)
     pc = _manifest_partition_cols(man) or []
     predicates = _sanitize_predicates(predicates)
@@ -6559,15 +6114,7 @@ def _update_rows_dv_where(
     if not victims:
         return latest, 0
     matched_rows = (
-        _read_file_list(
-            spark, path, victims, schema,
-            partition_cols=pc or None,
-            dv_files=man.get("dv_files"),
-            row_ids=True,
-            dv_targets=man.get("dv_targets"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        _scan_live(spark, path, man, victims, row_ids=True)
         .where(_match_expr(predicates))
         .localCheckpoint(eager=True)  # one scan feeds count + 2 writes
     )
@@ -6648,11 +6195,7 @@ def snapshot_compact_dvs(
     (raw bytes × live fraction), never dead-inclusive raw bytes — a
     mostly-inert set must shrink to its live footprint, not
     re-fragment at its old size."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     dvs = man.get("dv_files") or []
     root = _root(path)
     if not dvs:
@@ -6737,11 +6280,7 @@ def snapshot_resolve_eq(spark: SparkSession, path: str) -> tuple[int, int]:
     full speed (then ``snapshot_compact_dvs``/``snapshot_compact``
     take over as usual). Mutators call it implicitly — DML stats
     proofs and row accounting are position-exact only."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     entries = _eq_entries(man)
     if not entries:
         return latest, 0
@@ -6993,11 +6532,7 @@ def snapshot_drop_partitions(
 def _drop_partitions_once(
     spark: SparkSession, path: str, partitions: dict
 ) -> tuple[int, int]:
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     latest, man = _eq_resolved_head(spark, path, latest, man)
     matched = _partition_pruned_files(man, partitions)
     if not matched:
@@ -7054,94 +6589,63 @@ def _drop_partitions_once(
     return version, rows_deleted
 
 
+# ``mode="auto"`` picks deletion vectors once the copy-on-write victim
+# bytes exceed this many MB; below it the join-free rewrite wins
+DV_THRESHOLD_MB = 64
+# DV-writing DML consolidates sidecars once this many have accumulated
+# (``_maybe_auto_compact_dvs``; None or 0 turns it off)
+AUTO_COMPACT_FILES = 12
+
+
 def snapshot_delete(
     spark: SparkSession,
     path: str,
-    col: str,
-    values: list,
+    where: dict | list,
     mode: str = "auto",
-    dv_threshold_mb: int = 64,
-    auto_compact_files: int | None = 12,
 ) -> tuple[int, int]:
-    """Unified targeted delete (``col IN values``) with strategy
-    dispatch — the front door for DML; returns ``(version, rows)``.
+    """DELETE WHERE ``where`` — the one delete entry point; returns
+    ``(version, rows_deleted)``. ``where`` is ``{col: values | Range |
+    IS_NULL | IS_NOT_NULL}`` (AND across columns; a scalar means a
+    one-value list) or a list of such dicts (DNF: OR across branches)
+    — the form the SQL front door lowers every WHERE to. NULL
+    semantics are SQL's: a None value matches nothing, and a column
+    whose list is all-None (or a provably-empty ``Range``) makes the
+    statement a no-op.
 
-    - ``mode="rewrite"``: copy-on-write (``snapshot_delete_rows``) —
-      victim files rewritten whole; no tombstone debt, no read-side
-      join; right when victims are few/small.
-    - ``mode="dv"``: merge-on-read (``snapshot_delete_rows_dv``) —
-      write ∝ deleted rows; right when the stats-selected victim set
-      is large (a scattered one-key takedown on a 100 TB table).
-    - ``mode="auto"``: choose by the bytes the rewrite would copy —
-      the stats-selected victim files' total size. Above
-      ``dv_threshold_mb``, tombstones win (rewrite cost dominates);
-      below it, the rewrite wins (small victim sets keep the table
-      join-free). The decision is metadata-only: file sizes from the
-      filesystem, victims from manifest stats.
+    Only files whose per-file stats or partition directories admit a
+    match are touched; every other file carries by reference. Files
+    whose stats/directories PROVE every row matches drop from the
+    manifest by reference (no read, no rewrite, no tombstones), so a
+    delete keyed on a clustered column moves only boundary files.
 
-    DV-mode commits then consolidate sidecars past
-    ``auto_compact_files`` (see ``_maybe_auto_compact_dvs``).
+    - ``mode="rewrite"``: copy-on-write (op ``delete_rows``) — boundary
+      files rewritten whole; no tombstone debt, no read-side join.
+    - ``mode="dv"``: merge-on-read (op ``delete_rows_dv``) — writes only
+      the matched rows' (file, row position) tombstones as a sidecar;
+      write cost ∝ deleted rows. Readers anti-join the tombstones
+      (``_read_file_list``); ``snapshot_compact`` folds them back.
+      Sidecars consolidate past ``AUTO_COMPACT_FILES``.
+    - ``mode="auto"``: when every predicate column is a partition
+      column with canonical int/str/bool values, the delete is a
+      metadata-only ``snapshot_drop_partitions`` (op
+      ``drop_partitions``; the directory value IS the column value).
+      Otherwise it weighs the rewrite's victim bytes (stats-selected,
+      minus whole-file drops) against ``DV_THRESHOLD_MB``: above it
+      tombstones win, below it the rewrite. The decision is
+      metadata-only. Explicit ``dv``/``rewrite`` always honor the
+      requested strategy.
 
-    When ``col`` is a PARTITION column of the table, ``mode="auto"``
-    dispatches to ``snapshot_drop_partitions`` instead of either data
-    path: every row under a matching partition directory matches the
-    predicate by construction (the directory value IS the column
-    value), so the delete is a pure manifest edit that moves ZERO
-    data bytes at any table size. The dispatch preserves SQL DELETE
-    semantics exactly: ``None`` values are filtered first (``NULL IN``
-    never matches — the raw ``snapshot_drop_partitions`` API, by
-    contrast, lets ``None`` select the null partition deliberately),
-    and only int/str/bool values qualify — those have one canonical
-    directory-string form, while e.g. ``5.0`` against an int month
-    renders ``"5.0" != "5"`` and would silently no-op where the data
-    paths' Spark-typed equality deletes; such values fall through to
-    the data paths. Explicit ``mode="dv"``/``"rewrite"`` always honor
-    the requested physical strategy.
-
-    One-column delegate of ``snapshot_delete_where`` — a single
-    dispatch engine, so strategy/threshold fixes can never diverge
-    between the single- and composite-key front doors."""
-    return snapshot_delete_where(
-        spark, path, {col: values}, mode=mode,
-        dv_threshold_mb=dv_threshold_mb,
-        auto_compact_files=auto_compact_files,
-    )
-
-
-def snapshot_delete_where(
-    spark: SparkSession,
-    path: str,
-    predicates: dict,
-    mode: str = "auto",
-    dv_threshold_mb: int = 64,
-    auto_compact_files: int | None = 12,
-) -> tuple[int, int]:
-    """Conjunctive DML front door: DELETE WHERE ``col IN values AND
-    ...`` across any number of columns ({col: values}) with the same
-    strategy dispatch as ``snapshot_delete`` — and the same fast
-    paths, generalized:
-
-    - every predicate column a partition column (+ canonical int/str/
-      bool values) → ``snapshot_drop_partitions``: the whole delete is
-      a manifest edit (multi-column partition dirs prove the
-      conjunction row-exactly);
-    - otherwise ``auto`` weighs the copy-on-write bytes (victims from
-      the per-column stats INTERSECTION, minus files the per-column
-      whole-file proofs drop for free) against ``dv_threshold_mb``;
-    - NULL semantics are SQL's throughout: a None value matches
-      nothing (a column whose list is all-None makes the whole
-      conjunction a no-op)."""
+    Erasure caveat shared with every manifest-log design: the deleted
+    rows still exist in OLDER versions' files (and, under ``dv``, in
+    the current files' bytes until a compact) until
+    ``vacuum_snapshots`` drops those versions."""
     if mode not in ("auto", "dv", "rewrite"):
         raise ValueError(f"mode must be auto|dv|rewrite; got {mode!r}")
-    preds = _sanitize_predicates(predicates)
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
+    preds = _sanitize_predicates(where)
     if not preds:
-        return versions[-1], 0
-    man = None
+        return _manifest_at(spark, path)[0], 0
     if mode == "auto":
-        man = _load_manifest(spark, path, versions[-1])
+        _, man = _manifest_at(spark, path)
         pc = set(_manifest_partition_cols(man) or ())
         if (
             # DNF (multi-branch OR) takes the data paths: per-branch
@@ -7158,6 +6662,8 @@ def snapshot_delete_where(
             and not any(
                 isinstance(v, (Range, _NullTest)) for v in preds.values()
             )
+            # one canonical directory-string form only: 5.0 against an
+            # int month renders "5.0" != "5" and would silently no-op
             and all(
                 type(v) in (int, str, bool) for vals in preds.values()
                 for v in vals
@@ -7172,72 +6678,89 @@ def snapshot_delete_where(
         cost = _victim_bytes(
             spark, path, preds, discount_full_match=True, man=man
         )
-        mode = "dv" if cost > dv_threshold_mb * 1024 * 1024 else "rewrite"
+        mode = "dv" if cost > DV_THRESHOLD_MB * 1024 * 1024 else "rewrite"
     if mode == "rewrite":
-        return snapshot_delete_rows_where(spark, path, preds)
+        return _rewrite_matching_files(
+            spark, path, preds, lambda df: df.where(~_match_expr(preds)),
+            "delete_rows", full_drop=True,
+        )
     out = _delete_rows_dv_where(spark, path, preds)
-    _maybe_auto_compact_dvs(spark, path, auto_compact_files)
+    _maybe_auto_compact_dvs(spark, path, AUTO_COMPACT_FILES)
     return out
 
 
 def snapshot_update(
     spark: SparkSession,
     path: str,
-    col: str,
-    values: list,
+    where: dict | list,
     set_values: dict,
     mode: str = "auto",
-    dv_threshold_mb: int = 64,
-    auto_compact_files: int | None = 12,
 ) -> tuple[int, int]:
-    """Unified targeted update — same strategy dispatch as
-    ``snapshot_delete`` (the DV path writes tombstones + only the
-    updated row images; the rewrite path copies victim files whole).
-    One-column delegate of ``snapshot_update_where``."""
-    return snapshot_update_where(
-        spark, path, {col: values}, set_values, mode=mode,
-        dv_threshold_mb=dv_threshold_mb,
-        auto_compact_files=auto_compact_files,
-    )
+    """UPDATE ... SET ``set_values`` WHERE ``where`` — the one update
+    entry point; returns ``(version, rows_updated)``. ``where`` takes
+    the same predicate form as ``snapshot_delete``. ``set_values`` maps
+    column → a literal (None nulls it) or a ``pyspark.sql.Column``
+    evaluated per row against the PRE-update row (e.g.
+    ``F.sha2(F.col("email"), 256)``), cast to the column's type.
+    Unknown and partition columns refuse (rows would have to move
+    directories).
 
+    - ``mode="rewrite"`` (op ``update_rows``): victim files rewritten
+      whole; non-matching rows come back byte-for-byte equal.
+    - ``mode="dv"`` (op ``update_rows_dv``): ONE commit tombstones the
+      matched rows' old images and appends only the patched images —
+      write cost ∝ matched rows. The change feed reports either as
+      delete(old image) + insert(new image).
+    - ``mode="auto"``: ``dv`` when the victim bytes exceed
+      ``DV_THRESHOLD_MB``, else ``rewrite``. Files whose every row
+      provably matches are discounted: they cost the same under both
+      strategies, so only boundary files tip the scale.
 
-def snapshot_update_where(
-    spark: SparkSession,
-    path: str,
-    predicates: dict,
-    set_values: dict,
-    mode: str = "auto",
-    dv_threshold_mb: int = 64,
-    auto_compact_files: int | None = 12,
-) -> tuple[int, int]:
-    """Conjunctive UPDATE front door: patch rows matching ``col IN
-    values AND ...`` across any number of columns, with the same
-    auto/dv/rewrite dispatch as ``snapshot_delete_where``. No
-    metadata-only fast path exists for updates (rows change, bytes
-    must move), but partition-column predicates still prune the
-    victim set from directory values, so an update scoped to one
-    tenant never reads another tenant's files. The auto estimate
-    discounts provably-all-matching files: they cost the same under
-    both strategies (every row needs a new image either way — DV just
-    adds tombstones on top), so only boundary files tip the scale."""
+    There is no metadata-only path (rows change, bytes must move), but
+    partition-column predicates still prune victims from directory
+    values. Old versions keep the pre-update rows until
+    ``vacuum_snapshots``."""
     if mode not in ("auto", "dv", "rewrite"):
         raise ValueError(f"mode must be auto|dv|rewrite; got {mode!r}")
     if mode == "auto":
         mode = (
             "dv"
-            if _victim_bytes(
-                spark, path, predicates, discount_full_match=True
-            )
-            > dv_threshold_mb * 1024 * 1024
+            if _victim_bytes(spark, path, where, discount_full_match=True)
+            > DV_THRESHOLD_MB * 1024 * 1024
             else "rewrite"
         )
-    if mode == "rewrite":
-        return snapshot_update_rows_where(
-            spark, path, predicates, set_values
-        )
-    out = _update_rows_dv_where(spark, path, predicates, set_values)
-    _maybe_auto_compact_dvs(spark, path, auto_compact_files)
-    return out
+    if mode == "dv":
+        out = _update_rows_dv_where(spark, path, where, set_values)
+        _maybe_auto_compact_dvs(spark, path, AUTO_COMPACT_FILES)
+        return out
+    latest, man = _manifest_at(spark, path)
+    schema = _check_update_targets(man, set_values)
+    preds = _sanitize_predicates(where)
+    if not preds:
+        return latest, 0
+
+    def fn(df):
+        matched = _match_expr(preds)
+        # ONE select, every RHS resolved against the PRE-update row
+        # image (SQL UPDATE semantics): a sequential withColumn chain
+        # would let {'email': None, 'email_hash': sha2(col('email'))}
+        # hash the already-nulled value, silently dict-order dependent.
+        cols = []
+        for f in schema.fields:
+            if f.name in set_values:
+                cols.append(
+                    F.when(
+                        matched,
+                        _set_value_expr(set_values[f.name], f.dataType),
+                    )
+                    .otherwise(F.col(f.name))
+                    .alias(f.name)
+                )
+            else:
+                cols.append(F.col(f.name))
+        return df.select(*cols, matched.alias("_matched"))
+
+    return _rewrite_matching_files(spark, path, preds, fn, "update_rows")
 
 
 def snapshot_add_column(
@@ -7300,11 +6823,7 @@ def snapshot_add_column(
             f"column name {name!r} is reserved for the deletion-vector "
             "row identity"
         )
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     schema = StructType.fromJson(man["schema"])
     if name in {f.name for f in schema.fields}:
         raise ValueError(f"column {name!r} already exists at {path}")
@@ -7361,11 +6880,7 @@ def snapshot_drop_column(
     drop still reads it. Partition columns refuse (their values ARE
     the directory layout); the column's per-file stats entries drop
     with it. Returns the new version."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     schema = StructType.fromJson(man["schema"])
     if name not in {f.name for f in schema.fields}:
         raise ValueError(f"column {name!r} does not exist at {path}")
@@ -7405,7 +6920,7 @@ def snapshot_drop_column(
     # history first, or use the documented add+backfill pattern.
     # Metadata-only: one cached state fold per retained version.
     pname = _phys(man, name)  # entry keys are on-disk names (stable)
-    for hv in versions:
+    for hv in _list_manifests(spark, path):
         hman = _load_manifest(spark, path, hv)
         for e in _eq_entries(hman):
             if pname in e["keys"]:
@@ -7469,11 +6984,7 @@ def snapshot_rename_column(
     never mints a physical name, so the map stays injective (this is
     what keeps the classic a→tmp, b→a, tmp→b swap legal). Returns the
     new version."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     schema = StructType.fromJson(man["schema"])
     names = {f.name for f in schema.fields}
     if old not in names:
@@ -7605,11 +7116,7 @@ def snapshot_widen_column(
 
     if isinstance(new_type, str):
         new_type = _parse_datatype_string(new_type)
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     schema = StructType.fromJson(man["schema"])
     fields = {f.name: f for f in schema.fields}
     if name not in fields:
@@ -7718,11 +7225,7 @@ def snapshot_set_layout(
     old file has no physical values to prune by, and the write path's
     dir values would disagree with the read-time fill); reserved
     ``_dv_*`` names; a no-op layout."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    latest = versions[-1]
-    man = _load_manifest(spark, path, latest)
+    latest, man = _manifest_at(spark, path)
     schema = StructType.fromJson(man["schema"])
     names = {f.name for f in schema.fields}
     want = list(partition_cols) if partition_cols else None
@@ -7811,10 +7314,7 @@ def _victim_bytes(
     if not predicates:  # some column all-None: nothing can match
         return 0
     if man is None:  # callers with the head manifest in hand pass it
-        versions = _list_manifests(spark, path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot versions at {path}")
-        man = _load_manifest(spark, path, versions[-1])
+        man = _manifest_at(spark, path)[1]
     victims, _carried = _victims_by_stats_where(man, predicates)
     if discount_full_match:
         full = set(_full_match_files_where(man, predicates))

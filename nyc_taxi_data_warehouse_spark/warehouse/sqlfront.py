@@ -23,13 +23,13 @@ The DML grammar is deliberately the restricted shape the engine
 executes efficiently at 100 TB (conjunctions of ``col = lit``,
 ``col IN (...)``, and — the retention/TTL/GDPR sweep — ``col <  <=
 >  >=  BETWEEN`` ranges: the forms manifest stats can plan
-metadata-only, see ``snapshot_delete_where`` and ``Range``); anything
-outside it fails LOUDLY with
-the supported form in the message, never a silent fallback that would
-scan-and-rewrite the table. MERGE maps to the equality-delete upsert
-(``snapshot_append_upsert``) — zero reads of the target at any table
-size — and keyed MERGE-DELETE to ``snapshot_delete_keys`` (zero reads
-AND zero data writes beyond the key sidecar).
+metadata-only, see ``snapshot_delete`` and ``Range``); anything
+outside it fails LOUDLY with the supported form in the message, never
+a silent fallback that would scan-and-rewrite the table. MERGE maps
+to the equality-delete upsert (``snapshot_append_upsert``) — zero
+reads of the target at any table size — and keyed MERGE-DELETE to
+``snapshot_delete_keys`` (zero reads AND zero data writes beyond the
+key sidecar).
 
 After a successful mutation the front door re-registers every
 non-pinned view of the mutated path at the new head, so a follow-up
@@ -903,7 +903,7 @@ def _one_row(spark: SparkSession, schema: str, row: tuple) -> DataFrame:
 
 
 def _exec_delete(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
-    from .snapshots import snapshot_delete_where
+    from .snapshots import _manifest_at, snapshot_delete
 
     p.expect_kw("FROM")
     kind, text = p.table_token()
@@ -917,22 +917,13 @@ def _exec_delete(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
     preds = _parse_predicates(p)
     p.end()
     if preds == []:  # provably matches nothing: no-op, no commit
-        v, n = _head_version(spark, path), 0
+        v, n = _manifest_at(spark, path)[0], 0
     else:
-        v, n = snapshot_delete_where(spark, path, preds, mode=mode)
+        v, n = snapshot_delete(spark, path, preds, mode=mode)
         _refresh_views(spark, path)
     return _one_row(
         spark, "version bigint, num_affected_rows bigint", (v, n)
     )
-
-
-def _head_version(spark, path: str) -> int:
-    from .snapshots import _list_manifests
-
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    return versions[-1]
 
 
 class _RawExpr:
@@ -995,7 +986,7 @@ def _parse_set_rhs(p: _Parser):
 
 
 def _exec_update(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
-    from .snapshots import snapshot_update_where
+    from .snapshots import _manifest_at, snapshot_update
 
     kind, text = p.table_token()
     path, _ = _resolve_table(spark, kind, text, stmt)
@@ -1024,20 +1015,12 @@ def _exec_update(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
         # at select()) — never a scan plan, whose driver cost grows
         # with file count. Execution semantics are the engine's
         # pre-update-image rule: every RHS sees the row as it was
-        # BEFORE the update (snapshot_update_rows_where builds one
-        # select), so SET a = b, b = a swaps.
+        # BEFORE the update (snapshot_update builds one select), so
+        # SET a = b, b = a swaps.
         from pyspark.sql.types import StructType
 
-        from .snapshots import _list_manifests, _load_manifest
-
-        versions = _list_manifests(spark, path)
-        if not versions:
-            raise FileNotFoundError(f"no snapshot versions at {path}")
         probe = spark.createDataFrame(
-            [],
-            StructType.fromJson(
-                _load_manifest(spark, path, versions[-1])["schema"]
-            ),
+            [], StructType.fromJson(_manifest_at(spark, path)[1]["schema"])
         )
         for c, e in raw.items():
             try:
@@ -1050,11 +1033,9 @@ def _exec_update(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
                 )
             set_values[c] = F.expr(e.sql)
     if preds == []:  # provably matches nothing: no-op, no commit
-        v, n = _head_version(spark, path), 0
+        v, n = _manifest_at(spark, path)[0], 0
     else:
-        v, n = snapshot_update_where(
-            spark, path, preds, set_values, mode=mode
-        )
+        v, n = snapshot_update(spark, path, preds, set_values, mode=mode)
         _refresh_views(spark, path)
     return _one_row(
         spark, "version bigint, num_affected_rows bigint", (v, n)
@@ -1163,14 +1144,9 @@ def _merge_projected_source(
     cannot be expressed without a read)."""
     from pyspark.sql.types import StructType
 
-    from .snapshots import _list_manifests, _load_manifest
+    from .snapshots import _manifest_at
 
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions at {path}")
-    schema = StructType.fromJson(
-        _load_manifest(spark, path, versions[-1])["schema"]
-    )
+    schema = StructType.fromJson(_manifest_at(spark, path)[1]["schema"])
     tcols = [f.name for f in schema.fields]
     keyset = set(keys)
 
@@ -1580,8 +1556,7 @@ def _exec_alter_layout(spark, p: _Parser, path: str, stmt: str) -> DataFrame:
       ALTER TABLE t SET PARTITIONING (col, ...)   -- () = unpartitioned
     """
     from .snapshots import (
-        _list_manifests,
-        _load_manifest,
+        _manifest_at,
         _manifest_partition_cols,
         snapshot_set_layout,
     )
@@ -1603,7 +1578,7 @@ def _exec_alter_layout(spark, p: _Parser, path: str, stmt: str) -> DataFrame:
     else:
         col = p.ident()
         p.end()
-        man = _load_manifest(spark, path, _list_manifests(spark, path)[-1])
+        man = _manifest_at(spark, path)[1]
         cur = list(_manifest_partition_cols(man) or [])
         if verb == "ADD":
             if col in cur:
@@ -2366,7 +2341,7 @@ def _try_select_fastpath(
     (t = a registered/durable-catalog snapshot name or a quoted table
     path; preds = the front door's plannable grammar) route to
     ``snapshot_count_where`` / ``snapshot_agg_where`` /
-    ``read_snapshot_where``: a COUNT or MIN/MAX/SUM under a retention
+    ``read_snapshot(where=)``: a COUNT or MIN/MAX/SUM under a retention
     cutoff answers from manifest stats opening only boundary files,
     and a predicate read opens only the files whose stats admit a
     match — the analyst typing SQL gets the engine's
@@ -2389,7 +2364,6 @@ def _try_select_fastpath(
       not model a file-subset view)."""
     from .snapshots import (
         read_snapshot,
-        read_snapshot_where,
         snapshot_count,
         snapshot_count_where,
         snapshot_version_at,
@@ -2409,7 +2383,7 @@ def _try_select_fastpath(
             if items is None:
                 return None
             if not any(it[0] == "agg" for it in items):
-                # plain projection — the read_snapshot_where path
+                # plain projection — the read_snapshot(where=) path
                 cols = [it[1] for it in items]
                 items = None
         p.expect_kw("FROM")
@@ -2652,12 +2626,10 @@ def _try_select_fastpath(
             count_alias or "count(1)"
         )
         return out.limit(limit) if limit is not None else out
-    if preds is None:
-        df = read_snapshot(spark, path, version=version)
-    elif preds == []:
+    if preds == []:
         df = read_snapshot(spark, path, version=version).limit(0)
     else:
-        df = read_snapshot_where(spark, path, preds, version=version)
+        df = read_snapshot(spark, path, version=version, where=preds)
     if cols is not None:
         df = df.select(*cols)
     if limit is not None:
@@ -2675,7 +2647,7 @@ def snapshot_sql(
     ``(version)``; the caller collects).
 
     ``mode`` forwards to the DELETE/UPDATE strategy dispatch
-    (``auto`` | ``dv`` | ``rewrite`` — see ``snapshot_delete_where``).
+    (``auto`` | ``dv`` | ``rewrite`` — see ``snapshot_delete``).
     """
     head = statement.lstrip()
     m = re.match(r"[A-Za-z_]+", head)

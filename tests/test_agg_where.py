@@ -34,8 +34,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _match_expr,
     read_snapshot,
     snapshot_agg_where,
-    snapshot_delete_rows_dv,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_group_agg_where,
     snapshot_write_with_stats,
 )
@@ -201,7 +200,7 @@ def test_dv_and_eq_deletes_route_to_scan(spark, tmp_path):
     because those files scan."""
     t = str(tmp_path / "agw_dv")
     _mk(spark, t, nulls=False)
-    snapshot_delete_where(spark, t, {"id": [7]}, mode="dv")
+    snapshot_delete(spark, t, {"id": [7]}, mode="dv")
     preds = {"id": Range(lo=0, hi=14)}
     got = snapshot_agg_where(spark, t, ALL_AGGS, predicates=preds)
     _assert_same(got, _oracle(spark, t, preds), preds)
@@ -534,7 +533,7 @@ def test_group_agg_group_suppression_and_empty(spark, tmp_path):
         spark, t, ["day"], [("count", "*")],
         predicates={"id": Range(lo=100)},
     ) == []
-    snapshot_delete_rows_dv(spark, t, "id", [0, 1, 2, 3])
+    snapshot_delete(spark, t, {"id": [0, 1, 2, 3]}, mode="dv")
     got = sorted(
         snapshot_group_agg_where(spark, t, ["day"], [("count", "*")]),
         key=str,
@@ -610,7 +609,7 @@ def test_group_agg_timestamp_partition_trailing_zero_micros(
         spark.createDataFrame([(10, ts1)], "id int, ts timestamp"),
         t, ["id"], mode="append", partition_cols=["ts"],
     )
-    snapshot_delete_rows_dv(spark, t, "id", [10])
+    snapshot_delete(spark, t, {"id": [10]}, mode="dv")
     got = sorted(
         snapshot_group_agg_where(
             spark, t, ["ts"], [("count", "*"), ("sum", "id")]
@@ -722,7 +721,7 @@ def test_tzful_timestamp_partition_key_scans_for_correctness(
             spark.createDataFrame([(9, ts1)], "id int, ts timestamp"),
             t, ["id"], mode="append", partition_cols=["ts"],
         )
-        snapshot_delete_rows_dv(spark, t, "id", [9])
+        snapshot_delete(spark, t, {"id": [9]}, mode="dv")
         base = read_snapshot(spark, t)
         exp_minmax = base.agg(
             F.min("ts"), F.max("ts")

@@ -225,7 +225,7 @@ def test_snapshot_bloom_follows_dml(spark, tmp_path):
     )
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_compact,
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write,
     )
 
@@ -256,7 +256,7 @@ def test_snapshot_bloom_follows_dml(spark, tmp_path):
     ] == [100]
 
     # delete: victim file rewritten; after sync the key is GONE
-    snapshot_delete_rows(spark, t, "doc_id", [7])
+    snapshot_delete(spark, t, {"doc_id": [7]}, mode="rewrite")
     res = sync_bloom_with_snapshot(spark, t, idx)
     assert res["files_removed"] >= 1
     assert read_snapshot_with_bloom(spark, t, idx, [7]).count() == 0
@@ -321,7 +321,7 @@ def test_snapshot_bloom_torn_prune_self_heals(spark, tmp_path):
         sync_bloom_with_snapshot,
     )
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write,
     )
 
@@ -329,7 +329,7 @@ def test_snapshot_bloom_torn_prune_self_heals(spark, tmp_path):
     idx = str(tmp_path / "tp_idx")
     snapshot_write(_sdocs(spark, [(i, i % 3, f"d{i}") for i in range(30)]), t)
     build_snapshot_bloom_index(spark, t, "doc_id", idx, m_bits=M, k=K)
-    snapshot_delete_rows(spark, t, "doc_id", [7])
+    snapshot_delete(spark, t, {"doc_id": [7]}, mode="rewrite")
     # worst-case torn prune: the whole rows table is gone mid-rewrite
     shutil.rmtree(f"{idx}/rows")
     assert read_index_meta(spark, idx) is not None  # sidecar untouched
@@ -452,7 +452,7 @@ def test_snapshot_bloom_cli(spark, tmp_path, capsys):
         read_snapshot_with_bloom,
     )
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write,
     )
 
@@ -471,7 +471,7 @@ def test_snapshot_bloom_cli(spark, tmp_path, capsys):
     )
     assert rc == 0
     assert read_snapshot_with_bloom(spark, t, idx, [5]).count() == 1
-    snapshot_delete_rows(spark, t, "doc_id", [5])
+    snapshot_delete(spark, t, {"doc_id": [5]}, mode="rewrite")
     rc = main(
         [
             "bloom-index", "--snapshot", "--append", "--table-path", t,

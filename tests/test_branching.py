@@ -26,9 +26,9 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
     snapshot_changes,
     snapshot_compact,
-    snapshot_delete_rows,
+    snapshot_delete,
     snapshot_restore,
-    snapshot_update_rows,
+    snapshot_update,
     snapshot_versions,
     snapshot_write,
     vacuum_snapshots,
@@ -73,8 +73,8 @@ def test_branch_dml_compact_restore_and_feed(spark, table):
         _df(spark, [(i, i % 2, f"d{i}") for i in range(10)]), table
     )
     ref = create_branch(spark, table, "fix")
-    snapshot_delete_rows(spark, ref, "id", [3])
-    snapshot_update_rows(spark, ref, "id", [4], {"v": "redacted"})
+    snapshot_delete(spark, ref, {"id": [3]}, mode="rewrite")
+    snapshot_update(spark, ref, {"id": [4]}, {"v": "redacted"}, mode="rewrite")
     snapshot_compact(spark, ref, target_mb=64)
     assert (4, 0, "redacted") in _rows(spark, ref)
     assert all(r[0] != 3 for r in _rows(spark, ref))
@@ -93,7 +93,7 @@ def test_branch_dml_compact_restore_and_feed(spark, table):
 
 def test_publish_fast_forward_and_stats_carry(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot_pruned,
+        Range,
         snapshot_write_with_stats,
     )
 
@@ -102,14 +102,14 @@ def test_publish_fast_forward_and_stats_carry(spark, table):
     )
     create_branch(spark, table, "wap")
     ref = branch_ref(table, "wap")
-    snapshot_delete_rows(spark, ref, "id", [7])
+    snapshot_delete(spark, ref, {"id": [7]}, mode="rewrite")
     v = publish_branch(spark, table, "wap")
     assert v == 2
     assert all(r[0] != 7 for r in _rows(spark, table))
     man_ops = [x["op"] for x in snapshot_versions(spark, table)]
     assert man_ops == ["overwrite", "publish"]
     # stats survived the publish: pruned read still plans by manifest
-    got = read_snapshot_pruned(spark, table, "id", 10, 12)
+    got = read_snapshot(spark, table, where={"id": Range(10, 12)})
     assert sorted(r.id for r in got.collect()) == [10, 11, 12]
 
 
@@ -194,7 +194,7 @@ def test_tags_immutable_and_stable(spark, table):
     with pytest.raises(ValueError, match="immutable"):
         create_tag(spark, table, "rel")
     # later DML does not move the tag
-    snapshot_delete_rows(spark, table, "id", [1])
+    snapshot_delete(spark, table, {"id": [1]}, mode="rewrite")
     assert read_tag(spark, table, "rel").count() == 1
     assert resolve_tag(spark, table, "rel") == 1
     delete_tag(spark, table, "rel")
@@ -213,7 +213,9 @@ def test_write_audit_publish_end_to_end(spark, table):
         spark,
         table,
         "dedup-run",
-        write=lambda ref: snapshot_delete_rows(spark, ref, "id", [5, 6]),
+        write=lambda ref: snapshot_delete(
+            spark, ref, {"id": [5, 6]}, mode="rewrite",
+        ),
         audit=lambda df: df.count() == 10,
     )
     assert v == 2
@@ -226,8 +228,8 @@ def test_write_audit_publish_end_to_end(spark, table):
             spark,
             table,
             "bad-run",
-            write=lambda ref: snapshot_delete_rows(
-                spark, ref, "id", list(range(12))
+            write=lambda ref: snapshot_delete(
+                spark, ref, {"id": list(range(12))}, mode="rewrite",
             ),
             audit=lambda df: df.count() > 5,  # mass-delete tripwire
         )
@@ -239,7 +241,9 @@ def test_write_audit_publish_end_to_end(spark, table):
             spark,
             table,
             "bad-run-2",
-            write=lambda ref: snapshot_delete_rows(spark, ref, "id", [0]),
+            write=lambda ref: snapshot_delete(
+                spark, ref, {"id": [0]}, mode="rewrite",
+            ),
             audit=lambda df: False,
             keep_branch_on_failure=False,
         )
@@ -291,7 +295,7 @@ def test_branch_cli_lifecycle(spark, table, capsys):
     out = run("branch", "--table-path", table, "--action", "create",
               "--name", "dev")
     assert out == {"ref": branch_ref(table, "dev")}
-    snapshot_delete_rows(spark, out["ref"], "id", [2])
+    snapshot_delete(spark, out["ref"], {"id": [2]}, mode="rewrite")
     out = run("branch", "--table-path", table, "--action", "tag",
               "--name", "pre")
     assert out == {"tag": "pre", "version": 1}
@@ -499,7 +503,7 @@ def test_satellite_indexes_follow_branch_refs(spark, tmp_path):
         spark.createDataFrame([(4, "omega alpha")], "doc_id long, text string"),
         ref, mode="append",
     )
-    snapshot_delete_rows(spark, ref, "doc_id", [3])
+    snapshot_delete(spark, ref, {"doc_id": [3]}, mode="rewrite")
 
     # Bloom: build from the ref, lookup through the ref
     build_snapshot_bloom_index(spark, ref, "doc_id", bidx)
@@ -542,19 +546,18 @@ def test_drop_branch_reclaim_sweeps_branch_minted_dv_sidecars(
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
-        snapshot_delete_rows_dv,
     )
 
     snapshot_write(_df(spark, [(i, i % 2, f"d{i}") for i in range(10)]), table)
     # a MAIN-minted sidecar, carried into the fork
-    snapshot_delete_rows_dv(spark, table, "id", [2])
+    snapshot_delete(spark, table, {"id": [2]}, mode="dv")
     main_dv = _load_manifest(
         spark, table, _list_manifests(spark, table)[-1]
     )["dv_files"]
     assert len(main_dv) == 1
     ref = create_branch(spark, table, "tmp")
     # a BRANCH-minted sidecar on top
-    snapshot_delete_rows_dv(spark, ref, "id", [5])
+    snapshot_delete(spark, ref, {"id": [5]}, mode="dv")
     bman = _load_manifest(spark, ref, _list_manifests(spark, ref)[-1])
     branch_dv = sorted(set(bman["dv_files"]) - set(main_dv))
     assert len(branch_dv) == 1

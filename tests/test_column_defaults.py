@@ -27,7 +27,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_changes,
     snapshot_compact,
     snapshot_count_nonnull,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_drop_column,
     snapshot_minmax,
     snapshot_rename_column,
@@ -102,7 +102,7 @@ def test_default_through_flat_path_and_dml(spark, tmp_path):
     assert got == [(0, 7)] + [(i, i * 10) for i in range(1, 11)]
 
     # DML predicate on the DEFAULT value erases the pre-add row
-    v, n = snapshot_delete_where(spark, t, {"score": [7]})
+    v, n = snapshot_delete(spark, t, {"score": [7]})
     assert n == 1
     assert _bag(read_snapshot(spark, t).where("id = 0"), "id") == []
 
@@ -472,7 +472,6 @@ def test_feed_no_double_emit_defaults_growth_with_dv(spark, tmp_path):
     diff already reports the DV'd rows as deletes — the dv-delta leg
     must not emit them a second time at the same _commit_version."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows_dv,
         snapshot_restore,
     )
 
@@ -483,7 +482,7 @@ def test_feed_no_double_emit_defaults_growth_with_dv(spark, tmp_path):
     )
     snapshot_add_column(spark, t, "score", "int", default=5)
     v3 = _man(spark, t)["version"]
-    snapshot_delete_rows_dv(spark, t, "id", [2])
+    snapshot_delete(spark, t, {"id": [2]}, mode="dv")
     v_dv = _man(spark, t)["version"]
     snapshot_restore(spark, t, v1)
     v_back = _man(spark, t)["version"]

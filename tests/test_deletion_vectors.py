@@ -1,6 +1,6 @@
 """Deletion vectors (merge-on-read deletes) on snapshot tables.
 
-``snapshot_delete_rows_dv`` commits (file, row-position) tombstones as
+``snapshot_delete(mode="dv")`` commits (file, row-position) tombstones as
 parquet sidecars instead of rewriting victim files; readers anti-join
 them at scan time; ``snapshot_compact`` folds them into physical files.
 The contract under test: DV deletes are ROW-FOR-ROW equivalent to the
@@ -19,13 +19,12 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
-    read_snapshot_pruned,
+    Range,
     snapshot_changes,
     snapshot_compact,
-    snapshot_delete_rows,
-    snapshot_delete_rows_dv,
+    snapshot_delete,
     snapshot_restore,
-    snapshot_update_rows,
+    snapshot_update,
     snapshot_versions,
     snapshot_write,
     snapshot_write_with_stats,
@@ -82,8 +81,8 @@ def test_dv_equals_rewrite_over_dml_storm(spark, tmp_path):
         assert _bag(read_snapshot(spark, a)) == _bag(read_snapshot(spark, b))
         assert _bag(read_snapshot(spark, a)) == sorted(ref)
 
-    va, na = snapshot_delete_rows_dv(spark, a, "id", [3, 17, 999])
-    vb, nb = snapshot_delete_rows(spark, b, "id", [3, 17, 999])
+    va, na = snapshot_delete(spark, a, {"id": [3, 17, 999]}, mode="dv")
+    vb, nb = snapshot_delete(spark, b, {"id": [3, 17, 999]}, mode="rewrite")
     assert na == nb == 2
     ref -= {(3, 0, "v3"), (17, 2, "v17")}
     check()
@@ -97,15 +96,17 @@ def test_dv_equals_rewrite_over_dml_storm(spark, tmp_path):
 
     # second DV delete stacks on the first (and the duplicate value
     # 17 is already gone -> only the fresh matches count)
-    _, na = snapshot_delete_rows_dv(spark, a, "id", [17, 100, 5])
-    _, nb = snapshot_delete_rows(spark, b, "id", [17, 100, 5])
+    _, na = snapshot_delete(spark, a, {"id": [17, 100, 5]}, mode="dv")
+    _, nb = snapshot_delete(spark, b, {"id": [17, 100, 5]}, mode="rewrite")
     assert na == nb == 2
     ref -= {(100, 1, "new"), (5, 2, "v5")}
     check()
 
     # CoW update on the DV table must not resurrect tombstoned rows
     for t in (a, b):
-        snapshot_update_rows(spark, t, "id", [7], {"v": "patched"})
+        snapshot_update(
+            spark, t, {"id": [7]}, {"v": "patched"}, mode="rewrite",
+        )
     ref = {(i, m, "patched") if i == 7 else (i, m, v) for i, m, v in ref}
     check()
 
@@ -123,7 +124,7 @@ def test_dv_equals_rewrite_over_dml_storm(spark, tmp_path):
 
     # deleting already-deleted values again: no-op, no new version
     n_vers = len(snapshot_versions(spark, a))
-    v, n = snapshot_delete_rows_dv(spark, a, "id", [3, 17])
+    v, n = snapshot_delete(spark, a, {"id": [3, 17]}, mode="dv")
     assert n == 0 and len(snapshot_versions(spark, a)) == n_vers
 
 
@@ -138,7 +139,7 @@ def test_dv_null_safety(spark, table):
         "id long, month int, v string",
     )
     snapshot_write(df, table)
-    _, n = snapshot_delete_rows_dv(spark, table, "id", [1, 2])
+    _, n = snapshot_delete(spark, table, {"id": [1, 2]}, mode="dv")
     assert n == 2
     got = read_snapshot(spark, table).collect()
     assert [(r.id, r.v) for r in got] == [(None, "keepme")]
@@ -158,10 +159,10 @@ def test_dv_read_surfaces(spark, table, tmp_path):
     idx = str(tmp_path / "dv_bloom")
     build_snapshot_bloom_index(spark, table, "id", idx)
     v1 = 1
-    _, n = snapshot_delete_rows_dv(spark, table, "id", [4, 5, 6])
+    _, n = snapshot_delete(spark, table, {"id": [4, 5, 6]}, mode="dv")
     assert n == 3
     # pruned range read: tombstoned rows excluded, others exact
-    got = read_snapshot_pruned(spark, table, "id", 3, 8)
+    got = read_snapshot(spark, table, where={"id": Range(3, 8)})
     assert sorted(r.id for r in got.collect()) == [3, 7, 8]
     # Bloom point lookup: physical candidate, zero live matches
     assert read_snapshot_with_bloom(spark, table, idx, [5]).count() == 0
@@ -183,7 +184,7 @@ def test_dv_change_feed_and_restore_resurrection(spark, table):
     snapshot_write_with_stats(
         _df(spark, base), table, stats_cols=["id"], partition_cols=["month"]
     )
-    snapshot_delete_rows_dv(spark, table, "id", [2, 7])  # v2
+    snapshot_delete(spark, table, {"id": [2, 7]}, mode="dv")  # v2
     ch = snapshot_changes(spark, table, from_version=1, to_version=2)
     assert sorted(
         (r.id, r._change_type) for r in ch.collect()
@@ -195,7 +196,7 @@ def test_dv_change_feed_and_restore_resurrection(spark, table):
         (r.id, r._change_type) for r in ch2.collect()
     ) == [(2, "insert"), (7, "insert")]
 
-    snapshot_delete_rows_dv(spark, table, "id", [0])  # v4
+    snapshot_delete(spark, table, {"id": [0]}, mode="dv")  # v4
     snapshot_compact(spark, table, partition_cols=["month"])  # v5 folds
     assert snapshot_changes(
         spark, table, from_version=4, to_version=5
@@ -235,7 +236,7 @@ def test_dv_feed_classification(spark, table, tmp_path):
     got = _drain(spark, table, str(tmp_path / "dvf"), "dv_f1",
                  on_non_append="verify")
     assert got.count() == 6
-    snapshot_delete_rows_dv(spark, table, "id", [1])
+    snapshot_delete(spark, table, {"id": [1]}, mode="dv")
     for mode, ck in (("fail", "dvf_f"), ("verify", "dvf")):
         with pytest.raises(Exception, match="deletion vectors"):
             _drain(spark, table, str(tmp_path / ck), f"dv_{mode}",
@@ -271,10 +272,10 @@ def test_dv_branches_and_publish(spark, table):
         _df(spark, [(i, 1, f"v{i}") for i in range(8)]),
         table, stats_cols=["id"], partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [0])  # main v2
+    snapshot_delete(spark, table, {"id": [0]}, mode="dv")  # main v2
     ref = create_branch(spark, table, "work")
     assert read_snapshot(spark, ref).count() == 7  # fork carries DVs
-    snapshot_delete_rows_dv(spark, ref, "id", [1, 2])
+    snapshot_delete(spark, ref, {"id": [1, 2]}, mode="dv")
     assert read_snapshot(spark, ref).count() == 5
     assert read_snapshot(spark, table).count() == 7  # main isolated
     publish_branch(spark, table, "work")
@@ -292,7 +293,7 @@ def test_dv_survives_vacuum_and_sweep(spark, table):
         _df(spark, [(i, 1, f"v{i}") for i in range(10)]),
         table, stats_cols=["id"], partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [3])  # v2 (dv commit)
+    snapshot_delete(spark, table, {"id": [3]}, mode="dv")  # v2 (dv commit)
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
@@ -341,7 +342,7 @@ def test_dv_write_amplification_win(spark, table):
     before_dirs = set(os.listdir(os.path.join(table, "data")))
     # victims spread across the id range -> every file holds one
     victims = list(range(0, 4000, 500))
-    _, n = snapshot_delete_rows_dv(spark, table, "id", victims)
+    _, n = snapshot_delete(spark, table, {"id": victims}, mode="dv")
     assert n == len(victims)
     dv_bytes = _commit_dir_bytes(table, before_dirs)
 
@@ -351,7 +352,7 @@ def test_dv_write_amplification_win(spark, table):
         _df(spark, rows), table2, stats_cols=["id"], partition_cols=["month"]
     )
     before2 = set(os.listdir(os.path.join(table2, "data")))
-    _, n2 = snapshot_delete_rows(spark, table2, "id", victims)
+    _, n2 = snapshot_delete(spark, table2, {"id": victims}, mode="rewrite")
     assert n2 == n
     rw_bytes = _commit_dir_bytes(table2, before2)
 
@@ -366,14 +367,10 @@ def test_dv_write_amplification_win(spark, table):
 
 @pytest.mark.slowproof
 def test_update_dv_equals_rewrite(spark, tmp_path):
-    """snapshot_update_rows_dv ≡ the CoW update row-for-row: one
+    """snapshot_update(mode="dv") ≡ the CoW update row-for-row: one
     commit tombstones old images and appends patched ones; the change
     feed reports delete(old) + insert(new); expression-valued set
     works; tombstoned rows never resurrect through it."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_update_rows_dv,
-    )
-
     a = str(tmp_path / "udv")
     b = str(tmp_path / "urw")
     rows = [(i, i % 2, f"v{i}") for i in range(20)]
@@ -381,14 +378,14 @@ def test_update_dv_equals_rewrite(spark, tmp_path):
         snapshot_write_with_stats(
             _df(spark, rows), t, stats_cols=["id"], partition_cols=["month"]
         )
-        snapshot_delete_rows_dv(spark, t, "id", [4])  # pre-existing DV
-    va, na = snapshot_update_rows_dv(
-        spark, a, "id", [3, 4, 7],
-        {"v": F.concat(F.lit("R:"), F.col("v"))},
+        snapshot_delete(spark, t, {"id": [4]}, mode="dv")  # pre-existing DV
+    va, na = snapshot_update(
+        spark, a, {"id": [3, 4, 7]}, {"v": F.concat(F.lit("R:"), F.col("v"))},
+        mode="dv",
     )
-    vb, nb = snapshot_update_rows(
-        spark, b, "id", [3, 4, 7],
-        {"v": F.concat(F.lit("R:"), F.col("v"))},
+    vb, nb = snapshot_update(
+        spark, b, {"id": [3, 4, 7]}, {"v": F.concat(F.lit("R:"), F.col("v"))},
+        mode="rewrite",
     )
     assert na == nb == 2  # id 4 is already deleted on both
     assert _bag(read_snapshot(spark, a)) == _bag(read_snapshot(spark, b))
@@ -402,10 +399,10 @@ def test_update_dv_equals_rewrite(spark, tmp_path):
     ]
     # partition-column update refuses, same as CoW
     with pytest.raises(ValueError, match="partition column"):
-        snapshot_update_rows_dv(spark, a, "id", [1], {"month": 9})
+        snapshot_update(spark, a, {"id": [1]}, {"month": 9}, mode="dv")
     # stats recorded for the patched files keep pruned reads exact
     assert sorted(
-        r.id for r in read_snapshot_pruned(spark, a, "id", 3, 7).collect()
+        r.id for r in read_snapshot(spark, a, where={"id": Range(3, 7)}).collect()
     ) == [3, 5, 6, 7]
 
 
@@ -427,7 +424,7 @@ def test_compact_dvs_consolidates_sidecars(spark, table, tmp_path):
         table, stats_cols=["id"], partition_cols=["month"],
     )
     for k in (1, 5, 9):
-        snapshot_delete_rows_dv(spark, table, "id", [k])
+        snapshot_delete(spark, table, {"id": [k]}, mode="dv")
     man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
     old_dvs = man["dv_files"]
     assert len(old_dvs) == 3
@@ -495,7 +492,7 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
         snapshot_write_with_stats(
             mk(base), t, stats_cols=["id"], partition_cols=["month"]
         )
-        snapshot_delete_rows_dv(spark, t, "id", [9])  # pre-existing DV
+        snapshot_delete(spark, t, {"id": [9]}, mode="dv")  # pre-existing DV
 
     # ---- version_col flavor
     va = snapshot_merge_upsert_dv(
@@ -548,8 +545,8 @@ def _readd_history(spark, table):
         _df(spark, [(i, 0 if i < 6 else 1, f"v{i}") for i in range(12)]),
         table, stats_cols=["id"], partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [1, 3])          # v2
-    snapshot_delete_rows(spark, table, "id", [0, 2, 4, 5])       # v3
+    snapshot_delete(spark, table, {"id": [1, 3]}, mode="dv")          # v2
+    snapshot_delete(spark, table, {"id": [0, 2, 4, 5]}, mode="rewrite")       # v3
     man3 = _load_manifest(spark, table, 3)
     assert man3.get("dv_files")  # tombstones still carried
     snapshot_restore(spark, table, 2)                            # v4
@@ -629,7 +626,7 @@ def test_plain_reads_keep_user_dv_named_columns(spark, table):
     assert sorted((r.id, r._dv_file) for r in got.collect()) \
         == [(1, "x"), (2, "y")]
     with pytest.raises(ValueError, match="reserved"):
-        snapshot_delete_rows_dv(spark, table, "id", [1])
+        snapshot_delete(spark, table, {"id": [1]}, mode="dv")
 
 
 def test_dv_read_plan_is_broadcast_only(spark, tmp_path):
@@ -648,7 +645,7 @@ def test_dv_read_plan_is_broadcast_only(spark, tmp_path):
         _df(spark, [(i, i % 3, f"v{i}") for i in range(600)]),
         table, stats_cols=["id"], partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [5, 50, 500])
+    snapshot_delete(spark, table, {"id": [5, 50, 500]}, mode="dv")
     got = read_snapshot(spark, table)
     m = collect_with_metrics(got)
     assert m["n_shuffles"] == 0, m
@@ -676,10 +673,10 @@ def test_feed_skip_streams_untargeted_appends_alongside_readd(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(10)]),
         table, partition_cols=["month"],
     )                                                          # v1
-    snapshot_delete_rows_dv(spark, table, "id", [0])           # v2
+    snapshot_delete(spark, table, {"id": [0]}, mode="dv")           # v2
     man2 = _load_manifest(spark, table, 2)
     targeted = [f for f in man2["files"] if "month=0" in f]
-    snapshot_delete_rows(spark, table, "id", [2, 4, 6, 8])     # v3 CoW
+    snapshot_delete(spark, table, {"id": [2, 4, 6, 8]}, mode="rewrite")     # v3 CoW
     man3 = _load_manifest(spark, table, 3)
     readd = sorted(set(targeted) - set(man3["files"]))
     assert readd  # the tombstoned month-0 file left the manifest
@@ -726,8 +723,8 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
         _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]),
         table, partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [0, 2, 4, 6, 8])  # month 0
-    snapshot_delete_rows_dv(spark, table, "id", [1])              # month 1
+    snapshot_delete(spark, table, {"id": [0, 2, 4, 6, 8]}, mode="dv")  # month 0
+    snapshot_delete(spark, table, {"id": [1]}, mode="dv")              # month 1
     v = snapshot_compact_dvs(spark, table)
     man = _load_manifest(spark, table, v)
     assert len(man["dv_files"]) == 1
@@ -766,15 +763,14 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
     )
 
 
-def test_snapshot_delete_mode_auto_dispatch(spark, table):
+def test_snapshot_delete_mode_auto_dispatch(spark, table, monkeypatch):
     """mode='auto' picks by the bytes the rewrite would copy: below
     the threshold it rewrites (no tombstone debt), above it writes
     tombstones — both row-for-row equivalent, op recorded."""
+    from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
-        snapshot_delete,
-        snapshot_update,
     )
 
     snapshot_write_with_stats(
@@ -782,22 +778,22 @@ def test_snapshot_delete_mode_auto_dispatch(spark, table):
         table, stats_cols=["id"], partition_cols=["month"],
     )
     # victims are tiny vs a huge threshold -> rewrite
-    v1, n1 = snapshot_delete(spark, table, "id", [4], dv_threshold_mb=1024)
+    monkeypatch.setattr(sn, "DV_THRESHOLD_MB", 1024)
+    v1, n1 = snapshot_delete(spark, table, {"id": [4]})
     assert n1 == 1
     assert _load_manifest(spark, table, v1)["op"] == "delete_rows"
     assert not _load_manifest(spark, table, v1).get("dv_files")
     # threshold 0 -> any victim bytes exceed it -> DV
-    v2, n2 = snapshot_delete(spark, table, "id", [7], dv_threshold_mb=0)
+    monkeypatch.setattr(sn, "DV_THRESHOLD_MB", 0)
+    v2, n2 = snapshot_delete(spark, table, {"id": [7]})
     assert n2 == 1
     man2 = _load_manifest(spark, table, v2)
     assert man2["op"] == "delete_rows_dv" and man2["dv_files"]
     # explicit modes still available through the front door
-    v3, n3 = snapshot_delete(spark, table, "id", [8], mode="rewrite")
+    v3, n3 = snapshot_delete(spark, table, {"id": [8]}, mode="rewrite")
     assert _load_manifest(spark, table, v3)["op"] == "delete_rows"
     # update dispatch mirrors delete's
-    v4, n4 = snapshot_update(
-        spark, table, "id", [9], {"v": None}, dv_threshold_mb=0
-    )
+    v4, n4 = snapshot_update(spark, table, {"id": [9]}, {"v": None})
     assert n4 == 1
     assert _load_manifest(spark, table, v4)["op"] == "update_rows_dv"
     expect = sorted(
@@ -807,29 +803,28 @@ def test_snapshot_delete_mode_auto_dispatch(spark, table):
     )
     assert _bag(read_snapshot(spark, table)) == expect
     with pytest.raises(ValueError, match="auto|dv|rewrite"):
-        snapshot_delete(spark, table, "id", [1], mode="bogus")
+        snapshot_delete(spark, table, {"id": [1]}, mode="bogus")
 
 
 @pytest.mark.slowproof
-def test_auto_compact_consolidates_sidecar_pileup(spark, table):
+def test_auto_compact_consolidates_sidecar_pileup(spark, table, monkeypatch):
     """A stream of small DV deletes through the front door never lets
-    sidecars pile up unbounded: past auto_compact_files the set is
+    sidecars pile up unbounded: past AUTO_COMPACT_FILES the set is
     consolidated in a follow-on compact_dvs commit, results intact."""
+    from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
-        snapshot_delete,
     )
 
     snapshot_write(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(30)]),
         table, partition_cols=["month"],
     )
+    monkeypatch.setattr(sn, "AUTO_COMPACT_FILES", 3)
     deleted = []
     for i in range(5):
-        snapshot_delete(
-            spark, table, "id", [i], mode="dv", auto_compact_files=3
-        )
+        snapshot_delete(spark, table, {"id": [i]}, mode="dv")
         deleted.append(i)
         man = _load_manifest(
             spark, table, _list_manifests(spark, table)[-1]
@@ -863,7 +858,7 @@ def test_replace_partitions_with_outstanding_dvs(spark, table):
         table, partition_cols=["month"],
     )
     # tombstones in BOTH partitions
-    v_dv, n = snapshot_delete_rows_dv(spark, table, "id", [0, 1])
+    v_dv, n = snapshot_delete(spark, table, {"id": [0, 1]}, mode="dv")
     assert n == 2
     man = _load_manifest(spark, table, v_dv)
     assert man["dv_files"] and len(man["dv_targets"]) >= 2

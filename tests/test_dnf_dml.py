@@ -31,11 +31,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     _load_manifest,
     read_snapshot,
-    read_snapshot_where,
     snapshot_count_where,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_register,
-    snapshot_update_where,
+    snapshot_update,
     snapshot_write_with_stats,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
@@ -77,10 +76,8 @@ def test_dnf_delete_both_strategies(spark, tmp_path, mode):
     # id <= 1 (file0 boundary) OR id >= 10 (file2 boundary): file1
     # [4..7] is admitted by NO branch and must carry by identity
     pre = set(_head_man(spark, t)["files"])
-    v, n = snapshot_delete_where(
-        spark, t,
-        [{"id": Range(hi=1)}, {"id": Range(lo=10)}],
-        mode=mode,
+    v, n = snapshot_delete(
+        spark, t, [{"id": Range(hi=1)}, {"id": Range(lo=10)}], mode=mode,
     )
     assert n == 4
     man = _head_man(spark, t)
@@ -96,10 +93,8 @@ def test_dnf_whole_file_proofs_union(spark, tmp_path):
     t = str(tmp_path / "dnf_proof")
     _mk_ts_table(spark, t)
     pre = set(_head_man(spark, t)["files"])
-    v, n = snapshot_delete_where(
-        spark, t,
-        [{"id": Range(hi=3)}, {"id": Range(lo=8)}],
-        mode="rewrite",
+    v, n = snapshot_delete(
+        spark, t, [{"id": Range(hi=3)}, {"id": Range(lo=8)}], mode="rewrite",
     )
     assert n == 8
     man = _head_man(spark, t)
@@ -119,10 +114,10 @@ def test_dnf_overlapping_branches_count_once(spark, tmp_path):
     dnf = [{"id": Range(hi=6)}, {"id": Range(lo=2, hi=9)}]
     assert snapshot_count_where(spark, t, dnf) == 10  # ids 0..9
     got = sorted(
-        r.id for r in read_snapshot_where(spark, t, dnf).collect()
+        r.id for r in read_snapshot(spark, t, where=dnf).collect()
     )
     assert got == list(range(10))
-    v, n = snapshot_delete_where(spark, t, dnf, mode="rewrite")
+    v, n = snapshot_delete(spark, t, dnf, mode="rewrite")
     assert n == 10
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [
         10, 11,
@@ -133,10 +128,8 @@ def test_dnf_overlapping_branches_count_once(spark, tmp_path):
 def test_dnf_update_both_strategies(spark, tmp_path, mode):
     t = str(tmp_path / f"dnf_upd_{mode}")
     _mk_ts_table(spark, t)
-    v, n = snapshot_update_where(
-        spark, t,
-        [{"id": [0, 5]}, {"fare": Range(lo=10.0)}],
-        {"fare": -1.0},
+    v, n = snapshot_update(
+        spark, t, [{"id": [0, 5]}, {"fare": Range(lo=10.0)}], {"fare": -1.0},
         mode=mode,
     )
     assert n == 4  # 0, 5, 10, 11
@@ -154,9 +147,8 @@ def test_dnf_null_rows_match_no_branch(spark, tmp_path):
     )
     snapshot_write_with_stats(df, t, ["ts", "id"])
     # both branches touch a NULL-bearing column: NULLs survive
-    v, n = snapshot_delete_where(
-        spark, t,
-        [{"ts": Range(hi="2030-01-01")}, {"fare": Range(lo=-100.0)}],
+    v, n = snapshot_delete(
+        spark, t, [{"ts": Range(hi="2030-01-01")}, {"fare": Range(lo=-100.0)}],
         mode="rewrite",
     )
     # id=2 matches branch 1 (ts non-null), id=1 matches branch 2
@@ -184,9 +176,7 @@ def test_dnf_sanitize_shapes(spark, tmp_path):
     t = str(tmp_path / "dnf_noop")
     _mk_ts_table(spark, t, n_files=1)
     head = _list_manifests(spark, t)[-1]
-    v, n = snapshot_delete_where(
-        spark, t, [{"id": [None]}], mode="rewrite"
-    )
+    v, n = snapshot_delete(spark, t, [{"id": [None]}], mode="rewrite")
     assert (v, n) == (head, 0)
 
 

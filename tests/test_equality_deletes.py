@@ -26,7 +26,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     _load_manifest,
     read_snapshot,
-    read_snapshot_pruned,
+    Range,
     snapshot_changes,
     snapshot_count,
     snapshot_count_nonnull,
@@ -105,7 +105,7 @@ def test_upsert_and_delete_keys_end_to_end(spark, table):
     assert snapshot_minmax(spark, table, "id") == (0, 100)
     assert snapshot_count_nonnull(spark, table, "id") == 13
     # pruned read masked too
-    pruned = read_snapshot_pruned(spark, table, "id", 0, 10)
+    pruned = read_snapshot(spark, table, where={"id": Range(0, 10)})
     assert not [r for r in pruned.collect() if r.id == 2 and r.v == "v2"]
     # key delete: no data writes beyond one sidecar
     v2, nk = snapshot_delete_keys(
@@ -276,7 +276,7 @@ def test_mutators_resolve_first(spark, table):
     snapshot_append_upsert(
         spark, table, _df(spark, [(3, 1, "N3")]), ["id"]
     )
-    v, n = snapshot_delete(spark, table, "id", [3, 4])
+    v, n = snapshot_delete(spark, table, {"id": [3, 4]})
     assert n == 2  # N3 image + row 4 (the masked old 3 is already dead)
     assert not [
         r for r in read_snapshot(spark, table).collect() if r.id in (3, 4)
@@ -288,7 +288,7 @@ def test_mutators_resolve_first(spark, table):
     snapshot_append_upsert(
         spark, table, _df(spark, [(5, 1, "N5")]), ["id"]
     )
-    v, n = snapshot_update(spark, table, "id", [5], {"v": "UPD"})
+    v, n = snapshot_update(spark, table, {"id": [5]}, {"v": "UPD"})
     assert n == 1  # only the live N5 image, never the masked old 5
     five = [r.v for r in read_snapshot(spark, table).collect() if r.id == 5]
     assert five == ["UPD"]
@@ -744,7 +744,7 @@ def test_feed_skip_subtracts_dv_targeted_readds_on_eq_commits(
         read_snapshot_stream,
     )
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows_dv,
+        snapshot_delete,
         snapshot_drop_partitions,
         snapshot_restore,
     )
@@ -760,7 +760,7 @@ def test_feed_skip_subtracts_dv_targeted_readds_on_eq_commits(
         _df(spark, [(10, 1, "f10"), (11, 1, "f11")]),
         table, mode="append", partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [0, 10])  # D targets both
+    snapshot_delete(spark, table, {"id": [0, 10]}, mode="dv")  # D targets both
     v_pre_drop = _list_manifests(spark, table)[-1]
     snapshot_drop_partitions(spark, table, {"month": 1})  # F leaves, D stays
     snapshot_delete_keys(  # E2 — so the restore's eq set CHANGES

@@ -17,9 +17,9 @@ from nyc_taxi_data_warehouse_spark.operators.search import (
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
-    snapshot_delete_rows,
+    snapshot_delete,
     snapshot_restore,
-    snapshot_update_rows,
+    snapshot_update,
     snapshot_write,
     snapshot_write_with_stats,
 )
@@ -73,10 +73,10 @@ def test_sync_follows_all_dml(spark, tmp_path):
     snapshot_write(
         _docs(spark, [(4, "zeta alpha")]), table, mode="append"
     )
-    snapshot_update_rows(
-        spark, table, "doc_id", [3], {"text": "redacted"}
+    snapshot_update(
+        spark, table, {"doc_id": [3]}, {"text": "redacted"}, mode="rewrite",
     )
-    snapshot_delete_rows(spark, table, "doc_id", [2])
+    snapshot_delete(spark, table, {"doc_id": [2]}, mode="rewrite")
 
     res = sync_postings_from_snapshot(spark, table, idx)
     assert res["docs_upserted"] == 2  # doc 4 (new) + doc 3 (update)
@@ -118,8 +118,8 @@ def test_sync_requires_cursor_and_update_in_one_range(spark, tmp_path):
     # absent; delete-then-reinsert nets to present
     snapshot_write(_docs(spark, [(9, "ephemeral words")]), table,
                    mode="append")
-    snapshot_delete_rows(spark, table, "doc_id", [9])
-    snapshot_delete_rows(spark, table, "doc_id", [1])
+    snapshot_delete(spark, table, {"doc_id": [9]}, mode="rewrite")
+    snapshot_delete(spark, table, {"doc_id": [1]}, mode="rewrite")
     snapshot_write(_docs(spark, [(1, "one again")]), table, mode="append")
     sync_postings_from_snapshot(spark, table, idx)
     assert _index_rows(spark, idx) == _rebuild(spark, table, tmp_path, "ref3")
@@ -161,9 +161,9 @@ def test_ivf_sync_follows_all_dml(spark, tmp_path):
     # (both coexist between the two — bag semantics), re-append — the
     # feed's per-id last-change resolution must land on the final image
     snapshot_write(vecs(spark, [(13, [0.7, 0.3])]), table, mode="append")
-    snapshot_delete_rows(spark, table, "vec_id", [12])
+    snapshot_delete(spark, table, {"vec_id": [12]}, mode="rewrite")
     snapshot_write(vecs(spark, [(10, [0.05, 0.95])]), table, mode="append")
-    snapshot_delete_rows(spark, table, "vec_id", [10])
+    snapshot_delete(spark, table, {"vec_id": [10]}, mode="rewrite")
     snapshot_write(vecs(spark, [(10, [0.05, 0.95])]), table, mode="append")
 
     res = sync_ivf_from_snapshot(spark, table, idx, cents)
@@ -247,13 +247,16 @@ def test_sync_fuzz_random_dml_sequences(spark, tmp_path):
                 add(rng.randint(1, 2))
             elif op == "update" and live:
                 victim = rng.choice(sorted(live))
-                snapshot_update_rows(
-                    spark, table, "doc_id", [victim], {"text": txt()}
+                snapshot_update(
+                    spark, table, {"doc_id": [victim]}, {"text": txt()},
+                    mode="rewrite",
                 )
             elif op == "delete" and live:
                 victim = rng.choice(sorted(live))
                 live.discard(victim)
-                snapshot_delete_rows(spark, table, "doc_id", [victim])
+                snapshot_delete(
+                    spark, table, {"doc_id": [victim]}, mode="rewrite",
+                )
         sync_postings_from_snapshot(spark, table, idx)
         assert _index_rows(spark, idx) == _rebuild(
             spark, table, tmp_path, f"fz_ref_{seed}"
@@ -282,7 +285,9 @@ def test_sync_null_redaction_removes_all_postings(spark, tmp_path):
         postings(read_snapshot(spark, table), "text", "doc_id"), idx
     )
     set_postings_sync_cursor(spark, idx, 1)
-    snapshot_update_rows(spark, table, "doc_id", [3], {"text": None})
+    snapshot_update(
+        spark, table, {"doc_id": [3]}, {"text": None}, mode="rewrite",
+    )
     res = sync_postings_from_snapshot(spark, table, idx)
     assert res["docs_deleted"] == 1  # termless doc counts as a delete
     assert _index_rows(spark, idx) == _rebuild(spark, table, tmp_path, "nr_ref")
@@ -318,7 +323,9 @@ def test_ivf_sync_null_embedding_update_removes_old_vector(spark, tmp_path):
     )
     write_ivf_index(read_snapshot(spark, table), cents, idx)
     set_ivf_sync_cursor(spark, idx, v1)
-    snapshot_update_rows(spark, table, "vec_id", [10], {"embedding": None})
+    snapshot_update(
+        spark, table, {"vec_id": [10]}, {"embedding": None}, mode="rewrite",
+    )
     sync_ivf_from_snapshot(spark, table, idx, cents)
     rows = spark.read.parquet(idx).collect()
     by_id = {r["vec_id"]: r["embedding"] for r in rows}
@@ -361,7 +368,7 @@ def test_sync_bootstrap_from_empty_table(spark, tmp_path):
         table,
         mode="append",
     )
-    snapshot_delete_rows(spark, table, "doc_id", [2])
+    snapshot_delete(spark, table, {"doc_id": [2]}, mode="rewrite")
     res = sync_postings_from_snapshot(spark, table, idx)
     assert res["docs_upserted"] == 1
     assert _index_rows(spark, idx) == _rebuild(
@@ -446,12 +453,15 @@ def test_minhash_sync_follows_all_dml(spark, tmp_path):
         table,
         mode="append",
     )
-    snapshot_update_rows(
-        spark, table, "doc_id", [1],
+    snapshot_update(
+        spark, table, {"doc_id": [1]},
         {"text": "the quick brown fox now sleeps all day long"},
+        mode="rewrite",
     )
-    snapshot_update_rows(spark, table, "doc_id", [3], {"text": None})
-    snapshot_delete_rows(spark, table, "doc_id", [2])
+    snapshot_update(
+        spark, table, {"doc_id": [3]}, {"text": None}, mode="rewrite",
+    )
+    snapshot_delete(spark, table, {"doc_id": [2]}, mode="rewrite")
 
     res = sync_minhash_from_snapshot(spark, table, idx)
     assert res["docs_upserted"] == 3  # docs 5, 1, 3 (final inserts)
@@ -507,7 +517,7 @@ def test_minhash_sync_restores_suppression_semantics(spark, tmp_path):
     )
     assert {r["new_id"] for r in hits.collect()} == {100, 200}
     # takedown doc 1, sync, re-probe: only doc 2 still suppresses
-    snapshot_delete_rows(spark, table, "doc_id", [1])
+    snapshot_delete(spark, table, {"doc_id": [1]}, mode="rewrite")
     sync_minhash_from_snapshot(spark, table, idx)
     hits2 = incremental_minhash_pairs(
         spark, probe, "text", "doc_id", idx, jaccard_threshold=0.8
@@ -520,11 +530,6 @@ def test_postings_sync_follows_dv_deletes_and_updates(spark, tmp_path):
     SAME change feed as copy-on-write DML: a DV delete drops the doc's
     postings, a DV update re-postings the new text, and the synced
     index equals a full rebuild from the latest version."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows_dv,
-        snapshot_update_rows_dv,
-    )
-
     table = str(tmp_path / "dv_docs")
     idx = str(tmp_path / "dv_postings")
     v1 = snapshot_write_with_stats(
@@ -544,9 +549,9 @@ def test_postings_sync_follows_dv_deletes_and_updates(spark, tmp_path):
     )
     set_postings_sync_cursor(spark, idx, v1)
 
-    snapshot_delete_rows_dv(spark, table, "doc_id", [2])
-    snapshot_update_rows_dv(
-        spark, table, "doc_id", [3], {"text": "omega"}
+    snapshot_delete(spark, table, {"doc_id": [2]}, mode="dv")
+    snapshot_update(
+        spark, table, {"doc_id": [3]}, {"text": "omega"}, mode="dv",
     )
     res = sync_postings_from_snapshot(spark, table, idx)
     assert res["docs_deleted"] == 1 and res["docs_upserted"] == 1

@@ -29,11 +29,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _load_manifest,
     _read_doc,
     read_snapshot,
-    read_snapshot_pruned,
+    Range,
     snapshot_changes,
     snapshot_compact_dvs,
-    snapshot_delete_rows,
-    snapshot_delete_rows_dv,
+    snapshot_delete,
     snapshot_restore,
     snapshot_write,
     snapshot_write_with_stats,
@@ -267,7 +266,7 @@ def test_commit_docs_are_o_change_not_o_table(spark, table, ckpt3):
         got = read_snapshot(spark, table, version=v).count()
         assert got == 8 + (v - 1)
     # stats-driven pruning still exact through reconstruction
-    assert read_snapshot_pruned(spark, table, "id", 0, 3).count() == 4
+    assert read_snapshot(spark, table, where={"id": Range(0, 3)}).count() == 4
 
 
 def test_checkpoint_blob_written_before_claim(spark, table, ckpt3):
@@ -326,7 +325,7 @@ def test_legacy_full_manifest_backcompat(spark, table, tmp_path):
     assert read_snapshot(spark, table).count() == 7
     # legacy manifests with sidecars but no recorded dv_targets:
     # the next DV commit derives the full target list from sidecars
-    v, n = snapshot_delete_rows_dv(spark, table, "id", [0])
+    v, n = snapshot_delete(spark, table, {"id": [0]}, mode="dv")
     man_v = _load_manifest(spark, table, v)
     # simulate a legacy DV manifest: full body, no recorded targets
     legacy_dv = {
@@ -337,7 +336,7 @@ def test_legacy_full_manifest_backcompat(spark, table, tmp_path):
     _hand_write(table, v, legacy_dv)
     assert "dv_targets" not in _load_manifest(spark, table, v)
     assert read_snapshot(spark, table).count() == 6  # DV still applies
-    v2, _ = snapshot_delete_rows_dv(spark, table, "id", [2])
+    v2, _ = snapshot_delete(spark, table, {"id": [2]}, mode="dv")
     man2 = _load_manifest(spark, table, v2)
     # derived targets cover BOTH the legacy sidecar's and the new one's
     assert len(man2["dv_targets"]) == 2
@@ -431,7 +430,7 @@ def test_dv_targets_lifecycle(spark, table):
         _df(spark, [(i, i % 3, f"a{i}") for i in range(12)]),
         table, partition_cols=["month"],
     )
-    v, _ = snapshot_delete_rows_dv(spark, table, "id", [0, 3])   # month 0
+    v, _ = snapshot_delete(spark, table, {"id": [0, 3]}, mode="dv")   # month 0
     man = _load_manifest(spark, table, v)
     tgts = man["dv_targets"]
     assert tgts and all("month=0" in t for t in tgts)
@@ -444,7 +443,7 @@ def test_dv_targets_lifecycle(spark, table):
     assert man2["dv_targets"] == tgts
     # CoW delete rewrites the targeted files -> recorded list is now a
     # SUPERSET of live targets; reads stay exact
-    snapshot_delete_rows(spark, table, "id", [6])  # month 0 victim files
+    snapshot_delete(spark, table, {"id": [6]}, mode="rewrite")  # month 0 victim files
     assert _bag(read_snapshot(spark, table)) == sorted(
         [(i, i % 3, f"a{i}") for i in range(12) if i not in (0, 3, 6)]
         + [(100, 1, "x")]
@@ -472,7 +471,7 @@ def test_dv_read_split_plan_only_targeted_files_join(spark, table):
         _df(spark, [(i, i % 4, f"a{i}") for i in range(16)]),
         table, partition_cols=["month"],
     )
-    v, n = snapshot_delete_rows_dv(spark, table, "id", [1])  # month 1 only
+    v, n = snapshot_delete(spark, table, {"id": [1]}, mode="dv")  # month 1 only
     assert n == 1
     man = _load_manifest(spark, table, v)
     assert all("month=1" in t for t in man["dv_targets"])
@@ -530,7 +529,7 @@ def test_change_feed_and_time_travel_across_delta_chains(
         _df(spark, [(10, 0, "x")]), table, mode="append",
         partition_cols=["month"],
     )                                                    # v2 delta
-    snapshot_delete_rows_dv(spark, table, "id", [0])     # v3 ckpt + DV
+    snapshot_delete(spark, table, {"id": [0]}, mode="dv")     # v3 ckpt + DV
     snapshot_write(
         _df(spark, [(11, 1, "y")]), table, mode="append",
         partition_cols=["month"],
@@ -557,7 +556,7 @@ def test_branch_fork_is_checkpoint_and_carries_dv_targets(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(8)]),
         table, partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [2])
+    snapshot_delete(spark, table, {"id": [2]}, mode="dv")
     man = _load_manifest(spark, table, 2)
     ref = create_branch(spark, table, "dev")
     bdoc = _read_doc(spark, ref, 1)
@@ -668,10 +667,9 @@ def test_auto_compact_cadence_gate(spark, table, monkeypatch):
         _df(spark, [(i, i % 2, f"v{i}") for i in range(40)]),
         table, partition_cols=["month"],
     )
+    monkeypatch.setattr(sn, "AUTO_COMPACT_FILES", None)
     for i in range(4):
-        sn.snapshot_delete(
-            spark, table, "id", [i], mode="dv", auto_compact_files=None
-        )
+        sn.snapshot_delete(spark, table, {"id": [i]}, mode="dv")
     man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
     assert len(man["dv_files"]) >= 4
     calls = []
@@ -698,10 +696,9 @@ def test_auto_compact_cadence_gate(spark, table, monkeypatch):
     assert not calls2
     # more DML pushes the consolidation out of the window: fires again
     monkeypatch.undo()
+    monkeypatch.setattr(sn, "AUTO_COMPACT_FILES", None)
     for i in range(10, 13):
-        sn.snapshot_delete(
-            spark, table, "id", [i], mode="dv", auto_compact_files=None
-        )
+        sn.snapshot_delete(spark, table, {"id": [i]}, mode="dv")
     calls3 = []
     monkeypatch.setattr(
         sn, "snapshot_compact_dvs",
@@ -729,7 +726,7 @@ def test_snapshot_count_metadata_only_across_dml_storm(
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_compact,
         snapshot_count,
-        snapshot_update_rows_dv,
+        snapshot_update,
     )
 
     snapshot_write(
@@ -740,9 +737,9 @@ def test_snapshot_count_metadata_only_across_dml_storm(
         _df(spark, [(100 + i, i % 2, f"b{i}") for i in range(4)]),
         table, mode="append", partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [1, 3])
-    snapshot_update_rows_dv(spark, table, "id", [100], {"v": "patched"})
-    snapshot_delete_rows(spark, table, "id", [5])  # copy-on-write
+    snapshot_delete(spark, table, {"id": [1, 3]}, mode="dv")
+    snapshot_update(spark, table, {"id": [100]}, {"v": "patched"}, mode="dv")
+    snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")  # copy-on-write
     snapshot_compact(spark, table, target_mb=1)
     snapshot_restore(spark, table, 3)
     for v in _list_manifests(spark, table):

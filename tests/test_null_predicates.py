@@ -35,12 +35,11 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _null_victims,
     _victims_by_stats_where,
     read_snapshot,
-    read_snapshot_where,
     snapshot_add_column,
     snapshot_count_where,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_register,
-    snapshot_update_where,
+    snapshot_update,
     snapshot_write,
     snapshot_write_with_stats,
 )
@@ -86,9 +85,7 @@ def test_counts_and_reads(spark, tmp_path):
     assert snapshot_count_where(spark, t, {"email": IS_NOT_NULL}) == 6
     got = sorted(
         r.id
-        for r in read_snapshot_where(
-            spark, t, {"email": IS_NULL}
-        ).collect()
+        for r in read_snapshot(spark, t, where={"email": IS_NULL}).collect()
     )
     assert got == [4, 6, 8, 9]
     # conjunction with a range
@@ -106,9 +103,7 @@ def test_delete_both_strategies(spark, tmp_path, mode):
     t = str(tmp_path / f"np_del_{mode}")
     _mk(spark, t)
     pre = set(_head_man(spark, t)["files"])
-    v, n = snapshot_delete_where(
-        spark, t, {"email": IS_NULL}, mode=mode
-    )
+    v, n = snapshot_delete(spark, t, {"email": IS_NULL}, mode=mode)
     assert n == 4
     man = _head_man(spark, t)
     # the zero-null file carried by identity under both strategies
@@ -125,9 +120,8 @@ def test_delete_both_strategies(spark, tmp_path, mode):
 def test_update_not_null(spark, tmp_path, mode):
     t = str(tmp_path / f"np_upd_{mode}")
     _mk(spark, t)
-    v, n = snapshot_update_where(
-        spark, t, {"email": IS_NOT_NULL}, {"email": "redacted"},
-        mode=mode,
+    v, n = snapshot_update(
+        spark, t, {"email": IS_NOT_NULL}, {"email": "redacted"}, mode=mode,
     )
     assert n == 6
     got = {r.id: r.email for r in read_snapshot(spark, t).collect()}
@@ -178,7 +172,7 @@ def test_partition_column_null_test_is_exact(spark, tmp_path):
     )
     snapshot_write(df, t, partition_cols=["p"])
     assert snapshot_count_where(spark, t, {"p": IS_NULL}) == 2
-    v, n = snapshot_delete_where(spark, t, {"p": IS_NULL})
+    v, n = snapshot_delete(spark, t, {"p": IS_NULL})
     assert n == 2
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [
         1, 3,
@@ -197,7 +191,7 @@ def test_initial_default_column(spark, tmp_path):
     snapshot_add_column(spark, t, "note", "string")
     assert snapshot_count_where(spark, t, {"tier": IS_NULL}) == 0
     assert snapshot_count_where(spark, t, {"note": IS_NULL}) == 2
-    v, n = snapshot_delete_where(spark, t, {"tier": IS_NULL})
+    v, n = snapshot_delete(spark, t, {"tier": IS_NULL})
     assert n == 0
     assert read_snapshot(spark, t).count() == 2
 

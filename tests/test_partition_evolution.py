@@ -20,18 +20,18 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     _load_manifest,
     read_snapshot,
-    read_snapshot_pruned,
+    Range,
     snapshot_add_column,
     snapshot_changes,
     snapshot_compact,
     snapshot_count,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_drop_partitions,
     snapshot_history,
     snapshot_rename_column,
     snapshot_replace_partitions,
     snapshot_set_layout,
-    snapshot_update_where,
+    snapshot_update,
     snapshot_write,
     snapshot_write_with_stats,
 )
@@ -114,7 +114,9 @@ def test_mixed_reads_and_scoped_reads_exact(spark, tmp_path):
     assert snapshot_count(spark, t, partitions={"month": 0}) == 4
     assert snapshot_count(spark, t, partitions={"month": 2}) == 1
     # stats+partition composed pruned read stays exact
-    pr = read_snapshot_pruned(spark, t, "id", 4, 9, partitions={"month": 0})
+    pr = read_snapshot(
+        spark, t, partitions={"month": 0}, where={"id": Range(4, 9)},
+    )
     assert _bag(pr) == [(5, 0, "e"), (7, 0, "g")]
 
 
@@ -134,7 +136,7 @@ def test_directory_proof_surfaces_refuse_or_fall_back(spark, tmp_path):
             _df(spark, [(9, 0, "z")]), t, partition_cols=["month"]
         )
     # the DELETE front door steps aside to the data path — and is exact
-    v, n = snapshot_delete_where(spark, t, {"month": [0]})
+    v, n = snapshot_delete(spark, t, {"month": [0]})
     assert n == 4  # includes the layout-B row id=5
     man = _load_manifest(spark, t, v)
     assert man["op"] != "drop_partitions"
@@ -147,7 +149,7 @@ def test_update_where_on_partition_col_across_mix(spark, tmp_path):
     t = _mixed(spark, tmp_path)
     # month=2 lives ONLY in the layout-B (unencoded) file — the victim
     # planner must keep it as a candidate (no false negatives)
-    v, n = snapshot_update_where(spark, t, {"month": [2]}, {"v": "UPD"})
+    v, n = snapshot_update(spark, t, {"month": [2]}, {"v": "UPD"})
     assert n == 1
     assert (6, 2, "UPD") in _bag(read_snapshot(spark, t))
 

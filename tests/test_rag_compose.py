@@ -117,11 +117,11 @@ def test_chunk_universe_consistent_across_indexes(spark, indexes):
 
 def test_decontamination_composes_with_retrieval(spark, indexes, tmp_path):
     """Store chunks as a snapshot table, erase one source document via
-    snapshot_delete_rows, rebuild the postings index from the surviving
+    snapshot_delete, rebuild the postings index from the surviving
     snapshot — the erased doc's chunks are no longer retrievable."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         read_snapshot,
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -132,7 +132,7 @@ def test_decontamination_composes_with_retrieval(spark, indexes, tmp_path):
         table,
         stats_cols=["doc_id"],
     )
-    v, n = snapshot_delete_rows(spark, table, "doc_id", [3])
+    v, n = snapshot_delete(spark, table, {"doc_id": [3]}, mode="rewrite")
     assert n == chunks.where("doc_id = 3").count() and n > 0
     survivors = read_snapshot(spark, table, v)
     post2 = str(tmp_path / "post2")

@@ -30,9 +30,9 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     _load_manifest,
     read_snapshot,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_register,
-    snapshot_update_where,
+    snapshot_update,
     snapshot_versions,
     snapshot_write_with_stats,
 )
@@ -78,8 +78,8 @@ def test_ttl_delete_both_strategies(spark, tmp_path, mode):
 
     # ts < 2024-01-06: days 0..4 go — file0 [0..3] wholly inside
     # (drop by reference), file1 [4..7] boundary, file2 untouched
-    v, n = snapshot_delete_where(
-        spark, t, {"ts": Range(hi="2024-01-06", hi_inc=False)}, mode=mode
+    v, n = snapshot_delete(
+        spark, t, {"ts": Range(hi="2024-01-06", hi_inc=False)}, mode=mode,
     )
     assert n == 5
     man = _head_man(spark, t)
@@ -95,8 +95,8 @@ def test_ttl_delete_both_strategies(spark, tmp_path, mode):
 def test_between_update_both_strategies(spark, tmp_path, mode):
     t = str(tmp_path / f"upd_{mode}")
     _mk_ts_table(spark, t)
-    v, n = snapshot_update_where(
-        spark, t, {"id": Range(lo=6, hi=9)}, {"fare": 0.0}, mode=mode
+    v, n = snapshot_update(
+        spark, t, {"id": Range(lo=6, hi=9)}, {"fare": 0.0}, mode=mode,
     )
     assert n == 4
     got = {r.id: r.fare for r in read_snapshot(spark, t).collect()}
@@ -110,9 +110,7 @@ def test_victims_are_only_intersecting_files(spark, tmp_path):
     t = str(tmp_path / "mid")
     _mk_ts_table(spark, t)
     pre = set(_head_man(spark, t)["files"])
-    v, n = snapshot_delete_where(
-        spark, t, {"id": Range(lo=5, hi=6)}, mode="rewrite"
-    )
+    v, n = snapshot_delete(spark, t, {"id": Range(lo=5, hi=6)}, mode="rewrite")
     assert n == 2
     man = _head_man(spark, t)
     carried = pre & set(man["files"])
@@ -131,8 +129,8 @@ def test_null_rows_survive_any_range(spark, tmp_path):
         "id int, ts timestamp, fare double",
     )
     snapshot_write_with_stats(df, t, ["ts", "id"])
-    v, n = snapshot_delete_where(
-        spark, t, {"ts": Range(hi="2030-01-01")}, mode="rewrite"
+    v, n = snapshot_delete(
+        spark, t, {"ts": Range(hi="2030-01-01")}, mode="rewrite",
     )
     assert n == 2
     got = [(r.id, r.ts) for r in read_snapshot(spark, t).collect()]
@@ -154,9 +152,7 @@ def test_all_null_file_carries(spark, tmp_path):
         t, ["k"], mode="append",
     )
     pre = set(_head_man(spark, t)["files"])
-    v, n = snapshot_delete_where(
-        spark, t, {"k": Range(lo=0)}, mode="rewrite"
-    )
+    v, n = snapshot_delete(spark, t, {"k": Range(lo=0)}, mode="rewrite")
     assert n == 2
     man = _head_man(spark, t)
     # the all-null file is the ONLY survivor and it carried by identity
@@ -168,14 +164,12 @@ def test_empty_range_is_noop(spark, tmp_path):
     t = str(tmp_path / "empty")
     _mk_ts_table(spark, t, n_files=1)
     head = snapshot_versions(spark, t)[-1]["version"]
-    assert snapshot_delete_where(spark, t, {"id": Range(lo=9, hi=3)}) == (
+    assert snapshot_delete(spark, t, {"id": Range(lo=9, hi=3)}) == (
         head, 0,
     )
-    assert snapshot_delete_where(
-        spark, t, {"id": Range(lo=5, hi=5, hi_inc=False)}
-    ) == (head, 0)
+    assert snapshot_delete(spark, t, {"id": Range(lo=5, hi=5, hi_inc=False)}) == (head, 0)
     # lo == hi with both ends inclusive is a real one-point range
-    v, n = snapshot_delete_where(spark, t, {"id": Range(lo=2, hi=2)})
+    v, n = snapshot_delete(spark, t, {"id": Range(lo=2, hi=2)})
     assert n == 1
 
 
@@ -196,7 +190,7 @@ def test_auto_mode_dispatches(spark, tmp_path):
     rows are exact."""
     t = str(tmp_path / "auto")
     _mk_ts_table(spark, t)
-    v, n = snapshot_delete_where(spark, t, {"id": Range(lo=10)})
+    v, n = snapshot_delete(spark, t, {"id": Range(lo=10)})
     assert n == 2
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == list(
         range(10)
@@ -219,7 +213,7 @@ def test_timestamp_space_form_bound_no_false_exclusion(spark, tmp_path):
         "id int, ts timestamp",
     ).coalesce(1)
     snapshot_write_with_stats(df, t, ["ts"])
-    v, n = snapshot_delete_where(
+    v, n = snapshot_delete(
         spark, t,
         {"ts": Range(hi="2024-01-01 12:00:00")},  # space form, inclusive
         mode="rewrite",
@@ -241,8 +235,8 @@ def test_timestamp_fraction_padding_boundary(spark, tmp_path):
     snapshot_write_with_stats(df, t, ["ts"])
     # lo = the .1s boundary, inclusive: file min == bound must stay a
     # victim and BOTH rows must go
-    v, n = snapshot_delete_where(
-        spark, t, {"ts": Range(lo="2024-01-01 00:00:00.1")}, mode="rewrite"
+    v, n = snapshot_delete(
+        spark, t, {"ts": Range(lo="2024-01-01 00:00:00.1")}, mode="rewrite",
     )
     assert n == 2
     assert read_snapshot(spark, t).count() == 0
@@ -260,8 +254,8 @@ def test_date_column_string_bound_truncates_like_spark(spark, tmp_path):
     ).coalesce(1)
     snapshot_write_with_stats(df, t, ["day"])
     # '2024-01-02 23:59:59' casts to date 2024-01-02; >= keeps 01-02+
-    v, n = snapshot_delete_where(
-        spark, t, {"day": Range(lo="2024-01-02 23:59:59")}, mode="rewrite"
+    v, n = snapshot_delete(
+        spark, t, {"day": Range(lo="2024-01-02 23:59:59")}, mode="rewrite",
     )
     assert n == 3  # days 1, 2, 3 (indices) — 01-02, 01-03, 01-04
     assert [r.id for r in read_snapshot(spark, t).collect()] == [0]
@@ -277,8 +271,8 @@ def test_decimal_bounds_stay_exact(spark, tmp_path):
         "id int, amt decimal(10,2)",
     )
     snapshot_write_with_stats(df.repartition(2, "id"), t, ["amt"])
-    v, n = snapshot_delete_where(
-        spark, t, {"amt": Range(hi=Decimal("3.25"))}, mode="rewrite"
+    v, n = snapshot_delete(
+        spark, t, {"amt": Range(hi=Decimal("3.25"))}, mode="rewrite",
     )
     assert n == 4  # 0.25, 1.25, 2.25, 3.25 (inclusive boundary)
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [
@@ -293,8 +287,8 @@ def test_string_column_range(spark, tmp_path):
         "id int, w string",
     ).coalesce(1)
     snapshot_write_with_stats(df, t, ["w"])
-    v, n = snapshot_delete_where(
-        spark, t, {"w": Range(lo="b", hi="d", hi_inc=False)}, mode="rewrite"
+    v, n = snapshot_delete(
+        spark, t, {"w": Range(lo="b", hi="d", hi_inc=False)}, mode="rewrite",
     )
     assert n == 2  # banana, cherry
     assert sorted(r.w for r in read_snapshot(spark, t).collect()) == [
@@ -313,9 +307,7 @@ def test_incomparable_bound_is_conservative_not_wrong(spark, tmp_path):
         ).coalesce(1),
         t, ["id"],
     )
-    v, n = snapshot_delete_where(
-        spark, t, {"id": Range(hi="3")}, mode="rewrite"
-    )
+    v, n = snapshot_delete(spark, t, {"id": Range(hi="3")}, mode="rewrite")
     assert n == 4  # Spark casts '3' to int: 0..3 match
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [4, 5]
 
@@ -338,9 +330,7 @@ def test_int_partition_range_typed_compare(spark, tmp_path):
         t, ["id"], mode="append", partition_cols=["month"],
     )
     pre = set(_head_man(spark, t)["files"])
-    v, n = snapshot_delete_where(
-        spark, t, {"month": Range(hi=9)}, mode="rewrite"
-    )
+    v, n = snapshot_delete(spark, t, {"month": Range(hi=9)}, mode="rewrite")
     assert n == 18  # months 1..9, two rows each
     man = _head_man(spark, t)
     # every victim directory was PROVEN by its value: zero rewrites
@@ -358,7 +348,7 @@ def test_date_partition_ttl(spark, tmp_path):
         spark.createDataFrame(rows, "id int, day date"),
         t, ["id"], partition_cols=["day"],
     )
-    v, n = snapshot_delete_where(
+    v, n = snapshot_delete(
         spark, t, {"day": Range(hi="2024-01-03", hi_inc=False)},
         mode="rewrite",
     )
@@ -389,9 +379,7 @@ def test_partition_range_after_layout_evolution(spark, tmp_path):
         spark.createDataFrame([(3, 1), (4, 9)], "id int, month int"),
         t, ["id"], mode="append", partition_cols=["month"],
     )
-    v, n = snapshot_delete_where(
-        spark, t, {"month": Range(hi=5)}, mode="rewrite"
-    )
+    v, n = snapshot_delete(spark, t, {"month": Range(hi=5)}, mode="rewrite")
     assert n == 2  # ids 1 (old-layout data row) and 3 (dir-encoded)
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [2, 4]
 
@@ -492,17 +480,15 @@ def test_malformed_date_bound_never_drops_files(spark, tmp_path):
     head = snapshot_versions(spark, t)[-1]["version"]
     for bad in ("2024-01-153", "2024-01-02x"):
         with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
-            snapshot_delete_where(
-                spark, t, {"day": Range(hi=bad, hi_inc=False)},
-                mode="rewrite",
+            snapshot_delete(
+                spark, t, {"day": Range(hi=bad, hi_inc=False)}, mode="rewrite",
             )
         # nothing committed, nothing dropped
         assert snapshot_versions(spark, t)[-1]["version"] == head
         assert read_snapshot(spark, t).count() == 4
     # the legitimate truncating forms still prune/match exactly
-    v, n = snapshot_delete_where(
-        spark, t, {"day": Range(hi="2024-01-02 23:59:59")},
-        mode="rewrite",
+    v, n = snapshot_delete(
+        spark, t, {"day": Range(hi="2024-01-02 23:59:59")}, mode="rewrite",
     )
     assert n == 2
 
@@ -547,7 +533,7 @@ def test_string_column_ts_shaped_range_not_falsely_empty(spark, tmp_path):
     snapshot_write_with_stats(df, t, ["s"])
     rng = Range(lo="2024-01-01 12:00:00", hi="2024-01-01T05:00:00")
     assert not rng.is_empty()
-    v, n = snapshot_delete_where(spark, t, {"s": rng}, mode="rewrite")
+    v, n = snapshot_delete(spark, t, {"s": rng}, mode="rewrite")
     assert n == 1  # only ' 13:00:00' sits between the RAW bounds
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [2, 3]
     # genuinely empty stays a no-op in both orders
@@ -633,14 +619,13 @@ def test_count_where_exact_under_dv_and_eq_deletes(spark, tmp_path):
     )
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_count_where,
-        snapshot_delete_rows_dv,
     )
 
     t = str(tmp_path / "cntdv")
     _mk_ts_table(spark, t)
     # DV-tombstone a row inside the PROVEN file: recorded count minus
     # tombstones stays exact without opening the file
-    snapshot_delete_rows_dv(spark, t, "id", [1])
+    snapshot_delete(spark, t, {"id": [1]}, mode="dv")
     assert snapshot_count_where(spark, t, {"id": Range(lo=0, hi=3)}) == 3
     # an outstanding equality delete makes the affected file
     # unprovable from metadata — it scans, and the count stays exact
@@ -692,7 +677,7 @@ def test_count_where_cli_bad_range_key_exits_cleanly(spark, tmp_path):
 
 
 def test_read_where_opens_only_admitting_files(spark, tmp_path, monkeypatch):
-    """read_snapshot_where: the scan twin — excluded files never open,
+    """read_snapshot(where=): the scan twin — excluded files never open,
     results exactly equal the full-scan filter."""
     import nyc_taxi_data_warehouse_spark.warehouse.snapshots as S
 
@@ -706,8 +691,8 @@ def test_read_where_opens_only_admitting_files(spark, tmp_path, monkeypatch):
         return orig(spark_, path_, files_, *a, **k)
 
     monkeypatch.setattr(S, "_read_file_list", spy)
-    df = S.read_snapshot_where(
-        spark, t, {"ts": Range(hi="2024-01-06", hi_inc=False)}
+    df = S.read_snapshot(
+        spark, t, where={"ts": Range(hi="2024-01-06", hi_inc=False)},
     )
     got = sorted(r.id for r in df.collect())
     assert got == [0, 1, 2, 3, 4]
@@ -715,31 +700,27 @@ def test_read_where_opens_only_admitting_files(spark, tmp_path, monkeypatch):
     assert len(calls) == 1 and len(calls[0]) == 2
     # conjunction with IN; empty range short-circuits without a read
     calls.clear()
-    df = S.read_snapshot_where(
-        spark, t, {"id": [2, 3, 9], "ts": Range(lo="2024-01-03")}
+    df = S.read_snapshot(
+        spark, t, where={"id": [2, 3, 9], "ts": Range(lo="2024-01-03")},
     )
     # id 2's ts is exactly Jan 3 midnight — the inclusive lo keeps it
     assert sorted(r.id for r in df.collect()) == [2, 3, 9]
     calls.clear()
-    assert S.read_snapshot_where(
-        spark, t, {"id": Range(lo=9, hi=3)}
-    ).count() == 0
+    assert S.read_snapshot(spark, t, where={"id": Range(lo=9, hi=3)}).count() == 0
     assert calls == []
 
 
 @pytest.mark.slowproof
 def test_read_where_applies_dv_and_defaults(spark, tmp_path):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot_where,
         snapshot_add_column,
-        snapshot_delete_rows_dv,
     )
 
     t = str(tmp_path / "rdw2")
     _mk_ts_table(spark, t)
-    snapshot_delete_rows_dv(spark, t, "id", [2])
+    snapshot_delete(spark, t, {"id": [2]}, mode="dv")
     snapshot_add_column(spark, t, "src", "string", default="bulk")
-    df = read_snapshot_where(spark, t, {"id": Range(lo=0, hi=3)})
+    df = read_snapshot(spark, t, where={"id": Range(lo=0, hi=3)})
     got = sorted((r.id, r.src) for r in df.collect())
     # tombstoned row invisible; initial default fills pre-add rows
     assert got == [(0, "bulk"), (1, "bulk"), (3, "bulk")]

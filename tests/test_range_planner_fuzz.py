@@ -15,10 +15,10 @@ rounding edges, reversed/empty/half-open ranges, NULL-heavy files),
 random IN lists, null tests, and one-level DNF disjunctions, asserting
 
 - ``snapshot_count_where``  ≡ full-scan ``where(match).count()``;
-- ``read_snapshot_where``   ≡ full-scan ``where(match)`` row sets;
-- ``snapshot_delete_where`` (both strategies) leaves exactly the
+- ``read_snapshot(where=)`` ≡ full-scan ``where(match)`` row sets;
+- ``snapshot_delete`` (both strategies) leaves exactly the
   full-scan survivor set;
-- ``snapshot_update_where`` touches exactly the full-scan match set.
+- ``snapshot_update`` touches exactly the full-scan match set.
 
 The oracle deliberately bypasses every planner component: it reads the
 snapshot with NO predicate (all files open) and applies the row-level
@@ -41,10 +41,9 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _match_expr,
     _sanitize_predicates,
     read_snapshot,
-    read_snapshot_where,
     snapshot_count_where,
-    snapshot_delete_where,
-    snapshot_update_where,
+    snapshot_delete,
+    snapshot_update,
     snapshot_write_with_stats,
 )
 
@@ -206,14 +205,14 @@ def test_count_and_read_match_full_scan(spark, tmp_path, seed):
         sp = _sanitize_predicates(preds)
         if not sp:
             assert snapshot_count_where(spark, t, preds) == 0
-            assert read_snapshot_where(spark, t, preds).count() == 0
+            assert read_snapshot(spark, t, where=preds).count() == 0
             continue
         oracle = full.where(_match_expr(sp))
         n = oracle.count()
         assert snapshot_count_where(spark, t, preds) == n, (
             f"seed={seed} trial={trial} preds={preds!r}"
         )
-        got = read_snapshot_where(spark, t, preds)
+        got = read_snapshot(spark, t, where=preds)
         assert _rowset(got) == _rowset(oracle), (
             f"seed={seed} trial={trial} preds={preds!r}"
         )
@@ -235,7 +234,7 @@ def test_delete_update_match_full_scan(spark, tmp_path, seed, mode):
         else:
             survivors = _rowset(pre)
             expect_gone = 0
-        _, n = snapshot_delete_where(spark, t, preds, mode=mode)
+        _, n = snapshot_delete(spark, t, preds, mode=mode)
         assert n == expect_gone, f"seed={seed} t={trial} preds={preds!r}"
         assert _rowset(read_snapshot(spark, t)) == survivors, (
             f"seed={seed} t={trial} preds={preds!r}"
@@ -260,7 +259,7 @@ def test_delete_update_match_full_scan(spark, tmp_path, seed, mode):
         else:
             expect = _rowset(post)
             n_match = 0
-        _, m = snapshot_update_where(spark, t, preds2, {"x": -1.0})
+        _, m = snapshot_update(spark, t, preds2, {"x": -1.0})
         assert m == n_match, f"seed={seed} t={trial} preds2={preds2!r}"
         assert _rowset(read_snapshot(spark, t)) == expect, (
             f"seed={seed} t={trial} preds2={preds2!r}"

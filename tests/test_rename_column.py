@@ -30,7 +30,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     _load_manifest,
     read_snapshot,
-    read_snapshot_pruned,
+    Range,
     snapshot_add_column,
     snapshot_add_constraint,
     snapshot_changes,
@@ -38,13 +38,12 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_count,
     snapshot_count_nonnull,
     snapshot_delete,
-    snapshot_delete_where,
     snapshot_drop_column,
     snapshot_files,
     snapshot_minmax,
     snapshot_rename_column,
     snapshot_restore,
-    snapshot_update_where,
+    snapshot_update,
     snapshot_write,
     snapshot_write_with_stats,
 )
@@ -169,7 +168,7 @@ def test_stats_pruning_and_dml_through_rename(spark, tmp_path):
 
     # pruned range read by the NEW logical name actually prunes
     full = read_snapshot(spark, t)
-    pruned = read_snapshot_pruned(spark, t, "shard", 2, 2)
+    pruned = read_snapshot(spark, t, where={"shard": Range(2, 2)})
     assert len(pruned.inputFiles()) < len(full.inputFiles())
     assert _bag(pruned, "id", "shard") == sorted(
         (i, i % 4) for i in range(40) if i % 4 == 2
@@ -180,7 +179,7 @@ def test_stats_pruning_and_dml_through_rename(spark, tmp_path):
     assert snapshot_count_nonnull(spark, t, "amount") == 40
 
     # copy-on-write delete by the new name (stats-planned victims)
-    v, n = snapshot_delete_where(spark, t, {"shard": [3]}, mode="rewrite")
+    v, n = snapshot_delete(spark, t, {"shard": [3]}, mode="rewrite")
     assert n == 10
     assert snapshot_count(spark, t) == 30
     assert _bag(
@@ -188,9 +187,7 @@ def test_stats_pruning_and_dml_through_rename(spark, tmp_path):
     ) == []
 
     # merge-on-read update by the new name
-    v, n = snapshot_update_where(
-        spark, t, {"shard": [2]}, {"amount": 0}, mode="dv"
-    )
+    v, n = snapshot_update(spark, t, {"shard": [2]}, {"amount": 0}, mode="dv")
     assert n == 10
     got = read_snapshot(spark, t).where("shard = 2")
     assert all(r["amount"] == 0 for r in got.collect())
@@ -226,7 +223,7 @@ def test_change_feed_presents_target_names_across_rename(spark, tmp_path):
     )
 
     # a DV delete by the new name feeds deletes with values
-    snapshot_delete(spark, t, "id", [1], mode="dv")
+    snapshot_delete(spark, t, {"id": [1]}, mode="dv")
     ch2 = snapshot_changes(spark, t, from_version=4)
     assert sorted(
         (r["id"], r["amount"], r["_change_type"]) for r in ch2.collect()

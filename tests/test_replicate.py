@@ -21,10 +21,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     read_snapshot,
     snapshot_compact,
-    snapshot_delete_rows_dv,
+    snapshot_delete,
     snapshot_properties,
     snapshot_restore,
-    snapshot_update_rows,
+    snapshot_update,
     snapshot_versions,
     snapshot_write,
     snapshot_write_with_stats,
@@ -75,8 +75,8 @@ def test_replica_follows_full_dml_mix(spark, tmp_path):
     snapshot_delete_keys(
         spark, src, spark.createDataFrame([(4,)], "id long")
     )
-    snapshot_update_rows(spark, src, "id", [5], {"v": "CW5"})
-    snapshot_delete_rows_dv(spark, src, "id", [6])
+    snapshot_update(spark, src, {"id": [5]}, {"v": "CW5"}, mode="rewrite")
+    snapshot_delete(spark, src, {"id": [6]}, mode="dv")
     rep = replicate_keyed(spark, src, dst, ["id"])
     assert rep["upserted"] >= 3 and rep["deleted_keys"] >= 2
     _assert_mirrors(spark, src, dst)

@@ -1,7 +1,7 @@
 """Metadata-planned SELECTs through the SQL front door — round 11's
 read-side routing: ``SELECT COUNT(*) / * / col-list FROM t [WHERE
 <plannable preds>]`` dispatches to ``snapshot_count_where`` /
-``read_snapshot_where`` instead of a full-view ``spark.sql`` scan, so
+``read_snapshot(where=)`` instead of a full-view ``spark.sql`` scan, so
 the analyst typing SQL gets the engine's best read plan (VERDICT r10
 gap #1).
 
@@ -32,7 +32,7 @@ import pytest
 from nyc_taxi_data_warehouse_spark.warehouse import sqlfront
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_register,
     snapshot_write_with_stats,
 )
@@ -118,7 +118,7 @@ def test_stale_view_parity(spark, tmp_path, spy):
     t = str(tmp_path / "fp_stale")
     _mk(spark, t)
     snapshot_register(spark, t, "fp_stale")
-    snapshot_delete_where(spark, t, {"id": [0, 1, 2, 3]})  # head moves
+    snapshot_delete(spark, t, {"id": [0, 1, 2, 3]})  # head moves
     q = "SELECT COUNT(*) FROM fp_stale"
     assert snapshot_sql(spark, q).collect()[0][0] == 12
     assert spark.sql(q).collect()[0][0] == 12  # the stale view agrees
@@ -139,7 +139,7 @@ def test_explicit_time_travel_wins(spark, tmp_path, spy):
     t = str(tmp_path / "fp_tt")
     _mk(spark, t)  # 3 appends → versions 1..3
     snapshot_register(spark, t, "fp_tt")
-    snapshot_delete_where(spark, t, {"id": [5]})
+    snapshot_delete(spark, t, {"id": [5]})
     snapshot_register(spark, t, "fp_tt")  # follow head (11 rows)
     assert (
         snapshot_sql(
@@ -282,9 +282,6 @@ def test_planner_value_refusal_falls_through(spark, tmp_path, spy):
     """A predicate the planner's value types refuse (bool range
     bounds) must fall back to spark.sql for SELECTs — and refuse as a
     front-door error (not a raw ValueError) for DML."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_write_with_stats,
-    )
     from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
         SqlFrontError,
     )

@@ -21,7 +21,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
     snapshot_changes,
     snapshot_compact,
-    snapshot_delete_rows,
+    snapshot_delete,
     snapshot_replace_partitions,
     snapshot_write,
 )
@@ -101,7 +101,7 @@ def test_changes_delete_rows_and_apply_invariant(spark, table):
     )
     snapshot_write(_df(spark, [(100, 3, "x")]), table, mode="append",
                    partition_cols=["month"])
-    snapshot_delete_rows(spark, table, "id", [2, 5, 100])
+    snapshot_delete(spark, table, {"id": [2, 5, 100]}, mode="rewrite")
     ch = snapshot_changes(spark, table, from_version=1)
     deletes = _bag(ch.where(F.col("_change_type") == "delete"))
     assert deletes == [(2, 0, "v2"), (5, 1, "v5"), (100, 3, "x")]
@@ -311,7 +311,7 @@ def test_changes_restore_readds_same_file_once_per_version(spark, table):
 
     snapshot_write(_df(spark, [(1, 1, "a"), (2, 2, "b")]), table)  # v1
     # v2: delete EVERY row -> removes v1's files, adds none
-    snapshot_delete_rows(spark, table, "id", [1, 2])
+    snapshot_delete(spark, table, {"id": [1, 2]}, mode="rewrite")
     assert read_snapshot(spark, table).count() == 0
     # v3: restore to v1 -> re-adds v1's exact files, removed=[] (a
     # pure-append-shaped commit, batched together with v1's append)
@@ -595,7 +595,7 @@ def test_stream_verify_passes_compaction_fails_deletes(spark, table, tmp_path):
                   on_non_append="verify")
     assert _bag(got3) == [(99, 1, "y")]
     # a delete commit is NOT row-neutral: fail loudly
-    snapshot_delete_rows(spark, table, "id", [0])
+    snapshot_delete(spark, table, {"id": [0]}, mode="rewrite")
     with pytest.raises(Exception, match="not a compaction"):
         _drain(spark, table, str(tmp_path / "cv"), "feed_v4",
                on_non_append="verify")
@@ -668,7 +668,7 @@ def test_materialize_views_survive_source_compaction(spark, tmp_path):
     )
     assert agot == awant
     # a genuine delete still fails the refresh
-    snapshot_delete_rows(spark, src, "id", [20])
+    snapshot_delete(spark, src, {"id": [20]}, mode="rewrite")
     with pytest.raises(Exception, match="not a compaction"):
         materialize_incremental(spark, src, dst, xf, str(tmp_path / "ck1"))
 
@@ -765,7 +765,6 @@ def test_stream_verify_survives_lost_superseded_files(spark, table, tmp_path):
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_compact,
     )
 
     snapshot_write(
@@ -866,12 +865,6 @@ def test_partition_scoped_feed(spark, table, tmp_path):
     tenant survives global table maintenance. In-scope DV churn still
     fails loudly, and scoped verify proves row-neutrality from the
     scoped files themselves (recorded totals are table-global)."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_compact,
-        snapshot_delete_rows_dv,
-        snapshot_replace_partitions,
-    )
-
     snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(6)]),
         table, partition_cols=["month"],
@@ -901,11 +894,11 @@ def test_partition_scoped_feed(spark, table, tmp_path):
     with pytest.raises(Exception, match="not an append"):
         _drain(spark, table, str(tmp_path / "unscoped"), "sc3u")
     # out-of-scope DV churn passes; in-scope DV churn fails loudly
-    snapshot_delete_rows_dv(spark, table, "id", [102])  # month=1
+    snapshot_delete(spark, table, {"id": [102]}, mode="dv")  # month=1
     assert _drain(
         spark, table, ckpt, "sc4", partitions={"month": 0},
     ).count() == 0
-    snapshot_delete_rows_dv(spark, table, "id", [4])  # month=0: in scope
+    snapshot_delete(spark, table, {"id": [4]}, mode="dv")  # month=0: in scope
     with pytest.raises(Exception, match="deletion vectors"):
         _drain(spark, table, ckpt, "sc5", partitions={"month": 0})
     # scoped verify: a full compact (folds both tombstones) is
@@ -941,11 +934,6 @@ def test_changes_partition_scoped_equals_filtered_feed(spark, table):
     on the partition column, as bags — across appends, a replace, a
     CoW delete and DV churn in BOTH partitions — while commits
     confined to other partitions contribute zero scan nodes."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows,
-        snapshot_delete_rows_dv,
-    )
-
     snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(8)]),
         table, partition_cols=["month"],
@@ -957,9 +945,9 @@ def test_changes_partition_scoped_equals_filtered_feed(spark, table):
     snapshot_replace_partitions(
         _df(spark, [(200, 1, "z")]), table, partition_cols=["month"],
     )
-    snapshot_delete_rows(spark, table, "id", [2])       # month=0 CoW
-    snapshot_delete_rows_dv(spark, table, "id", [101])  # gone w/ replace
-    snapshot_delete_rows_dv(spark, table, "id", [100])  # month=0 DV
+    snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")       # month=0 CoW
+    snapshot_delete(spark, table, {"id": [101]}, mode="dv")  # gone w/ replace
+    snapshot_delete(spark, table, {"id": [100]}, mode="dv")  # month=0 DV
     # equality plane: a zero-read upsert (masks a month=0 row, lands a
     # month=1 image), a key delete, and the fold into position DVs —
     # the scoped feed must bridge key-masked visibility identically

@@ -21,9 +21,9 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
     snapshot_changes,
     snapshot_compact,
-    snapshot_delete_rows,
+    snapshot_delete,
     snapshot_replace_partitions,
-    snapshot_update_rows,
+    snapshot_update,
     snapshot_write,
     snapshot_write_with_stats,
 )
@@ -179,23 +179,17 @@ def test_changes_bridge_any_history(spark, tmp_path_factory, ops):
                 # is unprovable — the engine refuses, the op skips
                 continue
         elif kind == "delete":
-            snapshot_delete_rows(spark, table, "id", [args[0], args[0] + 1])
-        elif kind == "delete_dv":
-            from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-                snapshot_delete_rows_dv,
+            snapshot_delete(
+                spark, table, {"id": [args[0], args[0] + 1]}, mode="rewrite",
             )
-
-            snapshot_delete_rows_dv(
-                spark, table, "id", [args[0], args[0] + 1]
+        elif kind == "delete_dv":
+            snapshot_delete(
+                spark, table, {"id": [args[0], args[0] + 1]}, mode="dv",
             )
         elif kind == "update_dv":
-            from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-                snapshot_update_rows_dv,
-            )
-
-            snapshot_update_rows_dv(
-                spark, table, "id", [args[0]],
-                {cur_vname(): "DV_REDACTED"},
+            snapshot_update(
+                spark, table, {"id": [args[0]]}, {cur_vname(): "DV_REDACTED"},
+                mode="dv",
             )
         elif kind == "compact_dvs":
             from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
@@ -204,46 +198,35 @@ def test_changes_bridge_any_history(spark, tmp_path_factory, ops):
 
             snapshot_compact_dvs(spark, table)
         elif kind == "update":
-            snapshot_update_rows(
-                spark, table, "id", [args[0]],
-                {cur_vname(): "REDACTED"},
+            snapshot_update(
+                spark, table, {"id": [args[0]]}, {cur_vname(): "REDACTED"},
+                mode="rewrite",
             )
         elif kind == "delete_where":
-            from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-                snapshot_delete_where,
-            )
-
-            snapshot_delete_where(
+            snapshot_delete(
                 spark, table,
                 {"id": [args[0], args[0] + 1], "month": [args[1]]},
             )
         elif kind == "update_where":
-            from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-                snapshot_update_where,
-            )
-
-            snapshot_update_where(
-                spark, table,
-                {"id": [args[0]], "month": [args[1]]},
+            snapshot_update(
+                spark, table, {"id": [args[0]], "month": [args[1]]},
                 {cur_vname(): "WHERE_REDACTED"},
             )
         elif kind == "delete_range":
             from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
                 Range,
-                snapshot_delete_where,
             )
 
-            snapshot_delete_where(
+            snapshot_delete(
                 spark, table,
                 {"id": Range(lo=args[0], hi=args[0] + 3, hi_inc=False)},
             )
         elif kind == "update_range":
             from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
                 Range,
-                snapshot_update_where,
             )
 
-            snapshot_update_where(
+            snapshot_update(
                 spark, table,
                 {
                     "id": Range(lo=args[0], hi=args[0] + 2),
@@ -363,7 +346,7 @@ def test_changes_long_history_bounded_plan(spark, tmp_path_factory):
     )
     for i in range(1, n_commits):
         if i % 67 == 0:
-            snapshot_delete_rows(spark, table, "id", [i - 1])
+            snapshot_delete(spark, table, {"id": [i - 1]}, mode="rewrite")
         else:
             snapshot_write(
                 mk([(i, i % 4, f"v{i}")]), table, mode="append",

@@ -139,7 +139,6 @@ def test_vacuum_age_floor_composes_with_keep_last(spark, table):
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_set_properties,
-        snapshot_versions,
     )
 
     for i in range(4):
@@ -290,13 +289,13 @@ def test_table_properties_and_check_constraints(spark, table):
     version exists, with SQL CHECK null semantics (NULL passes)."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_add_constraint,
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_drop_column,
         snapshot_drop_constraint,
         snapshot_properties,
         snapshot_restore,
         snapshot_set_properties,
-        snapshot_update_rows_dv,
+        snapshot_update,
     )
 
     snapshot_write(
@@ -344,13 +343,13 @@ def test_table_properties_and_check_constraints(spark, table):
     # are the commit's added files)
     snapshot_add_constraint(spark, table, "vocab", "v != 'BAD'")
     with pytest.raises(ValueError, match="CHECK constraint 'vocab'"):
-        snapshot_update_rows_dv(spark, table, "id", [100], {"v": "BAD"})
-    snapshot_update_rows_dv(spark, table, "id", [100], {"v": "GOOD"})
+        snapshot_update(spark, table, {"id": [100]}, {"v": "BAD"}, mode="dv")
+    snapshot_update(spark, table, {"id": [100]}, {"v": "GOOD"}, mode="dv")
 
     # a restore that would resurrect now-violating rows refuses: the
     # re-added files are validated against the CURRENT constraints
     pre = snapshot_versions(spark, table)[-1]["version"]
-    snapshot_delete_rows(spark, table, "id", [5])  # CoW: files change
+    snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")  # CoW: files change
     snapshot_add_constraint(spark, table, "cap", "id <= 4 or id = 100")
     with pytest.raises(ValueError, match="CHECK constraint 'cap'"):
         snapshot_restore(spark, table, pre)
@@ -362,11 +361,11 @@ def test_table_properties_and_check_constraints(spark, table):
     # past it changes no files — resurrection rides a dv-set change
     # and must be caught by the tombstone-removal re-check
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows_dv,
+        snapshot_delete,
     )
 
     pre_dv = snapshot_versions(spark, table)[-1]["version"]
-    snapshot_delete_rows_dv(spark, table, "id", [4])
+    snapshot_delete(spark, table, {"id": [4]}, mode="dv")
     snapshot_add_constraint(spark, table, "cap4", "id != 4")
     with pytest.raises(ValueError, match="CHECK constraint 'cap4'"):
         snapshot_restore(spark, table, pre_dv)  # would resurrect id=4
@@ -465,7 +464,7 @@ def test_partition_pruned_reads_from_manifest(spark, table):
     subset; snapshot_count(partitions=...) stays metadata-only."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_count,
-        snapshot_delete_rows_dv,
+        snapshot_delete,
     )
 
     # 10 commits >> _FLAT_READ_THRESHOLD so the flat path engages
@@ -474,7 +473,7 @@ def test_partition_pruned_reads_from_manifest(spark, table):
             _df(spark, [(2 * i, 0, f"a{i}"), (2 * i + 1, 1, f"b{i}")]),
             table, mode="append", partition_cols=["month"],
         )
-    snapshot_delete_rows_dv(spark, table, "id", [4])  # month=0 victim
+    snapshot_delete(spark, table, {"id": [4]}, mode="dv")  # month=0 victim
     pruned = read_snapshot(spark, table, partitions={"month": 0})
     # file plan ∝ the partition, not the table (the one extra input is
     # the DV sidecar the anti-join merges)
@@ -494,11 +493,11 @@ def test_partition_pruned_reads_from_manifest(spark, table):
         read_snapshot(spark, table, partitions={"mnth": 0})
     # stats pruning composes with partition pruning
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot_pruned,
+        Range,
     )
 
-    rp = read_snapshot_pruned(
-        spark, table, "id", 0, 5, partitions={"month": 0}
+    rp = read_snapshot(
+        spark, table, partitions={"month": 0}, where={"id": Range(0, 5)},
     )
     rp_inputs = [f for f in rp.inputFiles() if "/month=" in f]
     assert rp_inputs and all("/month=0/" in f for f in rp_inputs)
@@ -536,7 +535,7 @@ def test_drop_partitions_metadata_only(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_changes,
         snapshot_count,
-        snapshot_delete_rows_dv,
+        snapshot_delete,
         snapshot_drop_partitions,
         snapshot_write_with_stats,
     )
@@ -553,7 +552,7 @@ def test_drop_partitions_metadata_only(spark, table):
             table, ["id"], mode="append", partition_cols=["month"],
         )
     # tombstones in BOTH a dropped and a surviving partition
-    snapshot_delete_rows_dv(spark, table, "id", [1, 5])  # month 0, 1
+    snapshot_delete(spark, table, {"id": [1, 5]}, mode="dv")  # month 0, 1
     pre_files = _data_files(table)
     pre_version = snapshot_versions(spark, table)[-1]["version"]
 
@@ -617,14 +616,14 @@ def test_snapshot_delete_auto_dispatches_partition_drop(spark, table):
             table, mode="append", partition_cols=["month"],
         )
     pre_files = _data_files(table)
-    v, n = snapshot_delete(spark, table, "month", [0], mode="auto")
+    v, n = snapshot_delete(spark, table, {"month": [0]}, mode="auto")
     assert n == 2
     assert _data_files(table) == pre_files
     man = _load_manifest(spark, table, v)
     assert man["op"] == "drop_partitions"
     assert {r.id for r in read_snapshot(spark, table).collect()} == {2, 3}
     # explicit rewrite mode still honors the requested strategy
-    v2, n2 = snapshot_delete(spark, table, "month", [1], mode="rewrite")
+    v2, n2 = snapshot_delete(spark, table, {"month": [1]}, mode="rewrite")
     assert n2 == 2
     assert _load_manifest(spark, table, v2)["op"] == "delete_rows"
     assert read_snapshot(spark, table).count() == 0
@@ -648,17 +647,17 @@ def test_snapshot_delete_auto_null_and_type_form_semantics(spark, table):
     )
     snapshot_write(rows, table, mode="append", partition_cols=["month"])
     # NULL value: deletes nothing anywhere, null-partition row survives
-    v, n = snapshot_delete(spark, table, "month", [None], mode="auto")
+    v, n = snapshot_delete(spark, table, {"month": [None]}, mode="auto")
     assert n == 0
     assert read_snapshot(spark, table).count() == 3
     # float form against int month: data path, row actually deleted
-    v2, n2 = snapshot_delete(spark, table, "month", [1.0], mode="auto")
+    v2, n2 = snapshot_delete(spark, table, {"month": [1.0]}, mode="auto")
     assert n2 == 1
     assert _load_manifest(spark, table, v2)["op"] != "drop_partitions"
     got = {(r.id, r.month) for r in read_snapshot(spark, table).collect()}
     assert got == {(1, 0), (3, None)}
     # mixed None + int: the int partition drops, None selects nothing
-    v3, n3 = snapshot_delete(spark, table, "month", [None, 0], mode="auto")
+    v3, n3 = snapshot_delete(spark, table, {"month": [None, 0]}, mode="auto")
     assert n3 == 1
     assert _load_manifest(spark, table, v3)["op"] == "drop_partitions"
     assert [(r.id, r.month) for r in read_snapshot(spark, table).collect()] \
@@ -674,7 +673,7 @@ def test_snapshot_delete_where_conjunctive(spark, table, capsys):
     strategies agree with the oracle row set."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_where,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -687,25 +686,19 @@ def test_snapshot_delete_where_conjunctive(spark, table, capsys):
     )
     # conjunction: id=1 AND v IN (a, c) → exactly rows a (month 0)
     # and c (month 1); d/e (id=2) and b (v=b) survive
-    v, n = snapshot_delete_where(
-        spark, table, {"id": [1], "v": ["a", "c"]}
-    )
+    v, n = snapshot_delete(spark, table, {"id": [1], "v": ["a", "c"]})
     assert n == 2
     got = {(r.id, r.month, r.v) for r in read_snapshot(spark, table).collect()}
     assert got == {(1, 0, "b"), (2, 0, "d"), (2, 1, "e")}
     # a None value in any column: the whole conjunction matches nothing
-    v2, n2 = snapshot_delete_where(
-        spark, table, {"id": [2], "v": [None]}
-    )
+    v2, n2 = snapshot_delete(spark, table, {"id": [2], "v": [None]})
     assert n2 == 0 and read_snapshot(spark, table).count() == 3
     # all-partition-column predicate → metadata-only drop
-    v3, n3 = snapshot_delete_where(spark, table, {"month": [1]})
+    v3, n3 = snapshot_delete(spark, table, {"month": [1]})
     assert n3 == 1
     assert _load_manifest(spark, table, v3)["op"] == "drop_partitions"
     # DV mode agrees with the same predicate shape
-    v4, n4 = snapshot_delete_where(
-        spark, table, {"id": [2], "v": ["d"]}, mode="dv"
-    )
+    v4, n4 = snapshot_delete(spark, table, {"id": [2], "v": ["d"]}, mode="dv")
     assert n4 == 1
     assert [(r.id, r.v) for r in read_snapshot(spark, table).collect()] \
         == [(1, "b")]
@@ -734,7 +727,7 @@ def test_delete_where_scalar_values_and_partition_pruning(spark, table):
     rewritten even when the data column's stats admit the key."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_where,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -751,9 +744,8 @@ def test_delete_where_scalar_values_and_partition_pruning(spark, table):
         _load_manifest(spark, table, 2)["files"]
     )
     month0 = {f for f in man0_files if "month=0" in f}
-    v, n = snapshot_delete_where(
-        spark, table, {"month": 1, "id": 7}, mode="rewrite"
-    )  # scalars, not lists — and month=1 only
+    # scalars, not lists — and month=1 only
+    v, n = snapshot_delete(spark, table, {"month": 1, "id": 7}, mode="rewrite")
     assert n == 1
     man = _load_manifest(spark, table, v)
     # month=0's file carried untouched; only month=1 was rewritten
@@ -761,7 +753,7 @@ def test_delete_where_scalar_values_and_partition_pruning(spark, table):
     assert {(r.id, r.month) for r in read_snapshot(spark, table).collect()} \
         == {(7, 0), (8, 0), (8, 1)}
     # scalar string predicate: one value, not four characters
-    v2, n2 = snapshot_delete_where(spark, table, {"v": "b"})
+    v2, n2 = snapshot_delete(spark, table, {"v": "b"})
     assert n2 == 2
     assert [(r.id, r.v) for r in read_snapshot(spark, table).collect()] \
         == [(7, "a")]
@@ -771,9 +763,9 @@ def test_snapshot_update_where_conjunctive(spark, table, capsys):
     """Composite-key UPDATE through the same predicate engine: both
     physical strategies patch exactly the conjunction's rows,
     partition-column predicates prune the victim files, and the CLI
-    --where path honors --dv."""
+    --where path honors --mode dv."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_update_where,
+        snapshot_update,
         snapshot_write_with_stats,
     )
 
@@ -784,26 +776,26 @@ def test_snapshot_update_where_conjunctive(spark, table, capsys):
             ).coalesce(1),
             table, ["id"], mode="append", partition_cols=["month"],
         )
-    v, n = snapshot_update_where(
-        spark, table, {"month": 1, "id": 7}, {"v": "X"}, mode="rewrite"
+    v, n = snapshot_update(
+        spark, table, {"month": 1, "id": 7}, {"v": "X"}, mode="rewrite",
     )
     assert n == 1
     got = {(r.id, r.month, r.v) for r in read_snapshot(spark, table).collect()}
     assert got == {(7, 0, "a"), (8, 0, "b"), (7, 1, "X"), (8, 1, "b")}
     # DV mode: tombstone + patched image, same predicate shape
-    v2, n2 = snapshot_update_where(
-        spark, table, {"month": [0], "v": ["b"]}, {"v": None}, mode="dv"
+    v2, n2 = snapshot_update(
+        spark, table, {"month": [0], "v": ["b"]}, {"v": None}, mode="dv",
     )
     assert n2 == 1
     got = {(r.id, r.month, r.v) for r in read_snapshot(spark, table).collect()}
     assert got == {(7, 0, "a"), (8, 0, None), (7, 1, "X"), (8, 1, "b")}
-    # CLI --where with --dv
+    # CLI --where with --mode dv
     from nyc_taxi_data_warehouse_spark.__main__ import main
 
     main(
         [
             "snapshot-update", "--table-path", table,
-            "--where", '{"id": [7]}', "--set", '{"v": "Z"}', "--dv",
+            "--where", '{"id": [7]}', "--set", '{"v": "Z"}', "--mode", "dv",
         ],
         spark=spark,
     )
@@ -815,11 +807,12 @@ def test_snapshot_update_where_conjunctive(spark, table, capsys):
     assert got == {(7, "Z"), (8, None), (8, "b")}
 
 
-def test_update_auto_discounts_full_match_files(spark, table):
+def test_update_auto_discounts_full_match_files(spark, table, monkeypatch):
     """Auto-mode UPDATE must not be tipped onto merge-on-read by files
     whose every row matches: those cost the same under both strategies
     (every row needs a new image either way; DV adds tombstones on
     top), so a clustered-key mass update picks the rewrite."""
+    from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_update,
@@ -832,10 +825,8 @@ def test_update_auto_discounts_full_match_files(spark, table):
     )
     # threshold 0: ANY counted victim byte would select DV — only the
     # full-match discount keeps the estimate at zero
-    v, n = snapshot_update(
-        spark, table, "id", [7], {"v": "X"}, mode="auto",
-        dv_threshold_mb=0,
-    )
+    monkeypatch.setattr(sn, "DV_THRESHOLD_MB", 0)
+    v, n = snapshot_update(spark, table, {"id": [7]}, {"v": "X"}, mode="auto")
     assert n == 50
     assert _load_manifest(spark, table, v)["op"] == "update_rows"
 
@@ -877,7 +868,7 @@ def test_delete_where_full_drop_requires_every_column(spark, table):
     second predicate excludes."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_where,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -896,8 +887,8 @@ def test_delete_where_full_drop_requires_every_column(spark, table):
         table, ["id", "v"], mode="append", partition_cols=["month"],
     )
     pre = _data_files(table)
-    v, n = snapshot_delete_where(
-        spark, table, {"id": [7], "v": ["x"]}, mode="rewrite"
+    v, n = snapshot_delete(
+        spark, table, {"id": [7], "v": ["x"]}, mode="rewrite",
     )
     assert n == 3  # both rows of file 2, one row of file 1
     man = _load_manifest(spark, table, v)
@@ -1043,7 +1034,7 @@ def test_delete_full_match_files_drop_by_reference(spark, table):
     so the row must survive) and forces the rewrite path."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -1059,7 +1050,7 @@ def test_delete_full_match_files_drop_by_reference(spark, table):
         table, ["id"], mode="append", partition_cols=["month"],
     )
     pre = _data_files(table)
-    v, n = snapshot_delete_rows(spark, table, "id", [2])
+    v, n = snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")
     assert n == 4
     assert _data_files(table) == pre  # pure manifest edit: no rewrite
     man = _load_manifest(spark, table, v)
@@ -1068,7 +1059,7 @@ def test_delete_full_match_files_drop_by_reference(spark, table):
         1, 1, 1, 1, 5, 6
     ]
     # mixed file: drop proof fails (min != max) → rewrite path
-    v2, n2 = snapshot_delete_rows(spark, table, "id", [5])
+    v2, n2 = snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")
     assert n2 == 1
     assert _data_files(table) > pre  # a survivor file was written
     assert "files_dropped_by_stats" not in _load_manifest(spark, table, v2)
@@ -1087,7 +1078,7 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
     its matching rows tombstoned."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_rows_dv,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -1100,7 +1091,7 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
         table, ["id"], mode="append", partition_cols=["month"],
     )
     # clustered-key takedown: NO sidecar written, file dropped
-    v, n = snapshot_delete_rows_dv(spark, table, "id", [2])
+    v, n = snapshot_delete(spark, table, {"id": [2]}, mode="dv")
     assert n == 4
     man = _load_manifest(spark, table, v)
     assert man["files_dropped_by_stats"] == 1 and man["rows_dropped"] == 4
@@ -1114,7 +1105,7 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
         _df(spark, [(6, 1, "c"), (6, 1, "d")]).coalesce(1),
         table, ["id"], mode="append", partition_cols=["month"],
     )
-    v2, n2 = snapshot_delete_rows_dv(spark, table, "id", [6])
+    v2, n2 = snapshot_delete(spark, table, {"id": [6]}, mode="dv")
     man2 = _load_manifest(spark, table, v2)
     assert n2 == 3  # 2 dropped + 1 tombstoned
     assert man2["files_dropped_by_stats"] == 1
@@ -1128,7 +1119,7 @@ def test_delete_full_match_blocked_by_null_rows(spark, table):
     matches, so the null row survives via the rewrite path."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -1143,7 +1134,7 @@ def test_delete_full_match_blocked_by_null_rows(spark, table):
     man0 = _load_manifest(spark, table, 1)
     st = next(iter(man0["stats"].values()))["id"]
     assert st[0] == st[1] == 9 and st[2] == 1  # nulls recorded
-    v, n = snapshot_delete_rows(spark, table, "id", [9])
+    v, n = snapshot_delete(spark, table, {"id": [9]}, mode="rewrite")
     assert n == 2
     assert "files_dropped_by_stats" not in _load_manifest(spark, table, v)
     out = read_snapshot(spark, table).collect()
@@ -1156,7 +1147,7 @@ def test_snapshot_minmax_metadata_vs_scan(spark, table):
     back to an exact scan when a deletion vector might hide the
     extreme or coverage is partial."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows_dv,
+        snapshot_delete,
         snapshot_minmax,
         snapshot_write_with_stats,
     )
@@ -1173,7 +1164,7 @@ def test_snapshot_minmax_metadata_vs_scan(spark, table):
     assert snapshot_minmax(spark, table, "v") == ("a0", "a9")
     # DV-delete the max: stats would lie, the tombstone check forces
     # the scan path, which sees the live extreme
-    snapshot_delete_rows_dv(spark, table, "id", [9])
+    snapshot_delete(spark, table, {"id": [9]}, mode="dv")
     assert snapshot_minmax(spark, table, "id") == (0, 8)
     # the untombstoned partition... the tombstone lives in month=1, so
     # month=0 stays on the metadata path
@@ -1193,7 +1184,7 @@ def test_snapshot_count_nonnull_and_hybrid_minmax(spark, table):
     files metadata cannot answer for instead of the whole table."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_count_nonnull,
-        snapshot_delete_rows_dv,
+        snapshot_delete,
         snapshot_minmax,
         snapshot_write_with_stats,
     )
@@ -1212,7 +1203,7 @@ def test_snapshot_count_nonnull_and_hybrid_minmax(spark, table):
     ) == 2
     # DV-delete a non-null id in month=0: its file goes uncovered and
     # is scanned with the tombstone applied; month=1 stays metadata
-    snapshot_delete_rows_dv(spark, table, "id", [0])
+    snapshot_delete(spark, table, {"id": [0]}, mode="dv")
     assert snapshot_count_nonnull(spark, table, "id") == 2
     assert snapshot_count_nonnull(spark, table, "v") == 2
     # hybrid minmax: the DV'd file is scanned, the covered files
@@ -1346,7 +1337,7 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
         _root,
         snapshot_compact,
         snapshot_count,
-        snapshot_delete_rows_dv,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -1372,8 +1363,8 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
     # DV-delete one row in a BIG (to-be-carried) file and one row in a
     # fragment (to-be-packed): the first tombstone must keep riding,
     # the second folds into the rewrite
-    snapshot_delete_rows_dv(spark, table, "id", [7])
-    snapshot_delete_rows_dv(spark, table, "id", [100_000])
+    snapshot_delete(spark, table, {"id": [7]}, mode="dv")
+    snapshot_delete(spark, table, {"id": [100_000]}, mode="dv")
     man0 = _load_manifest(
         spark, table, snapshot_versions(spark, table)[-1]["version"]
     )
@@ -1411,10 +1402,10 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
     assert man["files_compacted"] == 4 and man["files_carried"] == 2
     # stats carried + recomputed: pruning still exact over both kinds
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot_pruned,
+        Range,
     )
 
-    assert read_snapshot_pruned(spark, table, "id", 100_001, 100_003) \
+    assert read_snapshot(spark, table, where={"id": Range(100_001, 100_003)}) \
         .count() == 3
     assert set(man["stats"]) == set(man["files"])
     # a second targeted pass has <2 fragments left: no-op, no commit
@@ -1499,21 +1490,33 @@ def test_snapshot_merge_versioned_out_of_order_converges(spark, table):
 
 
 def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
+    import time
+
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot_pruned,
+        Range,
+        _load_manifest,
+        snapshot_delete,
+        snapshot_version_at,
         snapshot_write_with_stats,
     )
 
-    # 4 appends, each a disjoint id range -> 4+ files with tight stats
+    # 4 appends, each a disjoint id range -> 4+ files with tight stats;
+    # ids < 200 land in month 1, the rest in month 2
     for lo in (0, 100, 200, 300):
         df = spark.createDataFrame(
-            [(lo + i, 1, f"v{lo + i}") for i in range(50)],
+            [(lo + i, 1 + lo // 200, f"v{lo + i}") for i in range(50)],
             "id long, month int, v string",
         )
-        snapshot_write_with_stats(df, table, stats_cols=["id"], mode="append")
+        snapshot_write_with_stats(
+            df, table, stats_cols=["id"], mode="append",
+            partition_cols=["month"],
+        )
+        if lo == 200:
+            t_mid = time.time()  # version 3: ids 0-249
+            time.sleep(0.05)
     hist = snapshot_versions(spark, table)
     assert hist[-1]["n_files"] >= 4
-    got = read_snapshot_pruned(spark, table, "id", 120, 130)
+    got = read_snapshot(spark, table, where={"id": Range(120, 130)})
     want = read_snapshot(spark, table).where(F.col("id").between(120, 130))
     assert sorted(r.id for r in got.collect()) == sorted(
         r.id for r in want.collect()
@@ -1525,7 +1528,9 @@ def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
         else len(
             {
                 r.f
-                for r in read_snapshot_pruned(spark, table, "id", 120, 130)
+                for r in read_snapshot(
+                    spark, table, where={"id": Range(120, 130)},
+                )
                 .select(F.input_file_name().alias("f"))
                 .distinct()
                 .collect()
@@ -1534,13 +1539,54 @@ def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
     )
     assert 0 < n_scanned < hist[-1]["n_files"]
     # out-of-range probe opens nothing and stays typed
-    assert read_snapshot_pruned(spark, table, "id", 10_000, 10_001).count() == 0
+    assert read_snapshot(
+        spark, table, where={"id": Range(10_000, 10_001)}
+    ).count() == 0
+
+    # where= composes with DV tombstones, time travel and partition
+    # scope: each read equals the unpruned read of the same version and
+    # scope filtered row by row, and opens only the data files whose
+    # recorded [min, max] overlaps the range (plus DV sidecars)
+    pre_delete = hist[-1]["version"]
+    _, n = snapshot_delete(spark, table, {"id": [125, 210]}, mode="dv")
+    assert n == 2
+    head = snapshot_versions(spark, table)[-1]["version"]
+    cases = [
+        ({}, head, None),
+        ({"version": pre_delete}, pre_delete, None),
+        ({"at_timestamp": t_mid}, snapshot_version_at(spark, table, t_mid),
+         None),
+        ({"partitions": {"month": 2}}, head, "/month=2/"),
+    ]
+    assert cases[2][1] == 3
+    for kw, v, scope in cases:
+        got = read_snapshot(spark, table, where={"id": Range(120, 260)}, **kw)
+        want = read_snapshot(spark, table, **kw).where(
+            F.col("id").between(120, 260)
+        )
+        assert sorted(got.collect()) == sorted(want.collect())
+        man = _load_manifest(spark, table, v)
+        overlap = {
+            f for f in man["files"]
+            if (scope is None or scope in f)
+            and man["stats"][f]["id"][0] <= 260
+            and man["stats"][f]["id"][1] >= 120
+        }
+        dvs = man.get("dv_files") or []
+        opened = [
+            p for p in got.inputFiles()
+            if not any(p.endswith("/" + d) for d in dvs)
+        ]
+        assert overlap and len(opened) == len(overlap)
+        assert all(
+            any(p.endswith("/" + f) for f in overlap) for p in opened
+        )
 
 
 def test_stats_survive_append_and_missing_stats_kept(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        read_snapshot_pruned,
+        Range,
         snapshot_write_with_stats,
     )
 
@@ -1550,7 +1596,7 @@ def test_stats_survive_append_and_missing_stats_kept(spark, table):
     # a stats-less append (plain snapshot_write) must be conservatively
     # KEPT by pruned reads, not silently dropped
     snapshot_write(_df(spark, [(999, 9, "z")]), table, mode="append")
-    got = read_snapshot_pruned(spark, table, "id", 900, 1000)
+    got = read_snapshot(spark, table, where={"id": Range(900, 1000)})
     assert [r.id for r in got.collect()] == [999]
     man = _load_manifest(spark, table, 2)
     assert any(f not in man.get("stats", {}) for f in man["files"])
@@ -1560,7 +1606,7 @@ def test_stats_pruning_timestamp_and_string_columns(spark, table):
     import datetime
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot_pruned,
+        Range,
         snapshot_write_with_stats,
     )
 
@@ -1575,15 +1621,16 @@ def test_stats_pruning_timestamp_and_string_columns(spark, table):
     snapshot_write_with_stats(
         mk(2, "b"), table, stats_cols=["ts", "name"], mode="append"
     )
-    got = read_snapshot_pruned(
-        spark,
-        table,
-        "ts",
-        datetime.datetime(2024, 1, 2),
-        datetime.datetime(2024, 1, 3),
+    got = read_snapshot(
+        spark, table,
+        where={
+            "ts": Range(
+                datetime.datetime(2024, 1, 2), datetime.datetime(2024, 1, 3)
+            )
+        },
     )
     assert got.count() == 5
-    by_name = read_snapshot_pruned(spark, table, "name", "b00", "b99")
+    by_name = read_snapshot(spark, table, where={"name": Range("b00", "b99")})
     assert by_name.count() == 5
     assert {r.name[:1] for r in by_name.collect()} == {"b"}
 
@@ -1591,7 +1638,7 @@ def test_stats_pruning_timestamp_and_string_columns(spark, table):
 def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -1602,7 +1649,9 @@ def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
         )
         snapshot_write_with_stats(df, table, stats_cols=["id"], mode="append")
     before = _load_manifest(spark, table, 3)
-    v, n_deleted = snapshot_delete_rows(spark, table, "id", [110, 120, 130])
+    v, n_deleted = snapshot_delete(
+        spark, table, {"id": [110, 120, 130]}, mode="rewrite",
+    )
     assert n_deleted == 3
     after = _load_manifest(spark, table, v)
     assert after["op"] == "delete_rows"
@@ -1624,14 +1673,14 @@ def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
 
 def test_snapshot_delete_rows_no_match_is_noop_version(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
     snapshot_write_with_stats(
         _df(spark, [(1, 1, "a"), (2, 2, "b")]), table, stats_cols=["id"]
     )
-    v, n = snapshot_delete_rows(spark, table, "id", [999])
+    v, n = snapshot_delete(spark, table, {"id": [999]}, mode="rewrite")
     assert (v, n) == (1, 0)  # stats excluded every file: no new version
     assert len(snapshot_versions(spark, table)) == 1
 
@@ -1639,8 +1688,8 @@ def test_snapshot_delete_rows_no_match_is_noop_version(spark, table):
 def test_snapshot_delete_rows_stats_kept_for_carried_files(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        read_snapshot_pruned,
-        snapshot_delete_rows,
+        Range,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -1654,12 +1703,12 @@ def test_snapshot_delete_rows_stats_kept_for_carried_files(spark, table):
             stats_cols=["id"],
             mode="append",
         )
-    v, _ = snapshot_delete_rows(spark, table, "id", [5])
+    v, _ = snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")
     man = _load_manifest(spark, table, v)
     # every file still has stats (carried ones kept, rewritten ones
     # recomputed) so pruned reads keep planning on the new version
     assert set(man["files"]) == set(man["stats"].keys())
-    got = read_snapshot_pruned(spark, table, "id", 100, 110)
+    got = read_snapshot(spark, table, where={"id": Range(100, 110)})
     assert got.count() == 11
 
 
@@ -1692,7 +1741,7 @@ def test_delete_rows_preserves_null_keys(spark, table):
     (ADVICE r4: ~isin evaluates to NULL and where() dropped them) and
     rows_deleted must count only genuine matches."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_write_with_stats,
     )
 
@@ -1701,7 +1750,7 @@ def test_delete_rows_preserves_null_keys(spark, table):
         "id long, month int, v string",
     )
     snapshot_write_with_stats(df, table, stats_cols=["id"])
-    v, n_deleted = snapshot_delete_rows(spark, table, "id", [2])
+    v, n_deleted = snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")
     assert n_deleted == 1
     got = read_snapshot(spark, table, version=v).collect()
     assert sorted(r.v for r in got) == ["a", "n1", "n2"]
@@ -1714,14 +1763,13 @@ def test_delete_then_merge_keeps_no_stale_rows(spark, table):
     and resurrect replaced keys as duplicates."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        snapshot_delete_rows,
+        snapshot_delete,
         snapshot_merge_upsert,
-        snapshot_write,
     )
 
     base = _df(spark, [(1, 1, "a"), (2, 1, "b"), (3, 2, "c"), (4, 2, "d")])
     snapshot_write(base, table, partition_cols=["month"])
-    v, n = snapshot_delete_rows(spark, table, "id", [2])
+    v, n = snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")
     assert n == 1
     man = _load_manifest(spark, table, v)
     assert man["partition_cols"] == ["month"]
@@ -1814,7 +1862,7 @@ def test_concurrent_appenders_all_land_exactly_once(spark, table):
 
 
 def test_update_rows_redacts_matching_only(spark, table):
-    """snapshot_update_rows: matching rows get the new column values,
+    """snapshot_update (rewrite): matching rows get the new column values,
     every other row — including NULL-keyed rows — survives the rewrite
     byte-identical, old versions keep the pre-update values, and
     untouched files carry by reference (stats-planned)."""
@@ -1822,8 +1870,7 @@ def test_update_rows_redacts_matching_only(spark, table):
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
-        read_snapshot,
-        snapshot_update_rows,
+        snapshot_update,
         snapshot_write_with_stats,
     )
 
@@ -1833,8 +1880,8 @@ def test_update_rows_redacts_matching_only(spark, table):
     # second file far away in id-space: must be carried, not rewritten
     far = spark.createDataFrame([(1000, 2, "carol")], "id long, month int, v string")
     v2 = snapshot_write_with_stats(far, table, stats_cols=["id"], mode="append")
-    ver, n = snapshot_update_rows(
-        spark, table, "id", [2, 999], {"v": None}
+    ver, n = snapshot_update(
+        spark, table, {"id": [2, 999]}, {"v": None}, mode="rewrite",
     )
     assert n == 1
     got = {r["id"]: r["v"] for r in read_snapshot(spark, table).collect()}
@@ -1848,8 +1895,9 @@ def test_update_rows_redacts_matching_only(spark, table):
     far_files = set(man2["files"]) - set(_load_manifest(spark, table, v1)["files"])
     assert far_files <= set(man3["files"])
     # expression-valued update: pseudonymize instead of null
-    ver2, n2 = snapshot_update_rows(
-        spark, table, "id", [1], {"v": F.sha2(F.col("v"), 256)}
+    ver2, n2 = snapshot_update(
+        spark, table, {"id": [1]}, {"v": F.sha2(F.col("v"), 256)},
+        mode="rewrite",
     )
     assert n2 == 1
     got2 = {r["id"]: r["v"] for r in read_snapshot(spark, table).collect()}
@@ -1861,21 +1909,24 @@ def test_update_rows_guards(spark, table):
     import pytest as _pytest
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_update_rows,
+        snapshot_update,
     )
 
     df = _df(spark, [(1, 1, "a"), (2, 2, "b")])
     snapshot_write(df, table, partition_cols=["month"])
     with _pytest.raises(ValueError, match="unknown columns"):
-        snapshot_update_rows(spark, table, "id", [1], {"nope": 0})
+        snapshot_update(spark, table, {"id": [1]}, {"nope": 0}, mode="rewrite")
     with _pytest.raises(ValueError, match="partition column"):
-        snapshot_update_rows(spark, table, "id", [1], {"month": 9})
+        snapshot_update(
+            spark, table, {"id": [1]}, {"month": 9}, mode="rewrite",
+        )
     # update on a partitioned table rewrites in the table's layout:
     # a merge after the update must not resurrect pre-update rows
-    ver, n = snapshot_update_rows(spark, table, "id", [1], {"v": "X"})
+    ver, n = snapshot_update(
+        spark, table, {"id": [1]}, {"v": "X"}, mode="rewrite",
+    )
     assert n == 1
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot,
         snapshot_merge_upsert,
     )
 
@@ -1924,8 +1975,7 @@ def test_update_rows_multi_column_sees_pre_update_image(spark, table):
     from pyspark.sql import functions as F
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot,
-        snapshot_update_rows,
+        snapshot_update,
     )
 
     df = spark.createDataFrame(
@@ -1933,9 +1983,9 @@ def test_update_rows_multi_column_sees_pre_update_image(spark, table):
         "id long, v string, v_hash string",
     )
     snapshot_write(df, table)
-    _, n = snapshot_update_rows(
-        spark, table, "id", [1],
-        {"v": None, "v_hash": F.sha2(F.col("v"), 256)},
+    _, n = snapshot_update(
+        spark, table, {"id": [1]},
+        {"v": None, "v_hash": F.sha2(F.col("v"), 256)}, mode="rewrite",
     )
     assert n == 1
     got = {r["id"]: (r["v"], r["v_hash"]) for r in read_snapshot(spark, table).collect()}
@@ -1953,7 +2003,6 @@ def test_snapshot_load_restore_reopens_months(spark, table, tmp_path):
         _snapshot_loaded_months,
     )
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_replace_partitions,
         snapshot_restore,
     )
 
@@ -1978,14 +2027,15 @@ def test_snapshot_load_restore_reopens_months(spark, table, tmp_path):
 
 def test_compact_preserves_stats_and_pruning(spark, table):
     """Manifest stats must SURVIVE compaction: without recomputation
-    every compact silently reset read_snapshot_pruned to a full scan.
+    every compact silently reset a read_snapshot(where=) range to a
+    full scan.
     After compacting a stats-tracked table, the pruned read still
     returns exact results AND the new manifest carries stats for every
     new file."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
-        read_snapshot_pruned,
+        Range,
         snapshot_compact,
         snapshot_write_with_stats,
     )
@@ -2000,7 +2050,7 @@ def test_compact_preserves_stats_and_pruning(spark, table):
     man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
     assert man.get("stats_cols") == ["id"]
     assert set(man.get("stats", {})) == set(man["files"])  # every new file
-    got = read_snapshot_pruned(spark, table, "id", 120, 130)
+    got = read_snapshot(spark, table, where={"id": Range(120, 130)})
     assert sorted(r.id for r in got.collect()) == list(range(120, 131))
 
 
@@ -2015,7 +2065,7 @@ def test_compact_cluster_by_tightens_pruning(spark, table):
         _list_manifests,
         _load_manifest,
         _stat_norm,
-        read_snapshot_pruned,
+        Range,
         snapshot_changes,
         snapshot_compact,
         snapshot_write_with_stats,
@@ -2051,7 +2101,7 @@ def test_compact_cluster_by_tightens_pruning(spark, table):
     assert snapshot_changes(spark, table, pre).count() == 0
     kept_after, total_after = files_kept(10, 20)
     assert total_after > 1 and kept_after < total_after
-    got = read_snapshot_pruned(spark, table, "id", 10, 20)
+    got = read_snapshot(spark, table, where={"id": Range(10, 20)})
     assert sorted(r.id for r in got.collect()) == list(range(10, 21))
 
 
@@ -2062,7 +2112,6 @@ def test_compact_zorder_multi_key_and_partition_guard(spark, table):
     import pytest as _pytest
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot,
         snapshot_compact,
         snapshot_write_with_stats,
     )
@@ -2196,11 +2245,11 @@ def test_append_retry_composes_with_concurrent_delete(spark, table, monkeypatch)
     taken against the NEW parent's file list."""
     from nyc_taxi_data_warehouse_spark.warehouse import snapshots as S
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows,
+        snapshot_delete,
     )
 
     snapshot_write(_df(spark, [(1, 1, "a"), (2, 2, "b")]), table)
-    snapshot_delete_rows(spark, table, "id", [1])  # v2 = concurrent DML
+    snapshot_delete(spark, table, {"id": [1]}, mode="rewrite")  # v2 = concurrent DML
 
     _stale_once(monkeypatch, S)
     v = snapshot_write(
@@ -2326,7 +2375,6 @@ def test_timestamp_travel_refuses_retention_gap(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.branching import create_tag
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_version_at,
-        vacuum_snapshots,
     )
 
     for i in range(5):
@@ -2402,7 +2450,7 @@ def test_schema_ddl_add_and_drop_column(spark, table):
         snapshot_add_column,
         snapshot_compact,
         snapshot_drop_column,
-        snapshot_update_rows,
+        snapshot_update,
         snapshot_write_with_stats,
     )
 
@@ -2456,7 +2504,9 @@ def test_schema_ddl_add_and_drop_column(spark, table):
     ) == [("a", None), ("b", None), ("c", 0.5)]
     snapshot_drop_column(spark, table, "v")
     # DML after the alters works on the current schema
-    snapshot_update_rows(spark, table, "score", [0.5], {"score": None})
+    snapshot_update(
+        spark, table, {"score": [0.5]}, {"score": None}, mode="rewrite",
+    )
     assert sorted(
         (r.month, r.score) for r in read_snapshot(spark, table).collect()
     ) == [(0, None), (0, None), (1, None)]
@@ -2531,7 +2581,7 @@ def test_metadata_tables_files_and_history(spark, table):
     import json as _json
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_delete_rows_dv,
+        snapshot_delete,
         snapshot_files,
         snapshot_history,
         snapshot_write_with_stats,
@@ -2544,7 +2594,7 @@ def test_metadata_tables_files_and_history(spark, table):
         _df(spark, [(i, i % 2, f"a{i}") for i in range(8)]).coalesce(1),
         table, stats_cols=["id"], partition_cols=["month"],
     )
-    snapshot_delete_rows_dv(spark, table, "id", [0])
+    snapshot_delete(spark, table, {"id": [0]}, mode="dv")
     files = snapshot_files(spark, table)
     rows = files.collect()
     assert all(r.bytes > 0 for r in rows)

@@ -29,7 +29,7 @@ import pytest
 
 from nyc_taxi_data_warehouse_spark.warehouse import sqlfront
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_register,
     snapshot_write_with_stats,
 )
@@ -127,7 +127,7 @@ def test_agg_stale_view_parity(spark, tmp_path, spy):
     t = str(tmp_path / "ag_stale")
     _mk(spark, t)
     snapshot_register(spark, t, "ag_stale")
-    snapshot_delete_where(spark, t, {"id": [0, 1, 2, 3]})
+    snapshot_delete(spark, t, {"id": [0, 1, 2, 3]})
     q = "SELECT MIN(id), SUM(id) FROM ag_stale"
     _assert_parity(spark, q)  # stale view: min 0, sum 66
     assert snapshot_sql(spark, q).collect()[0][0] == 0
@@ -410,7 +410,7 @@ def test_group_by_stale_view_and_time_travel(spark, tmp_path, spy):
     t = str(tmp_path / "gb_stale")
     _mk_part(spark, t)
     snapshot_register(spark, t, "gb_stale")
-    snapshot_delete_where(spark, t, {"id": [0, 1, 2, 3]})
+    snapshot_delete(spark, t, {"id": [0, 1, 2, 3]})
     q = "SELECT day, COUNT(*) FROM gb_stale GROUP BY day"
     _assert_parity_sorted(spark, q)  # stale view still shows 3 groups
     assert len(snapshot_sql(spark, q).collect()) == 3

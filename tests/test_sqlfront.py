@@ -372,10 +372,6 @@ def test_add_constraint_rejects_trailing_tokens(spark, tmp_path):
         "ALTER TABLE sqlf_ctrail ADD CONSTRAINT c2 "
         "CHECK ((id > 0) AND (month >= 0))",
     )
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_properties,
-    )
-
     assert snapshot_properties(spark, t)["constraint.c2"] == (
         "(id > 0) AND (month >= 0)"
     )
@@ -422,10 +418,6 @@ def test_insert_into_values_and_select(spark, tmp_path):
 
 
 def test_select_time_travel_version_as_of(spark, tmp_path):
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_versions,
-    )
-
     t = _mk(spark, tmp_path, "sqlf_tt")
     v0 = snapshot_versions(spark, t)[0]["version"]
     snapshot_sql(spark, "DELETE FROM sqlf_tt WHERE id IN (1, 2, 3)")
@@ -605,10 +597,6 @@ def test_ctas_name_collision_and_catalog_passthrough(spark, tmp_path):
 
 
 def test_time_travel_composes_inside_insert_source(spark, tmp_path):
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_versions,
-    )
-
     t = _mk(spark, tmp_path, "sqlf_ttins")
     v0 = snapshot_versions(spark, t)[0]["version"]
     snapshot_sql(spark, "DELETE FROM sqlf_ttins WHERE id IN (1, 2)")
@@ -647,12 +635,12 @@ def test_update_expression_set_redaction(spark, tmp_path):
     assert len(got[1]) == 64 and got[2] == "bob@x.com"
     # parity with the Python API on the other row
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_update_where,
+        snapshot_update,
     )
     from pyspark.sql import functions as F
 
-    snapshot_update_where(
-        spark, t, {"id": [2]}, {"email": F.sha2(F.col("email"), 256)}
+    snapshot_update(
+        spark, t, {"id": [2]}, {"email": F.sha2(F.col("email"), 256)},
     )
     got2 = {r.id: r.email for r in read_snapshot(spark, t).collect()}
     import hashlib
@@ -864,7 +852,6 @@ def test_tags_sql(spark, tmp_path):
 def test_branch_as_of_version_and_publish_conflict(spark, tmp_path):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         SnapshotConflict,
-        snapshot_versions,
     )
 
     t = _mk(spark, tmp_path, "sqlf_bav")

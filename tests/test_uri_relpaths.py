@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _FLAT_READ_THRESHOLD,
     read_snapshot,
-    read_snapshot_pruned,
+    Range,
     snapshot_changes,
     snapshot_compact,
     snapshot_write,
@@ -93,9 +93,9 @@ def test_pruned_read_survives_uri_partition_values(spark, table):
         _sdf(spark, range(30)), table, stats_cols=["id"],
         partition_cols=["name"],
     )
-    got = read_snapshot_pruned(spark, table, "id", 0, 29)
+    got = read_snapshot(spark, table, where={"id": Range(0, 29)})
     assert got.count() == 30
-    sel = read_snapshot_pruned(spark, table, "id", 7, 9)
+    sel = read_snapshot(spark, table, where={"id": Range(7, 9)})
     assert sorted(r.id for r in sel.collect()) == [7, 8, 9]
     assert {r.name for r in got.collect()} == set(SPECIALS)
 

@@ -20,11 +20,11 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     _load_manifest,
     read_snapshot,
-    read_snapshot_pruned,
+    Range,
     snapshot_add_constraint,
     snapshot_changes,
     snapshot_count_nonnull,
-    snapshot_delete_where,
+    snapshot_delete,
     snapshot_minmax,
     snapshot_rename_column,
     snapshot_widen_column,
@@ -91,7 +91,7 @@ def test_widen_keeps_stats_pruning_and_dml(spark, tmp_path):
     snapshot_widen_column(spark, t, "amt", "bigint")
     # recorded narrow stats keep planning the widened column
     full = read_snapshot(spark, t)
-    pruned = read_snapshot_pruned(spark, t, "amt", 0, 30)
+    pruned = read_snapshot(spark, t, where={"amt": Range(0, 30)})
     assert len(pruned.inputFiles()) < len(full.inputFiles())
     assert _bag(pruned, "id") == [(i,) for i in range(4)]
     assert snapshot_minmax(spark, t, "amt") == (0, 390)
@@ -103,7 +103,7 @@ def test_widen_keeps_stats_pruning_and_dml(spark, tmp_path):
         t,
         mode="append",
     )
-    v, n = snapshot_delete_where(spark, t, {"amt": [5_000_000_000]})
+    v, n = snapshot_delete(spark, t, {"amt": [5_000_000_000]})
     assert n == 1
     assert _bag(read_snapshot(spark, t).where("id = 99"), "id") == []
 

@@ -106,7 +106,7 @@ def meter(
     assert n_meta == n_scan, (n_meta, n_scan)
 
     t0 = time.monotonic()
-    _, rows_deleted = snap.snapshot_delete_where(
+    _, rows_deleted = snap.snapshot_delete(
         spark, table_path, preds, mode="rewrite"
     )
     delete_wall_ms = (time.monotonic() - t0) * 1000

@@ -154,7 +154,7 @@ def _extra_ops() -> dict:
     def x_snapshot_changes(spark, sf_dir):
         from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
             snapshot_changes,
-            snapshot_delete_rows,
+            snapshot_delete,
             snapshot_write,
         )
 
@@ -164,7 +164,7 @@ def _extra_ops() -> dict:
         snapshot_write(
             d.where(F.col("doc_id") % 3 == 1), t, mode="append"
         )
-        snapshot_delete_rows(spark, t, "doc_id", [0, 3, 6])
+        snapshot_delete(spark, t, {"doc_id": [0, 3, 6]}, mode="rewrite")
         return snapshot_changes(spark, t, 0)
 
     def x_dv_delete_read(spark, sf_dir):
@@ -174,15 +174,15 @@ def _extra_ops() -> dict:
         # tombstones are outstanding
         from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
             read_snapshot,
-            snapshot_delete_rows_dv,
+            snapshot_delete,
             snapshot_write_with_stats,
         )
 
         t = tempfile.mkdtemp(prefix="audit_dv_") + "/t"
         d = docs(spark, sf_dir)
         snapshot_write_with_stats(d, t, stats_cols=["doc_id"])
-        snapshot_delete_rows_dv(
-            spark, t, "doc_id", [i * 7 for i in range(40)]
+        snapshot_delete(
+            spark, t, {"doc_id": [i * 7 for i in range(40)]}, mode="dv"
         )
         return read_snapshot(spark, t)
 
