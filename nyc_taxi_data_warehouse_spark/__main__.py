@@ -88,6 +88,17 @@ def _decode_where(text: str):
     return branch(obj)
 
 
+def _cli_timestamp(text: str | None):
+    """``--at-timestamp`` → epoch seconds when numeric, else the ISO
+    string as given (``snapshot_version_at`` parses it)."""
+    if text is None:
+        return None
+    try:
+        return float(text)
+    except ValueError:
+        return text
+
+
 def main(argv: list[str] | None = None, spark=None) -> int:
     p = argparse.ArgumentParser(prog="nyc_taxi_data_warehouse_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -898,65 +909,29 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             out["properties"] = snapshot_properties(spark, args.table_path)
             print(json.dumps(out, sort_keys=True))
         elif args.cmd == "snapshot-count":
-            from .warehouse.snapshots import snapshot_count
+            from .warehouse.snapshots import snapshot_agg
 
-            ts = args.at_timestamp
-            if ts is not None:
-                try:
-                    ts = float(ts)
-                except ValueError:
-                    pass  # ISO string — snapshot_version_at parses it
-            if args.where is not None:
-                from .warehouse.snapshots import (
-                    snapshot_count_where,
-                    snapshot_version_at,
-                )
-
-                if args.col is not None:
-                    raise SystemExit(
-                        "pass --col OR --where, not both"
-                    )
-                preds = _decode_where(args.where)
-                ver = args.version
-                if ts is not None:
-                    if ver is not None:
-                        raise SystemExit(
-                            "pass --version OR --at-timestamp, not both"
-                        )
-                    ver = snapshot_version_at(spark, args.table_path, ts)
-                n = snapshot_count_where(
-                    spark, args.table_path, preds, version=ver
-                )
-            elif args.col is not None:
-                from .warehouse.snapshots import (
-                    snapshot_count_nonnull,
-                    snapshot_version_at,
-                )
-
-                ver = args.version
-                if ts is not None:
-                    if ver is not None:  # same refusal as the no-col path
-                        raise SystemExit(
-                            "pass --version OR --at-timestamp, not both"
-                        )
-                    ver = snapshot_version_at(spark, args.table_path, ts)
-                n = snapshot_count_nonnull(
-                    spark, args.table_path, args.col, version=ver
-                )
-            else:
-                n = snapshot_count(
+            if args.col is not None and args.where is not None:
+                raise SystemExit("pass --col OR --where, not both")
+            try:
+                [(n,)] = snapshot_agg(
                     spark, args.table_path,
-                    version=args.version, at_timestamp=ts,
+                    [("count", "*" if args.col is None else args.col)],
+                    version=args.version,
+                    at_timestamp=_cli_timestamp(args.at_timestamp),
+                    where=(
+                        None if args.where is None
+                        else _decode_where(args.where)
+                    ),
                 )
+            except ValueError as e:
+                raise SystemExit(str(e))
             print(json.dumps({"rows": n}))
         elif args.cmd == "snapshot-agg":
             import datetime as _dt
             import decimal as _dec
 
-            from .warehouse.snapshots import (
-                snapshot_agg_where,
-                snapshot_version_at,
-            )
+            from .warehouse.snapshots import snapshot_agg
 
             aggs = []
             for item in args.aggs.split(","):
@@ -966,23 +941,22 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                         f"--aggs wants func:col pairs, got {item!r}"
                     )
                 aggs.append((func.lower(), col))
-            preds = (
-                _decode_where(args.where)
-                if args.where is not None
-                else None
-            )
-            ver = args.version
-            ts = args.at_timestamp
-            if ts is not None:
-                if ver is not None:
-                    raise SystemExit(
-                        "pass --version OR --at-timestamp, not both"
-                    )
-                try:
-                    ts = float(ts)
-                except ValueError:
-                    pass
-                ver = snapshot_version_at(spark, args.table_path, ts)
+            by = None
+            if args.by is not None:
+                by = [c.strip() for c in args.by.split(",") if c.strip()]
+            try:
+                rows = snapshot_agg(
+                    spark, args.table_path, aggs, by=by,
+                    version=args.version,
+                    at_timestamp=_cli_timestamp(args.at_timestamp),
+                    where=(
+                        None if args.where is None
+                        else _decode_where(args.where)
+                    ),
+                )
+            except ValueError as e:
+                raise SystemExit(str(e))
+
             def enc(v):
                 if isinstance(v, _dec.Decimal):
                     return str(v)
@@ -990,43 +964,16 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                     return v.isoformat()
                 return v
 
-            if args.by is not None:
-                from .warehouse.snapshots import (
-                    snapshot_group_agg_where,
+            nby = len(by or ())
+            for r in sorted(rows, key=lambda t: str(t[:nby])):
+                rec = {c: enc(r[i]) for i, c in enumerate(by or ())}
+                rec.update(
+                    {
+                        f"{f}({c})": enc(r[nby + k])
+                        for k, (f, c) in enumerate(aggs)
+                    }
                 )
-
-                by = [c.strip() for c in args.by.split(",") if c.strip()]
-                try:
-                    rows = snapshot_group_agg_where(
-                        spark, args.table_path, by, aggs, preds,
-                        version=ver,
-                    )
-                except ValueError as e:
-                    raise SystemExit(str(e))
-                for r in sorted(rows, key=lambda t: str(t[: len(by)])):
-                    rec = {c: enc(r[i]) for i, c in enumerate(by)}
-                    rec.update(
-                        {
-                            f"{f}({c})": enc(r[len(by) + k])
-                            for k, (f, c) in enumerate(aggs)
-                        }
-                    )
-                    print(json.dumps(rec, sort_keys=True))
-            else:
-                try:
-                    vals = snapshot_agg_where(
-                        spark, args.table_path, aggs, preds,
-                        version=ver,
-                    )
-                except ValueError as e:
-                    raise SystemExit(str(e))
-                print(
-                    json.dumps(
-                        {f"{f}({c})": enc(v)
-                         for (f, c), v in zip(aggs, vals)},
-                        sort_keys=True,
-                    )
-                )
+                print(json.dumps(rec, sort_keys=True))
         elif args.cmd == "snapshot-delete":
             from .warehouse.snapshots import snapshot_delete
 

@@ -3,7 +3,7 @@
 The merge-on-read DML in ``snapshots.py`` (deletion vectors) made
 WRITE bytes proportional to the change — but a keyed upsert still has
 to READ the touched partitions to find which rows it supersedes
-(``snapshot_merge_upsert_dv`` scans them for (file, position)
+(``snapshot_merge(mode="dv")`` scans them for (file, position)
 tombstones). On a 100 TB table fed by a CDC stream whose keys scatter
 across partitions, every micro-batch pays a table-read tax that has
 nothing to do with the batch's size.
@@ -34,7 +34,7 @@ Semantics: LAST WRITER WINS by commit order — an upsert's images
 replace every earlier row with the same key (including earlier
 upserts', whose files predate the new entry). Out-of-order CDC feeds
 that need max-version-wins reconciliation against the TARGET must use
-``snapshot_merge_upsert_dv`` (which reads the table precisely because
+``snapshot_merge(mode="dv")`` (which reads the table precisely because
 that comparison requires it); within one batch, ``version_col`` picks
 each key's newest image. Reference: the reference pipeline has no
 upsert at all (append-only S3 prefixes —
@@ -293,7 +293,7 @@ def snapshot_delete_keys(
     currently in the table). Returns ``(new_version, n_keys)``. How
     many rows actually die is deliberately not computed here (that
     would be the table read this exists to avoid) —
-    ``snapshot_resolve_eq`` / ``snapshot_count`` answer it exactly
+    ``snapshot_resolve_eq`` / ``snapshot_agg`` COUNT(*) answer it exactly
     when someone needs the number."""
     head, man = _manifest_at(spark, path)
     schema = StructType.fromJson(man["schema"])

@@ -647,7 +647,7 @@ def _commit(
     # strictly files NEW TO THE TABLE: a carried file the (legacy)
     # parent tracked without a count stays a gap — backfilling here
     # would make one upgrade commit O(table) footer reads; readers
-    # (snapshot_count) self-heal the gap per call instead.
+    # (snapshot_agg's COUNT(*)) self-heal the gap per call instead.
     # ``carried_only`` marks whole-state carries whose files all come
     # from some other validated manifest (branch fork with parent=None,
     # publish, restore): their row-count gaps must stay gaps too.
@@ -2503,7 +2503,7 @@ def snapshot_files(
             (
                 f,
                 # physical footer row count from the manifest (null for
-                # files predating row tracking — see snapshot_count)
+                # files predating row tracking — see _live_row_total)
                 frows.get(f),
                 json.dumps(pv, sort_keys=True) if pv else None,
                 f in tgts,
@@ -2566,7 +2566,7 @@ def snapshot_partitions(
     silently misbinned; a compact moves them into their real groups.
     ``rows`` is the PHYSICAL footer total (NULL when any grouped file
     predates row tracking); live-row exactness under tombstones is
-    ``snapshot_count(partitions=...)``'s job."""
+    ``snapshot_agg(partitions=...)``'s job."""
     version, man = _manifest_at(spark, path, version)
     pcols = _manifest_partition_cols(man) or []
     clash = sorted(
@@ -2629,219 +2629,11 @@ def snapshot_partitions(
     )
 
 
-def snapshot_count(
-    spark: SparkSession,
-    path: str,
-    version: int | None = None,
-    at_timestamp=None,
-    partitions: dict | None = None,
-) -> int:
-    """Exact live row count of the table at ``version`` (default:
-    latest) WITHOUT scanning data pages: per-file footer counts ride
-    in the manifest (recorded at commit time, O(new files) each — see
-    ``_commit``), so the physical total is one metadata fold; the
-    deletion-vector correction semi-joins the tombstone sidecars
-    against the live file list (∝ tombstone rows, never table rows).
-    On a 100 TB / 10^6-file table this answers COUNT(*) from a few
-    KB of metadata plus the (usually tiny) sidecars, where a scan —
-    even a parquet-optimized one — opens every file.
-
-    Files predating row tracking (legacy history) self-heal: only the
-    MISSING footers are read (fail-loud — a manifest-referenced file
-    that cannot be opened is corruption, not a gap). The correction
-    term means the count is exact under merge-on-read DML too.
-
-    ``partitions`` scopes the count to matching partition directories
-    (manifest-pruned — see ``_partition_pruned_files``), still without
-    touching data pages."""
-    if version is not None and at_timestamp is not None:
-        raise ValueError("pass version OR at_timestamp, not both")
-    if at_timestamp is not None:
-        version = snapshot_version_at(spark, path, at_timestamp)
-    _, man = _manifest_at(spark, path, version)
-    root = _root(path)
-    files = man["files"]
-    residual = None
-    if partitions:
-        # partition-scoped count stays metadata-only too: prune the
-        # file list first, correct by the tombstones targeting exactly
-        # those files (the sidecar semi-join keys on relpath). Files
-        # predating a layout evolution cannot answer from directories
-        # — they join the scanned surface below with a row-level
-        # residual filter (exact, cost ∝ unmigrated files).
-        files, unenc = _partition_pruned_files(man, partitions, "split")
-        if unenc:
-            residual = _partition_residual_cond(
-                {_phys(man, k): v for k, v in partitions.items()}
-            )
-    # files an outstanding EQUALITY delete applies to cannot answer
-    # from metadata (a key may match 0..n of their rows) — scan
-    # exactly that surface with full masking; the rest stays
-    # metadata-only. ``snapshot_resolve_eq`` restores the pure
-    # metadata answer.
-    eq_aff = _eq_affected_files(man, files)
-    scan_set = sorted(set(eq_aff) | set(unenc if residual is not None else ()))
-    scanned = 0
-    if scan_set:
-        sset = set(scan_set)
-        files = [f for f in files if f not in sset]
-        rows = _read_file_list(
-            spark, path, scan_set,
-            # physical namespace: eq entry keys are on-disk names, and
-            # a count never surfaces column names anyway
-            _phys_fields(StructType.fromJson(man["schema"]), _colmap(man)),
-            partition_cols=_manifest_partition_cols(man),
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            eq_entries=man.get("eqs"),
-            file_seq=man.get("seq"),
-            # an eq entry KEYED on a defaulted column must mask the
-            # pre-add rows here exactly as it does on every read
-            defaults=man.get("defaults"),
-        )
-        if residual is not None:
-            # physical frame — the residual was built on physical names;
-            # a tautology for dir-encoded eq_aff rows, exact for the rest
-            rows = rows.where(residual)
-        scanned = rows.count()
-    return scanned + _physical_row_total(
-        spark, root, man, files
-    ) - _dv_entry_count(spark, root, man.get("dv_files"), files)
-
-
-def snapshot_minmax(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    version: int | None = None,
-    partitions: dict | None = None,
-):
-    """``(min, max)`` of ``col`` over the live table — answered from
-    the manifest's per-file stats when that is PROVABLY exact: every
-    (scoped) live file carries stats for the column and no deletion
-    vector targets any of them (a tombstoned row could hold the
-    extreme). Otherwise falls back to an exact scan of exactly the
-    uncovered surface. The metadata path returns values in the stats
-    image's normalized domain (numbers native, date/timestamp as ISO
-    strings — see ``collect_file_stats``); the scan path returns
-    Spark-typed values. All-null (or empty) tables return
-    ``(None, None)`` on both paths."""
-    _, man = _manifest_at(spark, path, version)
-    residual = None
-    unenc: set = set()
-    if partitions:
-        # files predating a layout evolution can't answer a SCOPED
-        # aggregate from stats (their recorded extremes cover rows
-        # outside the scope) — they join the scanned surface below
-        # with the row-level residual filter (exact)
-        files, _ue = _partition_pruned_files(man, partitions, "split")
-        if _ue:
-            unenc = set(_ue)
-            residual = _partition_residual_cond(partitions)
-    else:
-        files = man["files"]
-    stats = man.get("stats") or {}
-    tgts = set(man.get("dv_targets") or ())
-    if man.get("dv_files") and man.get("dv_targets") is None:
-        tgts = set(files)  # legacy: unknown targets — assume any
-    eq_aff = set(_eq_affected_files(man, files))
-    pcol = _phys(man, col)  # stats are keyed by on-disk column names
-    cov = {
-        f
-        for f in files
-        if f in stats and pcol in stats[f] and f not in tgts
-        and f not in eq_aff and f not in unenc
-    }
-    covered = [f for f in files if f in cov]
-    uncovered = [f for f in files if f not in cov]
-    los = [stats[f][pcol][0] for f in covered]
-    his = [stats[f][pcol][1] for f in covered]
-    if uncovered:
-        # scan ONLY the files metadata cannot answer for — partial
-        # stats coverage or outstanding tombstones on the file. On a
-        # mostly-statted table one DV'd file costs one small scan, not
-        # a full-table aggregate. Scan extremes join the metadata ones
-        # through the same order-preserving normalization the stats
-        # were recorded in — UNWIDENED (widen=0): these are exact
-        # observed endpoints, and padding them outward (as the
-        # recorded Decimal bounds are) would return a value not
-        # present in the data. The combined result can still surface
-        # a covered file's widened Decimal bound — that is the
-        # documented metadata-path contract.
-        df = _scan_live(spark, path, man, uncovered)
-        if residual is not None:
-            df = df.where(residual)
-        row = df.agg(
-            F.min(F.col(col)).alias("lo"), F.max(F.col(col)).alias("hi")
-        ).first()
-        if not covered:
-            return (row["lo"], row["hi"])  # pure scan: Spark-typed
-        los.append(_stat_norm(row["lo"]))
-        his.append(_stat_norm(row["hi"]))
-    los = [v for v in los if v is not None]
-    his = [v for v in his if v is not None]
-    return (min(los) if los else None, max(his) if his else None)
-
-
-def snapshot_count_where(
-    spark: SparkSession,
-    path: str,
-    predicates: dict,
-    version: int | None = None,
-) -> int:
-    """Exact ``COUNT(*) WHERE col IN values AND ... / col BETWEEN``
-    planned from manifest metadata — the read-side twin of the DML
-    victim planner. Per file:
-
-    - stats/directories EXCLUDE it (no row can match) → contributes 0,
-      never opened;
-    - stats/directories PROVE every row matches (``Range``: recorded
-      [min, max] wholly inside the interval, zero nulls; IN: min ==
-      max == a value; partition dirs row-exactly) → contributes its
-      recorded footer count minus live DV tombstones, never opened;
-    - BOUNDARY files — matches mixed with survivors, stats-less files,
-      files under an outstanding equality delete (a key may mask
-      0..n of their rows, unprovable from metadata) — are scanned
-      with the exact residual predicate and full DV/eq masking.
-
-    On a time-clustered 100 TB table, ``COUNT(*) WHERE ts <
-    retention_cutoff`` then opens only the boundary files where the
-    cutoff lands — everything else answers from a few KB of manifest.
-    Same NULL semantics as the DML planner (predicates never match
-    NULL; a provably-empty range or emptied IN list returns 0)."""
-    _, man = _manifest_at(spark, path, version)
-    preds = _sanitize_predicates(predicates)
-    if not preds:
-        return 0
-    victims, _carried = _victims_by_stats_where(man, preds)
-    if not victims:
-        return 0
-    full = set(_full_match_files_where(man, preds))
-    eq_aff = set(_eq_affected_files(man, victims))
-    proven = [f for f in victims if f in full and f not in eq_aff]
-    pset = set(proven)
-    scan = [f for f in victims if f not in pset]
-    scanned = 0
-    if scan:
-        scanned = (
-            _scan_live(spark, path, man, scan)
-            .where(_match_expr(preds))
-            .count()
-        )
-    root = _root(path)
-    return (
-        scanned
-        + _physical_row_total(spark, root, man, proven)
-        - _dv_entry_count(spark, root, man.get("dv_files"), proven)
-    )
-
-
 _AGG_FUNCS = ("min", "max", "sum", "count")
 
 
 def _agg_normalize(aggs) -> list:
-    """Validate/normalize the ``aggs`` argument shared by
-    ``snapshot_agg_where`` and ``snapshot_group_agg_where``:
+    """Validate/normalize ``snapshot_agg``'s ``aggs`` argument:
     ``[(func, col)]`` with lowercased funcs, or a loud ValueError."""
     norm: list[tuple[str, str]] = []
     for a in aggs:
@@ -2984,11 +2776,11 @@ def _agg_part_provable(man, col, ftypes, base_ok, rows_map, kind):
 
 
 def _agg_proven_sets(man, norm, ftypes, victims, full):
-    """The exactness gates shared by the flat and grouped aggregate
-    planners: per requested aggregate, the set of victim files whose
-    metadata PROVABLY answers it — see ``snapshot_agg_where``'s
-    docstring for the per-rule rationale. Returns ``(proven, rows_map)``
-    with ``proven`` aligned to ``norm``."""
+    """The exactness gates of the aggregate planner: per requested
+    aggregate, the set of victim files whose metadata PROVABLY answers
+    it — see ``snapshot_agg``'s docstring for the per-rule rationale.
+    Returns ``(proven, rows_map)`` with ``proven`` aligned to
+    ``norm``."""
     import math
 
     from pyspark.sql.types import (
@@ -3184,123 +2976,10 @@ def _agg_combine_one(fl, col, meta, sv, man, ftypes, rows_map):
     return r
 
 
-def snapshot_agg_where(
-    spark: SparkSession,
-    path: str,
-    aggs: list,
-    predicates=None,
-    version: int | None = None,
-    _man: dict | None = None,
-) -> list:
-    """Exact MIN/MAX/SUM/COUNT — optionally under a plannable predicate
-    ({col: values | Range | null-test}, or a DNF list of such dicts) —
-    answered from manifest metadata wherever PROVABLE, scanning only
-    the files metadata cannot answer for: the aggregate twin of
-    ``snapshot_count_where``. ``aggs`` is a list of ``(func, col)``
-    with func in min|max|sum|count (col ``"*"`` for COUNT(*) only);
-    returns Python values aligned with ``aggs``.
-
-    Per admitted file (the stats planner's victims; every file when
-    ``predicates`` is None):
-
-    - a file the predicate provably matches WHOLE (``_full_match_
-      files_where``), free of DV tombstones and equality deletes,
-      answers from metadata: MIN/MAX from the recorded endpoints, SUM
-      from the exactly-recorded per-file sums (stats fourth element),
-      COUNT from recorded row/null counts — never opened;
-    - every other admitted file — boundary files, stats-less or
-      legacy-stats files, tombstoned files — joins ONE residual scan
-      computing all requested aggregates at once.
-
-    Exactness rules (a file failing one moves to the scan — the result
-    is never approximate):
-    - MIN/MAX answers from stats only for types whose recorded image
-      round-trips faithfully (non-decimal numerics, strings, bools,
-      dates, timestamps). Decimal endpoints are OUTWARD-WIDENED
-      floats and interval/binary/array/struct images are lossy
-      ``str(v)`` — exact for pruning, wrong for answering — so those
-      scan; Decimal SUM answers (sums are recorded exactly);
-    - a NULL recorded sum proves "zero non-null rows" only when the
-      null count equals the row count — otherwise (e.g. overflow
-      under a non-ANSI writer) the file scans;
-    - a NaN endpoint routes the file to the scan (Spark orders NaN
-      largest; Python comparisons would mis-combine it);
-    - PARTITION columns answer from their DIRECTORY values (the
-      directory is the exact value of every row): MIN/MAX/COUNT for
-      decodable key types, SUM as value × rows for integral/Decimal
-      keys — so ``MAX(day)`` on a day-partitioned table, the
-      freshness query, is zero-I/O; float/double keys, undecodable
-      directories, and layout-evolution files (value in-row) scan;
-    - float SUM combines per-file partials in Python — same value up
-      to float addition order, exactly like any distributed sum;
-      integral SUM is exact under ANSI (the session default; a
-      non-ANSI writer's wrapped per-file partials are out of scope).
-
-    ``_man`` is internal plumbing for the SQL fast path: the
-    already-loaded manifest FOR ``version`` (pass both or neither) so
-    the statement doesn't list/load the same manifest twice.
-
-    MIN/MAX of date/timestamp columns denormalize from the stats image
-    (ISO strings) back to Python date/datetime via the schema, so both
-    paths return Spark-typed values. SQL NULL semantics throughout:
-    MIN/MAX/SUM over zero matching non-null rows return None, COUNT
-    returns 0 — including under a provably-empty predicate.
-
-    At 100 TB this is the retention-audit companion: ``SELECT MIN(ts),
-    MAX(ts), SUM(bytes), COUNT(*) WHERE ts < cutoff`` on a
-    time-clustered table opens only the boundary files the cutoff
-    intersects; everything else answers from a few KB of manifest."""
-    man = _man if _man is not None else _manifest_at(spark, path, version)[1]
-    norm = _agg_normalize(aggs)
-    schema = StructType.fromJson(man["schema"])
-    ftypes = {fld.name: fld.dataType for fld in schema.fields}
-    _agg_validate_types(norm, ftypes)
-
-    def empties() -> list:
-        return [0 if fl == "count" else None for fl, _ in norm]
-
-    preds = None
-    if predicates is not None:
-        preds = _sanitize_predicates(predicates)
-        if not preds:
-            return empties()
-    if preds is not None:
-        victims, _carried = _victims_by_stats_where(man, preds)
-        full = set(_full_match_files_where(man, preds))
-    else:
-        victims = list(man["files"])
-        full = set(victims)
-    if not victims:
-        return empties()
-    proven, rows_map = _agg_proven_sets(man, norm, ftypes, victims, full)
-
-    need_scan = [f for f in victims if any(f not in p for p in proven)]
-    sset = set(need_scan)
-    scan_row = None
-    if need_scan:
-        df = _scan_live(spark, path, man, need_scan)
-        if preds is not None:
-            df = df.where(_match_expr(preds))
-        exprs = []
-        for k, (fl, col) in enumerate(norm):
-            arg = F.lit(1) if col == "*" else F.col(col)
-            exprs.append(getattr(F, fl)(arg).alias(f"_a{k}"))
-        scan_row = df.agg(*exprs).first()
-
-    out: list = []
-    for k, (fl, col) in enumerate(norm):
-        meta = [f for f in victims if f in proven[k] and f not in sset]
-        sv = scan_row[f"_a{k}"] if scan_row is not None else None
-        out.append(
-            _agg_combine_one(fl, col, meta, sv, man, ftypes, rows_map)
-        )
-    return out
-
-
 def _decode_partition_string(s, dt):
     """A partition-directory string back to the Spark-typed Python
     value — the inverse of how Spark wrote the directory, for exactly
-    the types ``snapshot_group_agg_where`` admits as group keys."""
+    the types ``snapshot_agg`` admits as group keys."""
     import datetime
     import decimal
 
@@ -3331,101 +3010,173 @@ def _decode_partition_string(s, dt):
     return s  # StringType
 
 
-def snapshot_group_agg_where(
+def snapshot_agg(
     spark: SparkSession,
     path: str,
-    by: list,
     aggs: list,
-    predicates=None,
+    by: list | None = None,
     version: int | None = None,
-    _man: dict | None = None,
-) -> list:
-    """Exact GROUPED MIN/MAX/SUM/COUNT over PARTITION columns —
-    optionally under a plannable predicate — answered from manifest
-    metadata wherever provable: the GROUP BY twin of
-    ``snapshot_agg_where``. Returns ``[(by_vals..., agg_vals...),
-    ...]`` with Spark-typed Python values, one tuple per live group,
-    in no particular order (SQL GROUP BY order is unspecified).
+    at_timestamp=None,
+    partitions: dict | None = None,
+    where: dict | list | None = None,
+) -> list[tuple]:
+    """Exact ``SELECT [by...,] agg [, agg ...] FROM t [WHERE where]
+    [GROUP BY by]`` answered from manifest metadata wherever PROVABLE,
+    scanning only the files metadata cannot answer for — the one
+    aggregate entry point. ``aggs`` is a list of ``(func, col)`` with
+    func in min|max|sum|count (col ``"*"`` for COUNT(*) only).
 
-    ``by`` must name partition columns: their values are directory
-    strings the manifest already holds, so a victim file binds to its
-    group with zero I/O. Per group, the same proven/scan split as the
-    flat planner: fully-proven files contribute recorded stats, and
-    ALL unprovable files across all groups join ONE residual
-    ``groupBy(by).agg(...)`` scan, combined per group driver-side
-    (#groups rows — partition counts, not data counts).
+    Returns SQL-shaped rows: without ``by``, exactly one tuple of
+    aggregate values aligned with ``aggs``; with ``by`` (PARTITION
+    columns only — their values are directory strings the manifest
+    already holds), one ``(by_vals..., agg_vals...)`` tuple per live
+    group, in no particular order (SQL GROUP BY order is unspecified).
+    Values are what ``read_snapshot(...).agg(...)`` returns —
+    Spark-typed whichever files answered from metadata. SQL NULL
+    semantics: MIN/MAX/SUM over zero non-null rows are None, COUNT is
+    0, and a group is emitted iff at least one live row matched.
 
-    Files route to the scan when any requested aggregate is unproven
-    (the ``_agg_proven_sets`` gates), when the file's directories do
-    not encode every group column (pre-``snapshot_set_layout``
-    files — their group values live in data columns, which the scan
-    groups correctly), when the file predates row tracking (group
-    existence needs a row count), or when a group column's type
-    can't be decoded from its directory string faithfully
-    (float/double and tz-ful timestamp keys — see
-    ``_dir_decode_types`` — everything scans rather than risking a
-    silent key mismatch).
+    Scope takes ``read_snapshot``'s words: ``version`` / ``at_timestamp``
+    pick the snapshot; ``partitions`` prunes at the manifest (files
+    predating a layout evolution scan with the row-level residual);
+    ``where`` ({col: values | Range | IS_NULL | IS_NOT_NULL}, or a DNF
+    list of such dicts) admits files by stats/directories, proves files
+    it matches WHOLE, and applies the exact row predicate to scanned
+    files. A provably-empty ``where`` answers COUNT 0 / NULL (no
+    groups under ``by``) without a scan.
 
-    Group existence follows SQL: a group is emitted iff at least one
-    live row matched — metadata groups with zero recorded rows (all
-    files empty) are suppressed, exactly as a passthrough GROUP BY
-    emits nothing for them.
+    Per scoped file (a file failing its rule joins the scan — the
+    result is never approximate):
 
-    At 100 TB this is the partition-profile query: ``SELECT day,
-    COUNT(*), SUM(bytes) ... WHERE day < cutoff GROUP BY day`` on a
-    day-partitioned table answers from the manifest alone — no file
-    opens at all when stats prove every admitted file."""
-    man = _man if _man is not None else _manifest_at(spark, path, version)[1]
+    - COUNT(*): a whole-match file no equality delete applies to (a
+      key may mask 0..n of its rows) answers its recorded row count
+      minus its live DV tombstones — footers are read only for files
+      predating row tracking. Under ``by``, tombstoned files and files
+      without a recorded count scan instead (group existence needs a
+      count);
+    - MIN/MAX/SUM/COUNT(col) need a whole-match file free of
+      tombstones and equality deletes (``_agg_proven_sets``): MIN/MAX
+      from recorded endpoints, only for types whose stats image
+      round-trips (Decimal endpoints are outward-widened floats;
+      interval/binary/array/struct images are lossy ``str(v)``) and
+      never from a NaN endpoint; SUM from the exactly-recorded
+      per-file sums (a NULL sum proves "no non-null rows" only when
+      the null count equals the row count); COUNT(col) from row minus
+      null counts;
+    - PARTITION columns answer from DIRECTORY values (the exact value
+      of every row): MIN/MAX/COUNT for decodable key types, SUM as
+      value × rows for integral/Decimal keys — so ``MAX(day)`` on a
+      day-partitioned table, the freshness query, is zero-I/O;
+    - under ``by``, a file whose directories do not encode every group
+      column (pre-``snapshot_set_layout``) or whose group key cannot
+      decode faithfully (``_dir_decode_types``) scans;
+    - every other file joins ONE residual scan (``groupBy(by)`` under
+      ``by``) computing all requested aggregates with full DV/eq
+      masking, combined with the metadata contributions driver-side.
+      Float SUM combines per-file partials in Python — equal up to
+      addition order, like any distributed sum.
+
+    At 100 TB this is the retention audit and the partition profile:
+    ``SELECT MIN(ts), MAX(ts), SUM(bytes), COUNT(*) WHERE ts < cutoff``
+    on a time-clustered table opens only the boundary files the cutoff
+    intersects, and ``SELECT day, COUNT(*) ... GROUP BY day`` answers
+    from a few KB of manifest."""
+    if version is not None and at_timestamp is not None:
+        raise ValueError("pass version OR at_timestamp, not both")
+    if at_timestamp is not None:
+        version = snapshot_version_at(spark, path, at_timestamp)
+    _, man = _manifest_at(spark, path, version)
+    return _agg_at(spark, path, man, aggs, by, partitions, where)
+
+
+def _agg_at(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    aggs: list,
+    by: list | None = None,
+    partitions: dict | None = None,
+    where: dict | list | None = None,
+) -> list[tuple]:
+    """``snapshot_agg`` of an already-opened manifest."""
     norm = _agg_normalize(aggs)
     schema = StructType.fromJson(man["schema"])
     ftypes = {fld.name: fld.dataType for fld in schema.fields}
     _agg_validate_types(norm, ftypes)
-    if not by:
-        raise ValueError("by must name at least one partition column")
-    part_cols = set(_manifest_partition_cols(man) or ())
-    for c in by:
-        if c not in ftypes:
-            raise ValueError(
-                f"unknown column {c!r} (have {sorted(ftypes)})"
-            )
-        if _phys(man, c) not in part_cols:
-            raise ValueError(
-                f"group column {c!r} is not a partition column — "
-                "grouped metadata aggregates need directory-provable "
-                "group values (layout: "
-                f"{sorted(part_cols) or 'unpartitioned'})"
-            )
-
-    preds = None
-    if predicates is not None:
-        preds = _sanitize_predicates(predicates)
-        if not preds:
-            return []
-    if preds is not None:
-        victims, _carried = _victims_by_stats_where(man, preds)
-        full = set(_full_match_files_where(man, preds))
-    else:
-        victims = list(man["files"])
-        full = set(victims)
-    if not victims:
-        return []
-    proven, rows_map = _agg_proven_sets(man, norm, ftypes, victims, full)
-
-    phys_by = [_phys(man, c) for c in by]
-    decodable = all(
-        isinstance(ftypes[c], _dir_decode_types()) for c in by
+    if by is not None:
+        if not by:
+            raise ValueError("by must name at least one partition column")
+        part_cols = set(_manifest_partition_cols(man) or ())
+        for c in by:
+            if c not in ftypes:
+                raise ValueError(
+                    f"unknown column {c!r} (have {sorted(ftypes)})"
+                )
+            if _phys(man, c) not in part_cols:
+                raise ValueError(
+                    f"group column {c!r} is not a partition column — "
+                    "grouped metadata aggregates need directory-provable "
+                    "group values (layout: "
+                    f"{sorted(part_cols) or 'unpartitioned'})"
+                )
+    by_cols = list(by or ())
+    empty = (
+        [] if by is not None
+        else [tuple(0 if fl == "count" else None for fl, _ in norm)]
     )
-    sset: set = set()
-    keyof: dict = {}
-    for f in victims:
-        if not decodable or f not in rows_map or any(
-            f not in p for p in proven
-        ):
-            sset.add(f)
+
+    files = man["files"]
+    conds = []
+    unenc: set = set()
+    if partitions:
+        files, _ue = _partition_pruned_files(man, partitions, "split")
+        if _ue:
+            unenc = set(_ue)
+            conds.append(_partition_residual_cond(partitions))
+    full = set(files)
+    if where is not None:
+        # [] is the already-sanitized empty DNF the SQL front door
+        # parses a provably-false WHERE to
+        preds = where if where == [] else _sanitize_predicates(where)
+        if not preds:
+            return empty
+        admitted = set(_victims_by_stats_where(man, preds)[0])
+        files = [f for f in files if f in admitted]
+        full = set(_full_match_files_where(man, preds))
+        conds.append(_match_expr(preds))
+    if not files:
+        return empty
+    # a file predating a layout evolution may hold rows outside the
+    # partition scope: only the residual scan can answer for it
+    full -= unenc
+    proven, rows_map = _agg_proven_sets(man, norm, ftypes, files, full)
+    if by is None:
+        # ungrouped COUNT(*) subtracts each file's live tombstones
+        # (``_live_row_total``), so DV'd files stay metadata-only
+        eq_aff = set(_eq_affected_files(man, files))
+        star = {f for f in files if f in full and f not in eq_aff}
+        proven = [
+            star if a == ("count", "*") else p
+            for a, p in zip(norm, proven)
+        ]
+
+    phys_by = [_phys(man, c) for c in by_cols]
+    decodable = all(
+        isinstance(ftypes[c], _dir_decode_types()) for c in by_cols
+    )
+    keyof: dict = {}  # metadata-answered file -> its group key
+    for f in files:
+        if any(f not in p for p in proven):
+            continue
+        if by is None:
+            keyof[f] = ()
             continue
         vals = _dir_values_cached(f)
-        if any(k not in vals for k in phys_by):
-            sset.add(f)  # layout evolved: group values are in-row
+        if (
+            not decodable
+            or f not in rows_map
+            or any(k not in vals for k in phys_by)  # value is in-row
+        ):
             continue
         try:
             # TYPED keys, decoded per the schema: directory strings
@@ -3437,104 +3188,50 @@ def snapshot_group_agg_where(
             # placed file) routes to the scan rather than erroring.
             keyof[f] = tuple(
                 _decode_partition_string(vals[k], ftypes[c])
-                for k, c in zip(phys_by, by)
+                for k, c in zip(phys_by, by_cols)
             )
         except (ValueError, ArithmeticError):
-            sset.add(f)
+            pass
 
     scan_rows: list = []
-    if sset:
-        df = _scan_live(spark, path, man, sorted(sset))
-        if preds is not None:
-            df = df.where(_match_expr(preds))
-        exprs = []
-        for k, (fl, col) in enumerate(norm):
-            arg = F.lit(1) if col == "*" else F.col(col)
-            exprs.append(getattr(F, fl)(arg).alias(f"_a{k}"))
-        scan_rows = df.groupBy(*[F.col(c) for c in by]).agg(
-            *exprs
-        ).collect()
+    scan = [f for f in files if f not in keyof]
+    if scan:
+        df = _scan_live(spark, path, man, scan)
+        for cond in conds:
+            df = df.where(cond)
+        exprs = [
+            getattr(F, fl)(F.lit(1) if col == "*" else F.col(col)).alias(
+                f"_a{k}"
+            )
+            for k, (fl, col) in enumerate(norm)
+        ]
+        scan_rows = (
+            df.groupBy(*[F.col(c) for c in by_cols]).agg(*exprs).collect()
+        )
 
     meta_by_key: dict = {}
     for f, key in keyof.items():
         meta_by_key.setdefault(key, []).append(f)
-    scan_by_key = {
-        tuple(r[c] for c in by): r for r in scan_rows
-    }
+    scan_by_key = {tuple(r[c] for c in by_cols): r for r in scan_rows}
+    keys = set(meta_by_key) | set(scan_by_key) if by is not None else [()]
     out: list = []
-    for key in set(meta_by_key) | set(scan_by_key):
+    for key in keys:
         meta = meta_by_key.get(key, [])
         srow = scan_by_key.get(key)
-        if srow is None and not any(rows_map[f] for f in meta):
+        if by is not None and srow is None and not any(
+            rows_map[f] for f in meta
+        ):
             continue  # zero live rows: SQL emits no such group
-        bvals = tuple(srow[c] for c in by) if srow is not None else key
-        avals = tuple(
-            _agg_combine_one(
-                fl,
-                col,
-                meta,
-                srow[f"_a{k}"] if srow is not None else None,
-                man,
-                ftypes,
-                rows_map,
-            )
-            for k, (fl, col) in enumerate(norm)
-        )
-        out.append(bvals + avals)
+        row = tuple(srow[c] for c in by_cols) if srow is not None else key
+        for k, (fl, col) in enumerate(norm):
+            sv = srow[f"_a{k}"] if srow is not None else None
+            if by is None and (fl, col) == ("count", "*"):
+                v = int(sv or 0) + _live_row_total(spark, path, man, meta)
+            else:
+                v = _agg_combine_one(fl, col, meta, sv, man, ftypes, rows_map)
+            row += (v,)
+        out.append(row)
     return out
-
-
-def snapshot_count_nonnull(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    version: int | None = None,
-    partitions: dict | None = None,
-) -> int:
-    """Exact ``COUNT(col)`` (non-null rows) — metadata-only wherever
-    provable: a file with a recorded row count, a recorded null count
-    for ``col`` (stats third element), and no outstanding tombstones
-    contributes ``rows - nulls`` without being opened; only the
-    uncovered remainder (legacy stats, missing counts, DV'd files) is
-    scanned, with tombstone masking applied. Completes the
-    metadata-aggregate family: COUNT(*) (``snapshot_count``), MIN/MAX
-    (``snapshot_minmax``), COUNT(col)."""
-    _, man = _manifest_at(spark, path, version)
-    residual = None
-    unenc: set = set()
-    if partitions:
-        # same layout-evolution recipe as snapshot_minmax: unmigrated
-        # files scan with the residual filter, the rest stay metadata
-        files, _ue = _partition_pruned_files(man, partitions, "split")
-        if _ue:
-            unenc = set(_ue)
-            residual = _partition_residual_cond(partitions)
-    else:
-        files = man["files"]
-    stats = man.get("stats") or {}
-    rows = man.get("rows") or {}
-    tgts = set(man.get("dv_targets") or ())
-    if man.get("dv_files") and man.get("dv_targets") is None:
-        tgts = set(files)  # legacy: unknown targets — assume any
-    eq_aff = set(_eq_affected_files(man, files))
-    pcol = _phys(man, col)  # stats are keyed by on-disk column names
-    cov = {
-        f
-        for f in files
-        if f in rows
-        and f not in tgts
-        and f not in eq_aff
-        and f not in unenc
-        and len(stats.get(f, {}).get(pcol) or ()) >= 3
-    }
-    total = sum(rows[f] - stats[f][pcol][2] for f in cov)
-    uncovered = [f for f in files if f not in cov]
-    if uncovered:
-        df = _scan_live(spark, path, man, uncovered)
-        if residual is not None:
-            df = df.where(residual)
-        total += df.agg(F.count(F.col(col)).alias("c")).first()["c"]
-    return total
 
 
 def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
@@ -4205,19 +3902,29 @@ def _rows_for_files(
     return {f: n for f, n in zip(files, counted) if n is not None}
 
 
-def _physical_row_total(
-    spark: SparkSession, root: str, man: dict, files: list[str]
+def _live_row_total(
+    spark: SparkSession, path: str, man: dict, files: list[str]
 ) -> int:
-    """Physical (pre-DV) row total of ``files`` — from the manifest's
+    """Live row total of ``files`` from metadata alone: the manifest's
     recorded per-file counts, footer-reading ONLY the gap (legacy
     history; fail-loud, a referenced file that cannot be opened is
-    corruption, never a silent under-count)."""
+    corruption, never a silent under-count), minus the tombstones
+    targeting them. Sidecars are read only when one of ``files`` is a
+    DV target (every file, for a legacy manifest with no recorded
+    targets)."""
+    root = _root(path)
     rows = man.get("rows") or {}
     total = sum(rows[f] for f in files if f in rows)
-    missing = [f for f in files if f not in rows]
-    if missing:
-        total += sum(_rows_for_files(spark, root, missing).values())
-    return total
+    total += _footer_row_total(
+        spark, root, [f for f in files if f not in rows]
+    )
+    tgts = man.get("dv_targets")
+    if tgts is not None:
+        tgts = set(tgts)
+        tomb = [f for f in files if f in tgts]
+    else:
+        tomb = files
+    return total - _dv_entry_count(spark, root, man.get("dv_files"), tomb)
 
 
 def _make_batch_sizer():
@@ -4318,7 +4025,7 @@ def _dv_entry_count(
     """Tombstones in ``dv_files`` that target one of ``files`` — the
     manifest-relpath semi-join ignores inert entries whose data file
     has since been rewritten away."""
-    if not dv_files:
+    if not dv_files or not files:
         return 0
     live = F.broadcast(
         spark.createDataFrame([(f,) for f in files], "_dv_file string")
@@ -4715,9 +4422,7 @@ def snapshot_compact(
     # DV-applied read, so the added side is live-only by construction
     # and the equality must compare like with like)
     rows_new = _rows_for_files(spark, root, files)
-    extra["rows_removed"] = _physical_row_total(
-        spark, root, man, victims
-    ) - _dv_entry_count(spark, root, man.get("dv_files"), victims)
+    extra["rows_removed"] = _live_row_total(spark, path, man, victims)
     extra["rows_added"] = sum(rows_new.values())
     defaults_after = _DV_INHERIT
     if not targeted:
@@ -4750,27 +4455,38 @@ def snapshot_compact(
     )
 
 
-def snapshot_merge_upsert(
+def snapshot_merge(
     spark: SparkSession,
     path: str,
     updates: DataFrame,
     keys: list[str],
     partition_cols: list[str],
     version_col: str | None = None,
+    mode: str = "rewrite",
 ) -> int:
     """Keyed MERGE producing a NEW VERSION — ``merge.py::merge_upsert``
     semantics (replace matched, insert unmatched; with ``version_col``,
     max-version-wins across target and updates so out-of-order CDC
     feeds converge and redelivery is a no-op) on a snapshot table:
     readers keep their version, the merge publishes the next one, and a
-    crash mid-merge leaves only an orphan commit dir.
-
-    Scale shape matches the in-place merge: the updates' distinct
-    partition keys (metadata-sized, broadcast) prune the target read to
-    touched partitions; untouched partitions carry over by reference in
-    the manifest — never read, never rewritten. Keys must be
+    crash mid-merge leaves only an orphan commit dir. Keys must be
     partition-stable, as in ``merge.py``.
+
+    - ``mode="rewrite"``: copy-on-write — the updates' distinct
+      partition keys (metadata-sized, broadcast) prune the target read
+      to touched partitions, which are rewritten whole
+      (``snapshot_replace_partitions``); untouched partitions carry
+      over by reference in the manifest — never read, never rewritten.
+    - ``mode="dv"``: merge-on-read (op ``merge_dv``) — see
+      ``_merge_dv``; write cost ∝ |updates| + |matched rows|, never
+      touched-partition bytes.
     """
+    if mode not in ("rewrite", "dv"):
+        raise ValueError(f"mode must be rewrite|dv; got {mode!r}")
+    if mode == "dv":
+        return _merge_dv(
+            spark, path, updates, keys, partition_cols, version_col
+        )
     from pyspark.sql.window import Window
 
     target = read_snapshot(spark, path)
@@ -4802,7 +4518,7 @@ def snapshot_merge_upsert(
     return snapshot_replace_partitions(merged, path, partition_cols)
 
 
-def snapshot_merge_upsert_dv(
+def _merge_dv(
     spark: SparkSession,
     path: str,
     updates: DataFrame,
@@ -4810,7 +4526,7 @@ def snapshot_merge_upsert_dv(
     partition_cols: list[str],
     version_col: str | None = None,
 ) -> int:
-    """``snapshot_merge_upsert`` semantics via deletion vectors: ONE
+    """``snapshot_merge`` semantics via deletion vectors: ONE
     commit tombstones the superseded target rows and appends only the
     surviving update images — write cost ∝ |updates| + |matched rows|,
     never touched-PARTITION bytes (the CoW merge rewrites every touched
@@ -4936,7 +4652,7 @@ def _stat_sum_norm(v):
     json encodes arbitrary precision exactly), floats stay floats,
     Decimal becomes its exact STRING — unlike the min/max endpoints
     (which only PRUNE, so outward float widening is safe), sums ANSWER
-    queries (``snapshot_agg_where``) and a float image would round."""
+    queries (``snapshot_agg``) and a float image would round."""
     import decimal
 
     if v is None or isinstance(v, (int, float)):
@@ -4965,7 +4681,7 @@ def collect_file_stats(
     rewriting it (see ``_full_match_files``).
 
     The SUM (fourth element, numeric columns only; same length-gated
-    compatibility) is what lets ``snapshot_agg_where`` answer
+    compatibility) is what lets ``snapshot_agg`` answer
     ``SUM(col) WHERE <pred>`` from metadata for files the predicate
     provably matches whole — recorded exactly (``_stat_sum_norm``),
     never widened."""
@@ -5114,11 +4830,7 @@ def _delete_rows_dv_where(
     victims = [f for f in victims if f not in fullset]
     drop_rows = 0
     if dropped:
-        drop_rows = _physical_row_total(
-            spark, _root(path), man, dropped
-        ) - _dv_entry_count(
-            spark, _root(path), man.get("dv_files"), dropped
-        )
+        drop_rows = _live_row_total(spark, path, man, dropped)
     dset = set(dropped)
     files_after = [f for f in man["files"] if f not in dset]
     stats_extra = (
@@ -5998,11 +5710,7 @@ def _rewrite_matching_files(
         if fullset:
             dropped = sorted(f for f in victims if f in fullset)
             victims = [f for f in victims if f not in fullset]
-            drop_rows = _physical_row_total(
-                spark, _root(path), man, dropped
-            ) - _dv_entry_count(
-                spark, _root(path), man.get("dv_files"), dropped
-            )
+            drop_rows = _live_row_total(spark, path, man, dropped)
     if not victims and not dropped:
         return latest, 0
     if victims:
@@ -6063,7 +5771,7 @@ def _check_update_targets(man: dict, set_values: dict) -> StructType:
     merge-on-read — one copy, so a validation fix can never apply to
     one physical path and not the other): ``set_values`` columns must
     exist, and partition columns refuse (rows would have to MOVE
-    directories; ``snapshot_merge_upsert`` handles key-preserving
+    directories; ``snapshot_merge`` handles key-preserving
     repartitioning updates). Returns the table schema."""
     schema = StructType.fromJson(man["schema"])
     fields = {f.name: f.dataType for f in schema.fields}
@@ -6076,7 +5784,7 @@ def _check_update_targets(man: dict, set_values: dict) -> StructType:
         raise ValueError(
             f"cannot update partition column(s) {sorted(touched_pc)} — "
             "rows would have to MOVE directories; use "
-            "snapshot_merge_upsert for key-preserving repartitioning "
+            "snapshot_merge for key-preserving repartitioning "
             "updates"
         )
     return schema
@@ -6537,12 +6245,9 @@ def _drop_partitions_once(
     matched = _partition_pruned_files(man, partitions)
     if not matched:
         return latest, 0
-    root = _root(path)
     dropped = set(matched)
     carried = [f for f in man["files"] if f not in dropped]
-    rows_deleted = _physical_row_total(
-        spark, root, man, matched
-    ) - _dv_entry_count(spark, root, man.get("dv_files"), matched)
+    rows_deleted = _live_row_total(spark, path, man, matched)
     dv_files: object = _DV_INHERIT
     dv_targets: object = _DV_INHERIT
     if man.get("dv_files") and man.get("dv_targets") is not None:

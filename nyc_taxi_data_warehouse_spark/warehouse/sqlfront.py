@@ -2237,22 +2237,14 @@ def _resolve_agg_specs(spark, path, aggs, version, gcols=None):
     path should fall through — unknown or case-ambiguous column, SUM
     over a non-numeric, a group column that isn't a partition column
     — so spark.sql reports (or resolves) it exactly as a passthrough
-    scan would."""
+    scan would. A table with no such version raises
+    ``FileNotFoundError`` (``_manifest_at``), which also falls
+    through."""
     from pyspark.sql.types import NumericType, StructType
 
-    from .snapshots import (
-        _list_manifests,
-        _load_manifest,
-        _manifest_partition_cols,
-        _phys,
-    )
+    from .snapshots import _manifest_at, _manifest_partition_cols, _phys
 
-    if version is None:
-        versions = _list_manifests(spark, path)
-        if not versions:
-            return None, None, version, None
-        version = versions[-1]
-    man = _load_manifest(spark, path, version)
+    version, man = _manifest_at(spark, path, version)
     by_lower: dict[str, list] = {}
     for fld in StructType.fromJson(man["schema"]).fields:
         by_lower.setdefault(fld.name.lower(), []).append(fld)
@@ -2290,8 +2282,8 @@ def _agg_out_field(func, raw, alias, dt):
     place encoding Spark's probed auto-alias (lowercase func over the
     arg text as written; COUNT(*)/COUNT(1) both render ``count(1)``),
     result types (count→bigint, sum→``_sum_result_type``), and
-    nullability (count non-null, the rest nullable) so the flat and
-    grouped executors cannot diverge."""
+    nullability (count non-null, the rest nullable), matching a
+    ``spark.sql`` passthrough of the same select item."""
     from pyspark.sql.types import LongType, StructField
 
     if func == "count":
@@ -2340,12 +2332,11 @@ def _try_select_fastpath(
 
     (t = a registered/durable-catalog snapshot name or a quoted table
     path; preds = the front door's plannable grammar) route to
-    ``snapshot_count_where`` / ``snapshot_agg_where`` /
-    ``read_snapshot(where=)``: a COUNT or MIN/MAX/SUM under a retention
-    cutoff answers from manifest stats opening only boundary files,
-    and a predicate read opens only the files whose stats admit a
-    match — the analyst typing SQL gets the engine's
-    best read plan, not a full-view scan. Anything else returns None
+    ``snapshot_agg`` / ``read_snapshot(where=)``: a COUNT or
+    MIN/MAX/SUM under a retention cutoff answers from manifest stats
+    opening only boundary files, and a predicate read opens only the
+    files whose stats admit a match — the analyst typing SQL gets the
+    engine's best read plan, not a full-view scan. Anything else returns None
     and passes through to ``spark.sql`` untouched (CTEs, joins,
     aggregations, expressions, unresolvable names — reads always have
     the safe fallback, so unlike DML nothing refuses here).
@@ -2362,18 +2353,11 @@ def _try_select_fastpath(
       analysis-failure retry gives);
     - partition-scoped registrations fall through (the fast path does
       not model a file-subset view)."""
-    from .snapshots import (
-        read_snapshot,
-        snapshot_count,
-        snapshot_count_where,
-        snapshot_version_at,
-    )
+    from .snapshots import _agg_at, read_snapshot, snapshot_version_at
 
     try:
         p = _Parser(statement)
         p.expect_kw("SELECT")
-        is_count = False
-        count_alias = None
         cols: list[str] | None = None
         items: list[tuple] | None = None
         if p.punct("*"):
@@ -2472,7 +2456,7 @@ def _try_select_fastpath(
         ):
             # GROUP BY without aggregates (or with *): passthrough
             return None
-        agg_specs = agg_man = group_plan = None
+        agg_man = agg_plan = None
         if items is not None:
             for it in items:
                 if it[0] == "agg":
@@ -2483,59 +2467,33 @@ def _try_select_fastpath(
                         return None
                 elif "." in it[1]:
                     return None
-            agg_items = [it for it in items if it[0] == "agg"]
-            if gcols is None:
-                if any(it[0] == "col" for it in items):
-                    return None  # bare col without GROUP BY: invalid
-                aggs = [(f, a, al) for _k, f, a, al in agg_items]
-                if (
-                    len(aggs) == 1
-                    and aggs[0][0] == "count"
-                    and aggs[0][1] == "*"
-                ):
-                    # the lone COUNT(*) keeps its dedicated row-count
-                    # path (manifest row sums, no full-match proof)
-                    is_count = True
-                    count_alias = aggs[0][2]
-                    if count_alias is not None and "." in count_alias:
+            if gcols is None and any(it[0] == "col" for it in items):
+                return None  # bare col without GROUP BY: invalid
+            agg_specs, gspecs, version, agg_man = _resolve_agg_specs(
+                spark,
+                path,
+                [it[1:] for it in items if it[0] == "agg"],
+                version,
+                gcols=gcols,
+            )
+            if agg_specs is None:
+                return None
+            # each bare select column must BE a group column
+            # (case-insensitively); anything else is invalid SQL
+            # that passthrough reports properly
+            gidx = {c.lower(): i for i, (c, _dt) in enumerate(gspecs or ())}
+            plan = []
+            ai = 0
+            for it in items:
+                if it[0] == "col":
+                    i = gidx.get(it[1].lower())
+                    if i is None:
                         return None
+                    plan.append(("g", i, it[1]))
                 else:
-                    agg_specs, _g, version, agg_man = (
-                        _resolve_agg_specs(
-                            spark, path, aggs, version
-                        )
-                    )
-                    if agg_specs is None:
-                        return None
-            else:
-                agg_specs, gspecs, version, agg_man = (
-                    _resolve_agg_specs(
-                        spark,
-                        path,
-                        [(f, a, al) for _k, f, a, al in agg_items],
-                        version,
-                        gcols=gcols,
-                    )
-                )
-                if agg_specs is None:
-                    return None
-                # each bare select column must BE a group column
-                # (case-insensitively); anything else is invalid SQL
-                # that passthrough reports properly
-                gidx = {c.lower(): i for i, (c, _dt) in enumerate(gspecs)}
-                plan = []
-                ai = 0
-                for it in items:
-                    if it[0] == "col":
-                        i = gidx.get(it[1].lower())
-                        if i is None:
-                            return None
-                        plan.append(("g", i, it[1]))
-                    else:
-                        plan.append(("a", ai))
-                        ai += 1
-                group_plan = (plan, gspecs, agg_specs)
-                agg_specs = None  # grouped executes its own branch
+                    plan.append(("a", ai))
+                    ai += 1
+            agg_plan = (plan, gspecs, agg_specs)
     except ValueError:
         # SqlFrontError (unsupported shape/predicate) and the planner
         # value-type refusals (e.g. a bool range bound) alike: reads
@@ -2546,25 +2504,19 @@ def _try_select_fastpath(
     # shape recognized and target resolved — execute without catching:
     # from here an error is a real error, identical in kind to what
     # the passthrough scan would raise (missing column, bad path)
-    if group_plan is not None:
+    if agg_plan is not None:
         from pyspark.sql.types import StructField, StructType
 
-        from .snapshots import snapshot_group_agg_where
-
-        plan, gspecs, gaggs = group_plan
-        if preds == []:
-            rows = []  # provably-matches-nothing WHERE: no groups
-        else:
-            rows = snapshot_group_agg_where(
-                spark,
-                path,
-                [c for c, _dt in gspecs],
-                [(f, c) for f, c, _raw, _al, _dt in gaggs],
-                preds,
-                version=version,
-                _man=agg_man,
-            )
-        nby = len(gspecs)
+        plan, gspecs, specs = agg_plan
+        rows = _agg_at(
+            spark,
+            path,
+            agg_man,
+            [(f, c) for f, c, _raw, _al, _dt in specs],
+            by=None if gspecs is None else [c for c, _dt in gspecs],
+            where=preds,
+        )
+        nby = len(gspecs or ())
         fields = []
         for step in plan:
             if step[0] == "g":
@@ -2575,7 +2527,7 @@ def _try_select_fastpath(
                     StructField(step[2], gspecs[step[1]][1], True)
                 )
             else:
-                f, _c, raw, alias, dt = gaggs[step[1]]
+                f, _c, raw, alias, dt = specs[step[1]]
                 fields.append(_agg_out_field(f, raw, alias, dt))
         data = [
             tuple(
@@ -2585,46 +2537,6 @@ def _try_select_fastpath(
             for r in rows
         ]
         out = spark.createDataFrame(data, StructType(fields))
-        return out.limit(limit) if limit is not None else out
-    if agg_specs is not None:
-        from pyspark.sql.types import StructType
-
-        from .snapshots import snapshot_agg_where
-
-        if preds == []:
-            # provably-matches-nothing WHERE (e.g. an emptied IN
-            # list): SQL empty-group semantics without a planner call
-            vals = [
-                0 if f == "count" else None
-                for f, _c, _raw, _al, _dt in agg_specs
-            ]
-        else:
-            vals = snapshot_agg_where(
-                spark,
-                path,
-                [(f, c) for f, c, _raw, _al, _dt in agg_specs],
-                preds,
-                version=version,
-                _man=agg_man,
-            )
-        fields = [
-            _agg_out_field(f, raw, alias, dt)
-            for f, _c, raw, alias, dt in agg_specs
-        ]
-        out = spark.createDataFrame(
-            [tuple(vals)], StructType(fields)
-        )
-        return out.limit(limit) if limit is not None else out
-    if is_count:
-        if preds is None:
-            n = snapshot_count(spark, path, version=version)
-        elif preds == []:
-            n = 0
-        else:
-            n = snapshot_count_where(spark, path, preds, version=version)
-        out = _one_row(spark, "c bigint", (n,)).toDF(
-            count_alias or "count(1)"
-        )
         return out.limit(limit) if limit is not None else out
     if preds == []:
         df = read_snapshot(spark, path, version=version).limit(0)

@@ -24,12 +24,11 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _load_manifest,
     read_snapshot,
     snapshot_add_column,
+    snapshot_agg,
     snapshot_changes,
     snapshot_compact,
-    snapshot_count_nonnull,
     snapshot_delete,
     snapshot_drop_column,
-    snapshot_minmax,
     snapshot_rename_column,
     snapshot_write,
 )
@@ -119,8 +118,10 @@ def test_default_in_metadata_aggregates_and_feed(spark, tmp_path):
         mode="append",
     )
     # pre-add rows contribute the DEFAULT to min/max and count(col)
-    assert snapshot_minmax(spark, t, "score") == (5, 100)
-    assert snapshot_count_nonnull(spark, t, "score") == 3
+    assert snapshot_agg(
+        spark, t, [("min", "score"), ("max", "score")]
+    )[0] == (5, 100)
+    assert snapshot_agg(spark, t, [("count", "score")])[0][0] == 3
 
     # the change feed EMITS the add's retroactive change (delete of
     # the NULL image + insert of the defaulted image) — add-with-
@@ -275,9 +276,7 @@ def test_count_matches_read_under_defaulted_eq_key(spark, tmp_path):
     """Review finding: the COUNT path's eq-affected scan must fill
     defaults like every other read — an eq delete keyed on a defaulted
     column masks pre-add rows everywhere or nowhere."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_count,
-    )
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import snapshot_agg
 
     t = str(tmp_path / "t")
     snapshot_write(
@@ -288,7 +287,7 @@ def test_count_matches_read_under_defaulted_eq_key(spark, tmp_path):
         spark, t, spark.createDataFrame([(5,)], "grp int")
     )
     assert read_snapshot(spark, t).count() == 0
-    assert snapshot_count(spark, t) == 0
+    assert snapshot_agg(spark, t, [("count", "*")])[0][0] == 0
 
 
 def test_feed_and_stream_fill_history_below_materializing_compact(

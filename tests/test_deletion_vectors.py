@@ -463,7 +463,7 @@ def test_compact_dvs_consolidates_sidecars(spark, table, tmp_path):
 
 @pytest.mark.slowproof
 def test_merge_dv_equals_cow_merge(spark, tmp_path):
-    """snapshot_merge_upsert_dv ≡ the CoW merge, both flavors:
+    """snapshot_merge(mode="dv") ≡ the CoW merge, both flavors:
     plain replace-matched/insert-unmatched, and version_col
     max-version-wins (older redelivered updates lose; duplicate keys
     collapse to the winner). Unmatched target files are carried, only
@@ -471,8 +471,7 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
-        snapshot_merge_upsert,
-        snapshot_merge_upsert_dv,
+        snapshot_merge,
     )
 
     def mk(rows):
@@ -495,12 +494,10 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
         snapshot_delete(spark, t, {"id": [9]}, mode="dv")  # pre-existing DV
 
     # ---- version_col flavor
-    va = snapshot_merge_upsert_dv(
-        spark, a, mk(upd), ["id"], ["month"], version_col="ver"
+    va = snapshot_merge(
+        spark, a, mk(upd), ["id"], ["month"], version_col="ver", mode="dv"
     )
-    snapshot_merge_upsert(
-        spark, b, mk(upd), ["id"], ["month"], version_col="ver"
-    )
+    snapshot_merge(spark, b, mk(upd), ["id"], ["month"], version_col="ver")
     bag = lambda t: sorted(  # noqa: E731
         (r.id, r.month, r.v, r.ver)
         for r in read_snapshot(spark, t).collect()
@@ -511,8 +508,8 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
     man = _load_manifest(spark, a, va)
     assert man["dv_rows_added"] == 1  # only id 3's old image tombstoned
     # redelivery is a no-op on CONTENT (rows identical after re-merge)
-    snapshot_merge_upsert_dv(
-        spark, a, mk(upd), ["id"], ["month"], version_col="ver"
+    snapshot_merge(
+        spark, a, mk(upd), ["id"], ["month"], version_col="ver", mode="dv"
     )
     assert bag(a) == bag(b)
 
@@ -522,8 +519,8 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
     for t in (c, d):
         snapshot_write(mk(base), t, partition_cols=["month"])
     upd2 = [(0, 0, "u0", 9), (200, 2, "u200", 9)]
-    snapshot_merge_upsert_dv(spark, c, mk(upd2), ["id"], ["month"])
-    snapshot_merge_upsert(spark, d, mk(upd2), ["id"], ["month"])
+    snapshot_merge(spark, c, mk(upd2), ["id"], ["month"], mode="dv")
+    snapshot_merge(spark, d, mk(upd2), ["id"], ["month"])
     assert bag(c) == bag(d)
     # DV merge carried every original data file by reference
     man_c = _load_manifest(spark, c, _list_manifests(spark, c)[-1])

@@ -31,7 +31,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _list_manifests,
     _load_manifest,
     read_snapshot,
-    snapshot_count_where,
+    snapshot_agg,
     snapshot_delete,
     snapshot_register,
     snapshot_update,
@@ -112,7 +112,9 @@ def test_dnf_overlapping_branches_count_once(spark, tmp_path):
     t = str(tmp_path / "dnf_overlap")
     _mk_ts_table(spark, t)
     dnf = [{"id": Range(hi=6)}, {"id": Range(lo=2, hi=9)}]
-    assert snapshot_count_where(spark, t, dnf) == 10  # ids 0..9
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where=dnf
+    )[0][0] == 10  # ids 0..9
     got = sorted(
         r.id for r in read_snapshot(spark, t, where=dnf).collect()
     )

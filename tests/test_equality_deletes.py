@@ -28,10 +28,8 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
     Range,
     snapshot_changes,
-    snapshot_count,
-    snapshot_count_nonnull,
+    snapshot_agg,
     snapshot_files,
-    snapshot_minmax,
     snapshot_resolve_eq,
     snapshot_versions,
     snapshot_write,
@@ -98,12 +96,16 @@ def test_upsert_and_delete_keys_end_to_end(spark, table):
     assert not [t for t in bag if t[0] == 2 and t[2] == "v2"]
     assert len(bag) == 13
     # exact aggregates with the entry outstanding
-    assert snapshot_count(spark, table) == 13
-    assert snapshot_count(spark, table, partitions={"month": 2}) == len(
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 13
+    assert snapshot_agg(
+        spark, table, [("count", "*")], partitions={"month": 2}
+    )[0][0] == len(
         [t for t in bag if t[1] == 2]
     )
-    assert snapshot_minmax(spark, table, "id") == (0, 100)
-    assert snapshot_count_nonnull(spark, table, "id") == 13
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")]
+    )[0] == (0, 100)
+    assert snapshot_agg(spark, table, [("count", "id")])[0][0] == 13
     # pruned read masked too
     pruned = read_snapshot(spark, table, where={"id": Range(0, 10)})
     assert not [r for r in pruned.collect() if r.id == 2 and r.v == "v2"]
@@ -115,7 +117,7 @@ def test_upsert_and_delete_keys_end_to_end(spark, table):
     bag2 = _bag(read_snapshot(spark, table))
     assert len(bag2) == 11
     assert not [t for t in bag2 if t[0] in (5, 100)]
-    assert snapshot_count(spark, table) == 11
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 11
     # time travel below the delete still shows the rows
     assert len(_bag(read_snapshot(spark, table, version=v))) == 13
     # metadata tables surface the eq state
@@ -203,7 +205,7 @@ def test_upsert_is_o_batch_and_masks_follow_sequence(spark, table):
     )
     nine = [r for r in read_snapshot(spark, table).collect() if r.id == 9]
     assert [(r.id, r.v) for r in nine] == [(9, "NEWER")]
-    assert snapshot_count(spark, table) == 2000
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 2000
 
 
 @pytest.mark.slowproof
@@ -228,8 +230,8 @@ def test_resolve_eq_equivalence_idempotence_and_gc(spark, table):
         spark, table, spark.createDataFrame([(8,), (9,)], "id long")
     )
     before = _bag(read_snapshot(spark, table))
-    count_before = snapshot_count(spark, table)
-    mm_before = snapshot_minmax(spark, table, "id")
+    count_before = snapshot_agg(spark, table, [("count", "*")])[0][0]
+    mm_before = snapshot_agg(spark, table, [("min", "id"), ("max", "id")])[0]
     man = _head(spark, table)
     eq_paths = [e["path"] for e in man["eqs"]]
     v, n = snapshot_resolve_eq(spark, table)
@@ -239,8 +241,10 @@ def test_resolve_eq_equivalence_idempotence_and_gc(spark, table):
     assert not man.get("eqs")
     assert man.get("dv_files")
     assert _bag(read_snapshot(spark, table)) == before
-    assert snapshot_count(spark, table) == count_before
-    assert snapshot_minmax(spark, table, "id") == mm_before
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == count_before
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")]
+    )[0] == mm_before
     assert _bag(read_snapshot(spark, table, version=v - 1)) == before
     # idempotent
     v2, n2 = snapshot_resolve_eq(spark, table)
@@ -729,7 +733,7 @@ def test_null_casting_keys_refuse(spark, table):
             )
     finally:
         spark.conf.set("spark.sql.ansi.enabled", ansi)
-    assert snapshot_count(spark, table) == 1
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 1
 
 
 @pytest.mark.slowproof
@@ -859,7 +863,7 @@ def test_concurrent_upserters_all_land_exactly_once(spark, table):
     assert sorted(versions) == list(range(2, 8))  # distinct, gapless
     got = sorted((r.id, r.v) for r in read_snapshot(spark, table).collect())
     assert got == [(i, f"up{i}") for i in range(6)]
-    assert snapshot_count(spark, table) == 6
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 6
     man = _head(spark, table)
     assert len(man["eqs"]) == 6
     # and the fold agrees

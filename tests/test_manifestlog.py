@@ -717,15 +717,15 @@ def test_auto_compact_cadence_gate(spark, table, monkeypatch):
 def test_snapshot_count_metadata_only_across_dml_storm(
     spark, table, ckpt3
 ):
-    """snapshot_count == read_snapshot().count() at EVERY version of a
-    history spanning append / DV delete / DV update / CoW delete /
-    compact / restore — while the manifest rows map stays O(change)
+    """snapshot_agg COUNT(*) == read_snapshot().count() at EVERY
+    version of a history spanning append / DV delete / DV update /
+    CoW delete / compact / restore — while the manifest rows map stays O(change)
     per commit (an append's delta carries counts only for its new
     files) and the count itself never opens a data page beyond the
     tombstone sidecars."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_agg,
         snapshot_compact,
-        snapshot_count,
         snapshot_update,
     )
 
@@ -743,8 +743,9 @@ def test_snapshot_count_metadata_only_across_dml_storm(
     snapshot_compact(spark, table, target_mb=1)
     snapshot_restore(spark, table, 3)
     for v in _list_manifests(spark, table):
-        assert snapshot_count(spark, table, version=v) \
-            == read_snapshot(spark, table, version=v).count(), v
+        assert snapshot_agg(
+            spark, table, [("count", "*")], version=v
+        )[0][0] == read_snapshot(spark, table, version=v).count(), v
     # the delta doc of the append carries counts ONLY for its new files
     doc2 = _read_doc(spark, table, 2)
     assert set(doc2["rows_put"]) == set(doc2["files_add"])
@@ -758,9 +759,13 @@ def test_snapshot_count_metadata_only_across_dml_storm(
 
     fr = snapshot_files(spark, table).collect()
     assert all(r.rows is not None and r.rows > 0 for r in fr)
-    assert sum(r.rows for r in fr) >= snapshot_count(spark, table)
+    assert sum(r.rows for r in fr) >= snapshot_agg(
+        spark, table, [("count", "*")]
+    )[0][0]
     with pytest.raises(ValueError):
-        snapshot_count(spark, table, version=1, at_timestamp=0)
+        snapshot_agg(
+            spark, table, [("count", "*")], version=1, at_timestamp=0
+        )
 
 
 def test_snapshot_count_self_heals_legacy_and_fails_loud(
@@ -769,9 +774,7 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
     """A legacy manifest (no rows map) counts by reading ONLY the
     missing footers; a manifest-referenced file that cannot be opened
     raises instead of under-counting."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_count,
-    )
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import snapshot_agg
 
     snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(6)]),
@@ -790,7 +793,9 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
         os.remove(blob)
     _hand_write(table, 1, legacy)
     assert "rows" not in _load_manifest(spark, table, 1)
-    assert snapshot_count(spark, table) == 6  # footer self-heal
+    assert snapshot_agg(
+        spark, table, [("count", "*")]
+    )[0][0] == 6  # footer self-heal
     # the next commit records counts for ITS files only (legacy gap
     # stays a gap — strictly O(change) commits, no backfill storm)
     snapshot_write(
@@ -799,7 +804,7 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
     )
     doc2 = _read_doc(spark, table, 2)
     assert set(doc2["rows_put"]) == set(doc2["files_add"])
-    assert snapshot_count(spark, table) == 7
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 7
     # fail-loud: a referenced file with neither a recorded count nor a
     # readable footer is corruption, never a silent under-count
     legacy_bad = dict(legacy)
@@ -809,7 +814,7 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
 
     sn._STATE_CACHE._d.clear()
     with pytest.raises(FileNotFoundError):
-        snapshot_count(spark, table, version=1)
+        snapshot_agg(spark, table, [("count", "*")], version=1)
 
 
 # ---------------------------------------------------------------------------

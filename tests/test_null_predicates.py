@@ -36,7 +36,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _victims_by_stats_where,
     read_snapshot,
     snapshot_add_column,
-    snapshot_count_where,
+    snapshot_agg,
     snapshot_delete,
     snapshot_register,
     snapshot_update,
@@ -81,8 +81,12 @@ def test_planner_sets(spark, tmp_path):
 def test_counts_and_reads(spark, tmp_path):
     t = str(tmp_path / "np_counts")
     _mk(spark, t)
-    assert snapshot_count_where(spark, t, {"email": IS_NULL}) == 4
-    assert snapshot_count_where(spark, t, {"email": IS_NOT_NULL}) == 6
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"email": IS_NULL}
+    )[0][0] == 4
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"email": IS_NOT_NULL}
+    )[0][0] == 6
     got = sorted(
         r.id
         for r in read_snapshot(spark, t, where={"email": IS_NULL}).collect()
@@ -90,10 +94,10 @@ def test_counts_and_reads(spark, tmp_path):
     assert got == [4, 6, 8, 9]
     # conjunction with a range
     assert (
-        snapshot_count_where(
-            spark, t,
-            [{"email": IS_NULL}, {"id": [0]}],
-        )
+        snapshot_agg(
+            spark, t, [("count", "*")],
+            where=[{"email": IS_NULL}, {"id": [0]}],
+        )[0][0]
         == 5
     )
 
@@ -171,7 +175,9 @@ def test_partition_column_null_test_is_exact(spark, tmp_path):
         [(1, "a"), (2, None), (3, "b"), (4, None)], "id int, p string"
     )
     snapshot_write(df, t, partition_cols=["p"])
-    assert snapshot_count_where(spark, t, {"p": IS_NULL}) == 2
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"p": IS_NULL}
+    )[0][0] == 2
     v, n = snapshot_delete(spark, t, {"p": IS_NULL})
     assert n == 2
     assert sorted(r.id for r in read_snapshot(spark, t).collect()) == [
@@ -189,8 +195,12 @@ def test_initial_default_column(spark, tmp_path):
     )
     snapshot_add_column(spark, t, "tier", "string", default="basic")
     snapshot_add_column(spark, t, "note", "string")
-    assert snapshot_count_where(spark, t, {"tier": IS_NULL}) == 0
-    assert snapshot_count_where(spark, t, {"note": IS_NULL}) == 2
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"tier": IS_NULL}
+    )[0][0] == 0
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"note": IS_NULL}
+    )[0][0] == 2
     v, n = snapshot_delete(spark, t, {"tier": IS_NULL})
     assert n == 0
     assert read_snapshot(spark, t).count() == 2

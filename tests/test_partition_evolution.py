@@ -22,9 +22,9 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
     Range,
     snapshot_add_column,
+    snapshot_agg,
     snapshot_changes,
     snapshot_compact,
-    snapshot_count,
     snapshot_delete,
     snapshot_drop_partitions,
     snapshot_history,
@@ -110,9 +110,13 @@ def test_mixed_reads_and_scoped_reads_exact(spark, tmp_path):
         r for r in allrows if r[1] in (1, 2)
     ]
     # counts: scoped is exact across the mix, unscoped metadata-only
-    assert snapshot_count(spark, t) == len(allrows)
-    assert snapshot_count(spark, t, partitions={"month": 0}) == 4
-    assert snapshot_count(spark, t, partitions={"month": 2}) == 1
+    assert snapshot_agg(spark, t, [("count", "*")])[0][0] == len(allrows)
+    assert snapshot_agg(
+        spark, t, [("count", "*")], partitions={"month": 0}
+    )[0][0] == 4
+    assert snapshot_agg(
+        spark, t, [("count", "*")], partitions={"month": 2}
+    )[0][0] == 1
     # stats+partition composed pruned read stays exact
     pr = read_snapshot(
         spark, t, partitions={"month": 0}, where={"id": Range(4, 9)},
@@ -308,7 +312,9 @@ def test_residual_empty_value_list_matches_nothing(spark, tmp_path):
     constraint."""
     t = _mixed(spark, tmp_path, "emptyvals")
     assert read_snapshot(spark, t, partitions={"month": []}).count() == 0
-    assert snapshot_count(spark, t, partitions={"month": []}) == 0
+    assert snapshot_agg(
+        spark, t, [("count", "*")], partitions={"month": []}
+    )[0][0] == 0
 
 
 def test_scoped_minmax_count_nonnull_exact_across_mix(spark, tmp_path):
@@ -316,25 +322,26 @@ def test_scoped_minmax_count_nonnull_exact_across_mix(spark, tmp_path):
     not just COUNT(*) — must stay exact on scoped queries over mixed
     layouts (unmigrated files scan with the residual; their global
     stats must never answer a scoped aggregate)."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_count_nonnull,
-        snapshot_minmax,
-    )
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import snapshot_agg
 
     t = _mixed(spark, tmp_path, "aggmix")
     # month=0 rows: ids 1,2 (layout A), 5 (layout B, stored as data),
     # 7 (layout C) — the B file also holds id 6 (month=2), whose
     # global min/max must NOT leak into the scoped answer
-    lo, hi = snapshot_minmax(spark, t, "id", partitions={"month": 0})
+    lo, hi = snapshot_agg(
+        spark, t, [("min", "id"), ("max", "id")], partitions={"month": 0}
+    )[0]
     assert (float(lo), float(hi)) == (1.0, 7.0)
-    lo, hi = snapshot_minmax(spark, t, "id", partitions={"month": 2})
+    lo, hi = snapshot_agg(
+        spark, t, [("min", "id"), ("max", "id")], partitions={"month": 2}
+    )[0]
     assert (float(lo), float(hi)) == (6.0, 6.0)
-    assert snapshot_count_nonnull(
-        spark, t, "v", partitions={"month": 0}
-    ) == 4
-    assert snapshot_count_nonnull(
-        spark, t, "v", partitions={"month": 2}
-    ) == 1
+    assert snapshot_agg(
+        spark, t, [("count", "v")], partitions={"month": 0}
+    )[0][0] == 4
+    assert snapshot_agg(
+        spark, t, [("count", "v")], partitions={"month": 2}
+    )[0][0] == 1
 
 
 def test_cli_set_layout_refuses_stray_default(spark, tmp_path):
@@ -376,7 +383,9 @@ def test_snapshot_partitions_metadata_table(spark, tmp_path, capsys):
     assert rows[("1", True)][1] == 2
     assert rows[(None, False)][1] == 2
     # totals agree with the exact count
-    assert sum(v[1] for v in rows.values()) == snapshot_count(spark, t)
+    assert sum(v[1] for v in rows.values()) == snapshot_agg(
+        spark, t, [("count", "*")]
+    )[0][0]
     # after compact everything encodes
     snapshot_compact(spark, t)
     rows = {

@@ -563,28 +563,36 @@ def test_count_where_scans_only_boundary_files(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(S, "_read_file_list", spy)
     # boundary lands in file1: file0 proven, file2 excluded
-    n = S.snapshot_count_where(
-        spark, t, {"ts": Range(hi="2024-01-06", hi_inc=False)}
-    )
+    n = S.snapshot_agg(
+        spark, t,
+        [("count", "*")],
+        where={"ts": Range(hi="2024-01-06", hi_inc=False)},
+    )[0][0]
     assert n == 5
     assert len(calls) == 1 and len(calls[0]) == 1
     # fully excluded: zero files opened
     calls.clear()
-    assert S.snapshot_count_where(
-        spark, t, {"ts": Range(lo="2030-01-01")}
-    ) == 0
+    assert S.snapshot_agg(
+        spark, t, [("count", "*")], where={"ts": Range(lo="2030-01-01")}
+    )[0][0] == 0
     assert calls == []
     # fully proven: zero files opened
     calls.clear()
-    assert S.snapshot_count_where(spark, t, {"id": Range(lo=0, hi=11)}) == 12
+    assert S.snapshot_agg(
+        spark, t, [("count", "*")], where={"id": Range(lo=0, hi=11)}
+    )[0][0] == 12
     assert calls == []
     # IN predicates plan through the same machinery
     calls.clear()
-    assert S.snapshot_count_where(spark, t, {"id": [5, 6, 99]}) == 2
+    assert S.snapshot_agg(
+        spark, t, [("count", "*")], where={"id": [5, 6, 99]}
+    )[0][0] == 2
     assert len(calls) == 1 and len(calls[0]) == 1
     # empty range short-circuits
     calls.clear()
-    assert S.snapshot_count_where(spark, t, {"id": Range(lo=9, hi=3)}) == 0
+    assert S.snapshot_agg(
+        spark, t, [("count", "*")], where={"id": Range(lo=9, hi=3)}
+    )[0][0] == 0
     assert calls == []
 
 
@@ -609,7 +617,9 @@ def test_count_where_partition_dirs_prove_without_scanning(
     monkeypatch.setattr(S, "_read_file_list", spy)
     # typed dir compare: month <= 9 must not sweep 10..12, and the
     # directory IS the proof — zero files opened
-    assert S.snapshot_count_where(spark, t, {"month": Range(hi=9)}) == 18
+    assert S.snapshot_agg(
+        spark, t, [("count", "*")], where={"month": Range(hi=9)}
+    )[0][0] == 18
     assert calls == []
 
 
@@ -617,23 +627,27 @@ def test_count_where_exact_under_dv_and_eq_deletes(spark, tmp_path):
     from nyc_taxi_data_warehouse_spark.warehouse.eqdeletes import (
         snapshot_delete_keys,
     )
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_count_where,
-    )
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import snapshot_agg
 
     t = str(tmp_path / "cntdv")
     _mk_ts_table(spark, t)
     # DV-tombstone a row inside the PROVEN file: recorded count minus
     # tombstones stays exact without opening the file
     snapshot_delete(spark, t, {"id": [1]}, mode="dv")
-    assert snapshot_count_where(spark, t, {"id": Range(lo=0, hi=3)}) == 3
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"id": Range(lo=0, hi=3)}
+    )[0][0] == 3
     # an outstanding equality delete makes the affected file
     # unprovable from metadata — it scans, and the count stays exact
     snapshot_delete_keys(
         spark, t, spark.createDataFrame([(9,)], "id int")
     )
-    assert snapshot_count_where(spark, t, {"id": Range(lo=8, hi=11)}) == 3
-    assert snapshot_count_where(spark, t, {"id": Range(lo=0, hi=3)}) == 3
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"id": Range(lo=8, hi=11)}
+    )[0][0] == 3
+    assert snapshot_agg(
+        spark, t, [("count", "*")], where={"id": Range(lo=0, hi=3)}
+    )[0][0] == 3
 
 
 def test_count_where_cli(spark, tmp_path, capsys):

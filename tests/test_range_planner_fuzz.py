@@ -14,7 +14,7 @@ without separators, fractional-second timestamps, Decimals at float
 rounding edges, reversed/empty/half-open ranges, NULL-heavy files),
 random IN lists, null tests, and one-level DNF disjunctions, asserting
 
-- ``snapshot_count_where``  ≡ full-scan ``where(match).count()``;
+- ``snapshot_agg`` COUNT(*) ≡ full-scan ``where(match).count()``;
 - ``read_snapshot(where=)`` ≡ full-scan ``where(match)`` row sets;
 - ``snapshot_delete`` (both strategies) leaves exactly the
   full-scan survivor set;
@@ -41,7 +41,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _match_expr,
     _sanitize_predicates,
     read_snapshot,
-    snapshot_count_where,
+    snapshot_agg,
     snapshot_delete,
     snapshot_update,
     snapshot_write_with_stats,
@@ -204,12 +204,16 @@ def test_count_and_read_match_full_scan(spark, tmp_path, seed):
         preds = _rand_preds(rng)
         sp = _sanitize_predicates(preds)
         if not sp:
-            assert snapshot_count_where(spark, t, preds) == 0
+            assert snapshot_agg(
+                spark, t, [("count", "*")], where=preds
+            )[0][0] == 0
             assert read_snapshot(spark, t, where=preds).count() == 0
             continue
         oracle = full.where(_match_expr(sp))
         n = oracle.count()
-        assert snapshot_count_where(spark, t, preds) == n, (
+        assert snapshot_agg(
+            spark, t, [("count", "*")], where=preds
+        )[0][0] == n, (
             f"seed={seed} trial={trial} preds={preds!r}"
         )
         got = read_snapshot(spark, t, where=preds)

@@ -35,12 +35,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_add_constraint,
     snapshot_changes,
     snapshot_compact,
-    snapshot_count,
-    snapshot_count_nonnull,
+    snapshot_agg,
     snapshot_delete,
     snapshot_drop_column,
     snapshot_files,
-    snapshot_minmax,
     snapshot_rename_column,
     snapshot_restore,
     snapshot_update,
@@ -175,13 +173,15 @@ def test_stats_pruning_and_dml_through_rename(spark, tmp_path):
     )
 
     # metadata aggregates by the new names
-    assert snapshot_minmax(spark, t, "amount") == (0, 390)
-    assert snapshot_count_nonnull(spark, t, "amount") == 40
+    assert snapshot_agg(
+        spark, t, [("min", "amount"), ("max", "amount")]
+    )[0] == (0, 390)
+    assert snapshot_agg(spark, t, [("count", "amount")])[0][0] == 40
 
     # copy-on-write delete by the new name (stats-planned victims)
     v, n = snapshot_delete(spark, t, {"shard": [3]}, mode="rewrite")
     assert n == 10
-    assert snapshot_count(spark, t) == 30
+    assert snapshot_agg(spark, t, [("count", "*")])[0][0] == 30
     assert _bag(
         read_snapshot(spark, t).where("shard = 3"), "id"
     ) == []
@@ -191,7 +191,7 @@ def test_stats_pruning_and_dml_through_rename(spark, tmp_path):
     assert n == 10
     got = read_snapshot(spark, t).where("shard = 2")
     assert all(r["amount"] == 0 for r in got.collect())
-    assert snapshot_count(spark, t) == 30
+    assert snapshot_agg(spark, t, [("count", "*")])[0][0] == 30
 
 
 def test_change_feed_presents_target_names_across_rename(spark, tmp_path):
@@ -434,8 +434,7 @@ def test_commit_pairs_schema_with_captured_colmap_under_rename_race(
 
     monkeypatch.setattr(E, "_epoch_already_applied", racing)
     v, n = snapshot_append_upsert(
-        spark,
-        t,
+        spark, t,
         spark.createDataFrame(
             [(1, 0, "UP")], "id long, month int, val string"
         ),

@@ -461,9 +461,9 @@ def test_partition_pruned_reads_from_manifest(spark, table):
     files — including on the FLAT read path (long stable-schema
     history), where partition values ride a lookup join and a plain
     WHERE cannot skip files. DV masks still apply inside the pruned
-    subset; snapshot_count(partitions=...) stays metadata-only."""
+    subset; snapshot_agg(partitions=...) COUNT(*) stays metadata-only."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_count,
+        snapshot_agg,
         snapshot_delete,
     )
 
@@ -485,8 +485,12 @@ def test_partition_pruned_reads_from_manifest(spark, table):
     # list values + the scoped metadata count
     both = read_snapshot(spark, table, partitions={"month": [0, 1]})
     assert both.count() == 19
-    assert snapshot_count(spark, table, partitions={"month": 0}) == 9
-    assert snapshot_count(spark, table, partitions={"month": 1}) == 10
+    assert snapshot_agg(
+        spark, table, [("count", "*")], partitions={"month": 0}
+    )[0][0] == 9
+    assert snapshot_agg(
+        spark, table, [("count", "*")], partitions={"month": 1}
+    )[0][0] == 10
     # unknown partition column refuses (a typo must never read as
     # "empty partition")
     with pytest.raises(ValueError, match="non-partition column"):
@@ -509,7 +513,9 @@ def test_partition_pruned_reads_from_manifest(spark, table):
     snapshot_write(null_rows, table, mode="append", partition_cols=["month"])
     nul = read_snapshot(spark, table, partitions={"month": None})
     assert [(r.id, r.month) for r in nul.collect()] == [(999, None)]
-    assert snapshot_count(spark, table, partitions={"month": None}) == 1
+    assert snapshot_agg(
+        spark, table, [("count", "*")], partitions={"month": None}
+    )[0][0] == 1
 
 
 def _data_files(table):
@@ -533,8 +539,8 @@ def test_drop_partitions_metadata_only(spark, table):
     still serves the partition, and the change feed emits exactly the
     live dropped rows as deletes."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_agg,
         snapshot_changes,
-        snapshot_count,
         snapshot_delete,
         snapshot_drop_partitions,
         snapshot_write_with_stats,
@@ -565,7 +571,7 @@ def test_drop_partitions_metadata_only(spark, table):
     got = {(r.id, r.month) for r in read_snapshot(spark, table).collect()}
     assert got == {(4, 1), (6, 1), (7, 1), (8, 2), (9, 2), (10, 2), (11, 2)}
     # metadata-only count agrees post-drop
-    assert snapshot_count(spark, table) == 7
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 7
     # manifest bookkeeping: carried files only, stats pruned, dv
     # targets shrunk to the surviving partition's file
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
@@ -1142,13 +1148,13 @@ def test_delete_full_match_blocked_by_null_rows(spark, table):
 
 
 def test_snapshot_minmax_metadata_vs_scan(spark, table):
-    """snapshot_minmax answers from per-file stats when provably exact
+    """snapshot_agg MIN/MAX answers from per-file stats when provably exact
     (full stats coverage, no tombstones on the scoped files) and falls
     back to an exact scan when a deletion vector might hide the
     extreme or coverage is partial."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_agg,
         snapshot_delete,
-        snapshot_minmax,
         snapshot_write_with_stats,
     )
 
@@ -1156,36 +1162,41 @@ def test_snapshot_minmax_metadata_vs_scan(spark, table):
         _df(spark, [(i, i % 2, f"a{i}") for i in range(10)]),
         table, stats_cols=["id"], partition_cols=["month"],
     )
-    assert snapshot_minmax(spark, table, "id") == (0, 9)
-    assert snapshot_minmax(
-        spark, table, "id", partitions={"month": 0}
-    ) == (0, 8)
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")]
+    )[0] == (0, 9)
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")], partitions={"month": 0}
+    )[0] == (0, 8)
     # no stats for 'v': scan fallback still exact
-    assert snapshot_minmax(spark, table, "v") == ("a0", "a9")
+    assert snapshot_agg(
+        spark, table, [("min", "v"), ("max", "v")]
+    )[0] == ("a0", "a9")
     # DV-delete the max: stats would lie, the tombstone check forces
     # the scan path, which sees the live extreme
     snapshot_delete(spark, table, {"id": [9]}, mode="dv")
-    assert snapshot_minmax(spark, table, "id") == (0, 8)
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")]
+    )[0] == (0, 8)
     # the untombstoned partition... the tombstone lives in month=1, so
     # month=0 stays on the metadata path
-    assert snapshot_minmax(
-        spark, table, "id", partitions={"month": 0}
-    ) == (0, 8)
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")], partitions={"month": 0}
+    )[0] == (0, 8)
     # empty scope
-    assert snapshot_minmax(
-        spark, table, "id", partitions={"month": 7}
-    ) == (None, None)
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")], partitions={"month": 7}
+    )[0] == (None, None)
 
 
 def test_snapshot_count_nonnull_and_hybrid_minmax(spark, table):
     """COUNT(col) answers from recorded row counts minus recorded null
     counts for every provable file, scanning only the uncovered
-    remainder (DV'd files); snapshot_minmax likewise scans ONLY the
+    remainder (DV'd files); MIN/MAX likewise scans ONLY the
     files metadata cannot answer for instead of the whole table."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_count_nonnull,
+        snapshot_agg,
         snapshot_delete,
-        snapshot_minmax,
         snapshot_write_with_stats,
     )
 
@@ -1196,19 +1207,21 @@ def test_snapshot_count_nonnull_and_hybrid_minmax(spark, table):
     snapshot_write_with_stats(
         rows, table, stats_cols=["id", "v"], partition_cols=["month"]
     )
-    assert snapshot_count_nonnull(spark, table, "id") == 3
-    assert snapshot_count_nonnull(spark, table, "v") == 3
-    assert snapshot_count_nonnull(
-        spark, table, "id", partitions={"month": 0}
-    ) == 2
+    assert snapshot_agg(spark, table, [("count", "id")])[0][0] == 3
+    assert snapshot_agg(spark, table, [("count", "v")])[0][0] == 3
+    assert snapshot_agg(
+        spark, table, [("count", "id")], partitions={"month": 0}
+    )[0][0] == 2
     # DV-delete a non-null id in month=0: its file goes uncovered and
     # is scanned with the tombstone applied; month=1 stays metadata
     snapshot_delete(spark, table, {"id": [0]}, mode="dv")
-    assert snapshot_count_nonnull(spark, table, "id") == 2
-    assert snapshot_count_nonnull(spark, table, "v") == 2
+    assert snapshot_agg(spark, table, [("count", "id")])[0][0] == 2
+    assert snapshot_agg(spark, table, [("count", "v")])[0][0] == 2
     # hybrid minmax: the DV'd file is scanned, the covered files
     # answer from stats, and the combination is live-exact
-    assert snapshot_minmax(spark, table, "id") == (1, 2)
+    assert snapshot_agg(
+        spark, table, [("min", "id"), ("max", "id")]
+    )[0] == (1, 2)
 
 
 def test_auto_compact_small_files_metadata_trigger(spark, tmp_path, table):
@@ -1251,9 +1264,7 @@ def test_auto_compact_small_files_metadata_trigger(spark, tmp_path, table):
         )
 
     # streaming ingest with maintenance opted in
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_count,
-    )
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import snapshot_agg
 
     src = tmp_path / "src2"
     src.mkdir()
@@ -1276,7 +1287,7 @@ def test_auto_compact_small_files_metadata_trigger(spark, tmp_path, table):
     assert "compact" in ops[6:], ops  # maintenance ran mid-stream
     assert {r.id for r in read_snapshot(spark, table).collect()} \
         == set(range(5)) | {100, 101, 102, 103}
-    assert snapshot_count(spark, table) == 9
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 9
 
 
 def test_snapshot_cli_history_and_vacuum(spark, table, capsys):
@@ -1335,8 +1346,8 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
         _file_sizes,
         _load_manifest,
         _root,
+        snapshot_agg,
         snapshot_compact,
-        snapshot_count,
         snapshot_delete,
         snapshot_write_with_stats,
     )
@@ -1375,7 +1386,7 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
     expect = {
         (r.id, r.month, r.v) for r in read_snapshot(spark, table).collect()
     }
-    n_before = snapshot_count(spark, table)
+    n_before = snapshot_agg(spark, table, [("count", "*")])[0][0]
 
     v = snapshot_compact(spark, table, min_file_mb=0.02)
     man = _load_manifest(spark, table, v)
@@ -1391,7 +1402,7 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
     # content identical, both DV deletes still masked
     got = {(r.id, r.month, r.v) for r in read_snapshot(spark, table).collect()}
     assert got == expect
-    assert snapshot_count(spark, table) == n_before
+    assert snapshot_agg(spark, table, [("count", "*")])[0][0] == n_before
     # sidecars kept for the carried target only; fragment tombstone
     # folded with its file
     assert man.get("dv_files"), "carried-file tombstone must keep riding"
@@ -1446,14 +1457,15 @@ def test_targeted_compact_converges_unpartitioned(spark, table, monkeypatch):
 
 def test_snapshot_merge_upsert_versions_and_prunes(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_merge_upsert,
+        snapshot_merge,
     )
 
     base = _df(spark, [(1, 1, "a"), (2, 2, "b"), (3, 3, "c")])
     snapshot_write(base, table, partition_cols=["month"])
     upd = _df(spark, [(2, 2, "B!"), (4, 2, "d")])
-    v2 = snapshot_merge_upsert(spark, table, upd, keys=["id"],
-                               partition_cols=["month"])
+    v2 = snapshot_merge(
+        spark, table, upd, keys=["id"], partition_cols=["month"]
+    )
     got = {(r.id, r.v) for r in read_snapshot(spark, table, version=v2).collect()}
     assert got == {(1, "a"), (2, "B!"), (3, "c"), (4, "d")}
     # pre-merge version intact (time travel across a MERGE)
@@ -1463,11 +1475,13 @@ def test_snapshot_merge_upsert_versions_and_prunes(spark, table):
     # commit only wrote month=2 files
     man_files = snapshot_versions(spark, table)
     assert man_files[-1]["op"] == "replace_partitions"
+    with pytest.raises(ValueError, match="rewrite|dv"):
+        snapshot_merge(spark, table, upd, ["id"], ["month"], mode="auto")
 
 
 def test_snapshot_merge_versioned_out_of_order_converges(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_merge_upsert,
+        snapshot_merge,
     )
 
     mk = lambda rows: spark.createDataFrame(  # noqa: E731
@@ -1476,15 +1490,30 @@ def test_snapshot_merge_versioned_out_of_order_converges(spark, table):
     snapshot_write(mk([(1, 1, "v0", 0)]), table, partition_cols=["month"])
     late = mk([(1, 1, "newest", 9)])
     early = mk([(1, 1, "stale", 3)])
-    snapshot_merge_upsert(spark, table, late, keys=["id"],
-                          partition_cols=["month"], version_col="ver")
-    snapshot_merge_upsert(spark, table, early, keys=["id"],
-                          partition_cols=["month"], version_col="ver")
+    snapshot_merge(
+        spark, table,
+        late,
+        keys=["id"],
+        partition_cols=["month"],
+        version_col="ver",
+    )
+    snapshot_merge(
+        spark, table,
+        early,
+        keys=["id"],
+        partition_cols=["month"],
+        version_col="ver",
+    )
     rows = read_snapshot(spark, table).collect()
     assert [(r.v, r.ver) for r in rows] == [("newest", 9)]
     # redelivery of the winner is a no-op version-content-wise
-    snapshot_merge_upsert(spark, table, late, keys=["id"],
-                          partition_cols=["month"], version_col="ver")
+    snapshot_merge(
+        spark, table,
+        late,
+        keys=["id"],
+        partition_cols=["month"],
+        version_col="ver",
+    )
     rows = read_snapshot(spark, table).collect()
     assert [(r.v, r.ver) for r in rows] == [("newest", 9)]
 
@@ -1764,7 +1793,7 @@ def test_delete_then_merge_keeps_no_stale_rows(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_merge_upsert,
+        snapshot_merge,
     )
 
     base = _df(spark, [(1, 1, "a"), (2, 1, "b"), (3, 2, "c"), (4, 2, "d")])
@@ -1776,8 +1805,9 @@ def test_delete_then_merge_keeps_no_stale_rows(spark, table):
     # every file in the new version still sits in a month=... directory
     assert all("month=" in f for f in man["files"])
     upd = _df(spark, [(1, 1, "A2"), (5, 1, "e")])
-    v2 = snapshot_merge_upsert(spark, table, upd, keys=["id"],
-                               partition_cols=["month"])
+    v2 = snapshot_merge(
+        spark, table, upd, keys=["id"], partition_cols=["month"]
+    )
     got = {(r.id, r.v) for r in read_snapshot(spark, table, version=v2).collect()}
     assert got == {(1, "A2"), (5, "e"), (3, "c"), (4, "d")}
 
@@ -1927,12 +1957,11 @@ def test_update_rows_guards(spark, table):
     )
     assert n == 1
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_merge_upsert,
+        snapshot_merge,
     )
 
-    snapshot_merge_upsert(
-        spark,
-        table,
+    snapshot_merge(
+        spark, table,
         _df(spark, [(2, 2, "b2")]),
         keys=["id"],
         partition_cols=["month"],
@@ -2610,7 +2639,7 @@ def test_metadata_tables_files_and_history(spark, table):
     # stats ride as JSON and are queryable
     st = _json.loads(rows[0].stats)
     # numeric columns carry [min, max, nulls, sum]; the sum powers
-    # metadata-planned SUM in snapshot_agg_where
+    # metadata-planned SUM in snapshot_agg
     assert "id" in st and len(st["id"]) == 4
     # time travel: v1 has no tombstoned files
     assert snapshot_files(spark, table, version=1) \

@@ -1,6 +1,6 @@
 """Metadata-planned aggregates through the SQL front door — round
 11's worklist #3 tail: ``SELECT MIN/MAX/SUM/COUNT(col) [, ...] FROM t
-[WHERE <plannable preds>]`` routes to ``snapshot_agg_where`` instead
+[WHERE <plannable preds>]`` routes to ``snapshot_agg`` instead
 of a full-view ``spark.sql`` scan, so the retention-audit query
 (``SELECT MIN(ts), MAX(ts), SUM(bytes), COUNT(*) WHERE ts <
 cutoff``) answers from manifest stats opening only boundary files.
@@ -101,6 +101,8 @@ def test_agg_lists_route_and_match(spark, tmp_path, spy):
         "SELECT SUM(amt) FROM ag WHERE id IN (1, 2, 99)",
         "SELECT MIN(grp) AS g, COUNT(*) AS n FROM ag"
         " WHERE id < 3 OR id >= 10",
+        "SELECT COUNT(*) FROM ag",
+        "SELECT COUNT(*) AS n FROM ag WHERE id < 5",
     ]
     for q in queries:
         _assert_parity(spark, q)
@@ -224,26 +226,31 @@ def test_agg_unknown_column_passthrough_reports(spark, tmp_path, spy):
 
 
 def test_lone_count_star_keeps_rowcount_path(spark, tmp_path, monkeypatch):
-    """``SELECT COUNT(*)`` alone must keep using snapshot_count — the
-    manifest row-sum needs no full-match proof machinery."""
+    """``SELECT COUNT(*)`` alone answers from the recorded row counts
+    minus the live tombstones — no data file opens, even after a DV
+    delete on the counted file."""
     import nyc_taxi_data_warehouse_spark.warehouse.snapshots as S
 
     t = str(tmp_path / "ag_cnt")
     _mk(spark, t, n_files=1)
     snapshot_register(spark, t, "ag_cnt")
+    snapshot_delete(spark, t, {"id": [2]}, mode="dv")
     called: list = []
-    orig = S.snapshot_agg_where
+    orig = S._read_file_list
 
     def rec(*a, **k):
         called.append(a)
         return orig(*a, **k)
 
-    monkeypatch.setattr(S, "snapshot_agg_where", rec)
+    monkeypatch.setattr(S, "_read_file_list", rec)
     assert (
         snapshot_sql(spark, "SELECT COUNT(*) AS n FROM ag_cnt")
         .collect()[0]["n"]
         == 4
     )
+    assert snapshot_sql(
+        spark, f"SELECT COUNT(*) AS n FROM '{t}'"
+    ).collect()[0]["n"] == 3
     assert called == []
 
 
@@ -276,7 +283,7 @@ def test_agg_provably_empty_where_returns_null_row(spark, tmp_path, spy):
 def test_agg_fastpath_loads_manifest_once(spark, tmp_path, monkeypatch):
     """REVIEW r11: the SQL agg fast path resolves types and answers
     from ONE manifest load — the spec resolver hands its manifest to
-    snapshot_agg_where instead of re-listing and re-loading."""
+    the planner instead of re-listing and re-loading."""
     import nyc_taxi_data_warehouse_spark.warehouse.snapshots as S
 
     t = str(tmp_path / "ag_once")

@@ -23,9 +23,8 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     Range,
     snapshot_add_constraint,
     snapshot_changes,
-    snapshot_count_nonnull,
+    snapshot_agg,
     snapshot_delete,
-    snapshot_minmax,
     snapshot_rename_column,
     snapshot_widen_column,
     snapshot_write,
@@ -94,8 +93,10 @@ def test_widen_keeps_stats_pruning_and_dml(spark, tmp_path):
     pruned = read_snapshot(spark, t, where={"amt": Range(0, 30)})
     assert len(pruned.inputFiles()) < len(full.inputFiles())
     assert _bag(pruned, "id") == [(i,) for i in range(4)]
-    assert snapshot_minmax(spark, t, "amt") == (0, 390)
-    assert snapshot_count_nonnull(spark, t, "amt") == 40
+    assert snapshot_agg(
+        spark, t, [("min", "amt"), ("max", "amt")]
+    )[0] == (0, 390)
+    assert snapshot_agg(spark, t, [("count", "amt")])[0][0] == 40
     # DML through the widened column, incl. a value only LONG can hold
     snapshot_write(
         spark.createDataFrame([(99, 0, 5_000_000_000)],

@@ -22,8 +22,9 @@ delete:
 - ``delete_wall_ms`` and the fraction of table bytes that physically
   moved vs the fraction of rows deleted (the headline ratio: rows_frac
   >> moved_frac on a clustered table);
-- the read twins at the same cutoff: ``snapshot_count_where`` wall and
-  its planned boundary-file count vs a full-scan count wall.
+- the read twins at the same cutoff: the metadata-planned
+  ``snapshot_agg`` COUNT(*) wall (``count_where_ms``) and its planned
+  boundary-file count vs a full-scan count wall.
 
 The companion test (tests/test_retention_meter.py) pins the shape
 (drops by reference fire; moved bytes bounded by boundary bytes; the
@@ -62,14 +63,12 @@ def meter(
     clustered = df.repartitionByRange(n_files, F.col(date_col))
     snap.snapshot_write_with_stats(clustered, table_path, [date_col])
 
-    man_pre = snap._load_manifest(
-        spark, table_path, snap._list_manifests(spark, table_path)[-1]
-    )
+    _, man_pre = snap._manifest_at(spark, table_path)
     pre_files = list(man_pre["files"])
     root = snap._root(table_path)
     sizes_pre = snap._file_sizes(spark, root, pre_files)
     total_bytes = sum(sizes_pre.values())
-    total_rows = snap.snapshot_count(spark, table_path)
+    [(total_rows,)] = snap.snapshot_agg(spark, table_path, [("count", "*")])
 
     # cutoff at the requested row fraction (exact: k-th ordered value)
     k = max(1, int(total_rows * cutoff_frac))
@@ -94,7 +93,9 @@ def meter(
     # read twins first (pre-delete image): metadata-planned COUNT vs a
     # full scan of the same predicate
     t0 = time.monotonic()
-    n_meta = snap.snapshot_count_where(spark, table_path, preds)
+    [(n_meta,)] = snap.snapshot_agg(
+        spark, table_path, [("count", "*")], where=preds
+    )
     count_where_ms = (time.monotonic() - t0) * 1000
     t0 = time.monotonic()
     n_scan = (
@@ -111,9 +112,7 @@ def meter(
     )
     delete_wall_ms = (time.monotonic() - t0) * 1000
 
-    man_post = snap._load_manifest(
-        spark, table_path, snap._list_manifests(spark, table_path)[-1]
-    )
+    _, man_post = snap._manifest_at(spark, table_path)
     post_files = set(man_post["files"])
     removed = [f for f in pre_files if f not in post_files]
     written = [f for f in man_post["files"] if f not in set(pre_files)]
