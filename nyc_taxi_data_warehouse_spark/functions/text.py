@@ -1,25 +1,29 @@
-"""Text-analysis expressions — all JVM-side ``pyspark.sql.functions``.
+"""Text-analysis expressions — JVM-side Spark SQL built-ins, no UDFs.
 
-Everything here is a Column builder over built-ins (no UDFs): the whole
-text pipeline stays inside whole-stage codegen, so it scales linearly with
-input bytes at 100 TB. Hash-based operators (fingerprints, MinHash) use
-``md5`` rather than Spark's ``xxhash64`` so a DuckDB oracle can reproduce
-the exact signatures cross-engine.
+Every builder takes a SQL fragment ``str`` (a column name or an
+expression, see ``functions.sql.fragment``) and returns ONE ``F.expr``,
+so the whole text pipeline stays inside whole-stage codegen and scales
+linearly with input bytes at 100 TB. One parse per expression keeps
+plan-build time flat: building the same trees through python-lambda
+higher-order functions cost ~40 ms of py4j round trips per lambda, and
+``simhash32`` alone needs 64 lambdas (~1.5 s of driver work per query
+build, measured). Hash-based operators (fingerprints, MinHash) use
+``md5`` rather than Spark's ``xxhash64`` so a DuckDB oracle can
+reproduce the exact signatures cross-engine.
 
-Every builder accepts either a ``Column`` or a SQL fragment ``str`` (a
-column name or parenthesized expression). The str path constructs the
-expression with ONE ``F.expr`` parse; the Column path builds the same
-tree through python-lambda higher-order functions, which cost ~40 ms of
-py4j round trips per call at plan-build time (``simhash32`` alone
-constructs 64 of them — ~1.5 s of pure driver work per query build,
-measured). Both paths yield value-identical expressions; equivalence is
-pinned by ``tests/test_text_expr_paths.py``.
+Builders that reference an input inside a lambda (``word_shingles``,
+``minhash_signature``, ``simhash32``, ``stopword_count``) want a bound
+column: Catalyst does no common-subexpression elimination across lambda
+boundaries, so an expression input re-evaluates per element. Bind it in
+a prior projection and pass its name.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from .sql import fragment
 
 # Tiny per-language stopword sets for the n-gram/stopword lang-ID
 # heuristic. Deterministic + cross-engine reproducible by construction.
@@ -34,7 +38,7 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 def normalize_sql(col: str) -> str:
     return (
         "trim(regexp_replace(regexp_replace("
-        f"lower({col}), '[^a-z0-9 ]', ''), ' +', ' '))"
+        f"lower({fragment(col)}), '[^a-z0-9 ]', ''), ' +', ' '))"
     )
 
 
@@ -42,92 +46,66 @@ def tokens_sql(col: str) -> str:
     return f"split({normalize_sql(col)}, ' ')"
 
 
-def normalize(col: Column | str) -> Column:
+def normalize(col: str) -> Column:
     """lowercase, strip non-alphanumerics, collapse whitespace."""
-    if isinstance(col, str):
-        return F.expr(normalize_sql(col))
-    c = F.lower(col)
-    c = F.regexp_replace(c, "[^a-z0-9 ]", "")
-    c = F.regexp_replace(c, " +", " ")
-    return F.trim(c)
+    return F.expr(normalize_sql(col))
 
 
-def tokens(col: Column | str) -> Column:
+def tokens(col: str) -> Column:
     """Whitespace tokens of the normalized text (array<string>)."""
-    if isinstance(col, str):
-        return F.expr(tokens_sql(col))
-    return F.split(normalize(col), " ")
+    return F.expr(tokens_sql(col))
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
+def token_count(col: str) -> Column:
+    return F.expr(f"size({tokens_sql(col)})")
 
 
-def bpe_ish_token_estimate(col: Column | str) -> Column:
+def bpe_ish_token_estimate(col: str) -> Column:
     """Byte-pair-ish token-count estimate without a tokenizer model:
     ceil(chars/4) bounded below by the word count — the standard
     chars/4 heuristic, deterministic and portable."""
-    return F.greatest(
-        F.ceil(F.length(normalize(col)) / F.lit(4.0)).cast("bigint"),
-        token_count(col).cast("bigint"),
+    return F.expr(
+        f"greatest(CAST(ceil(length({normalize_sql(col)}) / 4.0D) AS BIGINT), "
+        f"CAST(size({tokens_sql(col)}) AS BIGINT))"
     )
 
 
 def _sql_str_array(words: tuple[str, ...]) -> str:
-    return "array(" + ", ".join(f"'{w}'" for w in words) + ")"
+    quoted = (w.replace("\\", "\\\\").replace("'", "\\'") for w in words)
+    return "array(" + ", ".join(f"'{w}'" for w in quoted) + ")"
 
 
-def stopword_hits(toks: Column | str, words: tuple[str, ...]) -> Column:
-    if isinstance(toks, str):
-        return F.expr(
-            f"size(array_intersect(array_distinct({toks}), "
-            f"{_sql_str_array(words)}))"
-        )
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.array_intersect(F.array_distinct(toks), arr))
-
-
-def stopword_count(toks: Column | str, words: tuple[str, ...]) -> Column:
+def stopword_count(toks: str, words: tuple[str, ...]) -> Column:
     """Total (non-distinct) stopword occurrences."""
-    if isinstance(toks, str):
-        return F.expr(
-            f"size(filter({toks}, t -> "
-            f"array_contains({_sql_str_array(words)}, t)))"
-        )
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
+    return F.expr(
+        f"size(filter({fragment(toks)}, t -> "
+        f"array_contains({_sql_str_array(words)}, t)))"
+    )
 
 
-def digit_ratio(col: Column) -> Column:
-    digits = F.length(F.regexp_replace(col, "[^0-9]", ""))
-    return F.round(digits / F.greatest(F.length(col), F.lit(1)), 4)
-
-
-def fingerprint(col: Column | str) -> Column:
+def fingerprint(col: str) -> Column:
     """Deterministic document fingerprint: md5 of the normalized text.
     (Exact near-identity dedup key; MinHash covers fuzzier matches.)"""
-    if isinstance(col, str):
-        return F.expr(f"md5({normalize_sql(col)})")
-    return F.md5(normalize(col))
+    return F.expr(f"md5({normalize_sql(col)})")
 
 
-def word_shingles_sql(toks: str, k: int = 3) -> str:
-    """SQL text of ``word_shingles``: index-based O(1) element access
-    per shingle (``try_element_at`` so a doc shorter than k tokens
-    yields its single partial shingle with out-of-range positions as
-    NULLs — exactly what the zip form's null padding produced;
-    concat_ws skips NULLs either way). ``toks`` must be a bound column
-    (not a raw expression) or it re-evaluates per shingle — same
-    contract as the Column form.
+def word_shingles(toks: str, k: int = 3) -> Column:
+    """k-word shingles (array<string>); the unit set for MinHash/Jaccard.
 
-    NULL and empty inputs are special-cased to match the zip form
-    exactly: the zip form null-propagates (slice/arrays_zip of NULL is
-    NULL) and maps [] to [] — but ``greatest(size(NULL) - (k-1), 1)``
-    is 1, not NULL (greatest SKIPS nulls), so without the guard a NULL
-    token array would yield [''] and, e.g., give two null-text docs
-    Jaccard 1.0 (caught by the degenerate-corpus gate)."""
+    Index-based O(1) element access per shingle keeps the build O(n·k).
+    The naive ``transform(sequence(...), i -> array_join(slice(toks, i,
+    k)))`` form is quadratic per doc, because slice() is O(n) per
+    element. A doc shorter than k tokens yields its single partial
+    shingle: ``try_element_at`` gives NULL past the end and concat_ws
+    skips NULLs.
+
+    NULL maps to NULL and [] to []. Both are special-cased: without the
+    guard ``greatest(size(NULL) - (k-1), 1)`` is 1, not NULL (greatest
+    SKIPS nulls), so a NULL token array would yield [''] and give two
+    null-text docs Jaccard 1.0 (caught by the degenerate-corpus gate)."""
+    toks = fragment(toks)
     parts = ", ".join(f"try_element_at({toks}, i + {j})" for j in range(k))
-    return (
+    return F.expr(
         f"CASE WHEN {toks} IS NULL THEN NULL "
         f"WHEN size({toks}) = 0 THEN slice({toks}, 1, 0) "
         f"ELSE transform(sequence(1, greatest(size({toks}) - {k - 1}, 1)), "
@@ -135,68 +113,31 @@ def word_shingles_sql(toks: str, k: int = 3) -> str:
     )
 
 
-def word_shingles(toks: Column | str, k: int = 3) -> Column:
-    """k-word shingles (array<string>); the unit set for MinHash/Jaccard.
-
-    Column path: built by zipping the token array with its k-1 shifted
-    copies and joining each tuple — O(n·k), with `toks` referenced only
-    OUTSIDE lambda scope. The naive ``transform(sequence(...), i ->
-    array_join(slice(toks, i, k)))`` form is a scale trap twice over:
-    slice() is O(n) per element (quadratic per doc), and Catalyst does
-    no common-subexpression elimination across lambda boundaries, so a
-    `toks` that is itself an expression (tokenize = two regex passes)
-    is re-evaluated per shingle (profiled 10x slower at sf0.1). The str
-    path keeps O(n·k) via direct element indexing instead.
-
-    A doc shorter than k tokens yields one shingle of whatever it has
-    (null padding; concat_ws skips nulls) — identical in both forms.
-    """
-    if isinstance(toks, str):
-        return F.expr(word_shingles_sql(toks, k))
-    n_out = F.greatest(F.size(toks) - (k - 1), F.lit(1))
-    shifted = [F.slice(toks, i + 1, n_out).alias(f"_w{i}") for i in range(k)]
-    z = F.arrays_zip(*shifted)
-    return F.transform(z, lambda s: F.concat_ws(" ", *[s[f"_w{i}"] for i in range(k)]))
-
-
-def minhash_component_sql(shingles: str, i: int) -> str:
-    return (
-        f"array_min(transform({shingles}, s -> md5(concat('{i}|', s))))"
-    )
-
-
-def minhash_signature(shingles: Column | str, n_hashes: int) -> list[Column]:
-    """n_hashes MinHash components: min over shingles of md5(seed|shingle).
+def minhash_signature(shingles: str, n_hashes: int) -> list[Column]:
+    """n_hashes MinHash components mh0..mh{n-1}: min over shingles of
+    md5(seed|shingle).
 
     Using string-min over md5 hex keeps the signature identical in any
     engine with md5 — the cross-engine analogue of k independent hash
     functions (each seed prefix re-randomizes the order).
     """
-    if isinstance(shingles, str):
-        return [
-            F.expr(minhash_component_sql(shingles, i)).alias(f"mh{i}")
-            for i in range(n_hashes)
-        ]
-
-    def salted(i: int):
-        # single-parameter lambda, built by a factory: a two-parameter
-        # transform lambda receives the ARRAY INDEX as its second arg,
-        # and the previous ``lambda s, i=i`` form was exactly that — the
-        # index Column silently replaced the seed in the salt (latent
-        # here; caught by test_text_expr_paths when the str path landed).
-        return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
+    shingles = fragment(shingles)
     return [
-        F.array_min(F.transform(shingles, salted(i))).alias(f"mh{i}")
+        F.expr(
+            f"array_min(transform({shingles}, s -> md5(concat('{i}|', s))))"
+        ).alias(f"mh{i}")
         for i in range(n_hashes)
     ]
 
 
-def simhash32_sql(toks: str) -> str:
-    """Spark-SQL text of ``simhash32`` — the same 32 per-bit majority
-    votes as one parsed expression. The Column form constructs 64
-    python-lambda higher-order functions (~1.5 s of py4j driver work
-    per build, measured at r12); this is one parse."""
+def simhash32(toks: str) -> Column:
+    """32-bit SimHash of the token multiset as a BIGINT.
+
+    Bit k of each token comes from hex digit k//4 of md5(token)
+    (sub-bit k%4); the signature bit is the sign of the per-bit
+    majority vote. Pure integer arithmetic — identical in DuckDB.
+    """
+    toks = fragment(toks)
     terms = []
     for k in range(32):
         digit_pos = k // 4 + 1
@@ -211,43 +152,7 @@ def simhash32_sql(toks: str) -> str:
             f"(CASE WHEN {s} > 0 THEN CAST({2 ** k} AS BIGINT) "
             f"ELSE CAST(0 AS BIGINT) END)"
         )
-    return "(CAST(0 AS BIGINT) + " + " + ".join(terms) + ")"
-
-
-def simhash32(toks: Column | str) -> Column:
-    """32-bit SimHash of the token multiset as a BIGINT.
-
-    Bit k of each token comes from hex digit k//4 of md5(token)
-    (sub-bit k%4); the signature bit is the sign of the per-bit
-    majority vote. Pure integer arithmetic — identical in DuckDB.
-    """
-    if isinstance(toks, str):
-        return F.expr(simhash32_sql(toks))
-    hexmap = "0123456789abcdef"
-    bit_sums = []
-    for k in range(32):
-        digit_pos = k // 4 + 1
-        shift = 2 ** (k % 4)
-        # vote in {-1, +1} per token for bit k
-        vote = F.transform(
-            toks,
-            lambda t: (
-                F.floor(
-                    (F.instr(F.lit(hexmap), F.substring(F.md5(t), digit_pos, 1)) - 1)
-                    / F.lit(shift)
-                )
-                % 2
-            )
-            * 2
-            - 1,
-        )
-        bit_sums.append(
-            F.aggregate(vote, F.lit(0).cast("long"), lambda acc, x: acc + x)
-        )
-    out = F.lit(0).cast("long")
-    for k, s in enumerate(bit_sums):
-        out = out + F.when(s > 0, F.lit(2**k).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
+    return F.expr("(CAST(0 AS BIGINT) + " + " + ".join(terms) + ")")
 
 
 def simhash32_duckdb_sql(tokens_expr: str) -> str:

@@ -5,16 +5,14 @@ row). Floats are widened to double BEFORE any arithmetic so results are
 bit-comparable with engines that compute in double (DuckDB's
 list_dot_product), and so 64-dim accumulation error stays negligible.
 
-Every builder accepts either a ``Column`` or a SQL fragment ``str``
-(a column name or parenthesized expression). The str path constructs
-the expression with ONE ``F.expr`` parse; the Column path builds the
-same tree through the python-lambda higher-order-function API, which
-costs ~40 ms of py4j round trips PER call at plan-build time (measured;
-the expr path is ~0.7 ms). Hot operators construct these expressions
-hundreds of times per bench run, so plan-construction time was a
-visible fraction of every similarity query's wall clock (guide §1.2:
-per-query fixed driver work). Both paths yield the identical analyzed
-expression — the SQL text mirrors the lambda bodies exactly.
+Every builder takes SQL fragments (column names or expressions, see
+``functions.sql.fragment``) and returns ONE ``F.expr``; the ``*_sql``
+functions return the same text for composition into larger
+expressions. One parse costs ~0.7 ms of driver time where the
+python-lambda higher-order-function API cost ~40 ms of py4j round trips
+per construction (measured), and hot operators build these expressions
+hundreds of times per bench run (guide §1.2: per-query fixed driver
+work).
 """
 
 from __future__ import annotations
@@ -22,59 +20,43 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .sql import fragment
+
 
 def as_double_sql(vec: str) -> str:
-    return f"transform({vec}, x -> cast(x as double))"
+    return f"transform({fragment(vec)}, x -> cast(x as double))"
 
 
 def dot_sql(a: str, b: str) -> str:
-    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
+    return (
+        f"aggregate(zip_with({fragment(a)}, {fragment(b)}, (x, y) -> x * y), "
+        "0.0D, (acc, x) -> acc + x)"
+    )
 
 
 def norm_sql(a: str) -> str:
     return f"sqrt({dot_sql(a, a)})"
 
 
-def cosine_hoisted_sql(a: str, b: str, a_norm: str, b_norm: str) -> str:
-    return f"try_divide({dot_sql(a, b)}, {a_norm} * {b_norm})"
+def as_double(vec: str) -> Column:
+    return F.expr(as_double_sql(vec))
 
 
-def as_double(vec: Column | str) -> Column:
-    if isinstance(vec, str):
-        return F.expr(as_double_sql(vec))
-    return F.transform(vec, lambda x: x.cast("double"))
+def dot(a: str, b: str) -> Column:
+    return F.expr(dot_sql(a, b))
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_sql(a, b))
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+def norm(a: str) -> Column:
+    return F.expr(norm_sql(a))
 
 
-def norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(norm_sql(a))
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column | str, b: Column | str) -> Column:
+def cosine(a: str, b: str) -> Column:
     # try_divide: a zero-norm vector yields NULL similarity instead of an
     # ANSI DIVIDE_BY_ZERO that would fail the whole job (hypothesis-found).
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(f"try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)})")
-    return F.try_divide(dot(a, b), norm(a) * norm(b))
+    return F.expr(f"try_divide({dot_sql(a, b)}, {norm_sql(a)} * {norm_sql(b)})")
 
 
-def cosine_hoisted(
-    a: Column | str,
-    b: Column | str,
-    a_norm: Column | str,
-    b_norm: Column | str,
-) -> Column:
+def cosine_hoisted(a: str, b: str, a_norm: str, b_norm: str) -> Column:
     """``cosine(a, b)`` with the per-row norms precomputed BEFORE the
     candidate join. Bit-identical to ``cosine``: ``norm`` over the same
     double array yields the same double wherever it is evaluated, and
@@ -82,33 +64,22 @@ def cosine_hoisted(
     point is cost shape: per candidate PAIR this evaluates one
     interpreted fold (the dot) instead of three — the two self-dots
     move to once-per-ROW on each join side."""
-    args = (a, b, a_norm, b_norm)
-    if all(isinstance(x, str) for x in args):
-        return F.expr(cosine_hoisted_sql(a, b, a_norm, b_norm))
-    return F.try_divide(dot(a, b), a_norm * b_norm)
+    return F.expr(
+        f"try_divide({dot_sql(a, b)}, {fragment(a_norm)} * {fragment(b_norm)})"
+    )
 
 
-def indexable(vec: Column | str) -> Column:
+def indexable(vec: str) -> Column:
     """True iff the vector can participate in cosine ranking: non-null,
     non-empty, finite positive norm. Zero vectors yield NULL cosine
     (try_divide) and NaN components sort FIRST under desc ordering —
     both pollute top-k candidate lists, so index writers filter on
     this predicate."""
-    if isinstance(vec, str):
-        n2 = dot_sql(as_double_sql(vec), as_double_sql(vec))
-        # ±Inf components give n2 = inf (not NaN, > 0) yet still yield
-        # NaN/NULL cosine downstream — require a finite norm too.
-        return F.expr(
-            f"{vec} IS NOT NULL AND size({vec}) > 0 AND NOT isnan({n2}) "
-            f"AND {n2} > 0.0D AND {n2} < double('inf')"
-        )
-    n2 = dot(as_double(vec), as_double(vec))
-    return (
-        vec.isNotNull()
-        & (F.size(vec) > 0)
-        & ~F.isnan(n2)
-        & (n2 > 0.0)
-        # ±Inf components give n2 = inf (not NaN, > 0) yet still yield
-        # NaN/NULL cosine downstream — require a finite norm too.
-        & (n2 < F.lit(float("inf")))
+    v = fragment(vec)
+    n2 = dot_sql(as_double_sql(v), as_double_sql(v))
+    # ±Inf components give n2 = inf (not NaN, > 0) yet still yield
+    # NaN/NULL cosine downstream — require a finite norm too.
+    return F.expr(
+        f"{v} IS NOT NULL AND size({v}) > 0 AND NOT isnan({n2}) "
+        f"AND {n2} > 0.0D AND {n2} < double('inf')"
     )

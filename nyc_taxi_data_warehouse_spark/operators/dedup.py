@@ -6,7 +6,6 @@ these are the north-star extensions, built as compositions of built-in
 DataFrame ops so Catalyst plans them like any other query:
 
 - exact:       hash groupBy on the content key (deterministic keep-min).
-- fingerprint: md5 of normalized text → near-identity clusters.
 - MinHash+LSH: shingle → md5-min signature → band buckets → bucket-join
                → exact Jaccard verify. The self-join only materializes
                same-bucket pairs, never the O(n²) cross product.
@@ -51,29 +50,6 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     return df.join(keep, id_col, "left_semi")
 
 
-def fingerprint_clusters(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Near-identity clusters: md5(normalized text) with member counts."""
-    return (
-        df.select(T.fingerprint(text_col).alias("fingerprint"), F.col(id_col))
-        .groupBy("fingerprint")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
-    )
-
-
-def with_minhash(
-    df: DataFrame,
-    text_col: str,
-    n_hashes: int = 8,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Attach mh0..mh{n-1} MinHash signature columns."""
-    toks = T.tokens(text_col)
-    shingles = F.array_distinct(T.word_shingles(toks, shingle_k))
-    return df.withColumn("_shingles", shingles).select(
-        "*", *T.minhash_signature(F.col("_shingles"), n_hashes)
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str,
@@ -85,7 +61,7 @@ def minhash_signatures(
 
     ZERO-SHUFFLE signature build (guide §2.4 — remove shuffles
     outright): tokenize, build the distinct k-shingle array with
-    ``word_shingles`` (the zip-based O(n·k) form; ``_shs`` is bound in
+    ``word_shingles`` (the index-based O(n·k) form; ``_shs`` is bound in
     its own projection so every minhash column references a cheap
     column, not the tokenize tree — CollapseProject keeps the boundary
     for a non-cheap alias referenced 9×), then each mh_i is an
@@ -127,18 +103,14 @@ def minhash_signatures(
     sh = tk.select(
         "_id", F.array_distinct(T.word_shingles("_tk", shingle_k)).alias("_shs")
     )
-    # One F.expr parse per column instead of python-lambda HOFs: the
-    # lambda API costs ~40 ms of py4j round trips per construction —
+    # One F.expr parse per column, as in functions/text.py: a python-
+    # lambda HOF would cost ~40 ms of py4j round trips per construction,
     # n_hashes+1 of them here, per query build (guide §1.2 fixed driver
-    # work). Values identical (test_text_expr_paths pins the salted-md5
-    # form; xxhash64 is a direct function swap).
+    # work).
     return sh.select(
         "_id",
         F.expr("transform(_shs, s -> xxhash64(s))").alias("_shingles"),
-        *[
-            F.expr(T.minhash_component_sql("_shs", i)).alias(f"mh{i}")
-            for i in range(n_hashes)
-        ],
+        *T.minhash_signature("_shs", n_hashes),
     )
 
 

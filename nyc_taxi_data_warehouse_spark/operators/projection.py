@@ -27,6 +27,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
+
 
 def fit_pca(df: DataFrame, vec_col: str, n_components: int | None = None) -> dict:
     """One distributed pass for mean + Gramian, driver-side eigh.
@@ -48,7 +50,7 @@ def fit_pca(df: DataFrame, vec_col: str, n_components: int | None = None) -> dic
     if first is None:
         raise ValueError("fit_pca: no non-null vectors to fit")
     d = len(first[0])
-    xs = df.select(F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("x"))
+    xs = df.select(V.as_double(vec_col).alias("x"))
     n = xs.count()
     if n < 2:
         raise ValueError("need at least 2 vectors to fit a covariance")
@@ -99,7 +101,7 @@ def project(
     arrays, no join, no shuffle, no Python."""
     mean = F.array(*[F.lit(float(m)) for m in model["mean"]])
     centered = F.zip_with(
-        F.transform(F.col(vec_col), lambda x: x.cast("double")),
+        V.as_double(vec_col),
         mean,
         lambda x, m: x - m,
     )

@@ -40,17 +40,6 @@ def hyperplanes(n_planes: int, dim: int, seed: str = "hp") -> list[list[float]]:
     return out
 
 
-def _as_double_sql(vec_col: str) -> str:
-    return f"transform({vec_col}, x -> CAST(x AS DOUBLE))"
-
-
-def _dot_sql(vec_sql: str, row: list[float]) -> str:
-    """SQL text for V.dot(vec, literal plane) — same zip_with multiply +
-    sequential fold, so results are bit-identical to the Column form."""
-    arr = "array(" + ", ".join(f"{x!r}D" for x in row) + ")"
-    return f"aggregate(zip_with({vec_sql}, {arr}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-
-
 def _bucket_expr_sql(vec_sql: str, planes: list[list[float]]) -> str:
     """LSH bucket id as ONE SQL string: bit p = (dot(vec, plane_p) > 0).
 
@@ -59,16 +48,18 @@ def _bucket_expr_sql(vec_sql: str, planes: list[list[float]]) -> str:
     costs thousands of py4j round-trips PER TABLE (measured ~1 s/table
     of driver time); one expr parse is milliseconds.
     """
-    terms = [
-        f"CAST({_dot_sql(vec_sql, row)} > 0 AS BIGINT) * CAST({2 ** p} AS BIGINT)"
-        for p, row in enumerate(planes)
-    ]
+    terms = []
+    for p, row in enumerate(planes):
+        plane = "array(" + ", ".join(f"{x!r}D" for x in row) + ")"
+        terms.append(
+            f"CAST({V.dot_sql(vec_sql, plane)} > 0 AS BIGINT) * CAST({2 ** p} AS BIGINT)"
+        )
     return "(" + " + ".join(terms) + ")"
 
 
 def _bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
     """LSH bucket id for the named array column (floats widened first)."""
-    return F.expr(_bucket_expr_sql(_as_double_sql(vec_col), planes))
+    return F.expr(_bucket_expr_sql(V.as_double_sql(vec_col), planes))
 
 
 def cosine_topk(

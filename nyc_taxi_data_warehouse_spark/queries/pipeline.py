@@ -102,7 +102,7 @@ def p01_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle — narrow work an unsplittable input would serialize.
     d = spread(load_table(spark, sf_dir, "documents"))
     txt = F.col("text")
-    n_words = F.size(T.tokens(txt))
+    n_words = T.token_count("text")
     dig = F.length(F.regexp_replace(txt, "[^0-9]", "")) / F.greatest(
         F.length(txt), F.lit(1)
     )

@@ -39,13 +39,12 @@ ORDER BY doc_id
 )
 def t01_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    txt = F.col("text")
     return (
         d.select(
             "doc_id",
-            T.token_count(txt).alias("n_words"),
-            F.length(T.normalize(txt)).alias("n_chars_norm"),
-            T.bpe_ish_token_estimate(txt).alias("bpe_est"),
+            T.token_count("text").alias("n_words"),
+            F.length(T.normalize("text")).alias("n_chars_norm"),
+            T.bpe_ish_token_estimate("text").alias("bpe_est"),
         )
         .orderBy("doc_id")
     )
@@ -85,13 +84,13 @@ def t02_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_words = F.size(toks)
     # normalized text is single-spaced → chars-in-words = len - (n-1)
     avg_wlen = F.round(
-        (F.length(T.normalize(txt)) - n_words + 1) / F.greatest(n_words, F.lit(1)), 4
+        (F.length(T.normalize("text")) - n_words + 1) / F.greatest(n_words, F.lit(1)), 4
     )
     dig = F.length(F.regexp_replace(txt, "[^0-9]", "")) / F.greatest(
         F.length(txt), F.lit(1)
     )
     stop_ratio = F.round(
-        T.stopword_count(toks, T.LANG_STOPWORDS["en"]) / F.greatest(n_words, F.lit(1)),
+        T.stopword_count("_tk", T.LANG_STOPWORDS["en"]) / F.greatest(n_words, F.lit(1)),
         4,
     )
     return (

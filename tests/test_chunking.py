@@ -34,7 +34,7 @@ def test_chunk_bounds_and_counts(spark, docs):
     )
     assert per_doc.where("emitted != n_chunks").count() == 0
     lens = docs.select(
-        "doc_id", F.size(T.tokens(F.col("text"))).alias("n")
+        "doc_id", T.token_count("text").alias("n")
     )
     joined = per_doc.join(lens, "doc_id")
     wrong = joined.where(
@@ -89,7 +89,7 @@ def test_no_overlap_reconstructs_document(spark, docs):
         )
     )
     orig = docs.select(
-        "doc_id", F.array_join(T.tokens(F.col("text")), " ").alias("norm")
+        "doc_id", F.array_join(T.tokens("text"), " ").alias("norm")
     )
     diff = rebuilt.join(orig, "doc_id").where(F.col("rebuilt") != F.col("norm"))
     assert diff.count() == 0

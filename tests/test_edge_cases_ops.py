@@ -279,9 +279,24 @@ def test_indexable_rejects_infinite_vectors(spark):
     )
     kept = sorted(
         r["vec_id"]
-        for r in df.where(V.indexable(F.col("embedding"))).collect()
+        for r in df.where(V.indexable("embedding")).collect()
     )
     assert kept == [1, 8]
+
+
+def test_stopword_count_escapes_quotes_and_backslashes(spark):
+    """Stopwords are spliced into SQL as string literals: a word with a
+    quote or a backslash must count like any other word."""
+    from nyc_taxi_data_warehouse_spark.functions import text as T
+
+    df = spark.createDataFrame(
+        [(["it's", "x", "it's", "a\\b"],)], "_tk array<string>"
+    )
+    row = df.select(
+        T.stopword_count("_tk", ("it's",)).alias("quote"),
+        T.stopword_count("_tk", ("a\\b", "x")).alias("backslash"),
+    ).first()
+    assert (row["quote"], row["backslash"]) == (2, 2)
 
 
 def test_semantic_ingest_drops_unindexable_vectors(spark, tmp_path):

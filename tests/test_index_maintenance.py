@@ -336,7 +336,7 @@ def test_upsert_scans_are_statically_partition_pruned(spark, emb, cents, tmp_pat
     from nyc_taxi_data_warehouse_spark.functions import vector as V
 
     assigned = ivf_assign(emb.where(F.col("vec_id") >= 480), cents)
-    indexable = assigned.where(V.indexable(F.col("embedding")))
+    indexable = assigned.where(V.indexable("embedding"))
     touched = sorted(
         r["cell"]
         for r in _ivf_touched_cells(

@@ -75,7 +75,7 @@ def test_in_domain_scores_below_garbled(spark):
     heldout = docs.where("doc_id % 2 = 1")
     reversed_docs = heldout.select(
         "doc_id",
-        F.array_join(F.reverse(T.tokens(F.col("text"))), " ").alias("text"),
+        F.array_join(F.reverse(T.tokens("text")), " ").alias("text"),
     )
     model = train_bigram_lm(train, "text", "doc_id")
     ce_real = (

@@ -321,7 +321,7 @@ def test_narrow_signature_equivalence(spark):
     new = minhash_signatures(docs, "text", "doc_id", n_hashes, shingle_k)
 
     # the pre-r11 explode/window formulation, replayed inline
-    tk = docs.select(F.col("doc_id").alias("_id"), T.tokens(F.col("text")).alias("_tk"))
+    tk = docs.select(F.col("doc_id").alias("_id"), T.tokens("text").alias("_tk"))
     pe = tk.select("_id", F.posexplode("_tk").alias("pos", "t"))
     w = Window.partitionBy("_id").orderBy("pos")
     leads = [F.lead("t", j).over(w).alias(f"t{j}") for j in range(1, shingle_k)]
@@ -349,3 +349,21 @@ def test_narrow_signature_equivalence(spark):
         for i in range(n_hashes):
             assert ro[f"mh{i}"] == rn[f"mh{i}"], (_id, i)
         assert sorted(set(ro["_shingles"])) == sorted(set(rn["_shingles"])), _id
+
+
+def test_signatures_over_a_column_name_that_needs_quoting(spark):
+    """Builders backtick-quote a column name that is not a SQL fragment,
+    so an operator over `body text` returns the same rows as over a
+    plain name."""
+    from nyc_taxi_data_warehouse_spark.operators.dedup import minhash_signatures
+
+    docs = _docs(spark)
+    want = sorted(minhash_signatures(docs, "text", "doc_id").collect())
+    spaced = docs.withColumnRenamed("text", "body text")
+    got = sorted(minhash_signatures(spaced, "body text", "doc_id").collect())
+    assert got == want
+
+    from nyc_taxi_data_warehouse_spark.functions.sql import fragment
+
+    assert fragment("a`b") == "`a``b`"
+    assert fragment(fragment("body text")) == "`body text`"

@@ -155,8 +155,8 @@ def test_vector_math_matches_numpy(spark, pairs):
         r["i"]: (r["d"], r["c"])
         for r in df.select(
             "i",
-            V.dot(F.col("a"), F.col("b")).alias("d"),
-            V.cosine(F.col("a"), F.col("b")).alias("c"),
+            V.dot("a", "b").alias("d"),
+            V.cosine("a", "b").alias("c"),
         ).collect()
     }
     for i, a, b in data:
@@ -445,7 +445,7 @@ def test_approx_top_k_covers_exact_heavy_hitters(spark, sf_dir):
     assert exact, "fixture should produce at least one heavy hitter"
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(T.tokens(F.col("text"))).alias("tok")).where(
+    toks = d.select(F.explode(T.tokens("text")).alias("tok")).where(
         F.col("tok") != ""
     )
     [row] = toks.agg(

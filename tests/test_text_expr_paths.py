@@ -1,101 +1,22 @@
-"""Value-equivalence of the str (one-parse F.expr) and Column
-(python-lambda HOF) construction paths of functions/text.py and
-functions/vector.py — the r12 plan-build-time optimization must never
-change what any expression computes. Compared over every fixture
-document/embedding, null text included."""
+"""Edge inputs of the SQL-fragment text builders in functions/text.py."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 import nyc_taxi_data_warehouse_spark.functions.text as T
-import nyc_taxi_data_warehouse_spark.functions.vector as V
-from nyc_taxi_data_warehouse_spark.sources import load_table
-
-
-def _mismatches(df, a, b):
-    # null-safe inequality: one row per disagreement
-    return df.where(~a.eqNullSafe(b)).count()
-
-
-def test_text_builders_expr_equals_column_path(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    checks = {
-        "normalize": (T.normalize("text"), T.normalize(F.col("text"))),
-        "tokens": (T.tokens("text"), T.tokens(F.col("text"))),
-        "fingerprint": (T.fingerprint("text"), T.fingerprint(F.col("text"))),
-    }
-    for name, (s, c) in checks.items():
-        assert _mismatches(d, s, c) == 0, name
-
-
-@pytest.mark.parametrize("k", [2, 3, 5])
-def test_word_shingles_expr_equals_column_path(spark, sf_dir, k):
-    d = load_table(spark, sf_dir, "documents").select(
-        T.tokens("text").alias("_tk")
-    )
-    s = T.word_shingles("_tk", k)
-    c = T.word_shingles(F.col("_tk"), k)
-    assert _mismatches(d, s, c) == 0
 
 
 @pytest.mark.parametrize("k", [2, 3])
 def test_word_shingles_expr_null_and_empty_inputs(spark, k):
-    """The zip form null-propagates and maps [] -> []; the expr form
-    must match exactly (greatest() skips NULLs, so an unguarded
-    size-based sequence bound turns NULL into [''] — the degenerate-
-    corpus gate caught this on null-text documents)."""
+    """NULL stays NULL (an unguarded size()-based sequence bound gives
+    [''] because greatest() skips NULLs, and two null-text docs then
+    have Jaccard 1.0), [] stays [], and a doc shorter than k yields its
+    one partial shingle."""
     d = spark.createDataFrame(
-        [(None,), ([],), ([""],), (["a"],), (["a", "b", "c", "d"],)],
-        "_tk array<string>",
-    )
-    s = T.word_shingles("_tk", k)
-    c = T.word_shingles(F.col("_tk"), k)
-    assert _mismatches(d, s, c) == 0
-    got = [r["x"] for r in d.select(s.alias("x")).collect()]
-    assert None in got  # NULL stays NULL on both paths
-
-
-def test_minhash_simhash_stopwords_expr_equals_column_path(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents").select(
-        "text", T.tokens("text").alias("_tk")
-    )
-    d = d.withColumn("_shs", F.array_distinct(T.word_shingles("_tk", 3)))
-    for s, c in zip(
-        T.minhash_signature("_shs", 4),
-        T.minhash_signature(F.col("_shs"), 4),
-    ):
-        assert _mismatches(d, s, c) == 0
-    assert _mismatches(d, T.simhash32("_tk"), T.simhash32(F.col("_tk"))) == 0
-    words = T.LANG_STOPWORDS["en"]
-    assert _mismatches(
-        d, T.stopword_hits("_tk", words), T.stopword_hits(F.col("_tk"), words)
-    ) == 0
-    assert _mismatches(
-        d, T.stopword_count("_tk", words), T.stopword_count(F.col("_tk"), words)
-    ) == 0
-
-
-def test_vector_builders_expr_equals_column_path(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings").select(
-        V.as_double("embedding").alias("v")
-    ).withColumn("_n", V.norm("v"))
-    checks = {
-        "as_double": (
-            V.as_double("embedding"),
-            V.as_double(F.col("embedding")),
-        ),
-        "norm": (V.norm("v"), V.norm(F.col("v"))),
-        "dot": (V.dot("v", "v"), V.dot(F.col("v"), F.col("v"))),
-        "cosine": (V.cosine("v", "v"), V.cosine(F.col("v"), F.col("v"))),
-        "hoisted": (
-            V.cosine_hoisted("v", "v", "_n", "_n"),
-            V.cosine_hoisted(F.col("v"), F.col("v"), F.col("_n"), F.col("_n")),
-        ),
-        "indexable": (V.indexable("v"), V.indexable(F.col("v"))),
-    }
-    base = load_table(spark, sf_dir, "embeddings")
-    for name, (s, c) in checks.items():
-        df = base if name == "as_double" else e
-        assert _mismatches(df, s, c) == 0, name
+        [(0, None), (1, []), (2, [""]), (3, ["a"]), (4, ["a", "b", "c", "d"])],
+        "i int, _tk array<string>",
+    ).orderBy("i")
+    full = {2: ["a b", "b c", "c d"], 3: ["a b c", "b c d"]}[k]
+    got = [r["x"] for r in d.select(T.word_shingles("_tk", k).alias("x")).collect()]
+    assert got == [None, [], [""], ["a"], full]

@@ -39,7 +39,7 @@ def test_tokenize_chunk_pack_chain(spark):
         F.array_join("bpe_tokens", "").alias("_detok"),
     ).join(
         docs.select(
-            "doc_id", F.regexp_replace(T.normalize(F.col("text")), " ", "").alias("_norm")
+            "doc_id", F.regexp_replace(T.normalize("text"), " ", "").alias("_norm")
         ),
         "doc_id",
     )
