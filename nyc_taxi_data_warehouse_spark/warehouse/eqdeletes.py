@@ -177,15 +177,8 @@ def snapshot_append_upsert(
     epoch — a zombie replay of the same stream may land it while this
     instance is retrying, and recommitting would double the batch
     (the same recheck ``stream_snapshot_append`` does)."""
-    versions = _list_manifests(spark, path)
-    if not versions:
-        raise FileNotFoundError(
-            f"no snapshot versions at {path} — create the table with "
-            "snapshot_write first"
-        )
-    man = _load_manifest(spark, path, versions[-1])
+    head, man = _manifest_at(spark, path)
     partition_cols = _manifest_partition_cols(man)
-    _require_same_layout(man, partition_cols, "append_upsert")
     schema = StructType.fromJson(man["schema"])
     cols = [f.name for f in schema.fields]
     missing = [c for c in cols if c not in updates.columns]
@@ -209,7 +202,7 @@ def snapshot_append_upsert(
     batch = casted.localCheckpoint(eager=True)
     n = _validate_eq_batch(batch, keys, allow_dups=version_col is not None)
     if n == 0:
-        return versions[-1], 0
+        return head, 0
     if version_col is not None:
         # the winner-picking window feeds two write jobs below —
         # checkpoint it so it executes once, like the old shape

@@ -404,6 +404,64 @@ def _dv_targets_for(man: dict, new_targets=()) -> object:
     return sorted(set(man.get("dv_targets") or ()) | set(new_targets))
 
 
+# tombstones per deletion-vector sidecar file (~a few hundred MB raw)
+_DV_ROWS_PER_SIDECAR = 4_000_000
+
+
+def _write_tombstones(
+    matched: DataFrame, path: str
+) -> tuple[int, list[str], list[str]]:
+    """Write the ``(_dv_file, _dv_pos)`` identities of ``matched`` (a
+    materialized frame: it is read three times) as deletion-vector
+    sidecars of ``_DV_ROWS_PER_SIDECAR`` tombstones each. Returns ``(n,
+    sidecars, targets)``: the tombstone count, the sidecar relpaths and
+    the distinct files tombstoned — metadata-sized, recorded in the
+    manifest so readers split clean files past the anti-join and the
+    feed planner never opens a sidecar. Writes nothing when ``n`` is
+    0."""
+    n = matched.count()
+    if not n:
+        return 0, [], []
+    _, sidecars = _write_commit_files(
+        matched.select(*_DV_COLS).repartition(-(-n // _DV_ROWS_PER_SIDECAR)),
+        path,
+        None,
+    )
+    targets = [
+        r[0] for r in matched.select("_dv_file").distinct().collect()
+    ]
+    return n, sidecars, targets
+
+
+def _drop_by_reference(
+    man: dict, dropped: set, new_dvs=(), new_tgts=()
+) -> tuple[object, object, dict]:
+    """``(dv_files, dv_targets, stats_extra)`` for a commit that drops
+    ``dropped`` from ``man`` by reference (and adds sidecars
+    ``new_dvs`` tombstoning ``new_tgts``): the recorded targets shrink
+    to the carried files — entries for dropped files go inert — and a
+    set left with no live target folds to ``None``, restoring clean
+    scans; the dropped files' stats fall away."""
+    dv_files: object = sorted((man.get("dv_files") or []) + list(new_dvs))
+    dv_targets = _dv_targets_for(man, new_tgts)
+    if isinstance(dv_targets, list) and dropped:
+        live = set(man["files"]) - dropped
+        dv_targets = sorted(t for t in dv_targets if t in live)
+        if not dv_targets:
+            dv_files, dv_targets = None, None
+    stats_extra = (
+        {
+            "stats": {
+                f: s for f, s in man["stats"].items() if f not in dropped
+            },
+            "stats_cols": man.get("stats_cols"),
+        }
+        if man.get("stats") is not None
+        else {}
+    )
+    return dv_files, dv_targets, stats_extra
+
+
 # ---------------------------------------------------------------------------
 # Equality deletes: key-tombstone sidecars scoped by per-file sequence
 # ---------------------------------------------------------------------------
@@ -1160,19 +1218,14 @@ def _partition_pruned_files(
       must be provable from directory values alone (metadata-only
       partition drops, partition-scoped change feeds, metadata
       MIN/MAX);
-    - ``"exclude"``: directory semantics verbatim (a non-encoding file
-      never matches) — ONLY for whole-file proofs, where absence of
-      the directory must mean "not proven";
-    - ``"include"``: conservative keep — for DML victim planning (a
-      possible match must stay a candidate);
-    - ``"split"``: like "include" but returns ``(files_to_read,
+    - ``"split"``: keep such files and return ``(files_to_read,
       unencoded_subset)`` in ONE relpath-parsing pass — for readers
       that apply a row-level residual filter
       (``_partition_residual_cond``) and need to know whether any
       unmigrated file survived, without re-parsing every path."""
     from ..streaming.snapshot_source import _partition_values_from_path
 
-    if unencoded not in ("raise", "exclude", "include", "split"):
+    if unencoded not in ("raise", "split"):
         raise ValueError(f"bad unencoded mode {unencoded!r}")
     # directory names are PHYSICAL (frozen at add time — see _colmap);
     # callers filter by logical names
@@ -1202,9 +1255,8 @@ def _partition_pruned_files(
                     "directory-provable partition values; run "
                     "snapshot_compact to migrate old files first"
                 )
-            if unencoded in ("include", "split"):
-                out.append(f)
-                unenc.append(f)
+            out.append(f)
+            unenc.append(f)
             continue
         if all(vals.get(k) in vs for k, vs in want.items()):
             out.append(f)
@@ -1319,7 +1371,7 @@ def _read_at(
     if where is not None:
         preds = _sanitize_predicates(where)
         if preds:
-            admitted = set(_victims_by_stats_where(man, preds)[0])
+            admitted = set(_plan(man, preds)[0])
             files = [f for f in files if f in admitted]
             conds.append(_match_expr(preds))
         else:  # provably-empty range / emptied IN list
@@ -3140,9 +3192,10 @@ def _agg_at(
         preds = where if where == [] else _sanitize_predicates(where)
         if not preds:
             return empty
-        admitted = set(_victims_by_stats_where(man, preds)[0])
-        files = [f for f in files if f in admitted]
-        full = set(_full_match_files_where(man, preds))
+        admitted, proven = _plan(man, preds)
+        aset = set(admitted)
+        files = [f for f in files if f in aset]
+        full = set(proven)
         conds.append(_match_expr(preds))
     if not files:
         return empty
@@ -4549,14 +4602,8 @@ def _merge_dv(
     schema = StructType.fromJson(man["schema"])
     cols = [f.name for f in schema.fields]
     touched = updates.select(*partition_cols).distinct()
-    target = _read_file_list(
-        spark, path, man["files"], schema,
-        partition_cols=partition_cols,
-        dv_files=man.get("dv_files"),
-        row_ids=True,
-        dv_targets=man.get("dv_targets"),
-        colmap=_colmap(man) or None,
-        defaults=man.get("defaults"),
+    target = _scan_live(
+        spark, path, man, man["files"], row_ids=True
     ).join(F.broadcast(touched), partition_cols, "left_semi")
     if version_col is not None:
         tagged = target.withColumn("_src", F.lit(0)).unionByName(
@@ -4582,20 +4629,11 @@ def _merge_dv(
         ).select(*_DV_COLS)
         new_rows = updates.select(*cols)
     tombs = tombs.localCheckpoint(eager=True)
-    n_tombs = tombs.count()
     new_rows = new_rows.localCheckpoint(eager=True)
     _, new_files = _write_commit_files(
         new_rows, path, partition_cols, colmap=_colmap(man) or None
     )
-    new_dvs: list[str] = []
-    new_tgts: list[str] = []
-    if n_tombs:
-        _, new_dvs = _write_commit_files(
-            tombs.repartition(max(1, -(-n_tombs // 4_000_000))), path, None
-        )
-        new_tgts = [
-            r[0] for r in tombs.select("_dv_file").distinct().collect()
-        ]
+    n_tombs, new_dvs, new_tgts = _write_tombstones(tombs, path)
     stats_cols = man.get("stats_cols") or []
     extra: dict = {"dv_added": new_dvs, "dv_rows_added": n_tombs}
     if stats_cols:
@@ -4678,7 +4716,7 @@ def collect_file_stats(
     but only ``nulls == 0`` makes that every ROW — the difference
     between "this file may contain matches" and "this file IS the
     match", which lets a delete drop the file by reference instead of
-    rewriting it (see ``_full_match_files``).
+    rewriting it (see ``_plan``).
 
     The SUM (fourth element, numeric columns only; same length-gated
     compatibility) is what lets ``snapshot_agg`` answer
@@ -4806,94 +4844,49 @@ def snapshot_write_with_stats(
 def _delete_rows_dv_where(
     spark: SparkSession,
     path: str,
-    predicates: dict,
+    latest: int,
+    man: dict,
+    predicates,
+    plan: tuple[list[str], list[str]],
 ) -> tuple[int, int]:
     """Merge-on-read delete — the engine behind
-    ``snapshot_delete(mode="dv")``: the stats/directory planner picks
-    the victims, whole-file proofs drop wholly-dead files by reference
-    (writing one (file, pos) entry per row of a wholly-dead file would
-    be pure waste on both sides), and only boundary rows get
+    ``snapshot_delete(mode="dv")``, over the statement's head
+    (``latest``, ``man``; equality deletes resolved) and its
+    ``_plan``: proven files drop by reference (writing one (file, pos)
+    entry per row of a wholly-dead file would be pure waste on both
+    sides), and only the boundary files' matching rows get
     tombstones."""
-    latest, man = _manifest_at(spark, path)
-    latest, man = _eq_resolved_head(spark, path, latest, man)
     # stats proofs and row accounting below are position-exact
     assert not man.get("eqs"), "equality deletes must be resolved first"
-    predicates = _sanitize_predicates(predicates)
-    if not predicates:
-        return latest, 0
-    victims, _carried = _victims_by_stats_where(man, predicates)
-    if not victims:
-        return latest, 0
-    schema = StructType.fromJson(man["schema"])
-    fullset = set(_full_match_files_where(man, predicates))
-    dropped = sorted(f for f in victims if f in fullset)
-    victims = [f for f in victims if f not in fullset]
-    drop_rows = 0
-    if dropped:
-        drop_rows = _live_row_total(spark, path, man, dropped)
+    admitted, dropped = plan
     dset = set(dropped)
-    files_after = [f for f in man["files"] if f not in dset]
-    stats_extra = (
-        {
-            "stats": {
-                f: s for f, s in man["stats"].items() if f not in dset
-            },
-            "stats_cols": man.get("stats_cols"),
-        }
-        if man.get("stats") is not None
-        else {}
+    victims = [f for f in admitted if f not in dset]
+    n, new_dvs, new_tgts = 0, [], []
+    if victims:
+        # the live-row mask never tombstones a row twice
+        matched = (
+            _scan_live(spark, path, man, victims, row_ids=True)
+            .where(_match_expr(predicates))
+            .select(*_DV_COLS)
+            .localCheckpoint(eager=True)  # one scan feeds count AND write
+        )
+        n, new_dvs, new_tgts = _write_tombstones(matched, path)
+    if n == 0 and not dropped:
+        return latest, 0
+    drop_rows = _live_row_total(spark, path, man, dropped) if dropped else 0
+    dv_files, dv_targets, stats_extra = _drop_by_reference(
+        man, dset, new_dvs, new_tgts
     )
     drop_extra = (
         {"files_dropped_by_stats": len(dropped), "rows_dropped": drop_rows}
         if dropped
         else {}
     )
-    n = 0
-    new_dvs: list[str] = []
-    new_tgts: list[str] = []
-    if victims:
-        # the live-row mask never tombstones a row twice
-        df = _scan_live(spark, path, man, victims, row_ids=True)
-        matched = (
-            df.where(_match_expr(predicates))
-            .select("_dv_file", "_dv_pos")
-            .localCheckpoint(eager=True)  # one scan feeds count AND write
-        )
-        n = matched.count()
-        if n:
-            # ~4M tombstones (~a few hundred MB raw) per sidecar file
-            _, new_dvs = _write_commit_files(
-                matched.repartition(
-                    max(1, n // 4_000_000 + (n % 4_000_000 > 0))
-                ),
-                path,
-                None,
-            )
-            # metadata-sized (∝ targeted files): recorded in the
-            # manifest so readers split clean files past the anti-join
-            # and the feed planner never opens a sidecar
-            new_tgts = [
-                r[0]
-                for r in matched.select("_dv_file").distinct().collect()
-            ]
-    if n == 0 and not dropped:
-        return latest, 0
-    dv_files: object = sorted((man.get("dv_files") or []) + new_dvs)
-    dv_targets = _dv_targets_for(man, new_tgts)
-    if isinstance(dv_targets, list) and dset:
-        # recorded targets shrink with the dropped files (their
-        # entries go inert); an all-inert carried set with no new
-        # sidecars folds away entirely, restoring clean scans
-        dv_targets = sorted(
-            (set(dv_targets) - dset) | set(new_tgts)
-        )
-        if not dv_targets and not new_dvs:
-            dv_files, dv_targets = None, None
     version = _commit(
         spark,
         path,
-        files_after,
-        schema,
+        [f for f in man["files"] if f not in dset],
+        StructType.fromJson(man["schema"]),
         "delete_rows_dv",
         latest,
         extra={
@@ -4909,66 +4902,6 @@ def _delete_rows_dv_where(
     return version, n + drop_rows
 
 
-def _victims_by_stats(
-    man: dict, col: str, values: list
-) -> tuple[list[str], list[str]]:
-    """Split the manifest's files into (victims, carried) for a
-    ``col IN values`` predicate using the per-file min/max stats —
-    metadata-only planning with no false negatives (stats-less files
-    are conservatively victims)."""
-    stats = man.get("stats", {})
-    col = _phys(man, col)  # stats are keyed by on-disk column names
-    # NULL never matches an IN list: None values select nothing, and
-    # left in they would TypeError against the stats endpoints
-    values = [v for v in values if v is not None]
-    if not values:
-        return [], list(man["files"])
-    norm = sorted(_stat_norm(v, widen=0) for v in values)
-    lo, hi = norm[0], norm[-1]
-    victims, carried = [], []
-    for f in man["files"]:
-        st = stats.get(f, {}).get(col)
-        if st is None:
-            victims.append(f)  # no stats -> conservatively rewrite
-        elif st[0] is None or st[1] is None:
-            carried.append(f)  # only-null col values: IN never matches
-        elif st[1] < lo or st[0] > hi:
-            carried.append(f)
-        elif any(st[0] <= v <= st[1] for v in norm):
-            victims.append(f)
-        else:
-            carried.append(f)
-    return victims, carried
-
-
-def _full_match_files(man: dict, col: str, values: list) -> list[str]:
-    """Files where EVERY row provably matches ``col IN values`` from
-    stats alone: ``min == max == some value`` (every non-null row is
-    that value) AND a recorded null count of 0 (so "every non-null
-    row" means every row — ``NULL IN (...)`` never matches, and a
-    min/max pair says nothing about nulls). Legacy two-element stats
-    entries never qualify (no null count — conservative). Decimal
-    columns never qualify either: their endpoints are stored WIDENED
-    (``_stat_norm``), so recorded min can never equal recorded max —
-    again conservative, never wrong."""
-    stats = man.get("stats") or {}
-    col = _phys(man, col)  # stats are keyed by on-disk column names
-    norm = {_stat_norm(v, widen=0) for v in values if v is not None}
-    out = []
-    for f in man["files"]:
-        st = stats.get(f, {}).get(col)
-        if (
-            st is not None
-            and len(st) >= 3
-            and st[2] == 0
-            and st[0] is not None
-            and st[0] == st[1]
-            and st[0] in norm
-        ):
-            out.append(f)
-    return out
-
-
 class Range:
     """Interval predicate — the value side of a ``{col: Range(...)}``
     entry anywhere ``{col: values}`` predicates are accepted
@@ -4981,12 +4914,12 @@ class Range:
 
     This is the TTL/retention/GDPR sweep shape (``DELETE FROM t WHERE
     ts < '2024-01-01'``) — the single most common DML a 100 TB table
-    sees. The planner prunes victims from the per-file min/max stats
-    (the same pruning ``read_snapshot(where=)`` applies), and proves
-    whole-file drops (file range wholly inside the predicate,
-    zero nulls ⇒ drop by reference — no read, no rewrite, no
-    tombstones), so a retention delete on a time-clustered table moves
-    only the boundary files' bytes. Partition-column ranges prune and
+    sees. The planner (``_plan``) prunes victims from the per-file
+    min/max stats (the same pruning ``read_snapshot(where=)`` applies),
+    and proves whole-file drops (file range wholly inside the
+    predicate, zero nulls ⇒ drop by reference — no read, no rewrite,
+    no tombstones), so a retention delete on a time-clustered table
+    moves only the boundary files' bytes. Partition-column ranges prune and
     prove from directory values, typed by the column's declared type.
 
     Endpoints: int / float / str / Decimal / date / datetime (bool and
@@ -5078,9 +5011,9 @@ class _NullTest:
     lists and ``Range``. Use the module singletons ``IS_NULL`` and
     ``IS_NOT_NULL``.
 
-    The planner answers both from the null counts the stats already
-    record (``collect_file_stats``: ``{col: [min, max, nulls]}``) plus
-    the manifest's per-file row counts:
+    The planner (``_plan``) answers both from the null counts the
+    stats already record (``collect_file_stats``: ``{col: [min, max,
+    nulls]}``) plus the manifest's per-file row counts:
 
     - ``IS NULL`` victims: a file with a recorded ``nulls == 0`` for
       the column provably contains no match and carries by reference;
@@ -5116,48 +5049,6 @@ class _NullTest:
 
 IS_NULL = _NullTest(False)
 IS_NOT_NULL = _NullTest(True)
-
-
-def _null_victims(man: dict, col: str, test: _NullTest) -> list[str]:
-    """Files that MAY contain a row matching the null test — the
-    no-false-negatives victim filter (see ``_NullTest``)."""
-    stats = man.get("stats") or {}
-    rows = man.get("rows") or {}
-    pcol = _phys(man, col)
-    out = []
-    for f in man["files"]:
-        ent = stats.get(f, {}).get(pcol)
-        nulls = ent[2] if ent is not None and len(ent) >= 3 else None
-        if nulls is None:
-            out.append(f)  # unknown: keep
-        elif test.negate:
-            # IS NOT NULL: excludable only when provably all-null
-            if not (f in rows and nulls == rows[f]):
-                out.append(f)
-        elif nulls > 0:
-            out.append(f)
-    return out
-
-
-def _null_full_files(man: dict, col: str, test: _NullTest) -> list[str]:
-    """Files where EVERY row provably matches the null test — sound
-    whole-file proofs only (never a false drop): requires a recorded
-    null count, and for IS NULL also the recorded row count."""
-    stats = man.get("stats") or {}
-    rows = man.get("rows") or {}
-    pcol = _phys(man, col)
-    out = []
-    for f in man["files"]:
-        ent = stats.get(f, {}).get(pcol)
-        nulls = ent[2] if ent is not None and len(ent) >= 3 else None
-        if nulls is None:
-            continue
-        if test.negate:
-            if nulls == 0:
-                out.append(f)
-        elif f in rows and nulls == rows[f]:
-            out.append(f)
-    return out
 
 
 # timestamp-shaped string: date, optional [T or space] time, optional
@@ -5344,124 +5235,6 @@ def _in_range(v, lo, hi, rng: Range) -> bool:
     )
 
 
-def _range_victims(man: dict, col: str, rng: Range) -> list[str]:
-    """Files that MAY hold a row matching the range, from the per-file
-    min/max stats: recorded [min, max] intersects the interval.
-    Stats-less files and incomparable values are conservatively
-    victims; all-null files never match (ranges, like IN, never match
-    NULL) — the same no-false-negatives contract as
-    ``_victims_by_stats``."""
-    b = _range_bounds_for_col(man, col, rng, for_proof=False)
-    if b is None:
-        return list(man["files"])
-    lo, hi, canon, _dp = b
-    stats = man.get("stats", {})
-    pcol = _phys(man, col)
-    victims = []
-    for f in man["files"]:
-        st = stats.get(f, {}).get(pcol)
-        if st is None:
-            victims.append(f)
-            continue
-        if st[0] is None or st[1] is None:
-            continue  # only-null column values: never matches
-        try:
-            mn, mx = canon(st[0]), canon(st[1])
-            if mn is None or mx is None:
-                victims.append(f)
-                continue
-            if hi is not None and (mn > hi or (mn == hi and not rng.hi_inc)):
-                continue
-            if lo is not None and (mx < lo or (mx == lo and not rng.lo_inc)):
-                continue
-        except TypeError:  # stat/bound types incomparable → keep
-            pass
-        victims.append(f)
-    return victims
-
-
-def _range_full_files(man: dict, col: str, rng: Range) -> list[str]:
-    """Files where EVERY row provably matches the range from stats
-    alone: recorded [min, max] wholly inside the interval AND a
-    recorded null count of 0. Unlike the IN proof this does not need
-    min == max — the whole-file drop fires on every file strictly
-    inside a retention cutoff, which on a time-clustered table is the
-    BULK of the victim bytes. Decimal stats are stored outward-widened
-    and the proof bounds widen inward, so the proof can only
-    under-fire, never over-fire."""
-    b = _range_bounds_for_col(man, col, rng, for_proof=True)
-    if b is None:
-        return []
-    lo, hi, canon, _dp = b
-    stats = man.get("stats") or {}
-    pcol = _phys(man, col)
-    out = []
-    for f in man["files"]:
-        st = stats.get(f, {}).get(pcol)
-        if (
-            st is None
-            or len(st) < 3
-            or st[2] != 0
-            or st[0] is None
-            or st[1] is None
-        ):
-            continue
-        try:
-            mn, mx = canon(st[0]), canon(st[1])
-            if mn is None or mx is None:
-                continue
-            if lo is not None and (mn < lo or (mn == lo and not rng.lo_inc)):
-                continue
-            if hi is not None and (mx > hi or (mx == hi and not rng.hi_inc)):
-                continue
-        except TypeError:
-            continue
-        out.append(f)
-    return out
-
-
-def _range_dir_files(man: dict, col: str, rng: Range, mode: str) -> list[str]:
-    """Partition-directory answer for a Range on a partition column.
-    ``mode="include"``: victim candidates — the directory value
-    satisfies the range, or cannot be typed-compared, or the file
-    does not encode the column (post-evolution data rows may match).
-    ``mode="exclude"``: whole-file proof — the value PROVABLY
-    satisfies (parseable, comparable, in range; every row of a
-    ``month=5/`` file has month 5 non-null, so the directory is the
-    proof). Values parse by the column's DECLARED type (int dirs
-    compare numerically — '10' > '9'); the Hive null partition never
-    matches a range."""
-    from ..streaming.snapshot_source import _partition_values_from_path
-
-    b = _range_bounds_for_col(man, col, rng, for_proof=(mode == "exclude"))
-    pcol = _phys(man, col)
-    out = []
-    for f in man["files"]:
-        vals = _partition_values_from_path(f)
-        if pcol not in vals:
-            if mode == "include":
-                out.append(f)
-            continue
-        v = vals[pcol]
-        if v is None:  # Hive null partition: ranges never match NULL
-            continue
-        ok = None
-        if b is not None:
-            lo, hi, _sc, dirparse = b
-            try:
-                cv = dirparse(v)
-                if cv is not None:
-                    ok = _in_range(cv, lo, hi, rng)
-            except (TypeError, ValueError):
-                ok = None
-        if ok is None:
-            if mode == "include":
-                out.append(f)
-        elif ok:
-            out.append(f)
-    return out
-
-
 def _sanitize_predicates(predicates) -> dict | list:
     """{col: values} with scalars normalized to one-element lists and
     None values stripped per column (NULL never matches an IN list,
@@ -5481,7 +5254,8 @@ def _sanitize_predicates(predicates) -> dict | list:
     disjunction (x OR false ≡ x); all branches empty → [] (callers
     no-op, same as {}); exactly one branch left → that plain dict, so
     single-branch DNF takes every conjunctive fast path (partition
-    drops included)."""
+    drops included). The sanitized form is what the file planner
+    (``_plan``) and the row predicate (``_match_expr``) take."""
     if isinstance(predicates, (list, tuple)):
         if not predicates:
             raise ValueError(
@@ -5532,98 +5306,209 @@ def _canonical_partition_values(man: dict, col: str, vals: list) -> bool:
     ) and all(type(v) in (int, str, bool) for v in vals)
 
 
-def _victims_by_stats_where(
-    man: dict, predicates: dict
-) -> tuple[list[str], list[str]]:
-    """Conjunctive (victims, carried): a file may match ``col IN vals
-    AND ...`` only if EVERY predicate admits it — excludable by any
-    one column carries the file. Partition-column predicates exclude
-    from the DIRECTORY values (exact and free — without this, a mixed
-    ``tenant AND user_id`` delete on an unstatted partition column
-    would rewrite byte-identical files in every other tenant whose
-    user_id range happens to admit the key); the rest use the
-    single-column stats planner, keeping its no-false-negatives
-    contract per column.
+# A file's verdict under a predicate, ordered so that a conjunction
+# takes the lowest of its leaves' verdicts and a disjunction the highest
+_NO_ROW, _SOME_ROWS, _EVERY_ROW = 0, 1, 2
 
-    DNF (list of branch dicts): a file may match ``branch1 OR
-    branch2`` iff SOME branch admits it — the victim set is the UNION
-    of the per-branch conjunctive victim sets (each branch keeps its
-    own no-false-negatives contract, so the union keeps it for the
-    disjunction). Manifest file order is preserved; a file admitted
-    by several branches appears once."""
-    if isinstance(predicates, (list, tuple)):
-        admitted: set = set()
-        for branch in predicates:
-            v, _ = _victims_by_stats_where(man, branch)
-            admitted |= set(v)
-        return (
-            [f for f in man["files"] if f in admitted],
-            [f for f in man["files"] if f not in admitted],
-        )
-    alive = set(man["files"])
-    for col, vals in predicates.items():
-        if isinstance(vals, _NullTest):
-            alive &= set(_null_victims(man, col, vals))
-        elif isinstance(vals, Range):
-            if _phys(man, col) in set(_manifest_partition_cols(man) or ()):
-                # directory values answer ranges typed-exactly; files
-                # not encoding the column stay candidates ("include")
-                alive &= set(_range_dir_files(man, col, vals, "include"))
-            else:
-                alive &= set(_range_victims(man, col, vals))
-        elif _canonical_partition_values(man, col, vals):
-            # "include": a file predating a layout evolution may match
-            # as data — it must STAY a victim candidate (the planner's
-            # no-false-negatives contract)
-            alive &= set(
-                _partition_pruned_files(man, {col: vals}, "include")
+
+def _leaf_verdicts(man: dict, col: str, vals) -> list[int]:
+    """One predicate leaf's verdict on every file of ``man`` (aligned
+    with ``man["files"]``): ``_NO_ROW`` when metadata proves no row
+    matches, ``_EVERY_ROW`` when it proves every row matches (nulls
+    included — a whole-file proof), ``_SOME_ROWS`` otherwise. Files
+    metadata cannot judge (no stats entry, un-statted column, a value
+    or bound that does not compare with the recorded ones) are
+    ``_SOME_ROWS``: never a false exclusion, never a false proof. A
+    file both proofs fit (a 0-row file under a null test) is
+    ``_NO_ROW``. Stats and directories are keyed by physical names.
+
+    - ``IS [NOT] NULL``: the recorded null count against the recorded
+      row count (legacy two-element stats have no null count).
+      Partition columns have no in-file stats, so they stay
+      ``_SOME_ROWS`` (a null partition value's directory encoding is
+      writer-specific).
+    - ``Range`` on a partition column: the directory value, typed by
+      the column's declared type (``_range_bounds_for_col``; int dirs
+      compare numerically); the Hive null partition never matches.
+    - ``Range`` on a data column: the recorded [min, max] against the
+      bounds widened outward (exclusion) or inward (proof, which also
+      needs a null count of 0) — Decimal stats are stored widened, so
+      the proof can only under-fire. An only-null file never matches.
+    - values on a partition column with canonical directory strings
+      (``_canonical_partition_values``): the directory value is the
+      value of every row.
+    - values on a data column: excluded when no value falls in the
+      recorded [min, max]; proven when ``min == max == a value`` with
+      a null count of 0 (never for Decimal: its widened endpoints
+      differ).
+
+    A file whose directories do not carry a partition column
+    (written before ``snapshot_set_layout``) holds the value as data:
+    ``_SOME_ROWS``."""
+    files = man["files"]
+    stats = man.get("stats") or {}
+    pcol = _phys(man, col)
+    part = pcol in set(_manifest_partition_cols(man) or ())
+    if isinstance(vals, _NullTest):
+        rows = man.get("rows") or {}
+        out = []
+        for f in files:
+            ent = stats.get(f, {}).get(pcol)
+            nulls = ent[2] if ent is not None and len(ent) >= 3 else None
+            if nulls is None:
+                out.append(_SOME_ROWS)
+                continue
+            all_null = f in rows and nulls == rows[f]
+            none_, every = (
+                (all_null, nulls == 0) if vals.negate
+                else (nulls == 0, all_null)
             )
+            out.append(
+                _NO_ROW if none_ else _EVERY_ROW if every else _SOME_ROWS
+            )
+        return out
+    if isinstance(vals, Range):
+        outer = _range_bounds_for_col(man, col, vals, for_proof=False)
+        inner = _range_bounds_for_col(man, col, vals, for_proof=True)
+        if part:
+            def dir_in(s, b):  # None: not comparable
+                if b is None:
+                    return None
+                try:
+                    cv = b[3](s)
+                    return None if cv is None else _in_range(
+                        cv, b[0], b[1], vals
+                    )
+                except (TypeError, ValueError):
+                    return None
+
+            out = []
+            for f in files:
+                dvals = _dir_values_cached(f)
+                if pcol not in dvals:
+                    out.append(_SOME_ROWS)
+                elif (
+                    dvals[pcol] is None  # a range never matches NULL
+                    or dir_in(dvals[pcol], outer) is False
+                ):
+                    out.append(_NO_ROW)
+                elif dir_in(dvals[pcol], inner):
+                    out.append(_EVERY_ROW)
+                else:
+                    out.append(_SOME_ROWS)
+            return out
+
+        def excludes(st) -> bool:
+            if outer is None or st is None:
+                return False
+            if st[0] is None or st[1] is None:
+                return True  # only-null column values
+            lo, hi, canon, _dp = outer
+            try:
+                mn, mx = canon(st[0]), canon(st[1])
+                if mn is None or mx is None:
+                    return False
+                return (hi is not None and (
+                    mn > hi or (mn == hi and not vals.hi_inc)
+                )) or (lo is not None and (
+                    mx < lo or (mx == lo and not vals.lo_inc)
+                ))
+            except TypeError:
+                return False
+
+        def proves(st) -> bool:
+            if (
+                inner is None or st is None or len(st) < 3 or st[2] != 0
+                or st[0] is None or st[1] is None
+            ):
+                return False
+            lo, hi, canon, _dp = inner
+            try:
+                mn, mx = canon(st[0]), canon(st[1])
+                if mn is None or mx is None:
+                    return False
+                return not (lo is not None and (
+                    mn < lo or (mn == lo and not vals.lo_inc)
+                )) and not (hi is not None and (
+                    mx > hi or (mx == hi and not vals.hi_inc)
+                ))
+            except TypeError:
+                return False
+
+        out = []
+        for f in files:
+            st = stats.get(f, {}).get(pcol)
+            out.append(
+                _NO_ROW if excludes(st)
+                else _EVERY_ROW if proves(st) else _SOME_ROWS
+            )
+        return out
+    if _canonical_partition_values(man, col, vals):
+        want = {_norm_partition_value(v) for v in vals}
+        out = []
+        for f in files:
+            dvals = _dir_values_cached(f)
+            out.append(
+                _SOME_ROWS if pcol not in dvals
+                else _EVERY_ROW if dvals[pcol] in want else _NO_ROW
+            )
+        return out
+    # NULL never matches an IN list
+    norm = sorted(_stat_norm(v, widen=0) for v in vals if v is not None)
+    if not norm:
+        return [_NO_ROW] * len(files)
+    lo, hi, want = norm[0], norm[-1], set(norm)
+    out = []
+    for f in files:
+        st = stats.get(f, {}).get(pcol)
+        if st is None:
+            out.append(_SOME_ROWS)
+        elif (
+            st[0] is None or st[1] is None  # only-null column values
+            or st[1] < lo or st[0] > hi
+            or not any(st[0] <= v <= st[1] for v in norm)
+        ):
+            out.append(_NO_ROW)
+        elif (
+            len(st) >= 3 and st[2] == 0 and st[0] == st[1] and st[0] in want
+        ):
+            out.append(_EVERY_ROW)
         else:
-            v, _ = _victims_by_stats(man, col, vals)
-            alive &= set(v)
-    victims = [f for f in man["files"] if f in alive]
-    carried = [f for f in man["files"] if f not in alive]
-    return victims, carried
+            out.append(_SOME_ROWS)
+    return out
 
 
-def _full_match_files_where(man: dict, predicates: dict) -> list[str]:
-    """Files where EVERY row provably matches the whole conjunction:
-    the per-column whole-file proof must hold for EVERY predicate
-    column. For a partition column the directory IS the proof (every
-    row in ``month=5/`` has month 5, non-null); data columns need the
-    stats proof (min == max == a value, zero nulls).
+def _plan(man: dict, preds) -> tuple[list[str], list[str]]:
+    """The file planner for every predicate surface (reads, aggregates,
+    DML): ``(admitted, proven)`` over ``man``'s files, both in manifest
+    order, for a sanitized, non-empty predicate
+    (``_sanitize_predicates``). ``admitted`` holds every file that MAY
+    hold a matching row — every other file provably holds none;
+    ``proven`` (a subset) holds the files every row of which provably
+    matches — deletes drop them by reference, aggregates answer them
+    from metadata. Metadata only: no file is opened.
 
-    DNF (list of branch dicts): a file fully matches the DISJUNCTION
-    when every row provably matches SOME single branch whole — the
-    UNION of the per-branch proofs. (A file whose rows split across
-    branches with none covering it alone is NOT proven — sound but
-    not complete; it stays a boundary file and scans. Never a false
-    whole-file drop.)"""
-    if isinstance(predicates, (list, tuple)):
-        u: set = set()
-        for branch in predicates:
-            u |= set(_full_match_files_where(man, branch))
-        return sorted(u)
-    full: set | None = None
-    for col, vals in predicates.items():
-        if isinstance(vals, _NullTest):
-            s = set(_null_full_files(man, col, vals))
-        elif isinstance(vals, Range):
-            if _phys(man, col) in set(_manifest_partition_cols(man) or ()):
-                s = set(_range_dir_files(man, col, vals, "exclude"))
-            else:
-                s = set(_range_full_files(man, col, vals))
-        elif _canonical_partition_values(man, col, vals):
-            # "exclude": the directory IS the proof — a file not
-            # encoding the column proves nothing and must not be
-            # whole-file-dropped
-            s = set(_partition_pruned_files(man, {col: vals}, "exclude"))
-        else:
-            s = set(_full_match_files(man, col, vals))
-        full = s if full is None else (full & s)
-        if not full:
-            return []
-    return sorted(full or ())
+    Each leaf gives each file a verdict (``_leaf_verdicts``); a
+    conjunction takes the lowest verdict of its leaves (excludable by
+    any one column carries the file; proven only when every column
+    proves it) and a DNF the highest of its branches. So a DNF admits
+    what some branch admits and proves what some single branch proves
+    whole — a file whose rows split across branches stays a boundary
+    file: sound, not complete."""
+    files = man["files"]
+    best = None
+    for branch in preds if isinstance(preds, (list, tuple)) else [preds]:
+        verdict = None
+        for col, vals in branch.items():
+            leaf = _leaf_verdicts(man, col, vals)
+            verdict = (
+                leaf if verdict is None else list(map(min, verdict, leaf))
+            )
+        best = verdict if best is None else list(map(max, best, verdict))
+    return (
+        [f for f, v in zip(files, best) if v != _NO_ROW],
+        [f for f, v in zip(files, best) if v == _EVERY_ROW],
+    )
 
 
 def _match_expr(predicates: dict):
@@ -5673,74 +5558,66 @@ def _match_expr(predicates: dict):
 def _rewrite_matching_files(
     spark: SparkSession,
     path: str,
-    predicates: dict,
+    latest: int,
+    man: dict,
+    plan: tuple[list[str], list[str]],
     fn,
     op: str,
     full_drop: bool = False,
 ) -> tuple[int, int]:
-    """Shared DML rewrite: apply ``fn`` to the rows of every file that
-    may match the conjunctive ``predicates`` ({col: values}); carry
-    every other file by reference; publish as one commit. Returns
-    ``(new_version, rows_affected)`` where rows_affected = victim rows
-    before - surviving rows after for a delete, and matching rows for
-    an update (fn reports via the returned frame's ``_matched`` column
-    when present).
+    """Shared DML rewrite over the statement's head (``latest``,
+    ``man``; equality deletes resolved) and its ``_plan``: apply ``fn``
+    to the rows of every admitted file; carry every other file by
+    reference; publish as one commit. Returns ``(new_version,
+    rows_affected)`` where rows_affected = victim rows before -
+    surviving rows after for a delete, and matching rows for an update
+    (fn reports via the returned frame's ``_matched`` column when
+    present).
 
-    ``full_drop=True`` (delete semantics only): victim files whose
-    stats PROVE every row matches (``_full_match_files``) are dropped
-    from the manifest by reference — never read, never rewritten. A
-    delete keyed on a well-clustered column (the common retire-a-key
-    case after a cluster_by compact) then rewrites only the boundary
-    files where matches mix with survivors; the bulk of the victim
-    bytes move nowhere. Their deleted-row count comes from recorded
-    footer counts minus live tombstones — exact, metadata-only."""
-    latest, man = _manifest_at(spark, path)
-    latest, man = _eq_resolved_head(spark, path, latest, man)
+    ``full_drop=True`` (delete semantics only): the plan's proven files
+    — every row provably matches — are dropped from the manifest by
+    reference, never read, never rewritten. A delete keyed on a
+    well-clustered column (the common retire-a-key case after a
+    cluster_by compact) then rewrites only the boundary files where
+    matches mix with survivors; the bulk of the victim bytes move
+    nowhere. Their deleted-row count comes from recorded footer counts
+    minus live tombstones — exact, metadata-only."""
     # stats proofs and row accounting below are position-exact
     assert not man.get("eqs"), "equality deletes must be resolved first"
-    predicates = _sanitize_predicates(predicates)
-    if not predicates:  # some column's values were all None: no match
-        return latest, 0
-    victims, carried = _victims_by_stats_where(man, predicates)
-    schema = StructType.fromJson(man["schema"])
-    dropped: list[str] = []
-    drop_rows = 0
-    if full_drop and victims:
-        fullset = set(_full_match_files_where(man, predicates))
-        if fullset:
-            dropped = sorted(f for f in victims if f in fullset)
-            victims = [f for f in victims if f not in fullset]
-            drop_rows = _live_row_total(spark, path, man, dropped)
+    admitted, proven = plan
+    dropped = proven if full_drop else []
+    dset = set(dropped)
+    victims = [f for f in admitted if f not in dset]
     if not victims and not dropped:
         return latest, 0
+    aset = set(admitted)
+    carried = [f for f in man["files"] if f not in aset]
+    drop_rows = _live_row_total(spark, path, man, dropped) if dropped else 0
+    # rewrite in the TABLE'S layout: an unpartitioned rewrite would
+    # leave files without partition directories, which
+    # replace_partitions/merge would then always carry — stale rows
+    pc = _manifest_partition_cols(man)
+    new_files, affected = [], 0
     if victims:
         # merge-on-read: already-tombstoned rows must not resurrect
         # into the rewritten files (the carried DV entries for the
         # rewritten victims become inert once their files drop out)
         df = _scan_live(spark, path, man, victims)
         before = df.count()
-        rewritten = fn(df)
+        rewritten = fn(df).localCheckpoint(eager=True)
         if "_matched" in rewritten.columns:
-            rewritten = rewritten.localCheckpoint(eager=True)
             affected = rewritten.where("_matched").count()
             rewritten = rewritten.drop("_matched")
         else:
-            rewritten = rewritten.localCheckpoint(eager=True)
             affected = before - rewritten.count()
-        # rewrite in the TABLE'S layout: an unpartitioned rewrite would
-        # leave files without partition directories, which
-        # replace_partitions/merge would then always carry — stale rows
-        pc = _manifest_partition_cols(man)
         _, new_files = _write_commit_files(
             rewritten, path, pc, colmap=_colmap(man) or None
         )
-    else:  # every victim full-dropped: a pure manifest edit
-        pc = _manifest_partition_cols(man)
-        new_files, affected = [], 0
     # rewritten files' stats are recomputed when columns are tracked
     stats_cols = man.get("stats_cols") or []
+    cset = set(carried)
     new_stats = {
-        f: s for f, s in man.get("stats", {}).items() if f in set(carried)
+        f: s for f, s in (man.get("stats") or {}).items() if f in cset
     }
     if stats_cols and new_files:
         new_stats.update(
@@ -5757,7 +5634,7 @@ def _rewrite_matching_files(
         spark,
         path,
         sorted(carried + new_files),
-        schema,
+        StructType.fromJson(man["schema"]),
         op,
         latest,
         extra=extra or None,
@@ -5771,8 +5648,9 @@ def _check_update_targets(man: dict, set_values: dict) -> StructType:
     merge-on-read — one copy, so a validation fix can never apply to
     one physical path and not the other): ``set_values`` columns must
     exist, and partition columns refuse (rows would have to MOVE
-    directories; ``snapshot_merge`` handles key-preserving
-    repartitioning updates). Returns the table schema."""
+    directories; ``eqdeletes.snapshot_append_upsert`` — what SQL
+    ``MERGE INTO`` lowers to — moves a keyed row to a new partition).
+    Returns the table schema."""
     schema = StructType.fromJson(man["schema"])
     fields = {f.name: f.dataType for f in schema.fields}
     unknown = set(set_values) - set(fields)
@@ -5783,9 +5661,9 @@ def _check_update_targets(man: dict, set_values: dict) -> StructType:
     if touched_pc:
         raise ValueError(
             f"cannot update partition column(s) {sorted(touched_pc)} — "
-            "rows would have to MOVE directories; use "
-            "snapshot_merge for key-preserving repartitioning "
-            "updates"
+            "rows would have to MOVE directories; upsert the changed "
+            "rows by key with snapshot_append_upsert (SQL MERGE INTO) "
+            "to move them between partitions"
         )
     return schema
 
@@ -5804,21 +5682,19 @@ def _set_value_expr(v, dtype):
 def _update_rows_dv_where(
     spark: SparkSession,
     path: str,
-    predicates: dict,
+    latest: int,
+    man: dict,
+    predicates,
+    plan: tuple[list[str], list[str]],
     set_values: dict,
 ) -> tuple[int, int]:
     """Merge-on-read update — the engine behind
-    ``snapshot_update(mode="dv")``."""
-    latest, man = _manifest_at(spark, path)
-    latest, man = _eq_resolved_head(spark, path, latest, man)
+    ``snapshot_update(mode="dv")``, over the statement's head
+    (``latest``, ``man``; equality deletes resolved) and its
+    ``_plan``."""
     # stats proofs and row accounting below are position-exact
     assert not man.get("eqs"), "equality deletes must be resolved first"
-    schema = _check_update_targets(man, set_values)
-    pc = _manifest_partition_cols(man) or []
-    predicates = _sanitize_predicates(predicates)
-    if not predicates:
-        return latest, 0
-    victims, _carried = _victims_by_stats_where(man, predicates)
+    victims, _proven = plan
     if not victims:
         return latest, 0
     matched_rows = (
@@ -5826,9 +5702,11 @@ def _update_rows_dv_where(
         .where(_match_expr(predicates))
         .localCheckpoint(eager=True)  # one scan feeds count + 2 writes
     )
-    n = matched_rows.count()
+    n, new_dvs, new_tgts = _write_tombstones(matched_rows, path)
     if n == 0:
         return latest, 0
+    schema = StructType.fromJson(man["schema"])
+    pc = _manifest_partition_cols(man)
     out_cols = []
     for f in schema.fields:
         if f.name in set_values:
@@ -5838,15 +5716,8 @@ def _update_rows_dv_where(
         else:
             out_cols.append(F.col(f.name))
     _, new_files = _write_commit_files(
-        matched_rows.select(*out_cols), path, pc or None,
+        matched_rows.select(*out_cols), path, pc,
         colmap=_colmap(man) or None,
-    )
-    _, new_dvs = _write_commit_files(
-        matched_rows.select("_dv_file", "_dv_pos").repartition(
-            max(1, -(-n // 4_000_000))
-        ),
-        path,
-        None,
     )
     stats_cols = man.get("stats_cols") or []
     extra: dict = {"dv_added": new_dvs, "dv_rows_added": n}
@@ -5856,10 +5727,6 @@ def _update_rows_dv_where(
             **collect_file_stats(spark, path, new_files, stats_cols),
         }
         extra["stats_cols"] = stats_cols
-    new_tgts = [
-        r[0]
-        for r in matched_rows.select("_dv_file").distinct().collect()
-    ]
     version = _commit(
         spark,
         path,
@@ -5868,7 +5735,7 @@ def _update_rows_dv_where(
         "update_rows_dv",
         latest,
         extra=extra,
-        partition_cols=pc or None,
+        partition_cols=pc,
         dv_files=sorted((man.get("dv_files") or []) + new_dvs),
         dv_targets=_dv_targets_for(man, new_tgts),
     )
@@ -6040,21 +5907,9 @@ def snapshot_resolve_eq(spark: SparkSession, path: str) -> tuple[int, int]:
         # seq groups' unions) must produce ONE tombstone — duplicate
         # (file, pos) entries would inflate every count correction
         matched = matched.distinct()
-    matched = matched.localCheckpoint(eager=True)
-    n = matched.count()
-    new_dvs: list[str] = []
-    new_tgts: list[str] = []
-    if n:
-        _, new_dvs = _write_commit_files(
-            matched.repartition(
-                max(1, n // 4_000_000 + (n % 4_000_000 > 0))
-            ),
-            path,
-            None,
-        )
-        new_tgts = [
-            r[0] for r in matched.select("_dv_file").distinct().collect()
-        ]
+    n, new_dvs, new_tgts = _write_tombstones(
+        matched.localCheckpoint(eager=True), path
+    )
     extra: dict = {
         "eq_resolved": [e["path"] for e in entries],
         "eq_rows_resolved": n,
@@ -6229,49 +6084,32 @@ def snapshot_drop_partitions(
     partitions hold THEN (an append racing into a matched partition is
     the append-then-delete ordering, exactly what retrying a DELETE
     means)."""
-    for _ in range(retries):
+    for attempt in range(retries + 1):
         try:
-            return _drop_partitions_once(spark, path, partitions)
+            return _drop_partitions_once(
+                spark, path, partitions, *_manifest_at(spark, path)
+            )
         except SnapshotConflict:
-            continue
-    return _drop_partitions_once(spark, path, partitions)
+            if attempt == retries:
+                raise
 
 
 def _drop_partitions_once(
-    spark: SparkSession, path: str, partitions: dict
+    spark: SparkSession, path: str, partitions: dict, latest: int, man: dict
 ) -> tuple[int, int]:
-    latest, man = _manifest_at(spark, path)
+    """One ``snapshot_drop_partitions`` attempt against the head
+    (``latest``, ``man``)."""
     latest, man = _eq_resolved_head(spark, path, latest, man)
     matched = _partition_pruned_files(man, partitions)
     if not matched:
         return latest, 0
     dropped = set(matched)
-    carried = [f for f in man["files"] if f not in dropped]
     rows_deleted = _live_row_total(spark, path, man, matched)
-    dv_files: object = _DV_INHERIT
-    dv_targets: object = _DV_INHERIT
-    if man.get("dv_files") and man.get("dv_targets") is not None:
-        live_tgts = set(man["dv_targets"]) & set(carried)
-        if live_tgts:
-            dv_targets = sorted(live_tgts)
-        else:  # every tombstone targeted a dropped file: all inert
-            dv_files, dv_targets = None, None
-    stats_extra = (
-        {
-            "stats": {
-                f: st
-                for f, st in man["stats"].items()
-                if f not in dropped
-            },
-            "stats_cols": man.get("stats_cols"),
-        }
-        if man.get("stats") is not None
-        else {}
-    )
+    dv_files, dv_targets, stats_extra = _drop_by_reference(man, dropped)
     version = _commit(
         spark,
         path,
-        carried,
+        [f for f in man["files"] if f not in dropped],
         StructType.fromJson(man["schema"]),
         "drop_partitions",
         latest,
@@ -6300,6 +6138,27 @@ DV_THRESHOLD_MB = 64
 # DV-writing DML consolidates sidecars once this many have accumulated
 # (``_maybe_auto_compact_dvs``; None or 0 turns it off)
 AUTO_COMPACT_FILES = 12
+
+
+def _auto_mode(
+    spark: SparkSession, path: str, plan: tuple[list[str], list[str]]
+) -> str:
+    """``mode="auto"``'s DML strategy from the statement's ``_plan``:
+    ``dv`` once the on-disk bytes of the admitted files a rewrite would
+    copy exceed ``DV_THRESHOLD_MB``, else the join-free ``rewrite``.
+    Proven files are discounted: a delete drops them by reference for
+    free, and an update needs a new image of every row under both
+    strategies (merge-on-read adds a tombstone per row), so counting
+    them would tip a clustered-key mass update onto the worse DV path.
+    Only boundary files, where matches mix with rows DV avoids
+    rewriting, tell the strategies apart. Metadata-only; file sizes fan
+    out to executors past a small count (``_file_bytes_total``)."""
+    admitted, proven = plan
+    pset = set(proven)
+    cost = _file_bytes_total(
+        spark, _root(path), [f for f in admitted if f not in pset]
+    )
+    return "dv" if cost > DV_THRESHOLD_MB * 1024 * 1024 else "rewrite"
 
 
 def snapshot_delete(
@@ -6347,10 +6206,11 @@ def snapshot_delete(
     if mode not in ("auto", "dv", "rewrite"):
         raise ValueError(f"mode must be auto|dv|rewrite; got {mode!r}")
     preds = _sanitize_predicates(where)
+    latest, man = _manifest_at(spark, path)
     if not preds:
-        return _manifest_at(spark, path)[0], 0
+        return latest, 0
+    latest, man = _eq_resolved_head(spark, path, latest, man)
     if mode == "auto":
-        _, man = _manifest_at(spark, path)
         pc = set(_manifest_partition_cols(man) or ())
         if (
             # DNF (multi-branch OR) takes the data paths: per-branch
@@ -6379,17 +6239,17 @@ def snapshot_delete(
             # until a compact migrates the old files
             and not _files_not_encoding(man, preds)
         ):
-            return snapshot_drop_partitions(spark, path, preds)
-        cost = _victim_bytes(
-            spark, path, preds, discount_full_match=True, man=man
-        )
-        mode = "dv" if cost > DV_THRESHOLD_MB * 1024 * 1024 else "rewrite"
+            return _drop_partitions_once(spark, path, preds, latest, man)
+    plan = _plan(man, preds)
+    if mode == "auto":
+        mode = _auto_mode(spark, path, plan)
     if mode == "rewrite":
         return _rewrite_matching_files(
-            spark, path, preds, lambda df: df.where(~_match_expr(preds)),
+            spark, path, latest, man, plan,
+            lambda df: df.where(~_match_expr(preds)),
             "delete_rows", full_drop=True,
         )
-    out = _delete_rows_dv_where(spark, path, preds)
+    out = _delete_rows_dv_where(spark, path, latest, man, preds, plan)
     _maybe_auto_compact_dvs(spark, path, AUTO_COMPACT_FILES)
     return out
 
@@ -6427,22 +6287,21 @@ def snapshot_update(
     ``vacuum_snapshots``."""
     if mode not in ("auto", "dv", "rewrite"):
         raise ValueError(f"mode must be auto|dv|rewrite; got {mode!r}")
-    if mode == "auto":
-        mode = (
-            "dv"
-            if _victim_bytes(spark, path, where, discount_full_match=True)
-            > DV_THRESHOLD_MB * 1024 * 1024
-            else "rewrite"
-        )
-    if mode == "dv":
-        out = _update_rows_dv_where(spark, path, where, set_values)
-        _maybe_auto_compact_dvs(spark, path, AUTO_COMPACT_FILES)
-        return out
+    preds = _sanitize_predicates(where)
     latest, man = _manifest_at(spark, path)
     schema = _check_update_targets(man, set_values)
-    preds = _sanitize_predicates(where)
     if not preds:
         return latest, 0
+    latest, man = _eq_resolved_head(spark, path, latest, man)
+    plan = _plan(man, preds)
+    if mode == "auto":
+        mode = _auto_mode(spark, path, plan)
+    if mode == "dv":
+        out = _update_rows_dv_where(
+            spark, path, latest, man, preds, plan, set_values
+        )
+        _maybe_auto_compact_dvs(spark, path, AUTO_COMPACT_FILES)
+        return out
 
     def fn(df):
         matched = _match_expr(preds)
@@ -6465,7 +6324,9 @@ def snapshot_update(
                 cols.append(F.col(f.name))
         return df.select(*cols, matched.alias("_matched"))
 
-    return _rewrite_matching_files(spark, path, preds, fn, "update_rows")
+    return _rewrite_matching_files(
+        spark, path, latest, man, plan, fn, "update_rows"
+    )
 
 
 def snapshot_add_column(
@@ -6918,10 +6779,9 @@ def snapshot_set_layout(
     - ``snapshot_replace_partitions`` keeps its existing fail-fast
       (carried files are classified by directory, unclassifiable files
       raise with a compact-first message);
-    - DML victim planning keeps its no-false-negatives contract
-      (unmigrated files stay candidates — mode "include");
-    - whole-file proofs never fire without the directory (mode
-      "exclude").
+    - the file planner (``_plan``) keeps its no-false-negatives
+      contract: unmigrated files stay candidates and are never proven
+      from a directory they lack.
 
     Refusals: unknown columns; renamed columns or physical slots of
     renames (partition directories are physical names — the
@@ -6989,39 +6849,3 @@ def snapshot_set_layout(
         dv_files=man.get("dv_files"),
         dv_targets=_dv_targets_for(man),
     )
-
-
-def _victim_bytes(
-    spark: SparkSession, path: str, predicates: dict,
-    discount_full_match: bool = False,
-    man: dict | None = None,
-) -> int:
-    """Total on-disk bytes of the stats-selected victim files for the
-    conjunctive ``predicates`` — what a copy-on-write DML would
-    rewrite. Metadata-only; file sizes fan out to executors in batches
-    past a small count (``_file_bytes_total``), so even the
-    stats-can't-exclude-anything case (stats-less table, un-statted
-    column — every file a victim) is one parallel stat job, and a
-    genuinely SMALL table still gets its cheap join-free rewrite
-    under the threshold instead of being forced onto tombstones.
-
-    ``discount_full_match``: exclude files whose every row provably
-    matches from the dv-vs-rewrite TIPPING estimate. For a delete they
-    rewrite for FREE (dropped by reference). For an update they cost
-    the SAME under both strategies — every row needs a new image
-    either way, and merge-on-read additionally writes one tombstone
-    per row and leaves the dead bytes in place until compact — so
-    counting them would tip a clustered-key mass update onto the
-    strictly worse DV path. Only boundary files, where matches mix
-    with rows DV avoids rewriting, genuinely differentiate the
-    strategies."""
-    predicates = _sanitize_predicates(predicates)
-    if not predicates:  # some column all-None: nothing can match
-        return 0
-    if man is None:  # callers with the head manifest in hand pass it
-        man = _manifest_at(spark, path)[1]
-    victims, _carried = _victims_by_stats_where(man, predicates)
-    if discount_full_match:
-        full = set(_full_match_files_where(man, predicates))
-        victims = [f for f in victims if f not in full]
-    return _file_bytes_total(spark, _root(path), victims)

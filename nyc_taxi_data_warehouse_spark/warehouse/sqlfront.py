@@ -522,7 +522,7 @@ def _merge_range(p: _Parser, col: str, prev, lo=None, hi=None,
 # and OR/AND/parentheses — lowered at parse time to disjunctive normal
 # form: a list of conjunction dicts the manifest planner executes as a
 # UNION of per-branch victim sets (one commit, one residual scan — see
-# snapshots._victims_by_stats_where). Negations desugar to the range
+# snapshots._plan). Negations desugar to the range
 # forms the planner already proves exactly: ``col != v`` becomes
 # ``col < v OR col > v`` (verified equivalent under Spark semantics,
 # including NaN, which Spark orders greater than any other double —

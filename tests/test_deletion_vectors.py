@@ -803,6 +803,41 @@ def test_snapshot_delete_mode_auto_dispatch(spark, table, monkeypatch):
         snapshot_delete(spark, table, {"id": [1]}, mode="bogus")
 
 
+def test_dml_opens_the_head_once_per_statement(spark, table, monkeypatch):
+    """Every DELETE/UPDATE strategy opens the head manifest exactly
+    once: the auto decision and the engine it picks share one opened,
+    sanitized and planned head (auto landing on either strategy)."""
+    from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
+
+    snapshot_write_with_stats(
+        _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]),
+        table, stats_cols=["id"], partition_cols=["month"],
+    )
+    opens = []
+    real = sn._manifest_at
+
+    def spy(*a, **k):
+        opens.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(sn, "_manifest_at", spy)
+    cases = [("auto", 1024), ("auto", 0), ("rewrite", 64), ("dv", 64)]
+    for i, (mode, threshold) in enumerate(cases):
+        monkeypatch.setattr(sn, "DV_THRESHOLD_MB", threshold)
+        opens.clear()
+        _, n = snapshot_delete(spark, table, {"id": [i]}, mode=mode)
+        assert (n, len(opens)) == (1, 1), (mode, threshold)
+        opens.clear()
+        _, n = snapshot_update(
+            spark, table, {"id": [10 + i]}, {"v": "x"}, mode=mode
+        )
+        assert (n, len(opens)) == (1, 1), (mode, threshold)
+    assert _bag(read_snapshot(spark, table)) == sorted(
+        (i, i % 2, "x" if 10 <= i < 14 else f"v{i}")
+        for i in range(4, 20)
+    )
+
+
 @pytest.mark.slowproof
 def test_auto_compact_consolidates_sidecar_pileup(spark, table, monkeypatch):
     """A stream of small DV deletes through the front door never lets

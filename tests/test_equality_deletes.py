@@ -31,6 +31,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_agg,
     snapshot_files,
     snapshot_resolve_eq,
+    snapshot_update,
     snapshot_versions,
     snapshot_write,
     snapshot_write_with_stats,
@@ -73,6 +74,22 @@ def _apply_changes(spark, table, base_rows, from_version=0):
 # ---------------------------------------------------------------------------
 # Core semantics
 # ---------------------------------------------------------------------------
+
+
+def test_partition_update_error_points_at_upsert(spark, table):
+    """UPDATE of a partition column refuses, and the advice it gives
+    works: an upsert by key moves the row to its new partition and
+    leaves exactly one live row per key."""
+    snapshot_write(
+        _df(spark, [(1, 0, "a"), (2, 0, "b"), (3, 1, "c")]),
+        table, partition_cols=["month"],
+    )
+    with pytest.raises(ValueError, match="snapshot_append_upsert"):
+        snapshot_update(spark, table, {"id": [1]}, {"month": 1})
+    snapshot_append_upsert(spark, table, _df(spark, [(1, 1, "a2")]), ["id"])
+    assert _bag(read_snapshot(spark, table)) == [
+        (1, 1, "a2"), (2, 0, "b"), (3, 1, "c"),
+    ]
 
 
 @pytest.mark.slowproof

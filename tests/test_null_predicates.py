@@ -28,12 +28,9 @@ import pytest
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     IS_NOT_NULL,
     IS_NULL,
-    _full_match_files_where,
     _list_manifests,
     _load_manifest,
-    _null_full_files,
-    _null_victims,
-    _victims_by_stats_where,
+    _plan,
     read_snapshot,
     snapshot_add_column,
     snapshot_agg,
@@ -70,12 +67,12 @@ def test_planner_sets(spark, tmp_path):
     t = str(tmp_path / "np_sets")
     _mk(spark, t)
     man = _head_man(spark, t)
-    v, _ = _victims_by_stats_where(man, {"email": IS_NULL})
-    assert len(v) == 2  # zero-null file0 excluded
-    assert len(_full_match_files_where(man, {"email": IS_NULL})) == 1
-    v, _ = _victims_by_stats_where(man, {"email": IS_NOT_NULL})
-    assert len(v) == 2  # all-null file2 excluded
-    assert len(_full_match_files_where(man, {"email": IS_NOT_NULL})) == 1
+    admitted, proven = _plan(man, {"email": IS_NULL})
+    assert len(admitted) == 2  # zero-null file0 excluded
+    assert len(proven) == 1
+    admitted, proven = _plan(man, {"email": IS_NOT_NULL})
+    assert len(admitted) == 2  # all-null file2 excluded
+    assert len(proven) == 1
 
 
 def test_counts_and_reads(spark, tmp_path):
@@ -154,16 +151,32 @@ def test_legacy_and_missing_stats_are_conservative():
             ],
         },
     }
-    assert _null_victims(man, "x", IS_NULL) == ["b", "c", "d"]
-    assert _null_victims(man, "x", IS_NOT_NULL) == ["a", "b", "d"]
-    assert _null_full_files(man, "x", IS_NULL) == ["c"]
-    assert _null_full_files(man, "x", IS_NOT_NULL) == ["a"]
-    # no recorded rows → IS NULL can't prove a whole file
+    assert _plan(man, {"x": IS_NULL}) == (["b", "c", "d"], ["c"])
+    assert _plan(man, {"x": IS_NOT_NULL}) == (["a", "b", "d"], ["a"])
+    # no recorded rows → IS NULL can't prove a whole file, and
+    # IS NOT NULL can't exclude one
     man["rows"] = {}
-    assert _null_full_files(man, "x", IS_NULL) == []
-    assert _null_victims(man, "x", IS_NOT_NULL) == [
-        "a", "b", "c", "d",
-    ]
+    assert _plan(man, {"x": IS_NULL}) == (["b", "c", "d"], [])
+    assert _plan(man, {"x": IS_NOT_NULL}) == (["a", "b", "c", "d"], ["a"])
+
+
+def test_empty_file_matches_no_null_test():
+    """A 0-row file fits both the "no row matches" and the "every row
+    matches" rule of a null test; "no row" wins, so another DNF branch
+    that only admits the file cannot be combined with the null test
+    into a whole-file proof."""
+    man = {
+        "files": ["e"],
+        "stats": {"e": {"x": [None, None, 0], "y": [1, 9, 0]}},
+        "rows": {"e": 0},
+        "schema": {"type": "struct", "fields": [
+            {"name": c, "type": "integer", "nullable": True, "metadata": {}}
+            for c in ("x", "y")
+        ]},
+    }
+    for test in (IS_NULL, IS_NOT_NULL):
+        assert _plan(man, {"x": test}) == ([], [])
+        assert _plan(man, [{"x": test}, {"y": [5]}]) == (["e"], [])
 
 
 def test_partition_column_null_test_is_exact(spark, tmp_path):

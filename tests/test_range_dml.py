@@ -185,7 +185,7 @@ def test_range_validation():
 
 
 def test_auto_mode_dispatches(spark, tmp_path):
-    """mode='auto' costs the range victims through _victim_bytes and
+    """mode='auto' costs the range victims through _plan and
     picks a strategy — tiny table lands on rewrite; either way the
     rows are exact."""
     t = str(tmp_path / "auto")

@@ -85,10 +85,11 @@ def meter(
 
     # the planner's own pre-delete accounting (what the DML engine
     # will decide), reconciled against the manifest diff below
-    victims, carried = snap._victims_by_stats_where(man_pre, preds)
-    full = set(snap._full_match_files_where(man_pre, preds))
-    planned_drops = [f for f in victims if f in full]
+    victims, planned_drops = snap._plan(man_pre, preds)
+    full = set(planned_drops)
     planned_boundary = [f for f in victims if f not in full]
+    admitted = set(victims)
+    carried = [f for f in pre_files if f not in admitted]
 
     # read twins first (pre-delete image): metadata-planned COUNT vs a
     # full scan of the same predicate
