@@ -175,6 +175,48 @@ def _min_scan_partitions(df, target: int) -> int:
     return max(len(files), total // max_bytes)
 
 
+def local_frame(spark: SparkSession, rows, schema):
+    """A DataFrame over driver-held ``rows`` that Spark plans as a
+    ``LocalRelation``: collecting it, or broadcasting it, runs no job.
+
+    ``spark.createDataFrame(list, schema)`` parallelizes the list into
+    an RDD, so every action on the frame starts a
+    ``defaultParallelism``-task job with Python workers (collecting a
+    one-row frame, 4 vCPU: ~0.4 s that way, ~40 ms this way).
+
+    ``schema`` is a DDL string or a ``StructType``. Rows are verified
+    and converted exactly as ``createDataFrame(list, schema)`` does
+    (``_make_type_verifier``, ``_create_converter``,
+    ``schema.toInternal``), so a naive TIMESTAMP still means process-
+    local time and a wrong-typed value raises the same error; the
+    internal values then travel as one Arrow table, which does not
+    depend on ``spark.sql.execution.arrow.pyspark.enabled``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import (
+        StructType,
+        _create_converter,
+        _make_type_verifier,
+        _parse_datatype_string,
+    )
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(schema.toInternal(convert(r)))
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*internal)) if internal else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def maybe_local_checkpoint(df, eager: bool = True):
     """``df.localCheckpoint(eager)`` unless ``SPARK_GRAFT_NO_CHECKPOINT=1``.
 

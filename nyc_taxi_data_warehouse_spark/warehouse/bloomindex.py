@@ -41,6 +41,7 @@ from ..operators.indexmeta import (
     read_index_parquet,
     write_index_meta,
 )
+from ..session import local_frame
 
 _ROWS_DDL = "file string, word int, bits long"
 
@@ -172,7 +173,12 @@ def bloom_candidate_files(
             "(probe hashing is type-sensitive; guessing risks silent "
             "false negatives)"
         )
-    probes = spark.createDataFrame([(v,) for v in values], ["_k"]).select(
+    # the probe column's type is inferred from the values (Spark's own
+    # row inference), then cast to the indexed type
+    rows = [(v,) for v in values]
+    probes = local_frame(
+        spark, rows, spark._inferSchemaFromList(rows, names=["_k"])
+    ).select(
         F.col("_k").cast(key_type).alias("_k")
     )
     if probes.where(F.col("_k").isNull()).limit(1).count():
@@ -228,7 +234,7 @@ def read_with_bloom(
     )
     schema = spark.read.parquet(table_path).schema
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     # candidate keys are _metadata.file_path strings (URI-encoded:
     # space → %20); Hadoop Path(String) wants the DECODED form, so
     # percent-decode before reading (unquote, NOT form-decoding — a
@@ -342,7 +348,7 @@ def _bloom_rows_for_files(
 
     table_path = _root(table_path)  # accept 'table#branch' refs
     if not files:
-        return spark.createDataFrame([], _ROWS_DDL)
+        return local_frame(spark, [], _ROWS_DDL)
     schema = StructType([StructField(key_col, _parse_datatype_string(key_type))])
     src = (
         spark.read.option("recursiveFileLookup", "true")
@@ -350,8 +356,10 @@ def _bloom_rows_for_files(
         .parquet(*[f"{table_path}/{f}" for f in files])
     )
     raw = F.broadcast(
-        spark.createDataFrame(
-            [(_uri_encode_relpath(f), f) for f in files], "_enc string, file string"
+        local_frame(
+            spark,
+            [(_uri_encode_relpath(f), f) for f in files],
+            "_enc string, file string",
         )
     )
     # LEFT join + raise on a miss: an inner join would silently drop an
@@ -383,8 +391,8 @@ def _bloom_rows_for_files(
             for w, msk in _probe_pairs(F.col("_k"), m_bits, k)
         ]
     )
-    sentinels = spark.createDataFrame(
-        [(f, _SENTINEL_WORD, 0) for f in files], _ROWS_DDL
+    sentinels = local_frame(
+        spark, [(f, _SENTINEL_WORD, 0) for f in files], _ROWS_DDL
     )  # driver-sized: one row per manifest relpath, same order as the
     # manifest itself
     return (
@@ -519,7 +527,7 @@ def sync_bloom_with_snapshot(
     to_add = sorted(live - indexed)
     if departed:
         live_df = F.broadcast(
-            spark.createDataFrame([(f,) for f in sorted(live)], "file string")
+            local_frame(spark, [(f,) for f in sorted(live)], "file string")
         )
         survivors = (
             rows.join(live_df, "file", "left_semi")
@@ -585,7 +593,7 @@ def read_snapshot_with_bloom(
     files = [f for f in cand if f in live]
     schema = StructType.fromJson(man["schema"])
     if not files:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     from .snapshots import _colmap
 
     cmap = _colmap(man)

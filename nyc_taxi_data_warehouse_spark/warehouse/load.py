@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import FHVHV_WAREHOUSE_SCHEMA, SOURCE_RENAMES
+from ..session import local_frame
 from .catalog import FACT_TABLE, INGEST_LOG
 
 
@@ -196,7 +197,7 @@ def load_month(
                 # Built fresh (not out.limit(0)): ``out`` carries the
                 # Observation, which is single-use per action
                 snapshot_write(
-                    spark.createDataFrame([], out.schema), snapshot_path,
+                    local_frame(spark, [], out.schema), snapshot_path,
                     partition_cols=["year", "month"],
                 )
 
@@ -329,15 +330,13 @@ def backfill(
     """
     if not manifest:
         return []
-    mdf = spark.createDataFrame(manifest, "source_path string, year int, month int")
+    mdf = local_frame(
+        spark, manifest, "source_path string, year int, month int"
+    )
     loaded: set[tuple[int, int]] | None = None
     if backend == "snapshot":
         loaded = _snapshot_loaded_months(spark, snapshot_path)
-        ldf = (
-            spark.createDataFrame(sorted(loaded), "year int, month int")
-            if loaded
-            else spark.createDataFrame([], "year int, month int")
-        )
+        ldf = local_frame(spark, sorted(loaded), "year int, month int")
     else:
         ldf = spark.table(INGEST_LOG).select("year", "month")
     todo = (
@@ -370,8 +369,10 @@ def _already_loaded(spark: SparkSession, year: int, month: int) -> bool:
 def _record(spark: SparkSession, path: str, year: int, month: int, rows: int) -> None:
     row = [(path, year, month, rows)]
     (
-        spark.createDataFrame(
-            row, "source_path string, year int, month int, row_count long"
+        local_frame(
+            spark,
+            row,
+            "source_path string, year int, month int, row_count long",
         )
         .withColumn("loaded_at", F.current_timestamp())
         .write.mode("append")

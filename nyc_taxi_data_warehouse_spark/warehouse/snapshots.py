@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from . import manifestlog
 
 _VDIR = "_versions"
@@ -387,6 +388,38 @@ def _write_commit_files(
     return commit, sorted(files)
 
 
+# Spark's inferred schema per (basePath, paths) set of commit or sidecar
+# files. Every such file lives in a uuid-named dir written once with
+# mode("error") (``_write_commit_files``) and is never rewritten in
+# place, so a path set's schema never changes: the 1-task inference job
+# a schemaless read launches runs once per set per process, not once
+# per read. Bounded by wholesale clear, like ``_FOOTER_CACHE``.
+_SCHEMA_MEMO: dict[tuple[str | None, tuple[str, ...]], StructType] = {}
+_SCHEMA_MEMO_MAX = 4096
+
+
+def _read_files(
+    spark: SparkSession, paths: list[str], base_path: str | None = None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` over commit or sidecar files (with
+    ``basePath`` when given, so partition directories below it become
+    columns) — the ONE reader for them. The first read of a path set
+    infers its schema; later reads pass the memoized schema and plan
+    without a job."""
+    reader = spark.read
+    if base_path is not None:
+        reader = reader.option("basePath", base_path)
+    key = (base_path, tuple(paths))
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return reader.schema(schema).parquet(*paths)
+    df = reader.parquet(*paths)
+    if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+        _SCHEMA_MEMO.clear()
+    _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
 _DV_INHERIT = "inherit"
 
 
@@ -525,7 +558,7 @@ def _sidecar_df(
     threshold policy every sidecar consumer (position DVs, equality
     keys, the change feed's delta reads) shares."""
     root = _root(root)
-    df = spark.read.parquet(*[f"{root}/{p}" for p in paths]).select(*cols)
+    df = _read_files(spark, [f"{root}/{p}" for p in paths]).select(*cols)
     fs, jvm = _fs(spark, root)
     total = sum(
         fs.getFileStatus(_jp(jvm, root, p)).getLen() for p in paths
@@ -634,7 +667,7 @@ def _commit(
     if dv_files and not dv_targets:
         dv_targets = sorted(
             r[0]
-            for r in spark.read.parquet(*[f"{root}/{p}" for p in dv_files])
+            for r in _read_files(spark, [f"{root}/{p}" for p in dv_files])
             .select("_dv_file")
             .distinct()
             .collect()
@@ -1377,7 +1410,7 @@ def _read_at(
         else:  # provably-empty range / emptied IN list
             files = []
     if not files:  # nothing can match: answer without planning a scan
-        return spark.createDataFrame([], StructType.fromJson(man["schema"]))
+        return local_frame(spark, [], StructType.fromJson(man["schema"]))
     out = _scan_live(spark, path, man, files)
     for cond in conds:
         out = out.where(cond)
@@ -1641,7 +1674,8 @@ def _read_file_list_flat(
         if row_ids:
             row.append(f)
         lookup_rows.append((*row, *[vals.get(c) for c in partition_cols]))
-    lookup = spark.createDataFrame(
+    lookup = local_frame(
+        spark,
         lookup_rows,
         ", ".join(
             ["_relpath string"]
@@ -1699,6 +1733,12 @@ def _read_file_list(
     defaults: dict | None = None,
 ) -> DataFrame:
     """Scan an explicit manifest file list, normalised to ``schema``.
+
+    Planning launches no Spark job once each commit dir's file set has
+    been read in this process: the per-commit reads go through
+    ``_read_files``, whose schema memo stands in for Spark's inference
+    job (commit dirs are immutable), and the driver-built lookups are
+    ``local_frame``s.
 
     ``defaults`` ({PHYSICAL column name: scalar}): INITIAL defaults —
     a column added with a default fills that value for rows of files
@@ -1832,7 +1872,7 @@ def _read_file_list(
                 else []
             )
         )
-        return spark.createDataFrame([], out)
+        return local_frame(spark, [], out)
     # Partition values live in the directory names UNDER each commit
     # dir, so each commit is its own basePath: one read per commit
     # (bounded by retained versions, not data size), unioned by name.
@@ -1868,8 +1908,8 @@ def _read_file_list(
     parts = []
     dtypes = {f.name: f.dataType for f in schema.fields}
     for commit, flist in sorted(by_commit.items()):
-        p = spark.read.option("basePath", f"{path}/{commit}").parquet(
-            *[f"{path}/{f}" for f in flist]
+        p = _read_files(
+            spark, [f"{path}/{f}" for f in flist], f"{path}/{commit}"
         )
         # INITIAL defaults: fill per commit group, BEFORE the union —
         # physical absence of the column marks exactly the pre-add
@@ -1907,7 +1947,8 @@ def _read_file_list(
     if not want_ids:
         return df  # never touch user columns when no DV machinery ran
     enc2raw = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(_uri_encode_relpath(f), f) for f in files],
             "_dv_enc string, _dv_file string",
         )
@@ -2427,7 +2468,7 @@ def snapshot_changes(
             )
         )
     if not changes:
-        empty = spark.createDataFrame([], out_schema)
+        empty = local_frame(spark, [], out_schema)
         return empty.withColumn(
             "_change_type", F.lit("").cast("string")
         ).withColumn("_commit_version", F.lit(0).cast("int"))
@@ -2568,7 +2609,8 @@ def snapshot_files(
                 else None,
             )
         )
-    base = spark.createDataFrame(
+    base = local_frame(
+        spark,
         rows,
         "file string, rows long, partition_values string, "
         "has_tombstones boolean, has_eq_deletes boolean, stats string",
@@ -3317,7 +3359,8 @@ def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
                 json.dumps(extras, sort_keys=True) if extras else None,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version int, op string, parent int, committed_at_ms long, "
         "n_files int, n_dv_files int, extras string",
@@ -4081,10 +4124,10 @@ def _dv_entry_count(
     if not dv_files or not files:
         return 0
     live = F.broadcast(
-        spark.createDataFrame([(f,) for f in files], "_dv_file string")
+        local_frame(spark, [(f,) for f in files], "_dv_file string")
     )
     return (
-        spark.read.parquet(*[f"{_root(root)}/{p}" for p in dv_files])
+        _read_files(spark, [f"{_root(root)}/{p}" for p in dv_files])
         .join(live, "_dv_file", "left_semi")
         .count()
     )
@@ -4523,7 +4566,10 @@ def snapshot_merge(
     feeds converge and redelivery is a no-op) on a snapshot table:
     readers keep their version, the merge publishes the next one, and a
     crash mid-merge leaves only an orphan commit dir. Keys must be
-    partition-stable, as in ``merge.py``.
+    partition-stable, as in ``merge.py``: an update whose key is live
+    in a partition no update row touches raises ``ValueError``
+    (``_require_partition_stable``); ``eqdeletes.snapshot_append_upsert``
+    moves rows between partitions.
 
     - ``mode="rewrite"``: copy-on-write — the updates' distinct
       partition keys (metadata-sized, broadcast) prune the target read
@@ -4536,6 +4582,7 @@ def snapshot_merge(
     """
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be rewrite|dv; got {mode!r}")
+    _require_partition_stable(spark, path, updates, keys, partition_cols)
     if mode == "dv":
         return _merge_dv(
             spark, path, updates, keys, partition_cols, version_col
@@ -4569,6 +4616,57 @@ def snapshot_merge(
     # version's immutable files — the snapshot layer dissolves the
     # read-while-overwriting hazard merge.py checkpoints around.
     return snapshot_replace_partitions(merged, path, partition_cols)
+
+
+def _require_partition_stable(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    keys: list[str],
+    partition_cols: list[str],
+) -> None:
+    """Refuse a merge one of whose update keys is live in a partition
+    no update row touches: both merge modes replace rows only inside
+    the touched partitions, so that row would stay live beside the
+    key's new image — a silent duplicate key. Metadata prunes the
+    check: one aggregate over ``updates`` gives a ``Range(min, max)``
+    per key column, and ``_plan`` drops the files whose stats exclude
+    it; only the admitted files' live rows are semi-joined."""
+    _, man = _manifest_at(spark, path)
+    bounds = updates.agg(
+        *[F.min(k) for k in keys], *[F.max(k) for k in keys]
+    ).first()
+    preds = {}
+    for i, k in enumerate(keys):
+        lo, hi = bounds[i], bounds[len(keys) + i]
+        if lo is None:
+            return  # the column's keys are all NULL: equality matches none
+        try:
+            preds[k] = Range(lo, hi)
+        except ValueError:
+            pass  # no range over this type (bool, binary): no pruning by it
+    files = _plan(man, preds)[0] if preds else man["files"]
+    if not files:
+        return
+    clash = (
+        _scan_live(spark, path, man, files)
+        .join(
+            F.broadcast(updates.select(*partition_cols).distinct()),
+            partition_cols,
+            "left_anti",
+        )
+        .join(updates.select(*keys).distinct(), keys, "left_semi")
+        .select(*keys)
+        .first()
+    )
+    if clash is not None:
+        raise ValueError(
+            f"merge keys must be partition-stable: key {tuple(clash)} is "
+            "live in a partition the updates do not touch, and the merge "
+            "would leave it beside its new image — use "
+            "eqdeletes.snapshot_append_upsert, which moves a row between "
+            "partitions"
+        )
 
 
 def _merge_dv(
@@ -4726,7 +4824,7 @@ def collect_file_stats(
     path = _root(path)
     if not files or not stats_cols:
         return {}
-    df = spark.read.parquet(*[f"{path}/{f}" for f in files])
+    df = _read_files(spark, [f"{path}/{f}" for f in files])
     present = [c for c in stats_cols if c in df.columns]
     if not present:
         return {}
@@ -5776,12 +5874,10 @@ def snapshot_compact_dvs(
     if not dvs:
         return latest
     live = F.broadcast(
-        spark.createDataFrame(
-            [(f,) for f in man["files"]], "_dv_file string"
-        )
+        local_frame(spark, [(f,) for f in man["files"]], "_dv_file string")
     )
     entries_plan = (
-        spark.read.parquet(*[f"{root}/{p}" for p in dvs])
+        _read_files(spark, [f"{root}/{p}" for p in dvs])
         .select("_dv_file", "_dv_pos")
         .join(live, "_dv_file", "left_semi")
     )
@@ -6363,7 +6459,7 @@ def snapshot_add_column(
             )
         # try_cast: under ANSI mode a malformed literal THROWS at the
         # cast — the probe must turn that into this front door's error
-        probe = spark.createDataFrame([(1,)], "x int").select(
+        probe = local_frame(spark, [(1,)], "x int").select(
             F.lit(default).try_cast(dtype).alias("d")
         )
         normalized = probe.first()["d"]
@@ -6467,7 +6563,7 @@ def snapshot_drop_column(
     for cname, cexpr in sorted(
         _constraint_exprs(man.get("props")).items()
     ):
-        probe = spark.createDataFrame([], new_schema)
+        probe = local_frame(spark, [], new_schema)
         try:
             probe.select(F.expr(cexpr))  # analysis-only, no job
         except Exception:
@@ -6590,7 +6686,7 @@ def snapshot_rename_column(
     for cname, cexpr in sorted(
         _constraint_exprs(man.get("props")).items()
     ):
-        probe = spark.createDataFrame([], new_schema)
+        probe = local_frame(spark, [], new_schema)
         try:
             probe.select(F.expr(cexpr))  # analysis-only, no job
         except Exception:
@@ -6715,7 +6811,7 @@ def snapshot_widen_column(
     for cname, cexpr in sorted(
         _constraint_exprs(man.get("props")).items()
     ):
-        probe = spark.createDataFrame([], new_schema)
+        probe = local_frame(spark, [], new_schema)
         try:
             probe.select(F.expr(cexpr))  # analysis-only, no job
         except Exception:

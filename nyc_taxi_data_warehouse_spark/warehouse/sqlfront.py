@@ -47,6 +47,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .snapshots import _SQL_REGISTRY
 
 __all__ = ["snapshot_sql", "SqlFrontError"]
@@ -896,7 +897,9 @@ def _parse_predicates(p: _Parser) -> dict | list:
 
 
 def _one_row(spark: SparkSession, schema: str, row: tuple) -> DataFrame:
-    return spark.createDataFrame([row], schema)
+    """A statement's one-row result (DML counts, ALTER/OPTIMIZE
+    outcomes) as a ``local_frame``: collecting it runs no Spark job."""
+    return local_frame(spark, [row], schema)
 
 
 # ---------------------------------------------------------- executors
@@ -1019,8 +1022,10 @@ def _exec_update(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
         # SET a = b, b = a swaps.
         from pyspark.sql.types import StructType
 
-        probe = spark.createDataFrame(
-            [], StructType.fromJson(_manifest_at(spark, path)[1]["schema"])
+        probe = local_frame(
+            spark,
+            [],
+            StructType.fromJson(_manifest_at(spark, path)[1]["schema"]),
         )
         for c, e in raw.items():
             try:
@@ -1407,9 +1412,7 @@ def _exec_show_branches(spark, p: _Parser, stmt: str) -> DataFrame:
     path, _ = _resolve_table_read(spark, kind, text, stmt)
     p.end()
     names = list_branches(spark, path)
-    if not names:
-        return spark.createDataFrame([], "branch string")
-    return spark.createDataFrame([(n,) for n in names], "branch string")
+    return local_frame(spark, [(n,) for n in names], "branch string")
 
 
 def _exec_show_tags(spark, p: _Parser, stmt: str) -> DataFrame:
@@ -1419,10 +1422,8 @@ def _exec_show_tags(spark, p: _Parser, stmt: str) -> DataFrame:
     path, _ = _resolve_table_read(spark, kind, text, stmt)
     p.end()
     tags = list_tags(spark, path)
-    if not tags:
-        return spark.createDataFrame([], "tag string, version bigint")
-    return spark.createDataFrame(
-        sorted(tags.items()), "tag string, version bigint"
+    return local_frame(
+        spark, sorted(tags.items()), "tag string, version bigint"
     )
 
 
@@ -1718,7 +1719,8 @@ def _exec_insert(spark, p: _Parser, stmt: str, overwrite: bool) -> DataFrame:
             return str(v)
 
         listed = set(want)
-        pre = spark.createDataFrame(
+        pre = local_frame(
+            spark,
             [
                 tuple(_sform(d.get(c)) for c in tcols if c in listed)
                 for d in by_name
@@ -1938,8 +1940,8 @@ def _exec_show_tblproperties(spark, p: _Parser, stmt: str) -> DataFrame:
     path, _ = _resolve_table_read(spark, kind, text, stmt)
     p.end()
     props = snapshot_properties(spark, path)
-    return spark.createDataFrame(
-        sorted(props.items()) or [], "key string, value string"
+    return local_frame(
+        spark, sorted(props.items()), "key string, value string"
     )
 
 
@@ -2536,7 +2538,7 @@ def _try_select_fastpath(
             )
             for r in rows
         ]
-        out = spark.createDataFrame(data, StructType(fields))
+        out = local_frame(spark, data, StructType(fields))
         return out.limit(limit) if limit is not None else out
     if preds == []:
         df = read_snapshot(spark, path, version=version).limit(0)

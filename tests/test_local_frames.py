@@ -1,0 +1,265 @@
+"""Spark jobs the warehouse no longer launches for what the driver holds.
+
+- ``session.local_frame``: driver-built rows become a ``LocalRelation``
+  (no job to collect or broadcast) with exactly the values, types and
+  errors of ``spark.createDataFrame(list, schema)``.
+- ``snapshots._read_files``: the schema of an immutable commit or
+  sidecar path set is inferred once per process, so re-planning a read
+  runs no inference job.
+- Source guards keeping those the only two ways the warehouse builds
+  such frames.
+"""
+
+from __future__ import annotations
+
+import ast
+import datetime
+import decimal
+import pathlib
+import time
+
+import pytest
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from nyc_taxi_data_warehouse_spark.session import local_frame
+from nyc_taxi_data_warehouse_spark.warehouse import snapshots
+from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+    _manifest_at,
+    _read_files,
+    read_snapshot,
+    snapshot_register,
+    snapshot_versions,
+    snapshot_write,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import snapshot_sql
+
+WAREHOUSE = (
+    pathlib.Path(__file__).resolve().parent.parent
+    / "nyc_taxi_data_warehouse_spark"
+    / "warehouse"
+)
+
+ALL_TYPES = (
+    "s string, i int, b bigint, t tinyint, sm smallint, f float, "
+    "d double, bo boolean, d10 decimal(10,2), d38 decimal(38,2), "
+    "dt date, ts timestamp, tn timestamp_ntz, bin binary, "
+    "arr array<string>, m map<string,bigint>"
+)
+ALL_ROWS = [
+    (
+        "x", 1, 2**40, -3, 4, 1.5, 2.25, True,
+        decimal.Decimal("12345678.91"),
+        decimal.Decimal("123456789012345678901234567890123456.78"),
+        datetime.date(2024, 3, 10),
+        datetime.datetime(2024, 3, 10, 2, 30, 5, 123456),
+        datetime.datetime(2024, 11, 3, 1, 30, 0, 7),
+        bytearray(b"\x00\xff"),
+        ["p", None],
+        {"k": 5, "n": None},
+    ),
+    (None,) * 16,
+]
+NOT_NULL = StructType(
+    [StructField("k", LongType(), False), StructField("v", StringType())]
+)
+
+
+def _same_as_create(spark, rows, schema):
+    ours = local_frame(spark, rows, schema)
+    theirs = spark.createDataFrame(rows, schema)
+    assert ours.schema == theirs.schema
+    assert ours.collect() == theirs.collect()
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        (ALL_ROWS, ALL_TYPES),
+        ([], ALL_TYPES),
+        ([(1, "a"), (2, None)], NOT_NULL),
+        ([], NOT_NULL),
+    ],
+    ids=["all_types", "all_types_empty", "not_null", "not_null_empty"],
+)
+def test_local_frame_matches_create_dataframe(spark, rows, schema):
+    _same_as_create(spark, rows, schema)
+
+
+def test_local_frame_naive_timestamp_is_process_local(spark, monkeypatch):
+    """A naive TIMESTAMP means process-local time on both paths; feeding
+    naive datetimes to Arrow as-is would read them as UTC (5 h off
+    here)."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        _same_as_create(spark, ALL_ROWS, ALL_TYPES)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_local_frame_is_a_local_relation(spark):
+    df = local_frame(spark, ALL_ROWS, ALL_TYPES)
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def test_local_frame_without_arrow_conf(spark):
+    """Sessions the engine does not own may leave Arrow off."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        _same_as_create(spark, ALL_ROWS, ALL_TYPES)
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_local_frame_rejects_what_create_dataframe_rejects(spark):
+    for rows, schema in (([("x",)], "a int"), ([(None, "a")], NOT_NULL)):
+        with pytest.raises((TypeError, ValueError)) as theirs:
+            spark.createDataFrame(rows, schema)
+        with pytest.raises((TypeError, ValueError)) as ours:
+            local_frame(spark, rows, schema)
+        assert type(ours.value) is type(theirs.value)
+
+
+# ------------------------------------------------------------ job counts
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted from its job group once the
+    listener bus has delivered every event."""
+    sc = spark.sparkContext
+    group = f"local-frames-{time.perf_counter_ns()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture()
+def monthly(spark, tmp_path):
+    """A table loaded one commit per month, like ``load_month`` does,
+    read once so every commit's file set has been seen."""
+    path = str(tmp_path / "monthly")
+    for month in (1, 2, 3):
+        snapshot_write(
+            spark.createDataFrame(
+                [(i, 2024, month, f"v{i}") for i in range(5)],
+                "id int, year int, month int, v string",
+            ),
+            path,
+            mode="append",
+            partition_cols=["year", "month"],
+        )
+    snapshot_register(spark, path, "local_frames_monthly")
+    read_snapshot(spark, path).collect()
+    return path
+
+
+def test_partition_drop_delete_runs_no_job(spark, monthly):
+    out = []
+    n = _jobs(
+        spark,
+        lambda: out.extend(
+            snapshot_sql(
+                spark,
+                "DELETE FROM local_frames_monthly "
+                "WHERE year = 2024 AND month = 1",
+            ).collect()
+        ),
+    )
+    assert out[0]["num_affected_rows"] == 5
+    assert n == 0
+
+
+def test_metadata_count_runs_no_job(spark, monthly):
+    out = []
+    n = _jobs(
+        spark,
+        lambda: out.extend(
+            snapshot_sql(
+                spark,
+                "SELECT count(*) FROM local_frames_monthly "
+                "WHERE year = 2024 AND month = 2",
+            ).collect()
+        ),
+    )
+    assert out[0][0] == 5
+    assert n == 0
+
+
+def test_repeat_read_plans_without_a_job(spark, monthly):
+    v = snapshot_versions(spark, monthly)[-1]["version"]
+    read_snapshot(spark, monthly, version=v)
+    assert _jobs(spark, lambda: read_snapshot(spark, monthly, version=v)) == 0
+
+
+def test_memoized_read_matches_inferred_read(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "memo")
+    snapshot_write(
+        spark.createDataFrame(
+            [(i, f"p{i % 2}", i % 3, i * 1.5) for i in range(12)],
+            "id int, p string, q int, x double",
+        ),
+        path,
+        partition_cols=["p", "q"],
+    )
+    files = _manifest_at(spark, path)[1]["files"]
+    base = f"{path}/{files[0].rsplit('/', 3)[0]}"
+    paths = [f"{path}/{f}" for f in files]
+    monkeypatch.setattr(snapshots, "_SCHEMA_MEMO", {})
+    inferred = _read_files(spark, paths, base)
+    assert _jobs(spark, lambda: _read_files(spark, paths, base)) == 0
+    cached = _read_files(spark, paths, base)
+    assert cached.schema == inferred.schema
+    assert sorted(cached.collect()) == sorted(inferred.collect())
+
+
+# ---------------------------------------------------------- source guards
+
+
+def test_warehouse_builds_driver_frames_only_with_local_frame():
+    hits = [
+        f"{p.name}:{i}"
+        for p in sorted(WAREHOUSE.glob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert hits == []
+
+
+def _receiver_calls(node) -> list[str]:
+    """Attribute names along a call chain's receiver, outermost last."""
+    names = []
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names[::-1]
+
+
+def test_snapshots_infers_file_schemas_only_in_read_files():
+    """Every parquet read in ``snapshots.py`` outside ``_read_files``
+    passes its schema, so none can launch an inference job."""
+    tree = ast.parse((WAREHOUSE / "snapshots.py").read_text())
+    schemaless = []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name == "_read_files":
+            continue
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "parquet"
+            ):
+                chain = _receiver_calls(node.func)
+                if "read" in chain and "schema" not in chain:
+                    schemaless.append(f"{fn.name}:{node.lineno}")
+    assert schemaless == []

@@ -1479,6 +1479,44 @@ def test_snapshot_merge_upsert_versions_and_prunes(spark, table):
         snapshot_merge(spark, table, upd, ["id"], ["month"], mode="auto")
 
 
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+def test_snapshot_merge_refuses_key_moving_partition(spark, table, mode):
+    """Both merge modes replace rows only inside the partitions the
+    updates touch, so a key that is live in an untouched partition
+    would stay live beside its new image. The merge refuses it and
+    commits nothing; a key whose old partition IS touched merges."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_merge,
+    )
+
+    snapshot_write(
+        _df(spark, [(1, 1, "a"), (2, 1, "b"), (3, 3, "c")]),
+        table,
+        partition_cols=["month"],
+    )
+    head = snapshot_versions(spark, table)[-1]["version"]
+    with pytest.raises(ValueError, match="snapshot_append_upsert"):
+        snapshot_merge(
+            spark, table, _df(spark, [(1, 2, "moved")]), ["id"], ["month"],
+            mode=mode,
+        )
+    assert snapshot_versions(spark, table)[-1]["version"] == head
+    # month 1 is touched by id 2's update, so id 1's old row there is
+    # replaced: exactly one live row per key
+    snapshot_merge(
+        spark,
+        table,
+        _df(spark, [(1, 2, "moved"), (2, 1, "B")]),
+        ["id"],
+        ["month"],
+        mode=mode,
+    )
+    got = sorted(
+        (r.id, r.month, r.v) for r in read_snapshot(spark, table).collect()
+    )
+    assert got == [(1, 2, "moved"), (2, 1, "B"), (3, 3, "c")]
+
+
 def test_snapshot_merge_versioned_out_of_order_converges(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_merge,
