@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from ..schema import FHVHV_WAREHOUSE_SCHEMA, SOURCE_RENAMES
 from ..session import local_frame
 from .catalog import FACT_TABLE, INGEST_LOG
+from .snapshots import _observed
 
 
 @dataclass(frozen=True)
@@ -176,7 +177,7 @@ def load_month(
         rows_holder: dict[str, int] = {}
 
         def _load_extra() -> dict:
-            rows_holder["rows"] = _obs_rows(obs)
+            rows_holder["rows"] = _observed(obs, rows=0)["rows"]
             return {
                 "load": {
                     "year": year,
@@ -247,38 +248,9 @@ def load_month(
     # DataFrame is replaced; all other months are untouched.
     with dynamic_partition_overwrite(spark):
         out.write.mode("overwrite").insertInto(FACT_TABLE)
-    rows = _obs_rows(obs)
+    rows = _observed(obs, rows=0)["rows"]
     _record(spark, path, year, month, rows)
     return LoadResult(year, month, rows=rows, skipped=False)
-
-
-def _obs_rows(obs) -> int:
-    """The observed row count, tolerating the zero-task case: a write
-    of an empty month can schedule no tasks at all, the CollectMetrics
-    node then never executes, and ``Observation.get`` fails JVM-side —
-    no tasks means no rows, so 0 is exact, not a guess.
-
-    The zero-task case is detected by PROBING THE JVM OBSERVATION
-    STATE, not by substring-matching the exception text: an unrelated
-    JVM assertion raised during ``get`` would otherwise be
-    misclassified and permanently record rows=0 provenance for a
-    committed non-empty load (and a WAP audit would veto a perfectly
-    good branch). Never-populated state is a schema-less empty
-    ``GenericRow`` from ``getRow()`` (size 0 — observed on Spark
-    4.1.2; ``getOrEmpty`` NPEs on it, so it can't be the probe); a
-    populated observation always carries ``GenericRowWithSchema`` with
-    one field per metric. Any failure with a populated row re-raises."""
-    try:
-        return int(obs.get["rows"])
-    except Exception:
-        try:
-            jrow = obs._jo.getRow()
-            never_populated = jrow is None or int(jrow.size()) == 0
-        except Exception:
-            never_populated = False
-        if never_populated:
-            return 0
-        raise
 
 
 def _snapshot_loaded_months(

@@ -55,7 +55,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from ..session import local_frame
 from . import manifestlog
@@ -329,21 +329,48 @@ def _phys_fields(schema: StructType, colmap: dict) -> StructType:
     )
 
 
+def _as_nullable(dt):
+    """``dt`` with every level nullable — Spark's ``asNullable``, which
+    its file writers apply to the schema they store."""
+    from pyspark.sql.types import ArrayType, MapType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(
+            _as_nullable(dt.keyType), _as_nullable(dt.valueType), True
+        )
+    return dt
+
+
 def _write_commit_files(
     df: DataFrame,
     path: str,
     partition_cols: list[str] | None,
     colmap: dict | None = None,
+    max_records: int | None = None,
 ) -> tuple[str, list[str]]:
     """Write ``df`` as a new immutable commit dir; returns (commit id,
     file paths RELATIVE to the table root). Branch refs write into the
     same root data/ pool as main (uuid commit dirs cannot collide).
+    ``max_records`` caps the rows per file (``maxRecordsPerFile``).
 
     ``colmap`` (logical→physical, see ``_colmap``): ``df`` arrives
     with LOGICAL names from every writer; files always store PHYSICAL
     names, so renamed columns keep one on-disk identity across the
     table's whole history. ``partition_cols`` are already physical
-    (the manifest stores the directory layout's names)."""
+    (the manifest stores the directory layout's names).
+
+    The schema written is recorded for the commit dir (``_DIR_SCHEMAS``),
+    so the first read of the new files plans without an inference
+    job."""
     path = _root(path)
     commit = uuid.uuid4().hex
     dest = f"{path}/{_DDIR}/{commit}"
@@ -372,7 +399,25 @@ def _write_commit_files(
     writer = df.write.mode("error")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
+    if max_records:
+        writer = writer.option("maxRecordsPerFile", max_records)
     writer.parquet(dest)
+    # the schema a read of the dir sees: the stored (data) fields made
+    # nullable, then the partition fields under the written types, which
+    # parse the directory strings back exactly (inference would guess
+    # the types from the strings)
+    pset = set(partition_cols or ())
+    fields = df.schema.fields
+    if len(_DIR_SCHEMAS) >= _SCHEMA_MEMO_MAX:
+        _DIR_SCHEMAS.clear()
+    _DIR_SCHEMAS[dest] = (
+        _as_nullable(StructType([f for f in fields if f.name not in pset])),
+        _as_nullable(
+            StructType(
+                [f for c in partition_cols or () for f in fields if f.name == c]
+            )
+        ),
+    )
     spark = df.sparkSession
     fs, jvm = _fs(spark, path)
     root_uri = fs.makeQualified(_jp(jvm, path)).toString().rstrip("/")
@@ -396,28 +441,82 @@ def _write_commit_files(
 # per read. Bounded by wholesale clear, like ``_FOOTER_CACHE``.
 _SCHEMA_MEMO: dict[tuple[str | None, tuple[str, ...]], StructType] = {}
 _SCHEMA_MEMO_MAX = 4096
+# (data fields, partition fields) per commit dir this process wrote,
+# keyed by the dir's path as written (``_write_commit_files``); same
+# bound as ``_SCHEMA_MEMO``
+_DIR_SCHEMAS: dict[str, tuple[StructType, StructType]] = {}
+_COMMIT_DIR_RE = re.compile(rf"^(.*/{_DDIR}/[0-9a-f]{{32}})/")
+
+
+def _written_schema(
+    paths: list[str], base_path: str | None
+) -> StructType | None:
+    """The schema to read ``paths`` with, when this process wrote every
+    dir they live in (``None`` otherwise). With ``basePath`` = a commit
+    dir, its partition fields follow its data fields; without one,
+    Spark roots partition discovery at each file's own dir, so only
+    the data fields appear (and every dir must have written the same
+    ones)."""
+    if base_path is not None:
+        got = _DIR_SCHEMAS.get(base_path)
+        if got is None or not all(
+            p.startswith(base_path + "/") for p in paths
+        ):
+            return None
+        return StructType(got[0].fields + got[1].fields)
+    found = []
+    for p in paths:
+        m = _COMMIT_DIR_RE.match(p)
+        got = _DIR_SCHEMAS.get(m.group(1)) if m else None
+        if got is None:
+            return None
+        found.append(got[0])
+    return found[0] if all(s == found[0] for s in found) else None
 
 
 def _read_files(
-    spark: SparkSession, paths: list[str], base_path: str | None = None
+    spark: SparkSession,
+    paths: list[str],
+    base_path: str | None = None,
+    partition_types: dict | None = None,
 ) -> DataFrame:
     """``spark.read.parquet(*paths)`` over commit or sidecar files (with
     ``basePath`` when given, so partition directories below it become
-    columns) — the ONE reader for them. The first read of a path set
-    infers its schema; later reads pass the memoized schema and plan
-    without a job."""
+    columns) — the ONE reader for them. The schema comes from the
+    commit dirs' writer when this process wrote them, else from the
+    memo of an earlier read of the same path set, else from Spark's
+    inference job (once per set: the files are immutable).
+
+    ``partition_types`` ({partition column: DataType}, the manifest's)
+    parse the directory strings under the table's own types, memo hit
+    or miss: inference would guess them from the strings, turning a
+    STRING ``'01'`` into ``1``."""
     reader = spark.read
     if base_path is not None:
         reader = reader.option("basePath", base_path)
     key = (base_path, tuple(paths))
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is not None:
-        return reader.schema(schema).parquet(*paths)
-    df = reader.parquet(*paths)
-    if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
-        _SCHEMA_MEMO.clear()
-    _SCHEMA_MEMO[key] = df.schema
-    return df
+    schema = _SCHEMA_MEMO.get(key) or _written_schema(paths, base_path)
+    if schema is None:
+        schema = reader.parquet(*paths).schema
+        if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+            _SCHEMA_MEMO.clear()
+        _SCHEMA_MEMO[key] = schema
+    if partition_types and base_path is not None:
+        # only the fields the directories encode: a column the layout
+        # gained after these files were written is stored as data
+        rel = paths[0][len(base_path) + 1 :].split("/")[:-1]
+        pkeys = {s.split("=", 1)[0] for s in rel if "=" in s}
+        schema = StructType(
+            [
+                StructField(
+                    f.name, partition_types[f.name], f.nullable, f.metadata
+                )
+                if f.name in pkeys and f.name in partition_types
+                else f
+                for f in schema.fields
+            ]
+        )
+    return reader.schema(schema).parquet(*paths)
 
 
 _DV_INHERIT = "inherit"
@@ -437,33 +536,82 @@ def _dv_targets_for(man: dict, new_targets=()) -> object:
     return sorted(set(man.get("dv_targets") or ()) | set(new_targets))
 
 
-# tombstones per deletion-vector sidecar file (~a few hundred MB raw)
+# most tombstones per deletion-vector sidecar file (~a few hundred MB raw)
 _DV_ROWS_PER_SIDECAR = 4_000_000
+
+
+def _observed(obs, **zero) -> dict:
+    """The metrics ``obs`` collected during the action it observed — the
+    ONE reader of the warehouse's observations (``load_month``'s row
+    count, the DML engines' row counts and tombstone targets), so a
+    write reports its counts from its own job, never a second pass.
+
+    ``zero`` is the metrics' value over no rows, returned in the
+    zero-task case: a job over an empty input can schedule no tasks,
+    the CollectMetrics node then never executes, and
+    ``Observation.get`` fails JVM-side — no tasks means no rows, so
+    ``zero`` is exact, not a guess. That case is detected by PROBING
+    THE JVM OBSERVATION STATE, not by matching the exception text: a
+    never-populated observation's ``getRow()`` is a schema-less empty
+    ``GenericRow`` (size 0 on Spark 4.1.2; ``getOrEmpty`` NPEs on it),
+    while a populated one carries one field per metric. Any failure
+    with a populated row re-raises — an unrelated JVM error must never
+    become a recorded zero."""
+    try:
+        return obs.get
+    except Exception:
+        try:
+            jrow = obs._jo.getRow()
+            never_populated = jrow is None or int(jrow.size()) == 0
+        except Exception:
+            never_populated = False
+        if never_populated:
+            return dict(zero)
+        raise
 
 
 def _write_tombstones(
     matched: DataFrame, path: str
 ) -> tuple[int, list[str], list[str]]:
     """Write the ``(_dv_file, _dv_pos)`` identities of ``matched`` (a
-    materialized frame: it is read three times) as deletion-vector
-    sidecars of ``_DV_ROWS_PER_SIDECAR`` tombstones each. Returns ``(n,
+    lazy frame, read once by the write job) as deletion-vector sidecars
+    of at most ``_DV_ROWS_PER_SIDECAR`` tombstones each. Returns ``(n,
     sidecars, targets)``: the tombstone count, the sidecar relpaths and
     the distinct files tombstoned — metadata-sized, recorded in the
     manifest so readers split clean files past the anti-join and the
-    feed planner never opens a sidecar. Writes nothing when ``n`` is
-    0."""
-    n = matched.count()
-    if not n:
-        return 0, [], []
-    _, sidecars = _write_commit_files(
-        matched.select(*_DV_COLS).repartition(-(-n // _DV_ROWS_PER_SIDECAR)),
+    feed planner never opens a sidecar. ``n`` and the targets are
+    observed by the write job itself; when ``n`` is 0 the commit dir
+    (Spark writes one empty part file) is removed and nothing is
+    returned.
+
+    The observation sits above the rebalance exchange, so it runs in
+    the writing (result) stage, where each partition's metrics count
+    once — a retried shuffle-map stage would count its rows twice —
+    and above ``matched``'s DV/equality masks and match filter, which
+    Spark does not push below it."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    commit, sidecars = _write_commit_files(
+        matched.select(*_DV_COLS)
+        .hint("rebalance")
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set("_dv_file").alias("targets"),
+        ),
         path,
         None,
+        max_records=_DV_ROWS_PER_SIDECAR,
     )
-    targets = [
-        r[0] for r in matched.select("_dv_file").distinct().collect()
-    ]
-    return n, sidecars, targets
+    got = _observed(obs, n=0, targets=[])
+    if not got["n"]:
+        spark = matched.sparkSession
+        root = _root(path)
+        fs, jvm = _fs(spark, root)
+        fs.delete(_jp(jvm, root, _DDIR, commit), True)
+        return 0, [], []
+    return got["n"], sidecars, sorted(got["targets"])
 
 
 def _drop_by_reference(
@@ -1015,6 +1163,14 @@ def snapshot_write(
             parent = versions[-1] if versions else None
 
 
+def _partition_dir(relpath: str) -> str:
+    """The partition directories of a commit-file relpath
+    (``data/<commit>/a=1/b=x/part-…`` → ``a=1/b=x``; ``''`` when
+    unpartitioned)."""
+    rel = relpath.split("/", 2)[-1]
+    return rel.rsplit("/", 1)[0] if "/" in rel else ""
+
+
 def snapshot_replace_partitions(
     df: DataFrame, path: str, partition_cols: list[str],
     extra=None,
@@ -1030,22 +1186,14 @@ def snapshot_replace_partitions(
     ledger). ``extra`` may be a CALLABLE returning the dict — it is
     invoked only after the commit files are written, so values that
     materialize with the write job (an Observation's row count) can be
-    recorded without a second scan."""
+    recorded without a second scan.
+
+    The touched partitions are the directories of the files the write
+    produced, so the write job is the statement's only pass over
+    ``df``."""
     spark = df.sparkSession
     versions = _list_manifests(spark, path)
     parent = versions[-1] if versions else None
-    # Metadata-sized: one row per touched partition. Null partition
-    # values land in Spark's default-partition directory; values whose
-    # STRING form needs path escaping (spaces etc.) are out of contract
-    # for partition columns here, as in the rest of the warehouse.
-    touched_rows = df.select(*partition_cols).distinct().collect()
-    touched = {
-        "/".join(
-            f"{c}=__HIVE_DEFAULT_PARTITION__" if r[c] is None else f"{c}={r[c]}"
-            for c in partition_cols
-        )
-        for r in touched_rows
-    }
     if parent is not None:
         _require_same_layout(
             _load_manifest(spark, path, parent),
@@ -1060,6 +1208,12 @@ def snapshot_replace_partitions(
     _, new_files = _write_commit_files(
         df, path, partition_cols, colmap=cmap
     )
+    # The touched partitions are the directories the write produced:
+    # every partition present in ``df`` holds at least one new file, and
+    # Spark's own directory strings (``b=true``, ``d=1.0E16``, null as
+    # the default-partition name, escaped characters) compare exactly
+    # with the carried files' — no value is ever re-rendered in Python.
+    touched = {_partition_dir(f) for f in new_files}
     extra_doc = extra() if callable(extra) else extra
     seen_files = (
         set(_load_manifest(spark, path, parent)["files"])
@@ -1088,8 +1242,7 @@ def snapshot_replace_partitions(
                         "old files in their original dirs); run "
                         "snapshot_compact to migrate them first"
                     )
-                pdir = rel.rsplit("/", 1)[0] if "/" in rel else ""
-                if pdir not in touched:
+                if _partition_dir(f) not in touched:
                     carried.append(f)
         try:
             return _commit(
@@ -1128,8 +1281,7 @@ def snapshot_replace_partitions(
                 )
                 head_files = set(pman["files"])
             for f in head_files ^ seen_files:
-                rel = f.split("/", 2)[-1]
-                pdir = rel.rsplit("/", 1)[0] if "/" in rel else ""
+                pdir = _partition_dir(f)
                 if pdir in touched:
                     raise SnapshotConflict(
                         f"partition {pdir!r} was modified concurrently "
@@ -1687,13 +1839,13 @@ def _read_file_list_flat(
     out_cols = [
         F.col(f.name).cast(f.dataType).alias(f.name)
         if f.name in pfields
-        else F.col(f.name)
+        else f.name
         for f in schema.fields
     ]
     if versions is not None:
-        out_cols.append(F.col("_commit_version"))
+        out_cols.append("_commit_version")
     if row_ids:
-        out_cols.extend([F.col("_dv_file"), F.col("_dv_pos")])
+        out_cols.extend(_DV_COLS)
     scan = scan.withColumn(
         "_relpath", _relpath_from_file_path(F.col("_metadata.file_path"))
     )
@@ -1735,10 +1887,13 @@ def _read_file_list(
     """Scan an explicit manifest file list, normalised to ``schema``.
 
     Planning launches no Spark job once each commit dir's file set has
-    been read in this process: the per-commit reads go through
-    ``_read_files``, whose schema memo stands in for Spark's inference
-    job (commit dirs are immutable), and the driver-built lookups are
-    ``local_frame``s.
+    been written or read in this process: the per-commit reads go
+    through ``_read_files``, whose recorded writer schemas and schema
+    memo stand in for Spark's inference job (commit dirs are
+    immutable), and the driver-built lookups are ``local_frame``s. The
+    per-commit reads type partition columns with the manifest's types,
+    and only columns stored under another type than the manifest's are
+    cast.
 
     ``defaults`` ({PHYSICAL column name: scalar}): INITIAL defaults —
     a column added with a default fills that value for rows of files
@@ -1907,9 +2062,11 @@ def _read_file_list(
         return _apply_dvs(spark, path, df, dv_files, keep_ids=row_ids)
     parts = []
     dtypes = {f.name: f.dataType for f in schema.fields}
+    ptypes = {c: dtypes[c] for c in partition_cols or () if c in dtypes}
     for commit, flist in sorted(by_commit.items()):
         p = _read_files(
-            spark, [f"{path}/{f}" for f in flist], f"{path}/{commit}"
+            spark, [f"{path}/{f}" for f in flist], f"{path}/{commit}",
+            partition_types=ptypes,
         )
         # INITIAL defaults: fill per commit group, BEFORE the union —
         # physical absence of the column marks exactly the pre-add
@@ -1933,17 +2090,26 @@ def _read_file_list(
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p, allowMissingColumns=True)
-    for f in schema.fields:
-        if f.name not in df.columns:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
     # pin the manifest's types (an int widened to bigint by a newer
-    # writer reads back as bigint everywhere)
-    out_cols = [
-        F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields
-    ]
-    if want_ids:
-        out_cols.extend([F.col("_dv_enc"), F.col("_dv_pos")])
-    df = df.select(*out_cols)
+    # writer reads back as bigint everywhere) and null-fill columns no
+    # commit stores. Columns already read under their manifest type
+    # pass by name: a Column per field costs py4j round trips and a
+    # Python call-site capture each
+    read = {f.name: f.dataType for f in df.schema.fields}
+    ids = ["_dv_enc", "_dv_pos"] if want_ids else []
+    same = [read.get(f.name) == f.dataType for f in schema.fields]
+    if not all(same) or [f.name for f in schema.fields] + ids != list(read):
+        df = df.select(
+            *[
+                f.name
+                if ok
+                else (F.col(f.name) if f.name in read else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f, ok in zip(schema.fields, same)
+            ],
+            *ids,
+        )
     if not want_ids:
         return df  # never touch user columns when no DV machinery ran
     enc2raw = F.broadcast(
@@ -4726,8 +4892,6 @@ def _merge_dv(
             updates.select(*keys).distinct(), keys, "left_semi"
         ).select(*_DV_COLS)
         new_rows = updates.select(*cols)
-    tombs = tombs.localCheckpoint(eager=True)
-    new_rows = new_rows.localCheckpoint(eager=True)
     _, new_files = _write_commit_files(
         new_rows, path, partition_cols, colmap=_colmap(man) or None
     )
@@ -4962,13 +5126,12 @@ def _delete_rows_dv_where(
     n, new_dvs, new_tgts = 0, [], []
     if victims:
         # the live-row mask never tombstones a row twice
-        matched = (
-            _scan_live(spark, path, man, victims, row_ids=True)
-            .where(_match_expr(predicates))
-            .select(*_DV_COLS)
-            .localCheckpoint(eager=True)  # one scan feeds count AND write
+        n, new_dvs, new_tgts = _write_tombstones(
+            _scan_live(spark, path, man, victims, row_ids=True).where(
+                _match_expr(predicates)
+            ),
+            path,
         )
-        n, new_dvs, new_tgts = _write_tombstones(matched, path)
     if n == 0 and not dropped:
         return latest, 0
     drop_rows = _live_row_total(spark, path, man, dropped) if dropped else 0
@@ -5667,10 +5830,11 @@ def _rewrite_matching_files(
     ``man``; equality deletes resolved) and its ``_plan``: apply ``fn``
     to the rows of every admitted file; carry every other file by
     reference; publish as one commit. Returns ``(new_version,
-    rows_affected)`` where rows_affected = victim rows before -
+    rows_affected)`` where rows_affected = live victim rows before -
     surviving rows after for a delete, and matching rows for an update
     (fn reports via the returned frame's ``_matched`` column when
-    present).
+    present). Both counts are observed by the write job itself, so the
+    victims are read once, by the job that writes their replacement.
 
     ``full_drop=True`` (delete semantics only): the plan's proven files
     — every row provably matches — are dropped from the manifest by
@@ -5697,20 +5861,34 @@ def _rewrite_matching_files(
     pc = _manifest_partition_cols(man)
     new_files, affected = [], 0
     if victims:
+        from pyspark.sql import Observation
+
         # merge-on-read: already-tombstoned rows must not resurrect
         # into the rewritten files (the carried DV entries for the
-        # rewritten victims become inert once their files drop out)
-        df = _scan_live(spark, path, man, victims)
-        before = df.count()
-        rewritten = fn(df).localCheckpoint(eager=True)
-        if "_matched" in rewritten.columns:
-            affected = rewritten.where("_matched").count()
-            rewritten = rewritten.drop("_matched")
-        else:
-            affected = before - rewritten.count()
-        _, new_files = _write_commit_files(
-            rewritten, path, pc, colmap=_colmap(man) or None
+        # rewritten victims become inert once their files drop out).
+        # Both counts ride on the write job: the live rows above the
+        # masks, and the rows fn keeps (or marks ``_matched``) above
+        # its filter — Spark pushes no filter below an observation
+        live, kept = Observation(), Observation()
+        rewritten = fn(
+            _scan_live(spark, path, man, victims).observe(
+                live, F.count(F.lit(1)).alias("n")
+            )
         )
+        matched = "_matched" in rewritten.columns
+        rewritten = rewritten.observe(
+            kept,
+            (F.count_if("_matched") if matched else F.count(F.lit(1))).alias(
+                "n"
+            ),
+        )
+        _, new_files = _write_commit_files(
+            rewritten.drop("_matched") if matched else rewritten,
+            path, pc, colmap=_colmap(man) or None,
+        )
+        affected = _observed(kept, n=0)["n"]
+        if not matched:
+            affected = _observed(live, n=0)["n"] - affected
     # rewritten files' stats are recomputed when columns are tracked
     stats_cols = man.get("stats_cols") or []
     cset = set(carried)
@@ -5798,7 +5976,7 @@ def _update_rows_dv_where(
     matched_rows = (
         _scan_live(spark, path, man, victims, row_ids=True)
         .where(_match_expr(predicates))
-        .localCheckpoint(eager=True)  # one scan feeds count + 2 writes
+        .localCheckpoint(eager=True)  # one scan feeds 2 writes
     )
     n, new_dvs, new_tgts = _write_tombstones(matched_rows, path)
     if n == 0:
@@ -6003,9 +6181,7 @@ def snapshot_resolve_eq(spark: SparkSession, path: str) -> tuple[int, int]:
         # seq groups' unions) must produce ONE tombstone — duplicate
         # (file, pos) entries would inflate every count correction
         matched = matched.distinct()
-    n, new_dvs, new_tgts = _write_tombstones(
-        matched.localCheckpoint(eager=True), path
-    )
+    n, new_dvs, new_tgts = _write_tombstones(matched, path)
     extra: dict = {
         "eq_resolved": [e["path"] for e in entries],
         "eq_rows_resolved": n,

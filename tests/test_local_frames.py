@@ -8,6 +8,11 @@
   runs no inference job.
 - Source guards keeping those the only two ways the warehouse builds
   such frames.
+- One pass per warehouse write: DML counts and tombstone targets are
+  observed by the write job itself, the touched partitions of a
+  partition replace come from the files written, and a commit dir's
+  schema is recorded by its writer, so the first read runs no
+  inference job.
 """
 
 from __future__ import annotations
@@ -15,6 +20,7 @@ from __future__ import annotations
 import ast
 import datetime
 import decimal
+import os
 import pathlib
 import time
 
@@ -22,16 +28,21 @@ import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from nyc_taxi_data_warehouse_spark.session import local_frame
-from nyc_taxi_data_warehouse_spark.warehouse import snapshots
+from nyc_taxi_data_warehouse_spark.warehouse import load_month, snapshots
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+    Range,
     _manifest_at,
     _read_files,
     read_snapshot,
+    snapshot_delete,
     snapshot_register,
+    snapshot_update,
     snapshot_versions,
     snapshot_write,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import snapshot_sql
+
+from .test_warehouse_load import _make_raw_month
 
 WAREHOUSE = (
     pathlib.Path(__file__).resolve().parent.parent
@@ -213,11 +224,154 @@ def test_memoized_read_matches_inferred_read(spark, tmp_path, monkeypatch):
     base = f"{path}/{files[0].rsplit('/', 3)[0]}"
     paths = [f"{path}/{f}" for f in files]
     monkeypatch.setattr(snapshots, "_SCHEMA_MEMO", {})
+    monkeypatch.setattr(snapshots, "_DIR_SCHEMAS", {})
     inferred = _read_files(spark, paths, base)
     assert _jobs(spark, lambda: _read_files(spark, paths, base)) == 0
     cached = _read_files(spark, paths, base)
     assert cached.schema == inferred.schema
     assert sorted(cached.collect()) == sorted(inferred.collect())
+
+
+def test_written_schema_matches_inferred_schema(spark, tmp_path, monkeypatch):
+    """The schema a writer records for its commit dir is the one
+    inference reads back, with and without the dir as ``basePath``."""
+    path = str(tmp_path / "written")
+    ddl = (
+        ALL_TYPES
+        + ", st struct<a: int, `b c`: string>, p string, q int"
+    )
+    snapshot_write(
+        local_frame(
+            spark,
+            [(*ALL_ROWS[0], (1, "x"), "a", 1), (*ALL_ROWS[1], None, None, 2)],
+            ddl,
+        ),
+        path,
+        partition_cols=["p", "q"],
+    )
+    files = _manifest_at(spark, path)[1]["files"]
+    base = f"{path}/{files[0].split('/p=')[0]}"
+    paths = [f"{path}/{f}" for f in files]
+    written = [_read_files(spark, paths, b).schema for b in (base, None)]
+    monkeypatch.setattr(snapshots, "_DIR_SCHEMAS", {})
+    monkeypatch.setattr(snapshots, "_SCHEMA_MEMO", {})
+    assert written == [_read_files(spark, paths, b).schema for b in (base, None)]
+
+
+# ------------------------------------------------- one pass per write
+
+
+@pytest.fixture()
+def flat(spark, tmp_path):
+    """An unpartitioned three-commit table with no file stats, so every
+    statement reads every file; ``k`` runs 0..29."""
+    path = str(tmp_path / "flat")
+    for c in range(3):
+        snapshot_write(
+            spark.createDataFrame(
+                [(c * 10 + i, f"v{i}") for i in range(10)], "k int, v string"
+            ),
+            path,
+            mode="append",
+        )
+    return path
+
+
+def test_rewrite_delete_counts_only_live_matching_rows(spark, flat):
+    assert snapshot_delete(spark, flat, {"k": Range(0, 14)}, mode="dv")[1] == 15
+    want = read_snapshot(spark, flat).where("k BETWEEN 10 AND 24").count()
+    _, n = snapshot_delete(spark, flat, {"k": Range(10, 24)}, mode="rewrite")
+    assert n == want == 10
+    assert sorted(r.k for r in read_snapshot(spark, flat).collect()) == list(
+        range(25, 30)
+    )
+
+
+def test_rewrite_update_counts_matched_rows_exactly(spark, flat):
+    snapshot_delete(spark, flat, {"k": Range(0, 14)}, mode="dv")
+    want = read_snapshot(spark, flat).where("k BETWEEN 10 AND 24").count()
+    _, n = snapshot_update(
+        spark, flat, {"k": Range(10, 24)}, {"v": "u"}, mode="rewrite"
+    )
+    assert n == want == 10
+    got = read_snapshot(spark, flat).where("v = 'u'").count()
+    assert got == 10
+
+
+@pytest.mark.parametrize("verb", ["delete", "update"])
+def test_zero_match_dv_statement_writes_nothing(spark, flat, verb):
+    head = snapshot_versions(spark, flat)[-1]["version"]
+    dirs = sorted(os.listdir(f"{flat}/data"))
+    where = {"k": [999]}
+    out = (
+        snapshot_delete(spark, flat, where, mode="dv")
+        if verb == "delete"
+        else snapshot_update(spark, flat, where, {"v": "u"}, mode="dv")
+    )
+    assert out == (head, 0)
+    assert snapshot_versions(spark, flat)[-1]["version"] == head
+    assert sorted(os.listdir(f"{flat}/data")) == dirs
+
+
+def test_tombstone_sidecars_hold_at_most_the_cap(spark, flat, monkeypatch):
+    monkeypatch.setattr(snapshots, "_DV_ROWS_PER_SIDECAR", 7)
+    man = _manifest_at(spark, flat)[1]
+    matched = snapshots._scan_live(
+        spark, flat, man, man["files"], row_ids=True
+    ).where("k % 2 = 0")
+    want = {tuple(r) for r in matched.select("_dv_file", "_dv_pos").collect()}
+    n, sidecars, targets = snapshots._write_tombstones(matched, flat)
+    assert n == len(want) == 15
+    assert targets == sorted({f for f, _ in want})
+    parts = [spark.read.parquet(f"{flat}/{s}").collect() for s in sidecars]
+    assert max(len(p) for p in parts) <= 7
+    assert {tuple(r) for p in parts for r in p} == want
+    assert sum(len(p) for p in parts) == n
+
+
+def test_rewrite_delete_is_one_job(spark, monthly):
+    n = _jobs(
+        spark,
+        lambda: snapshot_delete(spark, monthly, {"id": [1, 2]}, mode="rewrite"),
+    )
+    assert n == 1
+
+
+def test_dv_delete_jobs(spark, monthly):
+    """The tombstone write's exchange and write, plus the broadcast of
+    the relpath lookup the row identities are decoded with."""
+    n = _jobs(
+        spark,
+        lambda: snapshot_delete(spark, monthly, {"id": [1, 2]}, mode="dv"),
+    )
+    assert n == 3
+
+
+def test_load_month_is_raw_inference_plus_write(spark, tmp_path):
+    raw = str(tmp_path / "raw.parquet")
+    _make_raw_month(spark, raw, 2025, 1, n=50)
+    res = []
+    n = _jobs(
+        spark,
+        lambda: res.append(
+            load_month(
+                spark, raw, 2025, 1, backend="snapshot",
+                snapshot_path=str(tmp_path / "fact"),
+            )
+        ),
+    )
+    assert res[0].rows == 50
+    assert n == 2
+
+
+def test_first_read_after_a_write_runs_no_job(spark, tmp_path):
+    path = str(tmp_path / "fresh")
+    snapshot_write(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, p string"),
+        path,
+        partition_cols=["p"],
+    )
+    assert _jobs(spark, lambda: read_snapshot(spark, path)) == 0
 
 
 # ---------------------------------------------------------- source guards
@@ -263,3 +417,38 @@ def test_snapshots_infers_file_schemas_only_in_read_files():
                 if "read" in chain and "schema" not in chain:
                     schemaless.append(f"{fn.name}:{node.lineno}")
     assert schemaless == []
+
+
+def test_write_paths_run_no_bookkeeping_action():
+    """The write job is the only pass these statements make over their
+    rows: no count, checkpoint or collect beside it."""
+    tree = ast.parse((WAREHOUSE / "snapshots.py").read_text())
+    guarded = {
+        "_rewrite_matching_files",
+        "_delete_rows_dv_where",
+        "_write_tombstones",
+        "snapshot_resolve_eq",
+        "snapshot_replace_partitions",
+    }
+    found = set()
+    hits = []
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef) or fn.name not in guarded:
+            continue
+        found.add(fn.name)
+        for node in ast.walk(fn):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and (
+                    node.func.attr == "localCheckpoint"
+                    or (
+                        node.func.attr in ("count", "collect")
+                        and not node.args
+                        and not node.keywords
+                    )
+                )
+            ):
+                hits.append(f"{fn.name}:{node.lineno}")
+    assert found == guarded
+    assert hits == []

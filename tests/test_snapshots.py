@@ -28,6 +28,45 @@ def table(tmp_path):
     return str(tmp_path / "snap_table")
 
 
+@pytest.mark.parametrize(
+    "ptype, rows, new",
+    [
+        ("boolean", [(1, True), (2, False)], (10, True)),
+        ("double", [(1, 1e16), (2, 2.5)], (10, 1e16)),
+    ],
+    ids=["boolean", "large_double"],
+)
+def test_replace_partitions_replaces_non_string_partitions(
+    spark, table, ptype, rows, new
+):
+    """The replaced partition is the one Spark wrote (``p=true``,
+    ``p=1.0E16``), however Python would render the value."""
+    ddl = f"id int, p {ptype}"
+    snapshot_write(spark.createDataFrame(rows, ddl), table, partition_cols=["p"])
+    snapshot_replace_partitions(spark.createDataFrame([new], ddl), table, ["p"])
+    got = sorted(tuple(r) for r in read_snapshot(spark, table).collect())
+    assert got == sorted([rows[1], new])
+
+
+def test_per_commit_read_keeps_string_partition_values(
+    spark, table, monkeypatch
+):
+    """A STRING partition value that looks numeric reads back as
+    written, also when the reading process never saw the write."""
+    from nyc_taxi_data_warehouse_spark.warehouse import snapshots
+
+    snapshot_write(
+        spark.createDataFrame([(1, "01"), (2, "1e3")], "id int, p string"),
+        table,
+        partition_cols=["p"],
+    )
+    want = [(1, "01"), (2, "1e3")]
+    assert sorted(tuple(r) for r in read_snapshot(spark, table).collect()) == want
+    monkeypatch.setattr(snapshots, "_SCHEMA_MEMO", {})
+    monkeypatch.setattr(snapshots, "_DIR_SCHEMAS", {})
+    assert sorted(tuple(r) for r in read_snapshot(spark, table).collect()) == want
+
+
 def test_overwrite_append_and_time_travel(spark, table):
     v1 = snapshot_write(_df(spark, [(1, 1, "a"), (2, 2, "b")]), table)
     v2 = snapshot_write(_df(spark, [(3, 3, "c")]), table, mode="append")

@@ -668,7 +668,7 @@ def test_obs_rows_probes_jvm_state_not_exception_text():
     Observation's metrics map being UNPOPULATED, not from substring-
     matching 'AssertionError' — an unrelated JVM assertion with a
     populated map must re-raise, never record rows=0 provenance."""
-    from nyc_taxi_data_warehouse_spark.warehouse.load import _obs_rows
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import _observed
 
     class _Row:
         # Spark 4.1.2: a never-populated Observation's getRow() is a
@@ -697,13 +697,13 @@ def test_obs_rows_probes_jvm_state_not_exception_text():
             )
 
     # metrics never populated (empty row) -> the zero-task case -> 0
-    assert _obs_rows(_Obs(size=0)) == 0
+    assert _observed(_Obs(size=0), rows=0) == {"rows": 0}
     # populated row + AssertionError TEXT: a real failure, re-raises
     with pytest.raises(RuntimeError, match="assertion failed"):
-        _obs_rows(_Obs(size=1))
+        _observed(_Obs(size=1), rows=0)
 
     class _Happy:
         _jo = None
         get = {"rows": 7}
 
-    assert _obs_rows(_Happy()) == 7
+    assert _observed(_Happy(), rows=0) == {"rows": 7}
