@@ -177,7 +177,10 @@ def _min_scan_partitions(df, target: int) -> int:
 
 def local_frame(spark: SparkSession, rows, schema):
     """A DataFrame over driver-held ``rows`` that Spark plans as a
-    ``LocalRelation``: collecting it, or broadcasting it, runs no job.
+    ``LocalRelation``: collecting it runs no job. Broadcasting it still
+    runs one — ``BroadcastExchangeExec`` collects its child through an
+    RDD, which ``LocalTableScanExec`` does not short-circuit — but a
+    small one, with no Python workers.
 
     ``spark.createDataFrame(list, schema)`` parallelizes the list into
     an RDD, so every action on the frame starts a

@@ -57,9 +57,7 @@ from .snapshots import (
     SnapshotConflict,
     _branch_names,
     _check_ref_name,
-    _colmap,
     _commit,
-    _dv_targets_for,
     _storage_refs,
     _fs,
     _jp,
@@ -102,40 +100,18 @@ def create_branch(
         StructType.fromJson(man["schema"]),
         "branch",
         None,
-        extra={
-            "base_table_version": v,
-            **(
-                {"stats": man["stats"], "stats_cols": man.get("stats_cols")}
-                if man.get("stats") is not None
-                else {}
-            ),
-        },
+        extra={"base_table_version": v},
         props=man.get("props"),
-        # the fork's parent is None (a fresh chain), so without the
-        # base's recorded row counts _commit would treat every carried
-        # file as new and open 10^6 footers per fork — the exact
-        # O(table) cost a metadata-only branch must never pay
-        known_rows=man.get("rows"),
-        carried_only=True,
         partition_cols=_manifest_partition_cols(man),
-        # the fork carries the base state's deletion vectors — branch
-        # v1 has no parent to inherit from, and dropping them would
-        # resurrect the base's deleted rows on the branch
-        dv_files=man.get("dv_files"),
-        dv_targets=_dv_targets_for(man),
-        # ... and its equality-delete plane. last_seq_floor continues
-        # the BASE's sequence counter on the branch chain (branch
-        # versions restart at 1 — without the floor a branch commit's
-        # new files would stamp sequences BELOW carried eq entries and
-        # get their rows eaten by them)
-        eq_files=man.get("eqs"),
-        known_seq=man.get("seq"),
-        last_seq_floor=int(man.get("last_seq") or man.get("version") or 0),
-        # the base state's logical→physical column map and initial
-        # defaults travel with the fork (the carried files store
-        # physical names — see _colmap)
-        colmap=_colmap(man) or None,
-        defaults=man.get("defaults"),
+        # branch v1 has no parent: the base state travels whole —
+        # its deletion vectors and equality-delete plane (dropping
+        # them would resurrect the base's deleted rows on the branch),
+        # row counts and stats (a metadata-only fork must never open
+        # a footer), column map and defaults, and its sequence
+        # counter (branch versions restart at 1 — without the floor a
+        # branch commit's new files would stamp sequences BELOW
+        # carried eq entries and get their rows eaten by them)
+        source=man,
     )
     return ref
 
@@ -231,9 +207,6 @@ def publish_branch(
         "branch_version": bvers[-1],
         "branch_base": base,
     }
-    if head.get("stats") is not None:
-        extra["stats"] = head["stats"]
-        extra["stats_cols"] = head.get("stats_cols")
     if head.get("load") is not None:
         # carry ingest provenance (load_month's (year, month, rows))
         # through the fast-forward, or the manifest-replay
@@ -251,30 +224,13 @@ def publish_branch(
         mhead,
         extra=extra,
         partition_cols=_manifest_partition_cols(head),
-        # the BRANCH HEAD's deletion vectors and properties, never
-        # main's (the fast-forward is a whole-state replacement)
-        dv_files=head.get("dv_files"),
-        dv_targets=_dv_targets_for(head),
+        # the fast-forward is a whole-state replacement: the BRANCH
+        # HEAD's properties and state, never main's — and the head's
+        # sequence counter floors main's (both chains advanced it
+        # independently since the fork)
         props=head.get("props"),
-        # branch-minted files already have counts in the branch head's
-        # manifest — reuse them instead of re-reading footers
-        known_rows=head.get("rows"),
-        carried_only=True,
-        # whole-state carry of the branch head's equality-delete plane;
-        # the floor keeps main's sequence counter above the branch's
-        # (both chains advanced it independently since the fork)
-        eq_files=head.get("eqs"),
-        known_seq=head.get("seq"),
-        last_seq_floor=int(
-            head.get("last_seq") or head.get("version") or 0
-        ),
-        # whole-state carry of the branch head's column map and
-        # initial defaults too (branch-side alters publish like any
-        # other metadata change)
-        colmap=_colmap(head) or None,
-        defaults=head.get("defaults"),
+        source=head,
     )
-
 
 class AuditFailed(RuntimeError):
     """The audit callback vetoed the publish; main is untouched."""

@@ -59,7 +59,6 @@ from .snapshots import (
     _manifest_partition_cols,
     _require_same_layout,
     _write_commit_files,
-    collect_file_stats,
     snapshot_resolve_eq,
 )
 
@@ -231,9 +230,6 @@ def snapshot_append_upsert(
     entry = {"path": eq_files[0], "seq": None, "keys": pkeys}
     extra = dict(extra or {})
     extra.update({"rows_appended": n, "eq_added": eq_files})
-    stats_cols = man.get("stats_cols") or []
-    if stats_cols:
-        new_stats = collect_file_stats(spark, path, new_files, stats_cols)
     checked: set[int] = set()
     for attempt in range(retries + 1):
         versions = _list_manifests(spark, path)
@@ -243,10 +239,6 @@ def snapshot_append_upsert(
         latest = versions[-1]
         man = _load_manifest(spark, path, latest)
         _require_same_layout(man, partition_cols, "append_upsert")
-        commit_extra = dict(extra)
-        if stats_cols and man.get("stats") is not None:
-            commit_extra["stats"] = {**man["stats"], **new_stats}
-            commit_extra["stats_cols"] = man.get("stats_cols")
         try:
             version = _commit(
                 spark,
@@ -255,7 +247,7 @@ def snapshot_append_upsert(
                 schema,
                 "upsert_eq",
                 latest,
-                extra=commit_extra,
+                extra=extra,
                 partition_cols=partition_cols,
                 eq_files=_eq_entries(man) + [entry],
                 # the (schema, colmap) PAIR captured when the images
@@ -328,10 +320,6 @@ def snapshot_delete_keys(
             return dup, 0
         latest = versions[-1]
         man = _load_manifest(spark, path, latest)
-        commit_extra = dict(extra)
-        if man.get("stats") is not None:
-            commit_extra["stats"] = man["stats"]
-            commit_extra["stats_cols"] = man.get("stats_cols")
         try:
             version = _commit(
                 spark,
@@ -340,7 +328,7 @@ def snapshot_delete_keys(
                 StructType.fromJson(man["schema"]),
                 "delete_eq",
                 latest,
-                extra=commit_extra,
+                extra=extra,
                 partition_cols=_manifest_partition_cols(man),
                 eq_files=_eq_entries(man) + [entry],
             )

@@ -445,6 +445,10 @@ _SCHEMA_MEMO_MAX = 4096
 # keyed by the dir's path as written (``_write_commit_files``); same
 # bound as ``_SCHEMA_MEMO``
 _DIR_SCHEMAS: dict[str, tuple[StructType, StructType]] = {}
+# ``collect_file_stats`` entries per (table root, relpath, stats
+# columns) — immutable files, so a commit retry reuses them instead of
+# rescanning; same bound as ``_SCHEMA_MEMO``
+_STATS_MEMO: dict[tuple[str, str, tuple[str, ...]], dict] = {}
 _COMMIT_DIR_RE = re.compile(rf"^(.*/{_DDIR}/[0-9a-f]{{32}})/")
 
 
@@ -614,35 +618,6 @@ def _write_tombstones(
     return got["n"], sidecars, sorted(got["targets"])
 
 
-def _drop_by_reference(
-    man: dict, dropped: set, new_dvs=(), new_tgts=()
-) -> tuple[object, object, dict]:
-    """``(dv_files, dv_targets, stats_extra)`` for a commit that drops
-    ``dropped`` from ``man`` by reference (and adds sidecars
-    ``new_dvs`` tombstoning ``new_tgts``): the recorded targets shrink
-    to the carried files — entries for dropped files go inert — and a
-    set left with no live target folds to ``None``, restoring clean
-    scans; the dropped files' stats fall away."""
-    dv_files: object = sorted((man.get("dv_files") or []) + list(new_dvs))
-    dv_targets = _dv_targets_for(man, new_tgts)
-    if isinstance(dv_targets, list) and dropped:
-        live = set(man["files"]) - dropped
-        dv_targets = sorted(t for t in dv_targets if t in live)
-        if not dv_targets:
-            dv_files, dv_targets = None, None
-    stats_extra = (
-        {
-            "stats": {
-                f: s for f, s in man["stats"].items() if f not in dropped
-            },
-            "stats_cols": man.get("stats_cols"),
-        }
-        if man.get("stats") is not None
-        else {}
-    )
-    return dv_files, dv_targets, stats_extra
-
-
 # ---------------------------------------------------------------------------
 # Equality deletes: key-tombstone sidecars scoped by per-file sequence
 # ---------------------------------------------------------------------------
@@ -751,32 +726,60 @@ def _commit(
     dv_targets=_DV_INHERIT,
     known_rows: dict[str, int] | None = None,
     props=_DV_INHERIT,
-    carried_only: bool = False,
     eq_files=_DV_INHERIT,
-    known_seq: dict | None = None,
-    last_seq_floor: int | None = None,
     colmap=_DV_INHERIT,
     defaults=_DV_INHERIT,
+    stats_cols=_DV_INHERIT,
+    source: dict | None = None,
 ) -> int:
-    """``dv_files`` — the DELETION-VECTOR sidecars active at this
-    version (parquet relpaths of (file, pos) tombstones, merged at
-    read; see ``snapshot_delete(mode="dv")``). Default is INHERIT from
-    the parent: DV entries are keyed by (relpath, row position) and
-    data files are immutable + uuid-unique, so a stale entry for a
-    file the commit dropped is inert — while an entry for a carried
-    file MUST keep riding or its deleted rows resurrect. Commits that
-    replace the whole table state (overwrite, compact, restore,
-    publish) pass an explicit list/None instead.
+    """Publish ``files`` as version ``parent + 1`` of ``path`` — the ONE
+    place manifest state passes from one version to the next.
 
-    ``dv_targets`` — the distinct data files the sidecars tombstone,
-    recorded in the manifest so readers can split scans (untargeted
-    files skip the anti-join entirely) and the streaming feed planner
-    never opens a sidecar. Same inherit semantics; a SUPERSET of the
-    live targets is legal (readers intersect with ``files`` — uuid
-    commit dirs make relpath reuse impossible, so a superset can
-    never claim a fresh file). A caller passing explicit sidecars
-    without targets gets them derived from the sidecar footprint
-    (one metadata-sized distinct per commit).
+    THE CARRY RULE. Every state key defaults to INHERIT: its value
+    comes from the CARRY SOURCE — the parent manifest, or ``source``
+    for whole-state commits (restore, branch fork, publish), which
+    republish another manifest's state whole. Per-file maps (``rows``,
+    ``seq``, ``stats``) keep the source's entries for carried files,
+    are computed for files NEW TO THE TABLE (in neither the parent nor
+    ``source``: footers for rows, this commit's sequence for seq,
+    ``collect_file_stats`` for stats when ``stats_cols`` is set) and
+    drop entries of files that left. Entries naming columns that left
+    the schema are pruned (``colmap`` by logical name; ``defaults``,
+    ``stats_cols`` and stats entries by physical name). A carried file
+    the source tracked without an entry (legacy history) stays a gap —
+    backfilling would make one commit O(table); readers self-heal per
+    call. ``props`` inherit from the PARENT even under ``source`` (a
+    restore keeps the head's properties; fork and publish pass the
+    source's explicitly). ``source`` also floors this commit's
+    sequence at the source's (branch chains restart VERSION numbers at
+    1, and sequence numbers order files against equality deletes).
+
+    ``dv_files`` — the DELETION-VECTOR sidecars active at this version
+    (parquet relpaths of (file, pos) tombstones, merged at read; see
+    ``snapshot_delete(mode="dv")``); ``dv_targets`` — the distinct data
+    files they tombstone, recorded so readers split scans (untargeted
+    files skip the anti-join) and the streaming feed planner never
+    opens a sidecar. Explicit sidecars without targets get them derived
+    from the sidecar footprint (one metadata-sized distinct). The
+    recorded targets shrink to this commit's files: DV entries are
+    keyed by (relpath, row position) and relpaths are uuid-unique, so
+    an entry for a dropped file is inert, and a sidecar set with no
+    live target left folds to ``None``, restoring clean scans.
+
+    ``eq_files`` — the EQUALITY-DELETE entries active at this version
+    ([{"path", "seq", "keys"}]; see the note above ``_eq_entries``). An
+    entry passed with ``seq=None`` is stamped with THIS commit's
+    sequence number; entries no live file is subject to are pruned.
+
+    ``stats_cols`` (physical names) sets the columns per-file stats
+    track; a caller-supplied ``extra["stats"]`` map is recorded as the
+    commit's stats verbatim (pruned like any other) — nothing carried,
+    nothing scanned. Stats are computed only for new files whose footer
+    was found (forged metadata-only relpaths are never scanned), after
+    the constraint checks (a refused commit scans nothing), and once
+    per file per process (``_STATS_MEMO``), so a conflict retry stays
+    metadata-only. ``known_rows`` supplies footer counts the caller
+    already read.
 
     METADATA IS O(CHANGE): the on-disk doc is a delta against the
     parent's reconstructed state (adds/removes of files, sidecars,
@@ -785,132 +788,82 @@ def _commit(
     start — see ``manifestlog`` for the format and scale math. The
     checkpoint blob is written BEFORE the exclusive manifest claim,
     so a doc that references one can always resolve it; a losing
-    racer's blob is debris for ``sweep_orphans``.
-
-    ``eq_files`` — the EQUALITY-DELETE entries active at this version
-    ([{"path", "seq", "keys"}]; see the module-level note above
-    ``_eq_entries``). Inherit semantics like ``dv_files``; an entry
-    passed with ``seq=None`` is stamped with THIS commit's sequence
-    number (the entry deletes rows only in files that predate it).
-    Entries no live file is subject to are pruned automatically.
-    ``known_seq`` carries per-file added-at sequences through
-    whole-state ops (restore/fork/publish), like ``known_rows``;
-    files new to the table are stamped with the commit's sequence.
-    ``last_seq_floor`` forces the commit's sequence above another
-    chain's counter (fork: the base table's; publish: the branch
-    head's) — sequence numbers order files against eq entries, and
-    branch chains restart VERSION numbers at 1, so versions cannot
-    serve."""
+    racer's blob is debris for ``sweep_orphans``."""
     import time
 
     root, mdir = _split_ref(path)
     fs, jvm = _fs(spark, root)
     pman = _load_manifest(spark, path, parent) if parent is not None else None
+    src = source if source is not None else (pman or {})
+    files = sorted(files)
+    if len(set(files)) != len(files):
+        raise ValueError(f"duplicate relpaths in commit file list at {path}")
+    fset = set(files)
     if dv_files == _DV_INHERIT:
-        dv_files = pman.get("dv_files") if pman else None
+        dv_files = src.get("dv_files")
         if dv_targets == _DV_INHERIT:
-            dv_targets = pman.get("dv_targets") if pman else None
+            dv_targets = src.get("dv_targets")
     if dv_targets == _DV_INHERIT:
         dv_targets = None
     if dv_files and not dv_targets:
-        dv_targets = sorted(
+        dv_targets = [
             r[0]
             for r in _read_files(spark, [f"{root}/{p}" for p in dv_files])
             .select("_dv_file")
             .distinct()
             .collect()
-        )
-    if not dv_files:
-        dv_targets = None
+        ]
+    live = sorted(set(dv_targets or ()) & fset) if dv_files else []
+    dv_files, dv_targets = (sorted(dv_files), live) if live else (None, None)
     if eq_files == _DV_INHERIT:
-        eq_files = pman.get("eqs") if pman else None
-    # logical→physical column map (RENAME; see _colmap). INHERIT from
-    # the parent like every carried scalar; whole-state ops (restore,
-    # fork, publish) pass the source manifest's; full overwrites pass
-    # None (fresh files are written physical == logical). Entries whose
-    # logical key left the schema are PRUNED (self-healing, like inert
-    # eq entries): an append under the newest-writer-wins schema rule
-    # can revert a renamed column to its physical name, and a stale
-    # entry would poison the read boundary's inverse aliasing.
+        eq_files = src.get("eqs")
+    # logical→physical column map (RENAME; see _colmap); full
+    # overwrites pass None (fresh files are written physical ==
+    # logical). Pruning self-heals: an append under the newest-writer-
+    # wins schema rule can revert a renamed column to its physical
+    # name, and a stale entry would poison the read boundary's inverse
+    # aliasing. INITIAL defaults ({physical col: scalar}; see
+    # _read_file_list) and stats columns prune by physical slot.
     if colmap == _DV_INHERIT:
-        colmap = _colmap(pman) if pman else None
-    if colmap:
-        names = {f.name for f in schema.fields}
-        colmap = {
-            l: p for l, p in colmap.items() if l in names and l != p
-        }
-    colmap = dict(colmap) if colmap else None
-    # INITIAL defaults ({physical col: scalar}; see _read_file_list):
-    # inherited and pruned exactly like colmap — an entry whose
-    # physical slot left the schema is dead weight
+        colmap = _colmap(src)
     if defaults == _DV_INHERIT:
-        defaults = (pman.get("defaults") if pman else None) or None
-    if defaults:
-        phys_names = {
-            (colmap or {}).get(f.name, f.name) for f in schema.fields
-        }
-        defaults = {
-            c: v for c, v in defaults.items() if c in phys_names
-        }
-    defaults = dict(defaults) if defaults else None
-    files = sorted(files)
-    if len(set(files)) != len(files):
-        raise ValueError(f"duplicate relpaths in commit file list at {path}")
+        defaults = src.get("defaults")
+    if stats_cols == _DV_INHERIT:
+        stats_cols = src.get("stats_cols")
+    names = {f.name for f in schema.fields}
+    colmap = {
+        l: p for l, p in (colmap or {}).items() if l in names and l != p
+    } or None
+    phys = {(colmap or {}).get(n, n) for n in names}
+    defaults = {
+        c: v for c, v in (defaults or {}).items() if c in phys
+    } or None
+    if stats_cols is not None:
+        stats_cols = [c for c in stats_cols if c in phys]
     version = (parent or 0) + 1
     # the chain-independent data sequence: strictly increases along
     # any commit lineage (legacy parents without one fall back to
     # their version — same monotonicity, and only relative order
     # matters)
-    parent_last = (
-        int(pman.get("last_seq") or pman["version"]) if pman else 0
+    seq_floor = max(
+        int(m.get("last_seq") or m["version"]) if m else 0
+        for m in (pman, source)
     )
-    seq_no = max(parent_last, int(last_seq_floor or 0)) + 1
+    seq_no = seq_floor + 1
     extra = dict(extra or {})
     stats = extra.pop("stats", None)
-    stats_cols = extra.pop("stats_cols", None)
-    if stats is None:
-        stats_cols = None
-    # Per-file row counts: carry the parent's entries for carried
-    # files, read footers ONLY for paths the parent didn't know —
-    # O(change) per commit, like every other manifest field. Counts
-    # for legacy history stay absent until those files churn (readers
-    # self-heal from footers); forged metadata-only commits (tests)
-    # simply record none (missing_ok skips not-found footers).
-    parent_rows = (pman.get("rows") if pman else None) or {}
     parent_files = set(pman["files"]) if pman else set()
-    rows = {f: parent_rows[f] for f in files if f in parent_rows}
-    if known_rows:  # caller already read these footers — don't repeat
-        rows.update(
-            {f: known_rows[f] for f in files if f in known_rows}
-        )
-    # strictly files NEW TO THE TABLE: a carried file the (legacy)
-    # parent tracked without a count stays a gap — backfilling here
-    # would make one upgrade commit O(table) footer reads; readers
-    # (snapshot_agg's COUNT(*)) self-heal the gap per call instead.
-    # ``carried_only`` marks whole-state carries whose files all come
-    # from some other validated manifest (branch fork with parent=None,
-    # publish, restore): their row-count gaps must stay gaps too.
-    new_files = (
-        []
-        if carried_only
-        else [f for f in files if f not in rows and f not in parent_files]
-    )
-    if new_files:
-        rows.update(_rows_for_files(spark, root, new_files, missing_ok=True))
-    # Per-file added-at sequences: carried files keep the parent's
-    # entries; whole-state ops pass the source manifest's via
-    # ``known_seq``; anything still unknown that is genuinely new to
-    # the table is stamped with this commit's sequence. Files known
-    # to neither stay gaps (legacy history — treated as predating
-    # every equality delete, which is what they do).
-    parent_seq = (pman.get("seq") if pman else None) or {}
-    seq = {f: parent_seq[f] for f in files if f in parent_seq}
-    if known_seq:
-        seq.update({f: known_seq[f] for f in files if f in known_seq})
-    if not carried_only:
-        for f in files:
-            if f not in seq and f not in parent_files:
-                seq[f] = seq_no
+    known = parent_files | set(src.get("files") or ())
+    new_files = [f for f in files if f not in known]
+    src_rows = src.get("rows") or {}
+    rows = {f: src_rows[f] for f in files if f in src_rows}
+    rows.update({f: n for f, n in (known_rows or {}).items() if f in fset})
+    unread = [f for f in new_files if f not in rows]
+    if unread:  # missing_ok: forged metadata-only commits record none
+        rows.update(_rows_for_files(spark, root, unread, missing_ok=True))
+    src_seq = src.get("seq") or {}
+    seq = {f: src_seq[f] for f in files if f in src_seq}
+    seq.update({f: seq_no for f in new_files})
     # Equality-delete entries: stamp fresh entries (seq=None) with
     # this commit's sequence, then prune entries no live file is
     # subject to (inert — every file they could match has left).
@@ -935,22 +888,27 @@ def _commit(
         props = pman.get("props") if pman else None
     props = dict(props) if props else None
     if props and op not in ("branch", "publish"):
-        added = [f for f in files if f not in parent_files]
-        # validate under the COMMIT's own masking: fresh files are
-        # never dv-targeted or eq-applicable (uuid dirs, own-sequence
-        # stamps), so this is free for appends — but a restore
-        # re-adds OLD files whose violating rows may be masked dead
-        # by the carried tombstones/entries, and refusing those would
-        # block a perfectly valid rollback
-        _enforce_constraints(
-            spark, root, added, schema, partition_cols, props,
-            dv_files=sorted(dv_files) if dv_files else None,
-            dv_targets=sorted(set(dv_targets)) if dv_targets else None,
-            eq_entries=eq_files,
-            file_seq=seq,
-            colmap=colmap,
-            defaults=defaults,
-        )
+
+        def check(to_scan):
+            # validate under the COMMIT's own masking: fresh files are
+            # never dv-targeted or eq-applicable (uuid dirs, own-
+            # sequence stamps), so this is free for appends — but a
+            # restore re-adds OLD files whose violating rows may be
+            # masked dead by the carried tombstones/entries, and
+            # refusing those would block a perfectly valid rollback
+            _enforce_constraints(
+                spark, root, sorted(to_scan), schema, partition_cols,
+                props,
+                dv_files=dv_files,
+                dv_targets=dv_targets,
+                eq_entries=eq_files,
+                file_seq=seq,
+                colmap=colmap,
+                defaults=defaults,
+            )
+
+        added = {f for f in files if f not in parent_files}
+        check(added)
         # Rows can also go live WITHOUT a new file: a commit that
         # DROPS tombstone sidecars (restore rolling back past a DV
         # delete) resurrects previously-masked rows in carried files.
@@ -963,24 +921,11 @@ def _commit(
             dv_files or ()
         )
         if removed_dvs and op != "compact_dvs":
-            fset = set(files)
             if pman is not None and pman.get("dv_targets") is not None:
                 suspects = set(pman["dv_targets"])
             else:  # legacy parent: no recorded targets — be safe
                 suspects = set((pman or {}).get("files") or ())
-            suspects = sorted((suspects & fset) - set(added or ()))
-            if suspects:
-                _enforce_constraints(
-                    spark, root, suspects, schema, partition_cols, props,
-                    dv_files=sorted(dv_files) if dv_files else None,
-                    dv_targets=sorted(set(dv_targets))
-                    if dv_targets
-                    else None,
-                    eq_entries=eq_files,
-                    file_seq=seq,
-                    colmap=colmap,
-                    defaults=defaults,
-                )
+            check((suspects & fset) - added)
         # Same resurrection hazard for EQUALITY deletes: an entry that
         # left the state (restore rolling back past an upsert) brings
         # its masked rows back to life in carried files — re-validate
@@ -995,29 +940,44 @@ def _commit(
             if e["path"] not in cur_eq_paths
         ]
         if removed_eqs and op != "resolve_eq":
-            fset = set(files)
-            suspects = sorted(
+            check(
                 f
-                for f in fset
-                if f not in set(added or ())
-                and _eq_applicable(removed_eqs, seq, f)
+                for f in fset - added
+                if _eq_applicable(removed_eqs, seq, f)
             )
-            if suspects:
-                _enforce_constraints(
-                    spark, root, suspects, schema, partition_cols, props,
-                    dv_files=sorted(dv_files) if dv_files else None,
-                    dv_targets=sorted(set(dv_targets))
-                    if dv_targets
-                    else None,
-                    eq_entries=eq_files,
-                    file_seq=seq,
-                    colmap=colmap,
-                    defaults=defaults,
+    if stats is None:
+        src_stats = src.get("stats") or {}
+        stats = {f: src_stats[f] for f in files if f in src_stats}
+        todo = [f for f in new_files if f in rows]  # footer found
+        if stats_cols and todo:
+            key = tuple(stats_cols)
+            got = {
+                f: _STATS_MEMO[(root, f, key)]
+                for f in todo
+                if (root, f, key) in _STATS_MEMO
+            }
+            miss = [f for f in todo if f not in got]
+            if miss:
+                fresh = collect_file_stats(spark, root, miss, stats_cols)
+                if len(_STATS_MEMO) >= _SCHEMA_MEMO_MAX:
+                    _STATS_MEMO.clear()
+                _STATS_MEMO.update(
+                    {(root, f, key): e for f, e in fresh.items()}
                 )
+                got.update(fresh)
+            stats.update(got)
+        if not stats and stats_cols is None:
+            stats = None
+    if stats is not None:
+        stats = {
+            f: {c: v for c, v in stats[f].items() if c in phys}
+            for f in files
+            if f in stats
+        }
     state = {
         "files": files,
-        "dv_files": sorted(dv_files) if dv_files else None,
-        "dv_targets": sorted(set(dv_targets)) if dv_targets else None,
+        "dv_files": dv_files,
+        "dv_targets": dv_targets,
         "stats": stats,
         "stats_cols": stats_cols,
         "rows": rows or None,
@@ -1108,12 +1068,21 @@ def snapshot_write(
     mode: str = "overwrite",
     partition_cols: list[str] | None = None,
     retries: int = 0,
+    stats_cols: list[str] | None = None,
 ) -> int:
     """Publish ``df`` as a new table version; returns the version
     number. ``mode='overwrite'`` makes the new commit the whole table;
     ``'append'`` unions it with the parent version's files. Raises
     ``SnapshotConflict`` if another writer claims the version number
     first (data files are orphaned, never corrupting — re-run).
+
+    ``stats_cols`` sets the columns whose per-file min/max/null count
+    (plus the sum of numeric ones; ``collect_file_stats``) the manifest
+    records — Iceberg-style scan-planning metadata:
+    ``read_snapshot(where=...)``, the DML planner and ``snapshot_agg``
+    select or prove files from it WITHOUT opening them. It is table
+    state: every later commit carries it and computes entries for the
+    files it adds. ``None`` keeps the table's current setting.
 
     ``retries``: on conflict, re-derive the parent and RECOMMIT THE
     SAME already-written data files against the new head — the
@@ -1142,6 +1111,12 @@ def snapshot_write(
         cmap = _colmap(pman) or None
         dflts = pman.get("defaults")
     _, new_files = _write_commit_files(df, path, partition_cols, colmap=cmap)
+    # stats (like the files they describe) are keyed by PHYSICAL names
+    pstats = (
+        _DV_INHERIT
+        if stats_cols is None
+        else [(cmap or {}).get(c, c) for c in stats_cols]
+    )
     for attempt in range(retries + 1):
         files = new_files
         if mode == "append" and parent is not None:
@@ -1155,6 +1130,7 @@ def snapshot_write(
                 dv_files=_DV_INHERIT if mode == "append" else None,
                 colmap=cmap if mode == "append" else None,
                 defaults=dflts if mode == "append" else None,
+                stats_cols=pstats,
             )
         except SnapshotConflict:
             if attempt == retries:
@@ -2674,40 +2650,16 @@ def snapshot_restore(
         StructType.fromJson(man["schema"]),
         "restore",
         latest,
-        extra=(
-            {
-                "restored_from": version,
-                **(
-                    {
-                        "stats": man.get("stats"),
-                        "stats_cols": man.get("stats_cols"),
-                    }
-                    if man.get("stats") is not None
-                    else {}
-                ),
-            }
-        ),
+        extra={"restored_from": version},
         partition_cols=_manifest_partition_cols(man),
-        # the RESTORED state's tombstones, never the abandoned head's
-        # (whose DVs may reference exactly the files being restored)
-        dv_files=man.get("dv_files"),
-        dv_targets=_dv_targets_for(man),
-        # the restored manifest already holds its files' row counts —
-        # without this, restoring across a compact re-reads every
-        # restored footer (the O(table) storm row tracking must never
-        # pay on a zero-data-movement op)
-        known_rows=man.get("rows"),
-        carried_only=True,
-        # same whole-state carry for the equality-delete plane: the
-        # restored EQ entries with the restored files' added-at
+        # the RESTORED state whole, never the abandoned head's: its
+        # tombstones (the head's may target exactly the files being
+        # restored), its equality-delete plane with the files' added-at
         # sequences (re-stamping a re-added file would detach it from
-        # the entries that masked its rows — silent resurrection)
-        eq_files=man.get("eqs"),
-        known_seq=man.get("seq"),
-        # the RESTORED state's logical→physical map and defaults,
-        # never the abandoned head's (whose alters may postdate it)
-        colmap=_colmap(man) or None,
-        defaults=man.get("defaults"),
+        # the entries that masked its rows), its row counts and stats
+        # (no footer re-read or rescan on a zero-data-movement op), its
+        # column map and defaults (the head's alters may postdate it)
+        source=man,
     )
 
 
@@ -4508,18 +4460,16 @@ def snapshot_compact(
     readers keep their version's files untouched; ``vacuum_snapshots``
     reclaims the fragmented ones later. Returns the new version.
 
-    Manifest stats SURVIVE compaction: when the parent tracked
-    ``stats_cols``, per-file min/max are recomputed for the new files —
-    without this, every compaction silently reset a ``read_snapshot``
-    ``where=`` range to a full scan (conservatively correct,
-    catastrophically unpruned).
+    Manifest stats SURVIVE compaction: like every commit, it gets
+    per-file stats for its new files when the table tracks
+    ``stats_cols`` (``_commit``'s carry rule).
 
     ``cluster_by`` upgrades the rewrite to the OPTIMIZE-with-clustering
     shape: one column range-partitions + sorts on it; several columns
     cluster on the interleaved ``zorder_value`` so every file covers a
     compact region of the whole key space (``n_files`` overrides the
     byte-derived output count — clustering often wants a fixed shard
-    layout). Because the recomputed stats
+    layout). Because the new files' stats
     are collected from the CLUSTERED files, their [min,max] ranges come
     out tight and disjoint — compaction then actively IMPROVES scan
     pruning instead of merely not destroying it. With partition
@@ -4660,17 +4610,7 @@ def snapshot_compact(
     _, files = _write_commit_files(
         df, path, partition_cols, colmap=_colmap(man) or None
     )
-    stats_cols = man.get("stats_cols") or []
     extra = {}
-    if stats_cols:
-        new_stats = collect_file_stats(spark, path, files, stats_cols)
-        if carried:
-            pstats = man.get("stats") or {}
-            new_stats = {
-                **{f: pstats[f] for f in carried if f in pstats},
-                **new_stats,
-            }
-        extra = {"stats": new_stats, "stats_cols": stats_cols}
     # Record row totals IN the commit: the feed's onNonAppend=verify
     # gate proves row-neutrality from these, so a feed that lags behind
     # a compact + vacuum (which deletes exactly the superseded files it
@@ -4686,9 +4626,9 @@ def snapshot_compact(
     rows_new = _rows_for_files(spark, root, files)
     extra["rows_removed"] = _live_row_total(spark, path, man, victims)
     extra["rows_added"] = sum(rows_new.values())
-    defaults_after = _DV_INHERIT
+    dv_files = defaults_after = _DV_INHERIT
     if not targeted:
-        dv_files, dv_targets = None, None  # folded into the rewrite
+        dv_files = None  # folded into the rewrite
         # every file was rewritten from the FILLED read: initial
         # defaults are now physically materialized — shed the entries
         # (this is also what re-enables Bloom-indexing such columns)
@@ -4696,22 +4636,11 @@ def snapshot_compact(
     else:
         extra["files_compacted"] = len(victims)
         extra["files_carried"] = len(carried)
-        live_tgts = set(man.get("dv_targets") or ()) & set(carried)
-        if man.get("dv_files") and man.get("dv_targets") is None:
-            # legacy manifest: sidecars without a recorded target list
-            # — keep them and let _commit derive the footprint (a
-            # superset including the rewritten fragments is legal)
-            dv_files, dv_targets = man["dv_files"], None
-        elif live_tgts:
-            dv_files, dv_targets = man["dv_files"], sorted(live_tgts)
-        else:
-            dv_files, dv_targets = None, None  # every entry went inert
     return _commit(
         spark, path, carried + files, df.schema, "compact", latest,
         extra=extra or None,
         partition_cols=partition_cols,
         dv_files=dv_files,
-        dv_targets=dv_targets,
         known_rows=rows_new,
         defaults=defaults_after,
     )
@@ -4896,14 +4825,6 @@ def _merge_dv(
         new_rows, path, partition_cols, colmap=_colmap(man) or None
     )
     n_tombs, new_dvs, new_tgts = _write_tombstones(tombs, path)
-    stats_cols = man.get("stats_cols") or []
-    extra: dict = {"dv_added": new_dvs, "dv_rows_added": n_tombs}
-    if stats_cols:
-        extra["stats"] = {
-            **man.get("stats", {}),
-            **collect_file_stats(spark, path, new_files, stats_cols),
-        }
-        extra["stats_cols"] = stats_cols
     return _commit(
         spark,
         path,
@@ -4911,7 +4832,7 @@ def _merge_dv(
         schema,
         "merge_dv",
         latest,
-        extra=extra,
+        extra={"dv_added": new_dvs, "dv_rows_added": n_tombs},
         partition_cols=partition_cols,
         dv_files=sorted((man.get("dv_files") or []) + new_dvs),
         dv_targets=_dv_targets_for(man, new_tgts),
@@ -5057,52 +4978,6 @@ def collect_file_stats(
     return out
 
 
-def snapshot_write_with_stats(
-    df: DataFrame,
-    path: str,
-    stats_cols: list[str],
-    mode: str = "overwrite",
-    partition_cols: list[str] | None = None,
-) -> int:
-    """``snapshot_write`` + per-file min/max stats for ``stats_cols``
-    recorded in the manifest (Iceberg-style scan planning metadata):
-    ``read_snapshot(where=...)`` later selects files by stats overlap
-    WITHOUT opening them. Append mode carries the parent's stats
-    forward, so incremental loads keep whole-table planning."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"mode must be overwrite|append; got {mode!r}")
-    spark = df.sparkSession
-    versions = _list_manifests(spark, path)
-    parent = versions[-1] if versions else None
-    cmap, dflts = None, None
-    if mode == "append" and parent is not None:
-        pman = _load_manifest(spark, path, parent)
-        _require_same_layout(pman, partition_cols, "append")
-        cmap = _colmap(pman) or None
-        dflts = pman.get("defaults")  # captured-tuple rule, see above
-    # stats (like the files they describe) are keyed by PHYSICAL names
-    stats_cols = [(cmap or {}).get(c, c) for c in stats_cols]
-    _, files = _write_commit_files(df, path, partition_cols, colmap=cmap)
-    stats = collect_file_stats(spark, path, files, stats_cols)
-    if mode == "append" and parent is not None:
-        pman = _load_manifest(spark, path, parent)
-        files = sorted(pman["files"] + files)
-        stats = {**pman.get("stats", {}), **stats}
-    return _commit(
-        spark,
-        path,
-        files,
-        df.schema,
-        mode,
-        parent,
-        extra={"stats": stats, "stats_cols": stats_cols},
-        partition_cols=partition_cols,
-        dv_files=_DV_INHERIT if mode == "append" else None,
-        colmap=cmap if mode == "append" else None,
-        defaults=dflts if mode == "append" else None,
-    )
-
-
 def _delete_rows_dv_where(
     spark: SparkSession,
     path: str,
@@ -5135,9 +5010,6 @@ def _delete_rows_dv_where(
     if n == 0 and not dropped:
         return latest, 0
     drop_rows = _live_row_total(spark, path, man, dropped) if dropped else 0
-    dv_files, dv_targets, stats_extra = _drop_by_reference(
-        man, dset, new_dvs, new_tgts
-    )
     drop_extra = (
         {"files_dropped_by_stats": len(dropped), "rows_dropped": drop_rows}
         if dropped
@@ -5150,15 +5022,10 @@ def _delete_rows_dv_where(
         StructType.fromJson(man["schema"]),
         "delete_rows_dv",
         latest,
-        extra={
-            "dv_added": new_dvs,
-            "dv_rows_added": n,
-            **drop_extra,
-            **stats_extra,
-        },
+        extra={"dv_added": new_dvs, "dv_rows_added": n, **drop_extra},
         partition_cols=_manifest_partition_cols(man),
-        dv_files=dv_files,
-        dv_targets=dv_targets,
+        dv_files=sorted((man.get("dv_files") or []) + new_dvs),
+        dv_targets=_dv_targets_for(man, new_tgts),
     )
     return version, n + drop_rows
 
@@ -5889,23 +5756,6 @@ def _rewrite_matching_files(
         affected = _observed(kept, n=0)["n"]
         if not matched:
             affected = _observed(live, n=0)["n"] - affected
-    # rewritten files' stats are recomputed when columns are tracked
-    stats_cols = man.get("stats_cols") or []
-    cset = set(carried)
-    new_stats = {
-        f: s for f, s in (man.get("stats") or {}).items() if f in cset
-    }
-    if stats_cols and new_files:
-        new_stats.update(
-            collect_file_stats(spark, path, new_files, stats_cols)
-        )
-    extra: dict = (
-        {"stats": new_stats, "stats_cols": stats_cols}
-        if new_stats or stats_cols
-        else {}
-    )
-    if dropped:
-        extra["files_dropped_by_stats"] = len(dropped)
     version = _commit(
         spark,
         path,
@@ -5913,7 +5763,7 @@ def _rewrite_matching_files(
         StructType.fromJson(man["schema"]),
         op,
         latest,
-        extra=extra or None,
+        extra={"files_dropped_by_stats": len(dropped)} if dropped else None,
         partition_cols=pc,
     )
     return version, affected + drop_rows
@@ -5995,14 +5845,6 @@ def _update_rows_dv_where(
         matched_rows.select(*out_cols), path, pc,
         colmap=_colmap(man) or None,
     )
-    stats_cols = man.get("stats_cols") or []
-    extra: dict = {"dv_added": new_dvs, "dv_rows_added": n}
-    if stats_cols:
-        extra["stats"] = {
-            **man.get("stats", {}),
-            **collect_file_stats(spark, path, new_files, stats_cols),
-        }
-        extra["stats_cols"] = stats_cols
     version = _commit(
         spark,
         path,
@@ -6010,7 +5852,7 @@ def _update_rows_dv_where(
         schema,
         "update_rows_dv",
         latest,
-        extra=extra,
+        extra={"dv_added": new_dvs, "dv_rows_added": n},
         partition_cols=pc,
         dv_files=sorted((man.get("dv_files") or []) + new_dvs),
         dv_targets=_dv_targets_for(man, new_tgts),
@@ -6089,15 +5931,9 @@ def snapshot_compact_dvs(
                 f"DV consolidation wrote {n_after} live tombstones, "
                 f"expected {n} — aborting before the commit"
             )
-        # the consolidation point is where the recorded target list
-        # SHRINKS back to the live footprint (inert targets shed)
+        # the consolidated sidecars' footprint, from the same scan
         new_tgts = sorted(
             r[0] for r in entries.select("_dv_file").distinct().collect()
-        )
-    extra = {"dv_rows_before": n, "dv_rows_after": n_after}
-    if man.get("stats") is not None:
-        extra.update(
-            {"stats": man["stats"], "stats_cols": man.get("stats_cols")}
         )
     return _commit(
         spark,
@@ -6106,7 +5942,7 @@ def snapshot_compact_dvs(
         StructType.fromJson(man["schema"]),
         "compact_dvs",
         latest,
-        extra=extra,
+        extra={"dv_rows_before": n, "dv_rows_after": n_after},
         partition_cols=_manifest_partition_cols(man),
         dv_files=new_dvs,
         dv_targets=new_tgts,
@@ -6188,10 +6024,6 @@ def snapshot_resolve_eq(spark: SparkSession, path: str) -> tuple[int, int]:
         "dv_added": new_dvs,
         "dv_rows_added": n,
     }
-    if man.get("stats") is not None:
-        extra.update(
-            {"stats": man["stats"], "stats_cols": man.get("stats_cols")}
-        )
     version = _commit(
         spark,
         path,
@@ -6377,7 +6209,6 @@ def _drop_partitions_once(
         return latest, 0
     dropped = set(matched)
     rows_deleted = _live_row_total(spark, path, man, matched)
-    dv_files, dv_targets, stats_extra = _drop_by_reference(man, dropped)
     version = _commit(
         spark,
         path,
@@ -6395,11 +6226,8 @@ def _drop_partitions_once(
             },
             "rows_deleted": rows_deleted,
             "files_removed": len(matched),
-            **stats_extra,
         },
         partition_cols=_manifest_partition_cols(man),
-        dv_files=dv_files,
-        dv_targets=dv_targets,
     )
     return version, rows_deleted
 
@@ -6695,15 +6523,8 @@ def snapshot_add_column(
         extra={
             "altered_column": name,
             **({"default": default} if default is not None else {}),
-            **(
-                {"stats": man["stats"], "stats_cols": man.get("stats_cols")}
-                if man.get("stats") is not None
-                else {}
-            ),
         },
         partition_cols=_manifest_partition_cols(man),
-        dv_files=man.get("dv_files"),
-        dv_targets=_dv_targets_for(man),
     )
 
 
@@ -6768,15 +6589,10 @@ def snapshot_drop_column(
                     "resolve (snapshot_resolve_eq) and vacuum that "
                     "history first"
                 )
-    extra: dict = {"altered_column": name}
-    if man.get("stats") is not None:
-        extra["stats"] = {
-            f: {c: v for c, v in st.items() if c != pname}
-            for f, st in man["stats"].items()
-        }
-        extra["stats_cols"] = [
-            c for c in (man.get("stats_cols") or []) if c != pname
-        ]
+    # _commit prunes the column's rename mapping, default and stats
+    # with it. Re-adding a column under the freed physical name then
+    # shares drop+re-add's documented semantics: pre-drop files still
+    # physically hold the old bytes until a compact rewrites them
     return _commit(
         spark,
         path,
@@ -6784,18 +6600,8 @@ def snapshot_drop_column(
         new_schema,
         "drop_column",
         latest,
-        extra=extra,
+        extra={"altered_column": name},
         partition_cols=_manifest_partition_cols(man),
-        dv_files=man.get("dv_files"),
-        dv_targets=_dv_targets_for(man),
-        # the dropped column's rename mapping (if any) goes with it.
-        # Re-adding a column under the freed physical name then shares
-        # drop+re-add's documented semantics: pre-drop files still
-        # physically hold the old bytes until a compact rewrites them
-        colmap={
-            l: ph for l, ph in _colmap(man).items() if l != name
-        }
-        or None,
     )
 
 
@@ -6884,18 +6690,8 @@ def snapshot_rename_column(
         new_schema,
         "rename_column",
         latest,
-        extra={
-            "altered_column": new,
-            "renamed_from": old,
-            **(
-                {"stats": man["stats"], "stats_cols": man.get("stats_cols")}
-                if man.get("stats") is not None
-                else {}
-            ),
-        },
+        extra={"altered_column": new, "renamed_from": old},
         partition_cols=_manifest_partition_cols(man),
-        dv_files=man.get("dv_files"),
-        dv_targets=_dv_targets_for(man),
         colmap=cmap or None,
     )
 
@@ -7007,15 +6803,8 @@ def snapshot_widen_column(
             "altered_column": name,
             "widened_from": cur.simpleString(),
             "widened_to": new_type.simpleString(),
-            **(
-                {"stats": man["stats"], "stats_cols": man.get("stats_cols")}
-                if man.get("stats") is not None
-                else {}
-            ),
         },
         partition_cols=_manifest_partition_cols(man),
-        dv_files=man.get("dv_files"),
-        dv_targets=_dv_targets_for(man),
     )
 
 
@@ -7111,13 +6900,6 @@ def snapshot_set_layout(
         extra={
             "layout_from": _manifest_partition_cols(man),
             "layout_to": want,
-            **(
-                {"stats": man["stats"], "stats_cols": man.get("stats_cols")}
-                if man.get("stats") is not None
-                else {}
-            ),
         },
         partition_cols=want,
-        dv_files=man.get("dv_files"),
-        dv_targets=_dv_targets_for(man),
     )

@@ -38,7 +38,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
     snapshot_agg,
     snapshot_delete,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 SCHEMA = (
@@ -69,7 +69,7 @@ def _mk(spark, path, n_files=3, rows_per=6, nulls=True):
                 )
             )
         df = spark.createDataFrame(rows, SCHEMA).coalesce(1)
-        snapshot_write_with_stats(df, path, COLS, mode="append")
+        snapshot_write(df, path, mode="append", stats_cols=COLS)
 
 
 ALL_AGGS = [
@@ -203,11 +203,11 @@ def test_minmax_types_stable_across_dv_delete(spark, tmp_path):
             (i, datetime.date(2024, 1, 1 + i), Decimal(i) + Decimal("0.37"))
             for i in range(3 * fi, 3 * fi + 3)
         ]
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame(
                 rows, "id int, d date, amt decimal(7,2)"
             ).coalesce(1),
-            t, ["id", "d", "amt"], mode="append",
+            t, mode="append", stats_cols=["id", "d", "amt"],
         )
     aggs = [("min", "d"), ("max", "d"), ("min", "amt"), ("max", "amt")]
 
@@ -278,7 +278,7 @@ def test_empty_and_allnull_semantics(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, None), (2, None), (3, None)], "id int, x double"
     )
-    snapshot_write_with_stats(df, t, ["id", "x"])
+    snapshot_write(df, t, stats_cols=["id", "x"])
     got = snapshot_agg(
         spark, t,
         [("min", "x"), ("max", "x"), ("sum", "x"), ("count", "x"),
@@ -317,8 +317,8 @@ def test_partition_column_aggs_stay_exact(spark, tmp_path):
         [(i, i % 3, float(i)) for i in range(30)],
         "id int, bucket int, x double",
     )
-    snapshot_write_with_stats(
-        df, t, ["id", "x"], partition_cols=["bucket"]
+    snapshot_write(
+        df, t, partition_cols=["bucket"], stats_cols=["id", "x"],
     )
     got = snapshot_agg(
         spark, t,
@@ -379,16 +379,16 @@ def test_wide_decimal_sum_combines_at_full_precision(spark, tmp_path):
     violating the never-approximate contract."""
     t = str(tmp_path / "agw_wide")
     big = 10 ** 28
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, Decimal(big // 2)), (2, Decimal(big // 2))],
             "id int, v decimal(30,0)",
         ).coalesce(1),
-        t, ["id", "v"],
+        t, stats_cols=["id", "v"],
     )
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(3, Decimal(7))], "id int, v decimal(30,0)"),
-        t, ["id", "v"], mode="append",
+        t, mode="append", stats_cols=["id", "v"],
     )
     got = snapshot_agg(spark, t, [("sum", "v")])[0]
     assert got[0] == Decimal(big + 7)  # the +7 must survive
@@ -400,18 +400,18 @@ def test_lossy_stat_image_types_route_to_scan(spark, tmp_path):
     ``str(bytearray(...))`` is not the value order, and the combined
     result must come back Spark-typed, not as a repr string."""
     t = str(tmp_path / "agw_bin")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, bytearray(b"\x02")), (2, bytearray(b"\x05"))],
             "id int, b binary",
         ).coalesce(1),
-        t, ["id", "b"],
+        t, stats_cols=["id", "b"],
     )
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(3, bytearray(b"\x10"))], "id int, b binary"
         ),
-        t, ["id", "b"], mode="append",
+        t, mode="append", stats_cols=["id", "b"],
     )
     mn, mx = snapshot_agg(spark, t, [("min", "b"), ("max", "b")])[0]
     assert bytes(mn) == b"\x02" and bytes(mx) == b"\x10"
@@ -427,11 +427,11 @@ def test_null_recorded_sum_without_allnull_proof_scans(
     oddity) must route the file to the scan and stay exact."""
     t = str(tmp_path / "agw_nullsum")
     monkeypatch.setattr(snap, "_stat_sum_norm", lambda v: None)
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, 10), (2, 20)], "id int, v int"
         ).coalesce(1),
-        t, ["id", "v"],
+        t, stats_cols=["id", "v"],
     )
     monkeypatch.undo()
     calls = []
@@ -465,13 +465,14 @@ def _mk_part(spark, path, with_nulls=True):
                     float(i) * 2.0,
                 )
             )
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame(
                 rows, "id int, day date, seg string, x double"
             ).coalesce(1),
-            path, ["id", "x"],
-            partition_cols=["day", "seg"],
+            path,
             mode="append" if fi else "overwrite",
+            partition_cols=["day", "seg"],
+            stats_cols=["id", "x"],
         )
 
 
@@ -633,17 +634,17 @@ def test_group_agg_timestamp_partition_trailing_zero_micros(
     t = str(tmp_path / "gagg_ts")
     ts1 = datetime.datetime(2024, 1, 1, 0, 0, 0, 123000)
     ts2 = datetime.datetime(2024, 1, 2)
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, ts1), (2, ts1), (3, ts2)], "id int, ts timestamp"
         ),
-        t, ["id"], partition_cols=["ts"],
+        t, partition_cols=["ts"], stats_cols=["id"],
     )
     # force a split: one more file in the ts1 partition, then a DV
     # tombstone so that file must SCAN while the first stays metadata
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(10, ts1)], "id int, ts timestamp"),
-        t, ["id"], mode="append", partition_cols=["ts"],
+        t, mode="append", partition_cols=["ts"], stats_cols=["id"],
     )
     snapshot_delete(spark, t, {"id": [10]}, mode="dv")
     got = sorted(
@@ -666,9 +667,9 @@ def test_partition_key_aggs_answer_from_directories(
          i % 3)
         for i in range(30)
     ]
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(rows, "id int, day date, bucket int"),
-        t, ["id"], partition_cols=["day", "bucket"],
+        t, partition_cols=["day", "bucket"], stats_cols=["id"],
     )
     calls = []
     orig = snap._read_file_list
@@ -707,11 +708,11 @@ def test_float_partition_key_aggs_scan(spark, tmp_path, monkeypatch):
     strings faithfully in every rendering — they scan, and stay
     exact."""
     t = str(tmp_path / "agw_fdir")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, 0.5), (2, 0.5), (3, 1.5)], "id int, w double"
         ),
-        t, ["id"], partition_cols=["w"],
+        t, partition_cols=["w"], stats_cols=["id"],
     )
     calls = []
     orig = snap._read_file_list
@@ -745,16 +746,16 @@ def test_tzful_timestamp_partition_key_scans_for_correctness(
     try:
         ts1 = datetime.datetime(2024, 1, 1, 12, 0, 0)
         ts2 = datetime.datetime(2024, 6, 1, 12, 0, 0)  # DST differs
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame(
                 [(1, ts1), (2, ts1), (3, ts2)], "id int, ts timestamp"
             ),
-            t, ["id"], partition_cols=["ts"],
+            t, partition_cols=["ts"], stats_cols=["id"],
         )
         # force a meta/scan split inside the ts1 group
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame([(9, ts1)], "id int, ts timestamp"),
-            t, ["id"], mode="append", partition_cols=["ts"],
+            t, mode="append", partition_cols=["ts"], stats_cols=["id"],
         )
         snapshot_delete(spark, t, {"id": [9]}, mode="dv")
         base = read_snapshot(spark, t)
@@ -786,11 +787,11 @@ def test_count_over_float_partition_key_is_metadata_only(
     null-vs-non-null, which the Hive null marker decides without any
     value decode — zero file opens, while MIN/MAX still scan."""
     t = str(tmp_path / "agw_fcnt")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, 0.5), (2, 0.5), (3, None)], "id int, w double"
         ),
-        t, ["id"], partition_cols=["w"],
+        t, partition_cols=["w"], stats_cols=["id"],
     )
     calls = []
     orig = snap._read_file_list

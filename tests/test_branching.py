@@ -94,11 +94,12 @@ def test_branch_dml_compact_restore_and_feed(spark, table):
 def test_publish_fast_forward_and_stats_carry(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         Range,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
-        _df(spark, [(i, i % 3, f"d{i}") for i in range(30)]), table, ["id"]
+    snapshot_write(
+        _df(spark, [(i, i % 3, f"d{i}") for i in range(30)]),
+        table, stats_cols=["id"],
     )
     create_branch(spark, table, "wap")
     ref = branch_ref(table, "wap")

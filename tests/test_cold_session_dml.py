@@ -28,7 +28,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.namecatalog import (
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -83,12 +83,11 @@ spark.stop()
 def test_cold_process_dml_resolves_durable_names(spark, tmp_path):
     t = str(tmp_path / "coldt")
     root = str(tmp_path / "croot")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, "a"), (2, "b"), (3, "c")], "id int, v string"
         ),
-        t,
-        ["id"],
+        t, stats_cols=["id"],
     )
     catalog_add(spark, "ColdT", t, root=root, register=False)
 

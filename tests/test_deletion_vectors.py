@@ -27,7 +27,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_update,
     snapshot_versions,
     snapshot_write,
-    snapshot_write_with_stats,
     sweep_orphans,
     vacuum_snapshots,
 )
@@ -72,8 +71,8 @@ def test_dv_equals_rewrite_over_dml_storm(spark, tmp_path):
     b = str(tmp_path / "via_rw")
     rows = [(i, i % 3, f"v{i}") for i in range(30)]
     for t in (a, b):
-        snapshot_write_with_stats(
-            _df(spark, rows), t, stats_cols=["id"], partition_cols=["month"]
+        snapshot_write(
+            _df(spark, rows), t, partition_cols=["month"], stats_cols=["id"],
         )
     ref = {(i, m, v) for i, m, v in rows}
 
@@ -152,9 +151,9 @@ def test_dv_read_surfaces(spark, table, tmp_path):
         read_snapshot_with_bloom,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     idx = str(tmp_path / "dv_bloom")
     build_snapshot_bloom_index(spark, table, "id", idx)
@@ -181,8 +180,8 @@ def test_dv_change_feed_and_restore_resurrection(spark, table):
     resurrection); compaction after a DV delete is an empty change
     set; the apply-invariant holds across the whole history."""
     base = [(i, i % 2, f"v{i}") for i in range(10)]
-    snapshot_write_with_stats(
-        _df(spark, base), table, stats_cols=["id"], partition_cols=["month"]
+    snapshot_write(
+        _df(spark, base), table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_delete(spark, table, {"id": [2, 7]}, mode="dv")  # v2
     ch = snapshot_changes(spark, table, from_version=1, to_version=2)
@@ -229,9 +228,9 @@ def test_dv_feed_classification(spark, table, tmp_path):
     # one MIXED file per month dir: the DV delete below must write a
     # tombstone (a single-valued victim file would full-drop by stats
     # proof and the commit would classify as a file removal instead)
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, "x") for i in range(6)]).coalesce(1),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     got = _drain(spark, table, str(tmp_path / "dvf"), "dv_f1",
                  on_non_append="verify")
@@ -268,9 +267,9 @@ def test_dv_branches_and_publish(spark, table):
         publish_branch,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, 1, f"v{i}") for i in range(8)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_delete(spark, table, {"id": [0]}, mode="dv")  # main v2
     ref = create_branch(spark, table, "work")
@@ -289,9 +288,9 @@ def test_dv_survives_vacuum_and_sweep(spark, table):
     never deletes a live sidecar however old it is."""
     import time
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, 1, f"v{i}") for i in range(10)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_delete(spark, table, {"id": [3]}, mode="dv")  # v2 (dv commit)
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
@@ -336,8 +335,8 @@ def test_dv_write_amplification_win(spark, table):
 
     pad = "x" * 2000
     rows = [(i, i % 8, pad + _uuid.uuid4().hex) for i in range(4000)]
-    snapshot_write_with_stats(
-        _df(spark, rows), table, stats_cols=["id"], partition_cols=["month"]
+    snapshot_write(
+        _df(spark, rows), table, partition_cols=["month"], stats_cols=["id"],
     )
     before_dirs = set(os.listdir(os.path.join(table, "data")))
     # victims spread across the id range -> every file holds one
@@ -348,8 +347,8 @@ def test_dv_write_amplification_win(spark, table):
 
     # same delete on a fresh copy via rewrite
     table2 = table + "_rw"
-    snapshot_write_with_stats(
-        _df(spark, rows), table2, stats_cols=["id"], partition_cols=["month"]
+    snapshot_write(
+        _df(spark, rows), table2, partition_cols=["month"], stats_cols=["id"],
     )
     before2 = set(os.listdir(os.path.join(table2, "data")))
     _, n2 = snapshot_delete(spark, table2, {"id": victims}, mode="rewrite")
@@ -375,8 +374,8 @@ def test_update_dv_equals_rewrite(spark, tmp_path):
     b = str(tmp_path / "urw")
     rows = [(i, i % 2, f"v{i}") for i in range(20)]
     for t in (a, b):
-        snapshot_write_with_stats(
-            _df(spark, rows), t, stats_cols=["id"], partition_cols=["month"]
+        snapshot_write(
+            _df(spark, rows), t, partition_cols=["month"], stats_cols=["id"],
         )
         snapshot_delete(spark, t, {"id": [4]}, mode="dv")  # pre-existing DV
     va, na = snapshot_update(
@@ -419,9 +418,9 @@ def test_compact_dvs_consolidates_sidecars(spark, table, tmp_path):
     )
     from tests.test_snapshot_feed import _drain
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     for k in (1, 5, 9):
         snapshot_delete(spark, table, {"id": [k]}, mode="dv")
@@ -488,8 +487,8 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
     a = str(tmp_path / "mdv")
     b = str(tmp_path / "mrw")
     for t in (a, b):
-        snapshot_write_with_stats(
-            mk(base), t, stats_cols=["id"], partition_cols=["month"]
+        snapshot_write(
+            mk(base), t, partition_cols=["month"], stats_cols=["id"],
         )
         snapshot_delete(spark, t, {"id": [9]}, mode="dv")  # pre-existing DV
 
@@ -532,17 +531,19 @@ def _readd_history(spark, table):
     """v1 write, v2 DV-delete, v3 CoW-delete of every remaining row in
     month 0 (its file DROPS with no replacement), v4 restore(v2):
     v3->v4 RE-ADDS a file that carries outstanding tombstones while
-    the DV set is unchanged — the trap for any 'append' fast path."""
+    the DV set is unchanged — the trap for any 'append' fast path. The
+    v2 sidecar also tombstones a month-1 row, so it keeps a live
+    target (and stays in the DV set) after month 0's file drops."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, 0 if i < 6 else 1, f"v{i}") for i in range(12)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
-    snapshot_delete(spark, table, {"id": [1, 3]}, mode="dv")          # v2
+    snapshot_delete(spark, table, {"id": [1, 3, 7]}, mode="dv")       # v2
     snapshot_delete(spark, table, {"id": [0, 2, 4, 5]}, mode="rewrite")       # v3
     man3 = _load_manifest(spark, table, 3)
     assert man3.get("dv_files")  # tombstones still carried
@@ -638,9 +639,9 @@ def test_dv_read_plan_is_broadcast_only(spark, tmp_path):
     )
 
     table = str(tmp_path / "dv_plan")
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 3, f"v{i}") for i in range(600)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_delete(spark, table, {"id": [5, 50, 500]}, mode="dv")
     got = read_snapshot(spark, table)
@@ -670,14 +671,19 @@ def test_feed_skip_streams_untargeted_appends_alongside_readd(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(10)]),
         table, partition_cols=["month"],
     )                                                          # v1
-    snapshot_delete(spark, table, {"id": [0]}, mode="dv")           # v2
+    # id 1 (month 1) keeps the sidecar live once month 0's file drops
+    snapshot_delete(spark, table, {"id": [0, 1]}, mode="dv")        # v2
     man2 = _load_manifest(spark, table, 2)
     targeted = [f for f in man2["files"] if "month=0" in f]
-    snapshot_delete(spark, table, {"id": [2, 4, 6, 8]}, mode="rewrite")     # v3 CoW
+    snapshot_delete(
+        spark, table, {"id": [2, 4, 6, 8], "month": [0]}, mode="rewrite"
+    )                                                          # v3 CoW
     man3 = _load_manifest(spark, table, 3)
     readd = sorted(set(targeted) - set(man3["files"]))
     assert readd  # the tombstoned month-0 file left the manifest
-    # v4: one commit = re-add of the targeted file + a FRESH append
+    # v4: one commit = re-add of the targeted file + a FRESH append;
+    # v3's recorded targets shrank to its live files, so the re-add
+    # names its target again (as a restore's source manifest does)
     _, fresh = _write_commit_files(
         _df(spark, [(50, 2, "new"), (51, 2, "new2")]), table, ["month"]
     )
@@ -686,6 +692,7 @@ def test_feed_skip_streams_untargeted_appends_alongside_readd(
         sorted(man3["files"] + readd[:1] + fresh),
         StructType.fromJson(man3["schema"]),
         "weird_mixed_readd", 3, partition_cols=["month"],
+        dv_targets=man2["dv_targets"],
     )
     # skip mode: fresh files stream, the re-added tombstoned file not
     got = _drain(
@@ -770,9 +777,9 @@ def test_snapshot_delete_mode_auto_dispatch(spark, table, monkeypatch):
         _load_manifest,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     # victims are tiny vs a huge threshold -> rewrite
     monkeypatch.setattr(sn, "DV_THRESHOLD_MB", 1024)
@@ -809,9 +816,9 @@ def test_dml_opens_the_head_once_per_statement(spark, table, monkeypatch):
     sanitized and planned head (auto landing on either strategy)."""
     from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     opens = []
     real = sn._manifest_at
@@ -900,10 +907,13 @@ def test_replace_partitions_with_outstanding_dvs(spark, table):
     )
     man_rp = _load_manifest(spark, table, v_rp)
     # DVs inherit through the replacement (month=1's tombstone must
-    # keep riding); the target list is now a superset (month=0's
-    # entry went inert with its file)
+    # keep riding); the recorded targets shrink to the live files
+    # (month=0's entry went inert with its file)
     assert man_rp["dv_files"] == man["dv_files"]
-    assert man_rp["dv_targets"] == man["dv_targets"]
+    assert man_rp["dv_targets"] == sorted(
+        set(man["dv_targets"]) & set(man_rp["files"])
+    )
+    assert len(man_rp["dv_targets"]) == len(man["dv_targets"]) - 1
     expect = sorted(
         [(i, i % 2, f"v{i}") for i in range(12) if i not in (0, 1)
          if i % 2 == 1]

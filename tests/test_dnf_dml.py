@@ -35,7 +35,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_delete,
     snapshot_register,
     snapshot_update,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -59,7 +59,7 @@ def _mk_ts_table(spark, path, n_files=3, rows_per=4):
         df = spark.createDataFrame(
             rows, "id int, ts timestamp, fare double"
         ).coalesce(1)
-        snapshot_write_with_stats(df, path, ["ts", "id"], mode="append")
+        snapshot_write(df, path, mode="append", stats_cols=["ts", "id"])
 
 
 def _head_man(spark, path):
@@ -147,7 +147,7 @@ def test_dnf_null_rows_match_no_branch(spark, tmp_path):
          (3, None, None)],
         "id int, ts timestamp, fare double",
     )
-    snapshot_write_with_stats(df, t, ["ts", "id"])
+    snapshot_write(df, t, stats_cols=["ts", "id"])
     # both branches touch a NULL-bearing column: NULLs survive
     v, n = snapshot_delete(
         spark, t, [{"ts": Range(hi="2030-01-01")}, {"fare": Range(lo=-100.0)}],
@@ -286,7 +286,7 @@ def test_sql_bool_ne_complements(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, True), (2, False), (3, None)], "id int, flag boolean"
     )
-    snapshot_write_with_stats(df, t, ["id"])
+    snapshot_write(df, t, stats_cols=["id"])
     snapshot_register(spark, t, "booldnf")
     r = snapshot_sql(
         spark, "DELETE FROM booldnf WHERE flag != TRUE"
@@ -313,7 +313,7 @@ def test_sql_ne_nan_parity(spark, tmp_path):
         [(1, float("nan")), (2, 5.0), (3, 1.0), (4, None)],
         "id int, fare double",
     )
-    snapshot_write_with_stats(df, t, ["id"])
+    snapshot_write(df, t, stats_cols=["id"])
     snapshot_register(spark, t, "nandnf")
     r = snapshot_sql(
         spark, "DELETE FROM nandnf WHERE fare != 5.0"

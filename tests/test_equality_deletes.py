@@ -34,7 +34,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_update,
     snapshot_versions,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 
@@ -97,9 +96,9 @@ def test_upsert_and_delete_keys_end_to_end(spark, table):
     """Upsert replaces matched keys and inserts unmatched ones without
     reading the table; delete_keys masks rows by key; every metadata
     aggregate stays exact while entries are outstanding."""
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 3, f"v{i}") for i in range(12)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     v, n = snapshot_append_upsert(
         spark, table,
@@ -235,9 +234,9 @@ def test_resolve_eq_equivalence_idempotence_and_gc(spark, table):
         vacuum_snapshots,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 3, f"v{i}") for i in range(30)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_append_upsert(
         spark, table,
@@ -290,9 +289,9 @@ def test_mutators_resolve_first(spark, table):
         snapshot_update,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_append_upsert(
         spark, table, _df(spark, [(3, 1, "N3")]), ["id"]
@@ -821,9 +820,9 @@ def test_eq_read_plan_is_broadcast_only(spark, table):
         collect_with_metrics,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 3, f"v{i}") for i in range(600)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_append_upsert(
         spark, table, _df(spark, [(5, 2, "N5"), (700, 1, "N700")]), ["id"]

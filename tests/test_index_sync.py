@@ -21,7 +21,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_restore,
     snapshot_update,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 
@@ -52,7 +51,7 @@ def _rebuild(spark, table, tmp_path, name):
 def test_sync_follows_all_dml(spark, tmp_path):
     table = str(tmp_path / "docs_tbl")
     idx = str(tmp_path / "postings_idx")
-    v1 = snapshot_write_with_stats(
+    v1 = snapshot_write(
         _docs(
             spark,
             [
@@ -61,8 +60,7 @@ def test_sync_follows_all_dml(spark, tmp_path):
                 (3, "secret token epsilon"),
             ],
         ),
-        table,
-        stats_cols=["doc_id"],
+        table, stats_cols=["doc_id"],
     )
     write_postings_index(
         postings(read_snapshot(spark, table), "text", "doc_id"), idx
@@ -148,10 +146,9 @@ def test_ivf_sync_follows_all_dml(spark, tmp_path):
     table = str(tmp_path / "emb_tbl")
     idx = str(tmp_path / "ivf_idx")
     cents = vecs(spark, [(0, [1.0, 0.0]), (1, [0.0, 1.0])])
-    v1 = snapshot_write_with_stats(
+    v1 = snapshot_write(
         vecs(spark, [(10, [0.9, 0.1]), (11, [0.1, 0.9]), (12, [0.8, 0.2])]),
-        table,
-        stats_cols=["vec_id"],
+        table, stats_cols=["vec_id"],
     )
     write_ivf_index(read_snapshot(spark, table), cents, idx)
     set_ivf_sync_cursor(spark, idx, v1)
@@ -276,10 +273,9 @@ def test_sync_null_redaction_removes_all_postings(spark, tmp_path):
     index-deletes rule the old terms stayed retrievable forever."""
     table = str(tmp_path / "nr_tbl")
     idx = str(tmp_path / "nr_idx")
-    snapshot_write_with_stats(
+    snapshot_write(
         _docs(spark, [(1, "keep these words"), (3, "secret token")]),
-        table,
-        stats_cols=["doc_id"],
+        table, stats_cols=["doc_id"],
     )
     write_postings_index(
         postings(read_snapshot(spark, table), "text", "doc_id"), idx
@@ -317,9 +313,9 @@ def test_ivf_sync_null_embedding_update_removes_old_vector(spark, tmp_path):
     table = str(tmp_path / "nv_tbl")
     idx = str(tmp_path / "nv_idx")
     cents = vecs([(0, [1.0, 0.0]), (1, [0.0, 1.0])])
-    v1 = snapshot_write_with_stats(
-        vecs([(10, [0.9, 0.1]), (11, [0.1, 0.9])]), table,
-        stats_cols=["vec_id"],
+    v1 = snapshot_write(
+        vecs([(10, [0.9, 0.1]), (11, [0.1, 0.9])]),
+        table, stats_cols=["vec_id"],
     )
     write_ivf_index(read_snapshot(spark, table), cents, idx)
     set_ivf_sync_cursor(spark, idx, v1)
@@ -356,8 +352,8 @@ def test_sync_bootstrap_from_empty_table(spark, tmp_path):
     # --- postings: empty v1, then an append+delete storm, then sync
     table = str(tmp_path / "boot_docs")
     idx = str(tmp_path / "boot_post")
-    v1 = snapshot_write_with_stats(
-        _docs(spark, []), table, stats_cols=["doc_id"]
+    v1 = snapshot_write(
+        _docs(spark, []), table, stats_cols=["doc_id"],
     )
     write_postings_index(
         postings(read_snapshot(spark, table), "text", "doc_id"), idx
@@ -384,8 +380,8 @@ def test_sync_bootstrap_from_empty_table(spark, tmp_path):
     vtable = str(tmp_path / "boot_emb")
     vidx = str(tmp_path / "boot_ivf")
     cents = vecs([(0, [1.0, 0.0]), (1, [0.0, 1.0])])
-    w1 = snapshot_write_with_stats(
-        vecs([]), vtable, stats_cols=["vec_id"]
+    w1 = snapshot_write(
+        vecs([]), vtable, stats_cols=["vec_id"],
     )
     write_ivf_index(read_snapshot(spark, vtable), cents, vidx)
     set_ivf_sync_cursor(spark, vidx, w1)
@@ -429,7 +425,7 @@ def test_minhash_sync_follows_all_dml(spark, tmp_path):
 
     table = str(tmp_path / "mh_tbl")
     idx = str(tmp_path / "mh_idx")
-    v1 = snapshot_write_with_stats(
+    v1 = snapshot_write(
         _docs(
             spark,
             [
@@ -439,8 +435,7 @@ def test_minhash_sync_follows_all_dml(spark, tmp_path):
                 (4, "sphinx of black quartz judge my vow today"),
             ],
         ),
-        table,
-        stats_cols=["doc_id"],
+        table, stats_cols=["doc_id"],
     )
     write_minhash_index(
         spark, read_snapshot(spark, table), "text", "doc_id", idx
@@ -498,8 +493,8 @@ def test_minhash_sync_restores_suppression_semantics(spark, tmp_path):
         (1, "alpha beta gamma delta epsilon zeta eta theta"),
         (2, "one two three four five six seven eight nine"),
     ]
-    v1 = snapshot_write_with_stats(
-        _docs(spark, kept), table, stats_cols=["doc_id"]
+    v1 = snapshot_write(
+        _docs(spark, kept), table, stats_cols=["doc_id"],
     )
     write_minhash_index(
         spark, read_snapshot(spark, table), "text", "doc_id", idx
@@ -532,7 +527,7 @@ def test_postings_sync_follows_dv_deletes_and_updates(spark, tmp_path):
     index equals a full rebuild from the latest version."""
     table = str(tmp_path / "dv_docs")
     idx = str(tmp_path / "dv_postings")
-    v1 = snapshot_write_with_stats(
+    v1 = snapshot_write(
         _docs(
             spark,
             [
@@ -541,8 +536,7 @@ def test_postings_sync_follows_dv_deletes_and_updates(spark, tmp_path):
                 (3, "delta epsilon"),
             ],
         ),
-        table,
-        stats_cols=["doc_id"],
+        table, stats_cols=["doc_id"],
     )
     write_postings_index(
         postings(read_snapshot(spark, table), "text", "doc_id"), idx
@@ -586,7 +580,7 @@ def test_postings_sync_follows_equality_deletes(spark, tmp_path):
 
     table = str(tmp_path / "eq_docs")
     idx = str(tmp_path / "eq_postings")
-    v1 = snapshot_write_with_stats(
+    v1 = snapshot_write(
         _docs(
             spark,
             [
@@ -595,8 +589,7 @@ def test_postings_sync_follows_equality_deletes(spark, tmp_path):
                 (3, "delta epsilon"),
             ],
         ),
-        table,
-        stats_cols=["doc_id"],
+        table, stats_cols=["doc_id"],
     )
     write_postings_index(
         postings(read_snapshot(spark, table), "text", "doc_id"), idx

@@ -1,8 +1,9 @@
 """Spark jobs the warehouse no longer launches for what the driver holds.
 
 - ``session.local_frame``: driver-built rows become a ``LocalRelation``
-  (no job to collect or broadcast) with exactly the values, types and
-  errors of ``spark.createDataFrame(list, schema)``.
+  (no job to collect; broadcasting one still runs a job) with exactly
+  the values, types and errors of ``spark.createDataFrame(list,
+  schema)``.
 - ``snapshots._read_files``: the schema of an immutable commit or
   sidecar path set is inferred once per process, so re-planning a read
   runs no inference job.
@@ -124,6 +125,21 @@ def test_local_frame_without_arrow_conf(spark):
         _same_as_create(spark, ALL_ROWS, ALL_TYPES)
     finally:
         spark.conf.set(key, prior)
+
+
+def test_local_frame_collect_runs_no_job_but_broadcast_does(spark):
+    """Collecting a ``LocalRelation`` is answered on the driver; a
+    broadcast of one still collects its child through a job."""
+    from pyspark.sql import functions as F
+
+    rows = [(i,) for i in range(12)]
+    frame = local_frame(spark, rows, "id long")
+    assert _jobs(spark, frame.collect) == 0
+    n = _jobs(
+        spark,
+        lambda: spark.range(10).join(F.broadcast(frame), "id").collect(),
+    )
+    assert n == 2  # the broadcast's collect, then the join
 
 
 def test_local_frame_rejects_what_create_dataframe_rejects(spark):
@@ -452,3 +468,51 @@ def test_write_paths_run_no_bookkeeping_action():
                 hits.append(f"{fn.name}:{node.lineno}")
     assert found == guarded
     assert hits == []
+
+
+def test_only_commit_carries_stats():
+    """Per-file stats are manifest state that ``_commit`` alone carries
+    and computes: no other function in ``warehouse/`` or ``streaming/``
+    builds a ``"stats"``/``"stats_cols"`` entry or calls
+    ``collect_file_stats`` (``manifestlog`` — the manifest codec —
+    reads and writes the state it is handed), and the knobs the carry
+    rule replaced stay gone."""
+    import inspect
+
+    allowed = {"_commit", "collect_file_stats"}
+    keys = {"stats", "stats_cols"}
+    files = sorted(WAREHOUSE.glob("*.py")) + sorted(
+        (WAREHOUSE.parent / "streaming").glob("*.py")
+    )
+    hits = []
+    for path in files:
+        if path.name == "manifestlog.py":
+            continue
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef) or fn.name in allowed:
+                continue
+            for node in ast.walk(fn):
+                keyed = (
+                    isinstance(node, ast.Dict)
+                    and any(
+                        isinstance(k, ast.Constant) and k.value in keys
+                        for k in node.keys
+                    )
+                ) or (
+                    isinstance(node, ast.Subscript)
+                    and isinstance(node.ctx, ast.Store)
+                    and isinstance(node.slice, ast.Constant)
+                    and node.slice.value in keys
+                )
+                func = getattr(node, "func", None)
+                called = isinstance(node, ast.Call) and (
+                    getattr(func, "id", None) == "collect_file_stats"
+                    or getattr(func, "attr", None) == "collect_file_stats"
+                )
+                if keyed or called:
+                    hits.append(f"{path.name}:{fn.name}:{node.lineno}")
+    assert hits == []
+    params = inspect.signature(snapshots._commit).parameters
+    assert not {"known_seq", "carried_only"} & set(params)
+    assert not hasattr(snapshots, "snapshot_write_with_stats")
+    assert not hasattr(snapshots, "_drop_by_reference")

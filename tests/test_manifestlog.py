@@ -35,7 +35,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_delete,
     snapshot_restore,
     snapshot_write,
-    snapshot_write_with_stats,
     sweep_orphans,
     vacuum_snapshots,
 )
@@ -228,15 +227,15 @@ def test_commit_docs_are_o_change_not_o_table(spark, table, ckpt3):
     """Append commits write a CONSTANT-size doc while the table grows;
     checkpoint commits land on the cadence; every version reconstructs
     to exactly the accumulated state."""
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(8)]),
-        table, ["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     delta_sizes = []
     for k in range(2, 9):
-        snapshot_write_with_stats(
+        snapshot_write(
             _df(spark, [(100 + k, k % 2, f"b{k}")]),
-            table, ["id"], mode="append", partition_cols=["month"],
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
         doc = _read_doc(spark, table, k)
         if not doc.get("ckpt"):
@@ -613,14 +612,14 @@ def test_stripped_reconstruction_never_partial_stats(spark, table, ckpt3):
         _load_manifest as feed_load,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(6)]),
-        table, ["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )                                                        # v1 ckpt
     for k in range(2, 6):                                    # deltas + ckpt
-        snapshot_write_with_stats(
+        snapshot_write(
             _df(spark, [(100 + k, k % 2, f"b{k}")]),
-            table, ["id"], mode="append", partition_cols=["month"],
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
     head = _list_manifests(spark, table)[-1]
     assert not _read_doc(spark, table, head).get("ckpt")  # delta head

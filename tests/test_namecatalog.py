@@ -22,7 +22,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.namecatalog import (
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     _SQL_REGISTRY,
     read_snapshot,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -45,11 +45,11 @@ def fresh(spark, tmp_path):
     wipe()
     t = str(tmp_path / "trips")
     root = str(tmp_path / "whroot")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, "a"), (2, "b"), (3, "c")], "id int, v string"
         ),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     yield t, root
     wipe()

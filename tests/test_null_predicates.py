@@ -38,7 +38,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_register,
     snapshot_update,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -56,7 +55,7 @@ def _mk(spark, path):
         df = spark.createDataFrame(
             rows, "id int, email string"
         ).coalesce(1)
-        snapshot_write_with_stats(df, path, ["id", "email"], mode="append")
+        snapshot_write(df, path, mode="append", stats_cols=["id", "email"])
 
 
 def _head_man(spark, path):
@@ -203,8 +202,8 @@ def test_initial_default_column(spark, tmp_path):
     (non-null): IS NULL matches nothing among them; without a default
     they read NULL and all match."""
     t = str(tmp_path / "np_default")
-    snapshot_write_with_stats(
-        spark.createDataFrame([(1,), (2,)], "id int"), t, ["id"]
+    snapshot_write(
+        spark.createDataFrame([(1,), (2,)], "id int"), t, stats_cols=["id"],
     )
     snapshot_add_column(spark, t, "tier", "string", default="basic")
     snapshot_add_column(spark, t, "note", "string")

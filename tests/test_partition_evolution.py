@@ -33,7 +33,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_set_layout,
     snapshot_update,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 
@@ -54,8 +53,8 @@ def _mixed(spark, tmp_path, name="t"):
     """layout [month] -> unpartitioned -> [month]: three file
     generations, the middle one storing month as DATA."""
     t = str(tmp_path / name)
-    snapshot_write_with_stats(
-        _df(spark, ROWS_A), t, ["id"], partition_cols=["month"]
+    snapshot_write(
+        _df(spark, ROWS_A), t, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_set_layout(spark, t, None)
     snapshot_write(_df(spark, ROWS_B), t, mode="append")
@@ -281,9 +280,9 @@ def test_feed_batched_readd_of_unmigrated_file(spark, tmp_path):
     )
 
     t = str(tmp_path / "readd")
-    v_a = snapshot_write_with_stats(
-        _df(spark, [(1, 0, "a"), (2, 1, "b")]), t, ["id"],
-        partition_cols=["month"],
+    v_a = snapshot_write(
+        _df(spark, [(1, 0, "a"), (2, 1, "b")]),
+        t, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_set_layout(spark, t, None)
     snapshot_write(

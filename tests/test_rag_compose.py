@@ -122,15 +122,14 @@ def test_decontamination_composes_with_retrieval(spark, indexes, tmp_path):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         read_snapshot,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     chunks, _, _, _ = indexes
     table = str(tmp_path / "chunk_snap")
-    snapshot_write_with_stats(
+    snapshot_write(
         chunks.select("doc_id", "chunk_id", "chunk_text"),
-        table,
-        stats_cols=["doc_id"],
+        table, stats_cols=["doc_id"],
     )
     v, n = snapshot_delete(spark, table, {"doc_id": [3]}, mode="rewrite")
     assert n == chunks.where("doc_id = 3").count() and n > 0

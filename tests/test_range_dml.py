@@ -34,7 +34,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_register,
     snapshot_update,
     snapshot_versions,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -58,8 +58,8 @@ def _mk_ts_table(spark, path, n_files=3, rows_per=4):
         df = spark.createDataFrame(
             rows, "id int, ts timestamp, fare double"
         ).coalesce(1)
-        snapshot_write_with_stats(
-            df, path, ["ts", "id"], mode="append"
+        snapshot_write(
+            df, path, mode="append", stats_cols=["ts", "id"],
         )
 
 
@@ -128,7 +128,7 @@ def test_null_rows_survive_any_range(spark, tmp_path):
          (3, datetime.datetime(2024, 1, 4), 3.0)],
         "id int, ts timestamp, fare double",
     )
-    snapshot_write_with_stats(df, t, ["ts", "id"])
+    snapshot_write(df, t, stats_cols=["ts", "id"])
     v, n = snapshot_delete(
         spark, t, {"ts": Range(hi="2030-01-01")}, mode="rewrite",
     )
@@ -141,15 +141,15 @@ def test_all_null_file_carries(spark, tmp_path):
     """A file whose stats record only-null endpoints is excluded from
     the victim set entirely — never read, never rewritten."""
     t = str(tmp_path / "allnull")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, 5), (2, 9)], "id int, k int"
         ).coalesce(1),
-        t, ["k"],
+        t, stats_cols=["k"],
     )
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(3, None)], "id int, k int"),
-        t, ["k"], mode="append",
+        t, mode="append", stats_cols=["k"],
     )
     pre = set(_head_man(spark, t)["files"])
     v, n = snapshot_delete(spark, t, {"k": Range(lo=0)}, mode="rewrite")
@@ -212,7 +212,7 @@ def test_timestamp_space_form_bound_no_false_exclusion(spark, tmp_path):
          (3, datetime.datetime(2024, 1, 1, 23))],
         "id int, ts timestamp",
     ).coalesce(1)
-    snapshot_write_with_stats(df, t, ["ts"])
+    snapshot_write(df, t, stats_cols=["ts"])
     v, n = snapshot_delete(
         spark, t,
         {"ts": Range(hi="2024-01-01 12:00:00")},  # space form, inclusive
@@ -232,7 +232,7 @@ def test_timestamp_fraction_padding_boundary(spark, tmp_path):
          (2, datetime.datetime(2024, 1, 1, 0, 0, 0, 200000))],
         "id int, ts timestamp",
     ).coalesce(1)
-    snapshot_write_with_stats(df, t, ["ts"])
+    snapshot_write(df, t, stats_cols=["ts"])
     # lo = the .1s boundary, inclusive: file min == bound must stay a
     # victim and BOTH rows must go
     v, n = snapshot_delete(
@@ -252,7 +252,7 @@ def test_date_column_string_bound_truncates_like_spark(spark, tmp_path):
         [(i, base + datetime.timedelta(days=i)) for i in range(4)],
         "id int, day date",
     ).coalesce(1)
-    snapshot_write_with_stats(df, t, ["day"])
+    snapshot_write(df, t, stats_cols=["day"])
     # '2024-01-02 23:59:59' casts to date 2024-01-02; >= keeps 01-02+
     v, n = snapshot_delete(
         spark, t, {"day": Range(lo="2024-01-02 23:59:59")}, mode="rewrite",
@@ -270,7 +270,7 @@ def test_decimal_bounds_stay_exact(spark, tmp_path):
         [(i, Decimal(f"{i}.25")) for i in range(8)],
         "id int, amt decimal(10,2)",
     )
-    snapshot_write_with_stats(df.repartition(2, "id"), t, ["amt"])
+    snapshot_write(df.repartition(2, "id"), t, stats_cols=["amt"])
     v, n = snapshot_delete(
         spark, t, {"amt": Range(hi=Decimal("3.25"))}, mode="rewrite",
     )
@@ -286,7 +286,7 @@ def test_string_column_range(spark, tmp_path):
         [(i, w) for i, w in enumerate(["apple", "banana", "cherry", "date"])],
         "id int, w string",
     ).coalesce(1)
-    snapshot_write_with_stats(df, t, ["w"])
+    snapshot_write(df, t, stats_cols=["w"])
     v, n = snapshot_delete(
         spark, t, {"w": Range(lo="b", hi="d", hi_inc=False)}, mode="rewrite",
     )
@@ -301,11 +301,11 @@ def test_incomparable_bound_is_conservative_not_wrong(spark, tmp_path):
     (every file a victim) and Spark's row-level coercion decides —
     rows exact either way."""
     t = str(tmp_path / "coerce")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(i,) for i in range(6)], "id int"
         ).coalesce(1),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     v, n = snapshot_delete(spark, t, {"id": Range(hi="3")}, mode="rewrite")
     assert n == 4  # Spark casts '3' to int: 0..3 match
@@ -321,13 +321,13 @@ def test_int_partition_range_typed_compare(spark, tmp_path):
     the matching directories by reference (dir proof, zero rewrites)."""
     t = str(tmp_path / "intpart")
     rows = [(2 * m + i, m, f"m{m}") for m in range(1, 13) for i in (0, 1)]
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(rows, "id int, month int, s string"),
-        t, ["id"], partition_cols=["month"],
+        t, partition_cols=["month"], stats_cols=["id"],
     )
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(99, None, "nm")], "id int, month int, s string"),
-        t, ["id"], mode="append", partition_cols=["month"],
+        t, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     pre = set(_head_man(spark, t)["files"])
     v, n = snapshot_delete(spark, t, {"month": Range(hi=9)}, mode="rewrite")
@@ -344,9 +344,9 @@ def test_date_partition_ttl(spark, tmp_path):
     t = str(tmp_path / "datepart")
     base = datetime.date(2024, 1, 1)
     rows = [(i, base + datetime.timedelta(days=i)) for i in range(6)]
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(rows, "id int, day date"),
-        t, ["id"], partition_cols=["day"],
+        t, partition_cols=["day"], stats_cols=["id"],
     )
     v, n = snapshot_delete(
         spark, t, {"day": Range(hi="2024-01-03", hi_inc=False)},
@@ -368,16 +368,16 @@ def test_partition_range_after_layout_evolution(spark, tmp_path):
     )
 
     t = str(tmp_path / "evolved")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, 1), (2, 9)], "id int, month int"
         ).coalesce(1),
-        t, ["id"],  # unpartitioned: month lives as DATA
+        t, stats_cols=["id"],
     )
     snapshot_set_layout(spark, t, ["month"])
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(3, 1), (4, 9)], "id int, month int"),
-        t, ["id"], mode="append", partition_cols=["month"],
+        t, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     v, n = snapshot_delete(spark, t, {"month": Range(hi=5)}, mode="rewrite")
     assert n == 2  # ids 1 (old-layout data row) and 3 (dir-encoded)
@@ -476,7 +476,7 @@ def test_malformed_date_bound_never_drops_files(spark, tmp_path):
         [(i, base + datetime.timedelta(days=i)) for i in range(4)],
         "id int, day date",
     ).coalesce(1)
-    snapshot_write_with_stats(df, t, ["day"])
+    snapshot_write(df, t, stats_cols=["day"])
     head = snapshot_versions(spark, t)[-1]["version"]
     for bad in ("2024-01-153", "2024-01-02x"):
         with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
@@ -530,7 +530,7 @@ def test_string_column_ts_shaped_range_not_falsely_empty(spark, tmp_path):
          (3, "zzz")],
         "id int, s string",
     ).coalesce(1)
-    snapshot_write_with_stats(df, t, ["s"])
+    snapshot_write(df, t, stats_cols=["s"])
     rng = Range(lo="2024-01-01 12:00:00", hi="2024-01-01T05:00:00")
     assert not rng.is_empty()
     v, n = snapshot_delete(spark, t, {"s": rng}, mode="rewrite")
@@ -603,9 +603,9 @@ def test_count_where_partition_dirs_prove_without_scanning(
 
     t = str(tmp_path / "cntp")
     rows = [(2 * m + i, m) for m in range(1, 13) for i in (0, 1)]
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(rows, "id int, month int"),
-        t, ["id"], partition_cols=["month"],
+        t, partition_cols=["month"], stats_cols=["id"],
     )
     calls: list = []
     orig = S._read_file_list

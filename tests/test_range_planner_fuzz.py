@@ -44,7 +44,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_agg,
     snapshot_delete,
     snapshot_update,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 
 BASE_TS = datetime.datetime(2024, 1, 1)
@@ -90,7 +90,7 @@ def _mk_table(spark, rng: random.Random, path: str, n_files=4, rows_per=12):
         df = spark.createDataFrame(
             _gen_rows(rng, rows_per, f * rows_per), SCHEMA
         ).coalesce(1)
-        snapshot_write_with_stats(df, path, STATS_COLS, mode="append")
+        snapshot_write(df, path, mode="append", stats_cols=STATS_COLS)
 
 
 def _ts_bound(rng: random.Random):

@@ -43,7 +43,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_restore,
     snapshot_update,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 
@@ -157,7 +156,7 @@ def test_stats_pruning_and_dml_through_rename(spark, tmp_path):
     df = spark.createDataFrame(rows, "id int, bucket int, amt int").repartition(
         4, "bucket"
     )
-    snapshot_write_with_stats(df, t, stats_cols=["bucket", "amt"])
+    snapshot_write(df, t, stats_cols=["bucket", "amt"])
     snapshot_rename_column(spark, t, "amt", "amount")
     snapshot_rename_column(spark, t, "bucket", "shard")
     man = _man(spark, t)
@@ -342,10 +341,9 @@ def test_branch_restore_and_compact_carry_the_map(spark, tmp_path):
 
 def test_snapshot_files_presents_logical_stats_keys(spark, tmp_path):
     t = str(tmp_path / "t")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(1, 10)], "id int, amt int"),
-        t,
-        stats_cols=["amt"],
+        t, stats_cols=["amt"],
     )
     snapshot_rename_column(spark, t, "amt", "amount")
     row = snapshot_files(spark, t).collect()[0]

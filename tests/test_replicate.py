@@ -27,7 +27,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_update,
     snapshot_versions,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 from pyspark.sql import functions as F
@@ -53,9 +52,9 @@ def _assert_mirrors(spark, src, dst, xf=None):
 def test_replica_follows_full_dml_mix(spark, tmp_path):
     src = str(tmp_path / "src")
     dst = str(tmp_path / "dst")
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"v{i}") for i in range(10)]),
-        src, stats_cols=["id"], partition_cols=["month"],
+        src, partition_cols=["month"], stats_cols=["id"],
     )
     rep = replicate_keyed(spark, src, dst, ["id"])
     assert rep["upserted"] is None  # bootstrap

@@ -34,7 +34,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     read_snapshot,
     snapshot_delete,
     snapshot_register,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import snapshot_sql
 
@@ -53,7 +53,7 @@ def _mk(spark, path, n_files=3, rows_per=4):
         df = spark.createDataFrame(
             rows, "id int, ts timestamp, fare double"
         ).coalesce(1)
-        snapshot_write_with_stats(df, path, ["ts", "id"], mode="append")
+        snapshot_write(df, path, mode="append", stats_cols=["ts", "id"])
 
 
 @pytest.fixture()
@@ -287,11 +287,11 @@ def test_planner_value_refusal_falls_through(spark, tmp_path, spy):
     )
 
     t = str(tmp_path / "fp_bool")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, True), (2, False), (3, None)], "id int, flag boolean"
         ),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     snapshot_register(spark, t, "fp_bool")
     q = "SELECT COUNT(*) FROM fp_bool WHERE flag BETWEEN FALSE AND TRUE"

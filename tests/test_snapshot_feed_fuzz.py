@@ -25,7 +25,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_replace_partitions,
     snapshot_update,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 # op scripts: (kind, payload) — payloads are data-free recipes so
@@ -141,11 +140,9 @@ def test_changes_bridge_any_history(spark, tmp_path_factory, ops):
             next_id[0] += 1
         return out
 
-    snapshot_write_with_stats(
+    snapshot_write(
         mk(fresh_rows(0, 2) + fresh_rows(1, 2)),
-        table,
-        stats_cols=["id"],
-        partition_cols=pc,
+        table, partition_cols=pc, stats_cols=["id"],
     )
     for kind, *args in ops:
         if kind == "append":
@@ -341,8 +338,8 @@ def test_changes_long_history_bounded_plan(spark, tmp_path_factory):
         return spark.createDataFrame(rows, "id long, month int, v string")
 
     n_commits = 200
-    snapshot_write_with_stats(
-        mk([(0, 0, "v0")]), table, stats_cols=["id"], partition_cols=pc
+    snapshot_write(
+        mk([(0, 0, "v0")]), table, partition_cols=pc, stats_cols=["id"],
     )
     for i in range(1, n_commits):
         if i % 67 == 0:

@@ -582,19 +582,19 @@ def test_drop_partitions_metadata_only(spark, table):
         snapshot_changes,
         snapshot_delete,
         snapshot_drop_partitions,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     for i in range(3):  # months 0..2, one MIXED 4-row file each
         # (coalesce: single-valued victim files would full-drop at the
         # DV delete below instead of getting the tombstones this test
         # plants in both a dropped and a surviving partition)
-        snapshot_write_with_stats(
+        snapshot_write(
             _df(
                 spark,
                 [(4 * i + j, i, f"m{i}r{j}") for j in range(4)],
             ).coalesce(1),
-            table, ["id"], mode="append", partition_cols=["month"],
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
     # tombstones in BOTH a dropped and a surviving partition
     snapshot_delete(spark, table, {"id": [1, 5]}, mode="dv")  # month 0, 1
@@ -719,15 +719,15 @@ def test_snapshot_delete_where_conjunctive(spark, table, capsys):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     rows = [
         (1, 0, "a"), (1, 0, "b"), (1, 1, "c"), (2, 0, "d"), (2, 1, "e"),
     ]
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(rows, "id long, month int, v string"),
-        table, stats_cols=["id", "v"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id", "v"],
     )
     # conjunction: id=1 AND v IN (a, c) → exactly rows a (month 0)
     # and c (month 1); d/e (id=2) and b (v=b) survive
@@ -773,17 +773,17 @@ def test_delete_where_scalar_values_and_partition_pruning(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     # same id range in both months: without partition pruning the
     # month=0 file is a stats victim for id and gets rewritten
     for m in (0, 1):
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame(
                 [(7, m, "a"), (8, m, "b")], "id long, month int, v string"
             ).coalesce(1),
-            table, ["id"], mode="append", partition_cols=["month"],
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
     man0_files = set(
         _load_manifest(spark, table, 2)["files"]
@@ -811,15 +811,15 @@ def test_snapshot_update_where_conjunctive(spark, table, capsys):
     --where path honors --mode dv."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_update,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     for m in (0, 1):
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame(
                 [(7, m, "a"), (8, m, "b")], "id long, month int, v string"
             ).coalesce(1),
-            table, ["id"], mode="append", partition_cols=["month"],
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
     v, n = snapshot_update(
         spark, table, {"month": 1, "id": 7}, {"v": "X"}, mode="rewrite",
@@ -861,12 +861,12 @@ def test_update_auto_discounts_full_match_files(spark, table, monkeypatch):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_update,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(7, 1, f"r{j}") for j in range(50)]).coalesce(1),
-        table, ["id"], mode="append", partition_cols=["month"],
+        table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     # threshold 0: ANY counted victim byte would select DV — only the
     # full-match discount keeps the estimate at zero
@@ -914,22 +914,22 @@ def test_delete_where_full_drop_requires_every_column(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     # one file: id constant (full proof holds), v mixed (proof fails)
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(7, 1, "x"), (7, 1, "y")], "id long, month int, v string"
         ).coalesce(1),
-        table, ["id", "v"], mode="append", partition_cols=["month"],
+        table, mode="append", partition_cols=["month"], stats_cols=["id", "v"],
     )
     # another file: id AND v both constant → drops by reference
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(7, 1, "x"), (7, 1, "x")], "id long, month int, v string"
         ).coalesce(1),
-        table, ["id", "v"], mode="append", partition_cols=["month"],
+        table, mode="append", partition_cols=["month"], stats_cols=["id", "v"],
     )
     pre = _data_files(table)
     v, n = snapshot_delete(
@@ -1080,19 +1080,19 @@ def test_delete_full_match_files_drop_by_reference(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     # one append per key → single-valued files (min == max)
     for k in (1, 2):
-        snapshot_write_with_stats(
+        snapshot_write(
             _df(spark, [(k, 1, f"r{j}") for j in range(4)]).coalesce(1),
-            table, ["id"], mode="append", partition_cols=["month"],
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
     # a MIXED file (ids 5 and 6 together) — only ever partially matches
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(5, 1, "a"), (6, 1, "b")]).coalesce(1),
-        table, ["id"], mode="append", partition_cols=["month"],
+        table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     pre = _data_files(table)
     v, n = snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")
@@ -1124,16 +1124,16 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(2, 1, f"r{j}") for j in range(4)]).coalesce(1),
-        table, ["id"], mode="append", partition_cols=["month"],
+        table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(5, 1, "a"), (6, 1, "b")]).coalesce(1),
-        table, ["id"], mode="append", partition_cols=["month"],
+        table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     # clustered-key takedown: NO sidecar written, file dropped
     v, n = snapshot_delete(spark, table, {"id": [2]}, mode="dv")
@@ -1146,9 +1146,9 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
     ]
     # boundary case: full file dropped AND one tombstone for the
     # mixed file's matching row, in one commit
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(6, 1, "c"), (6, 1, "d")]).coalesce(1),
-        table, ["id"], mode="append", partition_cols=["month"],
+        table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     v2, n2 = snapshot_delete(spark, table, {"id": [6]}, mode="dv")
     man2 = _load_manifest(spark, table, v2)
@@ -1165,16 +1165,16 @@ def test_delete_full_match_blocked_by_null_rows(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     rows = spark.createDataFrame(
         [(9, 1, "x"), (9, 1, "y"), (None, 1, "keep-me")],
         "id long, month int, v string",
     )
-    snapshot_write_with_stats(
-        rows.coalesce(1), table, ["id"], mode="append",
-        partition_cols=["month"],
+    snapshot_write(
+        rows.coalesce(1),
+        table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     man0 = _load_manifest(spark, table, 1)
     st = next(iter(man0["stats"].values()))["id"]
@@ -1194,12 +1194,12 @@ def test_snapshot_minmax_metadata_vs_scan(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_agg,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(10)]),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     assert snapshot_agg(
         spark, table, [("min", "id"), ("max", "id")]
@@ -1236,15 +1236,15 @@ def test_snapshot_count_nonnull_and_hybrid_minmax(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_agg,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     rows = spark.createDataFrame(
         [(0, 0, "a"), (1, 0, None), (2, 1, "c"), (None, 1, "d")],
         "id long, month int, v string",
     )
-    snapshot_write_with_stats(
-        rows, table, stats_cols=["id", "v"], partition_cols=["month"]
+    snapshot_write(
+        rows, table, partition_cols=["month"], stats_cols=["id", "v"],
     )
     assert snapshot_agg(spark, table, [("count", "id")])[0][0] == 3
     assert snapshot_agg(spark, table, [("count", "v")])[0][0] == 3
@@ -1388,7 +1388,7 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
         snapshot_agg,
         snapshot_compact,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     # one comfortably-large file per month + a stream of 1-row shards
@@ -1396,19 +1396,19 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
         [(i, i % 2, "x" * 40) for i in range(20_000)],
         "id long, month int, v string",
     ).repartition(2, "month")
-    snapshot_write_with_stats(
-        big, table, stats_cols=["id"], partition_cols=["month"],
+    snapshot_write(
+        big, table, partition_cols=["month"], stats_cols=["id"],
     )
     for i in range(4):
         # two-row MIXED shards: the fragment tombstone planted below
         # must stay a tombstone (a 1-row shard would full-drop at
         # delete time by the stats whole-file proof)
-        snapshot_write_with_stats(
+        snapshot_write(
             _df(
                 spark,
                 [(100_000 + i, i % 2, f"s{i}"), (200_000 + i, i % 2, f"t{i}")],
             ).coalesce(1),
-            table, ["id"], mode="append", partition_cols=["month"],
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
     # DV-delete one row in a BIG (to-be-carried) file and one row in a
     # fragment (to-be-packed): the first tombstone must keep riding,
@@ -1603,7 +1603,7 @@ def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
         _load_manifest,
         snapshot_delete,
         snapshot_version_at,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     # 4 appends, each a disjoint id range -> 4+ files with tight stats;
@@ -1613,9 +1613,9 @@ def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
             [(lo + i, 1 + lo // 200, f"v{lo + i}") for i in range(50)],
             "id long, month int, v string",
         )
-        snapshot_write_with_stats(
-            df, table, stats_cols=["id"], mode="append",
-            partition_cols=["month"],
+        snapshot_write(
+            df,
+            table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
         if lo == 200:
             t_mid = time.time()  # version 3: ids 0-249
@@ -1690,22 +1690,38 @@ def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
 
 
 def test_stats_survive_append_and_missing_stats_kept(spark, table):
+    """A plain append records stats for its files (``stats_cols`` is
+    table state); a file without an entry (legacy manifests) is
+    conservatively KEPT by pruned reads, never silently dropped."""
+    from pyspark.sql.types import StructType
+
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        _commit,
         _load_manifest,
         Range,
-        snapshot_write_with_stats,
     )
 
-    snapshot_write_with_stats(
-        _df(spark, [(1, 1, "a")]), table, stats_cols=["id"]
-    )
-    # a stats-less append (plain snapshot_write) must be conservatively
-    # KEPT by pruned reads, not silently dropped
+    snapshot_write(_df(spark, [(1, 1, "a")]), table, stats_cols=["id"])
     snapshot_write(_df(spark, [(999, 9, "z")]), table, mode="append")
+    man = _load_manifest(spark, table, 2)
+    assert man["stats_cols"] == ["id"]
+    assert set(man["stats"]) == set(man["files"])
+    first = set(_load_manifest(spark, table, 1)["files"])
+    appended = sorted(set(man["files"]) - first)
+    # the legacy shape: a manifest whose stats map lacks the new file
+    _commit(
+        spark, table, man["files"], StructType.fromJson(man["schema"]),
+        "legacy_stats", 2,
+        extra={
+            "stats": {
+                f: s for f, s in man["stats"].items() if f not in appended
+            }
+        },
+    )
+    man = _load_manifest(spark, table, 3)
+    assert [f for f in man["files"] if f not in man["stats"]] == appended
     got = read_snapshot(spark, table, where={"id": Range(900, 1000)})
     assert [r.id for r in got.collect()] == [999]
-    man = _load_manifest(spark, table, 2)
-    assert any(f not in man.get("stats", {}) for f in man["files"])
 
 
 def test_stats_pruning_timestamp_and_string_columns(spark, table):
@@ -1713,7 +1729,7 @@ def test_stats_pruning_timestamp_and_string_columns(spark, table):
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         Range,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     mk = lambda day, tag: spark.createDataFrame(  # noqa: E731
@@ -1723,9 +1739,9 @@ def test_stats_pruning_timestamp_and_string_columns(spark, table):
         ],
         "id long, ts timestamp, name string",
     )
-    snapshot_write_with_stats(mk(1, "a"), table, stats_cols=["ts", "name"])
-    snapshot_write_with_stats(
-        mk(2, "b"), table, stats_cols=["ts", "name"], mode="append"
+    snapshot_write(mk(1, "a"), table, stats_cols=["ts", "name"])
+    snapshot_write(
+        mk(2, "b"), table, mode="append", stats_cols=["ts", "name"],
     )
     got = read_snapshot(
         spark, table,
@@ -1745,7 +1761,7 @@ def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     for lo in (0, 100, 200):
@@ -1753,7 +1769,7 @@ def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
             [(lo + i, 1, f"v{lo + i}") for i in range(50)],
             "id long, month int, v string",
         )
-        snapshot_write_with_stats(df, table, stats_cols=["id"], mode="append")
+        snapshot_write(df, table, mode="append", stats_cols=["id"])
     before = _load_manifest(spark, table, 3)
     v, n_deleted = snapshot_delete(
         spark, table, {"id": [110, 120, 130]}, mode="rewrite",
@@ -1780,11 +1796,11 @@ def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
 def test_snapshot_delete_rows_no_match_is_noop_version(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
-        _df(spark, [(1, 1, "a"), (2, 2, "b")]), table, stats_cols=["id"]
+    snapshot_write(
+        _df(spark, [(1, 1, "a"), (2, 2, "b")]), table, stats_cols=["id"],
     )
     v, n = snapshot_delete(spark, table, {"id": [999]}, mode="rewrite")
     assert (v, n) == (1, 0)  # stats excluded every file: no new version
@@ -1796,18 +1812,16 @@ def test_snapshot_delete_rows_stats_kept_for_carried_files(spark, table):
         _load_manifest,
         Range,
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     for lo in (0, 100):
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame(
                 [(lo + i, 1, "x") for i in range(20)],
                 "id long, month int, v string",
             ),
-            table,
-            stats_cols=["id"],
-            mode="append",
+            table, mode="append", stats_cols=["id"],
         )
     v, _ = snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")
     man = _load_manifest(spark, table, v)
@@ -1823,14 +1837,13 @@ def test_snapshot_delete_cli(spark, table, capsys):
 
     from nyc_taxi_data_warehouse_spark.__main__ import main
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cli = lambda *a: main(list(a), spark=spark)  # noqa: E731
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(1, 1, "a"), (2, 2, "b"), (3, 3, "c")]),
-        table,
-        stats_cols=["id"],
+        table, stats_cols=["id"],
     )
     assert cli(
         "snapshot-delete", "--table-path", table, "--col", "id",
@@ -1848,14 +1861,14 @@ def test_delete_rows_preserves_null_keys(spark, table):
     rows_deleted must count only genuine matches."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_delete,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     df = spark.createDataFrame(
         [(1, 1, "a"), (None, 1, "n1"), (2, 1, "b"), (None, 1, "n2")],
         "id long, month int, v string",
     )
-    snapshot_write_with_stats(df, table, stats_cols=["id"])
+    snapshot_write(df, table, stats_cols=["id"])
     v, n_deleted = snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")
     assert n_deleted == 1
     got = read_snapshot(spark, table, version=v).collect()
@@ -1893,7 +1906,7 @@ def test_mixed_partition_layout_rejected(spark, table):
     """A commit whose layout differs from the table's recorded layout
     fails fast instead of silently misclassifying carried files."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     snapshot_write(
@@ -1905,8 +1918,8 @@ def test_mixed_partition_layout_rejected(spark, table):
     with pytest.raises(ValueError, match="layout"):
         snapshot_write(_df(spark, [(9, 1, "z")]), table, mode="append")
     with pytest.raises(ValueError, match="layout"):
-        snapshot_write_with_stats(
-            _df(spark, [(9, 1, "z")]), table, stats_cols=["id"], mode="append"
+        snapshot_write(
+            _df(spark, [(9, 1, "z")]), table, mode="append", stats_cols=["id"],
         )
     # overwrite may change the layout freely (it carries nothing)
     snapshot_write(_df(spark, [(9, 1, "z")]), table)
@@ -1978,15 +1991,15 @@ def test_update_rows_redacts_matching_only(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _load_manifest,
         snapshot_update,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     rows = [(1, 1, "alice"), (2, 1, "bob"), (None, 1, "ghost")]
     df = spark.createDataFrame(rows, "id long, month int, v string")
-    v1 = snapshot_write_with_stats(df, table, stats_cols=["id"])
+    v1 = snapshot_write(df, table, stats_cols=["id"])
     # second file far away in id-space: must be carried, not rewritten
     far = spark.createDataFrame([(1000, 2, "carol")], "id long, month int, v string")
-    v2 = snapshot_write_with_stats(far, table, stats_cols=["id"], mode="append")
+    v2 = snapshot_write(far, table, mode="append", stats_cols=["id"])
     ver, n = snapshot_update(
         spark, table, {"id": [2, 999]}, {"v": None}, mode="rewrite",
     )
@@ -2054,14 +2067,12 @@ def test_snapshot_update_cli(spark, table, capsys):
 
     from nyc_taxi_data_warehouse_spark.__main__ import main
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     cli = lambda *a: main(list(a), spark=spark)  # noqa: E731
-    snapshot_write_with_stats(
-        _df(spark, [(1, 1, "alice"), (2, 2, "bob")]),
-        table,
-        stats_cols=["id"],
+    snapshot_write(
+        _df(spark, [(1, 1, "alice"), (2, 2, "bob")]), table, stats_cols=["id"],
     )
     assert cli(
         "snapshot-update", "--table-path", table, "--col", "id",
@@ -2143,7 +2154,7 @@ def test_compact_preserves_stats_and_pruning(spark, table):
         _load_manifest,
         Range,
         snapshot_compact,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     for lo in (0, 100, 200, 300):
@@ -2151,7 +2162,7 @@ def test_compact_preserves_stats_and_pruning(spark, table):
             [(lo + i, 1, f"v{lo + i}") for i in range(50)],
             "id long, month int, v string",
         )
-        snapshot_write_with_stats(df, table, stats_cols=["id"], mode="append")
+        snapshot_write(df, table, mode="append", stats_cols=["id"])
     snapshot_compact(spark, table)
     man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
     assert man.get("stats_cols") == ["id"]
@@ -2174,7 +2185,7 @@ def test_compact_cluster_by_tightens_pruning(spark, table):
         Range,
         snapshot_changes,
         snapshot_compact,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     # 4 commits, hash-ordered so EVERY file spans ~the full id range
@@ -2187,7 +2198,7 @@ def test_compact_cluster_by_tightens_pruning(spark, table):
             .orderBy(F.xxhash64("id"))
             .coalesce(4)
         )
-        snapshot_write_with_stats(df, table, stats_cols=["id"], mode="append")
+        snapshot_write(df, table, mode="append", stats_cols=["id"])
 
     def files_kept(lo, hi):
         man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
@@ -2219,15 +2230,15 @@ def test_compact_zorder_multi_key_and_partition_guard(spark, table):
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_compact,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     df = spark.createDataFrame(
         [(i, i % 4, i * 7 % 100, f"v{i}") for i in range(200)],
         "id long, month int, score int, v string",
     )
-    snapshot_write_with_stats(
-        df, table, stats_cols=["id", "score"], partition_cols=["month"]
+    snapshot_write(
+        df, table, partition_cols=["month"], stats_cols=["id", "score"],
     )
     with _pytest.raises(ValueError, match="partition column"):
         snapshot_compact(spark, table, cluster_by=["month"])
@@ -2242,12 +2253,12 @@ def test_snapshot_compact_cli(spark, table, capsys):
 
     from nyc_taxi_data_warehouse_spark.__main__ import main
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
-        _df(spark, [(i, 1, f"v{i}") for i in range(40)]), table,
-        stats_cols=["id"],
+    snapshot_write(
+        _df(spark, [(i, 1, f"v{i}") for i in range(40)]),
+        table, stats_cols=["id"],
     )
     rc = main(
         [
@@ -2264,20 +2275,12 @@ def test_snapshot_compact_cli(spark, table, capsys):
     ) == list(range(40))
 
 
-def test_commit_retries_are_metadata_only(spark, table):
-    """snapshot_write(retries=N): the data files are written ONCE; a
-    conflict re-derives the head and recommits the same files — unlike
-    the re-run-the-whole-write loop, no orphan files accumulate. Eight
-    racing appenders with retries all land exactly once with zero
-    orphans (every data file under data/ is referenced by the head)."""
+def _race_eight_appenders(spark, table) -> dict:
+    """Eight appenders with ``retries=50`` race on ``table``; each lands
+    exactly once. Returns the head manifest."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
-    )
-
-    snapshot_write(_df(spark, [(0, 0, "seed")]), table)
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import _manifest_at
 
     def append(i):
         return snapshot_write(
@@ -2292,10 +2295,18 @@ def test_commit_retries_are_metadata_only(spark, table):
     assert sorted(versions) == list(range(2, 10))
     got = sorted(r.id for r in read_snapshot(spark, table).collect())
     assert got == [0] + [100 + i for i in range(8)]
-    # zero orphans: every file on disk is in the head manifest
-    import os
+    return _manifest_at(spark, table)[1]
 
-    head = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+
+def test_commit_retries_are_metadata_only(spark, table):
+    """snapshot_write(retries=N): the data files are written ONCE; a
+    conflict re-derives the head and recommits the same files — unlike
+    the re-run-the-whole-write loop, no orphan files accumulate. Eight
+    racing appenders with retries all land exactly once with zero
+    orphans (every data file under data/ is referenced by the head)."""
+    snapshot_write(_df(spark, [(0, 0, "seed")]), table)
+    head = _race_eight_appenders(spark, table)
+    # zero orphans: every file on disk is in the head manifest
     on_disk = set()
     for root, _dirs, files in os.walk(f"{table}/data"):
         for f in files:
@@ -2305,6 +2316,29 @@ def test_commit_retries_are_metadata_only(spark, table):
     assert on_disk == set(head["files"])
 
 
+def test_commit_retries_are_metadata_only_on_a_stats_table(
+    spark, table, monkeypatch
+):
+    """On a stats table the retries stay metadata-only too: every head
+    file has stats, and each appender's files are scanned for them
+    once, however many commit attempts it took."""
+    from nyc_taxi_data_warehouse_spark.warehouse import snapshots
+
+    snapshot_write(_df(spark, [(0, 0, "seed")]), table, stats_cols=["id"])
+    scanned = []
+    real = snapshots.collect_file_stats
+
+    def counting(spark_, root, files, cols):
+        scanned.extend(files)
+        return real(spark_, root, files, cols)
+
+    monkeypatch.setattr(snapshots, "collect_file_stats", counting)
+    head = _race_eight_appenders(spark, table)
+    assert set(head["stats"]) == set(head["files"])
+    assert sorted(scanned) == sorted(set(scanned))  # no file twice
+    assert set(scanned) == set(head["files"]) - set(
+        snapshots._load_manifest(spark, table, 1)["files"]
+    )
 
 
 def _stale_once(monkeypatch, module):
@@ -2557,12 +2591,12 @@ def test_schema_ddl_add_and_drop_column(spark, table):
         snapshot_compact,
         snapshot_drop_column,
         snapshot_update,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
-    snapshot_write_with_stats(
-        _df(spark, [(1, 0, "a"), (2, 1, "b")]), table,
-        stats_cols=["id"], partition_cols=["month"],
+    snapshot_write(
+        _df(spark, [(1, 0, "a"), (2, 1, "b")]),
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     files_before = set(
         glob.glob(os.path.join(table, "data", "**", "*.parquet"),
@@ -2690,15 +2724,15 @@ def test_metadata_tables_files_and_history(spark, table):
         snapshot_delete,
         snapshot_files,
         snapshot_history,
-        snapshot_write_with_stats,
+        snapshot_write,
     )
 
     # one file per partition dir, several ids each: the delete below
     # must hit a MIXED file so a tombstone is actually written (a
     # single-valued file would full-drop by stats proof instead)
-    snapshot_write_with_stats(
+    snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(8)]).coalesce(1),
-        table, stats_cols=["id"], partition_cols=["month"],
+        table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_delete(spark, table, {"id": [0]}, mode="dv")
     files = snapshot_files(spark, table)

@@ -31,7 +31,7 @@ from nyc_taxi_data_warehouse_spark.warehouse import sqlfront
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_delete,
     snapshot_register,
-    snapshot_write_with_stats,
+    snapshot_write,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import snapshot_sql
 
@@ -57,8 +57,9 @@ def _mk(spark, path, n_files=3, rows_per=4):
             "id int, ts timestamp, fare double, amt decimal(7,2),"
             " grp string",
         ).coalesce(1)
-        snapshot_write_with_stats(
-            df, path, ["ts", "id", "fare", "amt", "grp"], mode="append"
+        snapshot_write(
+            df,
+            path, mode="append", stats_cols=["ts", "id", "fare", "amt", "grp"],
         )
 
 
@@ -263,11 +264,11 @@ def test_agg_provably_empty_where_returns_null_row(spark, tmp_path, spy):
     must return the one-row NULL/0 aggregate frame — not crash in the
     planner — with passthrough parity."""
     t = str(tmp_path / "ag_empty")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, True), (2, False)], "id int, flag boolean"
         ),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     snapshot_register(spark, t, "ag_empty")
     q = (
@@ -318,13 +319,14 @@ def _mk_part(spark, path):
             )
             for j in range(4)
         ]
-        snapshot_write_with_stats(
+        snapshot_write(
             spark.createDataFrame(
                 rows, "id int, day date, x double"
             ).coalesce(1),
-            path, ["id", "x"],
-            partition_cols=["day"],
+            path,
             mode="append" if fi else "overwrite",
+            partition_cols=["day"],
+            stats_cols=["id", "x"],
         )
 
 

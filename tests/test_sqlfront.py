@@ -23,7 +23,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_set_properties,
     snapshot_versions,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -42,8 +41,8 @@ def _mk(spark, tmp_path, name, partitioned=False):
     ]
     df = spark.createDataFrame(rows, "id int, month int, v string")
     if partitioned:
-        snapshot_write_with_stats(
-            df, t, stats_cols=["id"], partition_cols=["month"]
+        snapshot_write(
+            df, t, partition_cols=["month"], stats_cols=["id"],
         )
     else:
         snapshot_write(df, t)
@@ -618,12 +617,12 @@ def test_update_expression_set_redaction(spark, tmp_path):
     resolves against the table schema and sees the PRE-update row
     image (one select, not a withColumn chain)."""
     t = str(tmp_path / "sqlf_expr")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, "alice@x.com", "alice"), (2, "bob@x.com", "bob")],
             "id int, email string, name string",
         ),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     snapshot_register(spark, t, "sqlf_expr")
     out = snapshot_sql(
@@ -651,9 +650,9 @@ def test_update_expression_set_redaction(spark, tmp_path):
 
 def test_update_expression_pre_image_swap(spark, tmp_path):
     t = str(tmp_path / "sqlf_swap")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(1, "A", "B")], "id int, a string, b string"),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     snapshot_register(spark, t, "sqlf_swap")
     snapshot_sql(spark, "UPDATE sqlf_swap SET a = b, b = a WHERE id = 1")
@@ -663,8 +662,9 @@ def test_update_expression_pre_image_swap(spark, tmp_path):
 
 def test_update_expression_refuses_unresolvable(spark, tmp_path):
     t = str(tmp_path / "sqlf_bad_expr")
-    snapshot_write_with_stats(
-        spark.createDataFrame([(1, "x")], "id int, v string"), t, ["id"]
+    snapshot_write(
+        spark.createDataFrame([(1, "x")], "id int, v string"),
+        t, stats_cols=["id"],
     )
     snapshot_register(spark, t, "sqlf_bad_expr")
     with pytest.raises(SqlFrontError, match="does not resolve"):
@@ -678,9 +678,9 @@ def test_update_expression_refuses_unresolvable(spark, tmp_path):
 
 def test_update_function_commas_and_mixed_literals(spark, tmp_path):
     t = str(tmp_path / "sqlf_mix")
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame([(1, "x", 0)], "id int, v string, n int"),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     snapshot_register(spark, t, "sqlf_mix")
     snapshot_sql(
@@ -695,11 +695,11 @@ def test_update_function_commas_and_mixed_literals(spark, tmp_path):
 
 def _merge_fixture(spark, tmp_path, name):
     t = str(tmp_path / name)
-    snapshot_write_with_stats(
+    snapshot_write(
         spark.createDataFrame(
             [(1, "a", 10), (2, "b", 20)], "id int, v string, n int"
         ),
-        t, ["id"],
+        t, stats_cols=["id"],
     )
     snapshot_register(spark, t, name)
     spark.createDataFrame(

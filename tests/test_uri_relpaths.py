@@ -32,7 +32,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_changes,
     snapshot_compact,
     snapshot_write,
-    snapshot_write_with_stats,
     sweep_orphans,
 )
 
@@ -89,9 +88,9 @@ def test_pruned_read_survives_uri_partition_values(spark, table):
     its [None, None] seed = 'provably excludable' and be silently
     pruned. All rows must survive a covering range predicate, and a
     selective one must still return exactly its matches."""
-    snapshot_write_with_stats(
-        _sdf(spark, range(30)), table, stats_cols=["id"],
-        partition_cols=["name"],
+    snapshot_write(
+        _sdf(spark, range(30)),
+        table, partition_cols=["name"], stats_cols=["id"],
     )
     got = read_snapshot(spark, table, where={"id": Range(0, 29)})
     assert got.count() == 30

@@ -28,7 +28,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_rename_column,
     snapshot_widen_column,
     snapshot_write,
-    snapshot_write_with_stats,
 )
 
 
@@ -86,7 +85,7 @@ def test_widen_keeps_stats_pruning_and_dml(spark, tmp_path):
     df = spark.createDataFrame(
         rows, "id int, bucket int, amt int"
     ).repartition(4, "bucket")
-    snapshot_write_with_stats(df, t, stats_cols=["amt"])
+    snapshot_write(df, t, stats_cols=["amt"])
     snapshot_widen_column(spark, t, "amt", "bigint")
     # recorded narrow stats keep planning the widened column
     full = read_snapshot(spark, t)
@@ -195,7 +194,7 @@ def test_alter_commits_are_o1_metadata(spark, tmp_path):
         "cast(id as int) id", "cast(id % 50 as int) grp",
         "cast(id * 3 as int) amt",
     ).repartition(50)
-    snapshot_write_with_stats(df, t, stats_cols=["id", "grp", "amt"])
+    snapshot_write(df, t, stats_cols=["id", "grp", "amt"])
     v_r = snapshot_rename_column(spark, t, "amt", "amount")
     v_w = snapshot_widen_column(spark, t, "amount", "bigint")
     for v in (v_r, v_w):

@@ -69,8 +69,9 @@ def meter(spark, file_count: int, appends: int) -> dict:
         base = _fake_files("0" * 32, file_count)
         snap._commit(
             spark, root, base, schema, "overwrite", None,
-            extra={"stats": _fake_stats(base), "stats_cols": ["id"]},
+            extra={"stats": _fake_stats(base)},
             dv_files=None,
+            stats_cols=["id"],
         )
         delta_sizes, append_wall = [], []
         files = list(base)
@@ -85,7 +86,8 @@ def meter(spark, file_count: int, appends: int) -> dict:
             t0 = time.perf_counter()
             parent = snap._commit(
                 spark, root, files, schema, "append", parent,
-                extra={"stats": st, "stats_cols": ["id"]},
+                extra={"stats": st},
+                stats_cols=["id"],
             )
             append_wall.append(time.perf_counter() - t0)
             doc = snap._read_doc(spark, root, parent)

@@ -61,7 +61,7 @@ def meter(
     from pyspark.sql import functions as F
 
     clustered = df.repartitionByRange(n_files, F.col(date_col))
-    snap.snapshot_write_with_stats(clustered, table_path, [date_col])
+    snap.snapshot_write(clustered, table_path, stats_cols=[date_col])
 
     _, man_pre = snap._manifest_at(spark, table_path)
     pre_files = list(man_pre["files"])

@@ -175,12 +175,12 @@ def _extra_ops() -> dict:
         from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
             read_snapshot,
             snapshot_delete,
-            snapshot_write_with_stats,
+            snapshot_write,
         )
 
         t = tempfile.mkdtemp(prefix="audit_dv_") + "/t"
         d = docs(spark, sf_dir)
-        snapshot_write_with_stats(d, t, stats_cols=["doc_id"])
+        snapshot_write(d, t, stats_cols=["doc_id"])
         snapshot_delete(
             spark, t, {"doc_id": [i * 7 for i in range(40)]}, mode="dv"
         )
