@@ -232,6 +232,7 @@ def publish_branch(
         source=head,
     )
 
+
 class AuditFailed(RuntimeError):
     """The audit callback vetoed the publish; main is untouched."""
 

@@ -713,7 +713,9 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
     """ADVICE r7: a SINGLE sidecar dominated by inert entries (targets
     since rewritten away) must still consolidate — its dead weight is
     re-read by every DV-masked scan otherwise; a fully-live single
-    sidecar stays a no-op; an all-inert one yields a DV-FREE manifest."""
+    sidecar stays a no-op; the commit that leaves a sidecar all-inert
+    is itself DV-FREE (recorded targets shrink to the live files), so
+    there is nothing left to consolidate."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _dv_entry_count,
         _footer_row_total,
@@ -755,13 +757,12 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
     assert _bag(read_snapshot(spark, table)) == expect
 
     # replace month 1 too -> the last entry goes inert -> DV-free commit
-    snapshot_replace_partitions(
+    v3 = snapshot_replace_partitions(
         _df(spark, [(200, 1, "m")]), table, ["month"]
     )
-    v3 = snapshot_compact_dvs(spark, table)
     man3 = _load_manifest(spark, table, v3)
     assert v3 > v2 and not man3.get("dv_files")
-    assert man3["dv_rows_before"] == man3["dv_rows_after"] == 0
+    assert snapshot_compact_dvs(spark, table) == v3
     assert _bag(read_snapshot(spark, table)) == sorted(
         [(100 + i, 0, f"n{i}") for i in range(4)] + [(200, 1, "m")]
     )
