@@ -763,8 +763,13 @@ def _commit(
     from the sidecar footprint (one metadata-sized distinct). The
     recorded targets shrink to this commit's files: DV entries are
     keyed by (relpath, row position) and relpaths are uuid-unique, so
-    an entry for a dropped file is inert, and a sidecar set with no
-    live target left folds to ``None``, restoring clean scans.
+    an entry for a dropped file is inert, and the commit that drops a
+    set's last live target folds the set to ``None``, restoring clean
+    scans. A set that already had no live target in the carry source
+    (older writers left such sets behind) is carried unchanged — a
+    legal superset; folding it on a commit that removes no file would
+    read as a deletion-vector change to the change feed.
+    ``snapshot_compact_dvs`` clears it.
 
     ``eq_files`` — the EQUALITY-DELETE entries active at this version
     ([{"path", "seq", "keys"}]; see the note above ``_eq_entries``). An
@@ -814,7 +819,10 @@ def _commit(
             .collect()
         ]
     live = sorted(set(dv_targets or ()) & fset) if dv_files else []
-    dv_files, dv_targets = (sorted(dv_files), live) if live else (None, None)
+    if live:
+        dv_files, dv_targets = sorted(dv_files), live
+    elif not dv_files or set(dv_targets) & set(src.get("files") or ()):
+        dv_files = dv_targets = None
     if eq_files == _DV_INHERIT:
         eq_files = src.get("eqs")
     # logical→physical column map (RENAME; see _colmap); full

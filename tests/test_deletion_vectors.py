@@ -768,6 +768,92 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
     )
 
 
+_INERT_ROWS = sorted(
+    [(i, 1, f"v{i}") for i in range(1, 10, 2)] + [(100, 0, "n")]
+)
+
+
+def _inert_sidecar_table(spark, table):
+    """A head whose sidecar set has NO live target, as older writers
+    left it: v1 write, v2 DV-deletes id 0 (month 0), v3 replaces month
+    0. Today v3 folds the set away, so v3 is rewritten as a full-body
+    manifest carrying v2's sidecars and targets — the state a
+    partition replace used to inherit unchanged."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        _load_manifest,
+        snapshot_replace_partitions,
+    )
+    from tests.test_manifestlog import _hand_write
+
+    snapshot_write(
+        _df(spark, [(i, i % 2, f"v{i}") for i in range(10)]),
+        table, partition_cols=["month"],
+    )
+    snapshot_delete(spark, table, {"id": [0]}, mode="dv")          # v2
+    snapshot_replace_partitions(
+        _df(spark, [(100, 0, "n")]), table, ["month"]
+    )                                                              # v3
+    man2 = _load_manifest(spark, table, 2)
+    man3 = _load_manifest(spark, table, 3)
+    assert man2["dv_files"] and not man3.get("dv_files")
+    legacy = {
+        k: v for k, v in man3.items()
+        if k not in ("manifest_id", "parent_id", "ckpt")
+    }
+    legacy.update(dv_files=man2["dv_files"], dv_targets=man2["dv_targets"])
+    _hand_write(table, 3, legacy)
+    man3 = _load_manifest(spark, table, 3)
+    assert man3["dv_files"] == man2["dv_files"]
+    assert not set(man3["dv_targets"]) & set(man3["files"])
+    assert _bag(read_snapshot(spark, table)) == _INERT_ROWS
+    return man3
+
+
+def test_feed_streams_appends_past_an_inert_sidecar_set(
+    spark, table, tmp_path
+):
+    """A plain append on a head whose sidecar set is already inert
+    carries the set unchanged — it removes no file, so folding the set
+    there would read as a deletion-vector change — and every feed mode
+    streams the append's rows."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        _load_manifest,
+    )
+    from tests.test_snapshot_feed import _drain
+
+    man3 = _inert_sidecar_table(spark, table)
+    v4 = snapshot_write(
+        _df(spark, [(50, 1, "a"), (51, 0, "b")]), table, mode="append",
+        partition_cols=["month"],
+    )
+    man4 = _load_manifest(spark, table, v4)
+    assert man4["dv_files"] == man3["dv_files"]
+    assert man4["dv_targets"] == man3["dv_targets"]
+    for mode in ("fail", "verify", "skip"):
+        got = _drain(
+            spark, table, str(tmp_path / f"ck_{mode}"), f"inert_{mode}",
+            starting_version=3, on_non_append=mode,
+        )
+        assert _bag(got) == [(50, 1, "a"), (51, 0, "b")], mode
+
+
+def test_compact_dvs_clears_an_inert_sidecar_set(spark, table):
+    """``snapshot_compact_dvs`` on an all-inert sidecar set publishes a
+    DV-free version that records zero live tombstones on both sides,
+    and reads are unchanged."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        _load_manifest,
+        snapshot_compact_dvs,
+    )
+
+    _inert_sidecar_table(spark, table)
+    v = snapshot_compact_dvs(spark, table)
+    man = _load_manifest(spark, table, v)
+    assert v == 4 and not man.get("dv_files")
+    assert man["dv_rows_before"] == man["dv_rows_after"] == 0
+    assert _bag(read_snapshot(spark, table)) == _INERT_ROWS
+
+
 def test_snapshot_delete_mode_auto_dispatch(spark, table, monkeypatch):
     """mode='auto' picks by the bytes the rewrite would copy: below
     the threshold it rewrites (no tombstone debt), above it writes
@@ -884,8 +970,8 @@ def test_replace_partitions_with_outstanding_dvs(spark, table):
     """VERDICT r7 worklist pin: dynamic partition replacement on a
     table with outstanding tombstones — the replaced partition's
     tombstones go inert (fresh files are never masked), carried
-    partitions stay masked, the recorded dv_targets survive as a
-    harmless superset, and the change feed stays consistent."""
+    partitions stay masked, the recorded dv_targets shrink to the live
+    files, and the change feed stays consistent."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _list_manifests,
         _load_manifest,
