@@ -27,3 +27,13 @@ def fragment(col: str) -> str:
     if _FRAGMENT.fullmatch(col):
         return col
     return "`" + col.replace("`", "``") + "`"
+
+
+def column(col: str):
+    """``col`` as a Column under the ``fragment`` rule — for operators
+    that pass one name both to a Column API and to a builder, so every
+    name the builders accept (``odd`name``, ``a.b``) resolves to the
+    same column on both sides."""
+    from pyspark.sql import functions as F
+
+    return F.expr(fragment(col))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..functions.sql import column
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
@@ -97,7 +98,7 @@ def minhash_signatures(
     # spread(): the whole signature build is narrow, so an unsplittable
     # input (single row group / gzip) would otherwise run it on ONE core
     # — no-op when the scan already parallelizes (see session.spread).
-    tk = spread(df.where(F.col(text_col).isNotNull())).select(
+    tk = spread(df.where(column(text_col).isNotNull())).select(
         F.col(id_col).alias("_id"), T.tokens(text_col).alias("_tk")
     )
     sh = tk.select(
@@ -443,7 +444,8 @@ def sync_minhash_from_snapshot(
     """
     from pyspark.sql.window import Window
 
-    from ..warehouse.snapshots import _list_manifests, snapshot_changes
+    from ..warehouse.manifestlog import list_versions
+    from ..warehouse.snapshots import snapshot_changes
     from .indexmeta import check_index_meta, read_index_meta
 
     check_index_meta(spark, index_path, {"kind": "minhash"})
@@ -458,7 +460,7 @@ def sync_minhash_from_snapshot(
             "set_minhash_sync_cursor first"
         )
     if to_version is None:
-        to_version = _list_manifests(spark, table_path)[-1]
+        to_version = list_versions(table_path)[-1]
     if to_version <= from_v:
         return {
             "synced_from": from_v, "synced_to": from_v,

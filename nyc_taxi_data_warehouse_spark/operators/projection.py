@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..functions.sql import column
 
 
 def fit_pca(df: DataFrame, vec_col: str, n_components: int | None = None) -> dict:
@@ -45,8 +46,8 @@ def fit_pca(df: DataFrame, vec_col: str, n_components: int | None = None) -> dic
     # null vectors are excluded from the fit (a mean over nothing is
     # meaningless); an empty/all-null corpus fails fast with a clear
     # error instead of a driver-side TypeError on first()
-    df = df.where(F.col(vec_col).isNotNull())
-    first = df.select(vec_col).first()
+    df = df.where(column(vec_col).isNotNull())
+    first = df.select(column(vec_col)).first()
     if first is None:
         raise ValueError("fit_pca: no non-null vectors to fit")
     d = len(first[0])

@@ -422,7 +422,8 @@ def sync_postings_from_snapshot(
     """
     from pyspark.sql.window import Window
 
-    from ..warehouse.snapshots import _list_manifests, snapshot_changes
+    from ..warehouse.manifestlog import list_versions
+    from ..warehouse.snapshots import snapshot_changes
     from .indexmeta import check_index_meta, read_index_meta
 
     check_index_meta(spark, index_path, {"kind": "postings"})
@@ -435,7 +436,7 @@ def sync_postings_from_snapshot(
             "set_postings_sync_cursor first"
         )
     if to_version is None:
-        to_version = _list_manifests(spark, table_path)[-1]
+        to_version = list_versions(table_path)[-1]
     if to_version <= from_v:
         return {
             "synced_from": from_v, "synced_to": from_v,

@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import vector as V
+from ..functions.sql import column
 from .clustering import kmeans_assign, kmeans_recenter
 
 _OUT_FIELDS = [
@@ -114,8 +115,8 @@ def semantic_dedup(
     (id_col, cell, kept); filter ``kept`` to prune the corpus."""
     judge_cond = (
         F.col(id_col).isNotNull()
-        & F.col(vec_col).isNotNull()
-        & (F.size(vec_col) > 0)
+        & column(vec_col).isNotNull()
+        & (F.size(column(vec_col)) > 0)
     )
     passthrough = (
         df.where(~F.coalesce(judge_cond, F.lit(False)))

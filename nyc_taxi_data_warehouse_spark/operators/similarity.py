@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import vector as V
+from ..functions.sql import column
 
 
 def hyperplanes(n_planes: int, dim: int, seed: str = "hp") -> list[list[float]]:
@@ -482,12 +483,12 @@ def lsh_buckets(
     return (
         df.select(
             F.col(id_col),
-            F.col(vec_col),
+            column(vec_col),
             V.as_double(vec_col).alias("_vd"),
         )
         .select(
             F.col(id_col),
-            F.col(vec_col),
+            column(vec_col),
             F.expr(_bucket_expr_sql("_vd", planes)).alias("bucket"),
         )
     )
@@ -700,7 +701,7 @@ def ivf_assign(
     from ..session import spread
 
     v = spread(df).select(
-        F.col(id_col), F.col(vec_col), V.as_double(vec_col).alias("_v")
+        F.col(id_col), column(vec_col), V.as_double(vec_col).alias("_v")
     ).withColumn("_vn", V.norm("_v"))
     scored = v.join(F.broadcast(c)).withColumn(
         "cos",
@@ -713,7 +714,7 @@ def ivf_assign(
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select(id_col, vec_col, F.col("cent_id").alias("cell"))
+        .select(id_col, column(vec_col), F.col("cent_id").alias("cell"))
     )
 
 
@@ -1098,7 +1099,8 @@ def sync_ivf_from_snapshot(
     set (fingerprint-validated by the underlying upsert/delete)."""
     from pyspark.sql.window import Window
 
-    from ..warehouse.snapshots import _list_manifests, snapshot_changes
+    from ..warehouse.manifestlog import list_versions
+    from ..warehouse.snapshots import snapshot_changes
     from .indexmeta import check_index_meta, read_index_meta
 
     check_index_meta(spark, index_path, {"kind": "ivf"})
@@ -1110,7 +1112,7 @@ def sync_ivf_from_snapshot(
             "set_ivf_sync_cursor first"
         )
     if to_version is None:
-        to_version = _list_manifests(spark, table_path)[-1]
+        to_version = list_versions(table_path)[-1]
     if to_version <= from_v:
         return {
             "synced_from": from_v, "synced_to": from_v,

@@ -141,10 +141,9 @@ def materialize_aggregate(
     for the replay guard: Structured Streaming replays at most the
     LATEST uncommitted batch, whose manifest any retention keeps;
     older epochs' manifests are only ever read as history."""
+    from ..warehouse.manifestlog import list_versions, load_manifest
     from ..warehouse.snapshots import (
         _commit,
-        _list_manifests,
-        _load_manifest,
         _write_commit_files,
         read_snapshot,
     )
@@ -182,9 +181,9 @@ def materialize_aggregate(
     def apply_batch(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
             return
-        versions = _list_manifests(spark, dst_path)
+        versions = list_versions(dst_path)
         for v in versions:
-            man = _load_manifest(spark, dst_path, v)
+            man = load_manifest(dst_path, v)
             if man.get("stream_id") == stream_id and man.get("epoch") == epoch:
                 return  # replayed epoch: already published
         new_p = partials(batch)
@@ -226,7 +225,7 @@ def materialize_aggregate(
     if keep_versions is not None:
         from ..warehouse.snapshots import vacuum_snapshots
 
-        if _list_manifests(spark, dst_path):
+        if list_versions(dst_path):
             vacuum_snapshots(spark, dst_path, keep_last=keep_versions)
 
 

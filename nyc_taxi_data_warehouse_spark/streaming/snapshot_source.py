@@ -40,9 +40,14 @@ Scale design:
   materialized views use: routine compaction of the source no longer
   breaks every derived view, while a genuine delete/update still does.
 
-All filesystem access here uses `pyarrow.fs.FileSystem.from_uri`
-(local, HDFS, S3, GCS), because data-source code runs in plain Python
-workers with no JVM/Hadoop `FileSystem` handle.
+All metadata reads here (version listing, manifest reconstruction,
+partition-directory values, footer row counts) go through
+``warehouse.manifestlog``, the same JVM-free reader the batch engine
+uses, over ``pyarrow.fs`` (local, ``file:``, HDFS, S3, GCS): data-source
+code runs in plain Python workers with no JVM/Hadoop `FileSystem`
+handle. The planner asks for stats-stripped manifests
+(``want_stats=False``), which never share a cache entry with the
+batch engine's full ones.
 
 Known engine caveat: Python micro-batch streams don't yet implement
 `SupportsTriggerAvailableNow`, so `Trigger.AvailableNow` falls back to
@@ -55,6 +60,7 @@ repeated drain-restart pattern remains exactly-once — proven by
 from __future__ import annotations
 
 import json
+import sys
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -63,199 +69,29 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from ..warehouse import manifestlog
-
-_VDIR = "_versions"
-
-_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _ensure_pickle_by_value() -> None:
-    """Make this module cloudpickle-by-VALUE so the Data Source survives
-    every deployment shape.
-
-    The registered DataSource class is cloudpickled at plan time and
-    unpickled inside Spark's python_streaming_source_runner subprocess.
-    Pickled by REFERENCE (the default for module-level classes), that
-    subprocess must be able to ``import nyc_taxi_data_warehouse_spark`` — true only
-    when the driver ran from the repo root or the package is installed,
-    and NOT fixed by ``addPyFile`` (which covers task workers, not the
-    source-runner). By-value registration embeds the class and the
-    module globals it uses into the pickle itself, so planning works
-    from any cwd with zero install — the same self-containedness bar
-    the Pandas-UDF paths meet via ``session._ship_package``.
-
-    Registered against pyspark's VENDORED cloudpickle (the one that
-    does the pickling); idempotent. ``manifestlog`` (the incremental
-    manifest codec this module reconstructs states through) must ride
-    by value too — a by-reference pickle of it would force the
-    source-runner subprocess to import the package from disk, exactly
-    the failure mode by-value registration exists to remove."""
-    try:
-        from pyspark import cloudpickle  # vendored; the serializer used
-    except ImportError:  # pragma: no cover - vendoring moved
-        import cloudpickle
-    import sys
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    cloudpickle.register_pickle_by_value(manifestlog)
+from ..warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
+    pa_fs,
+    parquet_num_rows,
+    partition_values,
+    ship_by_value,
+    split_ref,
+)
 
 
-try:
-    _ensure_pickle_by_value()
-except Exception:  # pragma: no cover - never block batch-side imports
-    pass
-
-
-def _ref_parts(path: str) -> tuple[str, str]:
-    """(table root, manifest dir) for a path-or-branch-ref. Mirrors
-    ``warehouse.snapshots._split_ref`` (kept dependency-free: this
-    module runs in the plain-Python Data Source planning subprocess):
-    ``table#branch`` routes manifests to the branch's chain while data
-    relpaths always resolve against the root. Split BEFORE any
-    ``_pa_fs`` call — '#' is a URI fragment and ``from_uri`` would eat
-    it."""
-    if "#" not in path:
-        return path, _VDIR
-    root, _, branch = path.rpartition("#")
-    return root, f"_branches/{branch}/{_VDIR}"
-
-
-def _pa_fs(path: str):
-    """(pyarrow FileSystem, fs-local path) for a URI or bare path."""
-    import pyarrow.fs as pafs
-
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
-
-
-def _list_versions(path: str) -> list[int]:
-    import pyarrow.fs as pafs
-
-    tbl, mdir = _ref_parts(path)
-    fs, root = _pa_fs(tbl)
-    sel = pafs.FileSelector(f"{root}/{mdir}", allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        name = info.base_name
-        if name.endswith(".json"):
-            try:
-                out.append(int(name[:-5]))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _is_not_found(e: OSError) -> bool:
-    """Only genuinely-missing paths map to None: local filesystems
-    raise FileNotFoundError (or ENOENT), object-store pyarrow
-    filesystems a plain OSError phrased ``Path does not exist ...``.
-    Anything else — throttling, permissions, transient network, a
-    MISSING BUCKET ('The specified bucket does not exist' is a config
-    error, not vacuumed history) — must PROPAGATE: a retryable error
-    misdiagnosed as 'vacuumed history' would tell the operator to
-    restart with startingVersion=latest, permanently skipping feed
-    data."""
-    import errno
-
-    if isinstance(e, FileNotFoundError):
-        return True
-    if getattr(e, "errno", None) == errno.ENOENT:
-        return True
-    return "path does not exist" in str(e).lower()
-
-
-def _read_doc(path: str, version: int) -> dict | None:
-    tbl, mdir = _ref_parts(path)
-    fs, root = _pa_fs(tbl)
-    try:
-        with fs.open_input_stream(f"{root}/{mdir}/{version:08d}.json") as f:
-            return json.loads(f.read().decode("utf-8"))
-    except OSError as e:
-        if _is_not_found(e):
-            return None
-        raise
-
-
-def _read_blob(path: str, name: str) -> bytes | None:
-    tbl, mdir = _ref_parts(path)
-    fs, root = _pa_fs(tbl)
-    try:
-        with fs.open_input_stream(f"{root}/{mdir}/{name}") as f:
-            return f.read()
-    except OSError as e:
-        if _is_not_found(e):
-            return None
-        raise
-
-
-# reconstructed-state LRU shared across readers in this planning
-# process; keyed by uuid manifest_id, so never stale (manifests are
-# immutable once their exclusive create lands)
-_STATE_CACHE = manifestlog.StateCache(maxsize=64)
-
-
-def _load_manifest(path: str, version: int) -> dict:
-    """Full manifest dict for ``version`` — reconstructs O(change)
-    delta docs through ``manifestlog`` exactly like the warehouse
-    layer, but over the pyarrow filesystem (this module plans inside
-    Spark's plain-Python Data Source subprocess: no JVM gateway).
-    Stats are pruned at the checkpoint-parquet layer — the feed
-    planner only ever reads file lists and per-commit scalars."""
-    doc = _read_doc(path, version)
-    if doc is None:
-        raise FileNotFoundError(
-            f"snapshot version {version} missing at {path}"
-        )
-    if "files" in doc:
-        return doc
-    return manifestlog.reconstruct(
-        doc,
-        lambda v: _read_doc(path, v),
-        lambda name: _read_blob(path, name),
-        _STATE_CACHE,
-        want_stats=False,
-    )
-
-
-def _unescape_partition_value(v: str) -> str:
-    # Hive escapes special chars as %XX in partition directory names
-    out, i = [], 0
-    while i < len(v):
-        c = v[i]
-        if c == "%" and i + 2 < len(v) + 1 and i + 3 <= len(v):
-            try:
-                out.append(chr(int(v[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-def _parquet_num_rows(file_uri: str) -> int:
-    """Row count from the parquet FOOTER — one small metadata read, no
-    data pages. Runs in the plain-Python planning process (no JVM)."""
-    import pyarrow.parquet as pq
-
-    fs, p = _pa_fs(file_uri)
-    with fs.open_input_file(p) as f:
-        return pq.ParquetFile(f).metadata.num_rows
-
-
-def _partition_values_from_path(rel_file: str) -> dict[str, str | None]:
-    """``data/<uuid>/year=2023/month=5/part-0.parquet`` →
-    {"year": "2023", "month": "5"} (None for the Hive null marker)."""
-    vals: dict[str, str | None] = {}
-    for seg in rel_file.split("/")[2:-1]:
-        if "=" not in seg:
-            continue
-        k, _, v = seg.partition("=")
-        vals[k] = None if v == _NULL_PARTITION else _unescape_partition_value(v)
-    return vals
+# By-value shipping: the registered DataSource class is cloudpickled at
+# plan time and unpickled inside Spark's python_streaming_source_runner
+# subprocess. Pickled by REFERENCE (the default for module-level
+# classes), that subprocess must be able to ``import
+# nyc_taxi_data_warehouse_spark`` — true only when the driver ran from
+# the repo root or the package is installed, and NOT fixed by
+# ``addPyFile`` (which covers task workers, not the source-runner).
+# By value, the class and the module globals it uses ride in the pickle
+# itself, so planning works from any cwd with zero install — the same
+# self-containedness bar the Pandas-UDF paths meet via
+# ``session._ship_package``. ``manifestlog`` ships itself the same way.
+ship_by_value(sys.modules[__name__])
 
 
 class _FilePartition(InputPartition):
@@ -280,7 +116,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
         self._schema = schema
         self._path = options["path"]
-        self._root = _ref_parts(self._path)[0]  # data files live here
+        self._root = split_ref(self._path)[0]  # data files live here
         self._dv_targets: dict[str, frozenset] = {}  # sidecar -> files
         self._on_non_append = options.get("onnonappend", "fail").lower()
         if self._on_non_append not in ("fail", "skip", "verify"):
@@ -289,7 +125,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                 f"{self._on_non_append!r}"
             )
         start = str(options.get("startingversion", "0")).lower()
-        vs = _list_versions(self._path)  # one LIST serves start + colmap
+        vs = list_versions(self._path)  # one LIST serves start + colmap
         if start == "latest":
             self._start = vs[-1] if vs else 0
         else:
@@ -303,7 +139,9 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         # both together; a mid-stream identity RESET (full overwrite)
         # or a stale capture is caught loudly at plan time by
         # _check_identity below, never read as silent nulls.
-        head_man = _load_manifest(self._path, vs[-1]) if vs else {}
+        head_man = (
+            load_manifest(self._path, vs[-1], want_stats=False) if vs else {}
+        )
         self._cmap: dict = head_man.get("colmap") or {}
         self._cap_ver: int = vs[-1] if vs else 0  # capture head
         self._identity_ok: set = set()  # manifest_ids already checked
@@ -314,8 +152,6 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         raw_scope = options.get("partitions")
         self._scope: dict[str, set] | None = None
         if raw_scope:
-            import json as _json
-
             def _norm(v):
                 if v is None:
                     return None
@@ -323,7 +159,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                     return "true" if v else "false"
                 return str(v)
 
-            parsed = _json.loads(raw_scope)
+            parsed = json.loads(raw_scope)
             if not isinstance(parsed, dict) or not parsed:
                 raise ValueError(
                     "partitions option must be a non-empty JSON object "
@@ -377,7 +213,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
     def _in_scope(self, rel_file: str) -> bool:
         if self._scope is None:
             return True
-        pv = _partition_values_from_path(rel_file)
+        pv = partition_values(rel_file)
         missing = [k for k in self._scope if k not in pv]
         if missing:
             # a file predating a layout evolution (snapshot_set_layout)
@@ -407,7 +243,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         # guessed: tests/test_feed_backlog.py pins a 200-commit
         # backlog to one partition per added file and < 64 MiB of
         # planning heap, draining in exactly one availableNow batch.
-        vs = _list_versions(self._path)
+        vs = list_versions(self._path)
         return {"version": vs[-1] if vs else self._start}
 
     def partitions(self, start: dict, end: dict):
@@ -415,7 +251,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         parts: list[_FilePartition] = []
         if hi <= lo:
             return [p for p in parts]
-        have = set(_list_versions(self._path))
+        have = set(list_versions(self._path))
         prev_files: set[str] | None = None
         prev_dvs: set[str] = set()
         prev_tgts: set[str] = set()
@@ -428,7 +264,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                     "vacuumed past the stream's offset; restart with "
                     "startingVersion=latest or retain more history"
                 )
-            man = _load_manifest(self._path, v)
+            man = load_manifest(self._path, v, want_stats=False)
             self._check_identity(man)
             if prev_files is None:
                 parent = man["parent"]
@@ -438,7 +274,9 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                     # the offset version itself is the first diff's
                     # parent; vacuum may have dropped exactly it
                     try:
-                        pman = _load_manifest(self._path, parent)
+                        pman = load_manifest(
+                            self._path, parent, want_stats=False
+                        )
                         prev_files = {
                             f for f in pman["files"] if self._in_scope(f)
                         }
@@ -593,7 +431,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                         parts.append(
                             _FilePartition(
                                 f"{self._root}/{f}",
-                                _partition_values_from_path(f),
+                                partition_values(f),
                                 v,
                                 defaults=man.get("defaults"),
                             )
@@ -659,7 +497,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                         parts.append(
                             _FilePartition(
                                 f"{self._root}/{f}",
-                                _partition_values_from_path(f),
+                                partition_values(f),
                                 v,
                                 defaults=man.get("defaults"),
                             )
@@ -669,7 +507,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                         parts.append(
                             _FilePartition(
                                 f"{self._root}/{f}",
-                                _partition_values_from_path(f),
+                                partition_values(f),
                                 v,
                                 defaults=man.get("defaults"),
                             )
@@ -747,7 +585,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         value_set = pa.array(sorted(files))
         total = 0
         for rel in sorted(dvs):
-            fs, p = _pa_fs(f"{self._root}/{rel}")
+            fs, p = pa_fs(f"{self._root}/{rel}")
             with fs.open_input_file(p) as f:
                 pf = pq.ParquetFile(f)
                 for i in range(pf.metadata.num_row_groups):
@@ -776,7 +614,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         for rel in sorted(dvs):
             if rel not in self._dv_targets:
                 vals: set = set()
-                fs, p = _pa_fs(f"{self._root}/{rel}")
+                fs, p = pa_fs(f"{self._root}/{rel}")
                 with fs.open_input_file(p) as f:
                     pf = pq.ParquetFile(f)
                     for i in range(pf.metadata.num_row_groups):
@@ -836,10 +674,10 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             # Requires superseded footers to still exist: a scoped
             # verify feed must not lag behind compact + vacuum.
             n_removed = sum(
-                _parquet_num_rows(f"{self._root}/{f}") for f in removed
+                parquet_num_rows(f"{self._root}/{f}") for f in removed
             ) - self._dv_entries_for(prev_dvs, removed)
             n_added = sum(
-                _parquet_num_rows(f"{self._root}/{f}") for f in added
+                parquet_num_rows(f"{self._root}/{f}") for f in added
             ) - self._dv_entries_for(new_dvs, added)
         elif (
             man.get("rows_removed") is not None
@@ -849,10 +687,10 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             n_added = man["rows_added"]
         else:
             n_removed = sum(
-                _parquet_num_rows(f"{self._root}/{f}") for f in removed
+                parquet_num_rows(f"{self._root}/{f}") for f in removed
             )
             n_added = sum(
-                _parquet_num_rows(f"{self._root}/{f}") for f in added
+                parquet_num_rows(f"{self._root}/{f}") for f in added
             )
         if n_removed != n_added:
             raise ValueError(
@@ -871,7 +709,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         from pyspark.sql.pandas.types import to_arrow_schema
 
         target = to_arrow_schema(self._schema)
-        fs, fpath = _pa_fs(partition.file_uri)
+        fs, fpath = pa_fs(partition.file_uri)
         with pq.ParquetFile(fs.open_input_file(fpath)) as pf:
             for batch in pf.iter_batches():
                 tbl = pa.Table.from_batches([batch])
@@ -926,10 +764,10 @@ class SnapshotFeedDataSource(DataSource):
 
     def schema(self) -> StructType:
         path = self.options["path"]
-        versions = _list_versions(path)
+        versions = list_versions(path)
         if not versions:
             raise FileNotFoundError(f"no snapshot versions at {path}")
-        man = _load_manifest(path, versions[-1])
+        man = load_manifest(path, versions[-1], want_stats=False)
         return StructType.fromJson(man["schema"])
 
     def streamReader(self, schema: StructType) -> SnapshotFeedStreamReader:
@@ -978,7 +816,5 @@ def read_snapshot_stream(
         .option("onNonAppend", on_non_append)
     )
     if partitions is not None:
-        import json as _json
-
-        reader = reader.option("partitions", _json.dumps(partitions))
+        reader = reader.option("partitions", json.dumps(partitions))
     return reader.load()

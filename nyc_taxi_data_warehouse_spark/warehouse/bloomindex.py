@@ -443,7 +443,7 @@ def build_snapshot_bloom_index(
 
     from .snapshots import _manifest_at
 
-    version, man = _manifest_at(spark, table_path)
+    version, man = _manifest_at(table_path)
     pcols = man.get("partition_cols") or []
     if key_col in pcols:
         raise ValueError(
@@ -515,7 +515,7 @@ def sync_bloom_with_snapshot(
     check_index_meta(spark, index_path, {"kind": "bloom", "scope": "snapshot"})
     meta = read_index_meta(spark, index_path)
     rows_path = _data_path(index_path, meta)
-    version, man = _manifest_at(spark, table_path)
+    version, man = _manifest_at(table_path)
     _refuse_defaulted_key(man, meta["key_col"])
     live = set(man["files"])
     rows = read_index_parquet(spark, rows_path, _ROWS_DDL)
@@ -567,7 +567,7 @@ def read_snapshot_with_bloom(
 
     check_index_meta(spark, index_path, {"kind": "bloom", "scope": "snapshot"})
     meta = read_index_meta(spark, index_path)
-    _, man = _manifest_at(spark, table_path)
+    _, man = _manifest_at(table_path)
     _refuse_defaulted_key(man, meta["key_col"])
     live = set(man["files"])
     indexed = {

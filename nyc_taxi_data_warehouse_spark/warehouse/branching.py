@@ -53,19 +53,16 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from .manifestlog import REF_SEP, check_ref_name, list_versions, load_manifest
 from .snapshots import (
     SnapshotConflict,
     _branch_names,
-    _check_ref_name,
     _commit,
     _storage_refs,
     _fs,
     _jp,
-    _list_manifests,
-    _load_manifest,
     _manifest_at,
     _manifest_partition_cols,
-    _REF_SEP,
     _tag_versions,
     _TDIR,
     _write_bytes_exclusive,
@@ -75,10 +72,10 @@ from .snapshots import (
 
 def branch_ref(path: str, name: str) -> str:
     """The ref string routing snapshot operations to branch ``name``."""
-    _check_ref_name(name)
-    if _REF_SEP in path:
+    check_ref_name(name)
+    if REF_SEP in path:
         raise ValueError(f"{path!r} is already a branch ref")
-    return f"{path}{_REF_SEP}{name}"
+    return f"{path}{REF_SEP}{name}"
 
 
 def create_branch(
@@ -90,8 +87,8 @@ def create_branch(
     create of the branch's 00000001.json — two racers cannot both
     create the same branch) and refuses an existing name."""
     ref = branch_ref(path, name)
-    v, man = _manifest_at(spark, path, at_version)
-    if _list_manifests(spark, ref):
+    v, man = _manifest_at(path, at_version)
+    if list_versions(ref):
         raise ValueError(f"branch {name!r} already exists at {path}")
     _commit(
         spark,
@@ -118,7 +115,7 @@ def create_branch(
 
 def list_branches(spark: SparkSession, path: str) -> list[str]:
     """Branch names, sorted (metadata listing only)."""
-    return _branch_names(spark, path)
+    return _branch_names(path)
 
 
 def drop_branch(
@@ -133,7 +130,7 @@ def drop_branch(
     the referenced set here is every main version plus every OTHER
     branch, making a published (or shared-fork) file immune. Same
     no-pinned-reader contract as vacuum when reclaiming."""
-    _check_ref_name(name)
+    check_ref_name(name)
     fs, jvm = _fs(spark, path)
     bdir = _jp(jvm, path, "_branches", name)
     if not fs.exists(bdir):
@@ -147,18 +144,18 @@ def drop_branch(
         # deleted rows resurrect on the surviving refs
         mine: set[str] = set()
         ref = branch_ref(path, name)
-        for v in _list_manifests(spark, ref):
-            mine.update(_storage_refs(_load_manifest(spark, ref, v)))
+        for v in list_versions(ref):
+            mine.update(_storage_refs(load_manifest(ref, v)))
         referenced: set[str] = set()
-        for v in _list_manifests(spark, path):
-            referenced.update(_storage_refs(_load_manifest(spark, path, v)))
-        for other in _branch_names(spark, path):
+        for v in list_versions(path):
+            referenced.update(_storage_refs(load_manifest(path, v)))
+        for other in _branch_names(path):
             if other == name:
                 continue
             oref = branch_ref(path, other)
-            for v in _list_manifests(spark, oref):
+            for v in list_versions(oref):
                 referenced.update(
-                    _storage_refs(_load_manifest(spark, oref, v))
+                    _storage_refs(load_manifest(oref, v))
                 )
         for f in sorted(mine - referenced):
             if fs.delete(_jp(jvm, path, f), False):
@@ -185,12 +182,12 @@ def publish_branch(
     create closes the window: a writer that slips in after the check
     claims the version number first and THIS publish loses cleanly."""
     ref = branch_ref(path, name)
-    bvers = _list_manifests(spark, ref)
+    bvers = list_versions(ref)
     if not bvers:
         raise FileNotFoundError(f"no branch {name!r} at {path}")
-    head = _load_manifest(spark, ref, bvers[-1])
-    base = _load_manifest(spark, ref, bvers[0]).get("base_table_version")
-    mvers = _list_manifests(spark, path)
+    head = load_manifest(ref, bvers[-1])
+    base = load_manifest(ref, bvers[0]).get("base_table_version")
+    mvers = list_versions(path)
     mhead = mvers[-1] if mvers else None
     if not force and mhead != base:
         raise SnapshotConflict(
@@ -291,10 +288,10 @@ def create_tag(
     re-tagging an error (delete first), so a tag seen once means the
     same rows forever, and ``vacuum_snapshots`` never drops a tagged
     version's manifest or files."""
-    _check_ref_name(name)
-    if _REF_SEP in path:
+    check_ref_name(name)
+    if REF_SEP in path:
         raise ValueError("tags pin main-chain versions; pass the table root")
-    v, _ = _manifest_at(spark, path, version)
+    v, _ = _manifest_at(path, version)
     fs, jvm = _fs(spark, path)
     jpath = _jp(jvm, path, _TDIR, f"{name}.json")
     data = json.dumps({"name": name, "version": v}, sort_keys=True)
@@ -308,18 +305,18 @@ def create_tag(
 
 def list_tags(spark: SparkSession, path: str) -> dict[str, int]:
     """{tag: version}, metadata listing only."""
-    return _tag_versions(spark, path)
+    return _tag_versions(path)
 
 
 def resolve_tag(spark: SparkSession, path: str, name: str) -> int:
-    tags = _tag_versions(spark, path)
+    tags = _tag_versions(path)
     if name not in tags:
         raise FileNotFoundError(f"no tag {name!r} at {path}")
     return tags[name]
 
 
 def delete_tag(spark: SparkSession, path: str, name: str) -> None:
-    _check_ref_name(name)
+    check_ref_name(name)
     fs, jvm = _fs(spark, path)
     jpath = _jp(jvm, path, _TDIR, f"{name}.json")
     if not fs.delete(jpath, False):

@@ -48,41 +48,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .manifestlog import list_versions, load_manifest
 from .snapshots import (
     SnapshotConflict,
     _colmap,
     _commit,
+    _epoch_already_applied,
     _eq_entries,
-    _list_manifests,
-    _load_manifest,
     _manifest_at,
     _manifest_partition_cols,
     _require_same_layout,
     _write_commit_files,
     snapshot_resolve_eq,
 )
-
-
-def _epoch_already_applied(
-    spark: SparkSession,
-    path: str,
-    versions: list[int],
-    extra: dict,
-    checked: set[int],
-) -> int | None:
-    """The version that already carries this ``(stream_id, epoch)``
-    provenance, or None. Incremental across retries via ``checked``."""
-    sid, epoch = extra.get("stream_id"), extra.get("epoch")
-    if sid is None or epoch is None:
-        return None
-    for v in versions:
-        if v in checked:
-            continue
-        checked.add(v)
-        man = _load_manifest(spark, path, v)
-        if man.get("stream_id") == sid and man.get("epoch") == epoch:
-            return v
-    return None
 
 
 def _pick_newest(
@@ -176,7 +154,7 @@ def snapshot_append_upsert(
     epoch — a zombie replay of the same stream may land it while this
     instance is retrying, and recommitting would double the batch
     (the same recheck ``stream_snapshot_append`` does)."""
-    head, man = _manifest_at(spark, path)
+    head, man = _manifest_at(path)
     partition_cols = _manifest_partition_cols(man)
     schema = StructType.fromJson(man["schema"])
     cols = [f.name for f in schema.fields]
@@ -232,12 +210,12 @@ def snapshot_append_upsert(
     extra.update({"rows_appended": n, "eq_added": eq_files})
     checked: set[int] = set()
     for attempt in range(retries + 1):
-        versions = _list_manifests(spark, path)
-        dup = _epoch_already_applied(spark, path, versions, extra, checked)
+        versions = list_versions(path)
+        dup = _epoch_already_applied(path, versions, extra, checked)
         if dup is not None:
             return dup, 0
         latest = versions[-1]
-        man = _load_manifest(spark, path, latest)
+        man = load_manifest(path, latest)
         _require_same_layout(man, partition_cols, "append_upsert")
         try:
             version = _commit(
@@ -280,7 +258,7 @@ def snapshot_delete_keys(
     would be the table read this exists to avoid) —
     ``snapshot_resolve_eq`` / ``snapshot_agg`` COUNT(*) answer it exactly
     when someone needs the number."""
-    head, man = _manifest_at(spark, path)
+    head, man = _manifest_at(path)
     schema = StructType.fromJson(man["schema"])
     fields = {f.name: f for f in schema.fields}
     keys = list(deletes.columns)
@@ -314,12 +292,12 @@ def snapshot_delete_keys(
     extra.update({"eq_added": eq_files, "eq_key_count": n})
     checked: set[int] = set()
     for attempt in range(retries + 1):
-        versions = _list_manifests(spark, path)
-        dup = _epoch_already_applied(spark, path, versions, extra, checked)
+        versions = list_versions(path)
+        dup = _epoch_already_applied(path, versions, extra, checked)
         if dup is not None:
             return dup, 0
         latest = versions[-1]
-        man = _load_manifest(spark, path, latest)
+        man = load_manifest(path, latest)
         try:
             version = _commit(
                 spark,
@@ -345,10 +323,10 @@ def maybe_resolve_eq(
     ``max_entries`` are outstanding. Conflict-tolerant (a racing
     writer skips this run — the next one retries), like every other
     auto-maintenance hook. Returns the resolve's version or None."""
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     if not versions:
         return None
-    man = _load_manifest(spark, path, versions[-1])
+    man = load_manifest(path, versions[-1])
     if len(_eq_entries(man)) < max_entries:
         return None
     try:
@@ -390,12 +368,7 @@ def stream_snapshot_upsert(
         if batch.isEmpty():
             return
         prov = {"stream_id": stream_id, "epoch": epoch}
-        if (
-            _epoch_already_applied(
-                spark, path, _list_manifests(spark, path), prov, set()
-            )
-            is not None
-        ):
+        if _epoch_already_applied(path, list_versions(path), prov, set()):
             return
         snapshot_append_upsert(
             spark, path, batch, keys,

@@ -189,9 +189,10 @@ def load_month(
 
         if wap:
             from .branching import drop_branch, write_audit_publish
-            from .snapshots import _list_manifests, snapshot_write
+            from .manifestlog import list_versions
+            from .snapshots import snapshot_write
 
-            if not _list_manifests(spark, snapshot_path):
+            if not list_versions(snapshot_path):
                 # WAP forks from an existing head; a first-ever load
                 # publishes an EMPTY v1 to branch from, so a vetoed
                 # first month still leaves main a readable empty table.
@@ -265,16 +266,16 @@ def _snapshot_loaded_months(
     retained version, no data files touched. Months whose provenance
     (or restore target) was vacuumed out of history conservatively
     re-load — replace_partitions makes the re-load idempotent."""
-    from .snapshots import _list_manifests, _load_manifest
+    from .manifestlog import list_versions, load_manifest
 
     try:
-        versions = _list_manifests(spark, snapshot_path)
+        versions = list_versions(snapshot_path)
     except Exception:
         return set()
     states: dict[int, set[tuple[int, int]]] = {}
     cur: set[tuple[int, int]] = set()
     for v in versions:
-        man = _load_manifest(spark, snapshot_path, v)
+        man = load_manifest(snapshot_path, v)
         rf = man.get("restored_from")
         if rf is not None:
             cur = set(states.get(rf, set()))

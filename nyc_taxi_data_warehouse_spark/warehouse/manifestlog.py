@@ -36,11 +36,17 @@ designs; no code derived from either):
   old versions, the retention tail), so history stays reconstructible
   from retained metadata alone.
 
-The module is deliberately free of pyspark imports: the snapshot-feed
-streaming source plans inside Spark's plain-Python Data Source
-subprocess (no JVM gateway) and reconstructs manifests through the
-same code via pyarrow-filesystem callbacks, while the warehouse layer
-passes Hadoop-FileSystem callbacks. Reference: the reference pipeline
+This module is also the ONE reader of table metadata: branch-ref
+splitting, version listing, claimed-doc and blob reads,
+``load_manifest``, the partition-directory codec and the footer row
+count all live here, over ``pyarrow.fs`` and with no ``spark``
+argument. The batch engine (``snapshots``) and the snapshot-feed
+streaming source read through the same functions; the source plans
+inside Spark's plain-Python Data Source subprocess (no JVM gateway),
+which is why the module imports nothing from pyspark at load time and
+registers itself to be cloudpickled by value. Writes, exclusive
+claims and deletes stay with the warehouse layer's Hadoop
+``FileSystem`` (see ``snapshots``). Reference: the reference pipeline
 has no table format at all (it rewrites S3 prefixes in place —
 /root/reference/data/airflow/dags/save_nyc_data_to_s3.py); this
 layer is engine-native.
@@ -48,10 +54,14 @@ layer is engine-native.
 
 from __future__ import annotations
 
+import errno
+import functools
 import json
 import os
+import re
+import sys
 import threading
-import uuid
+import time
 from collections import OrderedDict
 
 # Keys that encode the delta itself; everything else in a commit doc
@@ -703,3 +713,251 @@ def manifest_dict(doc: dict, state: dict) -> dict:
     if state.get("seq"):
         out["seq"] = state["seq"]
     return out
+
+
+# ---------------------------------------------------------------------------
+# The metadata reader (pyarrow.fs — the same code on the driver, in the
+# Data Source planning subprocess and on executors)
+# ---------------------------------------------------------------------------
+
+VDIR = "_versions"
+BDIR = "_branches"
+
+# Branch refs: "<table-path>#<branch>" — '#' begins the fragment in any
+# URI, so no real filesystem/object-store path contains one, making it
+# an unambiguous separator. A ref routes MANIFESTS to the branch's own
+# version chain (_branches/<name>/_versions/) while data files always
+# live in the table root's shared data/ pool (commit dirs are
+# uuid-named, so branch writers can never collide with main or with
+# each other on a data path). Every snapshot function that takes a
+# table path accepts a ref; see ``warehouse/branching.py`` for the
+# public branch/tag API.
+REF_SEP = "#"
+
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def check_ref_name(name: str) -> None:
+    if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name or ""):
+        raise ValueError(
+            f"invalid branch/tag name {name!r}: use letters, digits, "
+            "'.', '_', '-' (must start alphanumeric)"
+        )
+
+
+def split_ref(path: str) -> tuple[str, str]:
+    """(table root, manifest dir relative to root) for a path-or-ref.
+    Split BEFORE any ``pa_fs`` call: '#' is a URI fragment and
+    ``from_uri`` would eat it."""
+    if REF_SEP not in path:
+        return path, VDIR
+    root, _, branch = path.rpartition(REF_SEP)
+    check_ref_name(branch)
+    return root, f"{BDIR}/{branch}/{VDIR}"
+
+
+def pa_fs(uri: str):
+    """(pyarrow FileSystem, fs-local path) for a bare path, a ``file:``
+    URI, or any URI pyarrow resolves (``hdfs://``, ``s3://``,
+    ``gs://``)."""
+    import pyarrow.fs as pafs
+
+    if uri.startswith("file:"):
+        path = uri[len("file:"):]
+        return pafs.LocalFileSystem(), (
+            path[2:] if path.startswith("//") else path
+        )
+    if "://" in uri:
+        return pafs.FileSystem.from_uri(uri)
+    return pafs.LocalFileSystem(), uri
+
+
+def is_not_found(e: OSError) -> bool:
+    """Only genuinely-missing paths map to None: local filesystems
+    raise FileNotFoundError (or ENOENT), object-store pyarrow
+    filesystems a plain OSError phrased ``Path does not exist ...``.
+    Anything else — throttling, permissions, transient network, a
+    MISSING BUCKET ('The specified bucket does not exist' is a config
+    error, not vacuumed history) — must PROPAGATE: a retryable error
+    misdiagnosed as 'vacuumed history' would tell the operator to
+    restart with startingVersion=latest, permanently skipping feed
+    data."""
+    if isinstance(e, FileNotFoundError):
+        return True
+    if getattr(e, "errno", None) == errno.ENOENT:
+        return True
+    return "path does not exist" in str(e).lower()
+
+
+def read_bytes(uri: str) -> bytes | None:
+    """The whole file at ``uri``; None when it does not exist."""
+    fs, p = pa_fs(uri)
+    try:
+        with fs.open_input_stream(p) as f:
+            return f.read()
+    except OSError as e:
+        if is_not_found(e):
+            return None
+        raise
+
+
+def read_json(uri: str) -> dict | None:
+    """One claimed JSON doc (manifest, tag, catalog map, marker); None
+    when it does not exist. Writers claim the name with an exclusive
+    create and then write the small body in one buffered write+close,
+    so a reader can glimpse the claimed-but-unfinished file for a
+    moment; a short retry closes that window without any lock
+    protocol."""
+    for attempt in range(5):
+        data = read_bytes(uri)
+        if data is None:
+            return None
+        try:
+            return json.loads(data.decode("utf-8"))
+        except (ValueError, UnicodeDecodeError):
+            if attempt == 4:
+                raise
+            time.sleep(0.05 * (attempt + 1))
+
+
+def list_docs(dir_uri: str) -> list[int]:
+    """Sorted numbers of the ``<n>.json`` docs in ``dir_uri`` ([] when
+    it does not exist); other names (``notes.json``, checkpoint blobs)
+    are skipped."""
+    import pyarrow.fs as pafs
+
+    fs, p = pa_fs(dir_uri)
+    out = []
+    for info in fs.get_file_info(pafs.FileSelector(p, allow_not_found=True)):
+        stem, dot, ext = info.base_name.partition(".")
+        if ext == "json" and stem.isdigit():
+            out.append(int(stem))
+    return sorted(out)
+
+
+def _manifest_dir(path: str) -> str:
+    root, mdir = split_ref(path)
+    return f"{root}/{mdir}"
+
+
+def list_versions(path: str) -> list[int]:
+    """The committed versions of a table path-or-ref, ascending."""
+    return list_docs(_manifest_dir(path))
+
+
+def read_doc(path: str, version: int) -> dict | None:
+    """The RAW manifest JSON body of one version — a delta/checkpoint
+    doc or a legacy full manifest; None when the version's manifest
+    does not exist (never committed, or vacuumed)."""
+    return read_json(f"{_manifest_dir(path)}/{version:08d}.json")
+
+
+def read_blob(path: str, name: str) -> bytes | None:
+    """A manifest-dir blob (checkpoint parquet); None if gone."""
+    return read_bytes(f"{_manifest_dir(path)}/{name}")
+
+
+# Reconstructed-state LRU shared by every reader in the process: keyed
+# by the commit's uuid manifest_id (plus the stats-stripped marker), so
+# hits can never be stale — across sessions, branches, and
+# dropped-and-recreated tables alike. Makes ascending history walks
+# (snapshot_versions, the change feed, vacuum) O(1) folds per version.
+_STATE_CACHE = StateCache(maxsize=256)
+
+
+def load_manifest(path: str, version: int, want_stats: bool = True) -> dict:
+    """The full manifest dict of one version — per-commit scalars plus
+    the reconstructed state (files / dv_files / dv_targets / stats ...).
+    ``want_stats=False`` (the feed planner) prunes stats at the
+    checkpoint-parquet layer; such states cache under their own key,
+    so a stripped state is never served to a stats-wanting reader."""
+    doc = read_doc(path, version)
+    if doc is None:
+        raise FileNotFoundError(
+            f"snapshot version {version} missing at {path}"
+        )
+    return reconstruct(
+        doc,
+        lambda v: read_doc(path, v),
+        lambda name: read_blob(path, name),
+        _STATE_CACHE,
+        want_stats=want_stats,
+    )
+
+
+def _unescape_partition_value(v: str) -> str:
+    # Hive escapes special chars as %XX in partition directory names
+    out, i = [], 0
+    while i < len(v):
+        c = v[i]
+        if c == "%" and i + 3 <= len(v):
+            try:
+                out.append(chr(int(v[i + 1 : i + 3], 16)))
+                i += 3
+                continue
+            except ValueError:
+                pass
+        out.append(c)
+        i += 1
+    return "".join(out)
+
+
+def _partition_values(rel_file: str) -> dict[str, str | None]:
+    vals: dict[str, str | None] = {}
+    for seg in rel_file.split("/")[2:-1]:
+        if "=" not in seg:
+            continue
+        k, _, v = seg.partition("=")
+        vals[k] = None if v == _NULL_PARTITION else _unescape_partition_value(v)
+    return vals
+
+
+class _Memo:
+    """``functools.lru_cache`` over a one-argument function that
+    cloudpickles BY VALUE: it pickles as its plain function and comes
+    back empty. (An lru_cache wrapper pickles by reference, which would
+    make the Data Source subprocess import this package from disk.)"""
+
+    def __init__(self, fn, maxsize: int):
+        self._fn, self._maxsize = fn, maxsize
+        self._cached = functools.lru_cache(maxsize=maxsize)(fn)
+
+    def __call__(self, arg):
+        return self._cached(arg)
+
+    def __reduce__(self):
+        return type(self), (self._fn, self._maxsize)
+
+
+# ``data/<uuid>/year=2023/month=5/part-0.parquet`` → {"year": "2023",
+# "month": "5"} (None for the Hive null marker). Relpaths are immutable
+# manifest strings and planners consult each file's values many times
+# (per predicate, gate and combine), so the codec is memoized; callers
+# must NOT mutate the returned dict.
+partition_values = _Memo(_partition_values, maxsize=1 << 17)
+
+
+def parquet_num_rows(uri: str) -> int:
+    """Row count from the parquet FOOTER — one small metadata read, no
+    data pages."""
+    import pyarrow.parquet as pq
+
+    fs, p = pa_fs(uri)
+    with fs.open_input_file(p) as f:
+        return pq.ParquetFile(f).metadata.num_rows
+
+
+def ship_by_value(module) -> None:
+    """Make ``module`` cloudpickle BY VALUE (against pyspark's vendored
+    cloudpickle, the one Spark pickles with; idempotent): the Data
+    Source planning subprocess and executors then unpickle its
+    functions without importing this package. This module ships so
+    wherever its reader functions travel."""
+    try:
+        from pyspark import cloudpickle
+    except ImportError:  # pragma: no cover - pyspark absent
+        return
+    cloudpickle.register_pickle_by_value(module)
+
+
+ship_by_value(sys.modules[__name__])

@@ -71,48 +71,15 @@ def catalog_root(spark: SparkSession, root: str | None = None) -> str:
     return f"{base.rstrip('/')}/{_CATALOG_DIRNAME}"
 
 
-def _fs_tuple(spark: SparkSession, cdir: str):
-    from .snapshots import _fs, _jp
+def _load_map(cdir: str) -> tuple[dict, int | None]:
+    """(entries, latest_seq) — {} when the catalog doesn't exist yet."""
+    from .manifestlog import list_docs, read_json
 
-    fs, jvm = _fs(spark, cdir)
-    return fs, jvm, _jp(jvm, cdir)
-
-
-def _latest_seq(fs, jdir) -> int | None:
-    if not fs.exists(jdir):
-        return None
-    best = None
-    for st in fs.listStatus(jdir):
-        name = st.getPath().getName()
-        if name.endswith(".json"):
-            try:
-                v = int(name[:-5])
-            except ValueError:
-                continue
-            best = v if best is None or v > best else best
-    return best
-
-
-def _load_map(spark: SparkSession, cdir: str) -> tuple[dict, int | None]:
-    """(entries, latest_seq) — {} when the catalog doesn't exist yet.
-    Same glimpse-of-claimed-but-unfinished retry the manifest reader
-    uses: the writer claims the name exclusively then writes one small
-    buffered body."""
-    from .snapshots import _read_bytes, _jp
-
-    fs, jvm, jdir = _fs_tuple(spark, cdir)
-    seq = _latest_seq(fs, jdir)
-    if seq is None:
+    seqs = list_docs(cdir)
+    if not seqs:
         return {}, None
-    jpath = _jp(jvm, cdir, f"{seq:08d}.json")
-    for attempt in range(5):
-        try:
-            doc = json.loads(_read_bytes(fs, jvm, jpath).decode("utf-8"))
-            return doc.get("tables", {}), seq
-        except (ValueError, UnicodeDecodeError):
-            if attempt == 4:
-                raise
-            time.sleep(0.05 * (attempt + 1))
+    doc = read_json(f"{cdir}/{seqs[-1]:08d}.json")
+    return doc.get("tables", {}), seqs[-1]
 
 
 def _cas_write(spark: SparkSession, cdir: str, mutate) -> dict:
@@ -120,12 +87,12 @@ def _cas_write(spark: SparkSession, cdir: str, mutate) -> dict:
     (in place; may raise to refuse), publish as the next sequence with
     an exclusive create. A lost race re-reads and retries — concurrent
     adds of different names both land."""
-    from .snapshots import _jp, _write_bytes_exclusive
+    from .snapshots import _fs, _jp, _write_bytes_exclusive
 
-    fs, jvm, jdir = _fs_tuple(spark, cdir)
-    fs.mkdirs(jdir)
+    fs, jvm = _fs(spark, cdir)
+    fs.mkdirs(_jp(jvm, cdir))
     for _ in range(50):
-        entries, seq = _load_map(spark, cdir)
+        entries, seq = _load_map(cdir)
         mutate(entries)
         nxt = 0 if seq is None else seq + 1
         body = json.dumps(
@@ -143,7 +110,7 @@ def _cas_write(spark: SparkSession, cdir: str, mutate) -> dict:
 def catalog_entries(spark: SparkSession, root: str | None = None) -> dict:
     """All durable bindings: {lowercased name: {"name", "path",
     "version"?, "at_timestamp"?}}."""
-    return _load_map(spark, catalog_root(spark, root))[0]
+    return _load_map(catalog_root(spark, root))[0]
 
 
 def catalog_lookup(

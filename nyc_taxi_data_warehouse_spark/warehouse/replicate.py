@@ -43,12 +43,11 @@ from .eqdeletes import (
     snapshot_append_upsert,
     snapshot_delete_keys,
 )
+from .manifestlog import list_versions, read_json
 from .snapshots import (
     _fs,
     _jp,
-    _list_manifests,
     _manifest_at,
-    _read_bytes,
     _write_bytes_exclusive,
     read_snapshot,
     snapshot_changes,
@@ -109,14 +108,12 @@ def replicate_keyed(
     import json as _json
 
     xf = transform or (lambda df: df)
-    head, _ = _manifest_at(spark, src_path)
+    head, _ = _manifest_at(src_path)
     fs, jvm = _fs(spark, dst_path)
     marker_jp = _jp(jvm, dst_path, _MARKER)
 
     def _read_marker() -> dict | None:
-        if not fs.exists(marker_jp):
-            return None
-        return _json.loads(_read_bytes(fs, jvm, marker_jp).decode("utf-8"))
+        return read_json(f"{dst_path}/{_MARKER}")
 
     def _check_marker(m: dict) -> None:
         if m["src"] != src_path or m["keys"] != list(keys):
@@ -126,7 +123,7 @@ def replicate_keyed(
                 f"resume it as src={src_path!r} keys={list(keys)}"
             )
 
-    if not _list_manifests(spark, dst_path):
+    if not list_versions(dst_path):
         marker = _read_marker()
         if marker is not None:
             _check_marker(marker)  # crash before v1: redo from scratch
@@ -243,7 +240,7 @@ def replicate_keyed(
     # re-bootstrap, then re-run.
     replica_cols = {
         f["name"]
-        for f in _manifest_at(spark, dst_path)[1]["schema"]["fields"]
+        for f in _manifest_at(dst_path)[1]["schema"]["fields"]
     }
     drifted = sorted(set(images.columns) - replica_cols)
     if drifted:

@@ -37,17 +37,24 @@ table/
   versions — storage reclamation is decoupled from correctness, and
   time travel (``read_snapshot(version=N)``) works for any retained N.
 
-All filesystem IO goes through the Hadoop ``FileSystem`` API (via the
-session's JVM), so the same code addresses ``file://``, HDFS, or any
-``FileSystem`` implementation the cluster ships. The one semantic this
-layer leans on is atomic exclusive create, which local filesystems and
-HDFS give; plain S3 would need the S3A conditional-create or a commit
+Metadata READS (version listing, manifest and checkpoint reads, tags,
+branch names, parquet footers, file sizes) go through ``pyarrow.fs``
+via ``manifestlog`` — the one reader this module and the streaming
+source share, with no py4j round trip per call. WRITES, exclusive
+claims and deletes go through the Hadoop ``FileSystem`` API (via the
+session's JVM), as do the post-write listing of a commit dir and the
+GC walks of vacuum and the orphan sweeps. A table path must therefore
+be one pyarrow resolves as well as Hadoop: a local path, ``file:``,
+``hdfs://``, ``s3://`` or ``gs://``. The one semantic the write side
+leans on is atomic exclusive create, which local filesystems and HDFS
+give; plain S3 would need the S3A conditional-create or a commit
 service — the documented reality for every manifest-log design.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import re
 import uuid
 
@@ -59,46 +66,27 @@ from pyspark.sql.types import StructField, StructType
 
 from ..session import local_frame
 from . import manifestlog
+from .manifestlog import (
+    BDIR,
+    REF_SEP,
+    VDIR,
+    list_versions,
+    load_manifest,
+    pa_fs,
+    parquet_num_rows,
+    partition_values,
+    read_doc,
+    read_json,
+    split_ref,
+)
 
-_VDIR = "_versions"
 _DDIR = "data"
-_BDIR = "_branches"
 _TDIR = "_tags"
-
-# Branch refs: "<table-path>#<branch>" — '#' begins the fragment in any
-# URI, so no real filesystem/object-store path contains one, making it
-# an unambiguous separator. A ref routes MANIFESTS to the branch's own
-# version chain (_branches/<name>/_versions/) while data files always
-# live in the table root's shared data/ pool (commit dirs are
-# uuid-named, so branch writers can never collide with main or with
-# each other on a data path). Every snapshot function that takes a
-# table path accepts a ref; see ``warehouse/branching.py`` for the
-# public branch/tag API.
-_REF_SEP = "#"
-
-
-def _split_ref(path: str) -> tuple[str, str]:
-    """(table root, manifest dir relative to root) for a path-or-ref."""
-    if _REF_SEP not in path:
-        return path, _VDIR
-    root, _, branch = path.rpartition(_REF_SEP)
-    _check_ref_name(branch)
-    return root, f"{_BDIR}/{branch}/{_VDIR}"
 
 
 def _root(path: str) -> str:
     """The table root of a path-or-ref (where data files live)."""
-    return _split_ref(path)[0]
-
-
-def _check_ref_name(name: str) -> None:
-    import re
-
-    if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9._-]*", name or ""):
-        raise ValueError(
-            f"invalid branch/tag name {name!r}: use letters, digits, "
-            "'.', '_', '-' (must start alphanumeric)"
-        )
+    return split_ref(path)[0]
 
 
 class SnapshotConflict(RuntimeError):
@@ -113,16 +101,6 @@ def _fs(spark: SparkSession, path: str):
 
 def _jp(jvm, *parts: str):
     return jvm.org.apache.hadoop.fs.Path("/".join(p.rstrip("/") for p in parts))
-
-
-def _read_bytes(fs, jvm, jpath) -> bytes:
-    stream = fs.open(jpath)
-    try:
-        return bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
 
 
 # How the commit claims a manifest name. The whole isolation story rests
@@ -146,8 +124,6 @@ def _read_bytes(fs, jvm, jpath) -> bytes:
 # there is deliberately no per-call argument — mixing claim strategies
 # on one table would let two writers both win the same version.
 def _commit_mode() -> str:
-    import os
-
     mode = os.environ.get("SPARK_GRAFT_SNAPSHOT_COMMIT", "create")
     if mode not in ("create", "builder"):
         raise ValueError(
@@ -159,7 +135,13 @@ def _commit_mode() -> str:
 def _write_bytes_exclusive(fs, jpath, data: bytes) -> bool:
     """Atomic create-if-absent; False when the path already exists (or,
     in builder mode, when the conditional write could not be CONFIRMED
-    — see ``_commit_mode``)."""
+    — see ``_commit_mode``).
+
+    In create mode on the local filesystem the kernel arbitrates
+    through ``O_EXCL``: Hadoop's local ``create(overwrite=false)`` is an
+    exists-check followed by a truncating open, so racing writers can
+    all "win" the same name (8 threads racing one name: several
+    winners in 15 of 40 trials)."""
     if _commit_mode() == "builder":
         # unlike plain create(), the builder does not create parent
         # directories; mkdirs is idempotent (and a no-op namespace-wise
@@ -176,6 +158,16 @@ def _write_bytes_exclusive(fs, jpath, data: bytes) -> bool:
             # conditional-PUT stores reject here (If-None-Match miss)
             return False
         return True
+    if fs.getScheme() == "file":
+        local = fs.makeQualified(jpath).toUri().getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        try:
+            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        except FileExistsError:
+            return False
+        with os.fdopen(fd, "wb") as out:
+            out.write(data)
+        return True
     try:
         out = fs.create(jpath, False)
     except Exception:
@@ -187,59 +179,8 @@ def _write_bytes_exclusive(fs, jpath, data: bytes) -> bool:
     return True
 
 
-def _list_manifests(spark: SparkSession, path: str) -> list[int]:
-    root, mdir = _split_ref(path)
-    fs, jvm = _fs(spark, root)
-    vdir = _jp(jvm, root, mdir)
-    if not fs.exists(vdir):
-        return []
-    out = []
-    for st in fs.listStatus(vdir):
-        name = st.getPath().getName()
-        if name.endswith(".json"):
-            out.append(int(name[:-5]))
-    return sorted(out)
-
-
-def _read_doc(
-    spark: SparkSession, path: str, version: int, must: bool = True
-) -> dict | None:
-    """The RAW manifest JSON body of one version — a delta/checkpoint
-    doc (see ``manifestlog``) or a legacy full manifest. ``must=False``
-    returns None when the version's manifest no longer exists
-    (vacuumed) instead of raising."""
-    root, mdir = _split_ref(path)
-    fs, jvm = _fs(spark, root)
-    jpath = _jp(jvm, root, mdir, f"{version:08d}.json")
-    if not must and not fs.exists(jpath):
-        return None
-    # The committer claims the manifest name with an exclusive create,
-    # then writes the (small) body in one buffered write+close. A reader
-    # can glimpse the claimed-but-unfinished file for a moment; a short
-    # retry closes that window without any lock protocol.
-    for attempt in range(5):
-        try:
-            return json.loads(_read_bytes(fs, jvm, jpath).decode("utf-8"))
-        except (ValueError, UnicodeDecodeError):
-            if attempt == 4:
-                raise
-            import time
-
-            time.sleep(0.05 * (attempt + 1))
-
-
-def _read_blob(spark: SparkSession, path: str, name: str) -> bytes | None:
-    """A manifest-dir sidecar blob (checkpoint parquet); None if gone."""
-    root, mdir = _split_ref(path)
-    fs, jvm = _fs(spark, root)
-    jpath = _jp(jvm, root, mdir, name)
-    if not fs.exists(jpath):
-        return None
-    return _read_bytes(fs, jvm, jpath)
-
-
 def _write_blob(spark: SparkSession, path: str, name: str, data: bytes):
-    root, mdir = _split_ref(path)
+    root, mdir = split_ref(path)
     fs, jvm = _fs(spark, root)
     jpath = _jp(jvm, root, mdir, name)
     fs.mkdirs(jpath.getParent())
@@ -250,38 +191,11 @@ def _write_blob(spark: SparkSession, path: str, name: str, data: bytes):
         out.close()
 
 
-# Reconstructed-state LRU (see manifestlog.StateCache): keyed by the
-# commit's uuid manifest_id, so hits can never be stale — across
-# sessions, branches, and dropped-and-recreated tables alike. Makes
-# ascending history walks (snapshot_versions, the change feed, vacuum)
-# O(1) folds per version instead of O(chain) re-reads.
-_STATE_CACHE = manifestlog.StateCache(maxsize=256)
-
-
-def _load_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    """The full manifest dict of one version — per-commit scalars plus
-    the reconstructed state (files / dv_files / dv_targets / stats):
-    the commit docs on disk are O(change) deltas with periodic parquet
-    checkpoints (``manifestlog``), so no reader ever depends on a
-    full-table JSON being rewritten per commit."""
-    doc = _read_doc(spark, path, version, must=True)
-    if "files" in doc:
-        return doc  # legacy full manifest: state inline
-    return manifestlog.reconstruct(
-        doc,
-        lambda v: _read_doc(spark, path, v, must=False),
-        lambda name: _read_blob(spark, path, name),
-        _STATE_CACHE,
-    )
-
-
-def _manifest_at(
-    spark: SparkSession, path: str, version: int | None = None
-) -> tuple[int, dict]:
+def _manifest_at(path: str, version: int | None = None) -> tuple[int, dict]:
     """``(version, manifest)`` of ``version`` (default: the head).
     Raises ``FileNotFoundError`` when the table has no versions or
     ``version`` is not among them (never committed, or vacuumed)."""
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no snapshot versions at {path}")
     if version is None:
@@ -290,7 +204,7 @@ def _manifest_at(
         raise FileNotFoundError(
             f"version {version} not present at {path} (have {versions})"
         )
-    return version, _load_manifest(spark, path, version)
+    return version, load_manifest(path, version)
 
 
 def _colmap(man: dict) -> dict:
@@ -680,12 +594,9 @@ def _sidecar_df(
     join to shuffle rather than risk the driver. The ONE copy of the
     threshold policy every sidecar consumer (position DVs, equality
     keys, the change feed's delta reads) shares."""
-    root = _root(root)
-    df = _read_files(spark, [f"{root}/{p}" for p in paths]).select(*cols)
-    fs, jvm = _fs(spark, root)
-    total = sum(
-        fs.getFileStatus(_jp(jvm, root, p)).getLen() for p in paths
-    )
+    uris = [f"{_root(root)}/{p}" for p in paths]
+    df = _read_files(spark, uris).select(*cols)
+    total = sum(_make_batch_sizer()(uris))
     return F.broadcast(df) if total <= 64 << 20 else df
 
 
@@ -796,9 +707,9 @@ def _commit(
     racer's blob is debris for ``sweep_orphans``."""
     import time
 
-    root, mdir = _split_ref(path)
+    root, mdir = split_ref(path)
     fs, jvm = _fs(spark, root)
-    pman = _load_manifest(spark, path, parent) if parent is not None else None
+    pman = load_manifest(path, parent) if parent is not None else None
     src = source if source is not None else (pman or {})
     files = sorted(files)
     if len(set(files)) != len(files):
@@ -1037,7 +948,7 @@ def _commit(
         raise SnapshotConflict(
             f"version {version} of {path} was committed concurrently"
         )
-    _STATE_CACHE.put(doc["manifest_id"], state)
+    manifestlog._STATE_CACHE.put(doc["manifest_id"], state)
     return version
 
 
@@ -1104,11 +1015,11 @@ def snapshot_write(
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append; got {mode!r}")
     spark = df.sparkSession
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     parent = versions[-1] if versions else None
     cmap, dflts = None, None
     if mode == "append" and parent is not None:
-        pman = _load_manifest(spark, path, parent)
+        pman = load_manifest(path, parent)
         # fail fast BEFORE the expensive data write
         _require_same_layout(pman, partition_cols, "append")
         # appended files store PHYSICAL names (frozen across renames —
@@ -1128,7 +1039,7 @@ def snapshot_write(
     for attempt in range(retries + 1):
         files = new_files
         if mode == "append" and parent is not None:
-            pman = _load_manifest(spark, path, parent)
+            pman = load_manifest(path, parent)
             _require_same_layout(pman, partition_cols, "append")
             files = sorted(pman["files"] + new_files)
         try:
@@ -1143,7 +1054,7 @@ def snapshot_write(
         except SnapshotConflict:
             if attempt == retries:
                 raise
-            versions = _list_manifests(spark, path)
+            versions = list_versions(path)
             parent = versions[-1] if versions else None
 
 
@@ -1176,17 +1087,17 @@ def snapshot_replace_partitions(
     produced, so the write job is the statement's only pass over
     ``df``."""
     spark = df.sparkSession
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     parent = versions[-1] if versions else None
     if parent is not None:
         _require_same_layout(
-            _load_manifest(spark, path, parent),
+            load_manifest(path, parent),
             partition_cols,
             "replace_partitions",
         )
     cmap, dflts = None, None
     if parent is not None:
-        _pm = _load_manifest(spark, path, parent)
+        _pm = load_manifest(path, parent)
         cmap = _colmap(_pm) or None
         dflts = _pm.get("defaults")  # captured-tuple rule
     _, new_files = _write_commit_files(
@@ -1200,7 +1111,7 @@ def snapshot_replace_partitions(
     touched = {_partition_dir(f) for f in new_files}
     extra_doc = extra() if callable(extra) else extra
     seen_files = (
-        set(_load_manifest(spark, path, parent)["files"])
+        set(load_manifest(path, parent)["files"])
         if parent is not None
         else set()
     )
@@ -1208,7 +1119,7 @@ def snapshot_replace_partitions(
         carried = []
         if parent is not None:
             prefixes = tuple(f"{c}=" for c in partition_cols)
-            for f in _load_manifest(spark, path, parent)["files"]:
+            for f in load_manifest(path, parent)["files"]:
                 rel = f.split("/", 2)[-1]  # strip data/<commit>/
                 dirs = rel.split("/")[:-1]
                 # A parent file without the expected partition
@@ -1255,11 +1166,11 @@ def snapshot_replace_partitions(
             # so that keeps raising even with retries left.
             if attempt == retries:
                 raise
-            versions = _list_manifests(spark, path)
+            versions = list_versions(path)
             parent = versions[-1] if versions else None
             head_files: set[str] = set()
             if parent is not None:
-                pman = _load_manifest(spark, path, parent)
+                pman = load_manifest(path, parent)
                 _require_same_layout(
                     pman, partition_cols, "replace_partitions"
                 )
@@ -1298,6 +1209,18 @@ def _to_epoch_ms(ts) -> int:
     return int(float(ts) * 1000)
 
 
+def _committed_ms(path: str, version: int, man: dict) -> int:
+    """Commit time of ``version`` in epoch ms: its ``committed_at_ms``,
+    or the manifest file's modification time for manifests predating
+    the field."""
+    t = man.get("committed_at_ms")
+    if t is None:
+        root, mdir = split_ref(path)
+        fs, p = pa_fs(f"{root}/{mdir}/{version:08d}.json")
+        t = fs.get_file_info(p).mtime_ns // 1_000_000
+    return t
+
+
 def snapshot_version_at(spark: SparkSession, path: str, ts) -> int:
     """The latest retained version committed at or before ``ts``
     (datetime | ISO string | epoch seconds) — Delta's TIMESTAMP AS OF.
@@ -1314,21 +1237,14 @@ def snapshot_version_at(spark: SparkSession, path: str, ts) -> int:
     refuses rather than risk serving a version older than what was
     live at ``ts``."""
     ts_ms = _to_epoch_ms(ts)
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no snapshot versions at {path}")
-    root, mdir = _split_ref(path)
-    fs, jvm = _fs(spark, root)
     best = None
     next_man = None
     for v in versions:
-        man = _load_manifest(spark, path, v)
-        t = man.get("committed_at_ms")
-        if t is None:
-            t = fs.getFileStatus(
-                _jp(jvm, root, mdir, f"{v:08d}.json")
-            ).getModificationTime()
-        if t <= ts_ms:
+        man = load_manifest(path, v)
+        if _committed_ms(path, v, man) <= ts_ms:
             best = v
         else:
             next_man = man  # per-chain commit times are monotone (one
@@ -1392,7 +1308,6 @@ def _partition_pruned_files(
       that apply a row-level residual filter
       (``_partition_residual_cond``) and need to know whether any
       unmigrated file survived, without re-parsing every path."""
-    from ..streaming.snapshot_source import _partition_values_from_path
 
     if unencoded not in ("raise", "split"):
         raise ValueError(f"bad unencoded mode {unencoded!r}")
@@ -1413,7 +1328,7 @@ def _partition_pruned_files(
     out = []
     unenc = []
     for f in man["files"]:
-        vals = _partition_values_from_path(f)
+        vals = partition_values(f)
         missing = [k for k in want if k not in vals]
         if missing:
             if unencoded == "raise":
@@ -1468,12 +1383,11 @@ def _files_not_encoding(
     directories do NOT carry every filter/layout column (logical keys,
     compared physical) — nonempty exactly while a layout evolution
     (``snapshot_set_layout``) has files not yet migrated by a compact."""
-    from ..streaming.snapshot_source import _partition_values_from_path
 
     want = [_phys(man, k) for k in partitions]
     out = []
     for f in man["files"] if files is None else files:
-        vals = _partition_values_from_path(f)
+        vals = partition_values(f)
         if any(k not in vals for k in want):
             out.append(f)
     return out
@@ -1515,7 +1429,7 @@ def read_snapshot(
         raise ValueError("pass version OR at_timestamp, not both")
     if at_timestamp is not None:
         version = snapshot_version_at(spark, path, at_timestamp)
-    _, man = _manifest_at(spark, path, version)
+    _, man = _manifest_at(path, version)
     return _read_at(spark, path, man, partitions, where)
 
 
@@ -1584,7 +1498,7 @@ def snapshot_register(
     resolved = version
     if resolved is None and at_timestamp is not None:
         resolved = snapshot_version_at(spark, path, at_timestamp)
-    resolved, man = _manifest_at(spark, path, resolved)
+    resolved, man = _manifest_at(path, resolved)
     _read_at(spark, path, man, partitions).createOrReplaceTempView(name)
     # capture the VIEW-WRAPPED plan (not the raw DataFrame: the View/
     # SubqueryAlias wrapper shifts the semantic hash) — the identity
@@ -1661,10 +1575,6 @@ def _flat_readable(
     cached — see ``_FOOTER_CACHE``), fetched through a small thread
     pool so an object store's per-open latency is paid concurrently,
     not serially."""
-    from ..streaming.snapshot_source import (
-        _pa_fs,
-        _partition_values_from_path,
-    )
 
     path = _root(path)
 
@@ -1679,7 +1589,7 @@ def _flat_readable(
         for f in schema.fields
         if f.name not in want_keys
     }
-    fs, root = _pa_fs(path)
+    fs, root = pa_fs(path)
     missing = [f for f in files if (root, f) not in _FOOTER_CACHE]
     if missing:
         from concurrent.futures import ThreadPoolExecutor
@@ -1705,7 +1615,7 @@ def _flat_readable(
         if len(good) != len(probed):
             return False
     for f in files:
-        if set(_partition_values_from_path(f)) != want_keys:
+        if set(partition_values(f)) != want_keys:
             return False
         if must_have and not must_have <= {
             n for n, _ in _FOOTER_CACHE[(root, f)]
@@ -1782,7 +1692,6 @@ def _read_file_list_flat(
     ``row_ids=True`` appends the stable row identity the deletion-
     vector layer is keyed by: ``_dv_file`` (raw manifest relpath) and
     ``_dv_pos`` (``_metadata.row_index``)."""
-    from ..streaming.snapshot_source import _partition_values_from_path
 
     path = _root(path)
 
@@ -1800,7 +1709,7 @@ def _read_file_list_flat(
         return scan.select(*[f.name for f in schema.fields])
     lookup_rows = []
     for i, f in enumerate(files):
-        vals = _partition_values_from_path(f)
+        vals = partition_values(f)
         # key by the URI-encoded form — _metadata.file_path percent-
         # encodes e.g. spaces, so a raw-relpath join silently drops
         # every row of files under such partition dirs
@@ -2243,7 +2152,7 @@ def snapshot_changes(
         from_version = snapshot_version_at(spark, path, from_timestamp)
     if to_timestamp is not None:
         to_version = snapshot_version_at(spark, path, to_timestamp)
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     if not versions:
         raise FileNotFoundError(f"no snapshot versions at {path}")
     if to_version is None:
@@ -2267,7 +2176,7 @@ def snapshot_changes(
     # exclusive lower bound: from_version's manifest is needed only as
     # the parent of the first diff
     want = [v for v in sorted(needed) if v > from_version]
-    target_man = _load_manifest(spark, path, to_version)
+    target_man = load_manifest(path, to_version)
     out_schema = StructType.fromJson(target_man["schema"])
     # Columns align by IDENTITY through the target's rename lineage:
     # physical names are frozen (see _colmap), so the TARGET's map is
@@ -2311,7 +2220,7 @@ def snapshot_changes(
         _partition_pruned_files(target_man, partitions)
     batched: list[tuple[str, int]] = []
     for v in want:
-        man = _load_manifest(spark, path, v)
+        man = load_manifest(path, v)
         parent = man["parent"]
         pfiles: set[str] = set()
         pdvs: list[str] = []
@@ -2319,7 +2228,7 @@ def snapshot_changes(
         pseq: dict = {}
         pman = None
         if parent is not None:
-            pman = _load_manifest(spark, path, parent)
+            pman = load_manifest(path, parent)
             pfiles = _scoped(pman)
             pdvs = pman.get("dv_files") or []
             peqs = pman.get("eqs") or []
@@ -2639,12 +2548,12 @@ def snapshot_restore(
     retained (vacuum drops old manifests); the change feed reports the
     rollback as the exact delete+insert set any consumer needs.
     """
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     if version not in versions:
         raise FileNotFoundError(
             f"version {version} not present at {path} (have {versions})"
         )
-    man = _load_manifest(spark, path, version)
+    man = load_manifest(path, version)
     latest = versions[-1]
     # deliberately NO same-layout guard (round 9): the commit below
     # republishes the restored version's own partition_cols alongside
@@ -2674,8 +2583,8 @@ def snapshot_restore(
 def snapshot_versions(spark: SparkSession, path: str) -> list[dict]:
     """Version history, oldest first: version/op/parent/n_files."""
     out = []
-    for v in _list_manifests(spark, path):
-        man = _load_manifest(spark, path, v)
+    for v in list_versions(path):
+        man = load_manifest(path, v)
         out.append(
             {
                 "version": v,
@@ -2702,12 +2611,11 @@ def snapshot_files(
     operational queries over a million-file table ("bytes per
     partition", "files with stale stats", "tombstoned share") run as
     ordinary Spark SQL instead of a driver loop."""
-    from ..streaming.snapshot_source import _partition_values_from_path
 
     if _man is not None:
         man = _man
     else:
-        _, man = _manifest_at(spark, path, version)
+        _, man = _manifest_at(path, version)
     root = _root(path)
     stats = man.get("stats") or {}
     tgts = set(man.get("dv_targets") or ())
@@ -2717,7 +2625,7 @@ def snapshot_files(
     inv = {p: l for l, p in _colmap(man).items()}
     rows = []
     for f in man["files"]:
-        pv = _partition_values_from_path(f)
+        pv = partition_values(f)
         rows.append(
             (
                 f,
@@ -2787,7 +2695,7 @@ def snapshot_partitions(
     ``rows`` is the PHYSICAL footer total (NULL when any grouped file
     predates row tracking); live-row exactness under tombstones is
     ``snapshot_agg(partitions=...)``'s job."""
-    version, man = _manifest_at(spark, path, version)
+    version, man = _manifest_at(path, version)
     pcols = _manifest_partition_cols(man) or []
     clash = sorted(
         set(pcols)
@@ -2895,24 +2803,6 @@ def _agg_ent(man: dict, f: str, col: str):
     return (man.get("stats") or {}).get(f, {}).get(_phys(man, col))
 
 
-def _dir_values_cached(rel_file: str):
-    """Memoized ``_partition_values_from_path`` — relpaths are
-    immutable manifest strings, and the aggregate planner consults
-    each file's directory values once per (aggregate, gate, combine),
-    which at 10^5-file manifests would re-parse the same path many
-    times over. Callers must NOT mutate the returned dict."""
-    import functools
-
-    global _dir_values_cached
-
-    from ..streaming.snapshot_source import _partition_values_from_path
-
-    _dir_values_cached = functools.lru_cache(maxsize=131072)(
-        _partition_values_from_path
-    )
-    return _dir_values_cached(rel_file)
-
-
 def _dir_decode_types(for_sum: bool = False):
     """The ONE list of partition-key types whose directory strings
     decode back to the Spark-typed value faithfully — shared by the
@@ -2951,7 +2841,7 @@ def _agg_dir_value(man: dict, f: str, col: str, ftypes):
     """A partition column's value for file ``f``, decoded from its
     directory string (None for the Hive null partition). Callers only
     reach this for files the proven gate already decode-checked."""
-    s = _dir_values_cached(f).get(_phys(man, col))
+    s = partition_values(f).get(_phys(man, col))
     return (
         None if s is None else _decode_partition_string(s, ftypes[col])
     )
@@ -2981,7 +2871,7 @@ def _agg_part_provable(man, col, ftypes, base_ok, rows_map, kind):
     for f in base_ok:
         if f not in rows_map:
             continue  # no row count: can't weigh the value
-        vals = _dir_values_cached(f)
+        vals = partition_values(f)
         if phys not in vals:
             continue  # layout evolved: the value lives in-row
         if kind != "count":
@@ -3122,7 +3012,7 @@ def _agg_combine_one(fl, col, meta, sv, man, ftypes, rows_map):
             total += sum(
                 rows_map[f]
                 for f in meta
-                if _dir_values_cached(f).get(phys) is not None
+                if partition_values(f).get(phys) is not None
             )
         else:
             total += sum(
@@ -3305,7 +3195,7 @@ def snapshot_agg(
         raise ValueError("pass version OR at_timestamp, not both")
     if at_timestamp is not None:
         version = snapshot_version_at(spark, path, at_timestamp)
-    _, man = _manifest_at(spark, path, version)
+    _, man = _manifest_at(path, version)
     return _agg_at(spark, path, man, aggs, by, partitions, where)
 
 
@@ -3392,7 +3282,7 @@ def _agg_at(
         if by is None:
             keyof[f] = ()
             continue
-        vals = _dir_values_cached(f)
+        vals = partition_values(f)
         if (
             not decodable
             or f not in rows_map
@@ -3469,8 +3359,8 @@ def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
         "props", "eqs", "seq", "last_seq", "colmap", "defaults",
     }
     rows = []
-    for v in _list_manifests(spark, path):
-        man = _load_manifest(spark, path, v)
+    for v in list_versions(path):
+        man = load_manifest(path, v)
         extras = {
             k: val for k, val in man.items() if k not in scalar_skip
         }
@@ -3493,46 +3383,33 @@ def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _branch_names(spark: SparkSession, path: str) -> list[str]:
+def _branch_names(path: str) -> list[str]:
     """Branch names under the table's _branches/ dir (metadata-only)."""
-    fs, jvm = _fs(spark, path)
-    bdir = _jp(jvm, path, _BDIR)
-    if not fs.exists(bdir):
-        return []
+    import pyarrow.fs as pafs
+
+    fs, p = pa_fs(f"{path}/{BDIR}")
     return sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(bdir)
-        if st.isDirectory()
+        info.base_name
+        for info in fs.get_file_info(
+            pafs.FileSelector(p, allow_not_found=True)
+        )
+        if info.type == pafs.FileType.Directory
     )
 
 
-def _tag_versions(spark: SparkSession, path: str) -> dict[str, int]:
+def _tag_versions(path: str) -> dict[str, int]:
     """{tag name: pinned main-chain version} (metadata-only)."""
-    fs, jvm = _fs(spark, path)
-    tdir = _jp(jvm, path, _TDIR)
-    if not fs.exists(tdir):
-        return {}
-    out = {}
-    for st in fs.listStatus(tdir):
-        name = st.getPath().getName()
-        if name.endswith(".json"):
-            # same claimed-but-unfinished window as _load_manifest:
-            # create_tag claims the name with an exclusive create, then
-            # writes the body — retry over the torn glimpse so routine
-            # tag creation can't crash a concurrent vacuum/list_tags
-            for attempt in range(5):
-                try:
-                    doc = json.loads(
-                        _read_bytes(fs, jvm, st.getPath()).decode("utf-8")
-                    )
-                    break
-                except (ValueError, UnicodeDecodeError):
-                    if attempt == 4:
-                        raise
-                    import time
+    import pyarrow.fs as pafs
 
-                    time.sleep(0.05 * (attempt + 1))
-            out[name[:-5]] = doc["version"]
+    tdir = f"{path}/{_TDIR}"
+    fs, p = pa_fs(tdir)
+    out = {}
+    for info in fs.get_file_info(pafs.FileSelector(p, allow_not_found=True)):
+        name = info.base_name
+        if name.endswith(".json"):
+            doc = read_json(f"{tdir}/{name}")
+            if doc is not None:  # deleted since the listing
+                out[name[:-5]] = doc["version"]
     return out
 
 
@@ -3568,14 +3445,14 @@ def vacuum_snapshots(
     through a main-chain vacuum. Vacuum targets the TABLE; a branch ref
     is refused (``drop_branch`` removes a branch's manifests, after
     which its unshared files are ordinary vacuum candidates)."""
-    if _REF_SEP in path:
+    if REF_SEP in path:
         raise ValueError(
             "vacuum the table root, not a branch ref — use drop_branch "
             "to retire a branch, then vacuum the table"
         )
     fs, jvm = _fs(spark, path)
-    versions = _list_manifests(spark, path)
-    head = _load_manifest(spark, path, versions[-1]) if versions else {}
+    versions = list_versions(path)
+    head = load_manifest(path, versions[-1]) if versions else {}
     props = head.get("props") or {}
     if keep_last is None:
         raw = props.get("retention.keep_last", "2")
@@ -3600,33 +3477,27 @@ def vacuum_snapshots(
             ) from e
         older_than = _time.time() - hours * 3600.0
     cutoff_ms = _to_epoch_ms(older_than) if older_than is not None else None
-    tagged = set(_tag_versions(spark, path).values())
+    tagged = set(_tag_versions(path).values())
     drop = [v for v in versions[:-keep_last] if v not in tagged]
     if cutoff_ms is not None:
 
-        def _commit_ms(v: int) -> int:
-            # legacy manifests predate committed_at_ms: fall back to
-            # the manifest file's mtime, the SAME clock
-            # snapshot_version_at resolves with — treating them as
-            # epoch 0 would age out history the declared policy
-            # promised to keep
-            t = _load_manifest(spark, path, v).get("committed_at_ms")
-            if t is None:
-                t = fs.getFileStatus(
-                    _jp(jvm, path, _VDIR, f"{v:08d}.json")
-                ).getModificationTime()
-            return t
-
-        drop = [v for v in drop if _commit_ms(v) < cutoff_ms]
+        # legacy manifests fall back to the manifest file's mtime, the
+        # SAME clock snapshot_version_at resolves with — treating them
+        # as epoch 0 would age out history the declared policy
+        # promised to keep
+        drop = [
+            v for v in drop
+            if _committed_ms(path, v, load_manifest(path, v)) < cutoff_ms
+        ]
     keep = [v for v in versions if v not in drop]
     referenced: set[str] = set()
     for v in keep:
-        referenced.update(_storage_refs(_load_manifest(spark, path, v)))
-    for b in _branch_names(spark, path):
-        ref = f"{path}{_REF_SEP}{b}"
-        for bv in _list_manifests(spark, ref):
+        referenced.update(_storage_refs(load_manifest(path, v)))
+    for b in _branch_names(path):
+        ref = f"{path}{REF_SEP}{b}"
+        for bv in list_versions(ref):
             referenced.update(
-                _storage_refs(_load_manifest(spark, ref, bv))
+                _storage_refs(load_manifest(ref, bv))
             )
     # RESCUE pass, while every ancestor manifest is still present: a
     # retained DELTA doc whose parent is about to be dropped (the
@@ -3637,16 +3508,16 @@ def vacuum_snapshots(
     # induction holds; re-vacuums are no-ops (exclusive create).
     keep_set = set(keep)
     for v in keep:
-        doc = _read_doc(spark, path, v, must=True)
-        if "files" in doc or doc.get("ckpt"):
-            continue  # legacy full / checkpoint commit: terminal
+        doc = read_doc(path, v)
+        if doc is None or "files" in doc or doc.get("ckpt"):
+            continue  # gone, legacy full or checkpoint commit: terminal
         if doc.get("parent") in keep_set:
             continue  # parent retained (and rescued if it needed it)
         name = manifestlog.rescue_name(v, doc["manifest_id"])
-        jpath = _jp(jvm, path, _VDIR, name)
+        jpath = _jp(jvm, path, VDIR, name)
         if fs.exists(jpath):
             continue  # a prior vacuum already rescued this version
-        man = _load_manifest(spark, path, v)
+        man = load_manifest(path, v)
         _write_bytes_exclusive(
             fs,
             jpath,
@@ -3660,8 +3531,8 @@ def vacuum_snapshots(
     drop_refs: dict[int, list[str]] = {}
     drop_blobs: list[str] = []
     for v in drop:
-        doc = _read_doc(spark, path, v, must=True)
-        drop_refs[v] = _storage_refs(_load_manifest(spark, path, v))
+        drop_refs[v] = _storage_refs(load_manifest(path, v))
+        doc = read_doc(path, v)
         if doc.get("ckpt"):
             drop_blobs.append(doc["ckpt"])
         if "manifest_id" in doc:
@@ -3674,9 +3545,9 @@ def vacuum_snapshots(
             if f not in referenced:
                 if fs.delete(_jp(jvm, path, f), False):
                     deleted += 1
-        fs.delete(_jp(jvm, path, _VDIR, f"{v:08d}.json"), False)
+        fs.delete(_jp(jvm, path, VDIR, f"{v:08d}.json"), False)
     for name in drop_blobs:
-        fs.delete(_jp(jvm, path, _VDIR, name), False)
+        fs.delete(_jp(jvm, path, VDIR, name), False)
     # sweep now-empty commit dirs (metadata-only listing)
     ddir = _jp(jvm, path, _DDIR)
     if fs.exists(ddir):
@@ -3712,18 +3583,18 @@ def sweep_orphans(
     {"files_deleted", "dirs_deleted", "files_kept_young"}."""
     import time
 
-    if _REF_SEP in path:
+    if REF_SEP in path:
         raise ValueError("sweep the table root, not a branch ref")
     fs, jvm = _fs(spark, path)
     cutoff_ms_meta = (time.time() - grace_seconds) * 1000.0
     referenced: set[str] = set()
     meta_deleted = 0
     for mref in [path] + [
-        f"{path}{_REF_SEP}{b}" for b in _branch_names(spark, path)
+        f"{path}{REF_SEP}{b}" for b in _branch_names(path)
     ]:
-        for v in _list_manifests(spark, mref):
+        for v in list_versions(mref):
             referenced.update(
-                _storage_refs(_load_manifest(spark, mref, v))
+                _storage_refs(load_manifest(mref, v))
             )
         # checkpoint-blob debris: a commit writes its checkpoint BEFORE
         # the exclusive manifest claim, so a losing racer (or a crash
@@ -3848,8 +3719,8 @@ def snapshot_maintain(spark: SparkSession, path: str) -> dict:
         # auto-resolve), so an explicit policy runs it as its own
         # conflict-tolerant step
         try:
-            head = _load_manifest(
-                spark, path, _list_manifests(spark, path)[-1]
+            head = load_manifest(
+                path, list_versions(path)[-1]
             )
             if len(_eq_entries(head)) >= int(eq_entries_n):
                 v, n = snapshot_resolve_eq(spark, path)
@@ -3907,7 +3778,7 @@ def _sweep_ckpt_debris(
     pre-claim) and of superseded rescues. A kept blob is exactly one a
     retained manifest names — its own ``ckpt`` key, or the rescue name
     bound to its manifest_id."""
-    root, mdir = _split_ref(path)
+    root, mdir = split_ref(path)
     fs, jvm = _fs(spark, root)
     vdir = _jp(jvm, root, mdir)
     if not fs.exists(vdir):
@@ -3925,7 +3796,7 @@ def _sweep_ckpt_debris(
         except ValueError:
             continue
         if v not in live:
-            doc = _read_doc(spark, path, v, must=False)
+            doc = read_doc(path, v)
             names: set[str] = set()
             if doc is not None:
                 if doc.get("ckpt"):
@@ -3939,6 +3810,26 @@ def _sweep_ckpt_debris(
             if fs.delete(st.getPath(), False):
                 deleted += 1
     return deleted
+
+
+def _epoch_already_applied(
+    path: str, versions: list[int], extra: dict, checked: set[int]
+) -> int | None:
+    """The version that already carries ``extra``'s ``(stream_id,
+    epoch)`` provenance, or None — the exactly-once guard of every
+    stream/upsert writer. Incremental across retries via ``checked``
+    (versions already inspected)."""
+    sid, epoch = extra.get("stream_id"), extra.get("epoch")
+    if sid is None or epoch is None:
+        return None
+    for v in versions:
+        if v in checked:
+            continue
+        checked.add(v)
+        man = load_manifest(path, v)
+        if man.get("stream_id") == sid and man.get("epoch") == epoch:
+            return v
+    return None
 
 
 def stream_snapshot_append(
@@ -3980,27 +3871,14 @@ def stream_snapshot_append(
     def apply_batch(batch: DataFrame, epoch: int) -> None:
         if batch.isEmpty():
             return
+        prov = {"stream_id": stream_id, "epoch": epoch}
         checked: set[int] = set()
-
-        def epoch_applied(versions: list[int]) -> bool:
-            for v in versions:
-                if v in checked:
-                    continue
-                checked.add(v)
-                man = _load_manifest(spark, path, v)
-                if (
-                    man.get("stream_id") == stream_id
-                    and man.get("epoch") == epoch
-                ):
-                    return True
-            return False
-
-        if epoch_applied(_list_manifests(spark, path)):
+        head = list_versions(path)
+        if _epoch_already_applied(path, head, prov, checked):
             return
-        head = _list_manifests(spark, path)
         cmap, dflts = None, None
         if head:
-            _hm = _load_manifest(spark, path, head[-1])
+            _hm = load_manifest(path, head[-1])
             cmap = _colmap(_hm) or None
             dflts = _hm.get("defaults")  # captured-tuple rule
         _, new_files = _write_commit_files(
@@ -4011,19 +3889,19 @@ def stream_snapshot_append(
         # not an error): the batch's files are written once; each
         # retry re-derives the head and recommits metadata-only
         for attempt in range(retries + 1):
-            versions = _list_manifests(spark, path)
+            versions = list_versions(path)
             # re-check the exactly-once guard against manifests that
             # appeared since the last look: the conflicting commit may
             # BE this epoch, landed by a replayed/zombie instance of
             # this same stream while we were writing files or retrying
             # — recommitting would double the batch. Our orphan commit
             # dir stays invisible to readers (GC reclaims it later).
-            if epoch_applied(versions):
+            if _epoch_already_applied(path, versions, prov, checked):
                 return
             parent = versions[-1] if versions else None
             files = new_files
             if parent is not None:
-                pman = _load_manifest(spark, path, parent)
+                pman = load_manifest(path, parent)
                 _require_same_layout(pman, partition_cols, "stream_append")
                 files = sorted(pman["files"] + new_files)
             try:
@@ -4034,7 +3912,7 @@ def stream_snapshot_append(
                     batch.schema,
                     "stream_append",
                     parent,
-                    extra={"stream_id": stream_id, "epoch": epoch},
+                    extra=prov,
                     partition_cols=partition_cols,
                     # the (schema, colmap, defaults) TUPLE captured at
                     # file-write time: inheriting the retry-time head's
@@ -4094,16 +3972,8 @@ def _rows_for_files(
         return {}
 
     def _count(uri: str) -> int | None:
-        import pyarrow.fs as pafs
-        import pyarrow.parquet as pq
-
-        if "://" in uri:
-            fs, p = pafs.FileSystem.from_uri(uri)
-        else:
-            fs, p = pafs.LocalFileSystem(), uri
         try:
-            with fs.open_input_file(p) as f:
-                return pq.ParquetFile(f).metadata.num_rows
+            return parquet_num_rows(uri)
         except FileNotFoundError:
             if missing_ok:
                 return None
@@ -4150,32 +4020,29 @@ def _live_row_total(
 
 
 def _make_batch_sizer():
-    """Factory for the executor-side batched file-size function shared
-    by ``_file_bytes_total`` and ``snapshot_files``: ONE FileSystem
+    """Factory for the batched file-size function behind every file
+    stat (``_file_sizes``, ``_sidecar_df``, ``snapshot_files``), run on
+    the driver for small lists and on executors past the fan-out
+    threshold: ONE FileSystem
     construction and ONE batched ``get_file_info`` call per batch of
     URIs (a per-file ``from_uri`` rebuilds the object-store client —
     the RPC storm the fan-out exists to avoid, just moved). The
-    fs-local path prefix is derived from ``from_uri``'s own resolution
+    fs-local path prefix is derived from ``pa_fs``'s own resolution
     of the first URI, which handles authority-bearing schemes (HDFS
     ``hdfs://nn:8020/x`` → ``/x``) and bucket-in-path ones (S3
     ``s3://b/k`` → ``b/k``) alike — naive ``scheme://`` stripping
     breaks the former. Returned as a closure so Spark pickles it by
-    value (no package import needed on untuned workers)."""
+    value (``manifestlog`` ships by value too: no package import
+    needed on untuned workers)."""
 
     def batch_sizes(uris: list) -> list:
-        import pyarrow.fs as pafs
-
         uris = list(uris)
         if not uris:
             return []
         first = uris[0]
-        if "://" in first:
-            fs, first_path = pafs.FileSystem.from_uri(first)
-            off = len(first) - len(first_path)
-            rels = [u[off:] for u in uris]
-        else:
-            fs, rels = pafs.LocalFileSystem(), uris
-        infos = fs.get_file_info(rels)
+        fs, first_path = pa_fs(first)
+        off = len(first) - len(first_path)
+        infos = fs.get_file_info([u[off:] for u in uris])
         out = []
         for u, info in zip(uris, infos):
             if info.size is None:
@@ -4208,13 +4075,10 @@ def _file_sizes(
     stats up to a small count, batched executor fan-out beyond."""
     if not files:
         return {}
-    if len(files) <= 256:
-        fs, jvm = _fs(spark, root)
-        return {
-            f: fs.getFileStatus(_jp(jvm, root, f)).getLen() for f in files
-        }
     uris = [f"{root}/{f}" for f in files]
     sizer = _make_batch_sizer()
+    if len(files) <= 256:
+        return dict(zip(files, sizer(uris)))
     n_slices = min(len(uris), max(2, spark.sparkContext.defaultParallelism))
     sizes = (
         spark.sparkContext.parallelize(uris, n_slices)
@@ -4265,12 +4129,11 @@ def _fragment_victims(files: list[str], is_frag) -> list[str]:
     under-threshold file (bin-packing cannot merge across partition
     dirs), so this selection makes every targeted pass strictly
     reduce the file count and the fixpoint a true no-op."""
-    from ..streaming.snapshot_source import _partition_values_from_path
 
     frags: dict[tuple, list[str]] = {}
     for f in files:
         if is_frag(f):
-            key = tuple(sorted(_partition_values_from_path(f).items()))
+            key = tuple(sorted(partition_values(f).items()))
             frags.setdefault(key, []).append(f)
     return sorted(
         f for group in frags.values() if len(group) >= 2 for f in group
@@ -4341,7 +4204,7 @@ def snapshot_properties(
 ) -> dict[str, str]:
     """The table properties at ``version`` (default: latest) — carried
     commit-to-commit in the manifest state, metadata-only to read."""
-    return dict(_manifest_at(spark, path, version)[1].get("props") or {})
+    return dict(_manifest_at(path, version)[1].get("props") or {})
 
 
 def snapshot_set_properties(
@@ -4372,7 +4235,7 @@ def snapshot_set_properties(
         raise ValueError(
             f"property values must be strings: {sorted(bad_vals)}"
         )
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     props = dict(man.get("props") or {})
     missing = [k for k in unset if k not in props]
     if missing:
@@ -4402,7 +4265,7 @@ def snapshot_add_constraint(
     version exists."""
     if not name or "/" in name or name != name.strip():
         raise ValueError(f"bad constraint name {name!r}")
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     props = dict(man.get("props") or {})
     key = f"constraint.{name}"
     if key in props:
@@ -4436,7 +4299,7 @@ def snapshot_drop_constraint(
     spark: SparkSession, path: str, name: str
 ) -> int:
     """ALTER TABLE DROP CONSTRAINT — metadata-only."""
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     props = dict(man.get("props") or {})
     key = f"constraint.{name}"
     if key not in props:
@@ -4509,7 +4372,7 @@ def snapshot_compact(
     it on every commit for free (``_maybe_auto_compact_small``). Files
     whose count is unrecorded (legacy history) are conservatively
     carried. Mutually exclusive with ``min_file_mb``."""
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     latest, man = _eq_resolved_head(spark, path, latest, man)
     root = _root(path)
     if partition_cols is None:
@@ -4735,7 +4598,7 @@ def _require_partition_stable(
     check: one aggregate over ``updates`` gives a ``Range(min, max)``
     per key column, and ``_plan`` drops the files whose stats exclude
     it; only the admitted files' live rows are semi-joined."""
-    _, man = _manifest_at(spark, path)
+    _, man = _manifest_at(path)
     bounds = updates.agg(
         *[F.min(k) for k in keys], *[F.max(k) for k in keys]
     ).first()
@@ -4797,7 +4660,7 @@ def _merge_dv(
     CoW path's ``row_number`` does."""
     from pyspark.sql.window import Window
 
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     _require_same_layout(man, partition_cols, "merge_dv")
     latest, man = _eq_resolved_head(spark, path, latest, man)
     schema = StructType.fromJson(man["schema"])
@@ -5520,7 +5383,7 @@ def _leaf_verdicts(man: dict, col: str, vals) -> list[int]:
 
             out = []
             for f in files:
-                dvals = _dir_values_cached(f)
+                dvals = partition_values(f)
                 if pcol not in dvals:
                     out.append(_SOME_ROWS)
                 elif (
@@ -5583,7 +5446,7 @@ def _leaf_verdicts(man: dict, col: str, vals) -> list[int]:
         want = {_norm_partition_value(v) for v in vals}
         out = []
         for f in files:
-            dvals = _dir_values_cached(f)
+            dvals = partition_values(f)
             out.append(
                 _SOME_ROWS if pcol not in dvals
                 else _EVERY_ROW if dvals[pcol] in want else _NO_ROW
@@ -5896,7 +5759,7 @@ def snapshot_compact_dvs(
     (raw bytes × live fraction), never dead-inclusive raw bytes — a
     mostly-inert set must shrink to its live footprint, not
     re-fragment at its old size."""
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     dvs = man.get("dv_files") or []
     root = _root(path)
     if not dvs:
@@ -5973,7 +5836,7 @@ def snapshot_resolve_eq(spark: SparkSession, path: str) -> tuple[int, int]:
     full speed (then ``snapshot_compact_dvs``/``snapshot_compact``
     take over as usual). Mutators call it implicitly — DML stats
     proofs and row accounting are position-exact only."""
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     entries = _eq_entries(man)
     if not entries:
         return latest, 0
@@ -6060,7 +5923,7 @@ def _eq_resolved_head(
     if not man.get("eqs"):
         return latest, man
     v, _ = snapshot_resolve_eq(spark, path)
-    return v, _load_manifest(spark, path, v)
+    return v, load_manifest(path, v)
 
 
 def _maybe_auto_compact_dvs(
@@ -6095,14 +5958,14 @@ def _maybe_auto_compact_dvs(
     the DML already committed, and the next DV commit re-triggers."""
     if not auto_compact_files:
         return
-    versions = _list_manifests(spark, path)
-    man = _load_manifest(spark, path, versions[-1])
+    versions = list_versions(path)
+    man = load_manifest(path, versions[-1])
     dvs = man.get("dv_files") or []
     if len(dvs) < auto_compact_files:
         return
     # scalar-doc walk (cached): recent consolidation -> stand down
     for v in versions[-auto_compact_files:]:
-        doc = _read_doc(spark, path, v, must=False)
+        doc = read_doc(path, v)
         if doc is not None and doc.get("op") == "compact_dvs":
             return
     try:
@@ -6133,8 +5996,8 @@ def _maybe_auto_compact_small(
     re-triggers."""
     if not min_file_rows:
         return
-    versions = _list_manifests(spark, path)
-    man = _load_manifest(spark, path, versions[-1])
+    versions = list_versions(path)
+    man = load_manifest(path, versions[-1])
     frows = man.get("rows") or {}
     victims = _fragment_victims(
         man["files"], lambda f: f in frows and frows[f] < min_file_rows
@@ -6142,7 +6005,7 @@ def _maybe_auto_compact_small(
     if len(victims) < trigger_files:
         return
     for v in versions[-trigger_files:]:
-        doc = _read_doc(spark, path, v, must=False)
+        doc = read_doc(path, v)
         if doc is not None and doc.get("op") == "compact":
             return
     try:
@@ -6199,7 +6062,7 @@ def snapshot_drop_partitions(
     for attempt in range(retries + 1):
         try:
             return _drop_partitions_once(
-                spark, path, partitions, *_manifest_at(spark, path)
+                spark, path, partitions, *_manifest_at(path)
             )
         except SnapshotConflict:
             if attempt == retries:
@@ -6314,7 +6177,7 @@ def snapshot_delete(
     if mode not in ("auto", "dv", "rewrite"):
         raise ValueError(f"mode must be auto|dv|rewrite; got {mode!r}")
     preds = _sanitize_predicates(where)
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     if not preds:
         return latest, 0
     latest, man = _eq_resolved_head(spark, path, latest, man)
@@ -6396,7 +6259,7 @@ def snapshot_update(
     if mode not in ("auto", "dv", "rewrite"):
         raise ValueError(f"mode must be auto|dv|rewrite; got {mode!r}")
     preds = _sanitize_predicates(where)
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     schema = _check_update_targets(man, set_values)
     if not preds:
         return latest, 0
@@ -6497,7 +6360,7 @@ def snapshot_add_column(
             f"column name {name!r} is reserved for the deletion-vector "
             "row identity"
         )
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     schema = StructType.fromJson(man["schema"])
     if name in {f.name for f in schema.fields}:
         raise ValueError(f"column {name!r} already exists at {path}")
@@ -6547,7 +6410,7 @@ def snapshot_drop_column(
     drop still reads it. Partition columns refuse (their values ARE
     the directory layout); the column's per-file stats entries drop
     with it. Returns the new version."""
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     schema = StructType.fromJson(man["schema"])
     if name not in {f.name for f in schema.fields}:
         raise ValueError(f"column {name!r} does not exist at {path}")
@@ -6587,8 +6450,8 @@ def snapshot_drop_column(
     # history first, or use the documented add+backfill pattern.
     # Metadata-only: one cached state fold per retained version.
     pname = _phys(man, name)  # entry keys are on-disk names (stable)
-    for hv in _list_manifests(spark, path):
-        hman = _load_manifest(spark, path, hv)
+    for hv in list_versions(path):
+        hman = load_manifest(path, hv)
         for e in _eq_entries(hman):
             if pname in e["keys"]:
                 raise ValueError(
@@ -6636,7 +6499,7 @@ def snapshot_rename_column(
     never mints a physical name, so the map stays injective (this is
     what keeps the classic a→tmp, b→a, tmp→b swap legal). Returns the
     new version."""
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     schema = StructType.fromJson(man["schema"])
     names = {f.name for f in schema.fields}
     if old not in names:
@@ -6758,7 +6621,7 @@ def snapshot_widen_column(
 
     if isinstance(new_type, str):
         new_type = _parse_datatype_string(new_type)
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     schema = StructType.fromJson(man["schema"])
     fields = {f.name: f for f in schema.fields}
     if name not in fields:
@@ -6859,7 +6722,7 @@ def snapshot_set_layout(
     old file has no physical values to prune by, and the write path's
     dir values would disagree with the read-time fill); reserved
     ``_dv_*`` names; a no-op layout."""
-    latest, man = _manifest_at(spark, path)
+    latest, man = _manifest_at(path)
     schema = StructType.fromJson(man["schema"])
     names = {f.name for f in schema.fields}
     want = list(partition_cols) if partition_cols else None

@@ -920,7 +920,7 @@ def _exec_delete(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
     preds = _parse_predicates(p)
     p.end()
     if preds == []:  # provably matches nothing: no-op, no commit
-        v, n = _manifest_at(spark, path)[0], 0
+        v, n = _manifest_at(path)[0], 0
     else:
         v, n = snapshot_delete(spark, path, preds, mode=mode)
         _refresh_views(spark, path)
@@ -1025,7 +1025,7 @@ def _exec_update(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
         probe = local_frame(
             spark,
             [],
-            StructType.fromJson(_manifest_at(spark, path)[1]["schema"]),
+            StructType.fromJson(_manifest_at(path)[1]["schema"]),
         )
         for c, e in raw.items():
             try:
@@ -1038,7 +1038,7 @@ def _exec_update(spark, p: _Parser, stmt: str, mode: str) -> DataFrame:
                 )
             set_values[c] = F.expr(e.sql)
     if preds == []:  # provably matches nothing: no-op, no commit
-        v, n = _manifest_at(spark, path)[0], 0
+        v, n = _manifest_at(path)[0], 0
     else:
         v, n = snapshot_update(spark, path, preds, set_values, mode=mode)
         _refresh_views(spark, path)
@@ -1151,7 +1151,7 @@ def _merge_projected_source(
 
     from .snapshots import _manifest_at
 
-    schema = StructType.fromJson(_manifest_at(spark, path)[1]["schema"])
+    schema = StructType.fromJson(_manifest_at(path)[1]["schema"])
     tcols = [f.name for f in schema.fields]
     keyset = set(keys)
 
@@ -1579,7 +1579,7 @@ def _exec_alter_layout(spark, p: _Parser, path: str, stmt: str) -> DataFrame:
     else:
         col = p.ident()
         p.end()
-        man = _manifest_at(spark, path)[1]
+        man = _manifest_at(path)[1]
         cur = list(_manifest_partition_cols(man) or [])
         if verb == "ADD":
             if col in cur:
@@ -1643,24 +1643,23 @@ def _exec_insert(spark, p: _Parser, stmt: str, overwrite: bool) -> DataFrame:
     evolution aware); OVERWRITE replaces the whole table."""
     from pyspark.sql.types import StructType
 
+    from .manifestlog import list_versions, load_manifest
     from .snapshots import (
         _colmap,
-        _list_manifests,
-        _load_manifest,
         _manifest_partition_cols,
         snapshot_write,
     )
 
     kind, text = p.table_token()
     path, _ = _resolve_table(spark, kind, text, stmt)
-    versions = _list_manifests(spark, path)
+    versions = list_versions(path)
     if not versions:
         _fail(
             f"no snapshot table at {path} — create it first "
             "(CREATE TABLE ... LOCATION ... AS SELECT, or snapshot_write)",
             stmt,
         )
-    man = _load_manifest(spark, path, versions[-1])
+    man = load_manifest(path, versions[-1])
     schema = StructType.fromJson(man["schema"])
     tcols = [f.name for f in schema.fields]
     # omitted-column fill: the column's declared DEFAULT when one
@@ -1829,9 +1828,9 @@ def _exec_create_table_as(spark, p: _Parser, stmt: str) -> DataFrame:
                 f"PARTITIONED BY column(s) {missing} not in the SELECT",
                 stmt,
             )
-    from .snapshots import _list_manifests
+    from .manifestlog import list_versions
 
-    if _list_manifests(spark, path):
+    if list_versions(path):
         _fail(
             f"a snapshot table already exists at {path} — INSERT "
             "OVERWRITE it, or pick a fresh LOCATION",
@@ -2246,7 +2245,7 @@ def _resolve_agg_specs(spark, path, aggs, version, gcols=None):
 
     from .snapshots import _manifest_at, _manifest_partition_cols, _phys
 
-    version, man = _manifest_at(spark, path, version)
+    version, man = _manifest_at(path, version)
     by_lower: dict[str, list] = {}
     for fld in StructType.fromJson(man["schema"]).fields:
         by_lower.setdefault(fld.name.lower(), []).append(fld)

@@ -355,9 +355,9 @@ def test_snapshot_bloom_bootstrap_from_empty_table(spark, tmp_path):
         snapshot_write,
     )
 
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     t = str(tmp_path / "eb_tbl")
@@ -366,7 +366,7 @@ def test_snapshot_bloom_bootstrap_from_empty_table(spark, tmp_path):
     n = build_snapshot_bloom_index(spark, t, "doc_id", idx, m_bits=M, k=K)
     # an empty table may still mint zero-row files; every live file is
     # covered (by sentinel if keyless), none invented
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     assert n == len(man["files"])
     # empty table, empty index: lookup answers empty, typed
     got = read_snapshot_with_bloom(spark, t, idx, [1])
@@ -421,9 +421,11 @@ def test_snapshot_bloom_refuses_partition_key_and_prunes(spark, tmp_path):
         build_snapshot_bloom_index,
     )
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     t = str(tmp_path / "sbp_tbl")
@@ -436,7 +438,7 @@ def test_snapshot_bloom_refuses_partition_key_and_prunes(spark, tmp_path):
     with pytest.raises(ValueError, match="partition column"):
         build_snapshot_bloom_index(spark, t, "month", idx)
     build_snapshot_bloom_index(spark, t, "doc_id", idx, m_bits=M, k=K)
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     cand = bloom_candidate_files(
         spark, idx, "doc_id", [13], m_bits=M, k=K
     )

@@ -267,13 +267,13 @@ def test_publish_loses_cleanly_to_concurrent_writer(
     ref = branch_ref(table, "racer")
     snapshot_write(_df(spark, [(2, 2, "b")]), ref, mode="append")
 
-    real = B._list_manifests
+    real = B.list_versions
 
-    def stale(spark_, p):
-        vs = real(spark_, p)
+    def stale(p):
+        vs = real(p)
         return [v for v in vs if v <= 1] if p == table else vs
 
-    monkeypatch.setattr(B, "_list_manifests", stale)
+    monkeypatch.setattr(B, "list_versions", stale)
     # adversary wins the v2 slot between publish's check and commit
     snapshot_write(_df(spark, [(3, 3, "c")]), table, mode="append")
     with pytest.raises(SnapshotConflict, match="committed concurrently"):
@@ -323,11 +323,11 @@ def test_publish_carries_branch_relayout(spark, table):
     ref = create_branch(spark, table, "relayout")
     snapshot_compact(spark, ref, target_mb=64, partition_cols=["month"])
     v = publish_branch(spark, table, "relayout")
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
-    assert _load_manifest(spark, table, v)["partition_cols"] == ["month"]
+    assert load_manifest(table, v)["partition_cols"] == ["month"]
     assert _rows(spark, table) == sorted(
         (i, i % 2, f"d{i}") for i in range(8)
     )
@@ -544,22 +544,22 @@ def test_drop_branch_reclaim_sweeps_branch_minted_dv_sidecars(
     or main's deleted rows would resurrect."""
     import os
 
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(_df(spark, [(i, i % 2, f"d{i}") for i in range(10)]), table)
     # a MAIN-minted sidecar, carried into the fork
     snapshot_delete(spark, table, {"id": [2]}, mode="dv")
-    main_dv = _load_manifest(
-        spark, table, _list_manifests(spark, table)[-1]
+    main_dv = load_manifest(
+        table, list_versions(table)[-1]
     )["dv_files"]
     assert len(main_dv) == 1
     ref = create_branch(spark, table, "tmp")
     # a BRANCH-minted sidecar on top
     snapshot_delete(spark, ref, {"id": [5]}, mode="dv")
-    bman = _load_manifest(spark, ref, _list_manifests(spark, ref)[-1])
+    bman = load_manifest(ref, list_versions(ref)[-1])
     branch_dv = sorted(set(bman["dv_files"]) - set(main_dv))
     assert len(branch_dv) == 1
     assert os.path.exists(os.path.join(table, branch_dv[0]))

@@ -20,8 +20,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.eqdeletes import (
     snapshot_delete_keys,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    _list_manifests,
-    _load_manifest,
     read_snapshot,
     snapshot_add_column,
     snapshot_agg,
@@ -32,6 +30,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_rename_column,
     snapshot_write,
 )
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
+)
 
 
 def _bag(df, *cols):
@@ -41,7 +43,7 @@ def _bag(df, *cols):
 
 
 def _man(spark, path):
-    return _load_manifest(spark, path, _list_manifests(spark, path)[-1])
+    return load_manifest(path, list_versions(path)[-1])
 
 
 def test_default_fills_old_files_only(spark, tmp_path):

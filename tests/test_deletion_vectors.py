@@ -112,12 +112,12 @@ def test_dv_equals_rewrite_over_dml_storm(spark, tmp_path):
     # compact folds the DVs away physically; bags unchanged
     snapshot_compact(spark, a, partition_cols=["month"])
     check()
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
-    head = _load_manifest(spark, a, _list_manifests(spark, a)[-1])
+    head = load_manifest(a, list_versions(a)[-1])
     assert not head.get("dv_files")  # folded
     assert head["rows_removed"] == head["rows_added"] == len(ref)
 
@@ -293,12 +293,12 @@ def test_dv_survives_vacuum_and_sweep(spark, table):
         table, partition_cols=["month"], stats_cols=["id"],
     )
     snapshot_delete(spark, table, {"id": [3]}, mode="dv")  # v2 (dv commit)
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
-    dvs = _load_manifest(spark, table, 2)["dv_files"]
+    dvs = load_manifest(table, 2)["dv_files"]
     assert dvs
     snapshot_write(_df(spark, [(90, 1, "z")]), table, mode="append",
                    partition_cols=["month"])  # v3
@@ -412,9 +412,11 @@ def test_compact_dvs_consolidates_sidecars(spark, table, tmp_path):
     consolidation is EMPTY; the verify-mode feed passes it; vacuum
     reclaims the superseded sidecars."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
         snapshot_compact_dvs,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
     from tests.test_snapshot_feed import _drain
 
@@ -424,7 +426,7 @@ def test_compact_dvs_consolidates_sidecars(spark, table, tmp_path):
     )
     for k in (1, 5, 9):
         snapshot_delete(spark, table, {"id": [k]}, mode="dv")
-    man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+    man = load_manifest(table, list_versions(table)[-1])
     old_dvs = man["dv_files"]
     assert len(old_dvs) == 3
     before = _bag(read_snapshot(spark, table))
@@ -434,7 +436,7 @@ def test_compact_dvs_consolidates_sidecars(spark, table, tmp_path):
     _drain(spark, table, ck, "cdv1", on_non_append="skip")
 
     v = snapshot_compact_dvs(spark, table)
-    man2 = _load_manifest(spark, table, v)
+    man2 = load_manifest(table, v)
     assert man2["files"] == man["files"]  # data untouched
     assert len(man2["dv_files"]) == 1
     assert man2["dv_rows_before"] == man2["dv_rows_after"] == 3
@@ -455,8 +457,8 @@ def test_compact_dvs_consolidates_sidecars(spark, table, tmp_path):
         before + [(90, 0, "z")]
     )
     # nothing to consolidate -> same version back
-    assert snapshot_compact_dvs(spark, table) == _list_manifests(
-        spark, table
+    assert snapshot_compact_dvs(spark, table) == list_versions(
+        table
     )[-1]
 
 
@@ -468,9 +470,11 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
     collapse to the winner). Unmatched target files are carried, only
     tombstones + update images are written."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
         snapshot_merge,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     def mk(rows):
@@ -504,7 +508,7 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
     assert bag(a) == bag(b)
     assert (3, 0, "u3", 2) in bag(a) and (6, 0, "v6", 1) in bag(a)
     assert (100, 1, "u100", 2) in bag(a)
-    man = _load_manifest(spark, a, va)
+    man = load_manifest(a, va)
     assert man["dv_rows_added"] == 1  # only id 3's old image tombstoned
     # redelivery is a no-op on CONTENT (rows identical after re-merge)
     snapshot_merge(
@@ -522,8 +526,8 @@ def test_merge_dv_equals_cow_merge(spark, tmp_path):
     snapshot_merge(spark, d, mk(upd2), ["id"], ["month"])
     assert bag(c) == bag(d)
     # DV merge carried every original data file by reference
-    man_c = _load_manifest(spark, c, _list_manifests(spark, c)[-1])
-    man_c1 = _load_manifest(spark, c, 1)
+    man_c = load_manifest(c, list_versions(c)[-1])
+    man_c1 = load_manifest(c, 1)
     assert set(man_c1["files"]) <= set(man_c["files"])
 
 
@@ -534,9 +538,9 @@ def _readd_history(spark, table):
     the DV set is unchanged — the trap for any 'append' fast path. The
     v2 sidecar also tombstones a month-1 row, so it keeps a live
     target (and stays in the DV set) after month 0's file drops."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(
@@ -545,13 +549,13 @@ def _readd_history(spark, table):
     )
     snapshot_delete(spark, table, {"id": [1, 3, 7]}, mode="dv")       # v2
     snapshot_delete(spark, table, {"id": [0, 2, 4, 5]}, mode="rewrite")       # v3
-    man3 = _load_manifest(spark, table, 3)
+    man3 = load_manifest(table, 3)
     assert man3.get("dv_files")  # tombstones still carried
     snapshot_restore(spark, table, 2)                            # v4
-    man4 = _load_manifest(spark, table, 4)
+    man4 = load_manifest(table, 4)
     assert set(man4["dv_files"]) == set(man3["dv_files"])  # dv_same
     assert set(man4["files"]) - set(man3["files"])  # file re-added
-    assert _list_manifests(spark, table)[-1] == 4
+    assert list_versions(table)[-1] == 4
     return sorted(
         (r.id, r.month, r.v)
         for r in read_snapshot(spark, table, version=2).collect()
@@ -660,9 +664,11 @@ def test_feed_skip_streams_untargeted_appends_alongside_readd(
     rewrites", not "ignore the whole commit"."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _commit,
-        _list_manifests,
-        _load_manifest,
         _write_commit_files,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
     from pyspark.sql.types import StructType
     from tests.test_snapshot_feed import _drain
@@ -673,12 +679,12 @@ def test_feed_skip_streams_untargeted_appends_alongside_readd(
     )                                                          # v1
     # id 1 (month 1) keeps the sidecar live once month 0's file drops
     snapshot_delete(spark, table, {"id": [0, 1]}, mode="dv")        # v2
-    man2 = _load_manifest(spark, table, 2)
+    man2 = load_manifest(table, 2)
     targeted = [f for f in man2["files"] if "month=0" in f]
     snapshot_delete(
         spark, table, {"id": [2, 4, 6, 8], "month": [0]}, mode="rewrite"
     )                                                          # v3 CoW
-    man3 = _load_manifest(spark, table, 3)
+    man3 = load_manifest(table, 3)
     readd = sorted(set(targeted) - set(man3["files"]))
     assert readd  # the tombstoned month-0 file left the manifest
     # v4: one commit = re-add of the targeted file + a FRESH append;
@@ -719,10 +725,12 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _dv_entry_count,
         _footer_row_total,
-        _list_manifests,
-        _load_manifest,
         snapshot_compact_dvs,
         snapshot_replace_partitions,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(
@@ -732,7 +740,7 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
     snapshot_delete(spark, table, {"id": [0, 2, 4, 6, 8]}, mode="dv")  # month 0
     snapshot_delete(spark, table, {"id": [1]}, mode="dv")              # month 1
     v = snapshot_compact_dvs(spark, table)
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert len(man["dv_files"]) == 1
     assert _footer_row_total(spark, table, man["dv_files"]) == 6
 
@@ -745,8 +753,8 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
         table, ["month"],
     )
     v2 = snapshot_compact_dvs(spark, table)
-    assert v2 == _list_manifests(spark, table)[-1] > v
-    man2 = _load_manifest(spark, table, v2)
+    assert v2 == list_versions(table)[-1] > v
+    man2 = load_manifest(table, v2)
     assert len(man2["dv_files"]) == 1
     assert _footer_row_total(spark, table, man2["dv_files"]) == 1
     assert man2["dv_rows_before"] == man2["dv_rows_after"] == 1
@@ -760,7 +768,7 @@ def test_compact_dvs_single_sidecar_inert_dominated(spark, table):
     v3 = snapshot_replace_partitions(
         _df(spark, [(200, 1, "m")]), table, ["month"]
     )
-    man3 = _load_manifest(spark, table, v3)
+    man3 = load_manifest(table, v3)
     assert v3 > v2 and not man3.get("dv_files")
     assert snapshot_compact_dvs(spark, table) == v3
     assert _bag(read_snapshot(spark, table)) == sorted(
@@ -780,8 +788,10 @@ def _inert_sidecar_table(spark, table):
     manifest carrying v2's sidecars and targets — the state a
     partition replace used to inherit unchanged."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_replace_partitions,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
     from tests.test_manifestlog import _hand_write
 
@@ -793,8 +803,8 @@ def _inert_sidecar_table(spark, table):
     snapshot_replace_partitions(
         _df(spark, [(100, 0, "n")]), table, ["month"]
     )                                                              # v3
-    man2 = _load_manifest(spark, table, 2)
-    man3 = _load_manifest(spark, table, 3)
+    man2 = load_manifest(table, 2)
+    man3 = load_manifest(table, 3)
     assert man2["dv_files"] and not man3.get("dv_files")
     legacy = {
         k: v for k, v in man3.items()
@@ -802,7 +812,7 @@ def _inert_sidecar_table(spark, table):
     }
     legacy.update(dv_files=man2["dv_files"], dv_targets=man2["dv_targets"])
     _hand_write(table, 3, legacy)
-    man3 = _load_manifest(spark, table, 3)
+    man3 = load_manifest(table, 3)
     assert man3["dv_files"] == man2["dv_files"]
     assert not set(man3["dv_targets"]) & set(man3["files"])
     assert _bag(read_snapshot(spark, table)) == _INERT_ROWS
@@ -816,8 +826,8 @@ def test_feed_streams_appends_past_an_inert_sidecar_set(
     carries the set unchanged — it removes no file, so folding the set
     there would read as a deletion-vector change — and every feed mode
     streams the append's rows."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
     from tests.test_snapshot_feed import _drain
 
@@ -826,7 +836,7 @@ def test_feed_streams_appends_past_an_inert_sidecar_set(
         _df(spark, [(50, 1, "a"), (51, 0, "b")]), table, mode="append",
         partition_cols=["month"],
     )
-    man4 = _load_manifest(spark, table, v4)
+    man4 = load_manifest(table, v4)
     assert man4["dv_files"] == man3["dv_files"]
     assert man4["dv_targets"] == man3["dv_targets"]
     for mode in ("fail", "verify", "skip"):
@@ -842,13 +852,15 @@ def test_compact_dvs_clears_an_inert_sidecar_set(spark, table):
     DV-free version that records zero live tombstones on both sides,
     and reads are unchanged."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_compact_dvs,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     _inert_sidecar_table(spark, table)
     v = snapshot_compact_dvs(spark, table)
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert v == 4 and not man.get("dv_files")
     assert man["dv_rows_before"] == man["dv_rows_after"] == 0
     assert _bag(read_snapshot(spark, table)) == _INERT_ROWS
@@ -859,9 +871,9 @@ def test_snapshot_delete_mode_auto_dispatch(spark, table, monkeypatch):
     the threshold it rewrites (no tombstone debt), above it writes
     tombstones — both row-for-row equivalent, op recorded."""
     from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(
@@ -872,21 +884,21 @@ def test_snapshot_delete_mode_auto_dispatch(spark, table, monkeypatch):
     monkeypatch.setattr(sn, "DV_THRESHOLD_MB", 1024)
     v1, n1 = snapshot_delete(spark, table, {"id": [4]})
     assert n1 == 1
-    assert _load_manifest(spark, table, v1)["op"] == "delete_rows"
-    assert not _load_manifest(spark, table, v1).get("dv_files")
+    assert load_manifest(table, v1)["op"] == "delete_rows"
+    assert not load_manifest(table, v1).get("dv_files")
     # threshold 0 -> any victim bytes exceed it -> DV
     monkeypatch.setattr(sn, "DV_THRESHOLD_MB", 0)
     v2, n2 = snapshot_delete(spark, table, {"id": [7]})
     assert n2 == 1
-    man2 = _load_manifest(spark, table, v2)
+    man2 = load_manifest(table, v2)
     assert man2["op"] == "delete_rows_dv" and man2["dv_files"]
     # explicit modes still available through the front door
     v3, n3 = snapshot_delete(spark, table, {"id": [8]}, mode="rewrite")
-    assert _load_manifest(spark, table, v3)["op"] == "delete_rows"
+    assert load_manifest(table, v3)["op"] == "delete_rows"
     # update dispatch mirrors delete's
     v4, n4 = snapshot_update(spark, table, {"id": [9]}, {"v": None})
     assert n4 == 1
-    assert _load_manifest(spark, table, v4)["op"] == "update_rows_dv"
+    assert load_manifest(table, v4)["op"] == "update_rows_dv"
     expect = sorted(
         (i, i % 2, None if i == 9 else f"v{i}")
         for i in range(20)
@@ -938,9 +950,9 @@ def test_auto_compact_consolidates_sidecar_pileup(spark, table, monkeypatch):
     sidecars pile up unbounded: past AUTO_COMPACT_FILES the set is
     consolidated in a follow-on compact_dvs commit, results intact."""
     from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(
@@ -952,11 +964,11 @@ def test_auto_compact_consolidates_sidecar_pileup(spark, table, monkeypatch):
     for i in range(5):
         snapshot_delete(spark, table, {"id": [i]}, mode="dv")
         deleted.append(i)
-        man = _load_manifest(
-            spark, table, _list_manifests(spark, table)[-1]
+        man = load_manifest(
+            table, list_versions(table)[-1]
         )
         assert len(man.get("dv_files") or []) < 3 + 1
-    man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+    man = load_manifest(table, list_versions(table)[-1])
     # consolidation ran at least once (compact_dvs op in history)
     assert "compact_dvs" in {
         h["op"] for h in snapshot_versions(spark, table)
@@ -973,10 +985,12 @@ def test_replace_partitions_with_outstanding_dvs(spark, table):
     partitions stay masked, the recorded dv_targets shrink to the live
     files, and the change feed stays consistent."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
         snapshot_compact_dvs,
         snapshot_replace_partitions,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(
@@ -986,13 +1000,13 @@ def test_replace_partitions_with_outstanding_dvs(spark, table):
     # tombstones in BOTH partitions
     v_dv, n = snapshot_delete(spark, table, {"id": [0, 1]}, mode="dv")
     assert n == 2
-    man = _load_manifest(spark, table, v_dv)
+    man = load_manifest(table, v_dv)
     assert man["dv_files"] and len(man["dv_targets"]) >= 2
     # replace month=0 wholesale
     v_rp = snapshot_replace_partitions(
         _df(spark, [(100, 0, "n0"), (102, 0, "n2")]), table, ["month"]
     )
-    man_rp = _load_manifest(spark, table, v_rp)
+    man_rp = load_manifest(table, v_rp)
     # DVs inherit through the replacement (month=1's tombstone must
     # keep riding); the recorded targets shrink to the live files
     # (month=0's entry went inert with its file)
@@ -1026,7 +1040,7 @@ def test_replace_partitions_with_outstanding_dvs(spark, table):
     )
     # consolidation sheds the inert month=0 entry
     v_c = snapshot_compact_dvs(spark, table, min_dead_fraction=0.1)
-    man_c = _load_manifest(spark, table, v_c)
+    man_c = load_manifest(table, v_c)
     assert v_c > v_rp
     assert len(man_c["dv_targets"]) == 1
     assert all("month=1" in t for t in man_c["dv_targets"])

@@ -28,14 +28,16 @@ import pytest
 
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     Range,
-    _list_manifests,
-    _load_manifest,
     read_snapshot,
     snapshot_agg,
     snapshot_delete,
     snapshot_register,
     snapshot_update,
     snapshot_write,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -63,7 +65,7 @@ def _mk_ts_table(spark, path, n_files=3, rows_per=4):
 
 
 def _head_man(spark, path):
-    return _load_manifest(spark, path, _list_manifests(spark, path)[-1])
+    return load_manifest(path, list_versions(path)[-1])
 
 
 # ------------------------------------------------- Python-API DNF
@@ -177,7 +179,7 @@ def test_dnf_sanitize_shapes(spark, tmp_path):
     # a no-match DNF is a no-op delete, not an error
     t = str(tmp_path / "dnf_noop")
     _mk_ts_table(spark, t, n_files=1)
-    head = _list_manifests(spark, t)[-1]
+    head = list_versions(t)[-1]
     v, n = snapshot_delete(spark, t, [{"id": [None]}], mode="rewrite")
     assert (v, n) == (head, 0)
 
@@ -296,12 +298,12 @@ def test_sql_bool_ne_complements(spark, tmp_path):
         1, 3,
     ]
     # NOT IN (TRUE, FALSE) provably matches nothing: no-op, no commit
-    head = _list_manifests(spark, t)[-1]
+    head = list_versions(t)[-1]
     r = snapshot_sql(
         spark, "DELETE FROM booldnf WHERE flag NOT IN (TRUE, FALSE)"
     ).collect()[0]
     assert (r.version, r.num_affected_rows) == (head, 0)
-    assert _list_manifests(spark, t)[-1] == head
+    assert list_versions(t)[-1] == head
 
 
 def test_sql_ne_nan_parity(spark, tmp_path):

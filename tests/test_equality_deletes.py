@@ -23,8 +23,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.eqdeletes import (
     stream_snapshot_upsert,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    _list_manifests,
-    _load_manifest,
     read_snapshot,
     Range,
     snapshot_changes,
@@ -34,6 +32,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_update,
     snapshot_versions,
     snapshot_write,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
 )
 
 
@@ -51,7 +53,7 @@ def table(tmp_path):
 
 
 def _head(spark, table):
-    return _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+    return load_manifest(table, list_versions(table)[-1])
 
 
 def _apply_changes(spark, table, base_rows, from_version=0):
@@ -406,7 +408,7 @@ def test_restore_carries_eq_state_and_constraints_guard(spark, table):
     snapshot_delete_keys(
         spark, table, spark.createDataFrame([(2,)], "id long")
     )
-    v_masked = _list_manifests(spark, table)[-1]
+    v_masked = list_versions(table)[-1]
     # advance the head past the entry
     rv, _ = snapshot_resolve_eq(spark, table)
     # restore back TO the eq-masked version: row 2 stays dead
@@ -516,7 +518,7 @@ def test_feed_verify_accepts_resolve_only_history(spark, table, tmp_path):
     snapshot_delete_keys(
         spark, table, spark.createDataFrame([(2,)], "id long")
     )
-    pre = _list_manifests(spark, table)[-1]
+    pre = list_versions(table)[-1]
     out = tmp_path / "out"
     q = (
         read_snapshot_stream(
@@ -706,7 +708,7 @@ def test_restore_valid_when_masks_cover_violation(spark, table):
     snapshot_delete_keys(
         spark, table, spark.createDataFrame([(2,)], "id long")
     )
-    v_masked = _list_manifests(spark, table)[-1]
+    v_masked = list_versions(table)[-1]
     # replace the table wholesale: the old file (and entry) leave
     snapshot_write(
         _df(spark, [(3, 1, "ok3")]), table, mode="overwrite",
@@ -781,7 +783,7 @@ def test_feed_skip_subtracts_dv_targeted_readds_on_eq_commits(
         table, mode="append", partition_cols=["month"],
     )
     snapshot_delete(spark, table, {"id": [0, 10]}, mode="dv")  # D targets both
-    v_pre_drop = _list_manifests(spark, table)[-1]
+    v_pre_drop = list_versions(table)[-1]
     snapshot_drop_partitions(spark, table, {"month": 1})  # F leaves, D stays
     snapshot_delete_keys(  # E2 — so the restore's eq set CHANGES
         spark, table, spark.createDataFrame([(998,)], "id long")

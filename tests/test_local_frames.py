@@ -236,7 +236,7 @@ def test_memoized_read_matches_inferred_read(spark, tmp_path, monkeypatch):
         path,
         partition_cols=["p", "q"],
     )
-    files = _manifest_at(spark, path)[1]["files"]
+    files = _manifest_at(path)[1]["files"]
     base = f"{path}/{files[0].rsplit('/', 3)[0]}"
     paths = [f"{path}/{f}" for f in files]
     monkeypatch.setattr(snapshots, "_SCHEMA_MEMO", {})
@@ -265,7 +265,7 @@ def test_written_schema_matches_inferred_schema(spark, tmp_path, monkeypatch):
         path,
         partition_cols=["p", "q"],
     )
-    files = _manifest_at(spark, path)[1]["files"]
+    files = _manifest_at(path)[1]["files"]
     base = f"{path}/{files[0].split('/p=')[0]}"
     paths = [f"{path}/{f}" for f in files]
     written = [_read_files(spark, paths, b).schema for b in (base, None)]
@@ -331,7 +331,7 @@ def test_zero_match_dv_statement_writes_nothing(spark, flat, verb):
 
 def test_tombstone_sidecars_hold_at_most_the_cap(spark, flat, monkeypatch):
     monkeypatch.setattr(snapshots, "_DV_ROWS_PER_SIDECAR", 7)
-    man = _manifest_at(spark, flat)[1]
+    man = _manifest_at(flat)[1]
     matched = snapshots._scan_live(
         spark, flat, man, man["files"], row_ids=True
     ).where("k % 2 = 0")

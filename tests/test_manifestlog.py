@@ -25,9 +25,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.branching import (
     publish_branch,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    _list_manifests,
-    _load_manifest,
-    _read_doc,
     read_snapshot,
     Range,
     snapshot_changes,
@@ -37,6 +34,11 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_write,
     sweep_orphans,
     vacuum_snapshots,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
+    read_doc,
 )
 
 
@@ -237,7 +239,7 @@ def test_commit_docs_are_o_change_not_o_table(spark, table, ckpt3):
             _df(spark, [(100 + k, k % 2, f"b{k}")]),
             table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
-        doc = _read_doc(spark, table, k)
+        doc = read_doc(table, k)
         if not doc.get("ckpt"):
             delta_sizes.append(len(json.dumps(doc)))
             # a delta append records ONLY the appended files
@@ -249,13 +251,13 @@ def test_commit_docs_are_o_change_not_o_table(spark, table, ckpt3):
     assert max(delta_sizes) - min(delta_sizes) < 200
     # cadence: v1 (chain start), v3, v6 are checkpoint commits
     kinds = {
-        v: ("ckpt" if _read_doc(spark, table, v).get("ckpt") else "delta")
-        for v in _list_manifests(spark, table)
+        v: ("ckpt" if read_doc(table, v).get("ckpt") else "delta")
+        for v in list_versions(table)
     }
     assert kinds[1] == kinds[3] == kinds[6] == "ckpt"
     assert kinds[2] == kinds[4] == kinds[5] == kinds[7] == kinds[8] == "delta"
     # reconstruction equals accumulated truth at EVERY version
-    man = _load_manifest(spark, table, 8)
+    man = load_manifest(table, 8)
     assert len(man["files"]) == len(man["stats"])
     assert _bag(read_snapshot(spark, table)) == sorted(
         [(i, i % 2, f"a{i}") for i in range(8)]
@@ -272,13 +274,13 @@ def test_checkpoint_blob_written_before_claim(spark, table, ckpt3):
     """A ckpt-commit's doc references a blob that exists on disk, named
     by the doc's own manifest_id."""
     snapshot_write(_df(spark, [(1, 0, "a")]), table)
-    doc = _read_doc(spark, table, 1)
+    doc = read_doc(table, 1)
     assert doc["ckpt"] == ml.ckpt_name(1, doc["manifest_id"])
     assert os.path.exists(os.path.join(table, "_versions", doc["ckpt"]))
     st = ml.decode_checkpoint(
         open(os.path.join(table, "_versions", doc["ckpt"]), "rb").read()
     )
-    assert st["files"] == _load_manifest(spark, table, 1)["files"]
+    assert st["files"] == load_manifest(table, 1)["files"]
 
 
 def _hand_write(table, version, doc):
@@ -301,7 +303,7 @@ def test_legacy_full_manifest_backcompat(spark, table, tmp_path):
         _df(spark, [(i, i % 2, f"a{i}") for i in range(6)]),
         table, partition_cols=["month"],
     )
-    man = _load_manifest(spark, table, 1)
+    man = load_manifest(table, 1)
     legacy = {
         "version": 1, "parent": None, "op": "overwrite",
         "committed_at_ms": man["committed_at_ms"],
@@ -311,21 +313,21 @@ def test_legacy_full_manifest_backcompat(spark, table, tmp_path):
     for blob in glob.glob(os.path.join(table, "_versions", "*.ckpt.parquet")):
         os.remove(blob)
     _hand_write(table, 1, legacy)
-    assert _load_manifest(spark, table, 1) == legacy
+    assert load_manifest(table, 1) == legacy
     assert read_snapshot(spark, table).count() == 6
     # a DELTA commits cleanly against the legacy parent
     snapshot_write(
         _df(spark, [(50, 0, "x")]), table, mode="append",
         partition_cols=["month"],
     )
-    doc2 = _read_doc(spark, table, 2)
+    doc2 = read_doc(table, 2)
     assert "files" not in doc2 and len(doc2["files_add"]) == 1
     assert "parent_id" not in doc2  # legacy parents have no id
     assert read_snapshot(spark, table).count() == 7
     # legacy manifests with sidecars but no recorded dv_targets:
     # the next DV commit derives the full target list from sidecars
     v, n = snapshot_delete(spark, table, {"id": [0]}, mode="dv")
-    man_v = _load_manifest(spark, table, v)
+    man_v = load_manifest(table, v)
     # simulate a legacy DV manifest: full body, no recorded targets
     legacy_dv = {
         k: v2 for k, v2 in man_v.items() if k != "dv_targets"
@@ -333,10 +335,10 @@ def test_legacy_full_manifest_backcompat(spark, table, tmp_path):
     for blob in glob.glob(os.path.join(table, "_versions", "*.ckpt.parquet")):
         os.remove(blob)
     _hand_write(table, v, legacy_dv)
-    assert "dv_targets" not in _load_manifest(spark, table, v)
+    assert "dv_targets" not in load_manifest(table, v)
     assert read_snapshot(spark, table).count() == 6  # DV still applies
     v2, _ = snapshot_delete(spark, table, {"id": [2]}, mode="dv")
-    man2 = _load_manifest(spark, table, v2)
+    man2 = load_manifest(table, v2)
     # derived targets cover BOTH the legacy sidecar's and the new one's
     assert len(man2["dv_targets"]) == 2
     assert read_snapshot(spark, table).count() == 5
@@ -361,11 +363,11 @@ def test_vacuum_rescues_delta_tails_and_tagged_islands(
             partition_cols=["month"],
         )
     # v5 is a DELTA (cadence 3: ckpts at 1,3,6) — tag it
-    assert not _read_doc(spark, table, 5).get("ckpt")
+    assert not read_doc(table, 5).get("ckpt")
     create_tag(spark, table, "island", 5)
     res = vacuum_snapshots(spark, table, keep_last=2)
     assert res["versions_dropped"] == 5
-    assert _list_manifests(spark, table) == [5, 7, 8]
+    assert list_versions(table) == [5, 7, 8]
     # the tagged delta island and the tail delta both reconstruct
     assert read_snapshot(spark, table, version=5).count() == 5
     assert read_snapshot(spark, table, version=7).count() == 7
@@ -373,8 +375,8 @@ def test_vacuum_rescues_delta_tails_and_tagged_islands(
     blobs = {os.path.basename(p) for p in glob.glob(
         os.path.join(table, "_versions", "*.ckpt.parquet")
     )}
-    doc5 = _read_doc(spark, table, 5)
-    doc7 = _read_doc(spark, table, 7)
+    doc5 = read_doc(table, 5)
+    doc7 = read_doc(table, 7)
     assert ml.rescue_name(5, doc5["manifest_id"]) in blobs
     assert ml.rescue_name(7, doc7["manifest_id"]) in blobs
     # dropped versions' blobs are gone (v1, v3, v6 had ckpts)
@@ -385,11 +387,7 @@ def test_vacuum_rescues_delta_tails_and_tagged_islands(
     assert res2["versions_dropped"] == 0
     assert read_snapshot(spark, table, version=5).count() == 5
     # fresh process state (cold cache): reconstruction from disk alone
-    ml_cache = __import__(
-        "nyc_taxi_data_warehouse_spark.warehouse.snapshots",
-        fromlist=["_STATE_CACHE"],
-    )._STATE_CACHE
-    ml_cache.__setstate__({"maxsize": 256})
+    ml._STATE_CACHE.__setstate__({"maxsize": 256})
     assert read_snapshot(spark, table, version=5).count() == 5
     assert read_snapshot(spark, table).count() == 8
 
@@ -399,7 +397,7 @@ def test_sweep_orphans_removes_racer_ckpt_debris(spark, table):
     between blob write and claim) is swept once aged; referenced
     blobs and young debris survive."""
     snapshot_write(_df(spark, [(1, 0, "a")]), table)
-    doc = _read_doc(spark, table, 1)
+    doc = read_doc(table, 1)
     vdir = os.path.join(table, "_versions")
     live = os.path.join(vdir, doc["ckpt"])
     debris = os.path.join(vdir, ml.ckpt_name(1, "deadbeef" * 4))
@@ -430,7 +428,7 @@ def test_dv_targets_lifecycle(spark, table):
         table, partition_cols=["month"],
     )
     v, _ = snapshot_delete(spark, table, {"id": [0, 3]}, mode="dv")   # month 0
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     tgts = man["dv_targets"]
     assert tgts and all("month=0" in t for t in tgts)
     # plain append INHERITS the list untouched
@@ -438,7 +436,7 @@ def test_dv_targets_lifecycle(spark, table):
         _df(spark, [(100, 1, "x")]), table, mode="append",
         partition_cols=["month"],
     )
-    man2 = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+    man2 = load_manifest(table, list_versions(table)[-1])
     assert man2["dv_targets"] == tgts
     # CoW delete rewrites the targeted files -> recorded list is now a
     # SUPERSET of live targets; reads stay exact
@@ -450,7 +448,7 @@ def test_dv_targets_lifecycle(spark, table):
     # consolidation: every entry went inert with the rewrite ->
     # DV-free manifest, targets cleared
     v3 = snapshot_compact_dvs(spark, table)
-    man3 = _load_manifest(spark, table, v3)
+    man3 = load_manifest(table, v3)
     assert not man3.get("dv_files") and not man3.get("dv_targets")
 
 
@@ -472,7 +470,7 @@ def test_dv_read_split_plan_only_targeted_files_join(spark, table):
     )
     v, n = snapshot_delete(spark, table, {"id": [1]}, mode="dv")  # month 1 only
     assert n == 1
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert all("month=1" in t for t in man["dv_targets"])
     got = read_snapshot(spark, table)
     assert _bag(got) == sorted(
@@ -544,7 +542,7 @@ def test_change_feed_and_time_travel_across_delta_chains(
     ]
     v5 = snapshot_restore(spark, table, 2)
     assert read_snapshot(spark, table).count() == 7  # id 0 resurrected
-    man5 = _load_manifest(spark, table, v5)
+    man5 = load_manifest(table, v5)
     assert not man5.get("dv_files") and not man5.get("dv_targets")
 
 
@@ -556,13 +554,13 @@ def test_branch_fork_is_checkpoint_and_carries_dv_targets(
         table, partition_cols=["month"],
     )
     snapshot_delete(spark, table, {"id": [2]}, mode="dv")
-    man = _load_manifest(spark, table, 2)
+    man = load_manifest(table, 2)
     ref = create_branch(spark, table, "dev")
-    bdoc = _read_doc(spark, ref, 1)
+    bdoc = read_doc(ref, 1)
     # fork = chain start = checkpoint commit: O(1) JSON + one blob,
     # never an O(table) files_add delta
     assert bdoc.get("ckpt") and "files_add" not in bdoc
-    bman = _load_manifest(spark, ref, 1)
+    bman = load_manifest(ref, 1)
     assert bman["dv_targets"] == man["dv_targets"]
     assert read_snapshot(spark, ref).count() == 7
     # publish carries targets back; drop cleans the branch blobs
@@ -571,7 +569,7 @@ def test_branch_fork_is_checkpoint_and_carries_dv_targets(
         partition_cols=["month"],
     )
     publish_branch(spark, table, "dev")
-    pman = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+    pman = load_manifest(table, list_versions(table)[-1])
     assert pman["dv_targets"] == man["dv_targets"]
     assert read_snapshot(spark, table).count() == 8
     drop_branch(spark, table, "dev", reclaim=True)
@@ -608,10 +606,6 @@ def test_stripped_reconstruction_never_partial_stats(spark, table, ckpt3):
     no-stats shape — never a partial dict holding only the latest
     commit's stats_put (a future stats consumer in the planning
     subprocess would silently read wrong per-file stats)."""
-    from nyc_taxi_data_warehouse_spark.streaming.snapshot_source import (
-        _load_manifest as feed_load,
-    )
-
     snapshot_write(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(6)]),
         table, partition_cols=["month"], stats_cols=["id"],
@@ -621,13 +615,13 @@ def test_stripped_reconstruction_never_partial_stats(spark, table, ckpt3):
             _df(spark, [(100 + k, k % 2, f"b{k}")]),
             table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
-    head = _list_manifests(spark, table)[-1]
-    assert not _read_doc(spark, table, head).get("ckpt")  # delta head
+    head = list_versions(table)[-1]
+    assert not read_doc(table, head).get("ckpt")  # delta head
     # JVM-side (full) reconstruction carries complete stats
-    full = _load_manifest(spark, table, head)
+    full = load_manifest(table, head)
     assert len(full["stats"]) == len(full["files"])
     # planner-side (stripped) reconstruction: no stats AT ALL
-    stripped = feed_load(table, head)
+    stripped = load_manifest(table, head, want_stats=False)
     assert "stats" not in stripped and "stats_cols" not in stripped
     assert stripped["files"] == full["files"]
 
@@ -636,17 +630,15 @@ def test_feed_read_doc_propagates_non_notfound_oserrors():
     """REVIEW r8: only genuinely-missing manifests map to None —
     throttling/permission OSErrors must propagate, or a transient 503
     reads as 'vacuumed history' and the operator skips feed data."""
-    from nyc_taxi_data_warehouse_spark.streaming import snapshot_source as ss
-
     import errno
 
-    assert ss._is_not_found(FileNotFoundError("x"))
-    assert ss._is_not_found(OSError("Path does not exist 's3://b/k'"))
-    assert ss._is_not_found(OSError(errno.ENOENT, "No such file"))
-    assert not ss._is_not_found(OSError("AWS Error SLOW_DOWN (503)"))
-    assert not ss._is_not_found(PermissionError("denied"))
+    assert ml.is_not_found(FileNotFoundError("x"))
+    assert ml.is_not_found(OSError("Path does not exist 's3://b/k'"))
+    assert ml.is_not_found(OSError(errno.ENOENT, "No such file"))
+    assert not ml.is_not_found(OSError("AWS Error SLOW_DOWN (503)"))
+    assert not ml.is_not_found(PermissionError("denied"))
     # a missing BUCKET is a config error, never vacuumed history
-    assert not ss._is_not_found(
+    assert not ml.is_not_found(
         OSError("The specified bucket does not exist")
     )
 
@@ -669,12 +661,12 @@ def test_auto_compact_cadence_gate(spark, table, monkeypatch):
     monkeypatch.setattr(sn, "AUTO_COMPACT_FILES", None)
     for i in range(4):
         sn.snapshot_delete(spark, table, {"id": [i]}, mode="dv")
-    man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+    man = load_manifest(table, list_versions(table)[-1])
     assert len(man["dv_files"]) >= 4
     calls = []
     monkeypatch.setattr(
         sn, "snapshot_compact_dvs",
-        lambda *a, **k: calls.append(1) or _list_manifests(spark, table)[-1],
+        lambda *a, **k: calls.append(1) or list_versions(table)[-1],
     )
     # sidecar pileup, no recent consolidation: fires
     sn._maybe_auto_compact_dvs(spark, table, auto_compact_files=2)
@@ -682,7 +674,7 @@ def test_auto_compact_cadence_gate(spark, table, monkeypatch):
     # a REAL consolidation lands, leaving the live floor >= trigger
     monkeypatch.undo()
     v_c = snapshot_compact_dvs(spark, table)
-    man_c = _load_manifest(spark, table, v_c)
+    man_c = load_manifest(table, v_c)
     assert man_c["dv_files"]  # live tombstones remain
     calls2 = []
     monkeypatch.setattr(
@@ -741,15 +733,15 @@ def test_snapshot_count_metadata_only_across_dml_storm(
     snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")  # copy-on-write
     snapshot_compact(spark, table, target_mb=1)
     snapshot_restore(spark, table, 3)
-    for v in _list_manifests(spark, table):
+    for v in list_versions(table):
         assert snapshot_agg(
             spark, table, [("count", "*")], version=v
         )[0][0] == read_snapshot(spark, table, version=v).count(), v
     # the delta doc of the append carries counts ONLY for its new files
-    doc2 = _read_doc(spark, table, 2)
+    doc2 = read_doc(table, 2)
     assert set(doc2["rows_put"]) == set(doc2["files_add"])
     # a pure-DV commit adds no files, so no counts either
-    doc3 = _read_doc(spark, table, 3)
+    doc3 = read_doc(table, 3)
     assert "rows_put" not in doc3 and "files_add" not in doc3
     # snapshot_files surfaces the recorded per-file counts
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
@@ -779,7 +771,7 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
         _df(spark, [(i, i % 2, f"a{i}") for i in range(6)]),
         table, partition_cols=["month"],
     )
-    man = _load_manifest(spark, table, 1)
+    man = load_manifest(table, 1)
     legacy = {
         "version": 1, "parent": None, "op": "overwrite",
         "committed_at_ms": man["committed_at_ms"],
@@ -791,7 +783,7 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
     ):
         os.remove(blob)
     _hand_write(table, 1, legacy)
-    assert "rows" not in _load_manifest(spark, table, 1)
+    assert "rows" not in load_manifest(table, 1)
     assert snapshot_agg(
         spark, table, [("count", "*")]
     )[0][0] == 6  # footer self-heal
@@ -801,7 +793,7 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
         _df(spark, [(50, 0, "x")]), table, mode="append",
         partition_cols=["month"],
     )
-    doc2 = _read_doc(spark, table, 2)
+    doc2 = read_doc(table, 2)
     assert set(doc2["rows_put"]) == set(doc2["files_add"])
     assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 7
     # fail-loud: a referenced file with neither a recorded count nor a
@@ -809,9 +801,7 @@ def test_snapshot_count_self_heals_legacy_and_fails_loud(
     legacy_bad = dict(legacy)
     legacy_bad["files"] = legacy["files"] + ["data/nope/x.parquet"]
     _hand_write(table, 1, legacy_bad)
-    import nyc_taxi_data_warehouse_spark.warehouse.snapshots as sn
-
-    sn._STATE_CACHE._d.clear()
+    ml._STATE_CACHE._d.clear()
     with pytest.raises(FileNotFoundError):
         snapshot_agg(spark, table, [("count", "*")], version=1)
 
@@ -918,11 +908,11 @@ def test_reconstruction_matches_shadow_ledger_under_any_history(
         elif op == "vacuum":
             sn.vacuum_snapshots(spark, table, keep_last=arg)
     # cold cache: reconstruction from DISK alone, every retained version
-    sn._STATE_CACHE.__setstate__({"maxsize": 256})
-    retained = sn._list_manifests(spark, table)
+    ml._STATE_CACHE.__setstate__({"maxsize": 256})
+    retained = ml.list_versions(table)
     assert parent in retained
     for v in retained:
-        man = sn._load_manifest(spark, table, v)
+        man = ml.load_manifest(table, v)
         want = shadow[v]
         assert man["files"] == want["files"], (v, "files")
         assert sorted(man.get("dv_files") or []) == want["dvs"], (v, "dvs")
@@ -973,24 +963,22 @@ def test_cold_walk_caches_only_ckpt_base_and_final(
     NOT one large state per intermediate fold (round-9 scale fix) —
     and intermediate versions must still reconstruct correctly (from
     the cached base, cost bounded by the checkpoint cadence)."""
-    from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
-
     snapshot_write(_df(spark, [(1, 0, "a")]), table)
     for k in range(6):  # ckpt at v1, v4; deltas v2,v3,v5,v6,v7
         snapshot_write(
             _df(spark, [(10 + k, 0, f"b{k}")]), table, mode="append"
         )
-    versions = _list_manifests(spark, table)
+    versions = list_versions(table)
     head = versions[-1]
     # ground truth per version, captured through the normal cache
     expect = {
-        v: len(_load_manifest(spark, table, v)["files"]) for v in versions
+        v: len(load_manifest(table, v)["files"]) for v in versions
     }
     fresh = ml.StateCache(maxsize=256)
-    orig = sn._STATE_CACHE
-    sn._STATE_CACHE = fresh
+    orig = ml._STATE_CACHE
+    ml._STATE_CACHE = fresh
     try:
-        man = _load_manifest(spark, table, head)
+        man = load_manifest(table, head)
         assert len(man["files"]) == expect[head]
         n_after_cold = len(fresh._d)
         # ≤ 2 inserts (ckpt base + final), never one per delta
@@ -998,13 +986,13 @@ def test_cold_walk_caches_only_ckpt_base_and_final(
         # ascending walk stays O(1) folds per version: every version
         # reconstructs and lands in the cache as it goes
         for v in versions:
-            got = _load_manifest(spark, table, v)
+            got = load_manifest(table, v)
             assert len(got["files"]) == expect[v]
         assert _bag(read_snapshot(spark, table)) == sorted(
             [(1, 0, "a")] + [(10 + k, 0, f"b{k}") for k in range(6)]
         )
     finally:
-        sn._STATE_CACHE = orig
+        ml._STATE_CACHE = orig
 
 
 def test_rescue_base_caches_under_rescued_commit(spark, table, ckpt3):
@@ -1012,33 +1000,31 @@ def test_rescue_base_caches_under_rescued_commit(spark, table, ckpt3):
     under the RESCUED commit's id (it IS that commit's state), and the
     parentless-root synthetic empty state never caches under a real
     commit id."""
-    from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
-
     snapshot_write(_df(spark, [(1, 0, "a")]), table)
     for k in range(5):
         snapshot_write(
             _df(spark, [(10 + k, 0, f"b{k}")]), table, mode="append"
         )
     vacuum_snapshots(spark, table, keep_last=2)
-    keep = _list_manifests(spark, table)
+    keep = list_versions(table)
     expect = {
-        v: len(_load_manifest(spark, table, v)["files"]) for v in keep
+        v: len(load_manifest(table, v)["files"]) for v in keep
     }
     fresh = ml.StateCache(maxsize=256)
-    orig = sn._STATE_CACHE
-    sn._STATE_CACHE = fresh
+    orig = ml._STATE_CACHE
+    ml._STATE_CACHE = fresh
     try:
         for v in keep:
-            man = _load_manifest(spark, table, v)
+            man = load_manifest(table, v)
             assert len(man["files"]) == expect[v]
         # every cached state matches its commit exactly (no synthetic
         # empties under real ids, no off-by-one-fold states)
         for key, st in list(fresh._d.items()):
             vs = [
                 v for v in keep
-                if _read_doc(spark, table, v)["manifest_id"] == key
+                if read_doc(table, v)["manifest_id"] == key
             ]
             if vs:
                 assert len(st["files"]) == expect[vs[0]], (key, vs)
     finally:
-        sn._STATE_CACHE = orig
+        ml._STATE_CACHE = orig

@@ -28,8 +28,6 @@ import pytest
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     IS_NOT_NULL,
     IS_NULL,
-    _list_manifests,
-    _load_manifest,
     _plan,
     read_snapshot,
     snapshot_add_column,
@@ -38,6 +36,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_register,
     snapshot_update,
     snapshot_write,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -59,7 +61,7 @@ def _mk(spark, path):
 
 
 def _head_man(spark, path):
-    return _load_manifest(spark, path, _list_manifests(spark, path)[-1])
+    return load_manifest(path, list_versions(path)[-1])
 
 
 def test_planner_sets(spark, tmp_path):

@@ -17,8 +17,6 @@ from __future__ import annotations
 import pytest
 
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    _list_manifests,
-    _load_manifest,
     read_snapshot,
     Range,
     snapshot_add_column,
@@ -33,6 +31,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_set_layout,
     snapshot_update,
     snapshot_write,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
 )
 
 
@@ -68,14 +70,14 @@ def _mixed(spark, tmp_path, name="t"):
 def test_set_layout_is_metadata_only_and_versioned(spark, tmp_path):
     t = str(tmp_path / "meta")
     snapshot_write(_df(spark, ROWS_A), t, partition_cols=["month"])
-    man0 = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man0 = load_manifest(t, list_versions(t)[-1])
     v = snapshot_set_layout(spark, t, None)
-    man1 = _load_manifest(spark, t, v)
+    man1 = load_manifest(t, v)
     assert man1["files"] == man0["files"]  # zero data movement
     assert man1.get("partition_cols") is None
     assert man1["op"] == "set_layout"
     # time travel below the evolution sees the old layout
-    assert _load_manifest(spark, t, man0["version"]).get(
+    assert load_manifest(t, man0["version"]).get(
         "partition_cols"
     ) == ["month"]
     # history annotates the transition
@@ -141,7 +143,7 @@ def test_directory_proof_surfaces_refuse_or_fall_back(spark, tmp_path):
     # the DELETE front door steps aside to the data path — and is exact
     v, n = snapshot_delete(spark, t, {"month": [0]})
     assert n == 4  # includes the layout-B row id=5
-    man = _load_manifest(spark, t, v)
+    man = load_manifest(t, v)
     assert man["op"] != "drop_partitions"
     assert _bag(read_snapshot(spark, t)) == sorted(
         r for r in ROWS_A + ROWS_B + ROWS_C if r[1] != 0
@@ -245,13 +247,13 @@ def test_sql_and_cli_surfaces(spark, tmp_path, capsys):
     snapshot_write(_df(spark, ROWS_A), t, partition_cols=["month"])
     snapshot_register(spark, t, "sqlevo")
     snapshot_sql(spark, "ALTER TABLE sqlevo SET PARTITIONING ()")
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     assert man.get("partition_cols") is None
     snapshot_sql(spark, "ALTER TABLE sqlevo ADD PARTITION FIELD month")
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     assert man.get("partition_cols") == ["month"]
     snapshot_sql(spark, "ALTER TABLE sqlevo DROP PARTITION FIELD month")
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     assert man.get("partition_cols") is None
 
     main(
@@ -263,7 +265,7 @@ def test_sql_and_cli_surfaces(spark, tmp_path, capsys):
     )
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out["layout"] == ["month"]
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     assert man.get("partition_cols") == ["month"]
 
 
@@ -294,8 +296,8 @@ def test_feed_batched_readd_of_unmigrated_file(spark, tmp_path):
     # as the target, no dv/eq/defaults) — exactly the shape the
     # batched fast path accepts
     v_back = snapshot_restore(spark, t, v_a)
-    man_back = _load_manifest(spark, t, v_back)
-    man_mix = _load_manifest(spark, t, v_mix)
+    man_back = load_manifest(t, v_back)
+    man_mix = load_manifest(t, v_mix)
     assert set(man_back["files"]) < set(man_mix["files"])
     snapshot_restore(spark, t, v_mix)
     ch = snapshot_changes(spark, t, from_version=v_back).collect()

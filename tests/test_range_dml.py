@@ -27,14 +27,16 @@ import pytest
 
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     Range,
-    _list_manifests,
-    _load_manifest,
     read_snapshot,
     snapshot_delete,
     snapshot_register,
     snapshot_update,
     snapshot_versions,
     snapshot_write,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.sqlfront import (
     SqlFrontError,
@@ -64,7 +66,7 @@ def _mk_ts_table(spark, path, n_files=3, rows_per=4):
 
 
 def _head_man(spark, path):
-    return _load_manifest(spark, path, _list_manifests(spark, path)[-1])
+    return load_manifest(path, list_versions(path)[-1])
 
 
 # ------------------------------------------------------ core semantics

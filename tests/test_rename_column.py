@@ -27,8 +27,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.eqdeletes import (
     snapshot_delete_keys,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    _list_manifests,
-    _load_manifest,
     read_snapshot,
     Range,
     snapshot_add_column,
@@ -44,6 +42,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_update,
     snapshot_write,
 )
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
+)
 
 
 def _bag(df, *cols):
@@ -51,7 +53,7 @@ def _bag(df, *cols):
 
 
 def _man(spark, path):
-    return _load_manifest(spark, path, _list_manifests(spark, path)[-1])
+    return load_manifest(path, list_versions(path)[-1])
 
 
 def test_rename_roundtrip_travel_append_and_frozen_physical(
@@ -65,8 +67,8 @@ def test_rename_roundtrip_travel_append_and_frozen_physical(
     v2 = snapshot_rename_column(spark, t, "amt", "amount")
 
     # the rename moved no data and no files
-    assert _load_manifest(spark, t, v2)["files"] == _load_manifest(
-        spark, t, v1
+    assert load_manifest(t, v2)["files"] == load_manifest(
+        t, v1
     )["files"]
     assert _man(spark, t)["colmap"] == {"amount": "amt"}
 
@@ -84,8 +86,8 @@ def test_rename_roundtrip_travel_append_and_frozen_physical(
     )
     v3 = snapshot_write(df2, t, mode="append")
     new_files = sorted(
-        set(_load_manifest(spark, t, v3)["files"])
-        - set(_load_manifest(spark, t, v2)["files"])
+        set(load_manifest(t, v3)["files"])
+        - set(load_manifest(t, v2)["files"])
     )
     assert len(new_files) >= 1
     for f in new_files:
@@ -143,7 +145,7 @@ def test_rename_refusals(spark, tmp_path):
         snapshot_rename_column(spark, t, "id", "ident")
     # a constraint on an unrelated column does not block
     v = snapshot_rename_column(spark, t, "v", "val")
-    assert v == _list_manifests(spark, t)[-1]
+    assert v == list_versions(t)[-1]
 
     # add_column may not reuse a renamed column's physical slot
     with pytest.raises(ValueError, match="on-disk"):
@@ -330,7 +332,7 @@ def test_branch_restore_and_compact_carry_the_map(spark, tmp_path):
         mode="append",
     )
     v = snapshot_compact(spark, t, target_mb=1)
-    man = _load_manifest(spark, t, v)
+    man = load_manifest(t, v)
     assert man["colmap"] == {"total": "amt"}
     for f in man["files"]:
         assert "amt" in pq.read_schema(f"{t}/{f}").names
@@ -424,11 +426,11 @@ def test_commit_pairs_schema_with_captured_colmap_under_rename_race(
     real = E._epoch_already_applied
     fired = {"n": 0}
 
-    def racing(spark_, path_, versions_, extra_, checked_):
+    def racing(path_, versions_, extra_, checked_):
         if fired["n"] == 0:
             fired["n"] += 1
             snapshot_rename_column(spark, t, "val", "z")
-        return real(spark_, path_, versions_, extra_, checked_)
+        return real(path_, versions_, extra_, checked_)
 
     monkeypatch.setattr(E, "_epoch_already_applied", racing)
     v, n = snapshot_append_upsert(

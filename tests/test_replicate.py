@@ -18,7 +18,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.replicate import (
     replicate_keyed,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    _list_manifests,
     read_snapshot,
     snapshot_compact,
     snapshot_delete,
@@ -28,6 +27,7 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_versions,
     snapshot_write,
 )
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import list_versions
 
 from pyspark.sql import functions as F
 
@@ -406,7 +406,7 @@ def test_replica_follows_source_restore_rollback(spark, tmp_path):
     src = str(tmp_path / "rsrc")
     dst = str(tmp_path / "rdst")
     snapshot_write(_df(spark, [(1, 0, "a"), (2, 1, "b")]), src)
-    v_base = _list_manifests(spark, src)[-1]
+    v_base = list_versions(src)[-1]
     snapshot_append_upsert(
         spark, src, _df(spark, [(2, 1, "B2"), (3, 0, "c")]), ["id"]
     )
@@ -420,7 +420,7 @@ def test_replica_follows_source_restore_rollback(spark, tmp_path):
     # cursor landed on the restore commit's version
     assert int(
         snapshot_properties(spark, dst)["replica.cursor"]
-    ) == _list_manifests(spark, src)[-1]
+    ) == list_versions(src)[-1]
     assert rep["deleted_keys"] >= 1  # id=3 left with the rollback
 
 
@@ -474,4 +474,4 @@ def test_replica_refresh_races_concurrent_source_upserts(spark, tmp_path):
     _assert_mirrors(spark, src, dst)
     assert int(
         snapshot_properties(spark, dst)["replica.cursor"]
-    ) == _list_manifests(spark, src)[-1]
+    ) == list_versions(src)[-1]

@@ -569,10 +569,10 @@ def test_stream_verify_passes_compaction_fails_deletes(spark, table, tmp_path):
     footer-equal row totals) streams zero rows and the feed continues
     across it; a delete commit still fails loudly; a commit labeled
     'compact' that actually changed rows fails the footer check."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _commit,
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import _commit
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(
@@ -600,8 +600,8 @@ def test_stream_verify_passes_compaction_fails_deletes(spark, table, tmp_path):
         _drain(spark, table, str(tmp_path / "cv"), "feed_v4",
                on_non_append="verify")
     # forge a 'compact' that drops a file's rows: footer check trips
-    latest = _list_manifests(spark, table)[-1]
-    man = _load_manifest(spark, table, latest)
+    latest = list_versions(table)[-1]
+    man = load_manifest(table, latest)
     _commit(
         spark, table, man["files"][:-1], read_snapshot(spark, table).schema,
         "compact", latest, partition_cols=["month"],
@@ -763,8 +763,8 @@ def test_stream_verify_survives_lost_superseded_files(spark, table, tmp_path):
     import os
     import shutil
 
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     snapshot_write(
@@ -772,7 +772,7 @@ def test_stream_verify_survives_lost_superseded_files(spark, table, tmp_path):
         table,
         partition_cols=["month"],
     )
-    v1_files = _load_manifest(spark, table, 1)["files"]
+    v1_files = load_manifest(table, 1)["files"]
     got = _drain(spark, table, str(tmp_path / "vv"), "feed_vv1",
                  on_non_append="verify")
     assert got.count() == 6
@@ -905,11 +905,11 @@ def test_partition_scoped_feed(spark, table, tmp_path):
     # row-neutral WITHIN the scope measured live-for-live. Start at
     # the current head — replaying the in-scope DV delete above would
     # (correctly) refuse under verify too.
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
     )
 
-    head = _list_manifests(spark, table)[-1]
+    head = list_versions(table)[-1]
     ck2 = str(tmp_path / "scoped_v")
     snapshot_compact(spark, table, partition_cols=["month"])
     assert _drain(

@@ -110,26 +110,28 @@ def test_changes_bridge_any_history(spark, tmp_path_factory, ops):
 
     def cur_pc():
         from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-            _list_manifests,
-            _load_manifest,
             _manifest_partition_cols,
         )
+        from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+            list_versions,
+            load_manifest,
+        )
 
-        man = _load_manifest(
-            spark, table, _list_manifests(spark, table)[-1]
+        man = load_manifest(
+            table, list_versions(table)[-1]
         )
         return _manifest_partition_cols(man)
 
     next_id = [0]
 
     def cur_vname():
-        from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-            _list_manifests,
-            _load_manifest,
+        from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+            list_versions,
+            load_manifest,
         )
 
-        man = _load_manifest(
-            spark, table, _list_manifests(spark, table)[-1]
+        man = load_manifest(
+            table, list_versions(table)[-1]
         )
         return man["schema"]["fields"][2]["name"]
 
@@ -283,20 +285,22 @@ def test_changes_bridge_any_history(spark, tmp_path_factory, ops):
             )
         elif kind == "restore":
             from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-                _list_manifests,
                 snapshot_restore,
             )
+            from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+                list_versions,
+            )
 
-            vs = _list_manifests(spark, table)
+            vs = list_versions(table)
             snapshot_restore(spark, table, vs[args[0] % len(vs)])
         else:
             snapshot_compact(spark, table, partition_cols=cur_pc())
 
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
     )
 
-    versions = _list_manifests(spark, table)
+    versions = list_versions(table)
     latest = versions[-1]
     # positional tuples: the value column's LOGICAL name may differ per
     # version (rename ops), but its schema position never moves

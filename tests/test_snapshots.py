@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import load_manifest
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     SnapshotConflict,
     read_snapshot,
@@ -132,6 +133,31 @@ def test_conflict_detected_not_silent(spark, table, commit_mode, monkeypatch):
     # writer A's manifest untouched by the failed claim
     with open(f"{table}/_versions/00000002.json") as f:
         assert '"op": "overwrite"' in f.read()
+
+
+def test_exclusive_create_has_one_winner_under_a_race(spark, tmp_path):
+    """Eight writers racing to claim one name on the local filesystem:
+    exactly one wins, and the file holds the winner's body."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from nyc_taxi_data_warehouse_spark.warehouse import snapshots as S
+
+    root = str(tmp_path)
+    fs, jvm = S._fs(spark, root)
+    for trial in range(20):
+        jp = S._jp(jvm, root, f"{trial:08d}.json")
+        start = threading.Barrier(8)
+
+        def claim(i):
+            start.wait(timeout=60)
+            return S._write_bytes_exclusive(fs, jp, f"w{i}".encode())
+
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            won = [i for i, ok in enumerate(ex.map(claim, range(8))) if ok]
+        assert len(won) == 1, (trial, won)
+        with open(os.path.join(root, f"{trial:08d}.json")) as f:
+            assert f.read() == f"w{won[0]}"
 
 
 def test_builder_commit_mode_full_lifecycle(spark, table, monkeypatch):
@@ -477,15 +503,15 @@ def test_properties_follow_branches_and_cli(spark, table, capsys):
 
     # declared retention: vacuum's default keep_last comes from the
     # table's own property (an explicit argument still wins)
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
     )
 
     snapshot_set_properties(spark, table, {"retention.keep_last": "1"})
-    assert len(_list_manifests(spark, table)) > 1
+    assert len(list_versions(table)) > 1
     out = vacuum_snapshots(spark, table)  # no keep_last passed
     assert out["versions_dropped"] > 0
-    assert len(_list_manifests(spark, table)) == 1
+    assert len(list_versions(table)) == 1
     with pytest.raises(ValueError, match="not an\n?.*int|not an int"):
         snapshot_set_properties(
             spark, table, {"retention.keep_last": "soon"}
@@ -613,11 +639,11 @@ def test_drop_partitions_metadata_only(spark, table):
     assert snapshot_agg(spark, table, [("count", "*")])[0][0] == 7
     # manifest bookkeeping: carried files only, stats pruned, dv
     # targets shrunk to the surviving partition's file
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["op"] == "drop_partitions"
     assert all("month=0" not in f for f in man["files"])
     assert all("month=0" not in f for f in (man.get("stats") or {}))
@@ -635,7 +661,7 @@ def test_drop_partitions_metadata_only(spark, table):
     # dropping the partition holding the LAST live tombstone folds the
     # sidecar set away entirely — clean scans come back
     v2, n2 = snapshot_drop_partitions(spark, table, {"month": 1})
-    man2 = _load_manifest(spark, table, v2)
+    man2 = load_manifest(table, v2)
     assert n2 == 3
     assert not man2.get("dv_files") and not man2.get("dv_targets")
     # no-match is a no-op (no new version); typo'd column refuses
@@ -651,8 +677,10 @@ def test_snapshot_delete_auto_dispatches_partition_drop(spark, table):
     rewrite, no tombstones — while explicit modes keep their physical
     strategy."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     for i in range(2):
@@ -664,13 +692,13 @@ def test_snapshot_delete_auto_dispatches_partition_drop(spark, table):
     v, n = snapshot_delete(spark, table, {"month": [0]}, mode="auto")
     assert n == 2
     assert _data_files(table) == pre_files
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["op"] == "drop_partitions"
     assert {r.id for r in read_snapshot(spark, table).collect()} == {2, 3}
     # explicit rewrite mode still honors the requested strategy
     v2, n2 = snapshot_delete(spark, table, {"month": [1]}, mode="rewrite")
     assert n2 == 2
-    assert _load_manifest(spark, table, v2)["op"] == "delete_rows"
+    assert load_manifest(table, v2)["op"] == "delete_rows"
     assert read_snapshot(spark, table).count() == 0
 
 
@@ -682,8 +710,10 @@ def test_snapshot_delete_auto_null_and_type_form_semantics(spark, table):
     dir 'month=5') falls through to the Spark-typed data path instead
     of silently no-opping."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     rows = spark.createDataFrame(
@@ -698,13 +728,13 @@ def test_snapshot_delete_auto_null_and_type_form_semantics(spark, table):
     # float form against int month: data path, row actually deleted
     v2, n2 = snapshot_delete(spark, table, {"month": [1.0]}, mode="auto")
     assert n2 == 1
-    assert _load_manifest(spark, table, v2)["op"] != "drop_partitions"
+    assert load_manifest(table, v2)["op"] != "drop_partitions"
     got = {(r.id, r.month) for r in read_snapshot(spark, table).collect()}
     assert got == {(1, 0), (3, None)}
     # mixed None + int: the int partition drops, None selects nothing
     v3, n3 = snapshot_delete(spark, table, {"month": [None, 0]}, mode="auto")
     assert n3 == 1
-    assert _load_manifest(spark, table, v3)["op"] == "drop_partitions"
+    assert load_manifest(table, v3)["op"] == "drop_partitions"
     assert [(r.id, r.month) for r in read_snapshot(spark, table).collect()] \
         == [(3, None)]
 
@@ -717,9 +747,11 @@ def test_snapshot_delete_where_conjunctive(spark, table, capsys):
     anywhere makes the conjunction match nothing, and both physical
     strategies agree with the oracle row set."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     rows = [
@@ -741,7 +773,7 @@ def test_snapshot_delete_where_conjunctive(spark, table, capsys):
     # all-partition-column predicate → metadata-only drop
     v3, n3 = snapshot_delete(spark, table, {"month": [1]})
     assert n3 == 1
-    assert _load_manifest(spark, table, v3)["op"] == "drop_partitions"
+    assert load_manifest(table, v3)["op"] == "drop_partitions"
     # DV mode agrees with the same predicate shape
     v4, n4 = snapshot_delete(spark, table, {"id": [2], "v": ["d"]}, mode="dv")
     assert n4 == 1
@@ -771,9 +803,11 @@ def test_delete_where_scalar_values_and_partition_pruning(spark, table):
     the directory values, so files there are neither read nor
     rewritten even when the data column's stats admit the key."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     # same id range in both months: without partition pruning the
@@ -786,13 +820,13 @@ def test_delete_where_scalar_values_and_partition_pruning(spark, table):
             table, mode="append", partition_cols=["month"], stats_cols=["id"],
         )
     man0_files = set(
-        _load_manifest(spark, table, 2)["files"]
+        load_manifest(table, 2)["files"]
     )
     month0 = {f for f in man0_files if "month=0" in f}
     # scalars, not lists — and month=1 only
     v, n = snapshot_delete(spark, table, {"month": 1, "id": 7}, mode="rewrite")
     assert n == 1
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     # month=0's file carried untouched; only month=1 was rewritten
     assert month0 < set(man["files"])
     assert {(r.id, r.month) for r in read_snapshot(spark, table).collect()} \
@@ -859,9 +893,11 @@ def test_update_auto_discounts_full_match_files(spark, table, monkeypatch):
     top), so a clustered-key mass update picks the rewrite."""
     from nyc_taxi_data_warehouse_spark.warehouse import snapshots as sn
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_update,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     snapshot_write(
@@ -873,7 +909,7 @@ def test_update_auto_discounts_full_match_files(spark, table, monkeypatch):
     monkeypatch.setattr(sn, "DV_THRESHOLD_MB", 0)
     v, n = snapshot_update(spark, table, {"id": [7]}, {"v": "X"}, mode="auto")
     assert n == 50
-    assert _load_manifest(spark, table, v)["op"] == "update_rows"
+    assert load_manifest(table, v)["op"] == "update_rows"
 
 
 def test_drop_partitions_retries_reserialize_cleanly(spark, table, monkeypatch):
@@ -912,9 +948,11 @@ def test_delete_where_full_drop_requires_every_column(spark, table):
     must be rewritten, not dropped — dropping it would erase rows the
     second predicate excludes."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     # one file: id constant (full proof holds), v mixed (proof fails)
@@ -936,7 +974,7 @@ def test_delete_where_full_drop_requires_every_column(spark, table):
         spark, table, {"id": [7], "v": ["x"]}, mode="rewrite",
     )
     assert n == 3  # both rows of file 2, one row of file 1
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["files_dropped_by_stats"] == 1
     assert _data_files(table) > pre  # file 1 was rewritten (survivor y)
     assert [(r.id, r.v) for r in read_snapshot(spark, table).collect()] \
@@ -1078,9 +1116,11 @@ def test_delete_full_match_files_drop_by_reference(spark, table):
     rewritten. A null row defeats the proof (NULL never matches IN,
     so the row must survive) and forces the rewrite path."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     # one append per key → single-valued files (min == max)
@@ -1098,7 +1138,7 @@ def test_delete_full_match_files_drop_by_reference(spark, table):
     v, n = snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")
     assert n == 4
     assert _data_files(table) == pre  # pure manifest edit: no rewrite
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["files_dropped_by_stats"] == 1
     assert sorted(r.id for r in read_snapshot(spark, table).collect()) == [
         1, 1, 1, 1, 5, 6
@@ -1107,7 +1147,7 @@ def test_delete_full_match_files_drop_by_reference(spark, table):
     v2, n2 = snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")
     assert n2 == 1
     assert _data_files(table) > pre  # a survivor file was written
-    assert "files_dropped_by_stats" not in _load_manifest(spark, table, v2)
+    assert "files_dropped_by_stats" not in load_manifest(table, v2)
     assert sorted(r.id for r in read_snapshot(spark, table).collect()) == [
         1, 1, 1, 1, 6
     ]
@@ -1122,9 +1162,11 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
     no sidecar at all, and a mixed boundary file still gets exactly
     its matching rows tombstoned."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     snapshot_write(
@@ -1138,7 +1180,7 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
     # clustered-key takedown: NO sidecar written, file dropped
     v, n = snapshot_delete(spark, table, {"id": [2]}, mode="dv")
     assert n == 4
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["files_dropped_by_stats"] == 1 and man["rows_dropped"] == 4
     assert man["dv_rows_added"] == 0 and not man.get("dv_files")
     assert sorted(r.id for r in read_snapshot(spark, table).collect()) == [
@@ -1151,7 +1193,7 @@ def test_dv_delete_full_match_files_drop_instead_of_tombstoning(
         table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
     v2, n2 = snapshot_delete(spark, table, {"id": [6]}, mode="dv")
-    man2 = _load_manifest(spark, table, v2)
+    man2 = load_manifest(table, v2)
     assert n2 == 3  # 2 dropped + 1 tombstoned
     assert man2["files_dropped_by_stats"] == 1
     assert man2["dv_rows_added"] == 1 and man2["dv_files"]
@@ -1163,9 +1205,11 @@ def test_delete_full_match_blocked_by_null_rows(spark, table):
     holds a NULL row must NOT be dropped whole: NULL IN (v) never
     matches, so the null row survives via the rewrite path."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     rows = spark.createDataFrame(
@@ -1176,12 +1220,12 @@ def test_delete_full_match_blocked_by_null_rows(spark, table):
         rows.coalesce(1),
         table, mode="append", partition_cols=["month"], stats_cols=["id"],
     )
-    man0 = _load_manifest(spark, table, 1)
+    man0 = load_manifest(table, 1)
     st = next(iter(man0["stats"].values()))["id"]
     assert st[0] == st[1] == 9 and st[2] == 1  # nulls recorded
     v, n = snapshot_delete(spark, table, {"id": [9]}, mode="rewrite")
     assert n == 2
-    assert "files_dropped_by_stats" not in _load_manifest(spark, table, v)
+    assert "files_dropped_by_stats" not in load_manifest(table, v)
     out = read_snapshot(spark, table).collect()
     assert [(r.id, r.v) for r in out] == [(None, "keep-me")]
 
@@ -1270,10 +1314,12 @@ def test_auto_compact_small_files_metadata_trigger(spark, tmp_path, table):
     cadence, and composes with streaming ingest (the canonical
     fragment generator) without breaking exactly-once."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         _maybe_auto_compact_small,
         snapshot_compact,
         stream_snapshot_append,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     for i in range(5):
@@ -1281,7 +1327,7 @@ def test_auto_compact_small_files_metadata_trigger(spark, tmp_path, table):
             _df(spark, [(i, 1, f"r{i}")]), table, mode="append",
             partition_cols=["month"],
         )
-    assert len(_load_manifest(spark, table, 5)["files"]) == 5
+    assert len(load_manifest(table, 5)["files"]) == 5
     # below trigger: no-op
     _maybe_auto_compact_small(spark, table, 100, trigger_files=6)
     assert snapshot_versions(spark, table)[-1]["version"] == 5
@@ -1289,7 +1335,7 @@ def test_auto_compact_small_files_metadata_trigger(spark, tmp_path, table):
     _maybe_auto_compact_small(spark, table, 100, trigger_files=4)
     hist = snapshot_versions(spark, table)
     assert hist[-1]["op"] == "compact" and hist[-1]["version"] == 6
-    man = _load_manifest(spark, table, 6)
+    man = load_manifest(table, 6)
     assert len(man["files"]) == 1
     assert {r.id for r in read_snapshot(spark, table).collect()} \
         == set(range(5))
@@ -1383,12 +1429,14 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
     The 100 TB claim under test: rewrite cost ∝ fragment bytes."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _file_sizes,
-        _load_manifest,
         _root,
         snapshot_agg,
         snapshot_compact,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     # one comfortably-large file per month + a stream of 1-row shards
@@ -1415,8 +1463,8 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
     # the second folds into the rewrite
     snapshot_delete(spark, table, {"id": [7]}, mode="dv")
     snapshot_delete(spark, table, {"id": [100_000]}, mode="dv")
-    man0 = _load_manifest(
-        spark, table, snapshot_versions(spark, table)[-1]["version"]
+    man0 = load_manifest(
+        table, snapshot_versions(spark, table)[-1]["version"]
     )
     sizes0 = _file_sizes(spark, _root(table), man0["files"])
     big_files = {f for f, s in sizes0.items() if s >= 20 * 1024}
@@ -1428,7 +1476,7 @@ def test_targeted_compact_bin_packs_only_fragments(spark, table):
     n_before = snapshot_agg(spark, table, [("count", "*")])[0][0]
 
     v = snapshot_compact(spark, table, min_file_mb=0.02)
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     # carried by reference: the big files' relpaths are UNCHANGED
     assert big_files < set(man["files"])
     assert not (frag_files & set(man["files"]))
@@ -1486,7 +1534,7 @@ def test_targeted_compact_converges_unpartitioned(spark, table, monkeypatch):
     )
     v = sn.snapshot_compact(spark, table, min_file_rows=25, target_mb=256)
     monkeypatch.setattr(sn, "_file_sizes", real_sizes)
-    man = sn._load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert len(man["files"]) == 2, man["files"]
     assert all(n >= 25 for n in man["rows"].values()), man["rows"]
     # fixpoint: nothing qualifies any more
@@ -1600,10 +1648,12 @@ def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         Range,
-        _load_manifest,
         snapshot_delete,
         snapshot_version_at,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     # 4 appends, each a disjoint id range -> 4+ files with tight stats;
@@ -1671,7 +1721,7 @@ def test_stats_pruned_read_skips_files_no_false_negatives(spark, table):
             F.col("id").between(120, 260)
         )
         assert sorted(got.collect()) == sorted(want.collect())
-        man = _load_manifest(spark, table, v)
+        man = load_manifest(table, v)
         overlap = {
             f for f in man["files"]
             if (scope is None or scope in f)
@@ -1697,16 +1747,18 @@ def test_stats_survive_append_and_missing_stats_kept(spark, table):
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         _commit,
-        _load_manifest,
         Range,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     snapshot_write(_df(spark, [(1, 1, "a")]), table, stats_cols=["id"])
     snapshot_write(_df(spark, [(999, 9, "z")]), table, mode="append")
-    man = _load_manifest(spark, table, 2)
+    man = load_manifest(table, 2)
     assert man["stats_cols"] == ["id"]
     assert set(man["stats"]) == set(man["files"])
-    first = set(_load_manifest(spark, table, 1)["files"])
+    first = set(load_manifest(table, 1)["files"])
     appended = sorted(set(man["files"]) - first)
     # the legacy shape: a manifest whose stats map lacks the new file
     _commit(
@@ -1718,7 +1770,7 @@ def test_stats_survive_append_and_missing_stats_kept(spark, table):
             }
         },
     )
-    man = _load_manifest(spark, table, 3)
+    man = load_manifest(table, 3)
     assert [f for f in man["files"] if f not in man["stats"]] == appended
     got = read_snapshot(spark, table, where={"id": Range(900, 1000)})
     assert [r.id for r in got.collect()] == [999]
@@ -1759,9 +1811,11 @@ def test_stats_pruning_timestamp_and_string_columns(spark, table):
 
 def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     for lo in (0, 100, 200):
@@ -1770,12 +1824,12 @@ def test_snapshot_delete_rows_rewrites_only_victim_files(spark, table):
             "id long, month int, v string",
         )
         snapshot_write(df, table, mode="append", stats_cols=["id"])
-    before = _load_manifest(spark, table, 3)
+    before = load_manifest(table, 3)
     v, n_deleted = snapshot_delete(
         spark, table, {"id": [110, 120, 130]}, mode="rewrite",
     )
     assert n_deleted == 3
-    after = _load_manifest(spark, table, v)
+    after = load_manifest(table, v)
     assert after["op"] == "delete_rows"
     # files outside the 100-149 range carried over BY REFERENCE
     untouched = [
@@ -1809,10 +1863,12 @@ def test_snapshot_delete_rows_no_match_is_noop_version(spark, table):
 
 def test_snapshot_delete_rows_stats_kept_for_carried_files(spark, table):
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         Range,
         snapshot_delete,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     for lo in (0, 100):
@@ -1824,7 +1880,7 @@ def test_snapshot_delete_rows_stats_kept_for_carried_files(spark, table):
             table, mode="append", stats_cols=["id"],
         )
     v, _ = snapshot_delete(spark, table, {"id": [5]}, mode="rewrite")
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     # every file still has stats (carried ones kept, rewritten ones
     # recomputed) so pruned reads keep planning on the new version
     assert set(man["files"]) == set(man["stats"].keys())
@@ -1881,16 +1937,18 @@ def test_delete_then_merge_keeps_no_stale_rows(spark, table):
     into any touched partition, so a later replace/merge would carry it
     and resurrect replaced keys as duplicates."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_delete,
         snapshot_merge,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     base = _df(spark, [(1, 1, "a"), (2, 1, "b"), (3, 2, "c"), (4, 2, "d")])
     snapshot_write(base, table, partition_cols=["month"])
     v, n = snapshot_delete(spark, table, {"id": [2]}, mode="rewrite")
     assert n == 1
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["partition_cols"] == ["month"]
     # every file in the new version still sits in a month=... directory
     assert all("month=" in f for f in man["files"])
@@ -1930,8 +1988,10 @@ def test_compact_preserves_partition_layout(spark, table):
     compaction never strips the partition directories carried-file
     classification depends on; a replace after a compact still works."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_compact,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     snapshot_write(
@@ -1939,7 +1999,7 @@ def test_compact_preserves_partition_layout(spark, table):
         partition_cols=["month"],
     )
     v = snapshot_compact(spark, table, target_mb=256)
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["partition_cols"] == ["month"]
     assert all("month=" in f for f in man["files"])
     v2 = snapshot_replace_partitions(
@@ -1989,9 +2049,11 @@ def test_update_rows_redacts_matching_only(spark, table):
     from pyspark.sql import functions as F
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_update,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     rows = [(1, 1, "alice"), (2, 1, "bob"), (None, 1, "ghost")]
@@ -2010,9 +2072,9 @@ def test_update_rows_redacts_matching_only(spark, table):
     old = {r["id"]: r["v"] for r in read_snapshot(spark, table, v2).collect()}
     assert old[2] == "bob"
     # the far file carried by reference (same path in both manifests)
-    man2 = _load_manifest(spark, table, v2)
-    man3 = _load_manifest(spark, table, ver)
-    far_files = set(man2["files"]) - set(_load_manifest(spark, table, v1)["files"])
+    man2 = load_manifest(table, v2)
+    man3 = load_manifest(table, ver)
+    far_files = set(man2["files"]) - set(load_manifest(table, v1)["files"])
     assert far_files <= set(man3["files"])
     # expression-valued update: pseudonymize instead of null
     ver2, n2 = snapshot_update(
@@ -2150,11 +2212,13 @@ def test_compact_preserves_stats_and_pruning(spark, table):
     returns exact results AND the new manifest carries stats for every
     new file."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
         Range,
         snapshot_compact,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     for lo in (0, 100, 200, 300):
@@ -2164,7 +2228,7 @@ def test_compact_preserves_stats_and_pruning(spark, table):
         )
         snapshot_write(df, table, mode="append", stats_cols=["id"])
     snapshot_compact(spark, table)
-    man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+    man = load_manifest(table, list_versions(table)[-1])
     assert man.get("stats_cols") == ["id"]
     assert set(man.get("stats", {})) == set(man["files"])  # every new file
     got = read_snapshot(spark, table, where={"id": Range(120, 130)})
@@ -2179,13 +2243,15 @@ def test_compact_cluster_by_tightens_pruning(spark, table):
     range read opens FEWER files than live. Feed classification stays
     row-neutral (clustered compact == empty change set)."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
         _stat_norm,
         Range,
         snapshot_changes,
         snapshot_compact,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     # 4 commits, hash-ordered so EVERY file spans ~the full id range
@@ -2201,7 +2267,7 @@ def test_compact_cluster_by_tightens_pruning(spark, table):
         snapshot_write(df, table, mode="append", stats_cols=["id"])
 
     def files_kept(lo, hi):
-        man = _load_manifest(spark, table, _list_manifests(spark, table)[-1])
+        man = load_manifest(table, list_versions(table)[-1])
         slo, shi = _stat_norm(lo, -1), _stat_norm(hi, 1)
         kept = 0
         for f in man["files"]:
@@ -2212,7 +2278,7 @@ def test_compact_cluster_by_tightens_pruning(spark, table):
 
     kept_before, total_before = files_kept(10, 20)
     assert kept_before == total_before  # interleaved: nothing prunable
-    pre = _list_manifests(spark, table)[-1]
+    pre = list_versions(table)[-1]
     snapshot_compact(spark, table, cluster_by=["id"], n_files=8)
     # row-neutral: the feed sees an empty change set across the compact
     assert snapshot_changes(spark, table, pre).count() == 0
@@ -2295,7 +2361,7 @@ def _race_eight_appenders(spark, table) -> dict:
     assert sorted(versions) == list(range(2, 10))
     got = sorted(r.id for r in read_snapshot(spark, table).collect())
     assert got == [0] + [100 + i for i in range(8)]
-    return _manifest_at(spark, table)[1]
+    return _manifest_at(table)[1]
 
 
 def test_commit_retries_are_metadata_only(spark, table):
@@ -2337,26 +2403,26 @@ def test_commit_retries_are_metadata_only_on_a_stats_table(
     assert set(head["stats"]) == set(head["files"])
     assert sorted(scanned) == sorted(set(scanned))  # no file twice
     assert set(scanned) == set(head["files"]) - set(
-        snapshots._load_manifest(spark, table, 1)["files"]
+        load_manifest(table, 1)["files"]
     )
 
 
 def _stale_once(monkeypatch, module):
-    """Patch ``module._list_manifests`` to serve a one-version-stale
+    """Patch ``module.list_versions`` to serve a one-version-stale
     view on the FIRST call only — the deterministic image of 'another
     writer committed between my head derivation and my manifest
     claim'."""
-    real = module._list_manifests
+    real = module.list_versions
     calls = {"n": 0}
 
-    def flaky(sp, p):
-        vs = real(sp, p)
+    def flaky(p):
+        vs = real(p)
         calls["n"] += 1
         if calls["n"] == 1 and len(vs) > 1:
             return vs[:-1]
         return vs
 
-    monkeypatch.setattr(module, "_list_manifests", flaky)
+    monkeypatch.setattr(module, "list_versions", flaky)
 
 
 def test_overwrite_retry_wins_after_stale_head(spark, table, monkeypatch):
@@ -2493,8 +2559,8 @@ def test_timestamp_time_travel_legacy_manifest_fallback(spark, table):
     snapshot_write(_df(spark, [(1, 1, "a")]), table)
     # strip the field, rewriting the manifest in place (legacy image)
     fs, jvm = S._fs(spark, table)
-    jp = S._jp(jvm, table, S._VDIR, "00000001.json")
-    man = S._load_manifest(spark, table, 1)
+    jp = S._jp(jvm, table, S.VDIR, "00000001.json")
+    man = load_manifest(table, 1)
     man.pop("committed_at_ms")
     fs.delete(jp, False)
     out = fs.create(jp, True)
@@ -2566,7 +2632,7 @@ def test_stats_and_bloom_fail_loud_on_encoding_drift(spark, table, tmp_path, mon
     )
 
     snapshot_write(_df(spark, [(1, 1, "a"), (2, 2, "b")]), table)
-    man_files = snap._load_manifest(spark, table, 1)["files"]
+    man_files = load_manifest(table, 1)["files"]
     monkeypatch.setattr(
         snap, "_uri_encode_relpath", lambda rel: "DRIFTED/" + rel
     )
@@ -2586,12 +2652,14 @@ def test_schema_ddl_add_and_drop_column(spark, table):
     import glob
 
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _load_manifest,
         snapshot_add_column,
         snapshot_compact,
         snapshot_drop_column,
         snapshot_update,
         snapshot_write,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        load_manifest,
     )
 
     snapshot_write(
@@ -2623,7 +2691,7 @@ def test_schema_ddl_add_and_drop_column(spark, table):
         snapshot_drop_column(spark, table, "nope")
     # stats for a dropped stats-col are stripped; other cols' survive
     v3 = snapshot_drop_column(spark, table, "id")
-    man3 = _load_manifest(spark, table, v3)
+    man3 = load_manifest(table, v3)
     assert man3.get("stats_cols") == []
     assert all("id" not in st for st in man3.get("stats", {}).values())
     got = read_snapshot(spark, table)

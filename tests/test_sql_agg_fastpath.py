@@ -291,13 +291,13 @@ def test_agg_fastpath_loads_manifest_once(spark, tmp_path, monkeypatch):
     _mk(spark, t, n_files=1)
     snapshot_register(spark, t, "ag_once")
     loads = []
-    orig = S._load_manifest
+    orig = S.load_manifest
 
-    def rec(spark_, path_, version_):
+    def rec(path_, version_):
         loads.append((path_, version_))
-        return orig(spark_, path_, version_)
+        return orig(path_, version_)
 
-    monkeypatch.setattr(S, "_load_manifest", rec)
+    monkeypatch.setattr(S, "load_manifest", rec)
     r = snapshot_sql(
         spark, "SELECT SUM(id), MIN(ts) FROM ag_once"
     ).collect()[0]

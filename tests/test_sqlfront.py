@@ -105,12 +105,12 @@ def test_update_mode_dv_writes_tombstones(spark, tmp_path):
     snapshot_sql(
         spark, "UPDATE sqlf_upddv SET v = 'X' WHERE id = 3", mode="dv"
     )
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     assert man.get("dv_files")  # the DV strategy was honored
     assert _bag(read_snapshot(spark, t), "id", "v") == [
         (1, "a"), (2, "b"), (3, "X"), (4, "d"), (5, "e"),
@@ -588,11 +588,11 @@ def test_ctas_name_collision_and_catalog_passthrough(spark, tmp_path):
         )
     # Spark itself may mkdir the location before failing resolution;
     # what matters is OUR engine wrote no snapshot table there
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
     )
 
-    assert _list_manifests(spark, f"{t2}/x") == []
+    assert list_versions(f"{t2}/x") == []
 
 
 def test_time_travel_composes_inside_insert_source(spark, tmp_path):

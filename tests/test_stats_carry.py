@@ -90,7 +90,7 @@ WRITERS = {
 @pytest.mark.parametrize("writer", sorted(WRITERS))
 def test_every_writer_keeps_stats(spark, stats_table, tmp_path, writer):
     WRITERS[writer](spark, stats_table, tmp_path)
-    _, man = _manifest_at(spark, stats_table)
+    _, man = _manifest_at(stats_table)
     assert man["stats_cols"] == ["id", "v"]
     assert set(man["stats"]) == set(man["files"])
     full = read_snapshot(spark, stats_table)
@@ -103,7 +103,7 @@ def test_every_writer_keeps_stats(spark, stats_table, tmp_path, writer):
 
 def test_drop_column_takes_its_stats_with_it(spark, stats_table):
     snapshot_drop_column(spark, stats_table, "v")
-    _, man = _manifest_at(spark, stats_table)
+    _, man = _manifest_at(stats_table)
     assert man["stats_cols"] == ["id"]
     assert set(man["stats"]) == set(man["files"])
     assert all(set(st) == {"id"} for st in man["stats"].values())

@@ -20,3 +20,23 @@ def test_word_shingles_expr_null_and_empty_inputs(spark, k):
     full = {2: ["a b", "b c", "c d"], 3: ["a b c", "b c d"]}[k]
     got = [r["x"] for r in d.select(T.word_shingles("_tk", k).alias("x")).collect()]
     assert got == [None, [], [""], ["a"], full]
+
+
+@pytest.mark.parametrize("name", ["odd`name", "a.b"])
+def test_minhash_signatures_column_name_follows_fragment_rule(spark, name):
+    """An operator that passes one column name both to a Column API and
+    to a builder resolves it by the builders' fragment rule: a name
+    with a backtick or a dot is one column, not a syntax error or a
+    struct path."""
+    from nyc_taxi_data_warehouse_spark.operators.dedup import minhash_signatures
+
+    rows = [(1, "the quick brown fox jumps"), (2, None), (3, "a b c d e f")]
+    plain = spark.createDataFrame(rows, "id int, text string")
+    odd = plain.withColumnRenamed("text", name)
+
+    def sigs(df, col):
+        return sorted(
+            tuple(r) for r in minhash_signatures(df, col, "id", 4, 2).collect()
+        )
+
+    assert sigs(odd, name) == sigs(plain, "text")

@@ -240,14 +240,14 @@ def test_sweep_orphans_reclaims_aged_marker_only_dir(spark, table):
 
 
 def test_compact_records_row_totals(spark, table):
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _list_manifests,
-        _load_manifest,
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
 
     snapshot_write(_sdf(spark, range(9)), table)
     snapshot_write(_sdf(spark, range(9, 12)), table, mode="append")
     v = snapshot_compact(spark, table)
-    man = _load_manifest(spark, table, v)
+    man = load_manifest(table, v)
     assert man["rows_removed"] == 12 and man["rows_added"] == 12
-    assert v == _list_manifests(spark, table)[-1]
+    assert v == list_versions(table)[-1]

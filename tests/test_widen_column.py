@@ -17,8 +17,6 @@ from nyc_taxi_data_warehouse_spark.warehouse.eqdeletes import (
     snapshot_append_upsert,
 )
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-    _list_manifests,
-    _load_manifest,
     read_snapshot,
     Range,
     snapshot_add_constraint,
@@ -28,6 +26,10 @@ from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     snapshot_rename_column,
     snapshot_widen_column,
     snapshot_write,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
 )
 
 
@@ -42,8 +44,8 @@ def test_widen_roundtrip_travel_append_and_big_values(spark, tmp_path):
     )
     v2 = snapshot_widen_column(spark, t, "amt", "bigint")
     # zero data movement
-    assert _load_manifest(spark, t, v2)["files"] == _load_manifest(
-        spark, t, v1
+    assert load_manifest(t, v2)["files"] == load_manifest(
+        t, v1
     )["files"]
     # head reads LONG; travel reads INT
     assert dict(read_snapshot(spark, t).dtypes)["amt"] == "bigint"
@@ -118,7 +120,7 @@ def test_widen_composes_with_rename_eq_and_feed(spark, tmp_path):
     # the physical slot and its frozen narrow files stay untouched
     snapshot_rename_column(spark, t, "amt", "amount")
     snapshot_widen_column(spark, t, "amount", "bigint")
-    man = _load_manifest(spark, t, _list_manifests(spark, t)[-1])
+    man = load_manifest(t, list_versions(t)[-1])
     assert man["colmap"] == {"amount": "amt"}
     assert dict(read_snapshot(spark, t).dtypes)["amount"] == "bigint"
 
@@ -185,9 +187,7 @@ def test_alter_commits_are_o1_metadata(spark, tmp_path):
     on a million-file table costs the same bytes as on a ten-file one."""
     import os
 
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        _VDIR,
-    )
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import VDIR
 
     t = str(tmp_path / "t")
     df = spark.range(2000).selectExpr(
@@ -198,7 +198,7 @@ def test_alter_commits_are_o1_metadata(spark, tmp_path):
     v_r = snapshot_rename_column(spark, t, "amt", "amount")
     v_w = snapshot_widen_column(spark, t, "amount", "bigint")
     for v in (v_r, v_w):
-        doc_path = f"{t}/{_VDIR}/{v:08d}.json"
+        doc_path = f"{t}/{VDIR}/{v:08d}.json"
         size = os.path.getsize(doc_path)
         assert size < 4096, (v, size)
         doc = json.loads(open(doc_path).read())

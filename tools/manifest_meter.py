@@ -17,7 +17,7 @@ metadata path — then measures:
 - ``legacy_bytes``: what the old full-JSON format would have written
   for EVERY commit at this size (the win factor),
 - ``load_ms_cold`` / ``load_ms_warm``: wall time of
-  ``_load_manifest`` at the head with a cleared vs populated
+  ``manifestlog.load_manifest`` at the head with a cleared vs populated
   reconstruction cache.
 
 The companion test (tests/test_manifestlog.py) pins the shape
@@ -90,7 +90,7 @@ def meter(spark, file_count: int, appends: int) -> dict:
                 stats_cols=["id"],
             )
             append_wall.append(time.perf_counter() - t0)
-            doc = snap._read_doc(spark, root, parent)
+            doc = manifestlog.read_doc(root, parent)
             if not doc.get("ckpt"):
                 delta_sizes.append(
                     os.path.getsize(
@@ -106,14 +106,14 @@ def meter(spark, file_count: int, appends: int) -> dict:
             if p.endswith(".ckpt.parquet")
         ]
         # the old format: the FULL manifest dict as one JSON, per commit
-        head = snap._load_manifest(spark, root, parent)
+        head = manifestlog.load_manifest(root, parent)
         legacy_bytes = len(json.dumps(head, sort_keys=True).encode())
-        snap._STATE_CACHE.__setstate__({"maxsize": 256})
+        manifestlog._STATE_CACHE.__setstate__({"maxsize": 256})
         t0 = time.perf_counter()
-        snap._load_manifest(spark, root, parent)
+        manifestlog.load_manifest(root, parent)
         cold = (time.perf_counter() - t0) * 1000
         t0 = time.perf_counter()
-        snap._load_manifest(spark, root, parent)
+        manifestlog.load_manifest(root, parent)
         warm = (time.perf_counter() - t0) * 1000
         return {
             "table_files": file_count,

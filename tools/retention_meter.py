@@ -63,7 +63,7 @@ def meter(
     clustered = df.repartitionByRange(n_files, F.col(date_col))
     snap.snapshot_write(clustered, table_path, stats_cols=[date_col])
 
-    _, man_pre = snap._manifest_at(spark, table_path)
+    _, man_pre = snap._manifest_at(table_path)
     pre_files = list(man_pre["files"])
     root = snap._root(table_path)
     sizes_pre = snap._file_sizes(spark, root, pre_files)
@@ -113,7 +113,7 @@ def meter(
     )
     delete_wall_ms = (time.monotonic() - t0) * 1000
 
-    _, man_post = snap._manifest_at(spark, table_path)
+    _, man_post = snap._manifest_at(table_path)
     post_files = set(man_post["files"])
     removed = [f for f in pre_files if f not in post_files]
     written = [f for f in man_post["files"] if f not in set(pre_files)]
