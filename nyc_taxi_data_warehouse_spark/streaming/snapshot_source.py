@@ -334,6 +334,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                     self._verify_row_neutral(
                         man, v, removed, files - prev_files,
                         prev_dvs=prev_dvs, new_dvs=dvs,
+                        prev_eqs=prev_eqs,
                     )
                 # verified or skipped rewrite: stream zero rows from it
             elif dvs != prev_dvs and not self._dv_delta_out_of_scope(
@@ -600,6 +601,72 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
                     )
         return total
 
+    def _eq_masked(
+        self, files: set, dvs: set, eqs: list, seqmap: dict
+    ) -> int:
+        """Rows of ``files`` that no tombstone in ``dvs`` deletes but an
+        applicable equality-delete entry of ``eqs`` masks — planner-side
+        pyarrow over each subject file's key columns only. A key column
+        the file does not store comes from its partition directory (or
+        stays NULL, which no entry matches: plain equality)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        def read(rel, cols):
+            fs, p = pa_fs(f"{self._root}/{rel}")
+            with fs.open_input_file(p) as fh:
+                return pq.read_table(fh, columns=cols)
+
+        subject = {
+            f: app
+            for f in sorted(files)
+            if (app := [e for e in eqs if e["seq"] > seqmap.get(f, 0)])
+        }
+        if not subject:
+            return 0
+        tombs = [read(rel, ["_dv_file", "_dv_pos"]) for rel in sorted(dvs)]
+        total = 0
+        for f, app in subject.items():
+            keys = sorted({k for e in app for k in e["keys"]})
+            fs, p = pa_fs(f"{self._root}/{f}")
+            with fs.open_input_file(p) as fh:
+                pf = pq.ParquetFile(fh)
+                stored = set(pf.schema_arrow.names)
+                tbl = pf.read(columns=[k for k in keys if k in stored])
+                n = pf.metadata.num_rows
+            by_keys: dict[tuple, list[str]] = {}
+            for e in app:
+                by_keys.setdefault(tuple(e["keys"]), []).append(e["path"])
+            hits = []
+            for kt, paths in sorted(by_keys.items()):
+                side = pa.concat_tables([read(r, list(kt)) for r in paths])
+                cols = [pa.array(range(n), pa.int64())]
+                for k in kt:
+                    typ = side.schema.field(k).type
+                    if k in stored:
+                        cols.append(tbl.column(k).cast(typ))
+                    else:
+                        raw = partition_values(f).get(k)
+                        cols.append(pa.array([raw] * n, pa.string()).cast(typ))
+                left = pa.table(cols, names=["_pos", *kt])
+                hit = left.join(side, list(kt), join_type="left semi")
+                hits.extend(hit.column("_pos").chunks)
+            masked = pc.unique(pa.chunked_array(hits, pa.int64()))
+            dead = pa.chunked_array(
+                [
+                    t.filter(pc.equal(t.column("_dv_file"), f))
+                    .column("_dv_pos")
+                    .combine_chunks()
+                    for t in tombs
+                ],
+                pa.int64(),
+            ).combine_chunks()
+            total += len(masked) - (
+                pc.sum(pc.is_in(masked, value_set=dead)).as_py() or 0
+            )
+        return total
+
     def _dv_target_files(self, dvs: set) -> set:
         """Union of data-file relpaths the given sidecars tombstone —
         LEGACY fallback for manifests predating the recorded
@@ -634,6 +701,7 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
         added: set,
         prev_dvs: set = frozenset(),
         new_dvs: set = frozenset(),
+        prev_eqs: list = (),
     ) -> None:
         """Prove a file-removing commit changed no rows before letting
         the feed pass it silently. Two gates, both required:
@@ -670,15 +738,26 @@ class SnapshotFeedStreamReader(DataSourceStreamReader):
             # live rows of exactly the scoped removed/added files:
             # footers minus the tombstones targeting them under each
             # side's sidecar set (a targeted compact folds victims'
-            # tombstones — live-for-live is the honest comparison).
-            # Requires superseded footers to still exist: a scoped
-            # verify feed must not lag behind compact + vacuum.
+            # tombstones — live-for-live is the honest comparison), and
+            # minus the rows each side's equality deletes mask (a
+            # compaction reads through outstanding entries and drops
+            # them). Requires superseded footers to still exist: a
+            # scoped verify feed must not lag behind compact + vacuum.
+            pseq = {}
+            if prev_eqs:  # the removed files' sequences: the parent's
+                pseq = load_manifest(
+                    self._path, man["parent"], want_stats=False
+                ).get("seq") or {}
             n_removed = sum(
                 parquet_num_rows(f"{self._root}/{f}") for f in removed
-            ) - self._dv_entries_for(prev_dvs, removed)
+            ) - self._dv_entries_for(prev_dvs, removed) - self._eq_masked(
+                removed, prev_dvs, prev_eqs, pseq
+            )
             n_added = sum(
                 parquet_num_rows(f"{self._root}/{f}") for f in added
-            ) - self._dv_entries_for(new_dvs, added)
+            ) - self._dv_entries_for(new_dvs, added) - self._eq_masked(
+                added, new_dvs, man.get("eqs") or [], man.get("seq") or {}
+            )
         elif (
             man.get("rows_removed") is not None
             and man.get("rows_added") is not None

@@ -24,7 +24,7 @@ repo's manifest log:
   position deletion vectors (reading only the applicable files), so
   the read-side anti-join tax never accretes: upserts land at write
   speed, maintenance converts at its own pace, reads stay fast.
-  Mutators (DML/compaction) resolve implicitly.
+  DML mutators resolve implicitly; compaction reads through the masks.
 - ``stream_snapshot_upsert`` is the Structured Streaming wrapper:
   foreachBatch + checkpoint, exactly-once via the same
   (stream_id, epoch) manifest-replay guard as

@@ -63,6 +63,7 @@ import sys
 import threading
 import time
 from collections import OrderedDict
+from urllib.parse import quote
 
 # Keys that encode the delta itself; everything else in a commit doc
 # is a per-commit scalar carried verbatim into the reconstructed
@@ -756,10 +757,18 @@ def split_ref(path: str) -> tuple[str, str]:
     return root, f"{BDIR}/{branch}/{VDIR}"
 
 
+# RFC 3986 path characters that need no encoding (pchar minus
+# unreserved, which ``quote`` never encodes)
+_URI_PATH_SAFE = "/:@!$&'()*+,;="
+
+
 def pa_fs(uri: str):
     """(pyarrow FileSystem, fs-local path) for a bare path, a ``file:``
     URI, or any URI pyarrow resolves (``hdfs://``, ``s3://``,
-    ``gs://``)."""
+    ``gs://``). Relpaths are raw (a partition value may hold a space,
+    ``%`` or ``#``), so the path part of a non-local URI is
+    percent-encoded before ``from_uri`` parses it and decodes it back:
+    the returned path is the raw one."""
     import pyarrow.fs as pafs
 
     if uri.startswith("file:"):
@@ -768,7 +777,11 @@ def pa_fs(uri: str):
             path[2:] if path.startswith("//") else path
         )
     if "://" in uri:
-        return pafs.FileSystem.from_uri(uri)
+        scheme, rest = uri.split("://", 1)
+        host, sep, path = rest.partition("/")
+        return pafs.FileSystem.from_uri(
+            f"{scheme}://{host}{sep}{quote(path, safe=_URI_PATH_SAFE)}"
+        )
     return pafs.LocalFileSystem(), uri
 
 

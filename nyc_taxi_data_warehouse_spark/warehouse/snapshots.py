@@ -60,7 +60,7 @@ import uuid
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
@@ -137,12 +137,22 @@ def _write_bytes_exclusive(fs, jpath, data: bytes) -> bool:
     in builder mode, when the conditional write could not be CONFIRMED
     — see ``_commit_mode``).
 
-    In create mode on the local filesystem the kernel arbitrates
-    through ``O_EXCL``: Hadoop's local ``create(overwrite=false)`` is an
-    exists-check followed by a truncating open, so racing writers can
-    all "win" the same name (8 threads racing one name: several
-    winners in 15 of 40 trials)."""
-    if _commit_mode() == "builder":
+    On the local filesystem both modes claim through ``O_EXCL``: Hadoop's
+    local create and ``createFile`` builder check and then open, so
+    racing writers can all "win" the same name (8 threads racing one
+    name: several winners in 15 of 40 trials)."""
+    mode = _commit_mode()
+    if fs.getScheme() == "file":
+        local = fs.makeQualified(jpath).toUri().getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        try:
+            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        except FileExistsError:
+            return False
+        with os.fdopen(fd, "wb") as out:
+            out.write(data)
+        return True
+    if mode == "builder":
         # unlike plain create(), the builder does not create parent
         # directories; mkdirs is idempotent (and a no-op namespace-wise
         # on object stores, where directories are virtual)
@@ -157,16 +167,6 @@ def _write_bytes_exclusive(fs, jpath, data: bytes) -> bool:
         except Exception:
             # conditional-PUT stores reject here (If-None-Match miss)
             return False
-        return True
-    if fs.getScheme() == "file":
-        local = fs.makeQualified(jpath).toUri().getPath()
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        try:
-            fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            return False
-        with os.fdopen(fd, "wb") as out:
-            out.write(data)
         return True
     try:
         out = fs.create(jpath, False)
@@ -507,8 +507,6 @@ def _write_tombstones(
     once — a retried shuffle-map stage would count its rows twice —
     and above ``matched``'s DV/equality masks and match filter, which
     Spark does not push below it."""
-    from pyspark.sql import Observation
-
     obs = Observation()
     commit, sidecars = _write_commit_files(
         matched.select(*_DV_COLS)
@@ -548,8 +546,9 @@ def _write_tombstones(
 # costs its own images plus one key sidecar), the READ side anti-joins
 # keys only over the applicable files, and ``snapshot_resolve_eq``
 # folds entries into position deletion vectors so read cost never
-# accretes. Mutators (DML/compact) resolve outstanding entries first —
-# their stats proofs and row accounting stay position-exact.
+# accretes. DML mutators resolve outstanding entries first — their
+# stats proofs and row accounting stay position-exact; compaction reads
+# through the masks and the entries fold with the files they masked.
 
 
 def _eq_entries(man: dict) -> list[dict]:
@@ -3714,10 +3713,9 @@ def snapshot_maintain(spark: SparkSession, path: str) -> dict:
 
     eq_entries_n = _num("maintain.eq_resolve_entries")
     if eq_entries_n is not None:
-        # resolve FIRST: outstanding equality deletes block the
-        # compaction steps' position-exact accounting anyway (they
-        # auto-resolve), so an explicit policy runs it as its own
-        # conflict-tolerant step
+        # resolve FIRST, as its own conflict-tolerant step: the
+        # targeted compaction below carries its unpacked files'
+        # entries, which only a resolve folds
         try:
             head = load_manifest(
                 path, list_versions(path)[-1]
@@ -4317,7 +4315,7 @@ def snapshot_drop_constraint(
 def snapshot_compact(
     spark: SparkSession,
     path: str,
-    target_mb: int = 256,
+    target_mb: float = 256,
     partition_cols: list[str] | None = None,
     cluster_by: list[str] | None = None,
     zorder_bits: int = 8,
@@ -4325,11 +4323,17 @@ def snapshot_compact(
     min_file_mb: float | None = None,
     min_file_rows: int | None = None,
 ) -> int:
-    """Compaction as a COMMIT: rewrite the latest version's data into
-    ceil(bytes/target) files per partition and publish the result as a
-    new version. Unlike ``compact_partition`` (in-place), running
-    readers keep their version's files untouched; ``vacuum_snapshots``
-    reclaims the fragmented ones later. Returns the new version.
+    """Compaction as a COMMIT: rewrite the latest version's live rows
+    into files of about ``target_mb`` (ceil(bytes/target) write tasks,
+    rows per file capped from the recorded rows per byte, so a
+    partition larger than the target splits) and publish them as a new
+    version. Running readers keep their version's files untouched;
+    ``vacuum_snapshots`` reclaims the old ones. Returns the new version.
+
+    The rewrite reads the head through every mask (``_scan_live``), so
+    outstanding equality deletes need no resolve: packed files get the
+    commit's sequence, carried files keep theirs and stay masked, and
+    ``_commit`` prunes the entries left with no applicable file.
 
     Manifest stats SURVIVE compaction: like every commit, it gets
     per-file stats for its new files when the table tracks
@@ -4339,9 +4343,8 @@ def snapshot_compact(
     shape: one column range-partitions + sorts on it; several columns
     cluster on the interleaved ``zorder_value`` so every file covers a
     compact region of the whole key space (``n_files`` overrides the
-    byte-derived output count — clustering often wants a fixed shard
-    layout). Because the new files' stats
-    are collected from the CLUSTERED files, their [min,max] ranges come
+    byte-derived output count and row cap — clustering often wants a
+    fixed shard layout). Because the new files' stats are collected from the CLUSTERED files, their [min,max] ranges come
     out tight and disjoint — compaction then actively IMPROVES scan
     pruning instead of merely not destroying it. With partition
     columns, clustering applies within each partition (the range
@@ -4373,7 +4376,6 @@ def snapshot_compact(
     whose count is unrecorded (legacy history) are conservatively
     carried. Mutually exclusive with ``min_file_mb``."""
     latest, man = _manifest_at(path)
-    latest, man = _eq_resolved_head(spark, path, latest, man)
     root = _root(path)
     if partition_cols is None:
         # default to the table's recorded layout — an unpartitioned
@@ -4398,6 +4400,7 @@ def snapshot_compact(
     if min_file_mb is not None and min_file_rows is not None:
         raise ValueError("pass min_file_mb OR min_file_rows, not both")
     targeted = min_file_mb is not None or min_file_rows is not None
+    frows = man.get("rows") or {}
     victims, carried = list(man["files"]), []
     if targeted:
         _require_same_layout(
@@ -4410,7 +4413,6 @@ def snapshot_compact(
                 man["files"], lambda f: sizes[f] < cut
             )
         else:
-            frows = man.get("rows") or {}
             victims = _fragment_victims(
                 man["files"],
                 lambda f: f in frows and frows[f] < min_file_rows,
@@ -4418,14 +4420,13 @@ def snapshot_compact(
         carried = [f for f in man["files"] if f not in set(victims)]
         if not victims:
             return latest  # nothing to bin-pack
+    max_records = None
     if n_files is None:
-        if min_file_mb is not None:
-            total = sum(sizes[f] for f in victims)
-        elif targeted:  # rows mode: stat only the victims
-            total = sum(_file_sizes(spark, root, victims).values())
-        else:
-            total = _file_bytes_total(spark, root, man["files"])
-        n_files = max(1, -(-total // (target_mb * 1024 * 1024)))
+        if min_file_mb is None:  # stat only the victims
+            sizes = _file_sizes(spark, root, victims)
+        total = sum(sizes[f] for f in victims)
+        target = int(target_mb * 1024 * 1024)
+        n_files = max(1, -(-total // target))
         if targeted:
             # cap the derived output count so each packed file
             # averages AT OR ABOVE the fragment threshold — without
@@ -4433,26 +4434,22 @@ def snapshot_compact(
             # mid-size fragments can emit n_files outputs that all
             # still qualify as fragments, and the auto cadence would
             # rewrite the same bytes forever instead of converging.
-            # (Partitioned hash-repartition packs collapse to one file
-            # per partition regardless, but the cap is harmless there.)
             if min_file_mb is not None:
                 cap = int(total // (min_file_mb * 1024 * 1024))
             else:
-                vic_rows = sum(frows[f] for f in victims)
-                cap = vic_rows // min_file_rows
+                cap = sum(frows[f] for f in victims) // min_file_rows
             n_files = max(1, min(n_files, cap))
-    if not targeted:
-        df = read_snapshot(spark, path, latest)
-    else:
-        schema = StructType.fromJson(man["schema"])
-        df = _read_file_list(
-            spark, path, victims, schema,
-            partition_cols=partition_cols,
-            dv_files=man.get("dv_files"),
-            dv_targets=man.get("dv_targets"),
-            colmap=_colmap(man) or None,
-            defaults=man.get("defaults"),
-        )
+        # hashing on the partition columns writes each partition from
+        # one task: only a rows-per-file cap splits one larger than the
+        # target (never below the rows per task chosen above)
+        known = [f for f in victims if f in frows]
+        known_bytes = sum(sizes[f] for f in known)
+        if known_bytes:
+            rows = sum(frows[f] for f in known)
+            max_records = max(
+                -(-rows * target // known_bytes), -(-rows // n_files)
+            )
+    df = _scan_live(spark, path, man, victims)
     drop_after = None
     if cluster_by:
         bad = [c for c in cluster_by if c in (partition_cols or [])]
@@ -4478,25 +4475,24 @@ def snapshot_compact(
         df = df.repartition(n_files, *partition_cols)
     else:
         df = df.repartition(n_files)
+    # Row totals IN the commit let the feed's onNonAppend=verify gate
+    # prove row-neutrality after a vacuum deleted the superseded files.
+    # Removed: the live rows the masked read fed the write, observed
+    # above the exchange so each counts once in the writing stage (a
+    # retried map stage would count twice). Added: the new footers.
+    obs = Observation()
     _, files = _write_commit_files(
-        df, path, partition_cols, colmap=_colmap(man) or None
+        df.observe(obs, F.count(F.lit(1)).alias("n")),
+        path,
+        partition_cols,
+        colmap=_colmap(man) or None,
+        max_records=max_records,
     )
-    extra = {}
-    # Record row totals IN the commit: the feed's onNonAppend=verify
-    # gate proves row-neutrality from these, so a feed that lags behind
-    # a compact + vacuum (which deletes exactly the superseded files it
-    # would otherwise re-read) still verifies from metadata instead of
-    # hard-failing on vanished footers. Counted while both sides still
-    # exist — recorded manifest counts for the removed side, fresh
-    # footers for the added side (reused by _commit via known_rows).
-    # LIVE rows on the removed side: physical totals minus the
-    # parent's deletion-vector tombstones targeting the REWRITTEN
-    # files (their tombstones fold — the rewrite came from the
-    # DV-applied read, so the added side is live-only by construction
-    # and the equality must compare like with like)
     rows_new = _rows_for_files(spark, root, files)
-    extra["rows_removed"] = _live_row_total(spark, path, man, victims)
-    extra["rows_added"] = sum(rows_new.values())
+    extra = {
+        "rows_removed": _observed(obs, n=0)["n"],
+        "rows_added": sum(rows_new.values()),
+    }
     dv_files = defaults_after = _DV_INHERIT
     if not targeted:
         dv_files = None  # folded into the rewrite
@@ -4509,7 +4505,7 @@ def snapshot_compact(
         extra["files_carried"] = len(carried)
     return _commit(
         spark, path, carried + files, df.schema, "compact", latest,
-        extra=extra or None,
+        extra=extra,
         partition_cols=partition_cols,
         dv_files=dv_files,
         known_rows=rows_new,
@@ -5599,8 +5595,6 @@ def _rewrite_matching_files(
     pc = _manifest_partition_cols(man)
     new_files, affected = [], 0
     if victims:
-        from pyspark.sql import Observation
-
         # merge-on-read: already-tombstoned rows must not resurrect
         # into the rewritten files (the carried DV entries for the
         # rewritten victims become inert once their files drop out).
@@ -5834,8 +5828,9 @@ def snapshot_resolve_eq(spark: SparkSession, path: str) -> tuple[int, int]:
     reads, and the resolver periodically converts the accumulated key
     masks into the position form every read/count/plan path handles at
     full speed (then ``snapshot_compact_dvs``/``snapshot_compact``
-    take over as usual). Mutators call it implicitly — DML stats
-    proofs and row accounting are position-exact only."""
+    take over as usual). DML mutators call it implicitly — their
+    stats proofs and row accounting are position-exact only.
+    ``snapshot_compact`` does not: it rewrites through the masks."""
     latest, man = _manifest_at(path)
     entries = _eq_entries(man)
     if not entries:
@@ -5914,12 +5909,12 @@ def snapshot_resolve_eq(spark: SparkSession, path: str) -> tuple[int, int]:
 def _eq_resolved_head(
     spark: SparkSession, path: str, latest: int, man: dict
 ) -> tuple[int, dict]:
-    """Mutator entry guard: resolve outstanding equality deletes
-    before DML/compaction — their stats proofs ("every row of this
-    file matches"), victim row accounting, and rewrite reads are all
-    POSITION-exact and would otherwise overcount (or resurrect)
-    key-masked rows. No-op (no extra I/O) when nothing is
-    outstanding, which is the steady state."""
+    """DML entry guard: resolve outstanding equality deletes before
+    DELETE/UPDATE/MERGE — their stats proofs ("every row of this file
+    matches") and victim row accounting are POSITION-exact and would
+    otherwise overcount key-masked rows. Compaction needs no guard: it
+    rewrites from the masked read. No-op (no extra I/O) when nothing
+    is outstanding, which is the steady state."""
     if not man.get("eqs"):
         return latest, man
     v, _ = snapshot_resolve_eq(spark, path)

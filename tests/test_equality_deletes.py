@@ -282,9 +282,10 @@ def test_resolve_eq_equivalence_idempotence_and_gc(spark, table):
 
 @pytest.mark.slowproof
 def test_mutators_resolve_first(spark, table):
-    """DML and compaction on a table with outstanding entries resolve
-    them implicitly — results position-exact, history shows the
-    resolve, the head carries no entries."""
+    """DML on a table with outstanding entries resolves them implicitly
+    — results position-exact, history shows the resolve, the head
+    carries no entries. Compaction does not resolve: it reads through
+    the masks and the entries fold with the files they masked."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         snapshot_compact,
         snapshot_delete,
@@ -319,10 +320,119 @@ def test_mutators_resolve_first(spark, table):
         spark, table, _df(spark, [(6, 0, "N6")]), ["id"]
     )
     before = _bag(read_snapshot(spark, table))
+    ops = [h["op"] for h in snapshot_versions(spark, table)]
+    n_resolves = ops.count("resolve_eq")
     snapshot_compact(spark, table)
     assert _bag(read_snapshot(spark, table)) == before
     man = _head(spark, table)
     assert not man.get("eqs") and not man.get("dv_files")
+    ops = [h["op"] for h in snapshot_versions(spark, table)]
+    assert ops[-1] == "compact" and ops.count("resolve_eq") == n_resolves
+
+
+def _eq_table_with_dvs(spark, table):
+    """A month-partitioned table with a DV delete and an outstanding
+    upsert entry that masks rows in both partitions' base files."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_delete,
+    )
+
+    snapshot_write(  # one 10-row base file per month
+        _df(spark, [(i, i % 2, f"v{i}") for i in range(20)]).coalesce(1),
+        table, partition_cols=["month"], stats_cols=["id"],
+    )
+    snapshot_delete(spark, table, {"v": ["v4", "v7"]}, mode="dv")
+    v, _ = snapshot_append_upsert(
+        spark, table,
+        _df(spark, [(3, 1, "N3"), (6, 0, "N6"), (50, 1, "N50")]),
+        ["id"],
+    )
+    head = _head(spark, table)
+    assert head.get("eqs") and head.get("dv_files")
+    return v
+
+
+def test_compact_reads_through_outstanding_eq(spark, table, tmp_path):
+    """A full compaction over DVs and an outstanding upsert entry is
+    ONE compact commit (no resolve_eq): same rows, no entries or
+    sidecars left, live-row totals recorded on both sides, and the
+    change feed and a verify stream (scoped and unscoped) started at
+    the upsert see zero changes."""
+    from nyc_taxi_data_warehouse_spark.streaming.snapshot_source import (
+        read_snapshot_stream,
+    )
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_compact,
+    )
+
+    up = _eq_table_with_dvs(spark, table)
+    before = _bag(read_snapshot(spark, table))
+    assert len(before) == 19  # 20 - 2 DV'd + N50; N3/N6 replace 3/6
+    v = snapshot_compact(spark, table)
+    assert v == up + 1
+    assert _bag(read_snapshot(spark, table)) == before
+    assert "resolve_eq" not in [
+        h["op"] for h in snapshot_versions(spark, table)
+    ]
+    man = _head(spark, table)
+    assert man["op"] == "compact"
+    assert not man.get("eqs") and not man.get("dv_files")
+    assert man["rows_removed"] == man["rows_added"] == len(before)
+    assert snapshot_changes(spark, table, from_version=up).count() == 0
+    for name, scope in (("all", None), ("m0", {"month": 0})):
+        out = tmp_path / f"out_{name}"
+        q = (
+            read_snapshot_stream(
+                spark, table, starting_version=up,
+                on_non_append="verify", partitions=scope,
+            )
+            .writeStream.format("parquet")
+            .option("path", str(out))
+            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert spark.read.parquet(str(out)).count() == 0, name
+
+
+def test_targeted_compact_keeps_carried_files_masked(spark, table):
+    """A targeted (min_file_rows) compaction with an outstanding entry
+    packs the fragments — including the upsert's own images, which
+    its entry must not mask after they get the commit's sequence —
+    and carries the base files, which stay masked."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_compact,
+    )
+
+    _eq_table_with_dvs(spark, table)
+    for i in range(2):  # a second fragment beside the upsert image
+        snapshot_write(
+            _df(spark, [(100 + i, 1, f"a{i}")]), table, mode="append",
+            partition_cols=["month"],
+        )
+    pre = _head(spark, table)
+    before = _bag(read_snapshot(spark, table))
+    v = snapshot_compact(spark, table, min_file_rows=5)
+    man = _head(spark, table)
+    assert man["version"] == v and man["op"] == "compact"
+    assert _bag(read_snapshot(spark, table)) == before
+    assert (3, 1, "v3") not in before and (3, 1, "N3") in before
+    carried = [f for f in man["files"] if f in pre["files"]]
+    assert carried and man["files_carried"] == len(carried)
+    assert {e["path"] for e in man["eqs"]} == {
+        e["path"] for e in pre["eqs"]
+    }
+    assert {f: man["seq"][f] for f in carried} == {
+        f: pre["seq"][f] for f in carried
+    }
+    assert man["rows_removed"] == man["rows_added"]
+    assert "resolve_eq" not in [
+        h["op"] for h in snapshot_versions(spark, table)
+    ]
+    assert snapshot_changes(
+        spark, table, from_version=pre["version"]
+    ).count() == 0
 
 
 @pytest.mark.slowproof

@@ -138,12 +138,25 @@ def test_conflict_detected_not_silent(spark, table, commit_mode, monkeypatch):
 def test_exclusive_create_has_one_winner_under_a_race(spark, tmp_path):
     """Eight writers racing to claim one name on the local filesystem:
     exactly one wins, and the file holds the winner's body."""
+    _assert_one_winner_per_race(spark, str(tmp_path))
+
+
+def test_builder_mode_claim_has_one_winner_under_a_race(
+    spark, tmp_path, monkeypatch
+):
+    """The builder claim mode races the same way on ``file:``: Hadoop's
+    local createFile builder checks and then opens, so the claim goes
+    through the same O_EXCL create as create mode."""
+    monkeypatch.setenv("SPARK_GRAFT_SNAPSHOT_COMMIT", "builder")
+    _assert_one_winner_per_race(spark, str(tmp_path))
+
+
+def _assert_one_winner_per_race(spark, root):
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
     from nyc_taxi_data_warehouse_spark.warehouse import snapshots as S
 
-    root = str(tmp_path)
     fs, jvm = S._fs(spark, root)
     for trial in range(20):
         jp = S._jp(jvm, root, f"{trial:08d}.json")
@@ -1417,6 +1430,25 @@ def test_snapshot_compact_is_a_commit_not_a_rewrite(spark, table):
     assert got == {(i, f"r{i}") for i in range(4)}
     # a reader planned before the compaction still drains the old files
     assert {r.id for r in pinned.collect()} == {0, 1, 2, 3}
+
+
+def test_compact_splits_a_partition_larger_than_the_target(spark, table):
+    """Files come out about ``target_mb`` each: a partition several
+    times the target splits into several files (hashing on the
+    partition column alone would write it from one task as one file),
+    and the rows survive."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        snapshot_compact,
+    )
+
+    rows = [(i, int(i >= 6000), os.urandom(24).hex()) for i in range(6100)]
+    snapshot_write(_df(spark, rows), table, partition_cols=["month"])
+    v = snapshot_compact(spark, table, target_mb=0.05)
+    man = load_manifest(table, v)
+    big = [f for f in man["files"] if "/month=0/" in f]
+    assert len(big) >= 2, man["files"]
+    assert sum(man["rows"][f] for f in big) == 6000
+    assert read_snapshot(spark, table).count() == 6100
 
 
 @pytest.mark.slowproof

@@ -251,3 +251,28 @@ def test_compact_records_row_totals(spark, table):
     man = load_manifest(table, v)
     assert man["rows_removed"] == 12 and man["rows_added"] == 12
     assert v == list_versions(table)[-1]
+
+
+def test_pa_fs_encodes_raw_relpaths_for_non_local_uris():
+    """Relpaths are raw on-disk names. ``from_uri`` refuses a space and
+    percent-decodes, so ``pa_fs`` encodes the path part first: every
+    special partition value parses, and an on-disk ``%3A`` (Spark's
+    escape of ':') stays literal. The batched sizer resolves through it
+    too (a fresh mock filesystem is empty: not-found, not a parse
+    error)."""
+    import pyarrow.fs as pafs
+
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import pa_fs
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        _make_batch_sizer,
+    )
+
+    with pytest.raises(Exception, match="Cannot parse URI"):
+        pafs.FileSystem.from_uri("mock:///t/a b")
+    assert pafs.FileSystem.from_uri("mock:///t/a%20b")[1] == "t/a b"
+    for name in SPECIALS + ["k%3Av", "a#b?c"]:
+        rel = f"t/data/c1/name={name}/part-0.parquet"
+        assert pa_fs(f"mock:///{rel}")[1] == rel
+        assert pa_fs(f"mock://host:9/{rel}")[1] == rel
+    with pytest.raises(FileNotFoundError, match="cannot stat"):
+        _make_batch_sizer()(["mock:///t/name=a b/p.parquet"])
