@@ -9,8 +9,8 @@ an idempotent subcommand and gets a synchronous exit code.
     python -m nyc_taxi_data_warehouse_spark init
     python -m nyc_taxi_data_warehouse_spark load-month --path f.parquet --year 2025 --month 1
     python -m nyc_taxi_data_warehouse_spark backfill --raw-root /data/raw
-    python -m nyc_taxi_data_warehouse_spark sql "SELECT count(*) FROM nyc_taxi.fhvhv_tripdata"
-    python -m nyc_taxi_data_warehouse_spark compact --table nyc_taxi.fhvhv_tripdata
+    python -m nyc_taxi_data_warehouse_spark sql "SELECT count(*) FROM fhvhv_tripdata"
+    python -m nyc_taxi_data_warehouse_spark sql "OPTIMIZE fhvhv_tripdata"
 """
 
 from __future__ import annotations
@@ -103,7 +103,10 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     p = argparse.ArgumentParser(prog="nyc_taxi_data_warehouse_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
-    sub.add_parser("init", help="create database + fact/ingest-log tables")
+    sub.add_parser(
+        "init",
+        help="create the fact table and bind the name fhvhv_tripdata",
+    )
 
     lm = sub.add_parser("load-month", help="idempotently load one monthly file")
     lm.add_argument("--path", required=True)
@@ -111,20 +114,19 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     lm.add_argument("--month", type=int, required=True)
     lm.add_argument("--force", action="store_true", help="re-overwrite the partition")
     lm.add_argument(
-        "--snapshot-path",
-        help="load into a snapshot-versioned table at this path instead "
-        "of the managed fact table",
-    )
-    lm.add_argument(
         "--wap",
         action="store_true",
         help="write-audit-publish: land the month on an isolated branch, "
-        "audit schema + row count, publish only on approval "
-        "(requires --snapshot-path)",
+        "audit schema + row count, publish only on approval",
     )
 
     bf = sub.add_parser("backfill", help="load every undiscovered month under a root")
     bf.add_argument("--raw-root", required=True)
+    for sp in (lm, bf):
+        sp.add_argument(
+            "--snapshot-path",
+            help="fact table path (default: <warehouse root>/fhvhv_tripdata)",
+        )
 
     q = sub.add_parser("sql", help="run a SQL statement and print JSON rows")
     q.add_argument("statement")
@@ -152,18 +154,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         "--root",
         help="catalog root directory (default: $SPARK_GRAFT_CATALOG_ROOT "
         "or the session's spark.sql.warehouse.dir)",
-    )
-
-    cp = sub.add_parser(
-        "compact", help="rewrite fragmented partitions to healthy file counts"
-    )
-    cp.add_argument("--table", required=True)
-    cp.add_argument(
-        "--target-mb", type=int, default=256, help="target file size in MB"
-    )
-    cp.add_argument(
-        "--min-files", type=int, default=2,
-        help="only touch partitions with at least this many files",
     )
 
     di = sub.add_parser(
@@ -614,42 +604,40 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
     from .session import get_spark
     from .warehouse import backfill, init_warehouse, load_month
+    from .warehouse.catalog import fact_path
+    from .warehouse.sqlfront import _refresh_views
 
     owns_session = spark is None
     if owns_session:
         spark = get_spark(app_name=f"nyc-taxi-{args.cmd}")
     try:
         if args.cmd == "init":
-            init_warehouse(spark)
-            print(json.dumps({"status": "ok"}))
+            path = init_warehouse(spark)
+            print(json.dumps({"status": "ok", "path": path}))
         elif args.cmd == "load-month":
-            if args.snapshot_path:
-                from .warehouse.branching import AuditFailed
+            from .warehouse.branching import AuditFailed
 
-                try:
-                    r = load_month(
-                        spark, args.path, args.year, args.month,
-                        force=args.force, backend="snapshot",
-                        snapshot_path=args.snapshot_path, wap=args.wap,
-                    )
-                except AuditFailed as e:
-                    print(json.dumps({"status": "audit_failed",
-                                      "error": str(e)}))
-                    return 1
-            else:
-                if args.wap:
-                    raise SystemExit("--wap requires --snapshot-path")
-                init_warehouse(spark)
+            path = fact_path(spark, args.snapshot_path)
+            try:
                 r = load_month(
-                    spark, args.path, args.year, args.month, force=args.force
+                    spark, args.path, args.year, args.month,
+                    force=args.force, snapshot_path=path, wap=args.wap,
                 )
+            except AuditFailed as e:
+                print(json.dumps({"status": "audit_failed", "error": str(e)}))
+                return 1
+            # a registered view pins the head it was registered at
+            _refresh_views(spark, path)
             print(json.dumps(r.__dict__))
             return 0 if (r.rows > 0 or r.skipped) else 1
         elif args.cmd == "backfill":
             from .sources.discovery import discover_local
 
-            init_warehouse(spark)
-            results = backfill(spark, discover_local(args.raw_root))
+            path = fact_path(spark, args.snapshot_path)
+            results = backfill(
+                spark, discover_local(args.raw_root), snapshot_path=path
+            )
+            _refresh_views(spark, path)
             print(json.dumps([r.__dict__ for r in results]))
         elif args.cmd == "catalog":
             from .warehouse.namecatalog import (
@@ -726,24 +714,6 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             rows = df.limit(args.limit).collect()
             for r in rows:
                 print(json.dumps(r.asDict(), default=str))
-        elif args.cmd == "compact":
-            from .warehouse.layout import compact_table
-
-            results = compact_table(
-                spark,
-                args.table,
-                target_bytes=args.target_mb * 2**20,
-                min_files=args.min_files,
-            )
-            print(
-                json.dumps(
-                    {
-                        "compacted_partitions": len(results),
-                        "files_before": sum(r["before"]["n_files"] for r in results),
-                        "files_after": sum(r["after"]["n_files"] for r in results),
-                    }
-                )
-            )
         elif args.cmd == "dedup-ingest":
             from .operators.indexmeta import read_index_meta
             from .streaming.dedup_ingest import init_dedup_index, stream_dedup_ingest

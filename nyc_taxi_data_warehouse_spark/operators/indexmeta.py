@@ -141,9 +141,8 @@ def compact_index(
     Every incremental maintenance batch (``append_to_ann_index``,
     ``upsert_ivf_cells``, postings upserts, ``append_to_bloom_index``)
     adds files to the cell/term/table partitions it touches; after N
-    ingest cycles the index fragments exactly like the fact table did
-    before ``warehouse.layout.compact_partition`` — one task and one
-    footer read per tiny file at probe time. This is the standing
+    ingest cycles the index fragments — one task and one footer read
+    per tiny file at probe time. This is the standing
     repair job, shared by all index kinds: the layout is discovered
     from the directory names, so ANN (``tbl=``), IVF (``cell=``),
     postings (``term=``/``term_bkt=``) and unpartitioned (bloom)
@@ -157,9 +156,8 @@ def compact_index(
     split is a deterministic hash salt over the row's content, so each
     value's rows land in exactly ``k`` tasks. Unpartitioned layouts
     rewrite to ``ceil(bytes/target_mb)`` files (``repartition``, not
-    ``coalesce`` — same reasoning as ``compact_partition``: coalesce is
-    bounded by the scan's split count and can silently under-shoot the
-    target).
+    ``coalesce``: coalesce is bounded by the scan's split count and can
+    silently under-shoot the target).
 
     The rewrite is scoped STATIC, so a shrinking layout leaves no stale
     directories, and the sidecar is re-written after the data (a crash
@@ -229,7 +227,7 @@ def compact_index(
         n_target = max(1, -(-total // (target_mb * 2**20)))
         compacted = df.repartition(n_target)
     # the write replaces the directory the plan reads from — cut the
-    # lineage first (the compact_partition pattern)
+    # lineage first
     compacted = compacted.localCheckpoint(eager=True)
     writer = compacted.write.mode("overwrite")
     if part_col is not None:

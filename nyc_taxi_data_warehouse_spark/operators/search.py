@@ -146,7 +146,7 @@ def upsert_postings_for_docs(
     touched_parts = sorted(r[part_col] for r in touched_df.collect())
     merged = _postings_upsert_merged(spark, new, path, part_col, touched_parts)
     # The write replaces partitions the plan still reads — cut lineage
-    # first (same reasoning as merge_upsert / upsert_ivf_cells).
+    # first (same reasoning as upsert_ivf_cells).
     merged = merged.localCheckpoint(eager=True)
     # An EDITED document may have been the only one holding some of its
     # old terms: those touched partitions end up with ZERO merged rows,

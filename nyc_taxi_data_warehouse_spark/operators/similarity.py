@@ -851,9 +851,8 @@ def upsert_ivf_cells(
 ) -> None:
     """Incrementally MERGE a batch of vectors into a ``write_ivf_index``
     table, rewriting ONLY the touched cell partitions — the growing-
-    corpus path that avoids a full rebuild per batch (the same touched-
-    partition dynamic-overwrite pattern as ``warehouse.merge_upsert``,
-    with ``cell`` as the partition key).
+    corpus path that avoids a full rebuild per batch (a touched-
+    partition dynamic overwrite, with ``cell`` as the partition key).
 
     Touched cells = the batch's newly-assigned cells, PLUS — unless
     ``assume_new_ids`` — any cell currently holding a batch id (an
@@ -903,7 +902,7 @@ def upsert_ivf_cells(
         spark, assigned, path, id_col, vec_col, touched_cells
     ).where(V.indexable(vec_col))
     # The write replaces partitions the plan is still reading from —
-    # cut the lineage first (same reasoning as merge_upsert).
+    # cut the lineage first.
     merged = merged.localCheckpoint(eager=True)
     # A migrating vector that was the SOLE occupant of its old cell
     # leaves that touched cell with zero merged rows; dynamic overwrite

@@ -36,8 +36,8 @@ RUNTIME_CONFS: dict[str, str] = {
     # The driver-generated events table stores TIMESTAMP(NANOS) which the
     # Spark parquet reader rejects; read as raw nanos and convert (sources/).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Plain-parquet managed tables: make INSERT OVERWRITE of one partition
-    # the idempotent load primitive (see warehouse/load.py).
+    # Plain partitioned parquet outputs (rollup sink, index upserts): make
+    # INSERT OVERWRITE of one partition the idempotent write primitive.
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
 }
 

@@ -34,8 +34,7 @@ There is no corpus-wide state in memory; recovery needs no rebuild.
 
 Scale: every stage is the already-audited index machinery; the stream
 adds no new shuffle. The kept table accumulates small files across
-batches — ``warehouse.compact_table`` is the standing repair, same as
-every other append path in the engine.
+batches, one epoch directory each.
 """
 
 from __future__ import annotations

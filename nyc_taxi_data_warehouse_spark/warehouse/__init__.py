@@ -12,6 +12,5 @@ from .eqdeletes import (  # noqa: F401
     snapshot_delete_keys,
     stream_snapshot_upsert,
 )
-from .merge import merge_upsert  # noqa: F401
 from .replicate import replicate_keyed  # noqa: F401
 from .queries import monthly_zone_pay, taxi_zone_dim  # noqa: F401

@@ -18,7 +18,6 @@ problems, solved at write time:
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -67,133 +66,6 @@ def compacted(df: DataFrame, total_bytes: int, target_bytes: int = 256 * 2**20) 
     measured input size (e.g. from file_stats of the source)."""
     n = max(1, round(total_bytes / target_bytes))
     return df.repartition(n)
-
-
-def table_location(spark: SparkSession, table: str) -> str:
-    """Filesystem location of a managed table (catalog metadata only)."""
-    location = (
-        spark.sql(f"DESCRIBE TABLE EXTENDED {table}")
-        .where("col_name = 'Location'")
-        .collect()[0]["data_type"]
-    )
-    return location.removeprefix("file:")
-
-
-def partition_file_stats(
-    spark: SparkSession, table: str, partition: dict[str, object]
-) -> dict:
-    """File-size audit for ONE Hive-layout partition directory —
-    metadata-only (a directory listing, no data read). Partition values
-    must be filesystem-plain (ints, dates, simple strings): values Hive
-    percent-escapes in directory names are out of scope for this
-    local-listing helper."""
-    base = table_location(spark, table)
-    part_dir = os.path.join(base, *(f"{k}={v}" for k, v in partition.items()))
-    sizes = [
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(part_dir)
-        for f in files
-        if not f.startswith(("_", "."))
-    ]
-    total = sum(sizes)
-    return {
-        "path": part_dir,
-        "n_files": len(sizes),
-        "total_bytes": total,
-        "avg_mb": round(total / len(sizes) / 2**20, 3) if sizes else 0.0,
-    }
-
-
-def compact_partition(
-    spark: SparkSession,
-    table: str,
-    partition: dict[str, object],
-    target_bytes: int = 256 * 2**20,
-) -> dict:
-    """Rewrite ONE fragmented partition of a managed table in place so
-    its file count drops to ``ceil(bytes / target_bytes)``.
-
-    Monthly appends and keyed merges each add files to the partitions
-    they touch; at 100 TB the accumulated small files throttle every
-    scan (one task + one open per file, tiny row groups, no effective
-    min/max skipping). Compaction is the standing repair job: measure
-    the partition's on-disk bytes (directory listing only), read JUST
-    that partition (the literal partition predicate prunes the scan to
-    its directory), coalesce to the target file count, and swap it back
-    via dynamic partition overwrite — all other partitions are never
-    read or written. Row content is byte-identical; only the file
-    layout changes.
-
-    Returns ``{"before": stats, "after": stats, "target_files": n}``.
-    """
-    from ..session import dynamic_partition_overwrite
-
-    before = partition_file_stats(spark, table, partition)
-    if before["n_files"] <= 1:
-        return {"before": before, "after": before, "target_files": before["n_files"]}
-    n_target = max(1, math.ceil(before["total_bytes"] / target_bytes))
-
-    target = spark.table(table)
-    pred = None
-    for k, v in partition.items():
-        cond = target[k] == v
-        pred = cond if pred is None else pred & cond
-    one_part = target.where(pred).select(*target.columns)
-
-    # repartition (round-robin), not coalesce: the rewrite must produce
-    # EXACTLY n_target evenly-sized files — coalesce is bounded by the
-    # scan's split count, which file-packing can make smaller than
-    # n_target, yielding fewer, oversized files. The shuffle moves only
-    # this one partition's rows, a rounding error next to the rewrite IO.
-    compacted_df = one_part.repartition(n_target)
-    # The write replaces the partition the plan reads from — cut the
-    # lineage first (same reasoning as merge_upsert's no-staging path).
-    compacted_df = compacted_df.localCheckpoint(eager=True)
-    with dynamic_partition_overwrite(spark):
-        compacted_df.write.mode("overwrite").insertInto(table)
-
-    after = partition_file_stats(spark, table, partition)
-    return {"before": before, "after": after, "target_files": n_target}
-
-
-def compact_table(
-    spark: SparkSession,
-    table: str,
-    target_bytes: int = 256 * 2**20,
-    min_files: int = 2,
-) -> list[dict]:
-    """Compaction sweep over a partitioned managed table: find every
-    partition whose file count exceeds both ``min_files`` and its
-    ceil(bytes/target) healthy count, and ``compact_partition`` each.
-
-    Partition discovery is catalog metadata (``SHOW PARTITIONS``) plus
-    directory listings — no data is read for healthy partitions, so the
-    standing repair job costs O(fragmented partitions), not O(table).
-    The per-partition rewrites are sequential by design: each is its own
-    all-or-nothing dynamic overwrite, so a failure mid-sweep leaves
-    every other partition either untouched or fully compacted — safe to
-    re-run.
-
-    Returns one ``compact_partition`` result dict per rewritten
-    partition (empty list = table already healthy). Note the sweep may
-    take one extra round to quiesce: rewriting changes the compressed
-    size slightly, which can lower a partition's healthy file count by
-    one — each round strictly reduces file counts, so repeated sweeps
-    converge (and a converged table returns []).
-    """
-    results = []
-    for row in spark.sql(f"SHOW PARTITIONS {table}").collect():
-        # 'year=2025/month=1' → {'year': '2025', 'month': '1'} (values
-        # are passed back verbatim into the partition predicate; Spark
-        # casts string literals to the partition column types).
-        partition = dict(kv.split("=", 1) for kv in row[0].split("/"))
-        stats = partition_file_stats(spark, table, partition)
-        healthy = max(1, math.ceil(stats["total_bytes"] / target_bytes))
-        if stats["n_files"] > max(healthy, min_files - 1):
-            results.append(
-                compact_partition(spark, table, partition, target_bytes)
-            )
-    return results
 
 
 def analyze(spark: SparkSession, table: str, columns: list[str] | None = None) -> None:

@@ -7,17 +7,17 @@ download → S3 multipart upload → EMR step (``data/emr/etl.py``: read parquet
 Here it collapses to ``load_month(spark, path, year, month)``:
 
   read (explicit schema) → cast+rename (≙ etl.py:21-26) → project 13
-  (≙ etl.py:28-43) → INSERT OVERWRITE the (year, month) partition
-  → record in ingest_log.
+  (≙ etl.py:28-43) → replace the (year, month) partition of the snapshot
+  fact table in one commit that records the load's provenance.
 
 Two deliberate upgrades over the reference:
-- **INSERT OVERWRITE one partition** (dynamic partitionOverwriteMode)
-  instead of blind append (etl.py:53-55): re-running a month replaces it
-  rather than double-inserting — the reference's idempotency hole (its
-  guard is only file-level, save_nyc_data_to_s3.py:58-78).
-- **ingest_log anti-join** for backfill (≙ populate_s3.py:70-82): the
+- **Partition replace** instead of blind append (etl.py:53-55):
+  re-running a month replaces it atomically rather than double-inserting
+  — the reference's idempotency hole (its guard is only file-level,
+  save_nyc_data_to_s3.py:58-78).
+- **Manifest provenance** for backfill (≙ populate_s3.py:70-82): the
   reference HEAD-checks S3 once per file; at 100 TB / thousands of files
-  that is O(n) API calls, here it's one metadata-sized join.
+  that is O(n) API calls, here it's one metadata-only manifest replay.
 
 The pipeline is narrow (scan → project → write, zero shuffles); at scale
 the only knob that matters is input split size, handled in session.py.
@@ -31,9 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schema import FHVHV_WAREHOUSE_SCHEMA, SOURCE_RENAMES
-from ..session import local_frame
-from .catalog import FACT_TABLE, INGEST_LOG
-from .snapshots import _observed
+from .catalog import PARTITION_COLS, ensure_table, fact_path
+from .snapshots import _observed, snapshot_replace_partitions
 
 
 @dataclass(frozen=True)
@@ -90,7 +89,7 @@ def load_month(
     year: int,
     month: int,
     force: bool = False,
-    backend: str = "managed",
+    backend: str = "snapshot",
     snapshot_path: str | None = None,
     wap: bool = False,
     audit=None,
@@ -98,60 +97,43 @@ def load_month(
 ) -> LoadResult:
     """Load one monthly file into the partitioned fact table, idempotently.
 
-    Two interchangeable storage backends for the same fact table:
+    The fact table is the ``warehouse.snapshots`` table at
+    ``snapshot_path`` (default: ``<warehouse root>/fhvhv_tripdata``, see
+    ``catalog.fact_path``). The month lands via
+    ``snapshot_replace_partitions``: readers keep their pinned version,
+    and a crash leaves only an orphan commit dir. Idempotency comes from
+    the MANIFEST itself: each load commit records its ``(year, month,
+    source_path, rows)`` provenance, so the already-loaded check is a
+    metadata-only manifest scan. ``backend`` must be ``"snapshot"``, the
+    one table format.
 
-    - ``backend="managed"`` (default): the catalog-managed parquet table
-      — INSERT OVERWRITE of the (year, month) partition under scoped
-      dynamic ``partitionOverwriteMode``; idempotency from the
-      ``ingest_log`` anti-join.
-    - ``backend="snapshot"``: a ``warehouse.snapshots`` versioned table
-      at ``snapshot_path`` — the month lands via
-      ``snapshot_replace_partitions`` (readers keep their pinned
-      version; a crash leaves only an orphan commit dir), and
-      idempotency comes from the MANIFEST itself: each load commit
-      records its ``(year, month, source_path, rows)`` provenance, so
-      no separate ingest log is needed and the already-loaded check is
-      a metadata-only manifest scan.
-
-    ``wap=True`` (snapshot backend only) routes the load through
-    write-audit-publish: the month lands on an isolated branch, the
-    ``audit`` callback inspects the branch head (default: schema
-    matches the transform's output and the observed row count is
-    positive), and only an approved load fast-forwards main — the
-    engine-native answer to the reference's validate-by-inspection
-    step (/root/reference/README.md:77, "check the data" before
-    exposing it). A failed audit raises ``branching.AuditFailed`` and
-    leaves main exactly at the prior month (the poisoned branch is
-    dropped). ``audit`` receives the branch-head DataFrame and returns
-    truthy to approve.
+    ``wap=True`` routes the load through write-audit-publish: the month
+    lands on an isolated branch, the ``audit`` callback inspects the
+    branch head (default: schema matches the transform's output and the
+    observed row count is positive), and only an approved load
+    fast-forwards main — the engine-native answer to the reference's
+    validate-by-inspection step (/root/reference/README.md:77, "check
+    the data" before exposing it). A failed audit raises
+    ``branching.AuditFailed`` and leaves main exactly at the prior month
+    (the poisoned branch is dropped). ``audit`` receives the branch-head
+    DataFrame and returns truthy to approve.
     """
-    if backend not in ("managed", "snapshot"):
-        raise ValueError(f"backend must be managed|snapshot; got {backend!r}")
-    if backend == "snapshot" and not snapshot_path:
-        raise ValueError("backend='snapshot' requires snapshot_path")
-    if wap and backend != "snapshot":
-        raise ValueError("wap=True requires backend='snapshot'")
-    # The partition-replacing write below is only safe under
-    # partitionOverwriteMode=dynamic — on an untuned session Spark's
-    # static default would drop every OTHER month on overwrite. Scoped
-    # (set/restore) so the load never permanently mutates the caller's
-    # session confs.
-    from ..session import dynamic_partition_overwrite
-
+    if backend != "snapshot":
+        raise ValueError(
+            f"backend must be 'snapshot', the one table format; got {backend!r}"
+        )
+    snapshot_path = fact_path(spark, snapshot_path)
     if not force:
         # the whole-history manifest scan is skipped entirely under
         # force (its result would be unused), and backfill threads its
         # already-computed set through `_loaded_months` so M loads cost
         # one scan, not M
-        if backend == "snapshot":
-            already = (
-                _loaded_months
-                if _loaded_months is not None
-                else _snapshot_loaded_months(spark, snapshot_path)
-            )
-            if (year, month) in already:
-                return LoadResult(year, month, rows=0, skipped=True)
-        elif _already_loaded(spark, year, month):
+        already = (
+            _loaded_months
+            if _loaded_months is not None
+            else _snapshot_loaded_months(spark, snapshot_path)
+        )
+        if (year, month) in already:
             return LoadResult(year, month, rows=0, skipped=True)
 
     from pyspark.sql import Observation
@@ -163,95 +145,71 @@ def load_month(
     )
     # Piggyback the row count on the write job itself (Observation) —
     # a post-write count() would re-scan the whole partition, a second
-    # full pass at 100 TB.
+    # full pass at 100 TB. snapshot_replace_partitions writes the commit
+    # files before the manifest flips, and the Observation is populated
+    # by that same write job — so the rows figure lands in the
+    # provenance-carrying manifest without a second scan.
     obs = Observation(f"load_{year}_{month}")
     out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-    if backend == "snapshot":
-        from .snapshots import snapshot_replace_partitions
+    rows_holder: dict[str, int] = {}
 
-        # Two-phase under the hood (files, then Observation-read, then
-        # the provenance-carrying manifest): snapshot_replace_partitions
-        # writes the commit files before the manifest flips, and the
-        # Observation is populated by that same write job — so the rows
-        # figure lands in the manifest without a second scan.
-        rows_holder: dict[str, int] = {}
-
-        def _load_extra() -> dict:
-            rows_holder["rows"] = _observed(obs, rows=0)["rows"]
-            return {
-                "load": {
-                    "year": year,
-                    "month": month,
-                    "source_path": path,
-                    "rows": rows_holder["rows"],
-                }
+    def _load_extra() -> dict:
+        rows_holder["rows"] = _observed(obs, rows=0)["rows"]
+        return {
+            "load": {
+                "year": year,
+                "month": month,
+                "source_path": path,
+                "rows": rows_holder["rows"],
             }
+        }
 
-        if wap:
-            from .branching import drop_branch, write_audit_publish
-            from .manifestlog import list_versions
-            from .snapshots import snapshot_write
-
-            if not list_versions(snapshot_path):
-                # WAP forks from an existing head; a first-ever load
-                # publishes an EMPTY v1 to branch from, so a vetoed
-                # first month still leaves main a readable empty table.
-                # Built fresh (not out.limit(0)): ``out`` carries the
-                # Observation, which is single-use per action
-                snapshot_write(
-                    local_frame(spark, [], out.schema), snapshot_path,
-                    partition_cols=["year", "month"],
-                )
-
-            def _wap_write(ref: str) -> None:
-                snapshot_replace_partitions(
-                    out, ref, ["year", "month"], extra=_load_extra
-                )
-
-            def _default_audit(df) -> bool:
-                want = {
-                    (f.name, f.dataType.simpleString())
-                    for f in out.schema.fields
-                }
-                got = {
-                    (f.name, f.dataType.simpleString())
-                    for f in df.schema.fields
-                }
-                return got == want and rows_holder["rows"] > 0
-
-            wap_branch = f"load-{year}-{month:02d}"
-            # Self-healing retries: a publish-time SnapshotConflict
-            # (which deliberately keeps the branch) or a crash before
-            # drop_branch leaves `load-YYYY-MM` behind, and the fixed
-            # name would then fail every retry of the same month in
-            # create_branch. A leftover here is always debris — the
-            # month's load either never published (so its branch state
-            # is superseded by this re-run) or did publish (in which
-            # case the manifest-replay skip above already returned).
-            try:
-                drop_branch(spark, snapshot_path, wap_branch, reclaim=True)
-            except FileNotFoundError:
-                pass
-            write_audit_publish(
-                spark,
-                snapshot_path,
-                wap_branch,
-                _wap_write,
-                audit or _default_audit,
-                keep_branch_on_failure=False,
-            )
-        else:
-            snapshot_replace_partitions(
-                out, snapshot_path, ["year", "month"], extra=_load_extra
-            )
+    if not wap:
+        snapshot_replace_partitions(
+            out, snapshot_path, PARTITION_COLS, extra=_load_extra
+        )
         return LoadResult(year, month, rows=rows_holder["rows"], skipped=False)
-    # Dynamic partition overwrite: only the (year, month) partition in this
-    # DataFrame is replaced; all other months are untouched.
-    with dynamic_partition_overwrite(spark):
-        out.write.mode("overwrite").insertInto(FACT_TABLE)
-    rows = _observed(obs, rows=0)["rows"]
-    _record(spark, path, year, month, rows)
-    return LoadResult(year, month, rows=rows, skipped=False)
+
+    from .branching import drop_branch, write_audit_publish
+
+    # WAP forks from an existing head; a first-ever load publishes an
+    # EMPTY v1 to branch from, so a vetoed first month still leaves
+    # main a readable empty table.
+    ensure_table(spark, snapshot_path)
+
+    def _wap_write(ref: str) -> None:
+        snapshot_replace_partitions(
+            out, ref, PARTITION_COLS, extra=_load_extra
+        )
+
+    def _default_audit(df) -> bool:
+        want = {
+            (f.name, f.dataType.simpleString()) for f in out.schema.fields
+        }
+        got = {(f.name, f.dataType.simpleString()) for f in df.schema.fields}
+        return got == want and rows_holder["rows"] > 0
+
+    wap_branch = f"load-{year}-{month:02d}"
+    # Self-healing retries: a publish-time SnapshotConflict (which
+    # deliberately keeps the branch) or a crash before drop_branch
+    # leaves `load-YYYY-MM` behind, and the fixed name would then fail
+    # every retry of the same month in create_branch. A leftover here is
+    # always debris — the month's load either never published (so its
+    # branch state is superseded by this re-run) or did publish (in
+    # which case the manifest-replay skip above already returned).
+    try:
+        drop_branch(spark, snapshot_path, wap_branch, reclaim=True)
+    except FileNotFoundError:
+        pass
+    write_audit_publish(
+        spark,
+        snapshot_path,
+        wap_branch,
+        _wap_write,
+        audit or _default_audit,
+        keep_branch_on_failure=False,
+    )
+    return LoadResult(year, month, rows=rows_holder["rows"], skipped=False)
 
 
 def _snapshot_loaded_months(
@@ -265,13 +223,12 @@ def _snapshot_loaded_months(
     the provenance says "loaded"). Metadata only: one small JSON per
     retained version, no data files touched. Months whose provenance
     (or restore target) was vacuumed out of history conservatively
-    re-load — replace_partitions makes the re-load idempotent."""
+    re-load — replace_partitions makes the re-load idempotent. A
+    storage fault propagates: reading it as "nothing loaded" would make
+    backfill reload the whole history."""
     from .manifestlog import list_versions, load_manifest
 
-    try:
-        versions = list_versions(snapshot_path)
-    except Exception:
-        return set()
+    versions = list_versions(snapshot_path)
     states: dict[int, set[tuple[int, int]]] = {}
     cur: set[tuple[int, int]] = set()
     for v in versions:
@@ -291,63 +248,31 @@ def _snapshot_loaded_months(
 def backfill(
     spark: SparkSession,
     manifest: list[tuple[str, int, int]],
-    backend: str = "managed",
     snapshot_path: str | None = None,
 ) -> list[LoadResult]:
-    """Load every not-yet-ingested (path, year, month) from a manifest.
+    """Load every not-yet-ingested (path, year, month) from a manifest,
+    in (year, month) order.
 
     ≙ populate_s3.py main loop, but the "already ingested?" check is one
-    anti-join against ingest_log instead of a HEAD call per file. On the
-    snapshot backend the loaded set comes from the commit manifests
-    (same anti-join shape, different metadata source).
+    replay of the fact table's commit manifests instead of a HEAD call
+    per file. Both sides are driver-held lists, so the filter runs in
+    Python and launches no Spark job.
     """
     if not manifest:
         return []
-    mdf = local_frame(
-        spark, manifest, "source_path string, year int, month int"
+    snapshot_path = fact_path(spark, snapshot_path)
+    loaded = _snapshot_loaded_months(spark, snapshot_path)
+    todo = sorted(
+        (e for e in manifest if (e[1], e[2]) not in loaded),
+        key=lambda e: (e[1], e[2]),
     )
-    loaded: set[tuple[int, int]] | None = None
-    if backend == "snapshot":
-        loaded = _snapshot_loaded_months(spark, snapshot_path)
-        ldf = local_frame(spark, sorted(loaded), "year int, month int")
-    else:
-        ldf = spark.table(INGEST_LOG).select("year", "month")
-    todo = (
-        mdf.join(ldf, on=["year", "month"], how="left_anti")
-        .orderBy("year", "month")
-        .collect()  # manifest is metadata-sized (one row per month-file)
-    )
-    # thread the already-computed loaded set through: the anti-join
-    # above is the idempotency gate; without threading, every
-    # load_month call would redo the whole-history manifest scan
+    # thread the already-computed loaded set through: the filter above
+    # is the idempotency gate; without threading, every load_month call
+    # would redo the whole-history manifest scan
     return [
         load_month(
-            spark, r.source_path, r.year, r.month,
-            backend=backend, snapshot_path=snapshot_path,
-            _loaded_months=loaded,
+            spark, source_path, year, month,
+            snapshot_path=snapshot_path, _loaded_months=loaded,
         )
-        for r in todo
+        for source_path, year, month in todo
     ]
-
-
-def _already_loaded(spark: SparkSession, year: int, month: int) -> bool:
-    return bool(
-        spark.table(INGEST_LOG)
-        .where((F.col("year") == year) & (F.col("month") == month))
-        .limit(1)
-        .take(1)
-    )
-
-
-def _record(spark: SparkSession, path: str, year: int, month: int, rows: int) -> None:
-    row = [(path, year, month, rows)]
-    (
-        local_frame(
-            spark,
-            row,
-            "source_path string, year int, month int, row_count long",
-        )
-        .withColumn("loaded_at", F.current_timestamp())
-        .write.mode("append")
-        .insertInto(INGEST_LOG)
-    )

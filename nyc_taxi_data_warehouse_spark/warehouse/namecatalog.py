@@ -47,18 +47,18 @@ __all__ = [
     "catalog_lookup",
     "catalog_root",
     "catalog_register",
+    "warehouse_root",
 ]
 
 _CATALOG_DIRNAME = "_snapshot_catalog"
 _NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z_0-9]*$")
 
 
-def catalog_root(spark: SparkSession, root: str | None = None) -> str:
-    """The catalog DIRECTORY for this session: ``root`` argument >
+def warehouse_root(spark: SparkSession, root: str | None = None) -> str:
+    """The warehouse root for this session: ``root`` argument >
     ``SPARK_GRAFT_CATALOG_ROOT`` env > the session's
-    ``spark.sql.warehouse.dir`` — always suffixed with the catalog
-    dirname so a warehouse root passed directly never mixes catalog
-    versions with table data."""
+    ``spark.sql.warehouse.dir``, without a ``file:`` scheme or a
+    trailing slash. The catalog and the fact table live under it."""
     import os
 
     base = root or os.environ.get("SPARK_GRAFT_CATALOG_ROOT")
@@ -68,7 +68,14 @@ def catalog_root(spark: SparkSession, root: str | None = None) -> str:
         if base.startswith(scheme):
             base = base[len(scheme):]
             break
-    return f"{base.rstrip('/')}/{_CATALOG_DIRNAME}"
+    return base.rstrip("/")
+
+
+def catalog_root(spark: SparkSession, root: str | None = None) -> str:
+    """The catalog DIRECTORY for this session: the warehouse root
+    suffixed with the catalog dirname, so a warehouse root passed
+    directly never mixes catalog versions with table data."""
+    return f"{warehouse_root(spark, root)}/{_CATALOG_DIRNAME}"
 
 
 def _load_map(cdir: str) -> tuple[dict, int | None]:

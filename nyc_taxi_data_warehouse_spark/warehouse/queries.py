@@ -4,7 +4,7 @@ The reference's users run ad-hoc SQL in Redshift (``/root/reference/
 README.md:77``); the canonical implied workload is monthly revenue by
 pickup zone joined to the public taxi-zone lookup (265 rows — public
 knowledge; the reference keeps it Redshift-side). Here it is first-class:
-partition-pruned scan of one (year, month), broadcast zone dim, hash
+manifest-pruned scan of one (year, month), broadcast zone dim, hash
 agg, top-k — the SURVEY §7 phase-1 query.
 """
 
@@ -13,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import FACT_TABLE
+from .catalog import fact_path
+from .snapshots import read_snapshot
 
 N_ZONES = 265
 _BOROUGHS = ["Manhattan", "Brooklyn", "Queens", "Bronx", "Staten Island", "EWR"]
@@ -34,16 +35,21 @@ def taxi_zone_dim(spark: SparkSession) -> DataFrame:
 
 
 def monthly_zone_pay(
-    spark: SparkSession, year: int, month: int, top: int = 20
+    spark: SparkSession,
+    year: int,
+    month: int,
+    top: int = 20,
+    path: str | None = None,
 ) -> DataFrame:
-    """Monthly driver-pay and tips by pickup zone, top-k by pay.
+    """Monthly driver-pay and tips by pickup zone, top-k by pay, over
+    the fact table at ``path`` (default: ``catalog.fact_path``).
 
-    Plan contract (asserted in tests): the (year, month) predicate prunes
-    partitions at scan time, the 265-row dim broadcasts, and the top-k
+    Plan contract (asserted in tests): the manifest prunes the scan to
+    the (year, month) files, the 265-row dim broadcasts, and the top-k
     runs as TakeOrderedAndProject — no full sort.
     """
-    trips = spark.table(FACT_TABLE).where(
-        (F.col("year") == year) & (F.col("month") == month)
+    trips = read_snapshot(
+        spark, fact_path(spark, path), partitions={"year": year, "month": month}
     )
     zones = taxi_zone_dim(spark)
     return (

@@ -1,11 +1,12 @@
 """Snapshot-versioned tables — manifest commits, time travel, vacuum.
 
-``merge_upsert``/``load_month`` rewrite partitions IN PLACE (dynamic
-partition overwrite). That is idempotent, but at cluster scale it has
-the classic lockless-warehouse race: a reader that planned its scan
-before an overwrite commits can read a partition mid-rewrite. The fix —
-the same idea Delta/Iceberg are built on, reduced to its core — is to
-never mutate data files, only publish new MANIFESTS:
+Rewriting partitions IN PLACE (dynamic partition overwrite) is
+idempotent, but at cluster scale it has the classic lockless-warehouse
+race: a reader that planned its scan before an overwrite commits can
+read a partition mid-rewrite. The fix — the same idea Delta/Iceberg are
+built on, reduced to its core — is to never mutate data files, only
+publish new MANIFESTS. Every warehouse table (the fact table included,
+``load.py``) is one of these:
 
 ```
 table/
@@ -1073,8 +1074,8 @@ def snapshot_replace_partitions(
     """Dynamic-partition-overwrite semantics, versioned: the new commit
     replaces the parent's files ONLY in the partitions present in
     ``df``; all other files carry over. Readers of older versions are
-    unaffected — this is the race-free counterpart of the in-place
-    overwrite in ``merge.py``. ``extra`` keys are recorded verbatim in
+    unaffected — the race-free counterpart of an in-place dynamic
+    partition overwrite. ``extra`` keys are recorded verbatim in
     the commit manifest (the snapshot-backed load path records its
     ``load`` provenance there, making the manifest the idempotency
     ledger). ``extra`` may be a CALLABLE returning the dict — it is
@@ -4522,13 +4523,12 @@ def snapshot_merge(
     version_col: str | None = None,
     mode: str = "rewrite",
 ) -> int:
-    """Keyed MERGE producing a NEW VERSION — ``merge.py::merge_upsert``
-    semantics (replace matched, insert unmatched; with ``version_col``,
-    max-version-wins across target and updates so out-of-order CDC
-    feeds converge and redelivery is a no-op) on a snapshot table:
-    readers keep their version, the merge publishes the next one, and a
-    crash mid-merge leaves only an orphan commit dir. Keys must be
-    partition-stable, as in ``merge.py``: an update whose key is live
+    """Keyed MERGE producing a NEW VERSION (replace matched, insert
+    unmatched; with ``version_col``, max-version-wins across target and
+    updates so out-of-order CDC feeds converge and redelivery is a
+    no-op): readers keep their version, the merge publishes the next
+    one, and a crash mid-merge leaves only an orphan commit dir. Keys
+    must be partition-stable: an update whose key is live
     in a partition no update row touches raises ``ValueError``
     (``_require_partition_stable``); ``eqdeletes.snapshot_append_upsert``
     moves rows between partitions.
@@ -4576,7 +4576,7 @@ def snapshot_merge(
     # No off-table materialization needed: the new commit's files are
     # written BEFORE the manifest flips, and the plan reads the OLD
     # version's immutable files — the snapshot layer dissolves the
-    # read-while-overwriting hazard merge.py checkpoints around.
+    # read-while-overwriting hazard of an in-place partition rewrite.
     return snapshot_replace_partitions(merged, path, partition_cols)
 
 

@@ -1,6 +1,8 @@
-"""In-place partition compaction: fragmented partitions (monthly appends
-+ keyed merges each add files) are rewritten to ceil(bytes/target) files
-with byte-identical row content, touching no other partition.
+"""Small-file repair. Snapshot tables: a targeted compaction
+(``snapshot_compact(min_file_rows=...)``, chosen from the manifest's
+recorded row counts) packs each fragmented partition into
+ceil(bytes/target) files with identical row content and carries every
+healthy file by reference. Index tables: ``compact_index``.
 """
 
 from __future__ import annotations
@@ -11,39 +13,60 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_warehouse_spark.warehouse.layout import (
-    compact_partition,
-    partition_file_stats,
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+    read_snapshot,
+    snapshot_compact,
+    snapshot_write,
 )
 
-TABLE = "compact_probe"
+# 10,000 rows per partition; a fragment holds about 400
+FRAGMENT_ROWS = 500
 
 
-def _build_fragmented(spark, table):
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # 3 partitions; 25 writer tasks per partition → 25 small files each.
-    df = (
-        spark.range(0, 30_000)
-        .select(
-            F.col("id"),
-            (F.col("id") % 3).cast("int").alias("part"),
-            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
-        )
-        .repartition(25)
+def _build_fragmented(spark, path, fragmented, healthy=()):
+    """Each ``fragmented`` part as 25 small files (one 25-task write),
+    each ``healthy`` part as one file."""
+    parts = len(fragmented) + len(healthy)
+    df = spark.range(0, 10_000 * parts).select(
+        F.col("id"),
+        (F.col("id") % parts).cast("int").alias("part"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
     )
-    df.write.mode("overwrite").partitionBy("part").saveAsTable(table)
+    snapshot_write(
+        df.where(F.col("part").isin(list(fragmented))).repartition(25),
+        path, partition_cols=["part"],
+    )
+    if healthy:
+        snapshot_write(
+            df.where(F.col("part").isin(list(healthy))).repartition("part"),
+            path, mode="append", partition_cols=["part"],
+        )
 
 
 @pytest.fixture(scope="module")
-def fragmented_table(spark):
-    _build_fragmented(spark, TABLE)
-    yield TABLE
-    spark.sql(f"DROP TABLE IF EXISTS {TABLE}")
+def fragmented_table(spark, tmp_path_factory):
+    """Part 1 fragmented, parts 0 and 2 one file each."""
+    path = str(tmp_path_factory.mktemp("compact_probe") / "t")
+    _build_fragmented(spark, path, fragmented=[1], healthy=[0, 2])
+    return path
 
 
-def _content_digest(spark, pred: str):
+def _files(path, part=None):
+    files = load_manifest(path, list_versions(path)[-1])["files"]
+    return sorted(f for f in files if part is None or f"/part={part}/" in f)
+
+
+def _bytes(path, files):
+    return sum(os.path.getsize(f"{path}/{f}") for f in files)
+
+
+def _content_digest(spark, path, pred: str = "true"):
     row = (
-        spark.table(TABLE)
+        read_snapshot(spark, path)
         .where(pred)
         .agg(
             F.count("*").alias("n"),
@@ -57,87 +80,69 @@ def _content_digest(spark, pred: str):
 def test_compact_partition_hits_target_and_preserves_content(
     spark, fragmented_table
 ):
-    before = partition_file_stats(spark, TABLE, {"part": 1})
-    assert before["n_files"] > 5, "fixture not fragmented"
-    n_before, digest_before = _content_digest(spark, "part = 1")
-    other_before = _content_digest(spark, "part != 1")
+    path = fragmented_table
+    before = _files(path, 1)
+    assert len(before) > 5, "fixture not fragmented"
+    n_before, digest_before = _content_digest(spark, path, "part = 1")
+    other_before = _content_digest(spark, path, "part != 1")
+    healthy_before = _files(path, 0) + _files(path, 2)
 
     # Pick a target that forces a multi-file result strictly smaller
     # than the fragment count.
-    target = before["total_bytes"] // 3 + 1
-    expected = max(1, math.ceil(before["total_bytes"] / target))
-    assert 1 < expected < before["n_files"]
+    target = _bytes(path, before) // 3 + 1
+    expected = max(1, math.ceil(_bytes(path, before) / target))
+    assert 1 < expected < len(before)
 
-    # Files of an untouched partition must survive unrenamed (dynamic
-    # overwrite swaps only the compacted partition).
-    part0_dir = partition_file_stats(spark, TABLE, {"part": 0})["path"]
-    part0_files = sorted(os.listdir(part0_dir))
+    snapshot_compact(
+        spark, path, target_mb=target / 2**20, min_file_rows=FRAGMENT_ROWS
+    )
 
-    result = compact_partition(spark, TABLE, {"part": 1}, target_bytes=target)
-
-    assert result["target_files"] == expected
-    assert result["after"]["n_files"] == expected
-    assert _content_digest(spark, "part = 1") == (n_before, digest_before)
-    assert _content_digest(spark, "part != 1") == other_before
-    assert sorted(os.listdir(part0_dir)) == part0_files
+    assert len(_files(path, 1)) == expected
+    assert _content_digest(spark, path, "part = 1") == (n_before, digest_before)
+    assert _content_digest(spark, path, "part != 1") == other_before
+    # healthy partitions are carried by reference, never rewritten
+    assert _files(path, 0) + _files(path, 2) == healthy_before
 
 
 def test_compact_partition_single_file_noop(spark, fragmented_table):
-    """An already-healthy partition (<=1 file) is returned untouched —
-    no read, no rewrite."""
-    big_target = 10 * 2**30
-    r1 = compact_partition(spark, TABLE, {"part": 2}, target_bytes=big_target)
-    assert r1["after"]["n_files"] == 1
-    files = sorted(os.listdir(r1["after"]["path"]))
-    r2 = compact_partition(spark, TABLE, {"part": 2}, target_bytes=big_target)
-    assert r2["before"] == r2["after"]
-    assert sorted(os.listdir(r2["after"]["path"])) == files
+    """Once no partition holds two fragments, compaction is a no-op:
+    no read, no rewrite, no new version."""
+    path = fragmented_table
+    v1 = snapshot_compact(spark, path, min_file_rows=FRAGMENT_ROWS)
+    files = _files(path)
+    assert len(_files(path, 2)) == 1
+    assert snapshot_compact(spark, path, min_file_rows=FRAGMENT_ROWS) == v1
+    assert list_versions(path)[-1] == v1
+    assert _files(path) == files
 
 
-def test_compact_table_sweeps_only_fragmented_partitions(spark):
-    """compact_table finds fragmented partitions from metadata alone and
-    repairs each; a second sweep is a no-op (already healthy)."""
-    from nyc_taxi_data_warehouse_spark.warehouse.layout import compact_table
+def test_compact_table_sweeps_only_fragmented_partitions(spark, tmp_path):
+    """One targeted compaction finds every fragmented partition from
+    manifest row counts alone and repairs each, carrying the healthy
+    partition's file; a second sweep is a no-op (already healthy)."""
+    path = str(tmp_path / "sweep")
+    _build_fragmented(spark, path, fragmented=[0, 1, 2], healthy=[3])
+    fragments = {p: _files(path, p) for p in range(3)}
+    healthy = _files(path, 3)
+    assert len(healthy) == 1
+    target = _bytes(path, fragments[0]) // 3 + 1  # healthy ≈ 3 files per part
+    before = _content_digest(spark, path)
 
-    table = "compact_sweep_probe"
-    _build_fragmented(spark, table)  # fresh: all 3 partitions fragmented
-    try:
-        stats = partition_file_stats(spark, table, {"part": 0})
-        target = stats["total_bytes"] // 3 + 1  # healthy ≈ 3 files per part
+    v = snapshot_compact(
+        spark, path, target_mb=target / 2**20, min_file_rows=FRAGMENT_ROWS
+    )
+    man = load_manifest(path, v)
+    assert man["files_compacted"] == sum(map(len, fragments.values()))
+    assert man["files_carried"] == 1
+    for p, frag in fragments.items():
+        assert 1 < len(_files(path, p)) < len(frag)
+    assert _files(path, 3) == healthy
+    assert _content_digest(spark, path) == before
 
-        def digest():
-            row = (
-                spark.table(table)
-                .agg(
-                    F.count("*").alias("n"),
-                    F.sum(
-                        F.xxhash64("id", "payload").cast("decimal(38,0)")
-                    ).alias("digest"),
-                )
-                .collect()[0]
-            )
-            return row["n"], row["digest"]
-
-        before = digest()
-        results = compact_table(spark, table, target_bytes=target)
-        assert len(results) == 3  # every fragmented partition swept
-        for r in results:
-            assert r["after"]["n_files"] == r["target_files"]
-            assert r["after"]["n_files"] < r["before"]["n_files"]
-        assert digest() == before
-
-        # recompression can shift a partition's healthy count by one —
-        # repeated sweeps must strictly shrink and quiesce to []
-        for _ in range(3):
-            again = compact_table(spark, table, target_bytes=target)
-            if not again:
-                break
-            for r in again:
-                assert r["after"]["n_files"] < r["before"]["n_files"]
-        assert compact_table(spark, table, target_bytes=target) == []
-        assert digest() == before
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    assert snapshot_compact(
+        spark, path, target_mb=target / 2**20, min_file_rows=FRAGMENT_ROWS
+    ) == v
+    assert _content_digest(spark, path) == before
 
 
 def test_compact_index_minhash_two_subtables(spark, tmp_path):

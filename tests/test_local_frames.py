@@ -29,7 +29,7 @@ import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from nyc_taxi_data_warehouse_spark.session import local_frame
-from nyc_taxi_data_warehouse_spark.warehouse import load_month, snapshots
+from nyc_taxi_data_warehouse_spark.warehouse import backfill, load_month, snapshots
 from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
     Range,
     _manifest_at,
@@ -378,6 +378,24 @@ def test_load_month_is_raw_inference_plus_write(spark, tmp_path):
     )
     assert res[0].rows == 50
     assert n == 2
+
+
+def test_backfill_of_loaded_months_runs_no_job(spark, tmp_path):
+    """The loaded set and the manifest are both driver-held lists, so
+    filtering one by the other launches nothing."""
+    raw = str(tmp_path / "raw.parquet")
+    _make_raw_month(spark, raw, 2025, 1, n=10)
+    fact = str(tmp_path / "fact")
+    load_month(spark, raw, 2025, 1, snapshot_path=fact)
+    res = []
+    n = _jobs(
+        spark,
+        lambda: res.append(
+            backfill(spark, [(raw, 2025, 1)], snapshot_path=fact)
+        ),
+    )
+    assert res == [[]]
+    assert n == 0
 
 
 def test_first_read_after_a_write_runs_no_job(spark, tmp_path):

@@ -576,11 +576,16 @@ cdc_events = st.lists(
 @given(events=cdc_events, cut=st.integers(0, 11), flip=st.booleans())
 @settings(max_examples=4, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_versioned_merge_order_independent(spark, events, cut, flip):
+def test_versioned_merge_order_independent(spark, tmp_path_factory, events, cut, flip):
     """Splitting a CDC event set into two batches and applying them in
-    either order must converge to max-version-per-key — the pure-Python
-    fold of the same events."""
-    from nyc_taxi_data_warehouse_spark.warehouse import merge_upsert
+    either order (one DV merge commit each, as ``stream_upsert`` does)
+    must converge to max-version-per-key — the pure-Python fold of the
+    same events."""
+    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+        read_snapshot,
+        snapshot_merge,
+        snapshot_write,
+    )
 
     rows = [(k, k % 2, k * 100 + ver, ver) for k, ver in events]
     cut = min(cut, len(rows))
@@ -589,13 +594,14 @@ def test_versioned_merge_order_independent(spark, events, cut, flip):
         batches = batches[::-1]
 
     schema = "k int, pt int, v int, ver int"
-    spark.createDataFrame([], schema).write.mode("overwrite").format(
-        "parquet"
-    ).partitionBy("pt").saveAsTable("cdc_prop_tgt")
+    tgt = str(tmp_path_factory.mktemp("cdc_prop") / "tgt")
+    snapshot_write(
+        spark.createDataFrame([], schema), tgt, partition_cols=["pt"]
+    )
     for b in batches:
-        merge_upsert(
-            spark, "cdc_prop_tgt", spark.createDataFrame(b, schema),
-            keys=["k"], partition_cols=["pt"], version_col="ver",
+        snapshot_merge(
+            spark, tgt, spark.createDataFrame(b, schema),
+            keys=["k"], partition_cols=["pt"], version_col="ver", mode="dv",
         )
 
     want = {}
@@ -604,7 +610,7 @@ def test_versioned_merge_order_independent(spark, events, cut, flip):
             want[k] = ver
     got = {
         r.k: (r.pt, r.v, r.ver)
-        for r in spark.table("cdc_prop_tgt").collect()
+        for r in read_snapshot(spark, tgt).collect()
     }
     assert got == {k: (k % 2, k * 100 + v, v) for k, v in want.items()}
 

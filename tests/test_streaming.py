@@ -19,6 +19,15 @@ from nyc_taxi_data_warehouse_spark.streaming import (
     tumbling_counts,
 )
 from nyc_taxi_data_warehouse_spark.streaming.windows import run_stream_to_memory
+from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+    list_versions,
+    load_manifest,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+    read_snapshot,
+    snapshot_merge,
+    snapshot_write,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -328,14 +337,18 @@ def test_rollup_merge_many_days_batch(spark, tmp_path, monkeypatch):
     assert merged_row["n"] == 2 and merged_row["value_cents"] == 10000
 
 
+def _cdc_state(spark, path, cols):
+    return sorted(
+        tuple(r) for r in read_snapshot(spark, path).select(*cols).collect()
+    )
+
+
 def test_cdc_stream_upsert_applies_and_is_idempotent(spark, tmp_path):
     """A 3-micro-batch CDC feed merged via stream_upsert must leave the
     target equal to the one-shot expected state (keys unique across
     batches, so arrival order is immaterial); a checkpoint restart with
     no new files must change nothing; and untouched partitions must
-    never be rewritten."""
-    import os as _os
-
+    keep exactly their files."""
     from nyc_taxi_data_warehouse_spark.streaming import stream_upsert
 
     base = spark.range(0, 100).select(
@@ -344,9 +357,8 @@ def test_cdc_stream_upsert_applies_and_is_idempotent(spark, tmp_path):
         F.lit(0).alias("v"),
         F.lit(0).alias("ver"),
     )
-    base.write.mode("overwrite").format("parquet").partitionBy("pt").saveAsTable(
-        "cdc_tgt"
-    )
+    tgt = str(tmp_path / "cdc_tgt")
+    snapshot_write(base, tgt, partition_cols=["pt"])
 
     # updates touch pt 0 (k multiples of 5 in 50..129): 10 corrections +
     # 6 inserts, all landing in partition 0; pt 1..4 must stay untouched
@@ -364,14 +376,11 @@ def test_cdc_stream_upsert_applies_and_is_idempotent(spark, tmp_path):
     updates.repartition(3).write.parquet(src)
     ckpt = str(tmp_path / "cdc_ckpt")
 
-    tgt_dir = spark.table("cdc_tgt").inputFiles()[0].rsplit("/", 2)[0]
-    tgt_dir = tgt_dir.removeprefix("file://")
-    pt1 = [f for f in _os.listdir(tgt_dir) if f.startswith("pt=1")]
-    mtime_before = max(
-        _os.path.getmtime(_os.path.join(tgt_dir, pt1[0], f))
-        for f in _os.listdir(_os.path.join(tgt_dir, pt1[0]))
-        if f.endswith(".parquet")
-    )
+    def untouched_files():
+        files = load_manifest(tgt, list_versions(tgt)[-1])["files"]
+        return sorted(f for f in files if "/pt=0/" not in f)
+
+    files_before = untouched_files()
 
     def feed():
         return (
@@ -381,34 +390,30 @@ def test_cdc_stream_upsert_applies_and_is_idempotent(spark, tmp_path):
         )
 
     stream_upsert(
-        spark, feed(), "cdc_tgt", keys=["k"], partition_cols=["pt"],
+        spark, feed(), tgt, keys=["k"], partition_cols=["pt"],
         version_col="ver", checkpoint=ckpt,
     )
 
-    got = sorted((r.k, r.v) for r in spark.table("cdc_tgt").collect())
+    got = _cdc_state(spark, tgt, ["k", "v"])
     want = sorted(
         [(k, 0) for k in range(100) if not (k % 5 == 0 and k >= 50)]
         + [(k, 1) for k in range(50, 130, 5)]
     )
     assert got == want
-
-    # untouched partition: no file rewritten
-    mtime_after = max(
-        _os.path.getmtime(_os.path.join(tgt_dir, pt1[0], f))
-        for f in _os.listdir(_os.path.join(tgt_dir, pt1[0]))
-        if f.endswith(".parquet")
-    )
-    assert mtime_after == mtime_before
+    # one merge commit per micro-batch; untouched partitions keep their files
+    assert len(list_versions(tgt)) == 4
+    assert untouched_files() == files_before
 
     # restart on the same checkpoint: nothing reapplied
     stream_upsert(
-        spark, feed(), "cdc_tgt", keys=["k"], partition_cols=["pt"],
+        spark, feed(), tgt, keys=["k"], partition_cols=["pt"],
         version_col="ver", checkpoint=ckpt,
     )
-    assert sorted((r.k, r.v) for r in spark.table("cdc_tgt").collect()) == want
+    assert len(list_versions(tgt)) == 4
+    assert _cdc_state(spark, tgt, ["k", "v"]) == want
 
 
-def test_cdc_out_of_order_batches_converge(spark):
+def test_cdc_out_of_order_batches_converge(spark, tmp_path):
     """Cross-batch ordering: with version_col persisted in the target,
     applying (b1 then b2) and (b2 then b1) must yield identical tables —
     the later version wins regardless of arrival order — and
@@ -416,8 +421,6 @@ def test_cdc_out_of_order_batches_converge(spark):
     cross-checked against a DuckDB max-by-version oracle over the union
     of base + both batches."""
     import duckdb
-
-    from nyc_taxi_data_warehouse_spark.warehouse import merge_upsert
 
     base = spark.range(0, 20).select(
         F.col("id").alias("k"),
@@ -440,34 +443,27 @@ def test_cdc_out_of_order_batches_converge(spark):
         F.lit(2).alias("v"),
         F.lit(2).alias("ver"),
     )
+    cols = ["k", "pt", "v", "ver"]
 
-    def state(table):
-        return sorted(
-            (r.k, r.pt, r.v, r.ver) for r in spark.table(table).collect()
+    def merge(path, batch):
+        snapshot_merge(
+            spark, path, batch, keys=["k"], partition_cols=["pt"],
+            version_col="ver", mode="dv",
         )
 
-    for table, batches in [
-        ("cdc_ooo_a", (b1, b2)),
-        ("cdc_ooo_b", (b2, b1)),
-    ]:
-        base.write.mode("overwrite").format("parquet").partitionBy(
-            "pt"
-        ).saveAsTable(table)
+    paths = {}
+    for name, batches in [("a", (b1, b2)), ("b", (b2, b1))]:
+        paths[name] = str(tmp_path / f"cdc_ooo_{name}")
+        snapshot_write(base, paths[name], partition_cols=["pt"])
         for b in batches:
-            merge_upsert(
-                spark, table, b, keys=["k"], partition_cols=["pt"],
-                version_col="ver",
-            )
+            merge(paths[name], b)
 
-    in_order = state("cdc_ooo_a")
-    assert in_order == state("cdc_ooo_b")
+    in_order = _cdc_state(spark, paths["a"], cols)
+    assert in_order == _cdc_state(spark, paths["b"], cols)
 
     # redelivery of an old batch: no-op
-    merge_upsert(
-        spark, "cdc_ooo_a", b1, keys=["k"], partition_cols=["pt"],
-        version_col="ver",
-    )
-    assert state("cdc_ooo_a") == in_order
+    merge(paths["a"], b1)
+    assert _cdc_state(spark, paths["a"], cols) == in_order
 
     # oracle: max-by-version per key over everything ever fed
     feed = (
@@ -512,6 +508,7 @@ def test_cdc_stream_upsert_survives_mid_feed_kill(spark, tmp_path, monkeypatch):
         batch.coalesce(1).write.mode("append").parquet(src)
 
     schema = base.schema
+    cols = ["k", "v", "ver"]
 
     def feed():
         return (
@@ -521,42 +518,39 @@ def test_cdc_stream_upsert_survives_mid_feed_kill(spark, tmp_path, monkeypatch):
         )
 
     # Reference: one uninterrupted run into its own target.
-    base.write.mode("overwrite").format("parquet").partitionBy("pt").saveAsTable(
-        "cdc_kill_ref"
-    )
+    ref = str(tmp_path / "cdc_kill_ref")
+    snapshot_write(base, ref, partition_cols=["pt"])
     stream_upsert(
-        spark, feed(), "cdc_kill_ref", keys=["k"], partition_cols=["pt"],
+        spark, feed(), ref, keys=["k"], partition_cols=["pt"],
         version_col="ver", checkpoint=str(tmp_path / "ckpt_ref"),
     )
-    want = sorted((r.k, r.v, r.ver) for r in spark.table("cdc_kill_ref").collect())
+    want = _cdc_state(spark, ref, cols)
 
     # Crash run: batch 2's merge raises (batch 1 already checkpointed).
-    base.write.mode("overwrite").format("parquet").partitionBy("pt").saveAsTable(
-        "cdc_kill_tgt"
-    )
-    real_merge = cdc_mod.merge_upsert
+    tgt = str(tmp_path / "cdc_kill_tgt")
+    snapshot_write(base, tgt, partition_cols=["pt"])
+    real_merge = cdc_mod.snapshot_merge
     seen_vers: list[int] = []
 
-    def flaky_merge(spark_, table, batch, **kwargs):
+    def flaky_merge(spark_, path, batch, *args, **kwargs):
         ver = batch.agg(F.max("ver")).collect()[0][0]
         seen_vers.append(ver)
         if len(seen_vers) == 2:
             raise RuntimeError("injected crash before batch 2's merge")
-        return real_merge(spark_, table, batch, **kwargs)
+        return real_merge(spark_, path, batch, *args, **kwargs)
 
-    monkeypatch.setattr(cdc_mod, "merge_upsert", flaky_merge)
+    monkeypatch.setattr(cdc_mod, "snapshot_merge", flaky_merge)
     ckpt = str(tmp_path / "ckpt_kill")
     with pytest.raises(StreamingQueryException, match="injected crash"):
         stream_upsert(
-            spark, feed(), "cdc_kill_tgt", keys=["k"], partition_cols=["pt"],
+            spark, feed(), tgt, keys=["k"], partition_cols=["pt"],
             version_col="ver", checkpoint=ckpt,
         )
 
     # Restart from the same checkpoint: resumes at batch 2, applies 2+3.
     stream_upsert(
-        spark, feed(), "cdc_kill_tgt", keys=["k"], partition_cols=["pt"],
+        spark, feed(), tgt, keys=["k"], partition_cols=["pt"],
         version_col="ver", checkpoint=ckpt,
     )
     assert seen_vers == [1, 2, 2, 3]  # batch 1 merged exactly once
-    got = sorted((r.k, r.v, r.ver) for r in spark.table("cdc_kill_tgt").collect())
-    assert got == want
+    assert _cdc_state(spark, tgt, cols) == want

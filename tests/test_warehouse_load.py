@@ -2,15 +2,17 @@
 
 Builds a synthetic raw FHVHV file — 13 consumed columns with source names
 (PULocationID/DOLocationID as int64) plus decoy columns the projection must
-drop — then exercises load_month/backfill semantics: schema parity,
-idempotent re-run (no double insert), partition overwrite, ingest-log
-anti-join.
+drop — then exercises load_month/backfill semantics against the snapshot
+fact table: schema parity, idempotent re-run (no double insert),
+partition replace, provenance-filtered backfill, keyed MERGE.
 """
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
 import os
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +23,16 @@ from nyc_taxi_data_warehouse_spark.warehouse import (
     backfill,
     init_warehouse,
     load_month,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.catalog import (
+    FACT_TABLE,
+    fact_path,
+)
+from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
+    _SQL_REGISTRY,
+    read_snapshot,
+    snapshot_merge,
+    snapshot_versions,
 )
 
 
@@ -78,9 +90,26 @@ def raw_root(spark, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def warehouse(spark):
-    init_warehouse(spark, database="test_wh")
-    return spark
+def warehouse(spark, tmp_path_factory):
+    """The session over a fresh warehouse root: ``init_warehouse`` has
+    created the fact table at its default path and bound its name."""
+    root = str(tmp_path_factory.mktemp("wh_root"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_CATALOG_ROOT", root)
+        init_warehouse(spark)
+        yield spark
+        _forget_name(spark, FACT_TABLE)
+
+
+def _forget_name(spark, name):
+    """Drop a name's session registration, as a new process starts."""
+    _SQL_REGISTRY.pop(name, None)
+    spark.catalog.dropTempView(name)
+
+
+def _fact(spark):
+    """The fact table's head at its default path."""
+    return read_snapshot(spark, fact_path(spark))
 
 
 def test_load_month_schema_and_rows(warehouse, raw_root):
@@ -88,7 +117,7 @@ def test_load_month_schema_and_rows(warehouse, raw_root):
     path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
     res = load_month(spark, path, 2025, 1)
     assert not res.skipped and res.rows == 200
-    fact = spark.table("fhvhv_tripdata")
+    fact = _fact(spark)
     data_cols = [f for f in fact.schema.fields if f.name not in ("year", "month")]
     assert [(f.name, f.dataType) for f in data_cols] == [
         (f.name, f.dataType) for f in FHVHV_WAREHOUSE_SCHEMA.fields
@@ -98,66 +127,131 @@ def test_load_month_schema_and_rows(warehouse, raw_root):
 
 
 def test_load_month_idempotent(warehouse, raw_root):
+    """Skip on re-run (the manifest's load provenance, not a log table),
+    partition replace (never double-insert) on force: each real load is
+    one replace_partitions version."""
     spark = warehouse
     path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
-    before = spark.table("fhvhv_tripdata").where("year=2025 AND month=1").count()
-    res = load_month(spark, path, 2025, 1)  # re-run → skip via ingest_log
+    load_month(spark, path, 2025, 1)
+    before = _fact(spark).where("year=2025 AND month=1").count()
+    n_versions = len(snapshot_versions(spark, fact_path(spark)))
+    res = load_month(spark, path, 2025, 1)  # re-run → skip via provenance
     assert res.skipped
-    res = load_month(spark, path, 2025, 1, force=True)  # forced → overwrite
+    assert len(snapshot_versions(spark, fact_path(spark))) == n_versions
+    res = load_month(spark, path, 2025, 1, force=True)  # forced → replace
     assert not res.skipped and res.rows == before
-    after = spark.table("fhvhv_tripdata").where("year=2025 AND month=1").count()
-    assert after == before  # partition overwrite, never double-insert
+    hist = snapshot_versions(spark, fact_path(spark))
+    assert [h["op"] for h in hist[n_versions:]] == ["replace_partitions"]
+    after = _fact(spark).where("year=2025 AND month=1").count()
+    assert after == before  # partition replace, never double-insert
+
+
+def test_load_month_refuses_other_backends(warehouse, raw_root):
+    path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
+    with pytest.raises(ValueError, match="backend must be 'snapshot'"):
+        load_month(warehouse, path, 2025, 1, backend="managed")
+
+
+def test_load_month_raises_on_a_storage_fault(
+    warehouse, raw_root, tmp_path, monkeypatch
+):
+    """A failing version listing is not "nothing loaded yet": the load
+    raises and commits nothing, instead of reloading the month."""
+    from nyc_taxi_data_warehouse_spark.warehouse import manifestlog
+
+    spark = warehouse
+    snap = str(tmp_path / "fault_fact")
+    path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
+    load_month(spark, path, 2025, 1, snapshot_path=snap)
+
+    def broken(_path):
+        raise OSError("storage unavailable")
+
+    with monkeypatch.context() as m:
+        m.setattr(manifestlog, "list_versions", broken)
+        with pytest.raises(OSError, match="storage unavailable"):
+            load_month(spark, path, 2025, 1, snapshot_path=snap)
+    assert [h["op"] for h in snapshot_versions(spark, snap)] == [
+        "replace_partitions"
+    ]
 
 
 def test_backfill_anti_join(warehouse, raw_root):
     spark = warehouse
+    load_month(
+        spark,
+        os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet"),
+        2025, 1,
+    )
     manifest = discover_local(raw_root)
     assert [(y, m) for _, y, m in manifest] == [(2025, 1), (2025, 2)]
     results = backfill(spark, manifest)
-    # 2025-01 already ingested → anti-join leaves only 2025-02
+    # 2025-01 already ingested → only 2025-02 loads
     assert [(r.year, r.month, r.skipped) for r in results] == [(2025, 2, False)]
-    assert spark.table("fhvhv_tripdata").where("year=2025 AND month=2").count() == 150
+    assert _fact(spark).where("year=2025 AND month=2").count() == 150
     # whole-table totals: both months, exactly once
-    assert spark.table("fhvhv_tripdata").count() == 350
+    assert _fact(spark).count() == 350
 
 
-def test_partition_pruning(warehouse):
+def test_partition_pruning(warehouse, raw_root):
+    """A one-month read opens only that month's files: the manifest
+    prunes them before any file opens."""
     spark = warehouse
-    q = spark.table("fhvhv_tripdata").where("year=2025 AND month=2")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    # the month filter must be partition pruning, not a row filter
-    assert "PartitionFilters" in plan or "partition" in plan.lower()
+    for month in (1, 2):
+        load_month(
+            spark,
+            os.path.join(raw_root, "2025", f"fhvhv_tripdata_2025-{month:02d}.parquet"),
+            2025, month,
+        )
+    q = read_snapshot(
+        spark, fact_path(spark), partitions={"year": 2025, "month": 2}
+    )
+    files = q.inputFiles()
+    assert files and all("/year=2025/month=2/" in f for f in files)
+    assert q.count() == 150
 
 
-def test_cli_end_to_end(spark, tmp_path):
-    """init → load-month → idempotent re-run → sql, via the CLI (with the
-    test session injected so the CLI doesn't tear it down)."""
+def test_cli_end_to_end(spark, tmp_path, monkeypatch, capsys):
+    """init → load-month → idempotent re-run → sql by name → OPTIMIZE,
+    via the CLI (with the test session injected so the CLI doesn't tear
+    it down); a fresh session resolves the name from the durable
+    catalog."""
+    import json as _json
+
     from nyc_taxi_data_warehouse_spark.__main__ import main
 
+    monkeypatch.setenv("SPARK_GRAFT_CATALOG_ROOT", str(tmp_path / "wh"))
     raw = str(tmp_path / "fhvhv_tripdata_2025-05.parquet")
     _make_raw_month(spark, raw, 2025, 5, n=60)
 
     cli = lambda *a: main(list(a), spark=spark)  # noqa: E731
-    assert cli("init") == 0
-    assert cli("load-month", "--path", raw, "--year", "2025", "--month", "5") == 0
-    # second run: skipped, still exit 0 (idempotent)
-    assert cli("load-month", "--path", raw, "--year", "2025", "--month", "5") == 0
-    n = spark.sql(
-        "SELECT count(*) AS n FROM nyc_taxi.fhvhv_tripdata WHERE year=2025 AND month=5"
-    ).collect()[0]["n"]
-    assert n == 60
-    assert cli("sql", "SELECT 1 AS one") == 0
-    # compaction sweep over the fact table runs clean (likely nothing
-    # fragmented at this size — exit 0 and row counts unchanged matter)
-    assert cli("compact", "--table", "nyc_taxi.fhvhv_tripdata") == 0
-    n2 = spark.sql(
-        "SELECT count(*) AS n FROM nyc_taxi.fhvhv_tripdata WHERE year=2025 AND month=5"
-    ).collect()[0]["n"]
-    assert n2 == 60
+
+    def count():
+        capsys.readouterr()
+        assert cli(
+            "sql",
+            "SELECT count(*) AS n FROM fhvhv_tripdata WHERE year=2025 AND month=5",
+        ) == 0
+        return _json.loads(capsys.readouterr().out.strip().splitlines()[-1])["n"]
+
+    try:
+        assert cli("init") == 0
+        assert cli("load-month", "--path", raw, "--year", "2025", "--month", "5") == 0
+        # second run: skipped, still exit 0 (idempotent)
+        capsys.readouterr()
+        assert cli("load-month", "--path", raw, "--year", "2025", "--month", "5") == 0
+        assert _json.loads(capsys.readouterr().out)["skipped"]
+        assert count() == 60
+        assert cli("sql", "OPTIMIZE fhvhv_tripdata") == 0
+        assert count() == 60
+        _forget_name(spark, FACT_TABLE)
+        assert count() == 60
+    finally:
+        _forget_name(spark, FACT_TABLE)
 
 
 def test_monthly_zone_pay_flagship(warehouse, raw_root):
-    """SURVEY §7 phase-1 query: partition-pruned scan + broadcast zone dim
+    """SURVEY §7 phase-1 query: manifest-pruned scan + broadcast zone dim
     + hash agg + top-k, verified against a direct recomputation."""
     from nyc_taxi_data_warehouse_spark.plans import assert_broadcast_join
     from nyc_taxi_data_warehouse_spark.warehouse.queries import (
@@ -176,6 +270,9 @@ def test_monthly_zone_pay_flagship(warehouse, raw_root):
     # top-k must run as TakeOrderedAndProject (no global sort)
     plan = result._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
+    # only the month's files are scanned
+    files = result.inputFiles()
+    assert files and all("/year=2025/month=1/" in f for f in files)
 
     # cross-check one zone against a direct recomputation from the raw file
     top = rows[0]
@@ -193,15 +290,21 @@ def test_monthly_zone_pay_flagship(warehouse, raw_root):
     assert taxi_zone_dim(spark).count() == 265
 
 
-def test_analyze_table_feeds_cbo(warehouse):
+def test_analyze_table_feeds_cbo(spark):
     from nyc_taxi_data_warehouse_spark.warehouse.layout import analyze
 
-    spark = warehouse
-    analyze(spark, "fhvhv_tripdata", columns=["pu_location_id", "driver_pay"])
-    stats = spark.sql("DESCRIBE TABLE EXTENDED fhvhv_tripdata").where(
-        "col_name = 'Statistics'"
-    ).collect()
-    assert stats and "bytes" in stats[0]["data_type"]
+    table = "cbo_probe"
+    spark.range(0, 100).selectExpr(
+        "id", "cast(id % 7 AS double) AS pay"
+    ).write.mode("overwrite").saveAsTable(table)
+    try:
+        analyze(spark, table, columns=["id", "pay"])
+        stats = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").where(
+            "col_name = 'Statistics'"
+        ).collect()
+        assert stats and "bytes" in stats[0]["data_type"]
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def test_load_rejects_malformed_raw_file(warehouse, tmp_path):
@@ -217,12 +320,12 @@ def test_load_rejects_malformed_raw_file(warehouse, tmp_path):
     spark.createDataFrame(
         [("HV0003", 12)], "hvfhs_license_num string, PULocationID long"
     ).write.parquet(bad)
+    n_versions = len(snapshot_versions(spark, fact_path(spark)))
     with pytest.raises(RawSchemaError, match="missing column 'driver_pay'"):
         load_month(spark, bad, 2026, 1)
     # nothing was written for the month
-    assert (
-        spark.table("fhvhv_tripdata").where("year=2026 AND month=1").count() == 0
-    )
+    assert len(snapshot_versions(spark, fact_path(spark))) == n_versions
+    assert _fact(spark).where("year=2026 AND month=1").count() == 0
 
 
 def test_constraint_checks_single_pass(warehouse, raw_root):
@@ -251,24 +354,38 @@ def test_constraint_checks_single_pass(warehouse, raw_root):
     assert got["pu_zone_in_domain"] == 200 and got["do_zone_in_domain"] == 0
 
 
-def test_merge_upsert(warehouse, raw_root):
-    """MERGE semantics on the plain parquet fact table: matched rows are
-    replaced, new rows inserted, untouched partitions never rewritten."""
-    from nyc_taxi_data_warehouse_spark.warehouse import merge_upsert
+def _load_both_months(spark, raw_root):
+    for month in (1, 2):
+        load_month(
+            spark,
+            os.path.join(raw_root, "2025", f"fhvhv_tripdata_2025-{month:02d}.parquet"),
+            2025, month, force=True,
+        )
 
-    spark = warehouse
-    # ensure both months are loaded (module fixtures may run in any order)
-    for month, path in [
-        (1, os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")),
-        (2, os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-02.parquet")),
-    ]:
-        load_month(spark, path, 2025, month, force=True)
-    fact = spark.table("fhvhv_tripdata")
-    m1_before = fact.where("year=2025 AND month=1").count()
-    m2_rows_before = sorted(
-        (r.request_datetime, r.driver_pay)
-        for r in fact.where("year=2025 AND month=2").collect()
+
+def _month_files(spark, month):
+    from nyc_taxi_data_warehouse_spark.warehouse.manifestlog import (
+        list_versions,
+        load_manifest,
     )
+
+    path = fact_path(spark)
+    files = load_manifest(path, list_versions(path)[-1])["files"]
+    return sorted(f for f in files if f"/month={month}/" in f)
+
+
+MERGE_KEYS = ["request_datetime", "dispatching_base_num", "pu_location_id"]
+
+
+def test_merge_upsert(warehouse, raw_root):
+    """MERGE semantics on the snapshot fact table: matched rows are
+    replaced, new rows inserted, untouched partitions carried by
+    reference (never rewritten)."""
+    spark = warehouse
+    _load_both_months(spark, raw_root)
+    fact = _fact(spark)
+    m1_before = fact.where("year=2025 AND month=1").count()
+    m2_files = _month_files(spark, 2)
 
     # corrections: overwrite driver_pay for 3 existing month-1 trips
     # (keyed by request_datetime+base) and insert 2 brand-new trips
@@ -288,33 +405,26 @@ def test_merge_upsert(warehouse, raw_root):
     )
     updates = corrections.unionByName(inserts)
 
-    keys = ["request_datetime", "dispatching_base_num", "pu_location_id"]
-    written = merge_upsert(
-        spark, "fhvhv_tripdata", updates, keys=keys, partition_cols=["year", "month"]
+    snapshot_merge(
+        spark, fact_path(spark), updates, keys=MERGE_KEYS,
+        partition_cols=["year", "month"],
     )
-    assert written == m1_before + 2
 
-    fact = spark.table("fhvhv_tripdata")
+    fact = _fact(spark)
     assert fact.where("year=2025 AND month=1").count() == m1_before + 2
     # the 3 corrections carry the new pay; the 2 inserts keep the original
     assert fact.where("year=2025 AND month=1 AND driver_pay = 999.99").count() == 3
-    # the untouched month-2 partition is byte-identical
-    m2_rows_after = sorted(
-        (r.request_datetime, r.driver_pay)
-        for r in fact.where("year=2025 AND month=2").collect()
-    )
-    assert m2_rows_after == m2_rows_before
+    # the untouched month-2 partition keeps exactly its files
+    assert _month_files(spark, 2) == m2_files
 
 
 def test_merge_upsert_last_writer_wins(warehouse, raw_root):
     """A batch with several versions of one key applies only the highest
     version, deterministically."""
-    from nyc_taxi_data_warehouse_spark.warehouse import merge_upsert
-
     spark = warehouse
     path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
     load_month(spark, path, 2025, 1, force=True)
-    fact = spark.table("fhvhv_tripdata")
+    fact = _fact(spark)
     n_before = fact.where("year=2025 AND month=1").count()
     row = (
         fact.where("year=2025 AND month=1").orderBy("request_datetime").limit(1).collect()[0]
@@ -327,16 +437,15 @@ def test_merge_upsert_last_writer_wins(warehouse, raw_root):
         ],
         fact.schema,
     )
-    keys = ["request_datetime", "dispatching_base_num", "pu_location_id"]
-    merge_upsert(
+    snapshot_merge(
         spark,
-        "fhvhv_tripdata",
+        fact_path(spark),
         versions,
-        keys=keys,
+        keys=MERGE_KEYS,
         partition_cols=["year", "month"],
         version_col="tips",
     )
-    fact = spark.table("fhvhv_tripdata")
+    fact = _fact(spark)
     assert fact.where("year=2025 AND month=1").count() == n_before
     got = fact.where(
         (F.col("year") == 2025)
@@ -349,88 +458,39 @@ def test_merge_upsert_last_writer_wins(warehouse, raw_root):
 
 
 def test_merge_upsert_prunes_to_touched_partitions(warehouse, raw_root):
-    """The target-side scan must carry a partition filter from the
-    broadcast semi-join (pruning, not a full-table read)."""
-    from nyc_taxi_data_warehouse_spark.warehouse import merge_upsert
-
+    """The target-side read joins the broadcast touched partitions, and
+    only the touched month gets new files."""
     spark = warehouse
-    for month, path in [
-        (1, os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")),
-        (2, os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-02.parquet")),
-    ]:
-        load_month(spark, path, 2025, month, force=True)
-    fact = spark.table("fhvhv_tripdata")
+    _load_both_months(spark, raw_root)
+    fact = _fact(spark)
     one = fact.where("year=2025 AND month=1").limit(1).collect()[0]
     updates = spark.createDataFrame(
         [tuple(one[c] for c in fact.columns)], fact.schema
     )
-    keys = ["request_datetime", "dispatching_base_num", "pu_location_id"]
 
-    # reproduce the pre-checkpoint plan merge_upsert builds and assert
-    # the semi-join reaches the scan as a dynamic/partition filter
+    # the touched-partition semi-join the merge builds over the head
     touched = updates.select("year", "month").distinct()
     current = fact.join(F.broadcast(touched), ["year", "month"], "left_semi")
     plan = current._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
-    written = merge_upsert(
-        spark, "fhvhv_tripdata", updates, keys=keys, partition_cols=["year", "month"]
+    m1_files, m2_files = _month_files(spark, 1), _month_files(spark, 2)
+    snapshot_merge(
+        spark, fact_path(spark), updates, keys=MERGE_KEYS,
+        partition_cols=["year", "month"],
     )
-    # only month-1 rows were rewritten
-    assert written == fact.where("year=2025 AND month=1").count()
-
-
-def test_merge_upsert_via_staging_path(warehouse, raw_root, tmp_path):
-    """staging_path merge (durable staging write + partition swap) must
-    produce exactly the table the localCheckpoint path produces."""
-    from nyc_taxi_data_warehouse_spark.warehouse import merge_upsert
-
-    spark = warehouse
-    path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
-    keys = ["request_datetime", "dispatching_base_num", "pu_location_id"]
-
-    def run(staging):
-        load_month(spark, path, 2025, 1, force=True)
-        fact = spark.table("fhvhv_tripdata")
-        sample = (
-            fact.where("year=2025 AND month=1")
-            .orderBy("request_datetime")
-            .limit(3)
-            .collect()
-        )
-        ups = spark.createDataFrame(
-            [tuple(r[c] for c in fact.columns) for r in sample], fact.schema
-        ).withColumn("driver_pay", F.lit(777.77))
-        n = merge_upsert(
-            spark, "fhvhv_tripdata", ups, keys=keys,
-            partition_cols=["year", "month"], staging_path=staging,
-        )
-        rows = sorted(
-            map(tuple, spark.table("fhvhv_tripdata").where("year=2025 AND month=1").collect())
-        )
-        return n, rows
-
-    n_ckpt, rows_ckpt = run(None)
-    n_stage, rows_stage = run(str(tmp_path / "merge_staging"))
-    assert n_stage == n_ckpt
-    assert rows_stage == rows_ckpt
-    assert (tmp_path / "merge_staging").exists()
+    assert _month_files(spark, 2) == m2_files
+    assert set(_month_files(spark, 1)).isdisjoint(m1_files)
+    assert _fact(spark).where("year=2025 AND month=1").count() == 200
 
 
 def test_merge_upsert_safe_on_untuned_session(warehouse, raw_root):
     """A session left on Spark's static partitionOverwriteMode default
     (e.g. the external driver's untuned session) must NOT lose untouched
-    partitions: the write entry points self-apply the engine confs."""
-    from nyc_taxi_data_warehouse_spark.warehouse import merge_upsert
-
+    partitions: a snapshot merge never overwrites in place."""
     spark = warehouse
-    for month in (1, 2):
-        load_month(
-            spark,
-            os.path.join(raw_root, "2025", f"fhvhv_tripdata_2025-{month:02d}.parquet"),
-            2025, month, force=True,
-        )
-    fact = spark.table("fhvhv_tripdata")
+    _load_both_months(spark, raw_root)
+    fact = _fact(spark)
     m2_before = fact.where("year=2025 AND month=2").count()
     assert m2_before > 0
     one = fact.where("year=2025 AND month=1").limit(1).collect()[0]
@@ -441,86 +501,39 @@ def test_merge_upsert_safe_on_untuned_session(warehouse, raw_root):
     key = "spark.sql.sources.partitionOverwriteMode"
     spark.conf.set(key, "static")  # simulate an untuned session
     try:
-        merge_upsert(
-            spark, "fhvhv_tripdata", ups,
-            keys=["request_datetime", "dispatching_base_num", "pu_location_id"],
+        snapshot_merge(
+            spark, fact_path(spark), ups, keys=MERGE_KEYS,
             partition_cols=["year", "month"],
         )
     finally:
         spark.conf.set(key, "dynamic")
-    assert spark.table("fhvhv_tripdata").where("year=2025 AND month=2").count() == m2_before
-    assert spark.table("fhvhv_tripdata").where("driver_pay = 555.55").count() == 1
+    assert _fact(spark).where("year=2025 AND month=2").count() == m2_before
+    assert _fact(spark).where("driver_pay = 555.55").count() == 1
 
 
-@pytest.mark.parametrize("backend", ["managed", "snapshot"])
-def test_load_month_idempotent_on_both_backends(
-    warehouse, raw_root, tmp_path, backend
-):
-    """r4 worklist: the reference's one fact table must be loadable on
-    EITHER storage backend with identical semantics — skip on re-run,
-    partition overwrite (never double-insert) on force, same rows. On
-    the snapshot backend idempotency comes from the manifest's load
-    provenance, not the ingest log."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot,
-        snapshot_versions,
-    )
-
-    spark = warehouse
-    path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
-    kw = (
-        {"backend": "snapshot", "snapshot_path": str(tmp_path / "snap_fact")}
-        if backend == "snapshot"
-        else {}
-    )
-    res = load_month(spark, path, 2025, 1, force=True, **kw)
-    assert not res.skipped and res.rows == 200
-    res = load_month(spark, path, 2025, 1, **kw)
-    assert res.skipped  # idempotent re-run
-    res = load_month(spark, path, 2025, 1, force=True, **kw)
-    assert not res.skipped and res.rows == 200
-
-    if backend == "snapshot":
-        tbl = read_snapshot(spark, kw["snapshot_path"])
-        hist = snapshot_versions(spark, kw["snapshot_path"])
-        # two real loads -> two versions, both replace_partitions
-        assert [h["op"] for h in hist] == ["replace_partitions"] * 2
-    else:
-        tbl = spark.table("fhvhv_tripdata")
-    month = tbl.where("year=2025 AND month=1")
-    assert month.count() == 200  # overwrite, never double-insert
-
-
-def test_load_backends_produce_identical_rows(warehouse, raw_root, tmp_path):
-    """Same raw file through both backends -> hash-identical fact rows
-    (the backends differ in storage mechanics only, never content)."""
-    from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
-        read_snapshot,
-    )
+def test_load_backends_produce_identical_rows(warehouse, raw_root):
+    """The loaded month is hash-identical to ``transform_raw`` of the raw
+    file: storage changes the mechanics only, never the content."""
+    from nyc_taxi_data_warehouse_spark.warehouse.load import transform_raw
 
     spark = warehouse
     path = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-02.parquet")
     load_month(spark, path, 2025, 2, force=True)
-    snap = str(tmp_path / "snap_fact2")
-    load_month(
-        spark, path, 2025, 2, force=True, backend="snapshot",
-        snapshot_path=snap,
-    )
-    managed = spark.table("fhvhv_tripdata").where("year=2025 AND month=2")
-    snapped = read_snapshot(spark, snap).where("year=2025 AND month=2")
-    cols = sorted(managed.columns)
-    assert sorted(snapped.columns) == cols
+    loaded = _fact(spark).where("year=2025 AND month=2").drop("year", "month")
+    want = transform_raw(spark.read.parquet(path))
+    cols = sorted(want.columns)
+    assert sorted(loaded.columns) == cols
     h = lambda df: df.select(  # noqa: E731
         F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
         F.count("*").alias("n"),
     ).collect()
-    assert h(managed) == h(snapped.select(*managed.columns))
+    assert h(loaded) == h(want)
 
 
 def test_backfill_snapshot_backend_manifest_anti_join(
     warehouse, raw_root, tmp_path
 ):
-    """backfill on the snapshot backend: already-landed months are
+    """backfill into an explicit table path: already-landed months are
     skipped via the manifest provenance scan, remaining months load."""
     from nyc_taxi_data_warehouse_spark.warehouse.snapshots import (
         read_snapshot,
@@ -532,13 +545,13 @@ def test_backfill_snapshot_backend_manifest_anti_join(
     load_month(
         spark,
         os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet"),
-        2025, 1, backend="snapshot", snapshot_path=snap,
+        2025, 1, snapshot_path=snap,
     )
-    results = backfill(spark, manifest, backend="snapshot", snapshot_path=snap)
+    results = backfill(spark, manifest, snapshot_path=snap)
     assert [(r.year, r.month, r.skipped) for r in results] == [(2025, 2, False)]
     assert read_snapshot(spark, snap).count() == 350
     # a second backfill is a complete no-op
-    assert backfill(spark, manifest, backend="snapshot", snapshot_path=snap) == []
+    assert backfill(spark, manifest, snapshot_path=snap) == []
 
 
 def test_load_month_wap_publish_and_veto(warehouse, raw_root, tmp_path):
@@ -560,21 +573,18 @@ def test_load_month_wap_publish_and_veto(warehouse, raw_root, tmp_path):
     p1 = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-01.parquet")
     p2 = os.path.join(raw_root, "2025", "fhvhv_tripdata_2025-02.parquet")
 
-    res = load_month(spark, p1, 2025, 1, backend="snapshot",
-                     snapshot_path=snap, wap=True)
+    res = load_month(spark, p1, 2025, 1, snapshot_path=snap, wap=True)
     assert not res.skipped and res.rows == 200
     assert read_snapshot(spark, snap).count() == 200
     # bootstrap empty v1 + the published month
     assert [h["op"] for h in snapshot_versions(spark, snap)] \
         == ["overwrite", "publish"]
     # provenance carried through the publish squash -> re-run skips
-    assert load_month(spark, p1, 2025, 1, backend="snapshot",
-                      snapshot_path=snap, wap=True).skipped
+    assert load_month(spark, p1, 2025, 1, snapshot_path=snap, wap=True).skipped
 
     # vetoed month: main untouched, branch dropped
     with pytest.raises(AuditFailed):
-        load_month(spark, p2, 2025, 2, backend="snapshot",
-                   snapshot_path=snap, wap=True,
+        load_month(spark, p2, 2025, 2, snapshot_path=snap, wap=True,
                    audit=lambda df: False)
     tbl = read_snapshot(spark, snap)
     assert tbl.count() == 200
@@ -582,8 +592,7 @@ def test_load_month_wap_publish_and_veto(warehouse, raw_root, tmp_path):
     assert list_branches(spark, snap) == []
 
     # approved month (default audit): published
-    res2 = load_month(spark, p2, 2025, 2, backend="snapshot",
-                      snapshot_path=snap, wap=True)
+    res2 = load_month(spark, p2, 2025, 2, snapshot_path=snap, wap=True)
     assert not res2.skipped and res2.rows == 150
     assert read_snapshot(spark, snap).count() == 350
 
@@ -654,8 +663,7 @@ def test_load_month_wap_self_heals_leftover_branch(
     create_branch(spark, snap, "load-2025-01")
     assert list_branches(spark, snap) == ["load-2025-01"]
 
-    res = load_month(spark, p1, 2025, 1, backend="snapshot",
-                     snapshot_path=snap, wap=True)
+    res = load_month(spark, p1, 2025, 1, snapshot_path=snap, wap=True)
     assert not res.skipped and res.rows == 200
     assert read_snapshot(spark, snap).where(
         "year=2025 AND month=1"
@@ -707,3 +715,42 @@ def test_obs_rows_probes_jvm_state_not_exception_text():
         get = {"rows": 7}
 
     assert _observed(_Happy(), rows=0) == {"rows": 7}
+
+
+# ---------------------------------------------------------- source guards
+
+WAREHOUSE = (
+    pathlib.Path(__file__).resolve().parent.parent
+    / "nyc_taxi_data_warehouse_spark"
+    / "warehouse"
+)
+
+
+def _method_calls(tree, names):
+    """(top-level def or None, line) of every ``x.<name>(...)`` call."""
+    for top in tree.body:
+        owner = getattr(top, "name", None)
+        for n in ast.walk(top):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in names
+            ):
+                yield owner, n.lineno
+
+
+def test_warehouse_tables_are_snapshot_tables():
+    """One table format: no catalog-managed writes in ``warehouse/``
+    beyond the bucketed-layout tool, no managed MERGE module, and one
+    load path."""
+    hits = [
+        f"{p.name}:{owner}:{line}"
+        for p in sorted(WAREHOUSE.glob("*.py"))
+        for owner, line in _method_calls(
+            ast.parse(p.read_text()), {"insertInto", "saveAsTable"}
+        )
+        if (p.name, owner) != ("layout.py", "write_bucketed")
+    ]
+    assert hits == []
+    assert not (WAREHOUSE / "merge.py").exists()
+    assert "backend ==" not in (WAREHOUSE / "load.py").read_text()
